@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{CdcStream, IngestStream}
+import graft.streaming.{CdcFamily, CdcStream, IngestStream}
 import graft.operators.SearchOps
 
 /** Structured-Streaming-backed entries. Each runs a real streaming query
@@ -762,9 +762,10 @@ object StreamingQueries {
     }),
 
     // the CDC statement stream consumed as VECTOR-index maintenance
-    // (IngestStream.cdcIvfSink) — the embedding twin of the search CDC
-    // loop below: the serving clone starts CORRUPTED (stale negated
-    // embeddings for the %20==0 dup wave, the %20==4 wave pre-inserted,
+    // (IngestStream.cdcFamilySink, CdcFamily.ivf) — the embedding twin of
+    // the search CDC loop below: the serving clone starts CORRUPTED (stale
+    // negated embeddings for the %20==0 dup wave, the %20==4 wave
+    // pre-inserted,
     // top-rank poison copies of the probe queries), the drained events
     // insert the rest of the dup batch, queue the true embeddings,
     // delete the poison AND delete-then-reinsert the %20==4 wave —
@@ -1060,9 +1061,9 @@ object StreamingQueries {
     }),
 
     // the CDC statement stream consumed as BAND-index maintenance
-    // (IngestStream.cdcBandSink) — the THIRD family through the same
-    // loop, closing the symmetry: the serving generation starts
-    // CORRUPTED (odd originals missing, %10 originals carrying poison
+    // (IngestStream.cdcFamilySink, CdcFamily.band) — the THIRD family
+    // through the same loop, closing the symmetry: the serving generation
+    // starts CORRUPTED (odd originals missing, %10 originals carrying poison
     // 'xdup' texts that would phantom-pair with the probe batch at
     // jaccard 1.0, exact poison twins of the probe batch pre-admitted
     // under ids ≥ 500000), the drained events insert the odd half,
@@ -1826,215 +1827,114 @@ object StreamingQueries {
       EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
-  /** The vector CDC-maintenance epoch — [[searchCdcNamesFor]]'s twin:
-    * the serving IVF generation is CLONED (frozen quantizer), CORRUPTED
-    * the way the event stream will heal (stale negated embeddings under
-    * the %20==0 dup ids, the %20==4 wave pre-inserted true, poison
-    * copies of the probe queries at ids ≥ 500000), then the events
-    * drain through [[IngestStream.cdcIvfSink]] and
-    * [[IngestStream.settleIvfUpserts]] writes the settled generation —
-    * result-defined EQUAL to base ∪ dup-batch under the original
-    * centroids, which is exactly what the append oracle computes.
-    * Returns (src, settled). */
-  private[graft] def ivfCdcNamesFor(s: SparkSession, dir: String)
+  /** The vector CDC-maintenance epochs — [[searchCdcNamesFor]]'s twins,
+    * one per vector index family, all consuming the SAME event fixture
+    * ([[cdcVecEventsDir]]): the family's serving generation `base` is
+    * CLONED (frozen quantizers), CORRUPTED through the family's own
+    * append the way the event stream will heal (stale negated
+    * embeddings under the %20==0 dup ids, the %20==4 wave pre-inserted
+    * true, poison copies of the probe queries at ids ≥ 500000 — cos-1.0
+    * rank-1 twins), then the events drain through
+    * [[IngestStream.cdcFamilySink]] and
+    * [[IngestStream.settleFamilyUpserts]] writes the settled generation
+    * — result-defined EQUAL to base ∪ dup-batch under the frozen
+    * quantizers, which is exactly what the family's append/union oracle
+    * computes. `key` names the epoch, `prefix` its tables and dirs.
+    * Event-dir epoch resolved before the acquire (no nested
+    * computeIfAbsent). Returns (src, settled). */
+  private def vecCdcNamesFor(s: SparkSession, dir: String, key: String,
+      prefix: String, family: CdcFamily, base: String,
+      clone: (SparkSession, String, String, String) => Unit)
       : (String, String) = {
-    val base = SimilarityQueries.ivfIndexFor(s, dir)
     val evDir = cdcVecEventsDir(s, dir)
-    val v = EpochRegistry.acquire(s, "ann_cdc_index", dir) { () =>
-      val src = "graft_ann_cdc_src_" +
+    val v = EpochRegistry.acquire(s, key, dir) { () =>
+      val src = s"graft_${prefix}_src_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ann_cdc_index_" +
+      val dest = s"graft_${prefix}_index_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ann_cdc_").toString)
-      graft.operators.VectorOps.cloneIvfIndex(s, base, src, paths(0))
+        .createTempDirectory(s"graft_${prefix}_").toString)
+      clone(s, base, src, paths(0))
       val emb = Tables.embeddings(s, dir)
       val dups = SimilarityQueries.dupVectors(emb)
         .filter(col("vec_id") >= 100000)
         .select(col("vec_id"), col("embedding"))
-      graft.operators.VectorOps.appendToIvfIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> -x)").cast("array<float>")
-              .as("embedding")))
-      graft.operators.VectorOps.appendToIvfIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 4))
-      graft.operators.VectorOps.appendToIvfIndex(s, src,
-        emb.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcIvfSink(ev, src, paths(1)).awaitTermination()
-      IngestStream.settleIvfUpserts(s, src, dest, paths(2))
+      family.append(s, src, dups.filter(col("vec_id") % 20 === 0)
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> -x)").cast("array<float>")
+            .as("embedding")))
+      family.append(s, src, dups.filter(col("vec_id") % 20 === 4))
+      family.append(s, src, emb.filter(col("vec_id") < 10)
+        .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")))
+      cdcDrainAndSettle(s, family, evDir, src, dest, paths(1), paths.drop(2))
       EpochRegistry.Resource(s"$src;$dest",
-        dropTables = Seq(s"${src}_cents", s"${src}_lists",
-          s"${src}_tombstones", s"${src}_pending", s"${src}_applied",
-          s"${dest}_cents", s"${dest}_lists"),
-        deleteDirs = paths)
+        dropTables = family.tablesOf(src, dest), deleteDirs = paths)
     }
     val Array(src, dest) = v.split(';')
     (src, dest)
   }
+
+  /** One CDC loop end to end: the event files drain through the
+    * family's sink one file per micro-batch, then the settle writes
+    * `dest` under `settlePaths`. */
+  private def cdcDrainAndSettle(s: SparkSession, family: CdcFamily,
+      evDir: String, src: String, dest: String, checkpointDir: String,
+      settlePaths: Seq[String]): Unit = {
+    val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
+    IngestStream.cdcFamilySink(ev, family, src, checkpointDir,
+      Trigger.AvailableNow()).awaitTermination()
+    IngestStream.settleFamilyUpserts(s, family, src, dest, settlePaths)
+  }
+
+  /** IVF under the frozen coarse quantizer. */
+  private[graft] def ivfCdcNamesFor(s: SparkSession, dir: String)
+      : (String, String) =
+    vecCdcNamesFor(s, dir, "ann_cdc_index", "ann_cdc", CdcFamily.ivf,
+      SimilarityQueries.ivfIndexFor(s, dir),
+      graft.operators.VectorOps.cloneIvfIndex(_, _, _, _))
 
   private[graft] def ivfCdcIndexFor(s: SparkSession, dir: String): String =
     ivfCdcNamesFor(s, dir)._2
 
-  /** The BINARY CDC-maintenance epoch — [[ivfCdcNamesFor]] with the
-    * sign-mask index as the maintenance target, consuming the SAME
-    * vector event fixture (one fixture, five index families): the
-    * serving binary generation is cloned, corrupted the way the events
-    * will heal (negated embeddings flip the %20==0 dup ids' sign masks,
-    * the %20==4 wave pre-packed, poison copies of the probe queries —
-    * hamming-0 twins), events drain through
-    * [[IngestStream.cdcBinarySink]], and
-    * [[IngestStream.settleBinaryUpserts]] writes a generation
-    * result-defined EQUAL to the frozen-quantizer union build — the
-    * probe carries the binary union oracle. Returns (src, settled). */
+  /** Binary sign masks: the negated embeddings flip the %20==0 dup ids'
+    * masks, the poison copies are hamming-0 twins; the probe carries the
+    * binary union oracle. */
   private[graft] def binaryCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) = {
-    val base = SimilarityQueries.ivfBinaryIndexFor(s, dir)
-    val evDir = cdcVecEventsDir(s, dir)
-    val v = EpochRegistry.acquire(s, "binary_cdc_index", dir) { () =>
-      val src = "graft_binary_cdc_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_binary_cdc_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_binary_cdc_").toString)
-      graft.operators.VectorOps.cloneIvfIndex(s, base, src, paths(0))
-      val emb = Tables.embeddings(s, dir)
-      val dups = SimilarityQueries.dupVectors(emb)
-        .filter(col("vec_id") >= 100000)
-        .select(col("vec_id"), col("embedding"))
-      graft.operators.VectorOps.appendToIvfIndexBinary(s, src,
-        dups.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> -x)").cast("array<float>")
-              .as("embedding")))
-      graft.operators.VectorOps.appendToIvfIndexBinary(s, src,
-        dups.filter(col("vec_id") % 20 === 4))
-      graft.operators.VectorOps.appendToIvfIndexBinary(s, src,
-        emb.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcBinarySink(ev, src, paths(1)).awaitTermination()
-      IngestStream.settleBinaryUpserts(s, src, dest, paths(2))
-      EpochRegistry.Resource(s"$src;$dest",
-        dropTables = Seq(s"${src}_cents", s"${src}_lists",
-          s"${src}_tombstones", s"${src}_pending", s"${src}_applied",
-          s"${dest}_cents", s"${dest}_lists"),
-        deleteDirs = paths)
-    }
-    val Array(src, dest) = v.split(';')
-    (src, dest)
-  }
+      : (String, String) =
+    vecCdcNamesFor(s, dir, "binary_cdc_index", "binary_cdc",
+      CdcFamily.binary, SimilarityQueries.ivfBinaryIndexFor(s, dir),
+      graft.operators.VectorOps.cloneIvfIndex(_, _, _, _))
 
-  /** The MRL CDC-maintenance epoch — [[ivfCdcNamesFor]] with the
-    * Matryoshka prefix epoch as the maintenance target, consuming the
-    * SAME vector event fixture (one fixture, EIGHT index families —
-    * VERDICT r18 #1): the serving generation is cloned, corrupted the
-    * way the events will heal (negated embeddings under the %20==0 dup
-    * ids — wrong on BOTH ranking passes, the %20==4 wave pre-inserted
-    * true, poison twins of the probe queries at ids ≥ 500000 —
-    * cos-1.0 rank-1 through prefix AND full rank), the events drain
-    * through [[IngestStream.cdcMrlSink]] (INSERTs admit under the
-    * frozen slice() derivation, DELETEs tombstone, UPDATEs queue), and
-    * [[IngestStream.settleMrlUpserts]] writes a generation
-    * result-defined EQUAL to the frozen-derivation union build — the
-    * probe carries the MRL union oracle. Returns (src, settled). */
+  /** The Matryoshka prefix epoch (VERDICT r18 #1): a negated embedding
+    * is wrong on BOTH ranking passes; the probe carries the MRL union
+    * oracle. */
   private[graft] def mrlCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) = {
-    val base = SimilarityQueries.mrlIndexFor(s, dir)
-    val evDir = cdcVecEventsDir(s, dir)
-    val v = EpochRegistry.acquire(s, "mrl_cdc_index", dir) { () =>
-      val src = "graft_mrl_cdc_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_mrl_cdc_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_mrl_cdc_").toString)
-      graft.operators.VectorOps.cloneMrlIndex(s, base, src, paths(0))
-      val emb = Tables.embeddings(s, dir)
-      val dups = SimilarityQueries.dupVectors(emb)
-        .filter(col("vec_id") >= 100000)
-        .select(col("vec_id"), col("embedding"))
-      graft.operators.VectorOps.appendToMrlIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> -x)").cast("array<float>")
-              .as("embedding")))
-      graft.operators.VectorOps.appendToMrlIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 4))
-      graft.operators.VectorOps.appendToMrlIndex(s, src,
-        emb.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcMrlSink(ev, src, paths(1)).awaitTermination()
-      IngestStream.settleMrlUpserts(s, src, dest, paths(2))
-      EpochRegistry.Resource(s"$src;$dest",
-        dropTables = Seq(s"${src}_cents", s"${src}_prefix",
-          s"${src}_nodes", s"${src}_tombstones", s"${src}_pending",
-          s"${src}_applied", s"${dest}_cents", s"${dest}_prefix",
-          s"${dest}_nodes"),
-        deleteDirs = paths)
-    }
-    val Array(src, dest) = v.split(';')
-    (src, dest)
-  }
+      : (String, String) =
+    vecCdcNamesFor(s, dir, "mrl_cdc_index", "mrl_cdc", CdcFamily.mrl,
+      SimilarityQueries.mrlIndexFor(s, dir),
+      graft.operators.VectorOps.cloneMrlIndex(_, _, _, _))
 
-  /** The GRAPH CDC-maintenance epoch — [[ivfCdcNamesFor]] with the
-    * kNN-graph generation as the maintenance target, consuming the
-    * SAME vector event fixture (one fixture, SEVEN index families):
-    * the serving generation is cloned
-    * ([[graft.operators.GraphOps.cloneGraphIndex]]), corrupted the way
-    * the events will heal (the %20==0 dup wave walk-appended with
-    * NEGATED embeddings, the %20==4 wave pre-appended true, poison
-    * twins of the probe queries — entry-cell members at cos 1.0), the
-    * events drain through [[IngestStream.cdcGraphSink]] (everything
-    * queues; deletes tombstone), and [[IngestStream.settleGraphUpserts]]
-    * prunes every touched/tombstoned id back to the base graph and
-    * walks the whole winner batch over it at once — a generation
-    * result-defined EQUAL to base ∪ the clean append walk, which is
-    * exactly what [[GraphQueries.graphCdcProbeSql]] mirrors. Returns
-    * (src, settled). */
+  /** The kNN-graph generation: every event queues, the settle prunes
+    * every touched/tombstoned id back to the base graph and walks the
+    * whole winner batch over it at once — equal to base ∪ the clean
+    * append walk, exactly what [[GraphQueries.graphCdcProbeSql]]
+    * mirrors. */
   private[graft] def graphCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) = {
-    val base = GraphQueries.graphIndexFor(s, dir)
-    val evDir = cdcVecEventsDir(s, dir)
-    val sfxs = Seq("_cents", "_cells", "_nodes", "_edges")
-    val v = EpochRegistry.acquire(s, "graph_cdc_index", dir) { () =>
-      val src = "graft_graph_cdc_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_graph_cdc_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_graph_cdc_").toString)
-      graft.operators.GraphOps.cloneGraphIndex(s, base, src, paths(0))
-      val emb = Tables.embeddings(s, dir)
-      val dups = SimilarityQueries.dupVectors(emb)
-        .filter(col("vec_id") >= 100000)
-        .select(col("vec_id"), col("embedding"))
-      graft.operators.GraphOps.appendToGraphIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> -x)").cast("array<float>")
-              .as("embedding")))
-      graft.operators.GraphOps.appendToGraphIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 4))
-      graft.operators.GraphOps.appendToGraphIndex(s, src,
-        emb.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcGraphSink(ev, src, paths(1)).awaitTermination()
-      IngestStream.settleGraphUpserts(s, src, dest, paths(2))
-      EpochRegistry.Resource(s"$src;$dest",
-        dropTables = sfxs.map(src + _) ++
-          Seq(s"${src}_tombstones", s"${src}_pending", s"${src}_applied") ++
-          sfxs.map(dest + _),
-        deleteDirs = paths)
-    }
-    val Array(src, dest) = v.split(';')
-    (src, dest)
-  }
+      : (String, String) =
+    vecCdcNamesFor(s, dir, "graph_cdc_index", "graph_cdc", CdcFamily.graph,
+      GraphQueries.graphIndexFor(s, dir),
+      graft.operators.GraphOps.cloneGraphIndex)
+
+  /** The composite (both quantizers frozen): the settled generation
+    * shares `sim_ann_ivfpq_appended`'s oracle. */
+  private[graft] def ivfPqCdcNamesFor(s: SparkSession, dir: String)
+      : (String, String) =
+    vecCdcNamesFor(s, dir, "ann_ivfpq_cdc_index", "ivfpq_cdc",
+      CdcFamily.ivfPq(8, 64), SimilarityQueries.ivfPqIndexFor(s, dir),
+      graft.operators.VectorOps.cloneIvfPqIndex(_, _, _, _))
+
+  private[graft] def ivfPqCdcIndexFor(s: SparkSession, dir: String): String =
+    ivfPqCdcNamesFor(s, dir)._2
 
   /** INCREMENTALLY-MAINTAINED co-purchase backbone (r17 — the graph
     * twin of the matview loop, CDC maintaining DERIVED GRAPH data): the
@@ -2084,87 +1984,6 @@ object StreamingQueries {
         dropTables = (0 to 4).map(g => s"${base}_g$g") :+ s"${base}_applied",
         deleteDirs = Seq(dpath, ckpt))
     }
-
-  /** Atomic pointer promotion of the settled graph generation — all
-    * four suffixes resolve together through one catalog view. */
-  private[graft] def graphCdcViewFor(s: SparkSession, dir: String): String = {
-    val (_, dest) = graphCdcNamesFor(s, dir)
-    EpochRegistry.acquire(s, "graph_cdc_view", dir) { () =>
-      val view = "graft_graph_cdc_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, dest,
-        suffixes = Seq("_cents", "_cells", "_nodes", "_edges"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** The IVF-PQ CDC-maintenance epoch — [[ivfCdcNamesFor]] with the
-    * COMPOSITE index as the maintenance target, consuming the SAME
-    * event stream (one event fixture, four index families): the
-    * serving IVF-PQ generation is cloned (both quantizers frozen),
-    * corrupted the way the events will heal (negated embeddings under
-    * the %20==0 dup ids, the %20==4 wave pre-inserted, poison copies
-    * of the probe queries), then the events drain through
-    * [[IngestStream.cdcIvfPqSink]] and
-    * [[IngestStream.settleIvfPqUpserts]] writes the settled
-    * generation — result-defined EQUAL to the frozen-quantizer union
-    * build, so the probe shares `sim_ann_ivfpq_appended`'s oracle.
-    * Returns (src, settled). */
-  private[graft] def ivfPqCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) = {
-    val base = SimilarityQueries.ivfPqIndexFor(s, dir)
-    val evDir = cdcVecEventsDir(s, dir)
-    val v = EpochRegistry.acquire(s, "ann_ivfpq_cdc_index", dir) { () =>
-      val src = "graft_ivfpq_cdc_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ivfpq_cdc_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_cdc_").toString)
-      graft.operators.VectorOps.cloneIvfPqIndex(s, base, src, paths(0))
-      val emb = Tables.embeddings(s, dir)
-      val dups = SimilarityQueries.dupVectors(emb)
-        .filter(col("vec_id") >= 100000)
-        .select(col("vec_id"), col("embedding"))
-      graft.operators.VectorOps.appendToIvfPqIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> -x)").cast("array<float>")
-              .as("embedding")))
-      graft.operators.VectorOps.appendToIvfPqIndex(s, src,
-        dups.filter(col("vec_id") % 20 === 4))
-      graft.operators.VectorOps.appendToIvfPqIndex(s, src,
-        emb.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcIvfPqSink(ev, src, paths(1)).awaitTermination()
-      IngestStream.settleIvfPqUpserts(s, src, dest, paths(2))
-      EpochRegistry.Resource(s"$src;$dest",
-        dropTables = Seq(s"${src}_cents", s"${src}_codebooks",
-          s"${src}_codes", s"${src}_tombstones", s"${src}_pending",
-          s"${src}_applied", s"${dest}_cents", s"${dest}_codebooks",
-          s"${dest}_codes"),
-        deleteDirs = paths)
-    }
-    val Array(src, dest) = v.split(';')
-    (src, dest)
-  }
-
-  private[graft] def ivfPqCdcIndexFor(s: SparkSession, dir: String): String =
-    ivfPqCdcNamesFor(s, dir)._2
-
-  /** The composite's settled generation served through the atomic
-    * pointer — cents, codebooks, and codes flip together. */
-  private[graft] def ivfPqCdcViewFor(s: SparkSession, dir: String): String = {
-    val settled = ivfPqCdcIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_cdc_view", dir) { () =>
-      val view = "graft_ivfpq_cdc_view_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, settled,
-        suffixes = Seq("_cents", "_codebooks", "_codes"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
 
   /** The CDC event files: INSERTs of the odd half (2 files), UPDATEs
     * re-issuing the TRUE text of every %10 doc (1 file), DELETEs of the
@@ -2668,14 +2487,10 @@ object StreamingQueries {
       graft.operators.SearchOps.writeSearchIndex(
         stale, "doc_id", "text", src, paths(0))
       graft.operators.SearchOps.writeDocLengths(s, src, paths(1))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcIndexSink(ev, src, paths(2)).awaitTermination()
-      IngestStream.settleSearchUpserts(s, src, dest, paths(3), paths(4))
+      val search = CdcFamily.search(8)
+      cdcDrainAndSettle(s, search, evDir, src, dest, paths(2), paths.drop(3))
       EpochRegistry.Resource(dest,
-        dropTables = Seq(src, s"${src}_doclens", s"${src}_tombstones",
-          s"${src}_pending", s"${src}_applied",
-          dest, s"${dest}_doclens"),
-        deleteDirs = paths)
+        dropTables = search.tablesOf(src, dest), deleteDirs = paths)
     }
   }
 
@@ -2713,14 +2528,10 @@ object StreamingQueries {
           .select(col("doc_id"), col("text"))),
         "doc_id", "text", src, paths(0))
       graft.operators.SearchOps.writeDocLengths(s, src, paths(1))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcIndexSink(ev, src, paths(2)).awaitTermination()
-      IngestStream.settleSearchUpserts(s, src, dest, paths(3), paths(4))
+      val search = CdcFamily.search(8)
+      cdcDrainAndSettle(s, search, evDir, src, dest, paths(2), paths.drop(3))
       EpochRegistry.Resource(s"$src;$dest",
-        dropTables = Seq(src, s"${src}_doclens", s"${src}_tombstones",
-          s"${src}_pending", s"${src}_applied",
-          dest, s"${dest}_doclens"),
-        deleteDirs = paths)
+        dropTables = search.tablesOf(src, dest), deleteDirs = paths)
     }
     val Array(src, dest) = v.split(';')
     (src, dest)
@@ -2766,8 +2577,9 @@ object StreamingQueries {
       EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
-  /** The band CDC-maintenance epoch — [[IngestStream.cdcBandSink]] +
-    * [[IngestStream.settleBandUpserts]] end to end, the band twin of
+  /** The band CDC-maintenance epoch — [[CdcFamily.band]] through
+    * [[IngestStream.cdcFamilySink]] + [[IngestStream.settleFamilyUpserts]]
+    * end to end, the band twin of
     * [[searchCdcNamesFor]]: the initial generation indexes the EVEN
     * originals with POISON 'xdup' text for every %10 doc (if a stale
     * version leaked through the settle it would phantom-pair with the
@@ -2800,13 +2612,10 @@ object StreamingQueries {
         .select((col("doc_id") + 400000).as("doc_id"), col("text"))
       graft.operators.Dedup.writeBandIndex(
         stale.unionByName(poison), "doc_id", "text", src, paths(0))
-      val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
-      IngestStream.cdcBandSink(ev, src, paths(1)).awaitTermination()
-      IngestStream.settleBandUpserts(s, src, dest, paths(2))
+      val band = CdcFamily.band(32)
+      cdcDrainAndSettle(s, band, evDir, src, dest, paths(1), paths.drop(2))
       EpochRegistry.Resource(s"$src;$dest",
-        dropTables = Seq(src, s"${src}_tombstones", s"${src}_pending",
-          s"${src}_applied", dest),
-        deleteDirs = paths)
+        dropTables = band.tablesOf(src, dest), deleteDirs = paths)
     }
     val Array(src, dest) = v.split(';')
     (src, dest)
@@ -2834,59 +2643,45 @@ object StreamingQueries {
     }
   }
 
-  /** The vector twin: the vector CDC loop's settled generation served
-    * through [[graft.operators.Generations.publishPointer]]. */
-  private[graft] def ivfCdcViewFor(s: SparkSession, dir: String): String = {
-    val settled = ivfCdcIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_cdc_view", dir) { () =>
-      val view = "graft_ivf_cdc_view_" +
+  /** A CDC loop's settled generation served through
+    * [[graft.operators.Generations.publishPointer]] — every table of the
+    * family resolves from one atomically-promoted name, closing the
+    * capture → route → settle → PROMOTE → serve composition. `settled`
+    * is resolved by the caller, before this epoch's acquire (no nested
+    * computeIfAbsent). */
+  private def cdcPointerViewFor(s: SparkSession, dir: String, key: String,
+      prefix: String, family: CdcFamily, settled: String): String =
+    EpochRegistry.acquire(s, key, dir) { () =>
+      val view = prefix +
         java.util.UUID.randomUUID().toString.replace("-", "")
       graft.operators.Generations.publishPointer(s, view, settled,
-        suffixes = Seq("_cents", "_lists"))
+        suffixes = family.tables)
       EpochRegistry.Resource(view, dropTables = Seq(view))
     }
-  }
 
-  /** The binary twin: the binary CDC loop's settled generation served
-    * through the same pointer mechanism. */
-  private[graft] def binaryCdcViewFor(s: SparkSession, dir: String): String = {
-    val settled = binaryCdcNamesFor(s, dir)._2
-    EpochRegistry.acquire(s, "binary_cdc_view", dir) { () =>
-      val view = "graft_binary_cdc_view_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, settled,
-        suffixes = Seq("_cents", "_lists"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+  private[graft] def ivfCdcViewFor(s: SparkSession, dir: String): String =
+    cdcPointerViewFor(s, dir, "ivf_cdc_view", "graft_ivf_cdc_view_",
+      CdcFamily.ivf, ivfCdcIndexFor(s, dir))
 
-  /** The MRL twin: the prefix loop's settled generation promoted
-    * through [[graft.operators.Generations.publishPointer]] — all
-    * three suffixes resolve from one atomically-promoted name, closing
-    * the capture → route → settle → PROMOTE → serve composition for
-    * the eighth family. */
-  private[graft] def mrlCdcViewFor(s: SparkSession, dir: String): String = {
-    val settled = mrlCdcNamesFor(s, dir)._2
-    EpochRegistry.acquire(s, "mrl_cdc_view", dir) { () =>
-      val view = "graft_mrl_cdc_view_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, settled,
-        suffixes = Seq("_cents", "_prefix", "_nodes"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+  private[graft] def binaryCdcViewFor(s: SparkSession, dir: String): String =
+    cdcPointerViewFor(s, dir, "binary_cdc_view", "graft_binary_cdc_view_",
+      CdcFamily.binary, binaryCdcNamesFor(s, dir)._2)
 
-  /** The band twin: the band CDC loop's settled generation served
-    * through the same pointer mechanism. */
-  private[graft] def bandCdcViewFor(s: SparkSession, dir: String): String = {
-    val settled = bandCdcIndexFor(s, dir)
-    EpochRegistry.acquire(s, "band_cdc_view", dir) { () =>
-      val view = "graft_band_cdc_view_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, settled)
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+  private[graft] def mrlCdcViewFor(s: SparkSession, dir: String): String =
+    cdcPointerViewFor(s, dir, "mrl_cdc_view", "graft_mrl_cdc_view_",
+      CdcFamily.mrl, mrlCdcNamesFor(s, dir)._2)
+
+  private[graft] def graphCdcViewFor(s: SparkSession, dir: String): String =
+    cdcPointerViewFor(s, dir, "graph_cdc_view", "graft_graph_cdc_pview_",
+      CdcFamily.graph, graphCdcNamesFor(s, dir)._2)
+
+  private[graft] def ivfPqCdcViewFor(s: SparkSession, dir: String): String =
+    cdcPointerViewFor(s, dir, "ivfpq_cdc_view", "graft_ivfpq_cdc_view_",
+      CdcFamily.ivfPq(8, 64), ivfPqCdcIndexFor(s, dir))
+
+  private[graft] def bandCdcViewFor(s: SparkSession, dir: String): String =
+    cdcPointerViewFor(s, dir, "band_cdc_view", "graft_band_cdc_view_",
+      CdcFamily.band(32), bandCdcIndexFor(s, dir))
 
   /** The continuous-clustering epoch: a WORKING clone of the serving
     * band index (the sink appends each drained batch to it — the

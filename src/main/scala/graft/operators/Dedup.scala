@@ -308,7 +308,7 @@ object Dedup {
     * column) stamps `Long.MaxValue` (final until compaction); the CDC
     * sink passes the event's queue sequence so a later re-INSERT/UPDATE
     * outranks the tombstone at [[graft.streaming.IngestStream
-    * .settleBandUpserts]]. */
+    * .settleFamilyUpserts]]. */
   def deleteFromBandIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, ids: DataFrame, idCol: String = "doc_id"): Unit =
     ids.select(col(idCol).cast("long").as("doc_id"),

@@ -1169,8 +1169,9 @@ object GraphOps {
   // the SAME lifecycle the six other ANN serving families carry —
   // build → serve → append → delete → upsert → compact → monitor →
   // retrain, with Generations pointer publishing and a CDC loop
-  // (IngestStream.cdcGraphSink). The served index is four catalog
-  // tables: `_cents` (frozen coarse quantizer), `_cells` (corpus→cell
+  // (IngestStream.cdcFamilySink over CdcFamily.graph). The served index
+  // is four catalog tables: `_cents` (frozen coarse quantizer), `_cells`
+  // (corpus→cell
   // assignment, partitionBy(list_id) — the entry lists, DPP-pruned at
   // probe time), `_nodes` (the full-precision vectors the walk scores
   // against — the graph index CARRIES its vectors, the DiskANN layout,

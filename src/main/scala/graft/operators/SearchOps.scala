@@ -349,7 +349,7 @@ object SearchOps {
     * until compaction, the original contract. The CDC maintenance sink
     * passes the event's queue sequence instead, so a LATER re-INSERT or
     * UPDATE of the same id outranks the tombstone at the settle
-    * ([[graft.streaming.IngestStream.settleSearchUpserts]]) — the
+    * ([[graft.streaming.IngestStream.settleFamilyUpserts]]) — the
     * reference's queue legally replays insert-after-delete per row
     * (`eventqueue/event_queue.go:15-21`). Probes stay seq-blind: ANY
     * tombstone row hides the doc until the settle resolves the order (a

@@ -36,27 +36,8 @@ object IngestStream {
   def mmDecodeSink(mediaStream: DataFrame, table: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    mediaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMmDecodeBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
-
-  private[graft] def applyMmDecodeBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      graft.operators.Multimodal.decodeImages(
-          batch.select(col("media_id"), col("media_type"), col("media"))
-            .as[graft.operators.Multimodal.MediaRow])
-        .toDF()
-        .write.mode("append").format("parquet").saveAsTable(table)
-      recordApplied(spark, table, batchId)
-    }
+    mediaSink(mediaStream, table, checkpointDir, trigger)(
+      graft.operators.Multimodal.decodeImages(_).toDF())
 
   /** [[mmDecodeSink]]'s AUDIO twin — the sixth ingestion family: WAV
     * blobs drain in micro-batches, each parsed with real
@@ -68,27 +49,8 @@ object IngestStream {
   def mmAudioDecodeSink(mediaStream: DataFrame, table: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    mediaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMmAudioDecodeBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
-
-  private[graft] def applyMmAudioDecodeBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      graft.operators.Multimodal.decodeAudio(
-          batch.select(col("media_id"), col("media_type"), col("media"))
-            .as[graft.operators.Multimodal.MediaRow])
-        .toDF()
-        .write.mode("append").format("parquet").saveAsTable(table)
-      recordApplied(spark, table, batchId)
-    }
+    mediaSink(mediaStream, table, checkpointDir, trigger)(
+      graft.operators.Multimodal.decodeAudio(_).toDF())
 
   /** [[mmDecodeSink]]'s VIDEO twin — the modality set's last member
     * through the streaming ingest loop (r18: image and audio had their
@@ -103,26 +65,25 @@ object IngestStream {
   def mmVideoDecodeSink(mediaStream: DataFrame, table: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    mediaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMmVideoDecodeBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
+    mediaSink(mediaStream, table, checkpointDir, trigger)(
+      graft.operators.Multimodal.decodeVideoFrames(_).toDF())
 
-  private[graft] def applyMmVideoDecodeBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      graft.operators.Multimodal.decodeVideoFrames(
-          batch.select(col("media_id"), col("media_type"), col("media"))
+  /** The three media sinks' shared body: each micro-batch's
+    * `(media_id, media_type, media)` blobs decoded per partition and the
+    * feature rows appended under the replay ledger. */
+  private def mediaSink(mediaStream: DataFrame, table: String,
+      checkpointDir: String, trigger: Trigger)(
+      decode: org.apache.spark.sql.Dataset[graft.operators.Multimodal.MediaRow]
+        => DataFrame): StreamingQuery =
+    foreachBatchSink(mediaStream, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      once(spark, table, batchId) {
+        import org.apache.spark.sql.functions.col
+        import spark.implicits._
+        decode(batch.select(col("media_id"), col("media_type"), col("media"))
             .as[graft.operators.Multimodal.MediaRow])
-        .toDF()
-        .write.mode("append").format("parquet").saveAsTable(table)
-      recordApplied(spark, table, batchId)
+          .write.mode("append").format("parquet").saveAsTable(table)
+      }
     }
 
   def ingestSink(docStream: DataFrame, bandIndexTable: String,
@@ -131,15 +92,11 @@ object IngestStream {
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.5, minQuality: Double = 0.30,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        write(PipelineOps.flagIngestBatch(batch.sparkSession, batch,
-          bandIndexTable, benchmark, idCol, textCol, threshold, minQuality),
-          batchId)
-      }
-      .start()
+    foreachBatchSink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      write(PipelineOps.flagIngestBatch(batch.sparkSession, batch,
+        bandIndexTable, benchmark, idCol, textCol, threshold, minQuality),
+        batchId)
+    }
 
   /** Continuous ANN-index maintenance — the vector twin of
     * [[searchIndexSink]]: each arriving micro-batch of vectors is
@@ -153,13 +110,9 @@ object IngestStream {
   def ivfIndexSink(vecStream: DataFrame, table: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIvfBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
+    foreachBatchSink(vecStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyIvfBatch(batch.sparkSession, table, batch, batchId)
+    }
 
   /** Continuous retrieval-index maintenance: each arriving micro-batch
     * of documents is ADMITTED to a standing search index — posting rows
@@ -197,14 +150,10 @@ object IngestStream {
       idCol: String = "doc_id", textCol: String = "text",
       numBuckets: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySearchBatch(batch.sparkSession, table, batch, idCol, textCol,
-          numBuckets, batchId)
-      }
-      .start()
+    foreachBatchSink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      applySearchBatch(batch.sparkSession, table, batch, idCol, textCol,
+        numBuckets, batchId)
+    }
 
   /** One micro-batch of [[searchIndexSink]], replay-guarded: appends the
     * batch's postings + norms rows unless the ledger already holds this
@@ -214,7 +163,7 @@ object IngestStream {
       spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, idCol: String, textCol: String, numBuckets: Int,
       batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
+    once(spark, table, batchId) {
       graft.operators.SearchOps.appendToSearchIndex(
         spark, table, batch, idCol, textCol, numBuckets)
       // numBuckets forwarded to BOTH appends: the sidecar append's own
@@ -222,7 +171,6 @@ object IngestStream {
       // and Spark rejects the mismatched bucketing
       graft.operators.SearchOps.appendDocLengths(
         spark, table, batch, idCol, textCol, numBuckets)
-      recordApplied(spark, table, batchId)
     }
 
   /** One micro-batch of [[ivfIndexSink]], replay-guarded (same ledger
@@ -230,155 +178,173 @@ object IngestStream {
   private[graft] def applyIvfBatch(
       spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
+    once(spark, table, batchId) {
       graft.operators.VectorOps.appendToIvfIndex(spark, table, batch)
-      recordApplied(spark, table, batchId)
     }
 
   /** The engine's two halves MEET (VERDICT r11 "what's missing" #1,
     * closing note): its own CDC statement semantics — O3 INSERT, O4
     * UPDATE, O6 DELETE (reference `sql/triggers.sql:20-32`) — consumed
-    * as STANDING-INDEX maintenance. The stream carries capture-shaped
-    * rows (`statement`, doc id, text — the typed frame before wire
-    * encoding); each micro-batch routes, under ONE replay-ledger guard:
+    * as STANDING-INDEX maintenance, for every index family through ONE
+    * path driven by a [[CdcFamily]] record. The stream carries
+    * capture-shaped rows (`statement`, the family's id and payload
+    * columns — the typed frame before wire encoding); each micro-batch
+    * routes, under ONE replay-ledger guard:
     *
-    *  - INSERT → postings + norms appended
-    *    ([[graft.operators.SearchOps.appendToSearchIndex]] /
-    *    `appendDocLengths` — the batch path's own operators) so the doc
-    *    serves immediately, AND the row queued in `<table>_pending`
-    *    with its sequence number, so the settle can ORDER it against a
+    *  - INSERT → applied through the family's own batch-path `append`
+    *    (postings + norms, band rows, frozen-quantizer list rows …) so
+    *    the row serves immediately, AND queued in `<table>_pending` with
+    *    its sequence number, so the settle can ORDER it against a
     *    tombstone of the same id (delete-then-reinsert, VERDICT r12
     *    #1 — the reference's queue replays full row history in `id`
     *    order, `eventqueue/event_queue.go:15-21`, so that sequence is
-    *    legal upstream);
-    *  - DELETE → ids tombstoned WITH their sequence number
-    *    ([[graft.operators.SearchOps.deleteFromSearchIndex]]) — the doc
-    *    vanishes from probes, df, and corpus stats immediately, purged
-    *    physically at the next generation boundary unless a LATER
-    *    pending event outranks the tombstone there;
-    *  - UPDATE → the fresh (doc, text) lands in `<table>_pending` with
-    *    its sequence number. The STALE version keeps serving until
-    *    [[settleSearchUpserts]] — deliberate: postings key on doc_id,
-    *    so an in-place re-append would double dl/df (the defect upsert
-    *    exists to prevent), and tombstoning now would make the doc
+    *    legal upstream). The graph family only queues
+    *    ([[CdcFamily.reingestInserts]]);
+    *  - DELETE → ids tombstoned WITH their sequence number through the
+    *    family's `delete` — the row vanishes from probes (and, for
+    *    search, df and corpus stats) immediately, purged physically at
+    *    the next generation boundary unless a LATER pending event
+    *    outranks the tombstone there;
+    *  - UPDATE → the fresh payload lands in `<table>_pending` with its
+    *    sequence number. The STALE version keeps serving until
+    *    [[settleFamilyUpserts]] — deliberate: an in-place re-append
+    *    would serve the id under BOTH payloads (doubled dl/df, phantom
+    *    band pairs, an id under two embeddings — the defect upsert
+    *    exists to prevent), and tombstoning now would make the row
     *    vanish mid-update. Serving stale until the settle is the
     *    standard retrieval freshness model (an index refresh interval),
     *    and the settle is a generation step.
     *
     * SEQUENCING: if the event frame carries an `event_seq` column (the
     * reference queue's serial id), every routed row is stamped with it
-    * and the settle's per-doc ordering is exact across and within
+    * and the settle's per-id ordering is exact across and within
     * micro-batches, independent of arrival order (ADVICE r12 #3:
-    * without a within-batch ordinal, two same-doc events in one batch
+    * without a within-batch ordinal, two same-id events in one batch
     * tie). Without `event_seq` the batchId is the stamp — coarser:
-    * supported at most ONE event per doc per micro-batch, and a DELETE
-    * outranks a same-batch INSERT/UPDATE of the same doc (ties resolve
+    * supported at most ONE event per id per micro-batch, and a DELETE
+    * outranks a same-batch INSERT/UPDATE of the same id (ties resolve
     * to the tombstone at the settle).
     *
     * Cost per micro-batch: batch-sized appends + one row-batch write —
     * the standing corpus is never read. The settle costs one
     * generation copy (the compaction class), run at compaction cadence
-    * or whenever freshness demands ([[settleCheck]] is the monitor). */
+    * or whenever freshness demands ([[settleCheck]] is the monitor).
+    *
+    * [[cdcIndexSink]] is the search family's sink. */
+  def cdcFamilySink(eventStream: DataFrame, family: CdcFamily, table: String,
+      checkpointDir: String, trigger: Trigger): StreamingQuery =
+    foreachBatchSink(eventStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyCdcFamilyBatch(batch.sparkSession, family, table, batch, batchId)
+    }
+
   def cdcIndexSink(eventStream: DataFrame, table: String,
       checkpointDir: String, numBuckets: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBatch(batch.sparkSession, table, batch, numBuckets, batchId)
-      }
-      .start()
+    cdcFamilySink(eventStream, CdcFamily.search(numBuckets), table,
+      checkpointDir, trigger)
 
-  /** One micro-batch of [[cdcIndexSink]] — statement-routed, whole-batch
+  /** One micro-batch of [[cdcFamilySink]] — statement-routed, whole-batch
     * replay-guarded (a replayed batch must not re-append INSERTs, nor
-    * re-queue UPDATEs under a new sequence number). */
-  private[graft] def applyCdcBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, numBuckets: Int, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
+    * re-tombstone DELETEs, nor re-queue UPDATEs under a new sequence
+    * number). Package-private so specs can drive the exact replay the
+    * checkpoint would. */
+  private[graft] def applyCdcFamilyBatch(
+      spark: org.apache.spark.sql.SparkSession, family: CdcFamily,
+      table: String, batch: DataFrame, batchId: Long): Unit =
+    once(spark, table, batchId) {
       import org.apache.spark.sql.functions.{col, lit}
       val seq =
         if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
         else lit(batchId)
-      val ins = batch.filter(col("statement") === "INSERT")
-        .select(col("doc_id"), col("text"))
-      graft.operators.SearchOps.appendToSearchIndex(
-        spark, table, ins, "doc_id", "text", numBuckets)
-      graft.operators.SearchOps.appendDocLengths(
-        spark, table, ins, "doc_id", "text", numBuckets)
-      graft.operators.SearchOps.deleteFromSearchIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("doc_id"), seq.as("seq")))
+      val (id, payload) = (col(family.idCol), col(family.payloadCol))
+      if (!family.reingestInserts)
+        family.append(spark, table,
+          batch.filter(col("statement") === "INSERT").select(id, payload))
+      family.delete(spark, table,
+        batch.filter(col("statement") === "DELETE").select(id, seq.as("seq")))
       // INSERTs queue alongside UPDATEs: the settle needs the row's
       // sequence to order a re-insert against an earlier tombstone of
       // the same id (insert rows whose id was never tombstoned cost the
-      // settle nothing — their immediately-appended postings simply
-      // survive the generation copy untouched)
+      // settle nothing — their immediately-appended rows simply survive
+      // the generation copy untouched)
       batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("doc_id"), col("text"), seq.as("seq"), col("statement"))
+        .select(id, payload, seq.as("seq"), col("statement"))
         .write.mode("append").format("parquet")
         .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
     }
 
-  /** The generation boundary of the CDC maintenance loop: per doc, the
+  /** The generation boundary of the CDC maintenance loop: per id, the
     * LATEST pending event (by its queue sequence) is ordered against
-    * the doc's newest tombstone, and the winners settle into a NEW
-    * generation via [[graft.operators.SearchOps.upsertToSearchIndex]]:
+    * the id's newest tombstone, and the winners settle into a NEW
+    * generation via the family's `upsert` (written under `paths`):
     *
-    *  - pending UPDATE outranking any tombstone → the doc's stale rows
-    *    drop, its fresh text is re-ingested;
+    *  - pending UPDATE outranking any tombstone → the id's stale rows
+    *    drop, its fresh payload is re-ingested;
     *  - pending re-INSERT outranking a tombstone → RESURRECTION
-    *    (VERDICT r12 #1: delete-then-reinsert serves the final text) —
-    *    the pre-delete rows AND the sink's immediate append both drop,
-    *    the pending text is ingested exactly once;
+    *    (VERDICT r12 #1: delete-then-reinsert serves the final payload)
+    *    — the pre-delete rows AND the sink's immediate append both drop,
+    *    the pending payload is ingested exactly once;
     *  - tombstone outranking everything pending (incl. ties — a batch
-    *    delete's `Long.MaxValue` stamp always wins) → the doc is purged;
+    *    delete's `Long.MaxValue` stamp always wins) → the id is purged;
     *  - pending INSERT of a never-tombstoned id → costs nothing: its
-    *    immediately-appended rows simply survive the copy.
+    *    immediately-appended rows simply survive the copy (graph: walked
+    *    here, [[CdcFamily.reingestInserts]]).
+    *
+    * The family's tables and sidecars are refreshed first: a
+    * long-running sink appends from the stream's own (cloned) session,
+    * and a settle from a session that already scanned them would read
+    * stale file listings — missing recent tombstones and pending rows.
     *
     * With nothing pending the settle degenerates to a tombstone-settling
     * compaction. The source generation (and its pending/tombstone
     * sidecars) stays untouched for rollback until its epoch is
     * reclaimed; promote the settled generation with
-    * [[graft.operators.Generations]] publish/swap. */
-  def settleSearchUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, dlPath: String,
-      numBuckets: Int = 8): Unit = {
-    import spark.implicits._
-    val docs = settleWinners(spark, src, "doc_id", "text",
-      () => Seq.empty[(Long, String, Long, String)]
-        .toDF("doc_id", "text", "seq", "statement"))
-    graft.operators.SearchOps.upsertToSearchIndex(spark, src, dest,
-      path, dlPath, docs, "doc_id", "text", numBuckets)
+    * [[graft.operators.Generations]] publish/swap.
+    * [[settleSearchUpserts]] is the search family's settle. */
+  def settleFamilyUpserts(spark: org.apache.spark.sql.SparkSession,
+      family: CdcFamily, src: String, dest: String,
+      paths: Seq[String]): Unit = {
+    (family.tables ++ Seq("_pending", "_tombstones")).map(src + _)
+      .filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
+    family.upsert(spark, src, dest, paths, settleWinners(spark, family, src))
   }
 
-  /** The ONE winner-selection rule behind all three settles — factored
-    * so the families cannot drift (the cross-family uniformity ADVICE
-    * r12 #3/#4 asked for): per id, the LATEST pending event (by queue
-    * sequence, `row_number` so within-frame ties cannot double) is
-    * ordered against the id's NEWEST tombstone with strict `>` — a
-    * tombstone wins sequence ties (same-batch ordering without
-    * `event_seq`, and the batch delete API's `Long.MaxValue`
-    * finality). Of the survivors, only ids whose serving rows are
-    * WRONG re-ingest: stale UPDATEs, and resurrections
+  def settleSearchUpserts(spark: org.apache.spark.sql.SparkSession,
+      src: String, dest: String, path: String, dlPath: String,
+      numBuckets: Int = 8): Unit =
+    settleFamilyUpserts(spark, CdcFamily.search(numBuckets), src, dest,
+      Seq(path, dlPath))
+
+  /** The ONE winner-selection rule behind every settle (the
+    * cross-family uniformity ADVICE r12 #3/#4 asked for): per id, the
+    * LATEST pending event (by queue sequence, `row_number` so
+    * within-frame ties cannot double) is ordered against the id's
+    * NEWEST tombstone with strict `>` — a tombstone wins sequence ties
+    * (same-batch ordering without `event_seq`, and the batch delete
+    * API's `Long.MaxValue` finality). Of the survivors, only ids whose
+    * serving rows are WRONG re-ingest: stale UPDATEs, and resurrections
     * (tombstone-entangled — their pre-delete rows must drop, and the
     * upsert's internal tombstone purge would otherwise swallow them);
     * a plain INSERT's drain-time rows are already correct and skip the
-    * incoming set. Returns the `(id, payload)` frame the family's
-    * upsert operator ingests. */
+    * incoming set, unless the family queued it instead
+    * ([[CdcFamily.reingestInserts]]). Returns the `(id, payload)` frame
+    * the family's upsert operator ingests. */
   private def settleWinners(spark: org.apache.spark.sql.SparkSession,
-      src: String, idCol: String, payloadCol: String,
-      emptyPending: () => DataFrame,
-      reingestInserts: Boolean = false): DataFrame = {
+      family: CdcFamily, src: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, max, row_number}
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
     import spark.implicits._
+    val idCol = family.idCol
     val pending =
       if (spark.catalog.tableExists(s"${src}_pending"))
         spark.table(s"${src}_pending")
-      else emptyPending()
+      else spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        new StructType().add(idCol, LongType, nullable = false)
+          .add(family.payloadCol, family.payloadType)
+          .add("seq", LongType, nullable = false)
+          .add("statement", StringType))
     val w = Window.partitionBy(col(idCol)).orderBy(col("seq").desc)
     val latest = pending
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
@@ -389,404 +355,10 @@ object IngestStream {
       else Seq.empty[(Long, Long)].toDF(idCol, "tomb_seq")
     val winners = latest.join(broadcast(tombMax), Seq(idCol), "left")
       .filter(col("tomb_seq").isNull || col("seq") > col("tomb_seq"))
-    // reingestInserts: the GRAPH family's sink queues plain INSERTs too
-    // (a graph insert is a beam WALK — order-dependent over a growing
-    // index, so it batch-settles for determinism, the FreshDiskANN
-    // streaming-merge model), so its winner set must keep them; every
-    // other family applied INSERTs at drain time and skips them here.
-    (if (reingestInserts) winners
+    (if (family.reingestInserts) winners
      else winners.filter(
        col("statement") === "UPDATE" || col("tomb_seq").isNotNull))
-      .select(col(idCol), col(payloadCol))
-  }
-
-  /** The vector twin of [[cdcIndexSink]] — the engine's CDC statement
-    * semantics consumed as STANDING IVF-INDEX maintenance, same
-    * statement routing, sequencing (`event_seq` when present, batchId
-    * otherwise), replay-ledger guard, and serve-stale-until-settle
-    * freshness model. The event frame carries `(statement, vec_id,
-    * embedding[, event_seq])`:
-    *
-    *  - INSERT → assigned by the FROZEN coarse quantizer and inserted
-    *    into the list partitions
-    *    ([[graft.operators.VectorOps.appendToIvfIndex]] — the batch
-    *    path's operator) AND queued with its sequence;
-    *  - DELETE → seq-versioned tombstone
-    *    ([[graft.operators.VectorOps.deleteFromIvfIndex]]);
-    *  - UPDATE → queued; the stale vector keeps serving until
-    *    [[settleIvfUpserts]] (an in-place re-append would serve the id
-    *    under BOTH embeddings — the doubled-id defect).
-    *
-    * Cost per micro-batch: one broadcast-assign of the batch + a
-    * dynamic-partition insert + one row-batch write; the indexed corpus
-    * is never read. */
-  def cdcIvfSink(eventStream: DataFrame, table: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcVecBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
-
-  /** One micro-batch of [[cdcIvfSink]] — statement-routed, whole-batch
-    * replay-guarded (same ledger as every ingestion sink). */
-  private[graft] def applyCdcVecBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val seq =
-        if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
-        else lit(batchId)
-      graft.operators.VectorOps.appendToIvfIndex(spark, table,
-        batch.filter(col("statement") === "INSERT")
-          .select(col("vec_id"), col("embedding")))
-      graft.operators.VectorOps.deleteFromIvfIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("vec_id"), seq.as("seq")))
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("vec_id"), col("embedding"), seq.as("seq"),
-          col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
-    }
-
-  /** The generation boundary of the vector CDC loop — same per-id
-    * ordering contract as [[settleSearchUpserts]] (latest pending event
-    * vs newest tombstone, strict `>` so a tombstone wins ties and a
-    * batch delete's MaxValue stays final): stale UPDATEs re-admitted
-    * through the frozen quantizer, deleted-then-reinserted vectors
-    * resurrected with their final embedding, dead ids purged, plain
-    * inserts untouched (their drain-time rows survive the copy). One
-    * generation copy, the compaction cost class. */
-  def settleIvfUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit = {
-    import spark.implicits._
-    val vecs = settleWinners(spark, src, "vec_id", "embedding",
-      () => Seq.empty[(Long, Array[Float], Long, String)]
-        .toDF("vec_id", "embedding", "seq", "statement"))
-    graft.operators.VectorOps.upsertToIvfIndex(spark, src, dest, path, vecs)
-  }
-
-  /** The BINARY member of the CDC sink family — [[cdcIvfSink]] with
-    * the sign-mask index as the maintenance target (the FIFTH index
-    * family through the loop): INSERTs pack through the frozen
-    * quantizer ([[graft.operators.VectorOps.appendToIvfIndexBinary]]),
-    * DELETEs write the shared seq-versioned tombstone, UPDATEs queue
-    * until [[settleBinaryUpserts]]. Same statement routing,
-    * sequencing, replay ledger, and serve-stale-until-settle model as
-    * the other four. */
-  def cdcBinarySink(eventStream: DataFrame, table: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBinaryBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
-
-  private[graft] def applyCdcBinaryBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val seq =
-        if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
-        else lit(batchId)
-      graft.operators.VectorOps.appendToIvfIndexBinary(spark, table,
-        batch.filter(col("statement") === "INSERT")
-          .select(col("vec_id"), col("embedding")))
-      graft.operators.VectorOps.deleteFromIvfIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("vec_id"), seq.as("seq")))
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("vec_id"), col("embedding"), seq.as("seq"),
-          col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
-    }
-
-  /** The binary loop's generation boundary — the shared winner rule
-    * settled through [[graft.operators.VectorOps.upsertToIvfIndexBinary]]
-    * (frozen-quantizer sign re-pack). */
-  def settleBinaryUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit = {
-    import spark.implicits._
-    val vecs = settleWinners(spark, src, "vec_id", "embedding",
-      () => Seq.empty[(Long, Array[Float], Long, String)]
-        .toDF("vec_id", "embedding", "seq", "statement"))
-    graft.operators.VectorOps.upsertToIvfIndexBinary(spark, src, dest,
-      path, vecs)
-  }
-
-  /** The MRL member of the CDC sink family (the EIGHTH index family
-    * through the loop — VERDICT r18 #1, closing the last serving
-    * asymmetry): [[cdcIvfSink]] with the Matryoshka prefix epoch as
-    * the maintenance target. INSERTs admit at drain time under the
-    * FROZEN derivation (the prefix is a `slice()` — order-free, so
-    * drain-time application is settle-equivalent, like the other
-    * append families), DELETEs write the shared seq-versioned
-    * tombstone, UPDATEs queue until [[settleMrlUpserts]] (an in-place
-    * re-append would serve the id under both embeddings through BOTH
-    * ranking passes). Same statement routing, sequencing, replay
-    * ledger, and serve-stale-until-settle model as the other seven. */
-  def cdcMrlSink(eventStream: DataFrame, table: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcMrlBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
-
-  private[graft] def applyCdcMrlBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val seq =
-        if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
-        else lit(batchId)
-      graft.operators.VectorOps.appendToMrlIndex(spark, table,
-        batch.filter(col("statement") === "INSERT")
-          .select(col("vec_id"), col("embedding")))
-      graft.operators.VectorOps.deleteFromIvfIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("vec_id"), seq.as("seq")))
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("vec_id"), col("embedding"), seq.as("seq"),
-          col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
-    }
-
-  /** The MRL loop's generation boundary — the shared winner rule
-    * settled through [[graft.operators.VectorOps.upsertToMrlIndex]]
-    * (frozen slice() re-derivation on both sides). */
-  def settleMrlUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit = {
-    import spark.implicits._
-    val vecs = settleWinners(spark, src, "vec_id", "embedding",
-      () => Seq.empty[(Long, Array[Float], Long, String)]
-        .toDF("vec_id", "embedding", "seq", "statement"))
-    graft.operators.VectorOps.upsertToMrlIndex(spark, src, dest, path,
-      vecs)
-  }
-
-  /** The GRAPH member of the CDC sink family (the SEVENTH index family
-    * through the loop) — [[cdcIvfSink]] with the kNN-graph generation
-    * as the maintenance target, and ONE routing difference: INSERTs are
-    * NOT applied at drain time. A graph insert is a beam WALK whose
-    * result depends on the index state it walks (an insert admitted in
-    * micro-batch 1 becomes an entry-cell candidate for micro-batch 2's
-    * walks), so drain-time application would make the settled adjacency
-    * depend on file→batch assignment. Instead EVERY INSERT/UPDATE
-    * queues with its sequence (serve-stale-until-settle covers inserts
-    * too — the FreshDiskANN streaming-merge model) and DELETEs write
-    * the family-shared seq-versioned tombstone; [[settleGraphUpserts]]
-    * walks the whole winner set at once over the pruned frozen graph —
-    * order-free, hence mirrorable. Same replay-ledger guard and pending
-    * population as the vector loops (one fixture, seven families). */
-  def cdcGraphSink(eventStream: DataFrame, table: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcGraphBatch(batch.sparkSession, table, batch, batchId)
-      }
-      .start()
-
-  private[graft] def applyCdcGraphBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val seq =
-        if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
-        else lit(batchId)
-      graft.operators.VectorOps.deleteFromIvfIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("vec_id"), seq.as("seq")))
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("vec_id"), col("embedding"), seq.as("seq"),
-          col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
-    }
-
-  /** The graph loop's generation boundary — the shared winner rule with
-    * `reingestInserts = true` (plain INSERTs were never applied at
-    * drain time, so they re-ingest here), settled through
-    * [[graft.operators.GraphOps.upsertToGraphIndex]]: prune every
-    * touched/tombstoned id, then walk the whole winner batch over the
-    * pruned frozen graph at once. */
-  def settleGraphUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit = {
-    import spark.implicits._
-    val vecs = settleWinners(spark, src, "vec_id", "embedding",
-      () => Seq.empty[(Long, Array[Float], Long, String)]
-        .toDF("vec_id", "embedding", "seq", "statement"),
-      reingestInserts = true)
-    graft.operators.GraphOps.upsertToGraphIndex(spark, src, dest, path, vecs)
-  }
-
-  /** The IVF-PQ member of the CDC sink family — [[cdcIvfSink]] with
-    * the composite index as the maintenance target: INSERTs are
-    * assigned by the frozen coarse quantizer AND encoded by the frozen
-    * codebooks into the list partitions
-    * ([[graft.operators.VectorOps.appendToIvfPqIndex]] — the batch
-    * path's operator), DELETEs write the shared seq-versioned
-    * tombstone, UPDATEs queue until [[settleIvfPqUpserts]] (an
-    * in-place re-append would MIX the id's two code sets in one ADC
-    * fold — the sharper composite form of the doubled-id defect).
-    * Same statement routing, sequencing, replay-ledger guard, and
-    * serve-stale-until-settle freshness model as the other three
-    * families; per-micro-batch cost is the batch's own encode +
-    * dynamic-partition insert — the indexed corpus is never read. */
-  def cdcIvfPqSink(eventStream: DataFrame, table: String,
-      checkpointDir: String, m: Int = 8, dim: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcIvfPqBatch(batch.sparkSession, table, batch, batchId, m, dim)
-      }
-      .start()
-
-  /** One micro-batch of [[cdcIvfPqSink]] — statement-routed,
-    * whole-batch replay-guarded (same ledger as every sink). */
-  private[graft] def applyCdcIvfPqBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long, m: Int = 8, dim: Int = 64): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val seq =
-        if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
-        else lit(batchId)
-      graft.operators.VectorOps.appendToIvfPqIndex(spark, table,
-        batch.filter(col("statement") === "INSERT")
-          .select(col("vec_id"), col("embedding")), m, dim)
-      graft.operators.VectorOps.deleteFromIvfIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("vec_id"), seq.as("seq")))
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("vec_id"), col("embedding"), seq.as("seq"),
-          col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
-    }
-
-  /** The generation boundary of the IVF-PQ CDC loop — the shared
-    * [[settleWinners]] per-id ordering (latest pending event vs newest
-    * tombstone, strict `>`), the winners re-assigned AND re-encoded
-    * under both frozen quantizers by
-    * [[graft.operators.VectorOps.upsertToIvfPqIndex]]. One codes
-    * rewrite — the compaction cost class. */
-  def settleIvfPqUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit = {
-    import spark.implicits._
-    val vecs = settleWinners(spark, src, "vec_id", "embedding",
-      () => Seq.empty[(Long, Array[Float], Long, String)]
-        .toDF("vec_id", "embedding", "seq", "statement"))
-    graft.operators.VectorOps.upsertToIvfPqIndex(spark, src, dest, path, vecs)
-  }
-
-  /** The band twin of [[cdcIndexSink]] — the engine's CDC statement
-    * stream consumed as STANDING BAND-INDEX maintenance, completing the
-    * loop across all THREE index families (search, vector, band). Same
-    * statement routing, sequencing (`event_seq` when present, batchId
-    * otherwise), replay-ledger guard, and serve-stale-until-settle
-    * freshness model. The event frame carries the capture shape
-    * `(statement, doc_id, text[, event_seq])`:
-    *
-    *  - INSERT → the doc's band rows admitted under the serving bucket
-    *    spec ([[graft.operators.Dedup.appendToBandIndex]] — the batch
-    *    path's operator, shingle→minhash→band on the batch only) so the
-    *    doc pairs with later batches immediately, AND queued with its
-    *    sequence for delete-then-reinsert ordering;
-    *  - DELETE → seq-versioned tombstone
-    *    ([[graft.operators.Dedup.deleteFromBandIndex]]) — the doc stops
-    *    pairing with incoming batches at once, purged physically at the
-    *    next generation boundary unless a later pending event outranks
-    *    the tombstone there;
-    *  - UPDATE → queued; the stale band rows keep serving until
-    *    [[settleBandUpserts]] (an in-place re-append would have the doc
-    *    pairing under BOTH texts — phantom jaccard matches against its
-    *    old content, the defect [[graft.operators.Dedup
-    *    .upsertToBandIndex]] exists to prevent).
-    *
-    * Cost per micro-batch: the batch's own shingle/minhash work + a
-    * bucketed append + one row-batch write — the standing corpus is
-    * never read. */
-  def cdcBandSink(eventStream: DataFrame, table: String,
-      checkpointDir: String, numBuckets: Int = 32,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBandBatch(batch.sparkSession, table, batch, numBuckets,
-          batchId)
-      }
-      .start()
-
-  /** One micro-batch of [[cdcBandSink]] — statement-routed, whole-batch
-    * replay-guarded (same ledger as every ingestion sink). */
-  private[graft] def applyCdcBandBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, numBuckets: Int, batchId: Long): Unit =
-    if (!alreadyApplied(spark, table, batchId)) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val seq =
-        if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
-        else lit(batchId)
-      graft.operators.Dedup.appendToBandIndex(spark, table,
-        batch.filter(col("statement") === "INSERT")
-          .select(col("doc_id"), col("text")),
-        "doc_id", "text", numBuckets)
-      graft.operators.Dedup.deleteFromBandIndex(spark, table,
-        batch.filter(col("statement") === "DELETE")
-          .select(col("doc_id"), seq.as("seq")))
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(col("doc_id"), col("text"), seq.as("seq"), col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
-      recordApplied(spark, table, batchId)
-    }
-
-  /** The generation boundary of the band CDC loop — same per-id
-    * ordering contract as [[settleSearchUpserts]] (latest pending event
-    * vs newest tombstone, strict `>` so a tombstone wins ties and a
-    * batch delete's MaxValue stays final): stale UPDATEs re-shingled
-    * and re-admitted, deleted-then-reinserted docs resurrected with
-    * their final text, dead ids purged, plain inserts untouched (their
-    * drain-time band rows survive the copy). The survivor copy is the
-    * band upsert's ZERO-shuffle bucketed-scan read — corpus IO plus one
-    * batch-sized append, the cheapest settle of the three families. */
-  def settleBandUpserts(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String,
-      numBuckets: Int = 32): Unit = {
-    import spark.implicits._
-    val docs = settleWinners(spark, src, "doc_id", "text",
-      () => Seq.empty[(Long, String, Long, String)]
-        .toDF("doc_id", "text", "seq", "statement"))
-    graft.operators.Dedup.upsertToBandIndex(spark, src, dest, path,
-      docs, "doc_id", "text", numBuckets)
+      .select(col(idCol), col(family.payloadCol))
   }
 
   /** Continuous SURVIVOR-SELECTION maintenance — the last standing
@@ -820,14 +392,10 @@ object IngestStream {
       labelsTable: String, checkpointDir: String, numBuckets: Int = 32,
       threshold: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyClusterBatch(batch.sparkSession, bandTable, labelsTable,
-          batch, numBuckets, threshold, batchId)
-      }
-      .start()
+    foreachBatchSink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyClusterBatch(batch.sparkSession, bandTable, labelsTable,
+        batch, numBuckets, threshold, batchId)
+    }
 
   /** One micro-batch of [[clusterSink]], replay-guarded on the labels
     * table's ledger. */
@@ -835,7 +403,7 @@ object IngestStream {
       spark: org.apache.spark.sql.SparkSession, bandTable: String,
       labelsTable: String, batch: DataFrame, numBuckets: Int,
       threshold: Double, batchId: Long): Unit =
-    if (!alreadyApplied(spark, labelsTable, batchId)) {
+    once(spark, labelsTable, batchId) {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
       val docs = batch.select(col("doc_id"), col("text"))
@@ -858,7 +426,6 @@ object IngestStream {
         "doc_id", "text", numBuckets)
       merged.write.mode("overwrite").format("parquet")
         .saveAsTable(labelsTable)
-      recordApplied(spark, labelsTable, batchId)
     }
 
   /** The settle-cadence DECISION for the CDC maintenance loop (VERDICT
@@ -886,7 +453,7 @@ object IngestStream {
     * near-metadata cost, safe to run per monitoring tick.
     *
     * `idCol` selects the family's key — `doc_id` for the search loop
-    * ([[cdcIndexSink]]), `vec_id` for the vector loop ([[cdcIvfSink]]);
+    * ([[cdcIndexSink]]), `vec_id` for the vector loops ([[CdcFamily.ivf]] …);
     * the output column names stay family-neutral so one dashboard
     * query reads every loop's verdict. */
   def settleCheck(spark: org.apache.spark.sql.SparkSession, table: String,
@@ -966,26 +533,21 @@ object IngestStream {
   def matviewSink(deltaStream: DataFrame, baseTable: String,
       checkpointDir: String, keyCols: Seq[String], countCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMatviewBatch(batch.sparkSession, baseTable, batch, batchId,
-          keyCols, countCol)
-      }
-      .start()
+    foreachBatchSink(deltaStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyMatviewBatch(batch.sparkSession, baseTable, batch, batchId,
+        keyCols, countCol)
+    }
 
   private[graft] def applyMatviewBatch(
       spark: org.apache.spark.sql.SparkSession, baseTable: String,
       batch: DataFrame, batchId: Long, keyCols: Seq[String],
       countCol: String): Unit =
-    if (!alreadyApplied(spark, baseTable, batchId)) {
+    once(spark, baseTable, batchId) {
       val gen = appliedSetFor(spark, baseTable).size
       val cur = spark.table(s"${baseTable}_g$gen")
       graft.operators.CdcOps.applyAggDeltas(cur, batch, keyCols, countCol)
         .write.mode("overwrite").format("parquet")
         .saveAsTable(s"${baseTable}_g${gen + 1}")
-      recordApplied(spark, baseTable, batchId)
     }
 
   /** The current view generation's table name (g0 = the base view). */
@@ -1006,18 +568,14 @@ object IngestStream {
   def scd2Sink(eventStream: DataFrame, baseTable: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyScd2Batch(batch.sparkSession, baseTable, batch, batchId)
-      }
-      .start()
+    foreachBatchSink(eventStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyScd2Batch(batch.sparkSession, baseTable, batch, batchId)
+    }
 
   private[graft] def applyScd2Batch(
       spark: org.apache.spark.sql.SparkSession, baseTable: String,
       batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, baseTable, batchId)) {
+    once(spark, baseTable, batchId) {
       import org.apache.spark.sql.functions._
       val gen = appliedSetFor(spark, baseTable).size
       val cur = spark.table(s"${baseTable}_g$gen")
@@ -1039,7 +597,6 @@ object IngestStream {
       closed.unionAll(opened)
         .write.mode("overwrite").format("parquet")
         .saveAsTable(s"${baseTable}_g${gen + 1}")
-      recordApplied(spark, baseTable, batchId)
     }
 
   /** The CLASSIFIER member of the CDC maintenance family (r18, VERDICT
@@ -1074,14 +631,10 @@ object IngestStream {
       checkpointDir: String, baseDocs: DataFrame,
       thresholdPpm: Long = 100000L, epochs: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyClassifierBatch(batch.sparkSession, base, batch, batchId,
-          baseDocs, thresholdPpm, epochs)
-      }
-      .start()
+    foreachBatchSink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyClassifierBatch(batch.sparkSession, base, batch, batchId,
+        baseDocs, thresholdPpm, epochs)
+    }
 
   /** The classifier loop's current generation number (0 = the initial
     * published model) — a 1-row aggregate over the generations
@@ -1098,69 +651,70 @@ object IngestStream {
       spark: org.apache.spark.sql.SparkSession, base: String,
       batch: DataFrame, batchId: Long, baseDocs: DataFrame,
       thresholdPpm: Long = 100000L, epochs: Int = 8): Unit =
-    if (!alreadyApplied(spark, base, batchId)) {
+    once(spark, base, batchId) {
       import org.apache.spark.sql.functions.{col, min}
       import spark.implicits._
       import graft.operators.{Classifier, Generations}
       // empty micro-batch (restart / no-data trigger): the wave min
       // aggregate would be NULL and getLong would throw — same guard as
-      // applyDsirBatch (ADVICE r18); nothing to monitor or retrain on
-      if (batch.isEmpty) { recordApplied(spark, base, batchId); return }
-      val gen = classifierCurrentGen(spark, base)
-      val serving = s"${base}_model_g$gen"
-      // model-sized plan-time reads: 2 bin rows; the histogram joins as
-      // a 10-row broadcast inside driftCheckHist
-      val edges = spark.table(s"${serving}_bins").orderBy(col("feature"))
-        .collect()
-        .map(r => r.getString(0) ->
-          Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-      val incoming = batch.select(col("doc_id"), col("text"), col("n_chars"))
-      val verdict = Classifier.driftCheckHist(
-        spark.table(s"${serving}_hist"),
-        Classifier.labeledFeatures(incoming), thresholdPpm, edges)
-        .orderBy(col("feature"))
-        .collect() // ≤ nFeatures monitored rows — model-sized
-      val wave = batch.agg(min(col("wave"))).collect()(0).getLong(0)
-      val fired = verdict.exists(_.getAs[Boolean]("retrain_needed"))
-      val genAfter = gen + (if (fired) 1L else 0L)
-      // the corpus append precedes the retrain: a decided retrain must
-      // see the batch that tripped it
-      incoming.write.mode("append").format("parquet")
-        .saveAsTable(s"${base}_corpus")
-      verdict.toSeq
-        .map(r => (wave, r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getBoolean(5), gen, genAfter))
-        .toDF("wave", "feature", "n_ref", "n_cur", "n_buckets",
-          "psi_ppm", "retrain_needed", "gen_before", "gen_after")
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${base}_decisions")
-      if (fired) {
-        val union = baseDocs.select(col("doc_id"), col("text"),
-            col("n_chars"))
-          .unionAll(spark.table(s"${base}_corpus"))
-        val feats = Classifier.labeledFeatures(union)
-        val traj = Classifier.train(feats, epochs)
-        val next = s"${base}_model_g$genAfter"
-        traj.epochs.zipWithIndex
-          .map { case (w, i) =>
-            (i + 1L, w(0), w(1), w(2), w(3), w(4), w(5)) }
-          .toDF("epoch", "b0", "b1", "b2", "b3", "b4", "b5")
-          .write.format("parquet").saveAsTable(next)
-        Classifier.binEdges(feats)
-          .write.format("parquet").saveAsTable(s"${next}_bins")
-        val nextEdges = spark.table(s"${next}_bins").orderBy(col("feature"))
+      // applyDsirBatch (ADVICE r18); nothing to monitor or retrain on,
+      // the batch is only ledgered
+      if (!batch.isEmpty) {
+        val gen = classifierCurrentGen(spark, base)
+        val serving = s"${base}_model_g$gen"
+        // model-sized plan-time reads: 2 bin rows; the histogram joins as
+        // a 10-row broadcast inside driftCheckHist
+        val edges = spark.table(s"${serving}_bins").orderBy(col("feature"))
           .collect()
           .map(r => r.getString(0) ->
-            Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-          .toSeq
-        Classifier.refHistogram(feats, nextEdges)
-          .write.format("parquet").saveAsTable(s"${next}_hist")
-        Seq(genAfter).toDF("gen").write.mode("append").format("parquet")
-          .saveAsTable(s"${base}_gens")
-        Generations.publishPointer(spark, s"${base}_serving", next,
-          suffixes = Seq("", "_bins", "_hist"))
+            Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+        val incoming = batch.select(col("doc_id"), col("text"), col("n_chars"))
+        val verdict = Classifier.driftCheckHist(
+          spark.table(s"${serving}_hist"),
+          Classifier.labeledFeatures(incoming), thresholdPpm, edges)
+          .orderBy(col("feature"))
+          .collect() // ≤ nFeatures monitored rows — model-sized
+        val wave = batch.agg(min(col("wave"))).collect()(0).getLong(0)
+        val fired = verdict.exists(_.getAs[Boolean]("retrain_needed"))
+        val genAfter = gen + (if (fired) 1L else 0L)
+        // the corpus append precedes the retrain: a decided retrain must
+        // see the batch that tripped it
+        incoming.write.mode("append").format("parquet")
+          .saveAsTable(s"${base}_corpus")
+        verdict.toSeq
+          .map(r => (wave, r.getString(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getBoolean(5), gen, genAfter))
+          .toDF("wave", "feature", "n_ref", "n_cur", "n_buckets",
+            "psi_ppm", "retrain_needed", "gen_before", "gen_after")
+          .write.mode("append").format("parquet")
+          .saveAsTable(s"${base}_decisions")
+        if (fired) {
+          val union = baseDocs.select(col("doc_id"), col("text"),
+              col("n_chars"))
+            .unionAll(spark.table(s"${base}_corpus"))
+          val feats = Classifier.labeledFeatures(union)
+          val traj = Classifier.train(feats, epochs)
+          val next = s"${base}_model_g$genAfter"
+          traj.epochs.zipWithIndex
+            .map { case (w, i) =>
+              (i + 1L, w(0), w(1), w(2), w(3), w(4), w(5)) }
+            .toDF("epoch", "b0", "b1", "b2", "b3", "b4", "b5")
+            .write.format("parquet").saveAsTable(next)
+          Classifier.binEdges(feats)
+            .write.format("parquet").saveAsTable(s"${next}_bins")
+          val nextEdges = spark.table(s"${next}_bins").orderBy(col("feature"))
+            .collect()
+            .map(r => r.getString(0) ->
+              Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+            .toSeq
+          Classifier.refHistogram(feats, nextEdges)
+            .write.format("parquet").saveAsTable(s"${next}_hist")
+          Seq(genAfter).toDF("gen").write.mode("append").format("parquet")
+            .saveAsTable(s"${base}_gens")
+          Generations.publishPointer(spark, s"${base}_serving", next,
+            suffixes = Seq("", "_bins", "_hist"))
+        }
       }
-      recordApplied(spark, base, batchId)
     }
 
   /** CDC → DSIR-model maintenance loop — the NINTH streaming-maintained
@@ -1184,63 +738,70 @@ object IngestStream {
   def dsirSink(docStream: DataFrame, base: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDsirBatch(batch.sparkSession, base, batch, batchId)
-      }
-      .start()
+    foreachBatchSink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      applyDsirBatch(batch.sparkSession, base, batch, batchId)
+    }
 
   private[graft] def applyDsirBatch(
       spark: org.apache.spark.sql.SparkSession, base: String,
       batch: DataFrame, batchId: Long): Unit =
-    if (!alreadyApplied(spark, base, batchId)) {
+    once(spark, base, batchId) {
       import org.apache.spark.sql.functions.{col, lit, min, sum}
       import spark.implicits._
       // an empty micro-batch (restart / no-data trigger) would make the
       // min aggregate NULL and getLong throw, killing the stream before
-      // the ledger could no-op a replay (ADVICE r18) — ledger it and
-      // return; an empty batch changes neither model nor corpus
-      if (batch.isEmpty) { recordApplied(spark, base, batchId); return }
-      val wave = batch.agg(min(col("wave"))).collect()(0).getLong(0)
-      val docs = batch.select(col("doc_id"), col("text"))
-      val wdc = PipelineOps.dsirDocCounts(docs, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // model-sized driver pass: the merged LM is ≤ dsirBuckets rows
-      // (the classifier-weights collect class) — collecting breaks the
-      // read-while-overwrite dependency on _rcounts
-      val merged = spark.table(s"${base}_rcounts")
-        .unionAll(wdc.groupBy(col("bucket")).agg(sum(col("c")).as("cr")))
-        .groupBy(col("bucket")).agg(sum(col("cr")).as("cr"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val rcounts = merged.toDF("bucket", "cr")
-      rcounts.write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${base}_rcounts")
-      // score the wave against the post-merge model
-      val lam = PipelineOps.dsirLambda(spark.table(s"${base}_tcounts"),
-        rcounts)
-      PipelineOps.dsirScore(wdc, lam, "doc_id")
-        .select(lit(wave).as("wave"), col("doc_id"), col("n_feats"),
-          col("logw"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${base}_scores")
-      docs.write.mode("append").format("parquet")
-        .saveAsTable(s"${base}_corpus")
-      wdc.unpersist()
-      recordApplied(spark, base, batchId)
+      // the ledger could no-op a replay (ADVICE r18) — it is only
+      // ledgered; an empty batch changes neither model nor corpus
+      if (!batch.isEmpty) {
+        val wave = batch.agg(min(col("wave"))).collect()(0).getLong(0)
+        val docs = batch.select(col("doc_id"), col("text"))
+        val wdc = PipelineOps.dsirDocCounts(docs, "doc_id", "text")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // model-sized driver pass: the merged LM is ≤ dsirBuckets rows
+        // (the classifier-weights collect class) — collecting breaks the
+        // read-while-overwrite dependency on _rcounts
+        val merged = spark.table(s"${base}_rcounts")
+          .unionAll(wdc.groupBy(col("bucket")).agg(sum(col("c")).as("cr")))
+          .groupBy(col("bucket")).agg(sum(col("cr")).as("cr"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        val rcounts = merged.toDF("bucket", "cr")
+        rcounts.write.mode("overwrite").format("parquet")
+          .saveAsTable(s"${base}_rcounts")
+        // score the wave against the post-merge model
+        val lam = PipelineOps.dsirLambda(spark.table(s"${base}_tcounts"),
+          rcounts)
+        PipelineOps.dsirScore(wdc, lam, "doc_id")
+          .select(lit(wave).as("wave"), col("doc_id"), col("n_feats"),
+            col("logw"))
+          .write.mode("append").format("parquet")
+          .saveAsTable(s"${base}_scores")
+        docs.write.mode("append").format("parquet")
+          .saveAsTable(s"${base}_corpus")
+        wdc.unpersist()
+      }
     }
 
-  private def alreadyApplied(spark: org.apache.spark.sql.SparkSession,
-      table: String, batchId: Long): Boolean =
-    appliedSetFor(spark, table).contains(batchId)
+  /** The shape every sink shares: a checkpointed `foreachBatch` query
+    * handing each micro-batch and its batchId to `apply`. */
+  private def foreachBatchSink(stream: DataFrame, checkpointDir: String,
+      trigger: Trigger)(apply: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(apply)
+      .start()
 
-  private def recordApplied(spark: org.apache.spark.sql.SparkSession,
-      table: String, batchId: Long): Unit = {
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_applied")
-    appliedSetFor(spark, table).add(batchId)
-  }
+  /** Runs `body` unless `<ledger>_applied` already holds `batchId`, then
+    * records it — the ledger row is written LAST, so a crash inside the
+    * body replays the batch (at-least-once) rather than losing it. */
+  private def once(spark: org.apache.spark.sql.SparkSession, ledger: String,
+      batchId: Long)(body: => Unit): Unit =
+    if (!appliedSetFor(spark, ledger).contains(batchId)) {
+      body
+      import spark.implicits._
+      Seq(batchId).toDF("batch_id")
+        .write.mode("append").format("parquet")
+        .saveAsTable(s"${ledger}_applied")
+      appliedSetFor(spark, ledger).add(batchId)
+    }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, SearchOps, VectorOps}
+import graft.streaming.{CdcFamily, IngestStream}
 
 /** UPDATE/DELETE maintenance contracts for the standing index families
   * (VERDICT r11 #1): a deleted document/vector stops influencing probes
@@ -137,18 +138,18 @@ class IndexMutationSpec extends AnyFunSuite {
       // per-doc histories (by event_seq): 1 DELETE@40→UPDATE@50,
       // 2 DELETE@10→re-INSERT@20, 3 UPDATE@30, 4 UPDATE@6→DELETE@7,
       // 5 plain INSERT@21 — delivered in SCRAMBLED micro-batch order
-      graft.streaming.IngestStream.applyCdcBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
         ("UPDATE", 3L, "spark window three updated", 30L),
-        ("DELETE", 4L, "", 7L)), 4, batchId = 0L)
-      graft.streaming.IngestStream.applyCdcBatch(spark, src, ev(
+        ("DELETE", 4L, "", 7L)), batchId = 0L)
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
         ("INSERT", 2L, "spark window two reborn", 20L),
         ("UPDATE", 1L, "spark window one revised", 50L),
-        ("INSERT", 5L, "spark window five fresh", 21L)), 4, batchId = 1L)
-      graft.streaming.IngestStream.applyCdcBatch(spark, src, ev(
+        ("INSERT", 5L, "spark window five fresh", 21L)), batchId = 1L)
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
         ("DELETE", 2L, "", 10L),
         ("DELETE", 1L, "", 40L),
-        ("UPDATE", 4L, "spark window four mistake", 6L)), 4, batchId = 2L)
-      graft.streaming.IngestStream.settleSearchUpserts(
+        ("UPDATE", 4L, "spark window four mistake", 6L)), batchId = 2L)
+      IngestStream.settleSearchUpserts(
         spark, src, dest, paths(2), paths(3), numBuckets = 4)
       val truth = Seq(
         (1L, "spark window one revised"),
@@ -180,7 +181,7 @@ class IndexMutationSpec extends AnyFunSuite {
 
   test("two same-doc updates in ONE micro-batch: event_seq ordinal picks the later") {
     // VERDICT r13 #6 — the within-batch tie the batchId stamp cannot
-    // break: both events land in one applyCdcBatch call, physical row
+    // break: both events land in one applyCdcFamilyBatch call, physical row
     // order is ADVERSARIAL (doc 1 poison-first, doc 2 truth-first), and
     // only event_seq may decide.
     val src = uniq("graft_cdc_2u_src_")
@@ -193,12 +194,12 @@ class IndexMutationSpec extends AnyFunSuite {
       SearchOps.writeSearchIndex(docs, "doc_id", "text", src, paths(0),
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
-      graft.streaming.IngestStream.applyCdcBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
         ("UPDATE", 1L, "spark window one poison", 100L),
         ("UPDATE", 1L, "spark window one final", 200L),
         ("UPDATE", 2L, "spark window two final", 201L),
-        ("UPDATE", 2L, "spark window two poison", 101L)), 4, batchId = 0L)
-      graft.streaming.IngestStream.settleSearchUpserts(
+        ("UPDATE", 2L, "spark window two poison", 101L)), batchId = 0L)
+      IngestStream.settleSearchUpserts(
         spark, src, dest, paths(2), paths(3), numBuckets = 4)
       val truth = Seq(
         (1L, "spark window one final"),
@@ -400,18 +401,19 @@ class IndexMutationSpec extends AnyFunSuite {
       // histories: 1 DELETE@40→UPDATE@50 (resurrect, updated embedding),
       // 2 DELETE@10→re-INSERT@20 (resurrect), 3 UPDATE@30 (heal),
       // 4 UPDATE@6→DELETE@7 (dead), 30 plain INSERT@21 — scrambled
-      graft.streaming.IngestStream.applyCdcVecBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.ivf, src, ev(
         ("UPDATE", 3L, v(3, 2f), 30L),
         ("DELETE", 4L, null, 7L)), batchId = 0L)
-      graft.streaming.IngestStream.applyCdcVecBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.ivf, src, ev(
         ("INSERT", 2L, v(2, 3f), 20L),
         ("UPDATE", 1L, v(1, 4f), 50L),
         ("INSERT", 30L, v(30, 1f), 21L)), batchId = 1L)
-      graft.streaming.IngestStream.applyCdcVecBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.ivf, src, ev(
         ("DELETE", 2L, null, 10L),
         ("DELETE", 1L, null, 40L),
         ("UPDATE", 4L, v(4, 9f), 6L)), batchId = 2L)
-      graft.streaming.IngestStream.settleIvfUpserts(spark, src, dest, paths(1))
+      IngestStream.settleFamilyUpserts(spark, CdcFamily.ivf, src, dest,
+        Seq(paths(1)))
       val stored = spark.table(s"${dest}_lists")
         .filter(col("vec_id").isin(1L, 2L, 3L, 4L, 30L))
         .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
@@ -457,19 +459,19 @@ class IndexMutationSpec extends AnyFunSuite {
       // histories: 1 DELETE@40→UPDATE@50 (resurrect, final text f1),
       // 2 DELETE@10→re-INSERT@20 (resurrect, f2), 3 UPDATE@30 (heal,
       // f3), 4 UPDATE@6→DELETE@7 (dead), 30 plain INSERT@21 — scrambled
-      graft.streaming.IngestStream.applyCdcBandBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.band(4), src, ev(
         ("UPDATE", 3L, t("f3"), 30L),
-        ("DELETE", 4L, null, 7L)), numBuckets = 4, batchId = 0L)
-      graft.streaming.IngestStream.applyCdcBandBatch(spark, src, ev(
+        ("DELETE", 4L, null, 7L)), batchId = 0L)
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.band(4), src, ev(
         ("INSERT", 2L, t("f2"), 20L),
         ("UPDATE", 1L, t("f1"), 50L),
-        ("INSERT", 30L, t("f30"), 21L)), numBuckets = 4, batchId = 1L)
-      graft.streaming.IngestStream.applyCdcBandBatch(spark, src, ev(
+        ("INSERT", 30L, t("f30"), 21L)), batchId = 1L)
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.band(4), src, ev(
         ("DELETE", 2L, null, 10L),
         ("DELETE", 1L, null, 40L),
-        ("UPDATE", 4L, t("f4"), 6L)), numBuckets = 4, batchId = 2L)
-      graft.streaming.IngestStream.settleBandUpserts(spark, src, dest,
-        paths(1), numBuckets = 4)
+        ("UPDATE", 4L, t("f4"), 6L)), batchId = 2L)
+      IngestStream.settleFamilyUpserts(spark, CdcFamily.band(4), src, dest,
+        Seq(paths(1)))
       // probe with each doc's FINAL text plus doc 3's STALE text: the
       // settled generation pairs live docs under final texts only
       val incoming = Seq((101L, t("f1")), (102L, t("f2")), (103L, t("f3")),
@@ -512,19 +514,18 @@ class IndexMutationSpec extends AnyFunSuite {
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
       // wave 1 → src: doc 2 updated, doc 4 deleted
-      graft.streaming.IngestStream.applyCdcBatch(spark, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
         ("UPDATE", 2L, "spark spark spark spark", 10L),
-        ("DELETE", 4L, null, 11L)), numBuckets = 4, batchId = 0L)
-      graft.streaming.IngestStream.settleSearchUpserts(spark, src, mid,
+        ("DELETE", 4L, null, 11L)), batchId = 0L)
+      IngestStream.settleSearchUpserts(spark, src, mid,
         paths(2), paths(3), numBuckets = 4)
       // wave 2 → the SETTLED generation: doc 4 re-inserted (it was
       // physically purged by settle 1 — a plain INSERT now), doc 1
       // updated
-      graft.streaming.IngestStream.applyCdcBatch(spark, mid, ev(
+      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), mid, ev(
         ("INSERT", 4L, "spark window four", 20L),
-        ("UPDATE", 1L, "window window window", 21L)), numBuckets = 4,
-        batchId = 0L)
-      graft.streaming.IngestStream.settleSearchUpserts(spark, mid, dest,
+        ("UPDATE", 1L, "window window window", 21L)), batchId = 0L)
+      IngestStream.settleSearchUpserts(spark, mid, dest,
         paths(4), paths(5), numBuckets = 4)
       // the final generation must equal a fresh build over the final
       // corpus — postings AND norms

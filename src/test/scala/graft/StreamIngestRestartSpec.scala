@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{CdcStream, IngestStream}
-import graft.operators.{SearchOps, VectorOps}
+import graft.streaming.{CdcFamily, CdcStream, IngestStream}
+import graft.operators.{Dedup, GraphOps, SearchOps, VectorOps}
 
 /** Restart idempotence for the continuous index-maintenance sinks
   * (VERDICT r11 #5): a drain killed between micro-batches resumes from
@@ -86,62 +86,6 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       Seq(s"${t}_applied", s"${t}_doclens", t).foreach(x =>
         spark.sql(s"DROP TABLE IF EXISTS $x"))
     }
-  }
-
-  test("replayed micro-batch is skipped whole by the CDC statement sinks") {
-    // the statement-routed sinks have THREE side effects per batch
-    // (immediate append, tombstone append, pending append) — a replay
-    // must skip all of them together or the settle double-counts
-    def ev(rows: (String, Long, String, Long)*) =
-      rows.toSeq.toDF("statement", "doc_id", "text", "event_seq")
-    val batch = ev(
-      ("INSERT", 5L, "spark window five", 50L),
-      ("UPDATE", 1L, "spark window one prime", 51L),
-      ("DELETE", 2L, null, 52L))
-    val docs = Seq(
-      (1L, "spark window spark query"),
-      (2L, "spark window window window")).toDF("doc_id", "text")
-
-    val st = uniq("graft_cdc_replay_s_")
-    val sp = (1 to 2).map(_ => tmp("graft_cdc_replay_s_"))
-    try {
-      SearchOps.writeSearchIndex(docs, "doc_id", "text", st, sp(0),
-        numBuckets = 4)
-      SearchOps.writeDocLengths(spark, st, sp(1), numBuckets = 4)
-      IngestStream.applyCdcBatch(spark, st, batch, numBuckets = 4,
-        batchId = 3L)
-      val counts = (spark.table(st).count(),
-        spark.table(s"${st}_pending").count(),
-        spark.table(s"${st}_tombstones").count())
-      IngestStream.applyCdcBatch(spark, st, batch, numBuckets = 4,
-        batchId = 3L)
-      assert((spark.table(st).count(),
-        spark.table(s"${st}_pending").count(),
-        spark.table(s"${st}_tombstones").count()) == counts,
-        "replayed CDC batch re-applied a side effect (search sink)")
-    } finally Seq(st, s"${st}_doclens", s"${st}_pending",
-      s"${st}_tombstones", s"${st}_applied")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-
-    graft.functions.GraftFunctions.register(spark)
-    val bt = uniq("graft_cdc_replay_b_")
-    val bp = tmp("graft_cdc_replay_b_")
-    try {
-      graft.operators.Dedup.writeBandIndex(docs, "doc_id", "text", bt, bp,
-        numBuckets = 4)
-      IngestStream.applyCdcBandBatch(spark, bt, batch, numBuckets = 4,
-        batchId = 3L)
-      val counts = (spark.table(bt).count(),
-        spark.table(s"${bt}_pending").count(),
-        spark.table(s"${bt}_tombstones").count())
-      IngestStream.applyCdcBandBatch(spark, bt, batch, numBuckets = 4,
-        batchId = 3L)
-      assert((spark.table(bt).count(),
-        spark.table(s"${bt}_pending").count(),
-        spark.table(s"${bt}_tombstones").count()) == counts,
-        "replayed CDC batch re-applied a side effect (band sink)")
-    } finally Seq(bt, s"${bt}_pending", s"${bt}_tombstones",
-      s"${bt}_applied").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("replayed micro-batch is skipped whole by the cluster sink") {
@@ -253,45 +197,196 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("replayed micro-batch is skipped whole by the IVF-PQ CDC sink") {
+  /** One row of the CDC replay table: a family, a builder for a small
+    * standing index of it, the table holding its drain-time rows, how
+    * many rows one drained INSERT adds there (`None`: some, the count
+    * being token/band-dependent), and the vector width (0: text). */
+  private case class ReplayCase(label: String, family: CdcFamily,
+      build: (String, String) => Unit, index: String, landed: Option[Long],
+      dims: Int)
+
+  private lazy val replayDocs = Seq(
+    (1L, "spark window spark query"),
+    (2L, "spark window window window")).toDF("doc_id", "text")
+  private def replayVecs(dims: Int) = (0L until 16L).map(i =>
+    (i, Array.tabulate(dims)(d => math.sin(i * 3 + d).toFloat)))
+    .toDF("vec_id", "embedding")
+
+  private val replayCases = Seq(
+    ReplayCase("search", CdcFamily.search(4), (t, p) => {
+      SearchOps.writeSearchIndex(replayDocs, "doc_id", "text", t, p,
+        numBuckets = 4)
+      SearchOps.writeDocLengths(spark, t, tmp("graft_cdc_replay_dl_"),
+        numBuckets = 4)
+    }, "", None, 0),
+    ReplayCase("band", CdcFamily.band(4), (t, p) =>
+      Dedup.writeBandIndex(replayDocs, "doc_id", "text", t, p,
+        numBuckets = 4), "", None, 0),
+    ReplayCase("IVF", CdcFamily.ivf, (t, p) =>
+      VectorOps.writeIvfIndex(replayVecs(8), t, p, numCentroids = 2,
+        trainIters = 1), "_lists", Some(1L), 8),
+    // the sign-mask packer takes 64-dim embeddings
+    ReplayCase("binary", CdcFamily.binary, (t, p) =>
+      VectorOps.writeIvfIndexBinary(replayVecs(64), t, p, numCentroids = 2,
+        trainIters = 1), "_lists", Some(1L), 64),
+    ReplayCase("MRL", CdcFamily.mrl, (t, p) =>
+      VectorOps.writeMrlIndex(replayVecs(8), t, p, prefixDims = 4,
+        numCentroids = 2, trainIters = 1), "_prefix", Some(1L), 8),
+    // graph INSERTs queue for the settle's batch walk: none land at drain
+    ReplayCase("graph", CdcFamily.graph, (t, p) =>
+      GraphOps.writeGraphIndex(replayVecs(8), t, p, trainIters = 1),
+      "_nodes", Some(0L), 8),
+    // m = 2 codes per insert
+    ReplayCase("IVF-PQ", CdcFamily.ivfPq(2, 8), (t, p) =>
+      VectorOps.writeIvfPqIndex(replayVecs(8), t, p, numCentroids = 2,
+        trainIters = 1, m = 2, ksub = 4, pqIters = 1, dim = 8),
+      "_codes", Some(2L), 8))
+
+  for (c <- replayCases)
+    test(s"replayed micro-batch is skipped whole by the ${c.label} CDC sink") {
+      // every statement-routed sink has THREE side effects per batch
+      // (immediate append, tombstone append, pending append) — a replay
+      // must skip all of them together or the settle double-counts
+      graft.functions.GraftFunctions.register(spark)
+      def v(shift: Int) =
+        Array.tabulate(c.dims)(d => math.cos(d + shift).toFloat)
+      val (batch, fresh) =
+        if (c.dims == 0) (
+          Seq(("INSERT", 5L, "spark window five", 50L),
+            ("UPDATE", 1L, "spark window one prime", 51L),
+            ("DELETE", 2L, null, 52L))
+            .toDF("statement", "doc_id", "text", "event_seq"),
+          Seq(("INSERT", 6L, "spark gamma delta epsilon zeta eta theta", 60L))
+            .toDF("statement", "doc_id", "text", "event_seq"))
+        else (
+          Seq(("INSERT", 900L, v(0), 1L),
+            ("DELETE", 3L, null.asInstanceOf[Array[Float]], 2L),
+            ("UPDATE", 5L, v(1), 3L))
+            .toDF("statement", "vec_id", "embedding", "event_seq"),
+          Seq(("INSERT", 901L, v(0), 4L))
+            .toDF("statement", "vec_id", "embedding", "event_seq"))
+      val t = uniq(s"graft_cdc_replay_${c.label.toLowerCase.replace("-", "")}_")
+      def counts = (spark.table(t + c.index).count(),
+        spark.table(s"${t}_tombstones").count(),
+        spark.table(s"${t}_pending").count())
+      try {
+        c.build(t, tmp("graft_cdc_replay_"))
+        IngestStream.applyCdcFamilyBatch(spark, c.family, t, batch,
+          batchId = 3L)
+        val applied = counts
+        // the replay: same batchId arrives again (checkpoint commit lost)
+        IngestStream.applyCdcFamilyBatch(spark, c.family, t, batch,
+          batchId = 3L)
+        assert(counts == applied,
+          s"replayed CDC batch re-applied a side effect (${c.label} sink)")
+        // a genuinely NEW batch still lands: queued, and (unless the
+        // family queues inserts) admitted to the index
+        IngestStream.applyCdcFamilyBatch(spark, c.family, t, fresh,
+          batchId = 4L)
+        val (index, tombs, pending) = counts
+        assert(pending == applied._3 + 1 && tombs == applied._2,
+          s"new batch did not queue exactly its INSERT (${c.label} sink)")
+        c.landed match {
+          case Some(n) => assert(index == applied._1 + n,
+            s"new batch added ${index - applied._1} index rows, want $n")
+          case None => assert(index > applied._1,
+            s"new batch did not reach the ${c.label} index")
+        }
+      } finally (c.family.tables ++ CdcFamily.sidecars).foreach(sfx =>
+        spark.sql(s"DROP TABLE IF EXISTS $t$sfx"))
+    }
+
+  test("IVF-PQ settle re-encodes with the family's m/dim: equals the union build") {
+    // a non-default (m = 2, dim = 8) index: the settle must re-encode the
+    // UPDATE under the SAME subspaces the drain encoded the INSERT with
     graft.functions.GraftFunctions.register(spark)
-    val t = uniq("graft_replay_ivfpq_")
-    val path = tmp("graft_replay_ivfpq_")
-    val vecs = (0L until 16L).map(i =>
-      (i, Array.tabulate(8)(d => math.sin(i * 3 + d).toFloat)))
-      .toDF("vec_id", "embedding")
+    val family = CdcFamily.ivfPq(2, 8)
+    val (src, dest, exp) = (uniq("graft_ivfpq_settle_src_"),
+      uniq("graft_ivfpq_settle_dest_"), uniq("graft_ivfpq_settle_exp_"))
+    val paths = (1 to 3).map(_ => tmp("graft_ivfpq_settle_"))
+    val ins = Array.tabulate(8)(d => math.cos(d).toFloat)
+    val upd = Array.tabulate(8)(d => math.cos(d + 1).toFloat)
     try {
-      VectorOps.writeIvfPqIndex(vecs, t, path, numCentroids = 2,
+      VectorOps.writeIvfPqIndex(replayVecs(8), src, paths(0), numCentroids = 2,
         trainIters = 1, m = 2, ksub = 4, pqIters = 1, dim = 8)
-      // a statement-shaped CDC batch: one INSERT, one DELETE, one UPDATE
-      val batch = Seq(
-        ("INSERT", 900L, Array.tabulate(8)(d => math.cos(d).toFloat), 1L),
-        ("DELETE", 3L, null.asInstanceOf[Array[Float]], 2L),
-        ("UPDATE", 5L, Array.tabulate(8)(d => math.cos(d + 1).toFloat), 3L))
-        .toDF("statement", "vec_id", "embedding", "event_seq")
-      IngestStream.applyCdcIvfPqBatch(spark, t, batch, batchId = 3L,
+      IngestStream.applyCdcFamilyBatch(spark, family, src, Seq(
+          ("INSERT", 900L, ins, 1L),
+          ("DELETE", 3L, null.asInstanceOf[Array[Float]], 2L),
+          ("UPDATE", 5L, upd, 3L))
+        .toDF("statement", "vec_id", "embedding", "event_seq"), batchId = 0L)
+      IngestStream.settleFamilyUpserts(spark, family, src, dest,
+        Seq(paths(1)))
+      // the union build: the same frozen quantizers, the final corpus
+      // (3 deleted, 5 updated, 900 inserted) appended into empty codes
+      Seq("_cents", "_codebooks").foreach(sfx =>
+        spark.table(src + sfx).write.format("parquet")
+          .option("path", s"${paths(2)}/$sfx").saveAsTable(exp + sfx))
+      spark.table(s"${src}_codes").limit(0).write.format("parquet")
+        .partitionBy("list_id").option("path", s"${paths(2)}/codes")
+        .saveAsTable(s"${exp}_codes")
+      VectorOps.appendToIvfPqIndex(spark, exp,
+        replayVecs(8).filter(!col("vec_id").isin(3L, 5L))
+          .unionByName(Seq((5L, upd), (900L, ins)).toDF("vec_id", "embedding")),
         m = 2, dim = 8)
-      val codes = spark.table(s"${t}_codes").count()
-      val tombs = spark.table(s"${t}_tombstones").count()
-      val pending = spark.table(s"${t}_pending").count()
-      // the replay: same batchId arrives again (checkpoint commit lost)
-      IngestStream.applyCdcIvfPqBatch(spark, t, batch, batchId = 3L,
-        m = 2, dim = 8)
-      assert(spark.table(s"${t}_codes").count() == codes,
-        "replayed batch re-appended code rows")
-      assert(spark.table(s"${t}_tombstones").count() == tombs,
-        "replayed batch re-appended tombstones")
-      assert(spark.table(s"${t}_pending").count() == pending,
-        "replayed batch re-queued pending rows")
-      // a genuinely NEW batch still lands (m=2 codes per insert)
-      IngestStream.applyCdcIvfPqBatch(spark, t,
-        batch.filter(col("statement") === "INSERT")
-          .select(col("statement"), (col("vec_id") + 1).as("vec_id"),
-            col("embedding"), col("event_seq")),
-        batchId = 4L, m = 2, dim = 8)
-      assert(spark.table(s"${t}_codes").count() == codes + 2)
-    } finally Seq(s"${t}_applied", s"${t}_cents", s"${t}_codebooks",
-      s"${t}_codes", s"${t}_tombstones", s"${t}_pending")
-      .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
+      def codes(t: String) = spark.table(s"${t}_codes")
+        .select(col("vec_id"), col("s"), col("cid"), col("list_id"))
+        .orderBy(col("vec_id"), col("s")).collect().toSeq.map(_.toSeq)
+      assert(codes(dest) == codes(exp),
+        "settled IVF-PQ codes differ from the frozen-quantizer union build")
+    } finally Seq(src, dest, exp).foreach { t =>
+      (family.tables ++ CdcFamily.sidecars).foreach(sfx =>
+        spark.sql(s"DROP TABLE IF EXISTS $t$sfx"))
+    }
+  }
+
+  test("settle refreshes what a long-running sink appended from its own session") {
+    // the sink appends from the stream's cloned session; a settle from
+    // the caller's session that already read the sidecars must still
+    // see the newest tombstones and pending rows
+    def ev(rows: (String, Long, String, Long)*) =
+      rows.toSeq.toDF("statement", "doc_id", "text", "event_seq").coalesce(1)
+    val docs = Seq(
+      (1L, "spark window spark query"),
+      (2L, "spark window window window"),
+      (3L, "spark plain text"),
+      (4L, "window plain text")).toDF("doc_id", "text")
+    val t = uniq("graft_cdc_xsession_")
+    val (s1, s2, ref) = (t + "_s1", t + "_s2", t + "_ref")
+    val p = (1 to 10).map(_ => tmp("graft_cdc_xsession_"))
+    SearchOps.writeSearchIndex(docs, "doc_id", "text", t, p(0), numBuckets = 4)
+    SearchOps.writeDocLengths(spark, t, p(1), numBuckets = 4)
+    ev(("INSERT", 5L, "spark window five", 10L),
+      ("UPDATE", 3L, "spark spark three", 11L),
+      ("DELETE", 4L, null, 12L)).write.mode("append").parquet(p(2))
+    val query = IngestStream.cdcIndexSink(
+      CdcStream.readEventStream(spark, p(2), maxFilesPerTrigger = 1), t, p(3),
+      numBuckets = 4, trigger = Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      query.processAllAvailable()
+      // this session now holds file listings of every sidecar
+      IngestStream.settleSearchUpserts(spark, t, s1, p(4), p(5),
+        numBuckets = 4)
+      ev(("DELETE", 1L, null, 20L),
+        ("UPDATE", 2L, "window two rewritten", 21L))
+        .write.mode("append").parquet(p(2))
+      query.processAllAvailable()
+      IngestStream.settleSearchUpserts(spark, t, s2, p(6), p(7),
+        numBuckets = 4)
+      SearchOps.writeSearchIndex(Seq(
+          (2L, "window two rewritten"),
+          (3L, "spark spark three"),
+          (5L, "spark window five")).toDF("doc_id", "text"),
+        "doc_id", "text", ref, p(8), numBuckets = 4)
+      SearchOps.writeDocLengths(spark, ref, p(9), numBuckets = 4)
+      def bm25(x: String) = SearchOps.searchBm25(spark, x,
+        Seq("spark", "window"), 10).collect().toSeq.map(_.toSeq)
+      assert(bm25(s2) == bm25(ref),
+        "settle missed the sink's latest tombstones/pending rows")
+    } finally {
+      query.stop()
+      (Seq(t, s1, s2, ref).flatMap(x => Seq(x, s"${x}_doclens")) ++
+        CdcFamily.sidecars.map(t + _))
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    }
   }
 }
