@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, IndexFamily}
+import SimilarityQueries.{append, base, compact, delete, pointer, retrain}
 
 /** Oracle-gated graph-analytics queries over the co-purchase graph
   * (see [[graft.operators.GraphOps]] for the graph model and the
@@ -342,7 +343,7 @@ object GraphQueries {
     // session-epoch walk: same oracle, another plan
     "sim_ann_graph_indexed" -> ((s, dir) => {
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      GraphOps.probeGraphIndex(s, graphIndexFor(s, dir), q, k = 3)
+      GraphOps.probeGraphIndex(s, base(s, dir, graph), q, k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
     // ...and through the atomic catalog pointer (Generations
@@ -350,7 +351,7 @@ object GraphQueries {
     // replace, probes resolve a whole generation or none of it
     "sim_ann_graph_published" -> ((s, dir) => {
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      GraphOps.probeGraphIndex(s, graphViewFor(s, dir), q, k = 3)
+      GraphOps.probeGraphIndex(s, pointer(s, dir, graph), q, k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
     // DELETE maintenance: hamming-0-class poison twins of the probe
@@ -359,7 +360,7 @@ object GraphQueries {
     // probe must hash-match the untouched base walk
     "sim_ann_graph_deleted" -> ((s, dir) => {
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      GraphOps.probeGraphIndex(s, graphDeleteIndexFor(s, dir), q, k = 3)
+      GraphOps.probeGraphIndex(s, delete(s, dir, graph), q, k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
     // COMPACTION: the delete epoch's tombstones settled physically
@@ -368,7 +369,7 @@ object GraphQueries {
     // the deleted probe's oracle
     "sim_ann_graph_compacted" -> ((s, dir) => {
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      GraphOps.probeGraphIndex(s, graphCompactIndexFor(s, dir), q, k = 3)
+      GraphOps.probeGraphIndex(s, compact(s, dir, graph), q, k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
     // UPDATE maintenance: the %20==0 dup wave admitted CORRUPTED
@@ -385,14 +386,14 @@ object GraphQueries {
     // entry cells — frozen assignment makes its populations identical
     // to the IVF families' appended lists, so they share one mirror
     "sim_ann_graph_retrain_check" -> ((s, dir) =>
-      GraphOps.graphRetrainCheck(s, graphAppendIndexFor(s, dir))),
+      GraphOps.graphRetrainCheck(s, append(s, dir, graph))),
     // RETRAIN execution: full rebuild over the live corpus read back
     // from the appended generation's own nodes — fresh quantizer with
     // re-derived K, fresh cells, fresh NN-descent edges; the ranked
     // adjacency must equal a from-scratch build over the union corpus,
     // which is exactly what the corpus-parameterized mirror computes
     "sim_ann_graph_retrained" -> ((s, dir) =>
-      s.table(s"${graphRetrainIndexFor(s, dir)}_edges")
+      s.table(s"${retrain(s, dir, graph)}_edges")
         .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
         .orderBy(col("src"), col("rk"))),
     // METADATA-FILTERED walk (the production "vector search with
@@ -401,7 +402,7 @@ object GraphQueries {
     // — the walk routes through the label's own subgraph
     "sim_ann_graph_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      GraphOps.probeGraphIndexFiltered(s, graphIndexFor(s, dir),
+      GraphOps.probeGraphIndexFiltered(s, base(s, dir, graph),
           emb.filter(col("vec_id") < 10), emb, k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -413,7 +414,7 @@ object GraphQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.filteredRecallAudit(emb,
-        GraphOps.probeGraphIndexFiltered(s, graphIndexFor(s, dir),
+        GraphOps.probeGraphIndexFiltered(s, base(s, dir, graph),
           emb.filter(col("vec_id") < 10), emb,
           k = SimilarityQueries.recallK))
     }),
@@ -447,7 +448,7 @@ object GraphQueries {
     // for the family whose index already carries its vectors
     "sim_ann_graph_rerank" -> ((s, dir) => {
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      GraphOps.probeGraphIndexRerank(s, graphIndexFor(s, dir), q, k = 3)
+      GraphOps.probeGraphIndexRerank(s, base(s, dir, graph), q, k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
     // ...and its recall audit vs the exact top-3 (the family
@@ -456,7 +457,7 @@ object GraphQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(emb,
-        GraphOps.probeGraphIndexRerank(s, graphIndexFor(s, dir),
+        GraphOps.probeGraphIndexRerank(s, base(s, dir, graph),
           emb.filter(col("vec_id") < 10), k = SimilarityQueries.recallK))
     }),
     // index MONITORING: per-cell member counts of the persisted graph
@@ -464,7 +465,7 @@ object GraphQueries {
     // sim_ann_ivf_stats; the cells ARE the k-means assignment, so they
     // share its mirror)
     "sim_ann_graph_stats" -> ((s, dir) =>
-      s.table(s"${graphIndexFor(s, dir)}_cells")
+      s.table(s"${base(s, dir, graph)}_cells")
         .groupBy(col("list_id")).agg(count(lit(1)).as("n_vectors"))
         .orderBy(col("list_id"))),
     // compaction-cadence DECISION for the graph family (the shared
@@ -473,7 +474,7 @@ object GraphQueries {
     // under the 50‰ threshold, so the FALSE branch gates (the same
     // fixture as the IVF families' monitors — shared mirror)
     "sim_ann_graph_compaction_check" -> ((s, dir) => {
-      val gen = graphDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, graph)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_nodes"))
     }),
@@ -487,7 +488,7 @@ object GraphQueries {
       val brute = graft.operators.VectorOps
         .bruteForceTopK(corpus, corpus, k = 3)
         .select(col("query_id"), col("neighbor_id"))
-      val ann = s.table(s"${graphRetrainIndexFor(s, dir)}_edges")
+      val ann = s.table(s"${retrain(s, dir, graph)}_edges")
         .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
       val hits = brute.join(ann, Seq("query_id", "neighbor_id"))
         .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
@@ -501,108 +502,51 @@ object GraphQueries {
 
   // ---------------- graph-index generation epochs (r17) ----------------
 
-  private def freshId(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private val GraphSuffixes = Seq("_cents", "_cells", "_nodes", "_edges")
-
-  /** The SERVED graph-index generation: the session's epoch artifacts
-    * (quantizer, cells, NN-descent edges) copied to catalog tables plus
-    * the `_nodes` vector payload — one epoch write per (session, dir),
-    * every lifecycle epoch below clones from it. Child epochs resolve
-    * BEFORE the acquire (the nested-computeIfAbsent flake). */
-  private[graft] def graphIndexFor(s: SparkSession, dir: String): String = {
-    val centsP = GraphOps.centsDir(s, dir)
-    val cellsP = GraphOps.cellsDir(s, dir)
-    val edgesP = GraphOps.knnGraphDir(s, dir)
-    EpochRegistry.acquire(s, "graph_index", dir) { () =>
-      val table = "graft_graph_index_" + freshId()
-      val path = tmpDir("graft_graph_index_")
-      s.read.parquet(centsP).write.mode("overwrite").format("parquet")
-        .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-      s.read.parquet(cellsP).select(col("vec_id"), col("list_id"))
-        .write.mode("overwrite").format("parquet").partitionBy("list_id")
-        .option("path", s"$path/cells").saveAsTable(s"${table}_cells")
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        .write.mode("overwrite").format("parquet")
-        .option("path", s"$path/nodes").saveAsTable(s"${table}_nodes")
-      s.read.parquet(edgesP)
-        .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
-        .write.mode("overwrite").format("parquet")
-        .option("path", s"$path/edges").saveAsTable(s"${table}_edges")
-      EpochRegistry.Resource(table,
-        dropTables = GraphSuffixes.map(table + _), deleteDirs = Seq(path))
-    }
-  }
-
-  /** Atomic pointer serving for the graph generation — ONE catalog
-    * view naming the generation, all four suffixes resolving together
-    * ([[graft.operators.Generations.publishPointer]]). */
-  private[graft] def graphViewFor(s: SparkSession, dir: String): String = {
-    val base = graphIndexFor(s, dir)
-    EpochRegistry.acquire(s, "graph_index_view", dir) { () =>
-      val view = "graft_graph_pview_" + freshId()
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = GraphSuffixes)
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** Poison twins of the probe queries (ids +500000, identical
-    * vectors): admitted through the append walk they join the queries'
-    * own entry cells at cos 1.0 — the loudest possible delete gate. */
-  private def poisonBatch(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"))
-
-  /** DELETE epoch: clone + poison append + seq-versioned tombstone
-    * (the family-shared delete operator). Probes exclude the dead ids
-    * from the node relation, so the walk equals the untouched base
-    * walk. */
-  private[graft] def graphDeleteIndexFor(s: SparkSession,
-      dir: String): String = {
-    val base = graphIndexFor(s, dir)
-    EpochRegistry.acquire(s, "graph_delete_index", dir) { () =>
-      val table = "graft_graph_del_" + freshId()
-      val path = tmpDir("graft_graph_del_")
-      GraphOps.cloneGraphIndex(s, base, table, path)
-      GraphOps.appendToGraphIndex(s, table, poisonBatch(s, dir))
-      graft.operators.VectorOps.deleteFromIvfIndex(s, table,
-        poisonBatch(s, dir).select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = GraphSuffixes.map(table + _) :+ s"${table}_tombstones",
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** COMPACT epoch: the delete epoch's tombstones settled physically
-    * into a fresh tombstone-free generation. */
-  private[graft] def graphCompactIndexFor(s: SparkSession,
-      dir: String): String = {
-    val src = graphDeleteIndexFor(s, dir)
-    EpochRegistry.acquire(s, "graph_compact_index", dir) { () =>
-      val table = "graft_graph_cmp_" + freshId()
-      val path = tmpDir("graft_graph_cmp_")
-      GraphOps.compactGraphIndex(s, src, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = GraphSuffixes.map(table + _), deleteDirs = Seq(path))
-    }
-  }
+  /** The graph row of the family table: the SERVED generation copies
+    * the session's kNN epoch artifacts (quantizer, cells, NN-descent
+    * edges) to catalog tables plus the `_nodes` vector payload — the
+    * kNN epochs resolve in `build`, BEFORE the base acquire (the
+    * nested-computeIfAbsent flake). Compaction settles the delete
+    * generation's tombstones (dead ids purged from nodes, cells AND the
+    * adjacency both ways); retrain rebuilds from the appended
+    * generation's own nodes ([[GraphOps.retrainGraphIndex]]). */
+  private[graft] val graph: SimilarityQueries.Lifecycle =
+    SimilarityQueries.Lifecycle("graph", IndexFamily.graph,
+      build = (s, dir) => {
+        val centsP = GraphOps.centsDir(s, dir)
+        val cellsP = GraphOps.cellsDir(s, dir)
+        val edgesP = GraphOps.knnGraphDir(s, dir)
+        (table, path) => {
+          s.read.parquet(centsP).write.mode("overwrite").format("parquet")
+            .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
+          s.read.parquet(cellsP).select(col("vec_id"), col("list_id"))
+            .write.mode("overwrite").format("parquet").partitionBy("list_id")
+            .option("path", s"$path/cells").saveAsTable(s"${table}_cells")
+          Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+            .write.mode("overwrite").format("parquet")
+            .option("path", s"$path/nodes").saveAsTable(s"${table}_nodes")
+          s.read.parquet(edgesP)
+            .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
+            .write.mode("overwrite").format("parquet")
+            .option("path", s"$path/edges").saveAsTable(s"${table}_edges")
+        }
+      },
+      compactFrom = delete,
+      retrain = Some((s, src, dest, path, _) =>
+        GraphOps.retrainGraphIndex(s, src, dest, path)),
+      derive = None)
 
   /** UPDATE epoch: the %20==0 dup wave admitted with NEGATED vectors
     * (corrupted scores), healed by [[GraphOps.upsertToGraphIndex]] with
     * the true vectors. Returns the settled generation. */
   private[graft] def graphUpdateIndexFor(s: SparkSession,
       dir: String): String = {
-    val base = graphIndexFor(s, dir)
+    val gen = base(s, dir, graph)
     EpochRegistry.acquire(s, "graph_update_index", dir) { () =>
-      val src = "graft_graph_upd_src_" + freshId()
-      val dest = "graft_graph_upd_" + freshId()
-      val paths = Seq(tmpDir("graft_graph_upd_"), tmpDir("graft_graph_upd_"))
-      GraphOps.cloneGraphIndex(s, base, src, paths(0))
+      val src = "graft_graph_upd_src_" + SimilarityQueries.freshId()
+      val dest = "graft_graph_upd_" + SimilarityQueries.freshId()
+      val paths = Seq.fill(2)(SimilarityQueries.tmpDir("graft_graph_upd_"))
+      GraphOps.cloneGraphIndex(s, gen, src, paths(0))
       val wave = SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
         .filter(col("vec_id") >= 100000 && col("vec_id") % 20 === 0)
       GraphOps.appendToGraphIndex(s, src,
@@ -612,42 +556,9 @@ object GraphQueries {
       GraphOps.upsertToGraphIndex(s, src, dest, paths(1),
         wave.select(col("vec_id"), col("embedding")))
       EpochRegistry.Resource(dest,
-        dropTables = GraphSuffixes.map(src + _) ++
-          GraphSuffixes.map(dest + _),
+        dropTables =
+          Seq(src, dest).flatMap(t => graph.family.tables.map(t + _)),
         deleteDirs = paths)
-    }
-  }
-
-  /** APPEND epoch: the full dup batch walk-appended in one batch — the
-    * drifted generation the retrain monitor judges and the retrain
-    * executor rebuilds from. */
-  private[graft] def graphAppendIndexFor(s: SparkSession,
-      dir: String): String = {
-    val base = graphIndexFor(s, dir)
-    EpochRegistry.acquire(s, "graph_append_index", dir) { () =>
-      val table = "graft_graph_app_" + freshId()
-      val path = tmpDir("graft_graph_app_")
-      GraphOps.cloneGraphIndex(s, base, table, path)
-      GraphOps.appendToGraphIndex(s, table,
-        SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
-          .filter(col("vec_id") >= 100000)
-          .select(col("vec_id"), col("embedding")))
-      EpochRegistry.Resource(table,
-        dropTables = GraphSuffixes.map(table + _), deleteDirs = Seq(path))
-    }
-  }
-
-  /** RETRAIN epoch: [[GraphOps.retrainGraphIndex]] over the appended
-    * generation — from-scratch build over the union corpus. */
-  private[graft] def graphRetrainIndexFor(s: SparkSession,
-      dir: String): String = {
-    val src = graphAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "graph_retrain_index", dir) { () =>
-      val table = "graft_graph_rt_" + freshId()
-      val path = tmpDir("graft_graph_rt_")
-      GraphOps.retrainGraphIndex(s, src, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = GraphSuffixes.map(table + _), deleteDirs = Seq(path))
     }
   }
 

@@ -294,7 +294,8 @@ object PipelineQueries {
       // quantizer hoisted from the shared IVF epoch (same K/iters —
       // identical centroids, see VectorOps hoisted-forms note)
       val assigned = graft.operators.VectorOps.kmeansAssignWith(
-        s.table(s"${SimilarityQueries.ivfIndexFor(s, dir)}_cents"),
+        s.table(
+          s"${SimilarityQueries.base(s, dir, SimilarityQueries.ivf)}_cents"),
         Tables.embeddings(s, dir))
       PipelineOps.mixByQuota(assigned.withColumn("cluster", col("cluster_id").cast("string")),
           "vec_id", "cluster", quotas = Map.empty, defaultQuota = 8)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.VectorOps
+import graft.operators.{Generations, IndexFamily, VectorOps}
 
 /** Similarity search over `embeddings` (SURVEY §2.3): brute-force cosine
   * top-k (exact baseline), sign-bucket LSH ANN (scale path), and
@@ -194,1056 +194,261 @@ object SimilarityQueries {
   private val idealDcgPpm: Long =
     (1 to 10).map(i => (11L - i) * rankDiscountPpm(i - 1)).sum
 
-  /** One persisted IVF index per (session, dir) epoch, built lazily on
-    * first use into a unique table-name pair + fresh temp directory —
-    * the vector twin of [[TextQueries.bandIndexFor]] (same isolation
-    * reasoning: unique names so concurrent sessions/dirs can never race,
-    * one epoch write amortized across every probe in the session —
-    * the 100 TB contract where the index is written once per epoch and
-    * the per-batch cost is the probe; [[EpochRegistry]] reclaims both
-    * tables and the dir when the owning session's context stops). */
-  private[graft] def ivfIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ivf_index", dir) { () =>
-      val table = "graft_ivf_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_index_").toString
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.writeIvfIndex(emb, table, path,
-        numCentroids = ivfK(emb), trainIters = 2)
+  // ---------------- index-family lifecycle epochs ----------------
+
+  /** One family's batch lifecycle — a row of the family table below.
+    * Every epoch is keyed `<prefix>_<stage>` per (session, dir) and
+    * writes its generation into `graft_<kind>_<uuid>` tables (the
+    * family's `tables` suffixes) under a fresh temp dir, all reclaimed
+    * by [[EpochRegistry]] when the owning session's context stops.
+    *
+    *  - `build`: the base generation's writer — it resolves the epochs
+    *    it reads FIRST (before the base acquire: a nested
+    *    `computeIfAbsent` on the registry map can deadlock) and returns
+    *    the write of one generation into `(table, path)`;
+    *  - `compactFrom`: the stage whose generation the compaction epoch
+    *    settles — [[append]] (the file groups appends grew) or
+    *    [[delete]] (the tombstones);
+    *  - `retrain`: `(src, dest, path, unionCorpus)` — fresh quantizers
+    *    (and a fresh K) over the appended generation's grown corpus,
+    *    through the family's own encode;
+    *  - `derive`: `(src, dest, path)` — the family's payload encoded
+    *    under the float [[ivf]] master's quantizer and assignment. */
+  private[graft] final case class Lifecycle(prefix: String,
+      family: IndexFamily,
+      build: (SparkSession, String) => (String, String) => Unit,
+      compactFrom: (SparkSession, String, Lifecycle) => String,
+      retrain:
+        Option[(SparkSession, String, String, String, DataFrame) => Unit],
+      derive: Option[(SparkSession, String, String, String) => Unit])
+
+  /** A base build over the lake's `embeddings`. */
+  private def overEmbeddings(write: (DataFrame, String, String) => Unit)
+      : (SparkSession, String) => (String, String) => Unit =
+    (s, dir) => (table, path) => write(Tables.embeddings(s, dir), table, path)
+
+  /** Float IVF: the coarse quantizer (K ~ √N, two Lloyd passes) and
+    * `partitionBy(list_id)` lists — the master every derivation reads. */
+  private[graft] val ivf: Lifecycle = Lifecycle("ivf", IndexFamily.ivf,
+    overEmbeddings((emb, t, p) => VectorOps.writeIvfIndex(emb, t, p,
+      numCentroids = ivfK(emb), trainIters = 2)),
+    compactFrom = append,
+    retrain = Some((s, src, dest, path, _) =>
+      VectorOps.retrainIvfIndex(s, src, dest, path)),
+    derive = None)
+
+  /** int8 list payloads under the float quantizer — the partition cut
+    * compounded with the 4× payload cut (VERDICT r9 #1); retrains from
+    * the lake corpus because its codes are lossy. */
+  private[graft] val sq8: Lifecycle = Lifecycle("ivf_sq8", IndexFamily.sq8,
+    overEmbeddings((emb, t, p) => VectorOps.writeIvfIndexSq8(emb, t, p,
+      numCentroids = ivfK(emb), trainIters = 2)),
+    compactFrom = append,
+    retrain = Some(VectorOps.retrainIvfIndexSq8(_, _, _, _, _)),
+    derive = Some(VectorOps.deriveSq8Index(_, _, _, _)))
+
+  /** Sign masks inside the coarse lists — the compression spectrum's
+    * coarsest SERVED layout. */
+  private[graft] val binary: Lifecycle = Lifecycle("ivf_binary",
+    IndexFamily.binary,
+    overEmbeddings((emb, t, p) => VectorOps.writeIvfIndexBinary(emb, t, p,
+      numCentroids = ivfK(emb), trainIters = 2)),
+    compactFrom = delete,
+    retrain = Some(VectorOps.retrainIvfIndexBinary(_, _, _, _, _)),
+    derive = Some(VectorOps.deriveBinaryIndex(_, _, _, _)))
+
+  /** Matryoshka 32-dim prefixes under their own coarse quantizer. */
+  private[graft] val mrl: Lifecycle = Lifecycle("mrl", IndexFamily.mrl,
+    overEmbeddings((emb, t, p) => VectorOps.writeMrlIndex(emb, t, p,
+      prefixDims = 32, numCentroids = ivfK(emb), trainIters = 2)),
+    compactFrom = delete, retrain = None, derive = None)
+
+  /** Flat PQ: 8 subspaces × 64 centroids — the 32×-compressed corpus. */
+  private[graft] val pq: Lifecycle = Lifecycle("pq", IndexFamily.pq,
+    overEmbeddings((emb, t, p) => VectorOps.writePqIndex(emb, t, p,
+      m = 8, ksub = 64, trainIters = 2)),
+    compactFrom = delete, retrain = None, derive = None)
+
+  /** The IVF-PQ composite: coarse lists of PQ codes, both quantizers
+    * trained once per epoch. */
+  private[graft] val ivfPq: Lifecycle = Lifecycle("ivfpq",
+    IndexFamily.ivfPq(8, 64),
+    overEmbeddings((emb, t, p) => VectorOps.writeIvfPqIndex(emb, t, p,
+      numCentroids = ivfK(emb), trainIters = 2, m = 8, ksub = 64,
+      pqIters = 2)),
+    compactFrom = delete,
+    retrain = Some(VectorOps.retrainIvfPqIndex(_, _, _, _, _, m = 8,
+      ksub = 64, pqIters = 2)),
+    derive = Some(VectorOps.deriveIvfPqIndex(_, _, _, _, m = 8, ksub = 64,
+      pqIters = 2)))
+
+  /** Residual IVF-PQ (`by_residual=true` — VERDICT r13 #4): the
+    * composite's shape, codes quantizing residuals against the list
+    * centroids. */
+  private[graft] val ivfPqRes: Lifecycle = Lifecycle("ivfpq_res",
+    IndexFamily.ivfPqResidual(8, 64),
+    overEmbeddings((emb, t, p) => VectorOps.writeIvfPqResidualIndex(emb, t,
+      p, numCentroids = ivfK(emb), trainIters = 2, m = 8, ksub = 64,
+      pqIters = 2)),
+    compactFrom = delete,
+    retrain = Some(VectorOps.retrainIvfPqResidualIndex(_, _, _, _, _, m = 8,
+      ksub = 64, pqIters = 2)),
+    derive = Some(VectorOps.deriveIvfPqResidualIndex(_, _, _, _, m = 8,
+      ksub = 64, pqIters = 2)))
+
+  /** The vector rows of the family table (the graph row,
+    * [[GraphQueries.graph]], builds from the kNN epochs instead). */
+  private[graft] val vectorFamilies: Seq[Lifecycle] =
+    Seq(ivf, sq8, binary, mrl, pq, ivfPq, ivfPqRes)
+
+  private[graft] def freshId(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  private[graft] def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every table one generation `table` can hold: the family's own plus
+    * the tombstone sidecar a delete (or a clone of one) writes. */
+  private def generationTables(family: IndexFamily, table: String)
+      : Seq[String] =
+    (family.tables :+ "_tombstones").map(table + _)
+
+  /** Acquire `kind` as ONE fresh generation: `write(table, path)` fills
+    * `graft_<kind>_<uuid>` under a fresh temp dir. Any epoch `write`
+    * reads must already be resolved by the caller. */
+  private def generation(s: SparkSession, dir: String, kind: String,
+      family: IndexFamily)(write: (String, String) => Unit): String =
+    EpochRegistry.acquire(s, kind, dir) { () =>
+      val table = s"graft_${kind}_" + freshId()
+      val path = tmpDir(s"graft_${kind}_")
+      write(table, path)
       EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
+        dropTables = generationTables(family, table), deleteDirs = Seq(path))
     }
 
-  /** The PQ epoch index: same acquire contract as [[ivfIndexFor]] —
-    * codebooks trained + the whole corpus encoded ONCE per (session,
-    * dir); every PQ probe in the session reads the persisted codes
-    * (the 32×-compressed corpus) instead of re-training/re-encoding. */
-  private[graft] def mrlIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "mrl_index", dir) { () =>
-      val table = "graft_mrl_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mrl_index_").toString
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.writeMrlIndex(emb, table, path,
-        prefixDims = 32, numCentroids = ivfK(emb), trainIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_prefix",
-          s"${table}_nodes"),
-        deleteDirs = Seq(path))
-    }
+  /** BASE: the family's serving generation, written once per (session,
+    * dir) and probed by every later query in the session — the 100 TB
+    * contract where the index is written once per epoch and the
+    * per-batch cost is the probe. */
+  private[graft] def base(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val write = lc.build(s, dir)
+    generation(s, dir, s"${lc.prefix}_index", lc.family)(write)
+  }
 
-  /** The MRL DELETE epoch ([[ivfPqDeleteIndexFor]]'s shape): clone the
-    * serving generation, admit exact copies of the query vectors under
-    * poison ids through the frozen derivation (their prefixes are the
-    * queries' own — cos-1.0 rank-1 on both passes, the loudest
-    * possible leak), then tombstone them. The gated probe must
-    * hash-match the untouched `sim_ann_mrl` oracle. */
-  private[graft] def mrlDeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = mrlIndexFor(s, dir)
-    EpochRegistry.acquire(s, "mrl_delete_index", dir) { () =>
-      val table = "graft_mrl_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mrl_delete_index_").toString
-      VectorOps.cloneMrlIndex(s, base, table, path)
+  /** DELETE: the serving generation cloned, exact copies of the query
+    * vectors admitted under poison ids ≥ 500000 through the frozen
+    * append (cosine 1.0 / hamming 0 — guaranteed rank-1, the loudest
+    * possible leak), then tombstoned through the family's delete. The
+    * gated probe must hash-match the untouched base oracle. */
+  private[graft] def delete(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val src = base(s, dir, lc)
+    generation(s, dir, s"${lc.prefix}_delete_index", lc.family) { (t, p) =>
+      lc.family.cloneTo(s, src, t, p)
       val poison = querySet(Tables.embeddings(s, dir))
         .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToMrlIndex(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_prefix",
-          s"${table}_nodes", s"${table}_tombstones"),
-        deleteDirs = Seq(path))
+      lc.family.append(s, t, poison)
+      lc.family.delete(s, t, poison.select(col("vec_id")))
     }
   }
 
-  /** The MRL compaction epoch: the delete generation's tombstones
-    * settle physically on both sides — result-invisible, one shared
-    * untouched oracle. */
-  private[graft] def mrlCompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = mrlDeleteIndexFor(s, dir)
-    EpochRegistry.acquire(s, "mrl_compact_index", dir) { () =>
-      val table = "graft_mrl_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mrl_compact_index_").toString
-      VectorOps.cloneMrlIndex(s, base, table, path, compact = true)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_prefix",
-          s"${table}_nodes"),
-        deleteDirs = Seq(path))
-    }
+  /** COMPACT: the `compactFrom` generation rewritten one file group per
+    * list with its tombstones settled physically — result-identical
+    * rows in a tighter layout, so the probe shares that generation's
+    * oracle. */
+  private[graft] def compact(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val src = lc.compactFrom(s, dir, lc)
+    generation(s, dir, s"${lc.prefix}_compact_index", lc.family)(
+      lc.family.compact(s, src, _, _))
   }
 
-  /** The MRL UPDATE epoch — corrupt-then-heal like every upsert gate:
-    * poison twins admitted under EXISTING ids 50-59 (those ids then
-    * carry two prefix AND two node rows — both ranks surface them
-    * doubled), healed by upserting the ids' true vectors into a new
-    * generation. The probe hash-matching the untouched oracle proves
-    * both the corruption and the heal. */
-  private[graft] def mrlUpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = mrlIndexFor(s, dir)
-    EpochRegistry.acquire(s, "mrl_upsert_index", dir) { () =>
-      val corrupt = "graft_mrl_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_mrl_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_mrl_upsert_").toString)
+  /** UPSERT, corrupt-then-heal: a clone CORRUPTED exactly the way
+    * in-place re-ingestion would — copies of the query vectors under
+    * ten EXISTING ids 50–59, which then carry two payloads each (the
+    * doubled-id defect the family's upsert exists to prevent) — and
+    * HEALED by upserting the ids' true vectors into a new generation.
+    * The probe hash-matching the untouched oracle proves both. */
+  private[graft] def upsert(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val src = base(s, dir, lc)
+    val kind = s"${lc.prefix}_upsert_index"
+    EpochRegistry.acquire(s, kind, dir) { () =>
+      val corrupt = s"graft_${lc.prefix}_upsert_src_" + freshId()
+      val dest = s"graft_${kind}_" + freshId()
+      val paths = Seq.fill(2)(tmpDir(s"graft_${lc.prefix}_upsert_"))
       val emb = Tables.embeddings(s, dir)
-      VectorOps.cloneMrlIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToMrlIndex(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToMrlIndex(s, corrupt, dest, paths(1), truth)
-      EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_cents", s"${corrupt}_prefix",
-          s"${corrupt}_nodes", s"${dest}_cents", s"${dest}_prefix",
-          s"${dest}_nodes"),
-        deleteDirs = paths)
-    }
-  }
-
-  /** The MRL append epoch — clone-then-append under the frozen
-    * derivation: the probe must equal a fresh build over the union
-    * corpus (the prefix of a new vector is a `slice()` — dimension
-    * truncation has no codebook to freeze, so the equality is exact by
-    * construction). */
-  private[graft] def mrlAppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = mrlIndexFor(s, dir)
-    EpochRegistry.acquire(s, "mrl_append_index", dir) { () =>
-      val table = "graft_mrl_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mrl_append_index_").toString
-      VectorOps.cloneMrlIndex(s, base, table, path)
-      VectorOps.appendToMrlIndex(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_prefix",
-          s"${table}_nodes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The MRL atomic pointer view — `_cents`+`_prefix`+`_nodes` resolve
-    * together from the promoted generation. */
-  private[graft] def mrlPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = mrlIndexFor(s, dir)
-    EpochRegistry.acquire(s, "mrl_pointer_view", dir) { () =>
-      val view = "graft_mrl_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_cents", "_prefix", "_nodes"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  private[graft] def pqIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "pq_index", dir) { () =>
-      val table = "graft_pq_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_pq_index_").toString
-      VectorOps.writePqIndex(Tables.embeddings(s, dir), table, path,
-        m = 8, ksub = 64, trainIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_codebooks", s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-
-  /** [[ivfPointerViewFor]] for the PQ generation — same atomic
-    * catalog-pointer serve, `_codebooks`+`_codes` resolving together. */
-  private[graft] def pqPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = pqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "pq_pointer_view", dir) { () =>
-      val view = "graft_pq_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_codebooks", "_codes"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** The IVF-PQ epoch index: both quantizers trained + the corpus
-    * assigned/encoded ONCE per (session, dir) — the composite's probes
-    * read only their ranked lists' code partitions. Same acquire
-    * contract as [[ivfIndexFor]]/[[pqIndexFor]]. */
-  private[graft] def ivfPqIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ivfpq_index", dir) { () =>
-      val table = "graft_ivfpq_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_index_").toString
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.writeIvfPqIndex(emb, table, path,
-        numCentroids = ivfK(emb), trainIters = 2, m = 8, ksub = 64,
-        pqIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-
-  /** The residual IVF-PQ epoch (`by_residual=true` — VERDICT r13 #4):
-    * same coarse K / Lloyd passes / PQ shape as [[ivfPqIndexFor]], but
-    * the codes quantize residuals against the list centroids. */
-  private[graft] def ivfPqResidualIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ivfpq_residual_index", dir) { () =>
-      val table = "graft_ivfpq_res_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_index_").toString
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.writeIvfPqResidualIndex(emb, table, path,
-        numCentroids = ivfK(emb), trainIters = 2, m = 8, ksub = 64,
-        pqIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-
-  /** Residual twin of [[ivfPqDeleteIndexFor]]: poison twins admitted
-    * through the frozen-quantizer RESIDUAL append, then tombstoned —
-    * the id-keyed sidecar is payload-agnostic, so only the admit step
-    * differs from the non-residual epoch. */
-  private[graft] def ivfPqResDeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqResidualIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_delete_index", dir) { () =>
-      val table = "graft_ivfpq_res_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_delete_index_").toString
-      VectorOps.cloneIvfPqIndex(s, base, table, path)
-      val poison = querySet(Tables.embeddings(s, dir))
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfPqResidualIndex(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes", s"${table}_tombstones"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** Residual compaction epoch: the delete generation's tombstones
-    * settle physically via the payload-agnostic
-    * [[VectorOps.cloneIvfPqIndex]] — result-invisible, one shared
-    * untouched oracle. */
-  private[graft] def ivfPqResCompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqResDeleteIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_compact_index", dir) { () =>
-      val table = "graft_ivfpq_res_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_compact_index_").toString
-      VectorOps.cloneIvfPqIndex(s, base, table, path, compact = true)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** Residual twin of [[ivfPqUpsertIndexFor]]: doubled ids corrupt the
-    * clone (their residual-ADC folds mix), healed by the residual
-    * upsert's drop + frozen-quantizer residual re-encode. */
-  private[graft] def ivfPqResUpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqResidualIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_upsert_index", dir) { () =>
-      val corrupt = "graft_ivfpq_res_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ivfpq_res_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_upsert_").toString)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.cloneIvfPqIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfPqResidualIndex(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToIvfPqResidualIndex(s, corrupt, dest, paths(1), truth)
-      EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_cents", s"${corrupt}_codebooks",
-          s"${corrupt}_codes", s"${dest}_cents", s"${dest}_codebooks",
-          s"${dest}_codes"),
-        deleteDirs = paths)
-    }
-  }
-
-  /** The IVF-PQ append epoch — clone-then-append under BOTH frozen
-    * quantizers ([[ivfAppendIndexFor]]'s shape): the serving generation
-    * is never touched, the batch routes to its lists and encodes
-    * against the epoch codebooks, and the probe must equal a fresh
-    * build over the union corpus with the same frozen quantizers. */
-  private[graft] def ivfPqAppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_append_index", dir) { () =>
-      val table = "graft_ivfpq_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_append_index_").toString
-      VectorOps.cloneIvfPqIndex(s, base, table, path)
-      VectorOps.appendToIvfPqIndex(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The IVF-PQ DELETE epoch ([[pqDeleteIndexFor]]'s shape): clone the
-    * serving composite, admit exact copies of the query vectors under
-    * poison ids (frozen quantizers — they route to the query's own
-    * probed lists and would surface as ADC-cosine-1.0 rank-1), then
-    * tombstone them. The gated probe must hash-match `sim_ann_ivfpq`'s
-    * oracle — a leak is a hash mismatch, not a rank shift. */
-  private[graft] def ivfPqDeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_delete_index", dir) { () =>
-      val table = "graft_ivfpq_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_delete_index_").toString
-      VectorOps.cloneIvfPqIndex(s, base, table, path)
-      val poison = querySet(Tables.embeddings(s, dir))
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfPqIndex(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes", s"${table}_tombstones"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The IVF-PQ compaction epoch: the delete generation's tombstones
-    * settle physically and each list's append file groups collapse —
-    * result-invisible, so it shares the untouched oracle. */
-  private[graft] def ivfPqCompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqDeleteIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_compact_index", dir) { () =>
-      val table = "graft_ivfpq_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_compact_index_").toString
-      VectorOps.cloneIvfPqIndex(s, base, table, path, compact = true)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The IVF-PQ UPDATE epoch — corrupt-then-heal like every upsert
-    * gate: a clone is CORRUPTED exactly the way naive re-ingestion
-    * would (poison twins under EXISTING ids 50-59, so those ids carry
-    * two code sets whose ADC folds MIX), then healed by upserting the
-    * ids' true vectors into a new generation. The probe hash-matching
-    * the untouched oracle proves both the corruption and the heal. */
-  private[graft] def ivfPqUpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_upsert_index", dir) { () =>
-      val corrupt = "graft_ivfpq_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ivfpq_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_upsert_").toString)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.cloneIvfPqIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfPqIndex(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToIvfPqIndex(s, corrupt, dest, paths(1), truth)
-      EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_cents", s"${corrupt}_codebooks",
-          s"${corrupt}_codes", s"${dest}_cents", s"${dest}_codebooks",
-          s"${dest}_codes"),
-        deleteDirs = paths)
-    }
-  }
-
-  /** The IVF-PQ atomic pointer view — all three suffixes resolve from
-    * the same promoted generation ([[Generations.publishPointer]]). */
-  private[graft] def ivfPqPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_pointer_view", dir) { () =>
-      val view = "graft_ivfpq_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_cents", "_codebooks", "_codes"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** The IVF-PQ derivation epoch: the float IVF master's quantizer and
-    * assignment re-used verbatim, lists PQ-encoded in place — the
-    * flat-to-compressed migration ([[ivfSq8DerivedIndexFor]]'s
-    * composite twin). Result-identical to a fresh composite build, so
-    * the probe shares `sim_ann_ivfpq`'s oracle. */
-  private[graft] def ivfPqDerivedIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_derived_index", dir) { () =>
-      val table = "graft_ivfpq_derived_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_derived_index_").toString
-      VectorOps.deriveIvfPqIndex(s, base, table, path, m = 8, ksub = 64,
-        pqIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The IVF-PQ retrain epoch: the grown (appended) generation's drift
-    * remedy — both quantizers retrain over the lake's union corpus and
-    * the new generation must equal a fresh build over it. */
-  private[graft] def ivfPqRetrainIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_retrain_index", dir) { () =>
-      val table = "graft_ivfpq_retrain_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_retrain_index_").toString
-      VectorOps.retrainIvfPqIndex(s, base, table, path,
-        dupVectors(Tables.embeddings(s, dir))
-          .select(col("vec_id"), col("embedding")),
-        m = 8, ksub = 64, pqIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The flat-PQ append epoch (r15 — the one family that still lacked
-    * a direct `_appended` gate): clone + frozen-codebook admit of the
-    * dup batch; the probe must equal a frozen-codebook encode of the
-    * union corpus (the sample cap keeps the training set identical). */
-  private[graft] def pqAppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = pqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "pq_append_index", dir) { () =>
-      val table = "graft_pq_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_pq_append_index_").toString
-      VectorOps.clonePqIndex(s, base, table, path)
-      VectorOps.appendToPqIndex(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_codebooks", s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The PQ DELETE epoch: clone the serving PQ generation, admit exact
-    * copies of the query vectors under poison ids (frozen-codebook
-    * append — they'd surface as ADC-cosine-1.0 rank-1 neighbors), then
-    * tombstone them. The gated probe must hash-match `sim_ann_pq`'s
-    * oracle — a tombstone leak is a hash mismatch, not a subtle rank
-    * shift. */
-  private[graft] def pqDeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = pqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "pq_delete_index", dir) { () =>
-      val table = "graft_pq_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_pq_delete_index_").toString
-      VectorOps.clonePqIndex(s, base, table, path)
-      val poison = querySet(Tables.embeddings(s, dir))
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToPqIndex(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_codebooks", s"${table}_codes",
-          s"${table}_tombstones"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The PQ COMPACTION epoch: the delete generation compacted — dead
-    * code rows settle physically, the new generation starts
-    * tombstone-free; the probe must still hash-match `sim_ann_pq`. */
-  private[graft] def pqCompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = pqDeleteIndexFor(s, dir)
-    EpochRegistry.acquire(s, "pq_compact_index", dir) { () =>
-      val table = "graft_pq_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_pq_compact_index_").toString
-      VectorOps.compactPqIndex(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_codebooks", s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The PQ UPDATE epoch: the serving generation cloned, CORRUPTED the
-    * way in-place re-ingestion would corrupt it — copies of the query
-    * vectors admitted under ten EXISTING corpus ids (50–59), whose ADC
-    * folds then SUM over both generations of code rows (a mixed,
-    * garbage score — the defect [[graft.operators.VectorOps
-    * .upsertToPqIndex]] exists to prevent) — and HEALED by upserting
-    * the ids' true vectors. Probe must hash-match `sim_ann_pq`. */
-  private[graft] def pqUpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = pqIndexFor(s, dir)
-    EpochRegistry.acquire(s, "pq_upsert_index", dir) { () =>
-      val corrupt = "graft_pq_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_pq_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_pq_upsert_").toString)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.clonePqIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToPqIndex(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToPqIndex(s, corrupt, dest, paths(1), truth)
-      EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_codebooks", s"${corrupt}_codes",
-          s"${dest}_codebooks", s"${dest}_codes"),
-        deleteDirs = paths)
-    }
-  }
-
-  /** The SQ8 epoch index: same contract as [[ivfIndexFor]], but the
-    * persisted lists are int8 codes ([[VectorOps.writeIvfIndexSq8]]) —
-    * the one member of the index family that compounds the partition
-    * cut with the 4× payload cut (VERDICT r9 #1). */
-  private[graft] def ivfSq8IndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ivf_sq8_index", dir) { () =>
-      val table = "graft_ivf_sq8_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_index_").toString
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.writeIvfIndexSq8(emb, table, path,
-        numCentroids = ivfK(emb), trainIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-
-  /** The pointer-serving epoch (the vector family's atomic publish):
-    * the serving generation promoted under a stable name via
-    * [[graft.operators.Generations.publishPointer]] — ONE catalog view
-    * holding the generation's name, so `_cents`, `_lists`, and the
-    * tombstone sidecar all resolve from the SAME atomically-flipped
-    * generation, and the probe plan (broadcast quantizer + DPP list
-    * pruning) is unchanged. The gated probes must hash-match the
-    * direct-probe oracles: serving indirection is result-invisible. */
-  private[graft] def ivfPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_pointer_view", dir) { () =>
-      val view = "graft_ivf_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_cents", "_lists"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** [[ivfPointerViewFor]] over the SQ8 generation — the pointer names
-    * a generation, not a payload layout, so the int8 family serves
-    * through the identical mechanism. */
-  private[graft] def ivfSq8PointerViewFor(s: SparkSession, dir: String): String = {
-    val base = ivfSq8IndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_pointer_view", dir) { () =>
-      val view = "graft_ivf_sq8_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_cents", "_lists"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** The append-maintenance epoch: the serving index generation is
-    * CLONED (pure IO — [[VectorOps.cloneIvfIndex]]; no re-training, no
-    * re-assignment) and the dup-vector batch (vec_id ≥ 100000) is
-    * APPENDED to the clone via the frozen quantizer — the
-    * clone-append-validate-swap workflow of a real deployment, which
-    * also leaves the serving tables (`sim_ann_ivf_indexed`'s) untouched.
-    * The base epoch is resolved BEFORE this acquire: a nested
-    * `computeIfAbsent` on the same map can deadlock on bin contention. */
-  private[graft] def ivfAppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_append_index", dir) { () =>
-      val table = "graft_ivf_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_append_index_").toString
-      VectorOps.cloneIvfIndex(s, base, table, path)
-      VectorOps.appendToIvfIndex(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** SQ8 twin of [[ivfAppendIndexFor]] — same clone-then-append shape. */
-  private[graft] def ivfSq8AppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfSq8IndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_append_index", dir) { () =>
-      val table = "graft_ivf_sq8_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_append_index_").toString
-      VectorOps.cloneIvfIndex(s, base, table, path)
-      VectorOps.appendToIvfIndexSq8(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The compaction epoch: the append-index generation (base + batch,
-    * many file groups) compacted into one-file-per-list
-    * ([[VectorOps.compactIvfIndex]]) — result-identical rows in a
-    * tighter layout, so the gated probe shares the append oracle (one
-    * oracle, three plans: in-memory union, appended, compacted). */
-  private[graft] def ivfCompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_compact_index", dir) { () =>
-      val table = "graft_ivf_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_compact_index_").toString
-      VectorOps.compactIvfIndex(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The retrain epoch: the appended generation's grown corpus read
-    * back from its lists and retrained into a NEW generation
-    * ([[VectorOps.retrainIvfIndex]] — fresh centroids AND fresh K over
-    * the union corpus), closing the lifecycle the monitoring verdict
-    * opens. Base resolved before the acquire (nested computeIfAbsent on
-    * one map can deadlock). */
-  private[graft] def ivfRetrainIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_retrain_index", dir) { () =>
-      val table = "graft_ivf_retrain_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_retrain_index_").toString
-      VectorOps.retrainIvfIndex(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The SQ8-derivation epoch: the float master's quantizer and
-    * assignment re-used verbatim, payload quantized in place
-    * ([[VectorOps.deriveSq8Index]]) — how a retrained float master
-    * regains its compact serving copy without re-training. */
-  private[graft] def ivfSq8DerivedIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_derived_index", dir) { () =>
-      val table = "graft_ivf_sq8_derived_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_derived_index_").toString
-      VectorOps.deriveSq8Index(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The DELETE epoch: the serving generation is cloned, a poison batch
-    * is ADMITTED through the normal frozen-quantizer append (copies of
-    * the query vectors under ids ≥ 500000 — cosine 1.0, guaranteed
-    * rank-1 neighbors), then tombstoned via
-    * [[VectorOps.deleteFromIvfIndex]]. The gated probe must hash-match
-    * `sim_ann_ivf`'s oracle — a tombstone leak surfaces the poison as
-    * a perfect-score neighbor, the loudest possible failure. Base
-    * resolved before the acquire (no nested computeIfAbsent). */
-  private[graft] def ivfDeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_delete_index", dir) { () =>
-      val table = "graft_ivf_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_delete_index_").toString
-      VectorOps.cloneIvfIndex(s, base, table, path)
-      val poison = querySet(Tables.embeddings(s, dir))
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndex(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists",
-          s"${table}_tombstones"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The UPDATE epoch: the serving generation is cloned, then CORRUPTED
-    * the exact way in-place re-ingestion would — copies of the query
-    * vectors are appended under ten EXISTING corpus ids (50–59), so
-    * those ids now carry TWO rows each (true + poison, the doubled-id
-    * defect [[VectorOps.upsertToIvfIndex]] exists to prevent) — and
-    * HEALED by upserting the ids' true vectors. The gated probe must
-    * hash-match `sim_ann_ivf`'s oracle: a stale-row leak surfaces a
-    * corpus id as a cosine-1.0 rank-1 neighbor. Base resolved before
-    * the acquire. */
-  private[graft] def ivfUpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_upsert_index", dir) { () =>
-      val corrupt = "graft_ivf_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ivf_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ivf_upsert_").toString)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.cloneIvfIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndex(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToIvfIndex(s, corrupt, dest, paths(1), truth)
-      EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_cents", s"${corrupt}_lists",
-          s"${dest}_cents", s"${dest}_lists"),
-        deleteDirs = paths)
-    }
-  }
-
-  /** The IVF-binary epoch: sign masks inside the frozen coarse
-    * quantizer's `partitionBy(list_id)` lists — the compression
-    * spectrum's coarsest SERVED layout. */
-  private[graft] def ivfBinaryIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ivf_binary_index", dir) { () =>
-      val table = "graft_ivf_binary_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_index_").toString
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.writeIvfIndexBinary(emb, table, path,
-        numCentroids = ivfK(emb), trainIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-
-  /** Binary twin of [[ivfSq8DeleteIndexFor]]: a sign-mask copy of a
-    * query vector is hamming-0 — a guaranteed rank-1 leak if the
-    * tombstone fails. */
-  private[graft] def ivfBinaryDeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfBinaryIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_delete_index", dir) { () =>
-      val table = "graft_ivf_binary_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_delete_index_").toString
-      VectorOps.cloneIvfIndex(s, base, table, path)
-      val poison = querySet(Tables.embeddings(s, dir))
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndexBinary(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists",
-          s"${table}_tombstones"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** Binary compaction epoch: the delete generation settled
-    * one-file-per-list by the payload-agnostic clone. */
-  private[graft] def ivfBinaryCompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfBinaryDeleteIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_compact_index", dir) { () =>
-      val table = "graft_ivf_binary_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_compact_index_").toString
-      VectorOps.compactIvfIndex(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** Binary twin of [[ivfSq8UpsertIndexFor]]: doubled sign masks heal
-    * by the frozen-quantizer re-pack. */
-  private[graft] def ivfBinaryUpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfBinaryIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_upsert_index", dir) { () =>
-      val corrupt = "graft_ivf_binary_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ivf_binary_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_upsert_").toString)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.cloneIvfIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndexBinary(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToIvfIndexBinary(s, corrupt, dest, paths(1), truth)
-      EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_cents", s"${corrupt}_lists",
-          s"${dest}_cents", s"${dest}_lists"),
-        deleteDirs = paths)
-    }
-  }
-
-  /** Binary twin of [[ivfAppendIndexFor]] (VERDICT r14 #5): the
-    * serving generation cloned, the dup-vector batch admitted through
-    * the frozen quantizer's sign re-pack — the direct `_appended` gate
-    * the binary family lacked (the append path was exercised only
-    * inside its CDC loop). */
-  private[graft] def ivfBinaryAppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfBinaryIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_append_index", dir) { () =>
-      val table = "graft_ivf_binary_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_append_index_").toString
-      VectorOps.cloneIvfIndex(s, base, table, path)
-      VectorOps.appendToIvfIndexBinary(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The binary RETRAIN epoch (VERDICT r14 #2): the appended
-    * generation's drift remedy — coarse quantizer retrained over the
-    * lake's union corpus with re-derived K, lists re-packed through
-    * the family's own sign encode. */
-  private[graft] def ivfBinaryRetrainIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfBinaryAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_retrain_index", dir) { () =>
-      val table = "graft_ivf_binary_retrain_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_retrain_index_").toString
-      VectorOps.retrainIvfIndexBinary(s, base, table, path,
-        dupVectors(Tables.embeddings(s, dir))
+      lc.family.cloneTo(s, src, corrupt, paths(0))
+      lc.family.append(s, corrupt, querySet(emb)
+        .select((col("vec_id") + 50).as("vec_id"), col("embedding")))
+      lc.family.upsert(s, corrupt, dest, paths.drop(1),
+        emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
           .select(col("vec_id"), col("embedding")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The SQ8 RETRAIN epoch: the appended SQ8 generation requantized
-    * from the lake corpus (codes are lossy — the lake, not the lists,
-    * is the retrain source), fresh K, the family's own int8 encode. */
-  private[graft] def ivfSq8RetrainIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfSq8AppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_retrain_index", dir) { () =>
-      val table = "graft_ivf_sq8_retrain_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_retrain_index_").toString
-      VectorOps.retrainIvfIndexSq8(s, base, table, path,
-        dupVectors(Tables.embeddings(s, dir))
-          .select(col("vec_id"), col("embedding")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** Residual append epoch — clone-then-append under BOTH frozen
-    * quantizers (coarse assignment + residual encode against the
-    * epoch's codebooks), the residual member of the `_appended`
-    * pattern and the generation whose drift the residual retrain
-    * verdict judges. */
-  private[graft] def ivfPqResAppendIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqResidualIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_append_index", dir) { () =>
-      val table = "graft_ivfpq_res_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_append_index_").toString
-      VectorOps.cloneIvfPqIndex(s, base, table, path)
-      VectorOps.appendToIvfPqResidualIndex(s, table,
-        dupVectors(Tables.embeddings(s, dir)).filter(col("vec_id") >= 100000))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The residual RETRAIN epoch: BOTH quantizers retrain over the
-    * lake's union corpus — fresh coarse centroids (new K) and fresh
-    * codebooks over the residuals against those new centroids. */
-  private[graft] def ivfPqResRetrainIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqResAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_retrain_index", dir) { () =>
-      val table = "graft_ivfpq_res_retrain_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_retrain_index_").toString
-      VectorOps.retrainIvfPqResidualIndex(s, base, table, path,
-        dupVectors(Tables.embeddings(s, dir))
-          .select(col("vec_id"), col("embedding")),
-        m = 8, ksub = 64, pqIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The residual-derivation epoch: the float master's quantizer and
-    * stored assignment reused verbatim, codebooks trained on the
-    * residuals, codes encoded in place — the flat-to-residual
-    * migration path, result-identical to a fresh residual build. */
-  private[graft] def ivfPqResDerivedIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_derived_index", dir) { () =>
-      val table = "graft_ivfpq_res_derived_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_res_derived_index_").toString
-      VectorOps.deriveIvfPqResidualIndex(s, base, table, path, m = 8,
-        ksub = 64, pqIters = 2)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_codebooks",
-          s"${table}_codes"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** The binary-derivation epoch ([[ivfSq8DerivedIndexFor]]'s twin):
-    * the float master's quantizer/assignment reused verbatim, payload
-    * sign-packed in place — how a retrained float master regains its
-    * binary serving copy without a Lloyd pass. */
-  private[graft] def ivfBinaryDerivedIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_derived_index", dir) { () =>
-      val table = "graft_ivf_binary_derived_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_binary_derived_index_").toString
-      VectorOps.deriveBinaryIndex(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** Pointer-serving epochs for the two r14 families — the pointer
-    * names a generation, not a payload layout, so binary lists and
-    * residual codes serve through the identical atomic mechanism. */
-  private[graft] def ivfBinaryPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = ivfBinaryIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_binary_pointer_view", dir) { () =>
-      val view = "graft_ivf_binary_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_cents", "_lists"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  private[graft] def ivfPqResPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = ivfPqResidualIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivfpq_res_pointer_view", dir) { () =>
-      val view = "graft_ivfpq_res_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base,
-        suffixes = Seq("_cents", "_codebooks", "_codes"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
-
-  /** SQ8 twin of [[ivfDeleteIndexFor]] (VERDICT r13 #2 — lifecycle
-    * symmetry): the tombstone sidecar is payload-agnostic (id
-    * anti-join), so the clone + admit-poison + tombstone steps reuse
-    * the shared machinery with only the append quantizing. */
-  private[graft] def ivfSq8DeleteIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfSq8IndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_delete_index", dir) { () =>
-      val table = "graft_ivf_sq8_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_delete_index_").toString
-      VectorOps.cloneIvfIndex(s, base, table, path)
-      val poison = querySet(Tables.embeddings(s, dir))
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndexSq8(s, table, poison)
-      VectorOps.deleteFromIvfIndex(s, table, poison.select(col("vec_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists",
-          s"${table}_tombstones"),
-        deleteDirs = Seq(path))
-    }
-  }
-
-  /** SQ8 twin of [[ivfUpsertIndexFor]]: corrupt with doubled ids (the
-    * poison codes mix into the same lists as the true codes), heal via
-    * [[VectorOps.upsertToIvfIndexSq8]] — the frozen-quantizer re-encode
-    * restores rows bit-identical to a fresh SQ8 build's. */
-  private[graft] def ivfSq8UpsertIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfSq8IndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_upsert_index", dir) { () =>
-      val corrupt = "graft_ivf_sq8_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_ivf_sq8_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_upsert_").toString)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.cloneIvfIndex(s, base, corrupt, paths(0))
-      val poison = querySet(emb)
-        .select((col("vec_id") + 50).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndexSq8(s, corrupt, poison)
-      val truth = emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.upsertToIvfIndexSq8(s, corrupt, dest, paths(1), truth)
       EpochRegistry.Resource(dest,
-        dropTables = Seq(s"${corrupt}_cents", s"${corrupt}_lists",
-          s"${dest}_cents", s"${dest}_lists"),
+        dropTables = generationTables(lc.family, corrupt) ++
+          generationTables(lc.family, dest),
         deleteDirs = paths)
     }
   }
 
-  /** SQ8 twin of [[ivfCompactIndexFor]]: the appended SQ8 generation
-    * settled one-file-per-list ([[VectorOps.compactIvfIndex]] is
-    * payload-agnostic — it rewrites whatever list schema it reads). */
-  private[graft] def ivfSq8CompactIndexFor(s: SparkSession, dir: String): String = {
-    val base = ivfSq8AppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "ivf_sq8_compact_index", dir) { () =>
-      val table = "graft_ivf_sq8_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_sq8_compact_index_").toString
-      VectorOps.compactIvfIndex(s, base, table, path)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists"),
-        deleteDirs = Seq(path))
+  /** APPEND: the serving generation CLONED (it stays untouched — the
+    * clone-append-validate-swap workflow) and the dup-vector batch
+    * (vec_id ≥ 100000) admitted through the frozen layout; the probe
+    * must equal a build over the union corpus under the same frozen
+    * quantizers. */
+  private[graft] def append(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val src = base(s, dir, lc)
+    generation(s, dir, s"${lc.prefix}_append_index", lc.family) { (t, p) =>
+      lc.family.cloneTo(s, src, t, p)
+      lc.family.append(s, t, dupVectors(Tables.embeddings(s, dir))
+        .filter(col("vec_id") >= 100000)
+        .select(col("vec_id"), col("embedding")))
+    }
+  }
+
+  /** RETRAIN: the appended generation's drift remedy, closing the
+    * lifecycle the retrain monitors open — the new generation must
+    * equal a fresh build over the union corpus. */
+  private[graft] def retrain(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val train = lc.retrain.getOrElse(
+      throw new IllegalArgumentException(s"${lc.prefix} has no retrain"))
+    val src = append(s, dir, lc)
+    generation(s, dir, s"${lc.prefix}_retrain_index", lc.family) { (t, p) =>
+      train(s, src, t, p, dupVectors(Tables.embeddings(s, dir))
+        .select(col("vec_id"), col("embedding")))
+    }
+  }
+
+  /** DERIVED: the float [[ivf]] master's quantizer and assignment
+    * re-used verbatim, the payload re-encoded in place — how a
+    * retrained float master regains its compact serving copy without
+    * a Lloyd pass. Result-identical to a fresh build of the family, so
+    * the probe shares its base oracle. */
+  private[graft] def derive(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val encode = lc.derive.getOrElse(
+      throw new IllegalArgumentException(s"${lc.prefix} has no derivation"))
+    val src = base(s, dir, ivf)
+    generation(s, dir, s"${lc.prefix}_derived_index", lc.family)(
+      encode(s, src, _, _))
+  }
+
+  /** POINTER: the serving generation promoted under a stable name via
+    * [[Generations.publishPointer]] — ONE catalog view holding the
+    * generation's name, so every table of the family (and the
+    * tombstone sidecar) resolves from the SAME atomically-flipped
+    * generation and the probe plan is unchanged. The gated probes must
+    * hash-match the direct-probe oracles. */
+  private[graft] def pointer(s: SparkSession, dir: String, lc: Lifecycle)
+      : String = {
+    val gen = base(s, dir, lc)
+    EpochRegistry.acquire(s, s"${lc.prefix}_pointer_view", dir) { () =>
+      val view = s"graft_${lc.prefix}_pview_" + freshId()
+      Generations.publishPointer(s, view, gen, suffixes = lc.family.tables)
+      EpochRegistry.Resource(view, dropTables = Seq(view))
     }
   }
 
@@ -1370,7 +575,7 @@ object SimilarityQueries {
     "sim_ann_mrl_indexed" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, mrlIndexFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndex(s, base(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1386,7 +591,7 @@ object SimilarityQueries {
     "sim_ann_mrl_deleted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, mrlDeleteIndexFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndex(s, delete(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1395,7 +600,7 @@ object SimilarityQueries {
     "sim_ann_mrl_updated" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, mrlUpsertIndexFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndex(s, upsert(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1404,7 +609,7 @@ object SimilarityQueries {
     "sim_ann_mrl_compacted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, mrlCompactIndexFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndex(s, compact(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1413,7 +618,7 @@ object SimilarityQueries {
     "sim_ann_mrl_published" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, mrlPointerViewFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndex(s, pointer(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1423,7 +628,7 @@ object SimilarityQueries {
     // side (one prefix row per vector — the binary family's mirror
     // shape)
     "sim_ann_mrl_compaction_check" -> ((s, dir) => {
-      val gen = mrlDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, mrl)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_prefix"))
     }),
@@ -1434,7 +639,7 @@ object SimilarityQueries {
     "sim_ann_mrl_appended" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, mrlAppendIndexFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndex(s, append(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1444,7 +649,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeMrlIndex(s,
-        mrlAppendIndexFor(s, dir), querySet(emb), k = recallK,
+        append(s, dir, mrl), querySet(emb), k = recallK,
         prefixDims = 32, shortlist = 100))
     }),
 
@@ -1456,7 +661,7 @@ object SimilarityQueries {
     "sim_ann_mrl_ivf" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndexIvf(s, mrlIndexFor(s, dir), querySet(emb),
+      VectorOps.probeMrlIndexIvf(s, base(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1470,7 +675,7 @@ object SimilarityQueries {
     "sim_ann_mrl_ivf_adaptive" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndexIvfAdaptive(s, mrlIndexFor(s, dir),
+      VectorOps.probeMrlIndexIvfAdaptive(s, base(s, dir, mrl),
           querySet(emb), k = 5, prefixDims = 32, shortlist = 200,
           massTargetPpm = 400000L)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -1484,7 +689,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.probeMrlIndexIvfAdaptive(s,
-        mrlIndexFor(s, dir), querySet(emb), k = recallK, prefixDims = 32,
+        base(s, dir, mrl), querySet(emb), k = recallK, prefixDims = 32,
         shortlist = 200, massTargetPpm = 400000L))
     }),
 
@@ -1493,7 +698,7 @@ object SimilarityQueries {
     // skew signals as the float/binary/PQ monitors, read from the
     // partition column only
     "sim_ann_mrl_retrain_check" -> ((s, dir) =>
-      VectorOps.mrlRetrainCheck(s, mrlAppendIndexFor(s, dir))),
+      VectorOps.mrlRetrainCheck(s, append(s, dir, mrl))),
 
     // CONTRASTIVE TRIPLET assembly — the training-data emission the
     // hard-negative mine exists for: rank-i exact positive paired with
@@ -1508,7 +713,7 @@ object SimilarityQueries {
         .select(col("query_id"), col("rk"),
           col("neighbor_id").as("pos_id"), col("cos_sim").as("pos_cos"))
       val neg = VectorOps.ivfHardNegativesWith(
-          s.table(s"${ivfIndexFor(s, dir)}_cents"),
+          s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 3, nProbe = 4,
           loCos = 0.30, hiCos = 0.90)
         .select(col("query_id"), col("rk"),
@@ -1561,7 +766,7 @@ object SimilarityQueries {
     "sim_ann_ivf_probe_sweep" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val idx = ivfIndexFor(s, dir)
+      val idx = base(s, dir, ivf)
       val cents = broadcast(s.table(s"${idx}_cents"))
       val lists = s.table(s"${idx}_lists")
       val brute = VectorOps.bruteForceTopK(querySet(emb), emb, k = recallK)
@@ -1676,7 +881,7 @@ object SimilarityQueries {
     // hash-match the untouched IVF-binary oracle
     "sim_ann_binary_deleted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryDeleteIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, delete(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1684,7 +889,7 @@ object SimilarityQueries {
 
     "sim_ann_binary_updated" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryUpsertIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, upsert(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1692,7 +897,7 @@ object SimilarityQueries {
 
     "sim_ann_binary_compacted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryCompactIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, compact(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1702,7 +907,7 @@ object SimilarityQueries {
     // result-invisible, the probes share the untouched oracles
     "sim_ann_binary_published" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryPointerViewFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, pointer(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1711,7 +916,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_published" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResPointerViewFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, pointer(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1721,13 +926,13 @@ object SimilarityQueries {
     // verdict (poison/tombstone populations match the sibling epochs
     // by construction, so the mirrors are shared too)
     "sim_ann_binary_compaction_check" -> ((s, dir) => {
-      val gen = ivfBinaryDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, binary)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_lists"))
     }),
 
     "sim_ann_ivfpq_residual_compaction_check" -> ((s, dir) => {
-      val gen = ivfPqResDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, ivfPqRes)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_codes"))
     }),
@@ -1756,7 +961,7 @@ object SimilarityQueries {
     // popcounts per candidate row
     "sim_ann_binary_indexed" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, base(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1766,7 +971,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.probeIvfIndexBinary(s,
-        ivfBinaryIndexFor(s, dir), querySet(emb), k = recallK, nProbe = 2))
+        base(s, dir, binary), querySet(emb), k = recallK, nProbe = 2))
     }),
 
     // binary APPEND maintenance (VERDICT r14 #5): the dup batch
@@ -1775,7 +980,7 @@ object SimilarityQueries {
     // which is exactly what the union mirror computes
     "sim_ann_binary_appended" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryAppendIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, append(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1785,7 +990,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfIndexBinary(s,
-        ivfBinaryAppendIndexFor(s, dir), querySet(emb), k = recallK,
+        append(s, dir, binary), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -1795,7 +1000,7 @@ object SimilarityQueries {
     // completing the derive symmetry (SQ8/IVF-PQ/binary)
     "sim_ann_binary_derived" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryDerivedIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, derive(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1806,7 +1011,7 @@ object SimilarityQueries {
     // payload-agnostic (partition column only), so the binary appended
     // epoch's frozen assignment shares the float family's mirror
     "sim_ann_binary_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfRetrainCheck(s, ivfBinaryAppendIndexFor(s, dir))),
+      VectorOps.ivfRetrainCheck(s, append(s, dir, binary))),
 
     // binary RETRAIN execution: fresh centroids AND fresh K over the
     // union corpus, lists re-packed by the family's own sign encode —
@@ -1814,7 +1019,7 @@ object SimilarityQueries {
     // on the union (the mirror trains/assigns over `corpus`)
     "sim_ann_binary_retrained" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, ivfBinaryRetrainIndexFor(s, dir),
+      VectorOps.probeIvfIndexBinary(s, retrain(s, dir, binary),
           querySet(emb), k = 5, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1824,7 +1029,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfIndexBinary(s,
-        ivfBinaryRetrainIndexFor(s, dir), querySet(emb), k = recallK,
+        retrain(s, dir, binary), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -1851,7 +1056,7 @@ object SimilarityQueries {
       val emb = Tables.embeddings(s, dir)
       // quantizer hoisted from the shared IVF epoch (same K/iters —
       // identical centroids, see VectorOps hoisted-forms note)
-      VectorOps.kmeansAssignWith(s.table(s"${ivfIndexFor(s, dir)}_cents"), emb)
+      VectorOps.kmeansAssignWith(s.table(s"${base(s, dir, ivf)}_cents"), emb)
         .orderBy(col("vec_id"))
     }),
 
@@ -1863,7 +1068,7 @@ object SimilarityQueries {
     "sim_cluster_silhouette" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       VectorOps.clusterSilhouetteWith(
-          s.table(s"${ivfIndexFor(s, dir)}_cents"), emb)
+          s.table(s"${base(s, dir, ivf)}_cents"), emb)
         .orderBy(col("cluster_id"))
     }),
 
@@ -1872,7 +1077,7 @@ object SimilarityQueries {
     "sim_ann_ivf_sq8" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.ivfTopKSq8With(s.table(s"${ivfIndexFor(s, dir)}_cents"),
+      VectorOps.ivfTopKSq8With(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1884,7 +1089,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.ivfTopKSq8With(
-        s.table(s"${ivfIndexFor(s, dir)}_cents"),
+        s.table(s"${base(s, dir, ivf)}_cents"),
         querySet(emb), emb, k = recallK, nProbe = 2))
     }),
 
@@ -1898,7 +1103,7 @@ object SimilarityQueries {
     "sim_ann_pq" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.pqTopKHoisted(s, pqIndexFor(s, dir), querySet(emb), emb,
+      VectorOps.pqTopKHoisted(s, base(s, dir, pq), querySet(emb), emb,
           k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -1911,7 +1116,7 @@ object SimilarityQueries {
     "sim_ann_pq_indexed" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pqIndexFor(s, dir), querySet(emb), k = 3)
+      VectorOps.probePqIndex(s, base(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -1925,7 +1130,7 @@ object SimilarityQueries {
     // mean; one scan + KB broadcast; m rows out.
     "sim_pq_distortion" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      VectorOps.pqDistortion(s, pqIndexFor(s, dir),
+      VectorOps.pqDistortion(s, base(s, dir, pq),
         Tables.embeddings(s, dir))
     }),
 
@@ -1936,7 +1141,7 @@ object SimilarityQueries {
     "sim_ann_pq_appended" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pqAppendIndexFor(s, dir), querySet(emb), k = 3)
+      VectorOps.probePqIndex(s, append(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -1945,7 +1150,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probePqIndex(s,
-        pqAppendIndexFor(s, dir), querySet(emb), k = recallK))
+        append(s, dir, pq), querySet(emb), k = recallK))
     }),
 
     // PQ's recall audit: what the 32× compression costs vs exact float
@@ -1956,7 +1161,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
-        VectorOps.probePqIndex(s, pqIndexFor(s, dir), querySet(emb),
+        VectorOps.probePqIndex(s, base(s, dir, pq), querySet(emb),
           k = recallK))
     }),
 
@@ -1966,7 +1171,7 @@ object SimilarityQueries {
     "sim_ann_pq_published" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pqPointerViewFor(s, dir), querySet(emb), k = 3)
+      VectorOps.probePqIndex(s, pointer(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -1978,7 +1183,7 @@ object SimilarityQueries {
     "sim_ann_pq_deleted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pqDeleteIndexFor(s, dir), querySet(emb), k = 3)
+      VectorOps.probePqIndex(s, delete(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -1989,7 +1194,7 @@ object SimilarityQueries {
     "sim_ann_pq_compacted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pqCompactIndexFor(s, dir), querySet(emb), k = 3)
+      VectorOps.probePqIndex(s, compact(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -2001,7 +1206,7 @@ object SimilarityQueries {
     "sim_ann_pq_updated" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pqUpsertIndexFor(s, dir), querySet(emb), k = 3)
+      VectorOps.probePqIndex(s, upsert(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -2011,7 +1216,7 @@ object SimilarityQueries {
     // ten tombstones against the m-per-vector code rows — the FALSE
     // branch of the verdict is what this gates
     "sim_ann_pq_compaction_check" -> ((s, dir) => {
-      val gen = pqDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, pq)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_codes"))
     }),
@@ -2022,7 +1227,7 @@ object SimilarityQueries {
     "sim_ann_pq_rerank" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndexRerank(s, pqIndexFor(s, dir), querySet(emb),
+      VectorOps.probePqIndexRerank(s, base(s, dir, pq), querySet(emb),
           emb, k = 3, shortlist = 32)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2033,7 +1238,7 @@ object SimilarityQueries {
     "sim_ann_pq_rerank_recall" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      recallAudit(emb, VectorOps.probePqIndexRerank(s, pqIndexFor(s, dir),
+      recallAudit(emb, VectorOps.probePqIndexRerank(s, base(s, dir, pq),
         querySet(emb), emb, k = recallK, shortlist = 32))
     }),
 
@@ -2061,7 +1266,7 @@ object SimilarityQueries {
     // broadcast-assign + in-cell pairing, zero training jobs
     "dedup_semantic" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val cents = s.table(ivfIndexFor(s, dir) + "_cents")
+      val cents = s.table(base(s, dir, ivf) + "_cents")
       VectorOps.semanticDedupFrozen(dupVectors(Tables.embeddings(s, dir)),
           cents, threshold = 0.995)
         .orderBy(col("vec_id"))
@@ -2091,7 +1296,7 @@ object SimilarityQueries {
     "sim_ann_ivf" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.ivfTopKWith(s.table(s"${ivfIndexFor(s, dir)}_cents"),
+      VectorOps.ivfTopKWith(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2106,7 +1311,7 @@ object SimilarityQueries {
     "sim_hard_negatives" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.ivfHardNegativesWith(s.table(s"${ivfIndexFor(s, dir)}_cents"),
+      VectorOps.ivfHardNegativesWith(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 5, nProbe = 4,
           loCos = 0.30, hiCos = 0.90)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -2114,7 +1319,7 @@ object SimilarityQueries {
     }),
 
     // the persisted-index form of sim_ann_ivf: the epoch write happens
-    // once per (session, dir) via [[ivfIndexFor]]; the gated query (and
+    // once per (session, dir) via [[base]]; the gated query (and
     // its bench number) measures the per-batch PROBE, which reads ONLY
     // the nProbe probed lists from the partitioned index (dynamic
     // partition pruning — IvfIndexSpec asserts the plan + files-read).
@@ -2122,7 +1327,7 @@ object SimilarityQueries {
     "sim_ann_ivf_indexed" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, base(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2136,7 +1341,7 @@ object SimilarityQueries {
     "sim_ann_ivf_deleted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfDeleteIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, delete(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2150,7 +1355,7 @@ object SimilarityQueries {
     "sim_ann_ivf_updated" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfUpsertIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, upsert(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2165,7 +1370,7 @@ object SimilarityQueries {
     "sim_ann_ivf_published" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfPointerViewFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, pointer(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2175,7 +1380,7 @@ object SimilarityQueries {
     // pointer names a generation, not a payload layout)
     "sim_ann_ivf_sq8_published" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8PointerViewFor(s, dir),
+      VectorOps.probeIvfIndexSq8(s, pointer(s, dir, sq8),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2187,7 +1392,7 @@ object SimilarityQueries {
     // hash-match the in-memory SQ8 pass (same oracle SQL).
     "sim_ann_ivf_sq8_indexed" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8IndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndexSq8(s, base(s, dir, sq8), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2200,7 +1405,7 @@ object SimilarityQueries {
     // DPP-pruned probed subset only
     "sim_ann_ivf_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexFiltered(s, ivfIndexFor(s, dir),
+      VectorOps.probeIvfIndexFiltered(s, base(s, dir, ivf),
           querySet(emb), emb, k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2213,7 +1418,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       filteredRecallAudit(emb,
-        VectorOps.probeIvfIndexFiltered(s, ivfIndexFor(s, dir),
+        VectorOps.probeIvfIndexFiltered(s, base(s, dir, ivf),
           querySet(emb), emb, k = recallK, nProbe = 4))
     }),
 
@@ -2225,7 +1430,7 @@ object SimilarityQueries {
     // k-means assignment CTEs, so the persisted layout provably matches
     // the in-memory partitioning.
     "sim_ann_ivf_stats" -> ((s, dir) => {
-      s.table(s"${ivfIndexFor(s, dir)}_lists")
+      s.table(s"${base(s, dir, ivf)}_lists")
         .groupBy(col("list_id")).agg(count(lit(1)).as("n_vectors"))
         .orderBy(col("list_id"))
     }),
@@ -2238,14 +1443,14 @@ object SimilarityQueries {
     // near-metadata scan as sim_ann_ivf_stats (partition column only);
     // gated against the shared assignment CTEs over the union corpus.
     "sim_ann_ivf_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfRetrainCheck(s, ivfAppendIndexFor(s, dir))),
+      VectorOps.ivfRetrainCheck(s, append(s, dir, ivf))),
 
     // the composite's drift monitor: same statistics over the codes
     // table (m rows per vector — distinct-id list sizes), same
     // thresholds; the appended epoch's frozen assignment makes its
     // verdict identical to the float family's, so they share a mirror
     "sim_ann_ivfpq_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfPqRetrainCheck(s, ivfPqAppendIndexFor(s, dir))),
+      VectorOps.ivfPqRetrainCheck(s, append(s, dir, ivfPq))),
 
     // compaction-cadence DECISION for the vector family
     // (Generations.compactionCheck, one monitor shape across all three
@@ -2253,7 +1458,7 @@ object SimilarityQueries {
     // full lists — ~1‰, under the 50‰ threshold, so `compact` must NOT
     // fire (the false branch of the verdict is gated here)
     "sim_ann_ivf_compaction_check" -> ((s, dir) => {
-      val gen = ivfDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, ivf)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_lists"))
     }),
@@ -2263,7 +1468,7 @@ object SimilarityQueries {
     // population by construction, so the two share one mirror
     // (completing the r14 SQ8 lifecycle symmetry's monitor half)
     "sim_ann_ivf_sq8_compaction_check" -> ((s, dir) => {
-      val gen = ivfSq8DeleteIndexFor(s, dir)
+      val gen = delete(s, dir, sq8)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_lists"))
     }),
@@ -2275,7 +1480,7 @@ object SimilarityQueries {
     // centroids, which is exactly what the oracle computes
     "sim_ann_ivf_appended" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfAppendIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, append(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2287,7 +1492,7 @@ object SimilarityQueries {
     // rows identical, so the probe must hash-match the appended query
     "sim_ann_ivf_compacted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfCompactIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, compact(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2300,7 +1505,7 @@ object SimilarityQueries {
     // SQ8 index): same oracle, another plan.
     "sim_ann_ivf_sq8_derived" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8DerivedIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndexSq8(s, derive(s, dir, sq8), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2315,7 +1520,7 @@ object SimilarityQueries {
     // over `corpus`, not `embeddings`).
     "sim_ann_ivf_retrained" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, ivfRetrainIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndex(s, retrain(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2325,7 +1530,7 @@ object SimilarityQueries {
     // check reads the partition column only, so the SQ8 appended
     // epoch's frozen float assignment shares the float family's mirror
     "sim_ann_ivf_sq8_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfRetrainCheck(s, ivfSq8AppendIndexFor(s, dir))),
+      VectorOps.ivfRetrainCheck(s, append(s, dir, sq8))),
 
     // SQ8 RETRAIN execution: codes are lossy, so the requantization
     // epoch reads the float corpus from the LAKE (not the lists),
@@ -2334,7 +1539,7 @@ object SimilarityQueries {
     // quantizer trained on the union corpus
     "sim_ann_ivf_sq8_retrained" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8RetrainIndexFor(s, dir),
+      VectorOps.probeIvfIndexSq8(s, retrain(s, dir, sq8),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2344,7 +1549,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfIndexSq8(s,
-        ivfSq8RetrainIndexFor(s, dir), querySet(emb), k = recallK,
+        retrain(s, dir, sq8), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -2355,7 +1560,7 @@ object SimilarityQueries {
     // neighbor). Anti-join after list pruning, like the float family.
     "sim_ann_ivf_sq8_deleted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8DeleteIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndexSq8(s, delete(s, dir, sq8), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2368,7 +1573,7 @@ object SimilarityQueries {
     // sim_ann_ivf_sq8's oracle
     "sim_ann_ivf_sq8_updated" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8UpsertIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndexSq8(s, upsert(s, dir, sq8), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2378,7 +1583,7 @@ object SimilarityQueries {
     // per-list — rows identical, shares the SQ8 append oracle
     "sim_ann_ivf_sq8_compacted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8CompactIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndexSq8(s, compact(s, dir, sq8), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2388,7 +1593,7 @@ object SimilarityQueries {
     // quantizer's list partitions
     "sim_ann_ivf_sq8_appended" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, ivfSq8AppendIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfIndexSq8(s, append(s, dir, sq8), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2404,7 +1609,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.ivfPqTopKHoisted(s, ivfPqIndexFor(s, dir), querySet(emb),
+      VectorOps.ivfPqTopKHoisted(s, base(s, dir, ivfPq), querySet(emb),
           emb, k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2417,7 +1622,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_indexed" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, base(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2429,7 +1634,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_appended" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqAppendIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, append(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2442,7 +1647,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfPqIndex(s,
-        ivfPqAppendIndexFor(s, dir), querySet(emb), k = recallK,
+        append(s, dir, ivfPq), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -2450,7 +1655,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfIndexSq8(s,
-        ivfSq8AppendIndexFor(s, dir), querySet(emb), k = recallK,
+        append(s, dir, sq8), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -2462,7 +1667,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
-        VectorOps.probeIvfPqIndex(s, ivfPqIndexFor(s, dir), querySet(emb),
+        VectorOps.probeIvfPqIndex(s, base(s, dir, ivfPq), querySet(emb),
           k = recallK, nProbe = 2))
     }),
 
@@ -2472,7 +1677,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_rerank" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndexRerank(s, ivfPqIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndexRerank(s, base(s, dir, ivfPq), querySet(emb),
           emb, k = 3, shortlist = 32, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2484,7 +1689,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
-        VectorOps.probeIvfPqIndexRerank(s, ivfPqIndexFor(s, dir),
+        VectorOps.probeIvfPqIndexRerank(s, base(s, dir, ivfPq),
           querySet(emb), emb, k = recallK, shortlist = 32, nProbe = 2))
     }),
 
@@ -2495,7 +1700,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_derived" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqDerivedIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, derive(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2508,7 +1713,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_retrained" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqRetrainIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, retrain(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2521,7 +1726,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb),
-        VectorOps.probeIvfPqIndex(s, ivfPqRetrainIndexFor(s, dir),
+        VectorOps.probeIvfPqIndex(s, retrain(s, dir, ivfPq),
           querySet(emb), k = recallK, nProbe = 2))
     }),
 
@@ -2532,7 +1737,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_deleted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqDeleteIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, delete(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2543,7 +1748,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_compacted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqCompactIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, compact(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2558,7 +1763,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResidualIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, base(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2568,7 +1773,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
-        VectorOps.probeIvfPqResidualIndex(s, ivfPqResidualIndexFor(s, dir),
+        VectorOps.probeIvfPqResidualIndex(s, base(s, dir, ivfPqRes),
           querySet(emb), k = recallK, nProbe = 2))
     }),
 
@@ -2582,7 +1787,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_deleted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResDeleteIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, delete(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2591,7 +1796,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_updated" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResUpsertIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, upsert(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2600,7 +1805,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_compacted" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResCompactIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, compact(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2614,7 +1819,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_derived" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResDerivedIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, derive(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2627,7 +1832,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_appended" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResAppendIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, append(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2637,7 +1842,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfPqResidualIndex(s,
-        ivfPqResAppendIndexFor(s, dir), querySet(emb), k = recallK,
+        append(s, dir, ivfPqRes), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -2645,7 +1850,7 @@ object SimilarityQueries {
     // distinct-id list sizes over the appended generation's codes —
     // frozen assignment, so it shares the float family's mirror
     "sim_ann_ivfpq_residual_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfPqRetrainCheck(s, ivfPqResAppendIndexFor(s, dir))),
+      VectorOps.ivfPqRetrainCheck(s, append(s, dir, ivfPqRes))),
 
     // residual RETRAIN execution: BOTH quantizers retrain over the
     // lake's union corpus — fresh coarse centroids (new K) and fresh
@@ -2654,7 +1859,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_residual_retrained" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, ivfPqResRetrainIndexFor(s, dir),
+      VectorOps.probeIvfPqResidualIndex(s, retrain(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2664,7 +1869,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb), VectorOps.probeIvfPqResidualIndex(s,
-        ivfPqResRetrainIndexFor(s, dir), querySet(emb), k = recallK,
+        retrain(s, dir, ivfPqRes), querySet(emb), k = recallK,
         nProbe = 2))
     }),
 
@@ -2676,7 +1881,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeIvfPqResidualIndexRerank(s,
-          ivfPqResidualIndexFor(s, dir), querySet(emb), emb, k = 3,
+          base(s, dir, ivfPqRes), querySet(emb), emb, k = 3,
           shortlist = 32, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2687,7 +1892,7 @@ object SimilarityQueries {
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.probeIvfPqResidualIndexRerank(s,
-          ivfPqResidualIndexFor(s, dir), querySet(emb), emb,
+          base(s, dir, ivfPqRes), querySet(emb), emb,
           k = recallK, shortlist = 32, nProbe = 2))
     }),
 
@@ -2696,7 +1901,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_updated" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqUpsertIndexFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, upsert(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2707,7 +1912,7 @@ object SimilarityQueries {
     "sim_ann_ivfpq_published" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, ivfPqPointerViewFor(s, dir), querySet(emb),
+      VectorOps.probeIvfPqIndex(s, pointer(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
@@ -2717,7 +1922,7 @@ object SimilarityQueries {
     // codes: (corpus + 10 poison) × m rows, 10 tombstoned ids — ~1‰,
     // the verdict must NOT fire
     "sim_ann_ivfpq_compaction_check" -> ((s, dir) => {
-      val gen = ivfPqDeleteIndexFor(s, dir)
+      val gen = delete(s, dir, ivfPq)
       graft.operators.Generations.compactionCheck(s, gen,
         s.table(s"${gen}_codes"))
     }),
@@ -2733,7 +1938,7 @@ object SimilarityQueries {
           s, TextQueries.searchIndexFor(s, dir),
           terms = Seq("spark", "vector", "window"), k = 20)
         .select(col("doc_id"), col("score"))
-      val sem = VectorOps.probeIvfIndex(s, ivfIndexFor(s, dir),
+      val sem = VectorOps.probeIvfIndex(s, base(s, dir, ivf),
           emb.filter(col("vec_id") === 0), k = 20, nProbe = 4)
         .select(col("neighbor_id").as("doc_id"),
           floor(col("cos_sim") * lit(1000000.0)).cast("long").as("score"))
@@ -2755,7 +1960,7 @@ object SimilarityQueries {
           terms = Seq("spark", "vector", "window"), k = 20)
         .select(col("doc_id"), col("score"))
         .crossJoin(broadcast(qids))
-      val sem = VectorOps.probeIvfIndex(s, ivfIndexFor(s, dir),
+      val sem = VectorOps.probeIvfIndex(s, base(s, dir, ivf),
           querySet(emb), k = 20, nProbe = 4)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           floor(col("cos_sim") * lit(1000000.0)).cast("long").as("score"))
@@ -2779,7 +1984,7 @@ object SimilarityQueries {
           terms = Seq("spark", "vector", "window"), k = 20)
         .select(col("doc_id"), col("rk"))
         .crossJoin(broadcast(qids))
-      val sem = VectorOps.probeIvfIndex(s, ivfIndexFor(s, dir),
+      val sem = VectorOps.probeIvfIndex(s, base(s, dir, ivf),
           querySet(emb), k = 20, nProbe = 4)
         .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rk"))
       graft.operators.SearchOps.rrfFusePerQuery(Seq(lex, sem), k = 10)
@@ -2799,7 +2004,7 @@ object SimilarityQueries {
           s, TextQueries.searchIndexFor(s, dir),
           terms = Seq("spark", "vector", "window"), k = 20)
         .select(col("doc_id"), col("rk"))
-      val sem = VectorOps.probeIvfIndex(s, ivfIndexFor(s, dir),
+      val sem = VectorOps.probeIvfIndex(s, base(s, dir, ivf),
           emb.filter(col("vec_id") === 0), k = 20, nProbe = 4)
         .select(col("neighbor_id").as("doc_id"), col("rk"))
       graft.operators.SearchOps.rrfFuse(Seq(lex, sem), k = 10)
@@ -3092,7 +2297,7 @@ object SimilarityQueries {
     "sim_ann_ivf_sq8_indexed_recall" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      recallAudit(emb, VectorOps.probeIvfIndexSq8(s, ivfSq8IndexFor(s, dir),
+      recallAudit(emb, VectorOps.probeIvfIndexSq8(s, base(s, dir, sq8),
         querySet(emb), k = recallK, nProbe = 2))
     }),
 
@@ -3102,7 +2307,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
-        VectorOps.ivfTopKWith(s.table(s"${ivfIndexFor(s, dir)}_cents"),
+        VectorOps.ivfTopKWith(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = recallK, nProbe = 2))
     }),
 
@@ -3114,7 +2319,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb),
-        VectorOps.probeIvfIndex(s, ivfRetrainIndexFor(s, dir), querySet(emb),
+        VectorOps.probeIvfIndex(s, retrain(s, dir, ivf), querySet(emb),
           k = recallK, nProbe = 2))
     }),
 
@@ -3128,7 +2333,7 @@ object SimilarityQueries {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(dupVectors(emb),
-        VectorOps.probeIvfIndex(s, ivfAppendIndexFor(s, dir), querySet(emb),
+        VectorOps.probeIvfIndex(s, append(s, dir, ivf), querySet(emb),
           k = recallK, nProbe = 2))
     }),
 

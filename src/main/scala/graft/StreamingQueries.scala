@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{CdcFamily, CdcStream, IngestStream}
-import graft.operators.SearchOps
+import graft.operators.{IndexFamily, SearchOps}
+import graft.streaming.{CdcStream, IngestStream}
 
 /** Structured-Streaming-backed entries. Each runs a real streaming query
   * (file source → transform → memory sink, Trigger.AvailableNow) and
@@ -762,7 +762,7 @@ object StreamingQueries {
     }),
 
     // the CDC statement stream consumed as VECTOR-index maintenance
-    // (IngestStream.cdcFamilySink, CdcFamily.ivf) — the embedding twin of
+    // (IngestStream.cdcFamilySink, IndexFamily.ivf) — the embedding twin of
     // the search CDC loop below: the serving clone starts CORRUPTED (stale
     // negated embeddings for the %20==0 dup wave, the %20==4 wave
     // pre-inserted,
@@ -1061,7 +1061,7 @@ object StreamingQueries {
     }),
 
     // the CDC statement stream consumed as BAND-index maintenance
-    // (IngestStream.cdcFamilySink, CdcFamily.band) — the THIRD family
+    // (IngestStream.cdcFamilySink, IndexFamily.band) — the THIRD family
     // through the same loop, closing the symmetry: the serving generation
     // starts CORRUPTED (odd originals missing, %10 originals carrying poison
     // 'xdup' texts that would phantom-pair with the probe batch at
@@ -1713,8 +1713,8 @@ object StreamingQueries {
   private[graft] def ivfStreamIndexFor(s: SparkSession, dir: String): String = {
     // Both input epochs resolved BEFORE the acquire: a nested
     // computeIfAbsent on the registry's one map is forbidden by the JDK
-    // (same invariant as [[SimilarityQueries.ivfRetrainIndexFor]]).
-    val base = SimilarityQueries.ivfIndexFor(s, dir)
+    // (same invariant as [[SimilarityQueries.retrain]]).
+    val base = SimilarityQueries.base(s, dir, SimilarityQueries.ivf)
     val vecDir = streamVectorsDir(s, dir)
     EpochRegistry.acquire(s, "ivf_stream_index", dir) { () =>
       val table = "graft_ivf_stream_index_" +
@@ -1840,12 +1840,12 @@ object StreamingQueries {
     * — result-defined EQUAL to base ∪ dup-batch under the frozen
     * quantizers, which is exactly what the family's append/union oracle
     * computes. `key` names the epoch, `prefix` its tables and dirs.
-    * Event-dir epoch resolved before the acquire (no nested
-    * computeIfAbsent). Returns (src, settled). */
+    * The base and event-dir epochs resolve before the acquire (no
+    * nested computeIfAbsent). Returns (src, settled). */
   private def vecCdcNamesFor(s: SparkSession, dir: String, key: String,
-      prefix: String, family: CdcFamily, base: String,
-      clone: (SparkSession, String, String, String) => Unit)
-      : (String, String) = {
+      prefix: String, lc: SimilarityQueries.Lifecycle): (String, String) = {
+    val family = lc.family
+    val base = SimilarityQueries.base(s, dir, lc)
     val evDir = cdcVecEventsDir(s, dir)
     val v = EpochRegistry.acquire(s, key, dir) { () =>
       val src = s"graft_${prefix}_src_" +
@@ -1854,7 +1854,7 @@ object StreamingQueries {
         java.util.UUID.randomUUID().toString.replace("-", "")
       val paths = (1 to 3).map(_ => java.nio.file.Files
         .createTempDirectory(s"graft_${prefix}_").toString)
-      clone(s, base, src, paths(0))
+      family.cloneTo(s, base, src, paths(0))
       val emb = Tables.embeddings(s, dir)
       val dups = SimilarityQueries.dupVectors(emb)
         .filter(col("vec_id") >= 100000)
@@ -1877,7 +1877,7 @@ object StreamingQueries {
   /** One CDC loop end to end: the event files drain through the
     * family's sink one file per micro-batch, then the settle writes
     * `dest` under `settlePaths`. */
-  private def cdcDrainAndSettle(s: SparkSession, family: CdcFamily,
+  private def cdcDrainAndSettle(s: SparkSession, family: IndexFamily,
       evDir: String, src: String, dest: String, checkpointDir: String,
       settlePaths: Seq[String]): Unit = {
     val ev = CdcStream.readEventStream(s, evDir, maxFilesPerTrigger = 1)
@@ -1889,9 +1889,7 @@ object StreamingQueries {
   /** IVF under the frozen coarse quantizer. */
   private[graft] def ivfCdcNamesFor(s: SparkSession, dir: String)
       : (String, String) =
-    vecCdcNamesFor(s, dir, "ann_cdc_index", "ann_cdc", CdcFamily.ivf,
-      SimilarityQueries.ivfIndexFor(s, dir),
-      graft.operators.VectorOps.cloneIvfIndex(_, _, _, _))
+    vecCdcNamesFor(s, dir, "ann_cdc_index", "ann_cdc", SimilarityQueries.ivf)
 
   private[graft] def ivfCdcIndexFor(s: SparkSession, dir: String): String =
     ivfCdcNamesFor(s, dir)._2
@@ -1902,17 +1900,14 @@ object StreamingQueries {
   private[graft] def binaryCdcNamesFor(s: SparkSession, dir: String)
       : (String, String) =
     vecCdcNamesFor(s, dir, "binary_cdc_index", "binary_cdc",
-      CdcFamily.binary, SimilarityQueries.ivfBinaryIndexFor(s, dir),
-      graft.operators.VectorOps.cloneIvfIndex(_, _, _, _))
+      SimilarityQueries.binary)
 
   /** The Matryoshka prefix epoch (VERDICT r18 #1): a negated embedding
     * is wrong on BOTH ranking passes; the probe carries the MRL union
     * oracle. */
   private[graft] def mrlCdcNamesFor(s: SparkSession, dir: String)
       : (String, String) =
-    vecCdcNamesFor(s, dir, "mrl_cdc_index", "mrl_cdc", CdcFamily.mrl,
-      SimilarityQueries.mrlIndexFor(s, dir),
-      graft.operators.VectorOps.cloneMrlIndex(_, _, _, _))
+    vecCdcNamesFor(s, dir, "mrl_cdc_index", "mrl_cdc", SimilarityQueries.mrl)
 
   /** The kNN-graph generation: every event queues, the settle prunes
     * every touched/tombstoned id back to the base graph and walks the
@@ -1921,17 +1916,14 @@ object StreamingQueries {
     * mirrors. */
   private[graft] def graphCdcNamesFor(s: SparkSession, dir: String)
       : (String, String) =
-    vecCdcNamesFor(s, dir, "graph_cdc_index", "graph_cdc", CdcFamily.graph,
-      GraphQueries.graphIndexFor(s, dir),
-      graft.operators.GraphOps.cloneGraphIndex)
+    vecCdcNamesFor(s, dir, "graph_cdc_index", "graph_cdc", GraphQueries.graph)
 
   /** The composite (both quantizers frozen): the settled generation
     * shares `sim_ann_ivfpq_appended`'s oracle. */
   private[graft] def ivfPqCdcNamesFor(s: SparkSession, dir: String)
       : (String, String) =
     vecCdcNamesFor(s, dir, "ann_ivfpq_cdc_index", "ivfpq_cdc",
-      CdcFamily.ivfPq(8, 64), SimilarityQueries.ivfPqIndexFor(s, dir),
-      graft.operators.VectorOps.cloneIvfPqIndex(_, _, _, _))
+      SimilarityQueries.ivfPq)
 
   private[graft] def ivfPqCdcIndexFor(s: SparkSession, dir: String): String =
     ivfPqCdcNamesFor(s, dir)._2
@@ -2487,7 +2479,7 @@ object StreamingQueries {
       graft.operators.SearchOps.writeSearchIndex(
         stale, "doc_id", "text", src, paths(0))
       graft.operators.SearchOps.writeDocLengths(s, src, paths(1))
-      val search = CdcFamily.search(8)
+      val search = IndexFamily.search(8)
       cdcDrainAndSettle(s, search, evDir, src, dest, paths(2), paths.drop(3))
       EpochRegistry.Resource(dest,
         dropTables = search.tablesOf(src, dest), deleteDirs = paths)
@@ -2528,7 +2520,7 @@ object StreamingQueries {
           .select(col("doc_id"), col("text"))),
         "doc_id", "text", src, paths(0))
       graft.operators.SearchOps.writeDocLengths(s, src, paths(1))
-      val search = CdcFamily.search(8)
+      val search = IndexFamily.search(8)
       cdcDrainAndSettle(s, search, evDir, src, dest, paths(2), paths.drop(3))
       EpochRegistry.Resource(s"$src;$dest",
         dropTables = search.tablesOf(src, dest), deleteDirs = paths)
@@ -2577,7 +2569,7 @@ object StreamingQueries {
       EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
-  /** The band CDC-maintenance epoch — [[CdcFamily.band]] through
+  /** The band CDC-maintenance epoch — [[IndexFamily.band]] through
     * [[IngestStream.cdcFamilySink]] + [[IngestStream.settleFamilyUpserts]]
     * end to end, the band twin of
     * [[searchCdcNamesFor]]: the initial generation indexes the EVEN
@@ -2612,7 +2604,7 @@ object StreamingQueries {
         .select((col("doc_id") + 400000).as("doc_id"), col("text"))
       graft.operators.Dedup.writeBandIndex(
         stale.unionByName(poison), "doc_id", "text", src, paths(0))
-      val band = CdcFamily.band(32)
+      val band = IndexFamily.band(32)
       cdcDrainAndSettle(s, band, evDir, src, dest, paths(1), paths.drop(2))
       EpochRegistry.Resource(s"$src;$dest",
         dropTables = band.tablesOf(src, dest), deleteDirs = paths)
@@ -2650,7 +2642,7 @@ object StreamingQueries {
     * is resolved by the caller, before this epoch's acquire (no nested
     * computeIfAbsent). */
   private def cdcPointerViewFor(s: SparkSession, dir: String, key: String,
-      prefix: String, family: CdcFamily, settled: String): String =
+      prefix: String, family: IndexFamily, settled: String): String =
     EpochRegistry.acquire(s, key, dir) { () =>
       val view = prefix +
         java.util.UUID.randomUUID().toString.replace("-", "")
@@ -2661,27 +2653,27 @@ object StreamingQueries {
 
   private[graft] def ivfCdcViewFor(s: SparkSession, dir: String): String =
     cdcPointerViewFor(s, dir, "ivf_cdc_view", "graft_ivf_cdc_view_",
-      CdcFamily.ivf, ivfCdcIndexFor(s, dir))
+      IndexFamily.ivf, ivfCdcIndexFor(s, dir))
 
   private[graft] def binaryCdcViewFor(s: SparkSession, dir: String): String =
     cdcPointerViewFor(s, dir, "binary_cdc_view", "graft_binary_cdc_view_",
-      CdcFamily.binary, binaryCdcNamesFor(s, dir)._2)
+      IndexFamily.binary, binaryCdcNamesFor(s, dir)._2)
 
   private[graft] def mrlCdcViewFor(s: SparkSession, dir: String): String =
     cdcPointerViewFor(s, dir, "mrl_cdc_view", "graft_mrl_cdc_view_",
-      CdcFamily.mrl, mrlCdcNamesFor(s, dir)._2)
+      IndexFamily.mrl, mrlCdcNamesFor(s, dir)._2)
 
   private[graft] def graphCdcViewFor(s: SparkSession, dir: String): String =
     cdcPointerViewFor(s, dir, "graph_cdc_view", "graft_graph_cdc_pview_",
-      CdcFamily.graph, graphCdcNamesFor(s, dir)._2)
+      IndexFamily.graph, graphCdcNamesFor(s, dir)._2)
 
   private[graft] def ivfPqCdcViewFor(s: SparkSession, dir: String): String =
     cdcPointerViewFor(s, dir, "ivfpq_cdc_view", "graft_ivfpq_cdc_view_",
-      CdcFamily.ivfPq(8, 64), ivfPqCdcIndexFor(s, dir))
+      IndexFamily.ivfPq(8, 64), ivfPqCdcIndexFor(s, dir))
 
   private[graft] def bandCdcViewFor(s: SparkSession, dir: String): String =
     cdcPointerViewFor(s, dir, "band_cdc_view", "graft_band_cdc_view_",
-      CdcFamily.band(32), bandCdcIndexFor(s, dir))
+      IndexFamily.band(32), bandCdcIndexFor(s, dir))
 
   /** The continuous-clustering epoch: a WORKING clone of the serving
     * band index (the sink appends each drained batch to it — the

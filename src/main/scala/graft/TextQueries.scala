@@ -260,7 +260,7 @@ object TextQueries {
   }
 
   /** One persisted search index per (session, dir) epoch — the text
-    * twin of [[bandIndexFor]]/[[SimilarityQueries.ivfIndexFor]] (same
+    * twin of [[bandIndexFor]]/[[SimilarityQueries.base]] (same
     * UUID-unique isolation and [[EpochRegistry]] lifecycle). */
   /** The gram-index epoch for incremental span dedup: the even-id docs
     * are the standing corpus ([[graft.operators.Dedup.writeGramIndex]]),
@@ -318,7 +318,7 @@ object TextQueries {
 
   /** [[gramIndexFor]] behind [[graft.operators.Generations
     * .publishPointer]] indirection — the same epoch-cached pointer view
-    * the IVF families use ([[SimilarityQueries.ivfPointerViewFor]]). */
+    * the IVF families use ([[SimilarityQueries.pointer]]). */
   private[graft] def gramPointerViewFor(s: SparkSession, dir: String): String = {
     val base = gramIndexFor(s, dir)
     EpochRegistry.acquire(s, "gram_pointer_view", dir) { () =>

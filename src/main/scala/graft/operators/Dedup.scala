@@ -374,7 +374,7 @@ object Dedup {
 
   /** [[cloneBandIndex]] with `compact = true` under its operational
     * name — band-index lifecycle symmetry with
-    * [[VectorOps.compactIvfIndex]] (build → append* → compact →
+    * [[IndexFamily.compact]] (build → append* → compact →
     * eventually re-dedup). */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession, src: String,
       dest: String, path: String, numBuckets: Int = 32): Unit =

@@ -133,7 +133,7 @@ object Generations {
     * [[Dedup.bandReshardCheck]]/[[SearchOps.searchReshardCheck]],
     * settle has [[graft.streaming.IngestStream.settleCheck]] — and the
     * COMPACT edge (tombstone purge + file-group collapse:
-    * `compactSearchIndex`/`compactBandIndex`/`compactIvfIndex`) had no
+    * `compactSearchIndex`/`compactBandIndex`/[[IndexFamily.compact]]) had no
     * verdict telling a deployment when to run it. Pending tombstones
     * cost every probe a broadcast anti-join over the sidecar and leave
     * dead rows in the scanned corpus; this reduces that load to one

@@ -1169,7 +1169,7 @@ object GraphOps {
   // the SAME lifecycle the six other ANN serving families carry —
   // build → serve → append → delete → upsert → compact → monitor →
   // retrain, with Generations pointer publishing and a CDC loop
-  // (IngestStream.cdcFamilySink over CdcFamily.graph). The served index
+  // (IngestStream.cdcFamilySink over IndexFamily.graph). The served index
   // is four catalog tables: `_cents` (frozen coarse quantizer), `_cells`
   // (corpus→cell
   // assignment, partitionBy(list_id) — the entry lists, DPP-pruned at

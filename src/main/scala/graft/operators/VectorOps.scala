@@ -324,12 +324,6 @@ object VectorOps {
         .saveAsTable(s"${dest}_tombstones")
   }
 
-  /** [[cloneMrlIndex]] with `compact = true` under its operational
-    * name. */
-  def compactMrlIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit =
-    cloneMrlIndex(spark, src, dest, path, compact = true)
-
   /** UPDATE maintenance as a GENERATION step ([[upsertToIvfIndex]]'s
     * contract): the new generation drops every incoming id AND every
     * previously tombstoned id from BOTH sides (a doubled id would
@@ -961,12 +955,6 @@ object VectorOps {
         .saveAsTable(s"${dest}_tombstones")
   }
 
-  /** [[clonePqIndex]] with `compact = true` under its operational name —
-    * the tombstone-settling edge of the PQ lifecycle. */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String): Unit =
-    clonePqIndex(spark, src, dest, path, compact = true)
-
   /** UPDATE maintenance for the PQ index — the same generation-step
     * upsert contract as [[upsertToIvfIndex]] (in-place re-append is NOT
     * offered: codes key on `vec_id`, and an id carrying both its stale
@@ -1453,7 +1441,7 @@ object VectorOps {
     * `<table>_tombstones`; both probes anti-join them broadcast AFTER
     * list pruning (the anti-join runs over the nProbe lists actually
     * read, not the corpus), so a removed vector can no longer surface
-    * as a neighbor; [[compactIvfIndex]] settles them physically (the
+    * as a neighbor; a compacting [[cloneIvfIndex]] settles them physically (the
     * compacted generation starts tombstone-free). The list partitions
     * are never read or rewritten by the delete itself. */
   /** METADATA-FILTERED probe of a [[writeIvfIndex]] table — the
@@ -2288,13 +2276,6 @@ object VectorOps {
         .write.mode("overwrite").format("parquet")
         .saveAsTable(s"${dest}_tombstones")
   }
-
-  /** [[cloneIvfIndex]] with `compact = true` under its operational
-    * name — the third lifecycle operation of the index family (build →
-    * append* → compact → eventually retrain). */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String): Unit =
-    cloneIvfIndex(spark, src, dest, path, compact = true)
 
   /** UPDATE maintenance for the IVF family — CDC UPDATE semantics as a
     * GENERATION step, completing the upsert symmetry with

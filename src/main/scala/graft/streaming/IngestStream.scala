@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.PipelineOps
+import graft.operators.{IndexFamily, PipelineOps}
 
 /** Continuous ingestion curation: the streaming twin of the
   * `pipeline_ingest_batch` capstone. Docs arrive as a stream; each
@@ -186,7 +186,7 @@ object IngestStream {
     * closing note): its own CDC statement semantics — O3 INSERT, O4
     * UPDATE, O6 DELETE (reference `sql/triggers.sql:20-32`) — consumed
     * as STANDING-INDEX maintenance, for every index family through ONE
-    * path driven by a [[CdcFamily]] record. The stream carries
+    * path driven by an [[IndexFamily]] record. The stream carries
     * capture-shaped rows (`statement`, the family's id and payload
     * columns — the typed frame before wire encoding); each micro-batch
     * routes, under ONE replay-ledger guard:
@@ -199,7 +199,7 @@ object IngestStream {
     *    #1 — the reference's queue replays full row history in `id`
     *    order, `eventqueue/event_queue.go:15-21`, so that sequence is
     *    legal upstream). The graph family only queues
-    *    ([[CdcFamily.reingestInserts]]);
+    *    ([[IndexFamily.reingestInserts]]);
     *  - DELETE → ids tombstoned WITH their sequence number through the
     *    family's `delete` — the row vanishes from probes (and, for
     *    search, df and corpus stats) immediately, purged physically at
@@ -231,7 +231,7 @@ object IngestStream {
     * or whenever freshness demands ([[settleCheck]] is the monitor).
     *
     * [[cdcIndexSink]] is the search family's sink. */
-  def cdcFamilySink(eventStream: DataFrame, family: CdcFamily, table: String,
+  def cdcFamilySink(eventStream: DataFrame, family: IndexFamily, table: String,
       checkpointDir: String, trigger: Trigger): StreamingQuery =
     foreachBatchSink(eventStream, checkpointDir, trigger) { (batch, batchId) =>
       applyCdcFamilyBatch(batch.sparkSession, family, table, batch, batchId)
@@ -240,7 +240,7 @@ object IngestStream {
   def cdcIndexSink(eventStream: DataFrame, table: String,
       checkpointDir: String, numBuckets: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    cdcFamilySink(eventStream, CdcFamily.search(numBuckets), table,
+    cdcFamilySink(eventStream, IndexFamily.search(numBuckets), table,
       checkpointDir, trigger)
 
   /** One micro-batch of [[cdcFamilySink]] — statement-routed, whole-batch
@@ -249,7 +249,7 @@ object IngestStream {
     * number). Package-private so specs can drive the exact replay the
     * checkpoint would. */
   private[graft] def applyCdcFamilyBatch(
-      spark: org.apache.spark.sql.SparkSession, family: CdcFamily,
+      spark: org.apache.spark.sql.SparkSession, family: IndexFamily,
       table: String, batch: DataFrame, batchId: Long): Unit =
     once(spark, table, batchId) {
       import org.apache.spark.sql.functions.{col, lit}
@@ -288,7 +288,7 @@ object IngestStream {
     *    delete's `Long.MaxValue` stamp always wins) → the id is purged;
     *  - pending INSERT of a never-tombstoned id → costs nothing: its
     *    immediately-appended rows simply survive the copy (graph: walked
-    *    here, [[CdcFamily.reingestInserts]]).
+    *    here, [[IndexFamily.reingestInserts]]).
     *
     * The family's tables and sidecars are refreshed first: a
     * long-running sink appends from the stream's own (cloned) session,
@@ -302,7 +302,7 @@ object IngestStream {
     * [[graft.operators.Generations]] publish/swap.
     * [[settleSearchUpserts]] is the search family's settle. */
   def settleFamilyUpserts(spark: org.apache.spark.sql.SparkSession,
-      family: CdcFamily, src: String, dest: String,
+      family: IndexFamily, src: String, dest: String,
       paths: Seq[String]): Unit = {
     (family.tables ++ Seq("_pending", "_tombstones")).map(src + _)
       .filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
@@ -312,7 +312,7 @@ object IngestStream {
   def settleSearchUpserts(spark: org.apache.spark.sql.SparkSession,
       src: String, dest: String, path: String, dlPath: String,
       numBuckets: Int = 8): Unit =
-    settleFamilyUpserts(spark, CdcFamily.search(numBuckets), src, dest,
+    settleFamilyUpserts(spark, IndexFamily.search(numBuckets), src, dest,
       Seq(path, dlPath))
 
   /** The ONE winner-selection rule behind every settle (the
@@ -327,10 +327,10 @@ object IngestStream {
     * upsert's internal tombstone purge would otherwise swallow them);
     * a plain INSERT's drain-time rows are already correct and skip the
     * incoming set, unless the family queued it instead
-    * ([[CdcFamily.reingestInserts]]). Returns the `(id, payload)` frame
+    * ([[IndexFamily.reingestInserts]]). Returns the `(id, payload)` frame
     * the family's upsert operator ingests. */
   private def settleWinners(spark: org.apache.spark.sql.SparkSession,
-      family: CdcFamily, src: String): DataFrame = {
+      family: IndexFamily, src: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, max, row_number}
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -453,9 +453,10 @@ object IngestStream {
     * near-metadata cost, safe to run per monitoring tick.
     *
     * `idCol` selects the family's key — `doc_id` for the search loop
-    * ([[cdcIndexSink]]), `vec_id` for the vector loops ([[CdcFamily.ivf]] …);
-    * the output column names stay family-neutral so one dashboard
-    * query reads every loop's verdict. */
+    * ([[cdcIndexSink]]), `vec_id` for the vector loops
+    * ([[IndexFamily.ivf]] …); the output column names stay
+    * family-neutral so one dashboard query reads every loop's
+    * verdict. */
   def settleCheck(spark: org.apache.spark.sql.SparkSession, table: String,
       maxPendingDocs: Long = 100L, maxSeqLag: Long = 1000000L,
       idCol: String = "doc_id"): DataFrame = {

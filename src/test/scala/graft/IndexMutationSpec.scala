@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, SearchOps, VectorOps}
-import graft.streaming.{CdcFamily, IngestStream}
+import graft.operators.{Dedup, IndexFamily, SearchOps, VectorOps}
+import graft.streaming.IngestStream
 
 /** UPDATE/DELETE maintenance contracts for the standing index families
   * (VERDICT r11 #1): a deleted document/vector stops influencing probes
@@ -138,14 +138,14 @@ class IndexMutationSpec extends AnyFunSuite {
       // per-doc histories (by event_seq): 1 DELETE@40→UPDATE@50,
       // 2 DELETE@10→re-INSERT@20, 3 UPDATE@30, 4 UPDATE@6→DELETE@7,
       // 5 plain INSERT@21 — delivered in SCRAMBLED micro-batch order
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.search(4), src, ev(
         ("UPDATE", 3L, "spark window three updated", 30L),
         ("DELETE", 4L, "", 7L)), batchId = 0L)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.search(4), src, ev(
         ("INSERT", 2L, "spark window two reborn", 20L),
         ("UPDATE", 1L, "spark window one revised", 50L),
         ("INSERT", 5L, "spark window five fresh", 21L)), batchId = 1L)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.search(4), src, ev(
         ("DELETE", 2L, "", 10L),
         ("DELETE", 1L, "", 40L),
         ("UPDATE", 4L, "spark window four mistake", 6L)), batchId = 2L)
@@ -194,7 +194,7 @@ class IndexMutationSpec extends AnyFunSuite {
       SearchOps.writeSearchIndex(docs, "doc_id", "text", src, paths(0),
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.search(4), src, ev(
         ("UPDATE", 1L, "spark window one poison", 100L),
         ("UPDATE", 1L, "spark window one final", 200L),
         ("UPDATE", 2L, "spark window two final", 201L),
@@ -401,18 +401,18 @@ class IndexMutationSpec extends AnyFunSuite {
       // histories: 1 DELETE@40→UPDATE@50 (resurrect, updated embedding),
       // 2 DELETE@10→re-INSERT@20 (resurrect), 3 UPDATE@30 (heal),
       // 4 UPDATE@6→DELETE@7 (dead), 30 plain INSERT@21 — scrambled
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.ivf, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.ivf, src, ev(
         ("UPDATE", 3L, v(3, 2f), 30L),
         ("DELETE", 4L, null, 7L)), batchId = 0L)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.ivf, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.ivf, src, ev(
         ("INSERT", 2L, v(2, 3f), 20L),
         ("UPDATE", 1L, v(1, 4f), 50L),
         ("INSERT", 30L, v(30, 1f), 21L)), batchId = 1L)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.ivf, src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.ivf, src, ev(
         ("DELETE", 2L, null, 10L),
         ("DELETE", 1L, null, 40L),
         ("UPDATE", 4L, v(4, 9f), 6L)), batchId = 2L)
-      IngestStream.settleFamilyUpserts(spark, CdcFamily.ivf, src, dest,
+      IngestStream.settleFamilyUpserts(spark, IndexFamily.ivf, src, dest,
         Seq(paths(1)))
       val stored = spark.table(s"${dest}_lists")
         .filter(col("vec_id").isin(1L, 2L, 3L, 4L, 30L))
@@ -459,18 +459,18 @@ class IndexMutationSpec extends AnyFunSuite {
       // histories: 1 DELETE@40→UPDATE@50 (resurrect, final text f1),
       // 2 DELETE@10→re-INSERT@20 (resurrect, f2), 3 UPDATE@30 (heal,
       // f3), 4 UPDATE@6→DELETE@7 (dead), 30 plain INSERT@21 — scrambled
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.band(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.band(4), src, ev(
         ("UPDATE", 3L, t("f3"), 30L),
         ("DELETE", 4L, null, 7L)), batchId = 0L)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.band(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.band(4), src, ev(
         ("INSERT", 2L, t("f2"), 20L),
         ("UPDATE", 1L, t("f1"), 50L),
         ("INSERT", 30L, t("f30"), 21L)), batchId = 1L)
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.band(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.band(4), src, ev(
         ("DELETE", 2L, null, 10L),
         ("DELETE", 1L, null, 40L),
         ("UPDATE", 4L, t("f4"), 6L)), batchId = 2L)
-      IngestStream.settleFamilyUpserts(spark, CdcFamily.band(4), src, dest,
+      IngestStream.settleFamilyUpserts(spark, IndexFamily.band(4), src, dest,
         Seq(paths(1)))
       // probe with each doc's FINAL text plus doc 3's STALE text: the
       // settled generation pairs live docs under final texts only
@@ -514,7 +514,7 @@ class IndexMutationSpec extends AnyFunSuite {
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
       // wave 1 → src: doc 2 updated, doc 4 deleted
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), src, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.search(4), src, ev(
         ("UPDATE", 2L, "spark spark spark spark", 10L),
         ("DELETE", 4L, null, 11L)), batchId = 0L)
       IngestStream.settleSearchUpserts(spark, src, mid,
@@ -522,7 +522,7 @@ class IndexMutationSpec extends AnyFunSuite {
       // wave 2 → the SETTLED generation: doc 4 re-inserted (it was
       // physically purged by settle 1 — a plain INSERT now), doc 1
       // updated
-      IngestStream.applyCdcFamilyBatch(spark, CdcFamily.search(4), mid, ev(
+      IngestStream.applyCdcFamilyBatch(spark, IndexFamily.search(4), mid, ev(
         ("INSERT", 4L, "spark window four", 20L),
         ("UPDATE", 1L, "window window window", 21L)), batchId = 0L)
       IngestStream.settleSearchUpserts(spark, mid, dest,
@@ -726,7 +726,7 @@ class IndexMutationSpec extends AnyFunSuite {
       val ct = uniq("graft_ivf_del_spec_c_")
       val cp = tmp("graft_ivf_del_spec_c_")
       try {
-        VectorOps.compactIvfIndex(spark, table, ct, cp)
+        IndexFamily.ivf.compact(spark, table, ct, cp)
         assert(spark.table(s"${ct}_lists").filter(col("vec_id") >= 500L).count() == 0,
           "compaction must purge tombstoned vectors")
         assert(!spark.catalog.tableExists(s"${ct}_tombstones"))

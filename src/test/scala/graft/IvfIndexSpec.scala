@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.VectorOps
+import graft.operators.{IndexFamily, VectorOps}
 
 /** Gates the persisted IVF index family ([[VectorOps.writeIvfIndex]] /
   * [[VectorOps.probeIvfIndex]] and the SQ8 twins) — the vector twin of
@@ -259,7 +259,7 @@ class IvfIndexSpec extends AnyFunSuite {
       assert(filesPerList(table).values.exists(_ > 1),
         "appends should have left multi-file partitions to compact")
 
-      VectorOps.compactIvfIndex(spark, table, cTable, cPath)
+      IndexFamily.ivf.compact(spark, table, cTable, cPath)
       assert(filesPerList(cTable).values.forall(_ == 1L),
         "compaction must leave exactly one file per list")
       // identical rows → identical probe output

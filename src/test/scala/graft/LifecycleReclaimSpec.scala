@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every vector and graph lifecycle epoch acquired in one session:
@@ -22,44 +23,30 @@ class LifecycleReclaimSpec extends AnyFunSuite {
       "ivf_sq8_retrain_index", "ivf_sq8_derived_index",
       "ivf_binary_retrain_index", "ivf_binary_derived_index",
       "ivfpq_retrain_index", "ivfpq_derived_index",
-      "ivfpq_residual_index", "ivfpq_res_delete_index",
+      "ivfpq_res_index", "ivfpq_res_delete_index",
       "ivfpq_res_compact_index", "ivfpq_res_upsert_index",
       "ivfpq_res_append_index", "ivfpq_res_retrain_index",
       "ivfpq_res_derived_index", "ivfpq_res_pointer_view",
-      "graph_index", "graph_index_view", "graph_delete_index",
+      "graph_index", "graph_pointer_view", "graph_delete_index",
       "graph_compact_index", "graph_update_index", "graph_append_index",
       "graph_retrain_index")).toSet
 
   private val graphInputKinds =
     Set("graph_knn_cents", "graph_knn_cells", "graph_knn_edges")
 
-  private def acquireAll(s: org.apache.spark.sql.SparkSession): Unit = {
+  private def acquireAll(s: SparkSession): Unit = {
     import SimilarityQueries._
-    Seq[(org.apache.spark.sql.SparkSession, String) => String](
-      ivfIndexFor, ivfDeleteIndexFor, ivfCompactIndexFor, ivfUpsertIndexFor,
-      ivfAppendIndexFor, ivfRetrainIndexFor, ivfPointerViewFor,
-      ivfSq8IndexFor, ivfSq8DeleteIndexFor, ivfSq8CompactIndexFor,
-      ivfSq8UpsertIndexFor, ivfSq8AppendIndexFor, ivfSq8RetrainIndexFor,
-      ivfSq8DerivedIndexFor, ivfSq8PointerViewFor,
-      ivfBinaryIndexFor, ivfBinaryDeleteIndexFor, ivfBinaryCompactIndexFor,
-      ivfBinaryUpsertIndexFor, ivfBinaryAppendIndexFor,
-      ivfBinaryRetrainIndexFor, ivfBinaryDerivedIndexFor,
-      ivfBinaryPointerViewFor,
-      mrlIndexFor, mrlDeleteIndexFor, mrlCompactIndexFor, mrlUpsertIndexFor,
-      mrlAppendIndexFor, mrlPointerViewFor,
-      pqIndexFor, pqDeleteIndexFor, pqCompactIndexFor, pqUpsertIndexFor,
-      pqAppendIndexFor, pqPointerViewFor,
-      ivfPqIndexFor, ivfPqDeleteIndexFor, ivfPqCompactIndexFor,
-      ivfPqUpsertIndexFor, ivfPqAppendIndexFor, ivfPqRetrainIndexFor,
-      ivfPqDerivedIndexFor, ivfPqPointerViewFor,
-      ivfPqResidualIndexFor, ivfPqResDeleteIndexFor, ivfPqResCompactIndexFor,
-      ivfPqResUpsertIndexFor, ivfPqResAppendIndexFor,
-      ivfPqResRetrainIndexFor, ivfPqResDerivedIndexFor,
-      ivfPqResPointerViewFor,
-      GraphQueries.graphIndexFor, GraphQueries.graphViewFor,
-      GraphQueries.graphDeleteIndexFor, GraphQueries.graphCompactIndexFor,
-      GraphQueries.graphUpdateIndexFor, GraphQueries.graphAppendIndexFor,
-      GraphQueries.graphRetrainIndexFor).foreach(_(s, sfDir))
+    val everyFamily: Seq[(SparkSession, String, Lifecycle) => String] =
+      Seq(base, delete, compact, upsert, append, pointer)
+    for (lc <- vectorFamilies) {
+      everyFamily.foreach(_(s, sfDir, lc))
+      if (lc.retrain.isDefined) retrain(s, sfDir, lc)
+      if (lc.derive.isDefined) derive(s, sfDir, lc)
+    }
+    Seq[(SparkSession, String, Lifecycle) => String](
+      base, pointer, delete, compact, append, retrain)
+      .foreach(_(s, sfDir, GraphQueries.graph))
+    GraphQueries.graphUpdateIndexFor(s, sfDir)
   }
 
   test("every lifecycle epoch's catalog tables are on a live drop list") {

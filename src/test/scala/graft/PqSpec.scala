@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.VectorOps
+import graft.operators.{IndexFamily, VectorOps}
 
 /** Contracts of the product-quantization path: codebook geometry,
   * encode determinism, ADC exactness on exactly-representable vectors,
@@ -173,7 +173,7 @@ class PqSpec extends AnyFunSuite {
       assert(healed == fresh)
 
       // compaction of the CORRUPT src settles the tombstone physically
-      VectorOps.compactPqIndex(spark, src, comp, paths(2))
+      IndexFamily.pq.compact(spark, src, comp, paths(2))
       assert(spark.table(s"${comp}_codes")
         .filter(col("vec_id") === 0L).count() == 0)
       assert(!spark.catalog.tableExists(s"${comp}_tombstones"))

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * that single cold passes therefore cannot compare reliably (the
   * container's 2–10× noise, BENCHLOG discipline). Each rep builds into
   * a throwaway table set; reps re-execute the full build (no epoch
-  * cache), so per-op MIN across reps is the comparable signal.
+  * cache), so per-op MIN across reps is the comparable signal. The
+  * builds are the family table's own ([[SimilarityQueries.vectorFamilies]]),
+  * so the profiled arguments are the served ones.
   * Usage: runMain graft.ProfileBuilds [sfDir] [reps]
   */
 object ProfileBuilds {
@@ -43,30 +45,11 @@ object ProfileBuilds {
         VectorOps.trainCentroids(emb, k, 2).write.format("noop")
           .mode("overwrite").save()
       }
-      locally { val (t, p) = fresh()
-        time("writeIvfIndex") {
-          VectorOps.writeIvfIndex(emb, t, p, numCentroids = k, trainIters = 2) } }
-      locally { val (t, p) = fresh()
-        time("writeIvfIndexSq8") {
-          VectorOps.writeIvfIndexSq8(emb, t, p, numCentroids = k, trainIters = 2) } }
-      locally { val (t, p) = fresh()
-        time("writeIvfIndexBinary") {
-          VectorOps.writeIvfIndexBinary(emb, t, p, numCentroids = k, trainIters = 2) } }
-      locally { val (t, p) = fresh()
-        time("writeMrlIndex") {
-          VectorOps.writeMrlIndex(emb, t, p, prefixDims = 32,
-            numCentroids = k, trainIters = 2) } }
-      locally { val (t, p) = fresh()
-        time("writePqIndex") {
-          VectorOps.writePqIndex(emb, t, p, m = 8, ksub = 64, trainIters = 2) } }
-      locally { val (t, p) = fresh()
-        time("writeIvfPqIndex") {
-          VectorOps.writeIvfPqIndex(emb, t, p, numCentroids = k,
-            trainIters = 2, m = 8, ksub = 64, pqIters = 2) } }
-      locally { val (t, p) = fresh()
-        time("writeIvfPqResidualIndex") {
-          VectorOps.writeIvfPqResidualIndex(emb, t, p, numCentroids = k,
-            trainIters = 2, m = 8, ksub = 16, pqIters = 2) } }
+      for (lc <- SimilarityQueries.vectorFamilies) {
+        val (t, p) = fresh()
+        val write = lc.build(spark, dir)
+        time(s"build ${lc.prefix}") { write(t, p) }
+      }
       println(s"[profile] rep $rep done")
     }
     println("[profile] === min over " + reps + " reps ===")

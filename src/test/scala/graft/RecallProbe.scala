@@ -22,7 +22,7 @@ object RecallProbe {
     val q = emb.filter(col("vec_id") < 10)
     val brute = VectorOps.bruteForceTopK(q, emb, k = 3)
       .select(col("query_id"), col("neighbor_id"))
-    val idx = SimilarityQueries.mrlIndexFor(spark, dir)
+    val idx = SimilarityQueries.base(spark, dir, SimilarityQueries.mrl)
     for ((tgt, sl) <- Seq((400000L, 150), (400000L, 200), (500000L, 200))) {
       val ann = VectorOps.probeMrlIndexIvfAdaptive(spark, idx, q, k = 3,
         prefixDims = 32, shortlist = sl, massTargetPpm = tgt)

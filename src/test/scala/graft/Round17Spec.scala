@@ -61,7 +61,7 @@ class Round17Spec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     val q = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10)
     val res = GraphOps.probeGraphIndex(spark,
-      GraphQueries.graphIndexFor(spark, sfDir), q, k = 3)
+      SimilarityQueries.base(spark, sfDir, GraphQueries.graph), q, k = 3)
     val p = res.queryExecution.executedPlan.toString
     // same contract as the session-epoch walk (Round16PlanSpec): the
     // answer is the beam-bounded materialized frontier — neither the
@@ -75,7 +75,7 @@ class Round17Spec extends AnyFunSuite {
 
   test("appendToGraphIndex with an empty batch is a no-op") {
     import spark.implicits._
-    val t = GraphQueries.graphIndexFor(spark, sfDir)
+    val t = SimilarityQueries.base(spark, sfDir, GraphQueries.graph)
     val before = spark.table(s"${t}_edges").count()
     GraphOps.appendToGraphIndex(spark, t,
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"))
@@ -85,7 +85,7 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("compactGraphIndex without tombstones is an identity copy") {
-    val src = GraphQueries.graphIndexFor(spark, sfDir)
+    val src = SimilarityQueries.base(spark, sfDir, GraphQueries.graph)
     val dest = "graft_r17spec_cmp_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val path = java.nio.file.Files
@@ -107,7 +107,7 @@ class Round17Spec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val res = GraphOps.probeGraphIndexFiltered(spark,
-      GraphQueries.graphIndexFor(spark, sfDir),
+      SimilarityQueries.base(spark, sfDir, GraphQueries.graph),
       emb.filter(col("vec_id") < 10), emb, k = 3).collect()
     assert(res.nonEmpty && res.forall(_.getLong(3) <= 3))
     val labels = emb.select(col("vec_id"), col("label")).collect()

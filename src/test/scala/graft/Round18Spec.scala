@@ -48,7 +48,7 @@ class Round18Spec extends AnyFunSuite {
   test("a graph probe leaves at most one block-manager entry (the result leaf)") {
     graft.functions.GraftFunctions.register(spark)
     val q = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10)
-    val t = GraphQueries.graphIndexFor(spark, sfDir)
+    val t = SimilarityQueries.base(spark, sfDir, GraphQueries.graph)
     // warm the epoch first so its build caches don't count
     GraphOps.probeGraphIndex(spark, t, q, k = 3).collect()
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -156,7 +156,7 @@ class Round18Spec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val res = GraphOps.probeGraphIndexFiltered(spark,
-      GraphQueries.graphIndexFor(spark, sfDir),
+      SimilarityQueries.base(spark, sfDir, GraphQueries.graph),
       emb.filter(col("vec_id") < 10), emb, k = 3).collect()
     assert(res.nonEmpty)
     val labels = emb.select(col("vec_id"), col("label")).collect()

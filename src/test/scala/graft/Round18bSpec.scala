@@ -150,7 +150,7 @@ class Round18bSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val probe = VectorOps.probeMrlIndex(spark,
-      SimilarityQueries.mrlIndexFor(spark, sfDir),
+      SimilarityQueries.base(spark, sfDir, SimilarityQueries.mrl),
       emb.filter(col("vec_id") < 10), k = 5, prefixDims = 32,
       shortlist = 100)
     val direct = VectorOps.mrlTopK(emb.filter(col("vec_id") < 10), emb,

@@ -19,10 +19,10 @@ class Round19Spec extends AnyFunSuite {
         shortlist = 100)
       .orderBy(col("query_id"), col("rk")).collect().map(_.toString).toSeq
     for (gen <- Seq(
-        SimilarityQueries.mrlDeleteIndexFor(spark, sfDir),
-        SimilarityQueries.mrlUpsertIndexFor(spark, sfDir),
-        SimilarityQueries.mrlCompactIndexFor(spark, sfDir),
-        SimilarityQueries.mrlPointerViewFor(spark, sfDir))) {
+        SimilarityQueries.delete(spark, sfDir, SimilarityQueries.mrl),
+        SimilarityQueries.upsert(spark, sfDir, SimilarityQueries.mrl),
+        SimilarityQueries.compact(spark, sfDir, SimilarityQueries.mrl),
+        SimilarityQueries.pointer(spark, sfDir, SimilarityQueries.mrl))) {
       val got = VectorOps.probeMrlIndex(spark, gen, q, k = 5,
           prefixDims = 32, shortlist = 100)
         .orderBy(col("query_id"), col("rk")).collect().map(_.toString).toSeq
@@ -40,7 +40,7 @@ class Round19Spec extends AnyFunSuite {
         shortlist = 100)
       .orderBy(col("query_id"), col("rk")).collect().map(_.toString).toSeq
     val got = VectorOps.probeMrlIndex(spark,
-        SimilarityQueries.mrlAppendIndexFor(spark, sfDir), q, k = 5,
+        SimilarityQueries.append(spark, sfDir, SimilarityQueries.mrl), q, k = 5,
         prefixDims = 32, shortlist = 100)
       .orderBy(col("query_id"), col("rk")).collect().map(_.toString).toSeq
     assert(got == direct, "append epoch drifted from the union build")
@@ -50,7 +50,7 @@ class Round19Spec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
-    val table = SimilarityQueries.mrlIndexFor(spark, sfDir)
+    val table = SimilarityQueries.base(spark, sfDir, SimilarityQueries.mrl)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {

@@ -29,7 +29,7 @@ class Round20PerfSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val k = SimilarityQueries.ivfK(emb)
     val cents = spark.table(
-      s"${SimilarityQueries.ivfIndexFor(spark, sfDir)}_cents")
+      s"${SimilarityQueries.base(spark, sfDir, SimilarityQueries.ivf)}_cents")
     val q = emb.filter(col("vec_id") < 3)
     val hoisted = graft.operators.VectorOps
       .ivfTopKWith(cents, q, emb, k = 3, nProbe = 4)
@@ -44,7 +44,7 @@ class Round20PerfSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val k = SimilarityQueries.ivfK(emb)
     val cents = spark.table(
-      s"${SimilarityQueries.ivfIndexFor(spark, sfDir)}_cents")
+      s"${SimilarityQueries.base(spark, sfDir, SimilarityQueries.ivf)}_cents")
     val hoisted = graft.operators.VectorOps.kmeansAssignWith(cents, emb)
     val trained = graft.operators.VectorOps
       .kmeansAssign(emb, numCentroids = k, trainIters = 2)
@@ -55,7 +55,7 @@ class Round20PerfSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val k = SimilarityQueries.ivfK(emb)
     val cents = spark.table(
-      s"${SimilarityQueries.ivfIndexFor(spark, sfDir)}_cents")
+      s"${SimilarityQueries.base(spark, sfDir, SimilarityQueries.ivf)}_cents")
     val q = emb.filter(col("vec_id") < 3)
     val hoisted = graft.operators.VectorOps
       .ivfTopKSq8With(cents, q, emb, k = 3, nProbe = 4)
@@ -70,7 +70,7 @@ class Round20PerfSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val k = SimilarityQueries.ivfK(emb)
     val cents = spark.table(
-      s"${SimilarityQueries.ivfIndexFor(spark, sfDir)}_cents")
+      s"${SimilarityQueries.base(spark, sfDir, SimilarityQueries.ivf)}_cents")
     val q = emb.filter(col("vec_id") < 3)
     val hoisted = graft.operators.VectorOps
       .ivfHardNegativesWith(cents, q, emb, k = 5, nProbe = 4,
@@ -87,7 +87,7 @@ class Round20PerfSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val k = SimilarityQueries.ivfK(emb)
     val cents = spark.table(
-      s"${SimilarityQueries.ivfIndexFor(spark, sfDir)}_cents")
+      s"${SimilarityQueries.base(spark, sfDir, SimilarityQueries.ivf)}_cents")
     val hoisted = graft.operators.VectorOps.clusterSilhouetteWith(cents, emb)
     val trained = graft.operators.VectorOps
       .clusterSilhouette(emb, numCentroids = k, trainIters = 2)

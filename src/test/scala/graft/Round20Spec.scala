@@ -833,7 +833,7 @@ class Round20Spec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
-    val table = SimilarityQueries.mrlIndexFor(spark, sfDir)
+    val table = SimilarityQueries.base(spark, sfDir, SimilarityQueries.mrl)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {

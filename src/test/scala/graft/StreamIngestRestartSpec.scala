@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{CdcFamily, CdcStream, IngestStream}
-import graft.operators.{Dedup, GraphOps, SearchOps, VectorOps}
+import graft.operators.{Dedup, GraphOps, IndexFamily, SearchOps, VectorOps}
+import graft.streaming.{CdcStream, IngestStream}
 
 /** Restart idempotence for the continuous index-maintenance sinks
   * (VERDICT r11 #5): a drain killed between micro-batches resumes from
@@ -201,7 +201,7 @@ class StreamIngestRestartSpec extends AnyFunSuite {
     * standing index of it, the table holding its drain-time rows, how
     * many rows one drained INSERT adds there (`None`: some, the count
     * being token/band-dependent), and the vector width (0: text). */
-  private case class ReplayCase(label: String, family: CdcFamily,
+  private case class ReplayCase(label: String, family: IndexFamily,
       build: (String, String) => Unit, index: String, landed: Option[Long],
       dims: Int)
 
@@ -213,31 +213,31 @@ class StreamIngestRestartSpec extends AnyFunSuite {
     .toDF("vec_id", "embedding")
 
   private val replayCases = Seq(
-    ReplayCase("search", CdcFamily.search(4), (t, p) => {
+    ReplayCase("search", IndexFamily.search(4), (t, p) => {
       SearchOps.writeSearchIndex(replayDocs, "doc_id", "text", t, p,
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, t, tmp("graft_cdc_replay_dl_"),
         numBuckets = 4)
     }, "", None, 0),
-    ReplayCase("band", CdcFamily.band(4), (t, p) =>
+    ReplayCase("band", IndexFamily.band(4), (t, p) =>
       Dedup.writeBandIndex(replayDocs, "doc_id", "text", t, p,
         numBuckets = 4), "", None, 0),
-    ReplayCase("IVF", CdcFamily.ivf, (t, p) =>
+    ReplayCase("IVF", IndexFamily.ivf, (t, p) =>
       VectorOps.writeIvfIndex(replayVecs(8), t, p, numCentroids = 2,
         trainIters = 1), "_lists", Some(1L), 8),
     // the sign-mask packer takes 64-dim embeddings
-    ReplayCase("binary", CdcFamily.binary, (t, p) =>
+    ReplayCase("binary", IndexFamily.binary, (t, p) =>
       VectorOps.writeIvfIndexBinary(replayVecs(64), t, p, numCentroids = 2,
         trainIters = 1), "_lists", Some(1L), 64),
-    ReplayCase("MRL", CdcFamily.mrl, (t, p) =>
+    ReplayCase("MRL", IndexFamily.mrl, (t, p) =>
       VectorOps.writeMrlIndex(replayVecs(8), t, p, prefixDims = 4,
         numCentroids = 2, trainIters = 1), "_prefix", Some(1L), 8),
     // graph INSERTs queue for the settle's batch walk: none land at drain
-    ReplayCase("graph", CdcFamily.graph, (t, p) =>
+    ReplayCase("graph", IndexFamily.graph, (t, p) =>
       GraphOps.writeGraphIndex(replayVecs(8), t, p, trainIters = 1),
       "_nodes", Some(0L), 8),
     // m = 2 codes per insert
-    ReplayCase("IVF-PQ", CdcFamily.ivfPq(2, 8), (t, p) =>
+    ReplayCase("IVF-PQ", IndexFamily.ivfPq(2, 8), (t, p) =>
       VectorOps.writeIvfPqIndex(replayVecs(8), t, p, numCentroids = 2,
         trainIters = 1, m = 2, ksub = 4, pqIters = 1, dim = 8),
       "_codes", Some(2L), 8))
@@ -292,7 +292,7 @@ class StreamIngestRestartSpec extends AnyFunSuite {
           case None => assert(index > applied._1,
             s"new batch did not reach the ${c.label} index")
         }
-      } finally (c.family.tables ++ CdcFamily.sidecars).foreach(sfx =>
+      } finally (c.family.tables ++ IndexFamily.sidecars).foreach(sfx =>
         spark.sql(s"DROP TABLE IF EXISTS $t$sfx"))
     }
 
@@ -300,7 +300,7 @@ class StreamIngestRestartSpec extends AnyFunSuite {
     // a non-default (m = 2, dim = 8) index: the settle must re-encode the
     // UPDATE under the SAME subspaces the drain encoded the INSERT with
     graft.functions.GraftFunctions.register(spark)
-    val family = CdcFamily.ivfPq(2, 8)
+    val family = IndexFamily.ivfPq(2, 8)
     val (src, dest, exp) = (uniq("graft_ivfpq_settle_src_"),
       uniq("graft_ivfpq_settle_dest_"), uniq("graft_ivfpq_settle_exp_"))
     val paths = (1 to 3).map(_ => tmp("graft_ivfpq_settle_"))
@@ -334,7 +334,7 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       assert(codes(dest) == codes(exp),
         "settled IVF-PQ codes differ from the frozen-quantizer union build")
     } finally Seq(src, dest, exp).foreach { t =>
-      (family.tables ++ CdcFamily.sidecars).foreach(sfx =>
+      (family.tables ++ IndexFamily.sidecars).foreach(sfx =>
         spark.sql(s"DROP TABLE IF EXISTS $t$sfx"))
     }
   }
@@ -385,7 +385,7 @@ class StreamIngestRestartSpec extends AnyFunSuite {
     } finally {
       query.stop()
       (Seq(t, s1, s2, ref).flatMap(x => Seq(x, s"${x}_doclens")) ++
-        CdcFamily.sidecars.map(t + _))
+        IndexFamily.sidecars.map(t + _))
         .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     }
   }
