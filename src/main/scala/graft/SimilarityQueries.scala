@@ -197,10 +197,10 @@ object SimilarityQueries {
   // ---------------- index-family lifecycle epochs ----------------
 
   /** One family's batch lifecycle — a row of the family table below.
-    * Every epoch is keyed `<prefix>_<stage>` per (session, dir) and
-    * writes its generation into `graft_<kind>_<uuid>` tables (the
-    * family's `tables` suffixes) under a fresh temp dir, all reclaimed
-    * by [[EpochRegistry]] when the owning session's context stops.
+    * Every epoch is keyed `<prefix>_<stage>` per (session, dir); its
+    * generations hold the family's `tables` suffixes under fresh temp
+    * dirs, all reclaimed by [[EpochRegistry]] when the owning session's
+    * context stops.
     *
     *  - `build`: the base generation's writer — it resolves the epochs
     *    it reads FIRST (before the base acquire: a nested
