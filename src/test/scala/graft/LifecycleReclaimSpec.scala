@@ -7,7 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * each catalog table or view the epochs leave behind is on some live
   * entry's drop list (so it is reclaimed with the session), and the
   * live epoch kinds are exactly the documented lifecycle list plus the
-  * three kNN input epochs the graph generation copies from. */
+  * three kNN input epochs the graph generation copies from. A second
+  * test pins which epoch each post-base vector lifecycle entry probes:
+  * entries that share an oracle (`_deleted`, `_updated`, `_published`
+  * all hash-match the base) cannot be told apart by the oracle compare,
+  * so a mis-wired stage would otherwise pass. */
 class LifecycleReclaimSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -47,6 +51,99 @@ class LifecycleReclaimSpec extends AnyFunSuite {
       base, pointer, delete, compact, append, retrain)
       .foreach(_(s, sfDir, GraphQueries.graph))
     GraphQueries.graphUpdateIndexFor(s, sfDir)
+  }
+
+  /** (entry, the epoch kind its plan must read), one per post-base
+    * vector lifecycle entry. */
+  private val entryKinds: Seq[(String, String)] = Seq(
+    "sim_ann_ivf_deleted" -> "ivf_delete_index",
+    "sim_ann_ivf_updated" -> "ivf_upsert_index",
+    "sim_ann_ivf_published" -> "ivf_pointer_view",
+    "sim_ann_ivf_compacted" -> "ivf_compact_index",
+    "sim_ann_ivf_appended" -> "ivf_append_index",
+    "sim_ann_ivf_appended_recall" -> "ivf_append_index",
+    "sim_ann_ivf_compaction_check" -> "ivf_delete_index",
+    "sim_ann_ivf_retrained" -> "ivf_retrain_index",
+    "sim_ann_ivf_retrained_recall" -> "ivf_retrain_index",
+    "sim_ann_ivf_retrain_check" -> "ivf_append_index",
+    "sim_ann_ivf_sq8_deleted" -> "ivf_sq8_delete_index",
+    "sim_ann_ivf_sq8_updated" -> "ivf_sq8_upsert_index",
+    "sim_ann_ivf_sq8_published" -> "ivf_sq8_pointer_view",
+    "sim_ann_ivf_sq8_compacted" -> "ivf_sq8_compact_index",
+    "sim_ann_ivf_sq8_appended" -> "ivf_sq8_append_index",
+    "sim_ann_ivf_sq8_appended_recall" -> "ivf_sq8_append_index",
+    "sim_ann_ivf_sq8_compaction_check" -> "ivf_sq8_delete_index",
+    "sim_ann_ivf_sq8_derived" -> "ivf_sq8_derived_index",
+    "sim_ann_ivf_sq8_retrained" -> "ivf_sq8_retrain_index",
+    "sim_ann_ivf_sq8_retrained_recall" -> "ivf_sq8_retrain_index",
+    "sim_ann_ivf_sq8_retrain_check" -> "ivf_sq8_append_index",
+    "sim_ann_binary_deleted" -> "ivf_binary_delete_index",
+    "sim_ann_binary_updated" -> "ivf_binary_upsert_index",
+    "sim_ann_binary_published" -> "ivf_binary_pointer_view",
+    "sim_ann_binary_compacted" -> "ivf_binary_compact_index",
+    "sim_ann_binary_appended" -> "ivf_binary_append_index",
+    "sim_ann_binary_appended_recall" -> "ivf_binary_append_index",
+    "sim_ann_binary_compaction_check" -> "ivf_binary_delete_index",
+    "sim_ann_binary_derived" -> "ivf_binary_derived_index",
+    "sim_ann_binary_retrained" -> "ivf_binary_retrain_index",
+    "sim_ann_binary_retrained_recall" -> "ivf_binary_retrain_index",
+    "sim_ann_binary_retrain_check" -> "ivf_binary_append_index",
+    "sim_ann_mrl_deleted" -> "mrl_delete_index",
+    "sim_ann_mrl_updated" -> "mrl_upsert_index",
+    "sim_ann_mrl_published" -> "mrl_pointer_view",
+    "sim_ann_mrl_compacted" -> "mrl_compact_index",
+    "sim_ann_mrl_appended" -> "mrl_append_index",
+    "sim_ann_mrl_appended_recall" -> "mrl_append_index",
+    "sim_ann_mrl_compaction_check" -> "mrl_delete_index",
+    "sim_ann_mrl_retrain_check" -> "mrl_append_index",
+    "sim_ann_pq_deleted" -> "pq_delete_index",
+    "sim_ann_pq_updated" -> "pq_upsert_index",
+    "sim_ann_pq_published" -> "pq_pointer_view",
+    "sim_ann_pq_compacted" -> "pq_compact_index",
+    "sim_ann_pq_appended" -> "pq_append_index",
+    "sim_ann_pq_appended_recall" -> "pq_append_index",
+    "sim_ann_pq_compaction_check" -> "pq_delete_index",
+    "sim_ann_ivfpq_deleted" -> "ivfpq_delete_index",
+    "sim_ann_ivfpq_updated" -> "ivfpq_upsert_index",
+    "sim_ann_ivfpq_published" -> "ivfpq_pointer_view",
+    "sim_ann_ivfpq_compacted" -> "ivfpq_compact_index",
+    "sim_ann_ivfpq_appended" -> "ivfpq_append_index",
+    "sim_ann_ivfpq_appended_recall" -> "ivfpq_append_index",
+    "sim_ann_ivfpq_compaction_check" -> "ivfpq_delete_index",
+    "sim_ann_ivfpq_derived" -> "ivfpq_derived_index",
+    "sim_ann_ivfpq_retrained" -> "ivfpq_retrain_index",
+    "sim_ann_ivfpq_retrained_recall" -> "ivfpq_retrain_index",
+    "sim_ann_ivfpq_retrain_check" -> "ivfpq_append_index",
+    "sim_ann_ivfpq_residual_deleted" -> "ivfpq_res_delete_index",
+    "sim_ann_ivfpq_residual_updated" -> "ivfpq_res_upsert_index",
+    "sim_ann_ivfpq_residual_published" -> "ivfpq_res_pointer_view",
+    "sim_ann_ivfpq_residual_compacted" -> "ivfpq_res_compact_index",
+    "sim_ann_ivfpq_residual_appended" -> "ivfpq_res_append_index",
+    "sim_ann_ivfpq_residual_appended_recall" -> "ivfpq_res_append_index",
+    "sim_ann_ivfpq_residual_compaction_check" -> "ivfpq_res_delete_index",
+    "sim_ann_ivfpq_residual_derived" -> "ivfpq_res_derived_index",
+    "sim_ann_ivfpq_residual_retrained" -> "ivfpq_res_retrain_index",
+    "sim_ann_ivfpq_residual_retrained_recall" -> "ivfpq_res_retrain_index",
+    "sim_ann_ivfpq_residual_retrain_check" -> "ivfpq_res_append_index")
+
+  test("each vector lifecycle entry probes the epoch of its own stage") {
+    assert(entryKinds.size == 69 && entryKinds.map(_._1).distinct.size == 69)
+    val s = SparkTestSession.spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    val uuid = EpochRegistry.idOf(s)
+    val miswired = entryKinds.flatMap { case (entry, kind) =>
+      val plan = SparkEntry.queries(entry)(s, sfDir).queryExecution.analyzed
+        .toString
+      EpochRegistry.liveEntries(uuid, Some(kind)) match {
+        // a pointer view is read at plan time: the plan holds the
+        // generation it names
+        case Seq(res) if plan.contains(
+            graft.operators.Generations.resolveServing(s, res.value)) => None
+        case live => Some(s"$entry: ${live.size} live $kind entries, " +
+          "none read by the plan")
+      }
+    }
+    assert(miswired.isEmpty, miswired.mkString("\n"))
   }
 
   test("every lifecycle epoch's catalog tables are on a live drop list") {
