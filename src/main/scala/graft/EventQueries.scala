@@ -1691,13 +1691,14 @@ object EventQueries {
       // the whole events window+agg lineage (16 corpus passes;
       // measured r20: 2.9 s warm → the leaf removes all but one)
       val pmRaw = pairs.join(tot, Seq("prev_type"))
-      val pmRows = pmRaw.collect()
       // the "model-sized" contract made loud (ADVICE r20): |types|² must
       // stay driver-bounded at ANY corpus scale — event_type is a closed
       // enum (the fixture carries a handful; a schema where it is
       // unbounded needs the two-level fold, not this leaf). 1e6 rows of
       // (2 strings, 2 longs) ≈ tens of MB — far under driver headroom,
-      // and far past any plausible type-enum size.
+      // and far past any plausible type-enum size. The collect itself
+      // is bounded: one row past the bound is enough to refuse.
+      val pmRows = pmRaw.limit(1000001).collect()
       require(pmRows.length <= 1000000,
         s"events_markov_stationary: |types|^2 = ${pmRows.length} exceeds " +
           "the model-sized collect bound — event_type is not enum-like here")

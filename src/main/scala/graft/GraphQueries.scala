@@ -217,7 +217,6 @@ object GraphQueries {
     // set at fixture scale (a deployment audits a node SAMPLE the same
     // way)
     "graph_knn_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val brute = graft.operators.VectorOps.bruteForceTopK(emb, emb, k = 3)
         .select(col("query_id"), col("neighbor_id"))
@@ -237,7 +236,6 @@ object GraphQueries {
     // rerank rounds at beam 8, final top-3; the corpus is never
     // scanned at serving time, the index IS the graph
     "sim_ann_graph" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
       GraphOps.graphSearch(s, dir, q, k = 3)
         .orderBy(col("query_id"), col("rk"))
@@ -245,7 +243,6 @@ object GraphQueries {
     // ...and its recall audit against the exact top-3 (the family
     // discipline: every approximate serving path ships one)
     "sim_ann_graph_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(emb,
         GraphOps.graphSearch(s, dir, emb.filter(col("vec_id") < 10),
@@ -264,7 +261,6 @@ object GraphQueries {
     // vector's out-edges = its beam-walk top-3 over the frozen graph;
     // gate = the new nodes' full edge table vs the walk replayed in SQL
     "sim_ann_graph_appended" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       s.read.parquet(GraphOps.knnAppendDir(s, dir))
         .filter(col("src") >= 100000)
         .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
@@ -274,7 +270,6 @@ object GraphQueries {
     // so their true top-1 is the original twin — per-node overlap vs
     // the exact corpus top-3 gates that the walk actually found it
     "sim_ann_graph_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val batch = SimilarityQueries.dupVectors(emb)
         .filter(col("vec_id") >= 100000)
@@ -411,7 +406,6 @@ object GraphQueries {
     // without one; the unfiltered truth would count forbidden
     // neighbors as misses)
     "sim_ann_graph_filtered_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.filteredRecallAudit(emb,
         GraphOps.probeGraphIndexFiltered(s, base(s, dir, graph),
@@ -433,7 +427,6 @@ object GraphQueries {
     }),
     // ...its recall audit vs the label-restricted exact top-3
     "sim_ann_graph_filtered_stitched_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.filteredRecallAudit(emb,
         GraphOps.graphSearchFilteredStitched(s, dir,
@@ -454,7 +447,6 @@ object GraphQueries {
     // ...and its recall audit vs the exact top-3 (the family
     // discipline; the wider frontier must hold the serve floor)
     "sim_ann_graph_rerank_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(emb,
         GraphOps.probeGraphIndexRerank(s, base(s, dir, graph),
@@ -482,7 +474,6 @@ object GraphQueries {
     // over the union corpus (the family discipline: every approximate
     // path carries one)
     "sim_ann_graph_retrained_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val corpus = SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("embedding"))
       val brute = graft.operators.VectorOps

@@ -162,7 +162,6 @@ object PipelineQueries {
     // defined by the same dup_pairs chain as dedup_incremental (shared
     // oracle CTEs), so the two can never drift.
     "pipeline_ingest_batch" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, dir)
       PipelineOps.flagIngestBatch(s,
           batch = TextQueries.dupCorpus(docs).filter(col("doc_id") >= 100000),

@@ -627,7 +627,6 @@ object RelationalQueries {
     // codegen'd graft_jaro_winkler expression (semantics pinned to the
     // oracle's boost-threshold variant), best match by round(jw,6)
     "join_entity_blocking_jw" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val p = Tables.part(s, dir)
       val clean = p.select(col("p_partkey").as("clean_id"),
         col("p_name").as("name"))

@@ -452,9 +452,162 @@ object SimilarityQueries {
     }
   }
 
-  /** Shared recall-audit tail: per-query overlap of an ANN top-k with the
-    * exact brute-force top-[[recallK]], 0-filled for queries the ANN
-    * missed entirely. Both ANN paths (LSH, IVF) gate through this. */
+  // ---------------- served lifecycle entries ----------------
+
+  /** A driver-contract entry: (session, data dir) → result. */
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** A served probe: (session, generation, query set) → ranked rows. */
+  private type Probe = (SparkSession, String, DataFrame) => DataFrame
+
+  /** How one vector family's generations are probed and gated — a row
+    * of [[servedFamilies]]. [[lifecycleEntries]] generates every
+    * post-base lifecycle entry `<entry>_<stage>` and its oracle from it.
+    *
+    *  - `serve`: the served probe, k and nProbe fixed inside; its rows
+    *    are gated as `query_id, neighbor_id, <score>, rk`;
+    *  - `audit`: the same probe at k = [[recallK]] (and nProbe = 2 over
+    *    coarse lists), gated through [[recallAudit]] against the
+    *    union-corpus truth;
+    *  - `rowsTable`: the table whose rows the compaction-cadence monitor
+    *    weighs the delete epoch's ten tombstones against;
+    *  - `retrainCheck`: the monitor→retrain verdict over the appended
+    *    generation, with its mirror;
+    *  - `baseSql`: the untouched build's oracle, shared by every
+    *    result-invisible stage (delete, upsert, pointer, derive);
+    *    `compactedSql` is the oracle of `lc.compactFrom`'s generation
+    *    (stated per row: a stage function cannot be compared);
+    *    `appendedSql`/`appendedRecallSql` mirror the union corpus under
+    *    the frozen quantizers, `retrainedSql` (probe, recall) the union
+    *    corpus under fresh ones. */
+  private[graft] final case class Served(lc: Lifecycle, entry: String,
+      score: String, rowsTable: String, serve: Probe, audit: Probe,
+      retrainCheck: Option[(Query, String)], baseSql: String,
+      compactedSql: String, appendedSql: String, appendedRecallSql: String,
+      retrainedSql: Option[(String, String)], compactionCheckSql: String)
+
+  /** The served table. The retrain verdicts read the partition column
+    * only, and every appended generation assigns through the same
+    * frozen float quantizer, so IVF, SQ8, binary, IVF-PQ and residual
+    * share one mirror (the code layouts count distinct ids per list);
+    * MRL's cells are trained on the 32-dim prefixes, and flat PQ has
+    * no coarse lists to skew. The compaction monitors count one list
+    * (or prefix) row per vector, or m = 8 code rows. Lazy: the oracle
+    * strings read vals defined further down. */
+  private[graft] lazy val servedFamilies: Seq[Served] = Seq(
+    Served(ivf, "sim_ann_ivf", "cos_sim", "_lists",
+      VectorOps.probeIvfIndex(_, _, _, k = 3, nProbe = 4),
+      VectorOps.probeIvfIndex(_, _, _, k = recallK, nProbe = 2),
+      Some((VectorOps.ivfRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      baseSql = ivfOracleSql, compactedSql = ivfAppendOracleSql,
+      appendedSql = ivfAppendOracleSql,
+      appendedRecallSql = ivfAppendRecallOracleSql,
+      retrainedSql = Some((
+        ivfOracleOver(dupVectorsSql + ",\n", "corpus", "corpus", corpusKSql),
+        ivfRecallOracleOver(dupVectorsSql + ",\n", "corpus", "corpus",
+          corpusKSql))),
+      compactionCheckSql = compactionCheckOracleSql(1)),
+    Served(sq8, "sim_ann_ivf_sq8", "cos_sim", "_lists",
+      VectorOps.probeIvfIndexSq8(_, _, _, k = 3, nProbe = 4),
+      VectorOps.probeIvfIndexSq8(_, _, _, k = recallK, nProbe = 2),
+      Some((VectorOps.ivfRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      baseSql = ivfSq8OracleSql, compactedSql = ivfSq8AppendOracleSql,
+      appendedSql = ivfSq8AppendOracleSql,
+      appendedRecallSql = recallOracleSql(
+        ivfSq8RecallPre(dupVectorsSql + ",\n", "corpus"),
+        ivfSq8RecallAnnSelect, "corpus"),
+      retrainedSql = Some((
+        ivfSq8OracleOver(dupVectorsSql + ",\n", "corpus", "corpus",
+          corpusKSql),
+        recallOracleSql(ivfSq8RecallPre(dupVectorsSql + ",\n", "corpus",
+          "corpus", corpusKSql), ivfSq8RecallAnnSelect, "corpus"))),
+      compactionCheckSql = compactionCheckOracleSql(1)),
+    Served(binary, "sim_ann_binary", "hamming", "_lists",
+      VectorOps.probeIvfIndexBinary(_, _, _, k = 5, nProbe = 4),
+      VectorOps.probeIvfIndexBinary(_, _, _, k = recallK, nProbe = 2),
+      Some((VectorOps.ivfRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      baseSql = ivfBinaryOracleSql, compactedSql = ivfBinaryOracleSql,
+      appendedSql = ivfBinaryAppendOracleSql,
+      appendedRecallSql = ivfBinaryAppendRecallOracleSql,
+      retrainedSql = Some((ivfBinaryRetrainOracleSql,
+        ivfBinaryRetrainRecallOracleSql)),
+      compactionCheckSql = compactionCheckOracleSql(1)),
+    Served(mrl, "sim_ann_mrl", "cos_sim", "_prefix",
+      VectorOps.probeMrlIndex(_, _, _, k = 5, prefixDims = 32,
+        shortlist = 100),
+      VectorOps.probeMrlIndex(_, _, _, k = recallK, prefixDims = 32,
+        shortlist = 100),
+      Some((VectorOps.mrlRetrainCheck(_, _), mrlRetrainCheckOracleSql)),
+      baseSql = mrlOracleSql, compactedSql = mrlOracleSql,
+      appendedSql = mrlAppendOracleSql,
+      appendedRecallSql = mrlAppendRecallOracleSql, retrainedSql = None,
+      compactionCheckSql = compactionCheckOracleSql(1)),
+    Served(pq, "sim_ann_pq", "cos_sim", "_codes",
+      VectorOps.probePqIndex(_, _, _, k = 3),
+      VectorOps.probePqIndex(_, _, _, k = recallK),
+      retrainCheck = None,
+      baseSql = pqOracleSql, compactedSql = pqOracleSql,
+      appendedSql = pqAppendOracleSql,
+      appendedRecallSql = pqAppendRecallOracleSql, retrainedSql = None,
+      compactionCheckSql = compactionCheckOracleSql(8)),
+    Served(ivfPq, "sim_ann_ivfpq", "cos_sim", "_codes",
+      VectorOps.probeIvfPqIndex(_, _, _, k = 3, nProbe = 4),
+      VectorOps.probeIvfPqIndex(_, _, _, k = recallK, nProbe = 2),
+      Some((VectorOps.ivfPqRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      baseSql = ivfPqOracleSql, compactedSql = ivfPqOracleSql,
+      appendedSql = ivfPqAppendOracleSql,
+      appendedRecallSql = ivfPqAppendRecallOracleSql,
+      retrainedSql = Some((ivfPqRetrainOracleSql,
+        ivfPqRetrainRecallOracleSql)),
+      compactionCheckSql = compactionCheckOracleSql(8)),
+    Served(ivfPqRes, "sim_ann_ivfpq_residual", "cos_sim", "_codes",
+      VectorOps.probeIvfPqResidualIndex(_, _, _, k = 3, nProbe = 4),
+      VectorOps.probeIvfPqResidualIndex(_, _, _, k = recallK, nProbe = 2),
+      Some((VectorOps.ivfPqRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      baseSql = ivfPqResidualOracleSql, compactedSql = ivfPqResidualOracleSql,
+      appendedSql = ivfPqResidualAppendOracleSql,
+      appendedRecallSql = ivfPqResidualAppendRecallOracleSql,
+      retrainedSql = Some((ivfPqResidualRetrainOracleSql,
+        ivfPqResidualRetrainRecallOracleSql)),
+      compactionCheckSql = compactionCheckOracleSql(8)))
+
+  /** Every post-base lifecycle entry of one served family, as (name,
+    * query, oracle SQL): each stage's generation probed through `serve`
+    * (or audited through `audit`), plus the compaction verdict over the
+    * delete generation and the retrain verdict over the appended one. */
+  private def lifecycleEntries(f: Served): Seq[(String, Query, String)] = {
+    type Stage = (SparkSession, String, Lifecycle) => String
+    def probed(at: Stage): Query = (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      f.serve(s, at(s, dir, f.lc), querySet(emb))
+        .select(col("query_id"), col("neighbor_id"), col(f.score), col("rk"))
+        .orderBy(col("query_id"), col("rk"))
+    }
+    def audited(at: Stage): Query = (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      recallAudit(dupVectors(emb), f.audit(s, at(s, dir, f.lc), querySet(emb)))
+    }
+    val compactionCheck: Query = (s, dir) => {
+      val gen = delete(s, dir, f.lc)
+      Generations.compactionCheck(s, gen, s.table(gen + f.rowsTable))
+    }
+    val stages: Seq[(String, Query, String)] = Seq(
+      ("_deleted", probed(delete), f.baseSql),
+      ("_updated", probed(upsert), f.baseSql),
+      ("_published", probed(pointer), f.baseSql),
+      ("_compacted", probed(compact), f.compactedSql),
+      ("_appended", probed(append), f.appendedSql),
+      ("_appended_recall", audited(append), f.appendedRecallSql),
+      ("_compaction_check", compactionCheck, f.compactionCheckSql)) ++
+      f.lc.derive.map(_ => ("_derived", probed(derive), f.baseSql)) ++
+      f.retrainedSql.toSeq.flatMap { case (sql, recallSql) => Seq(
+        ("_retrained", probed(retrain), sql),
+        ("_retrained_recall", audited(retrain), recallSql)) } ++
+      f.retrainCheck.map { case (check, sql) =>
+        ("_retrain_check", (s, dir) => check(s, append(s, dir, f.lc)), sql) }
+    stages.map { case (stage, query, sql) => (f.entry + stage, query, sql) }
+  }
+
   /** [[recallAudit]]'s FILTERED twin (r18 — every approximate path
     * carries a recall audit, and the filtered probes were the two that
     * didn't): truth is the exact cosine top-k RESTRICTED to the
@@ -490,6 +643,9 @@ object SimilarityQueries {
       .orderBy(col("query_id"))
   }
 
+  /** Shared recall-audit tail: per-query overlap of an ANN top-k with the
+    * exact brute-force top-[[recallK]], 0-filled for queries the ANN
+    * missed entirely. Both ANN paths (LSH, IVF) gate through this. */
   private[graft] def recallAudit(emb: DataFrame, ann: DataFrame): DataFrame = {
     val brute = VectorOps.bruteForceTopK(querySet(emb), emb, k = recallK)
       .select(col("query_id"), col("neighbor_id"))
@@ -504,10 +660,9 @@ object SimilarityQueries {
       .orderBy(col("query_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, Query] = Map[String, Query](
 
     "sim_topk_brute" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.bruteForceTopK(querySet(emb), emb, k = 5)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -519,7 +674,6 @@ object SimilarityQueries {
     // similarity to the already-picked set; the oracle unrolls the
     // greedy recursion as one MATERIALIZED CTE per step
     "sim_ann_mmr" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.mmrTopK(querySet(emb), emb, shortlist = 20, k = 5)
         .orderBy(col("query_id"), col("sel_rk"))
@@ -537,7 +691,6 @@ object SimilarityQueries {
     }),
 
     "sim_ann_binary_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.binaryTopK(querySet(emb), emb, k = recallK))
     }),
@@ -552,7 +705,6 @@ object SimilarityQueries {
     // shortlist (recall@3 0.93 at sf0.01); real MRL embeddings run
     // 4-8x truncation at small shortlists on the same plan
     "sim_ann_mrl" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.mrlTopK(querySet(emb), emb, k = 5, prefixDims = 32,
           shortlist = 100)
@@ -561,7 +713,6 @@ object SimilarityQueries {
     }),
 
     "sim_ann_mrl_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.mrlTopK(querySet(emb), emb, k = recallK,
         prefixDims = 32, shortlist = 100))
@@ -573,84 +724,11 @@ object SimilarityQueries {
     // the full-vector table corpus-wide — the shortlist joins _nodes);
     // output ≡ sim_ann_mrl, same oracle
     "sim_ann_mrl_indexed" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeMrlIndex(s, base(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // MRL lifecycle symmetry (VERDICT r18 #1 — the last serving-family
-    // asymmetry): poison twins are the queries' own vectors, so a
-    // tombstone leak IS the cos-1.0 rank-1 result; the upsert heals
-    // doubled prefix+node rows through the frozen slice() derivation;
-    // compaction settles tombstones physically on both sides;
-    // publishing is result-invisible — all four hash-match the
-    // untouched sim_ann_mrl oracle
-    "sim_ann_mrl_deleted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, delete(s, dir, mrl), querySet(emb),
-          k = 5, prefixDims = 32, shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_mrl_updated" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, upsert(s, dir, mrl), querySet(emb),
-          k = 5, prefixDims = 32, shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_mrl_compacted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, compact(s, dir, mrl), querySet(emb),
-          k = 5, prefixDims = 32, shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_mrl_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, pointer(s, dir, mrl), querySet(emb),
-          k = 5, prefixDims = 32, shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // ...the compaction-cadence monitor over the delete epoch's prefix
-    // side (one prefix row per vector — the binary family's mirror
-    // shape)
-    "sim_ann_mrl_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, mrl)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_prefix"))
-    }),
-
-    // MRL append maintenance: the dup batch admitted under the frozen
-    // slice() derivation — the probe must equal a fresh build over the
-    // union corpus, which is exactly what the union mirror computes
-    "sim_ann_mrl_appended" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeMrlIndex(s, append(s, dir, mrl), querySet(emb),
-          k = 5, prefixDims = 32, shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_mrl_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeMrlIndex(s,
-        append(s, dir, mrl), querySet(emb), k = recallK,
-        prefixDims = 32, shortlist = 100))
     }),
 
     // the ROW-pruned composition (VERDICT r18 #4): the coarse pass
@@ -659,7 +737,6 @@ object SimilarityQueries {
     // two axes (cell boundary + truncation), so it carries its own
     // oracle and recall audit
     "sim_ann_mrl_ivf" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeMrlIndexIvf(s, base(s, dir, mrl), querySet(emb),
           k = 5, prefixDims = 32, shortlist = 100, nProbe = 4)
@@ -673,7 +750,6 @@ object SimilarityQueries {
     // centered one fewer, and skewed cell sizes can't silently starve
     // coverage the way a fixed count does
     "sim_ann_mrl_ivf_adaptive" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeMrlIndexIvfAdaptive(s, base(s, dir, mrl),
           querySet(emb), k = 5, prefixDims = 32, shortlist = 200,
@@ -686,19 +762,11 @@ object SimilarityQueries {
     // 0.5@3 (fixed nProbe=2, the r19 suite's weakest quality number)
     // to 0.83@3 at sf0.01 / 0.9@3 at sf0.1, measured before gating
     "sim_ann_mrl_ivf_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.probeMrlIndexIvfAdaptive(s,
         base(s, dir, mrl), querySet(emb), k = recallK, prefixDims = 32,
         shortlist = 200, massTargetPpm = 400000L))
     }),
-
-    // the MRL family's monitor→retrain DECISION over the APPEND
-    // epoch's prefix-cell distribution — the same two integer-exact
-    // skew signals as the float/binary/PQ monitors, read from the
-    // partition column only
-    "sim_ann_mrl_retrain_check" -> ((s, dir) =>
-      VectorOps.mrlRetrainCheck(s, append(s, dir, mrl))),
 
     // CONTRASTIVE TRIPLET assembly — the training-data emission the
     // hard-negative mine exists for: rank-i exact positive paired with
@@ -707,7 +775,6 @@ object SimilarityQueries {
     // how much the positive out-scores the confusable negative, the
     // quantity a triplet loss trains on
     "sim_triplets" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val pos = VectorOps.bruteForceTopK(querySet(emb), emb, k = 3)
         .select(col("query_id"), col("rk"),
@@ -764,7 +831,6 @@ object SimilarityQueries {
     // dedup_threshold_sweep discipline: sweep the dial in one query);
     // each setting then reads only its probed cells' partitions.
     "sim_ann_ivf_probe_sweep" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val idx = base(s, dir, ivf)
       val cents = broadcast(s.table(s"${idx}_cents"))
@@ -850,7 +916,6 @@ object SimilarityQueries {
     // an all-integer dot product and nDCG one exact division by the
     // constant ideal
     "sim_eval_rank_quality" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val sys = VectorOps.binaryTopK(querySet(emb), emb, k = 10)
         .select(col("query_id"), col("neighbor_id"), col("rk").as("rk_sys"))
@@ -874,74 +939,10 @@ object SimilarityQueries {
         .orderBy(col("query_id"))
     }),
 
-    // binary lifecycle symmetry — the hamming-0 poison twin makes the
-    // delete gate the loudest in the family: a tombstone leak IS the
-    // rank-1 result. Update heals doubled sign masks by the frozen
-    // re-pack; compaction settles tombstones physically; all three
-    // hash-match the untouched IVF-binary oracle
-    "sim_ann_binary_deleted" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, delete(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_binary_updated" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, upsert(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_binary_compacted" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, compact(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // atomic pointer serving for the two r14 families — indirection is
-    // result-invisible, the probes share the untouched oracles
-    "sim_ann_binary_published" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, pointer(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_ivfpq_residual_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, pointer(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // ...and their compaction-cadence monitors through the shared
-    // verdict (poison/tombstone populations match the sibling epochs
-    // by construction, so the mirrors are shared too)
-    "sim_ann_binary_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, binary)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_lists"))
-    }),
-
-    "sim_ann_ivfpq_residual_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, ivfPqRes)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_codes"))
-    }),
-
     // the BQ + rescore serving shape: hamming shortlist-32 from the
     // 8-byte scan, floats fetched only for the survivors and re-scored
     // exactly — the quantization error refunded for 32 point reads
     "sim_ann_binary_rerank" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.binaryTopKRerank(querySet(emb), emb, k = 3, shortlist = 32)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -949,7 +950,6 @@ object SimilarityQueries {
     }),
 
     "sim_ann_binary_rerank_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.binaryTopKRerank(querySet(emb), emb,
         k = recallK, shortlist = 32))
@@ -968,73 +968,12 @@ object SimilarityQueries {
     }),
 
     "sim_ann_binary_indexed_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.probeIvfIndexBinary(s,
         base(s, dir, binary), querySet(emb), k = recallK, nProbe = 2))
     }),
 
-    // binary APPEND maintenance (VERDICT r14 #5): the dup batch
-    // admitted through the frozen quantizer's sign re-pack — the probe
-    // must equal a fresh frozen-quantizer build over the union corpus,
-    // which is exactly what the union mirror computes
-    "sim_ann_binary_appended" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, append(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_binary_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfIndexBinary(s,
-        append(s, dir, binary), querySet(emb), k = recallK,
-        nProbe = 2))
-    }),
-
-    // BINARY derivation: the float master's quantizer/assignment
-    // reused verbatim, payload sign-packed in place — must hash-match
-    // the directly-built binary index (same oracle, another plan),
-    // completing the derive symmetry (SQ8/IVF-PQ/binary)
-    "sim_ann_binary_derived" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, derive(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // the binary family's monitor→retrain DECISION (VERDICT r14 #2):
-    // list-size imbalance of the appended generation — the check is
-    // payload-agnostic (partition column only), so the binary appended
-    // epoch's frozen assignment shares the float family's mirror
-    "sim_ann_binary_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfRetrainCheck(s, append(s, dir, binary))),
-
-    // binary RETRAIN execution: fresh centroids AND fresh K over the
-    // union corpus, lists re-packed by the family's own sign encode —
-    // the probe must equal an in-memory pass whose quantizer trained
-    // on the union (the mirror trains/assigns over `corpus`)
-    "sim_ann_binary_retrained" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexBinary(s, retrain(s, dir, binary),
-          querySet(emb), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_binary_retrained_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfIndexBinary(s,
-        retrain(s, dir, binary), querySet(emb), k = recallK,
-        nProbe = 2))
-    }),
-
     "sim_ann_lsh" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.lshTopK(querySet(emb), emb, k = 3, bits = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -1075,7 +1014,6 @@ object SimilarityQueries {
     // IVF-SQ8: float coarse quantizer, int8 inverted lists (4× less
     // probe bandwidth), exact-integer candidate scoring
     "sim_ann_ivf_sq8" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.ivfTopKSq8With(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 3, nProbe = 4)
@@ -1086,7 +1024,6 @@ object SimilarityQueries {
     // SQ8's recall audit: how much the int8 lists cost vs exact float
     // brute force (same shared recall tail as the other ANN paths)
     "sim_ann_ivf_sq8_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.ivfTopKSq8With(
         s.table(s"${base(s, dir, ivf)}_cents"),
@@ -1101,7 +1038,6 @@ object SimilarityQueries {
     // warm cost); encode + scoring still run over the raw corpus,
     // keeping this the unpersisted form next to `sim_ann_pq_indexed`.
     "sim_ann_pq" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.pqTopKHoisted(s, base(s, dir, pq), querySet(emb), emb,
           k = 3)
@@ -1114,7 +1050,6 @@ object SimilarityQueries {
     // the 32×-compressed code rows + the KB codebooks. Must hash-match
     // sim_ann_pq exactly (same oracle SQL).
     "sim_ann_pq_indexed" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probePqIndex(s, base(s, dir, pq), querySet(emb), k = 3)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -1129,28 +1064,8 @@ object SimilarityQueries {
     // sees the cause). floor(1e6)-quantized per row before the integer
     // mean; one scan + KB broadcast; m rows out.
     "sim_pq_distortion" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       VectorOps.pqDistortion(s, base(s, dir, pq),
         Tables.embeddings(s, dir))
-    }),
-
-    // flat-PQ APPEND maintenance (r15 — the last family without a
-    // direct `_appended` gate): the dup batch admitted through the
-    // frozen codebooks; the probe must equal a frozen-codebook encode
-    // of the union corpus
-    "sim_ann_pq_appended" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, append(s, dir, pq), querySet(emb), k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_pq_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probePqIndex(s,
-        append(s, dir, pq), querySet(emb), k = recallK))
     }),
 
     // PQ's recall audit: what the 32× compression costs vs exact float
@@ -1158,74 +1073,16 @@ object SimilarityQueries {
     // audited through the SERVED index probe — the form a deployment
     // actually monitors
     "sim_ann_pq_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.probePqIndex(s, base(s, dir, pq), querySet(emb),
           k = recallK))
     }),
 
-    // PQ atomic pointer serving: probing through the published view
-    // must hash-match the direct probe (indirection is
-    // result-invisible, one 1-row view read at plan time)
-    "sim_ann_pq_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, pointer(s, dir, pq), querySet(emb), k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // PQ DELETE maintenance: poison twins admitted then tombstoned —
-    // the probe anti-joins the (broadcast, mutation-sized) sidecar and
-    // must hash-match sim_ann_pq's oracle (a leak = ADC cosine 1.0 at
-    // rank 1)
-    "sim_ann_pq_deleted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, delete(s, dir, pq), querySet(emb), k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // PQ COMPACTION: the delete generation rewritten with its dead code
-    // rows settled physically (starts tombstone-free) — rows identical
-    // to the anti-joined probe, so the same oracle gates it
-    "sim_ann_pq_compacted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, compact(s, dir, pq), querySet(emb), k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // PQ UPDATE maintenance: the corrupt+heal epoch — ten corpus ids
-    // carried doubled code rows (mixed ADC folds) until the upsert
-    // generation dropped and re-encoded them; hash-matching the
-    // untouched oracle proves the heal is exact
-    "sim_ann_pq_updated" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probePqIndex(s, upsert(s, dir, pq), querySet(emb), k = 3)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // compaction-cadence DECISION for the PQ family (the shared
-    // Generations.compactionCheck monitor shape): the delete epoch's
-    // ten tombstones against the m-per-vector code rows — the FALSE
-    // branch of the verdict is what this gates
-    "sim_ann_pq_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, pq)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_codes"))
-    }),
-
     // ADC shortlist + exact re-rank — the production PQ serving shape:
     // codes rank the whole corpus, floats are read only for the
     // per-query shortlist survivors (point lookups, not a scan)
     "sim_ann_pq_rerank" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probePqIndexRerank(s, base(s, dir, pq), querySet(emb),
           emb, k = 3, shortlist = 32)
@@ -1236,7 +1093,6 @@ object SimilarityQueries {
     // the rerank form's recall audit: bounded by "true neighbor in the
     // ADC top-32", not "in the ADC top-3" — what the shortlist buys
     "sim_ann_pq_rerank_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.probePqIndexRerank(s, base(s, dir, pq),
         querySet(emb), emb, k = recallK, shortlist = 32))
@@ -1244,13 +1100,11 @@ object SimilarityQueries {
 
     // how much ranking the quantization costs vs exact float cosine
     "sim_quantized_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.quantizedTopK(querySet(emb), emb, k = recallK))
     }),
 
     "sim_cosine_neardup" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       VectorOps.cosineNearDupPairs(dupVectors(Tables.embeddings(s, dir)),
           threshold = 0.995, bucketCol = "label")
         .orderBy(col("id_a"), col("id_b"))
@@ -1265,7 +1119,6 @@ object SimilarityQueries {
     // centroids over the originals, so the per-run cost is one
     // broadcast-assign + in-cell pairing, zero training jobs
     "dedup_semantic" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val cents = s.table(base(s, dir, ivf) + "_cents")
       VectorOps.semanticDedupFrozen(dupVectors(Tables.embeddings(s, dir)),
           cents, threshold = 0.995)
@@ -1278,7 +1131,6 @@ object SimilarityQueries {
     // broadcasts; IncrementalCosineSpec asserts zero exchanges in the
     // operator plan)
     "sim_cosine_incremental" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val all = dupVectors(Tables.embeddings(s, dir))
       VectorOps.cosineIncrementalPairs(
           all.filter(col("vec_id") < 100000),
@@ -1294,7 +1146,6 @@ object SimilarityQueries {
     // oracle mirrors the identical deterministic iterations and the K
     // derivation via centTrainSql(ivfKSql).
     "sim_ann_ivf" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.ivfTopKWith(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 3, nProbe = 4)
@@ -1309,7 +1160,6 @@ object SimilarityQueries {
     // plan as sim_ann_ivf with the band filter between scoring and
     // ranking; under-filled queries are honest, never padded
     "sim_hard_negatives" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.ivfHardNegativesWith(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = 5, nProbe = 4,
@@ -1325,63 +1175,9 @@ object SimilarityQueries {
     // partition pruning — IvfIndexSpec asserts the plan + files-read).
     // Must hash-match sim_ann_ivf exactly (same oracle SQL).
     "sim_ann_ivf_indexed" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeIvfIndex(s, base(s, dir, ivf), querySet(emb),
           k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // IVF DELETE maintenance: poison twins of the query vectors were
-    // admitted (frozen-quantizer append) then tombstoned — the probe
-    // must hash-match sim_ann_ivf's oracle (a leak would surface them
-    // as cosine-1.0 rank-1 neighbors). The anti-join runs over the
-    // nProbe pruned lists only; the delete itself never touches them.
-    "sim_ann_ivf_deleted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, delete(s, dir, ivf), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // IVF UPDATE maintenance: ten corpus ids carried doubled rows (true
-    // + poison query-copies — what naive re-ingestion produces); the
-    // upserted generation dropped BOTH and re-admitted the true vectors
-    // through the frozen quantizer. Must hash-match sim_ann_ivf's
-    // oracle — a stale-row leak is a cosine-1.0 rank-1 phantom.
-    "sim_ann_ivf_updated" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, upsert(s, dir, ivf), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // POINTER-view serving (Generations.publishPointer — the vector
-    // family's atomic publish): the probe addresses ONE stable catalog
-    // name, dereferences it to the serving generation at plan time,
-    // and must hash-match sim_ann_ivf_indexed exactly — cents, lists,
-    // and tombstones can never mix generations, and the DPP-pruned
-    // probe plan is unchanged (PointerServeSpec pins both).
-    "sim_ann_ivf_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, pointer(s, dir, ivf), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // ...and the SQ8 generation through the SAME mechanism (the
-    // pointer names a generation, not a payload layout)
-    "sim_ann_ivf_sq8_published" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, pointer(s, dir, sq8),
-          querySet(emb), k = 3, nProbe = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
         .orderBy(col("query_id"), col("rk"))
     }),
@@ -1415,7 +1211,6 @@ object SimilarityQueries {
     // one; auditing vs the unfiltered truth would count forbidden
     // neighbors as misses)
     "sim_ann_ivf_filtered_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       filteredRecallAudit(emb,
         VectorOps.probeIvfIndexFiltered(s, base(s, dir, ivf),
@@ -1435,170 +1230,6 @@ object SimilarityQueries {
         .orderBy(col("list_id"))
     }),
 
-    // index lifecycle DECISION: the monitor→retrain edge. The appended
-    // generation's list-size distribution reduced to ONE integer-exact
-    // imbalance verdict — has frozen-quantizer drift concentrated the
-    // corpus enough (hottest list vs mean, hottest list vs total) that
-    // the next epoch should retrain instead of append again? Same
-    // near-metadata scan as sim_ann_ivf_stats (partition column only);
-    // gated against the shared assignment CTEs over the union corpus.
-    "sim_ann_ivf_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfRetrainCheck(s, append(s, dir, ivf))),
-
-    // the composite's drift monitor: same statistics over the codes
-    // table (m rows per vector — distinct-id list sizes), same
-    // thresholds; the appended epoch's frozen assignment makes its
-    // verdict identical to the float family's, so they share a mirror
-    "sim_ann_ivfpq_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfPqRetrainCheck(s, append(s, dir, ivfPq))),
-
-    // compaction-cadence DECISION for the vector family
-    // (Generations.compactionCheck, one monitor shape across all three
-    // families): the DELETE epoch's ten poison tombstones against the
-    // full lists — ~1‰, under the 50‰ threshold, so `compact` must NOT
-    // fire (the false branch of the verdict is gated here)
-    "sim_ann_ivf_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, ivf)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_lists"))
-    }),
-
-    // ...and the SQ8 generation's verdict through the SAME monitor —
-    // its delete epoch carries the identical poison/tombstone
-    // population by construction, so the two share one mirror
-    // (completing the r14 SQ8 lifecycle symmetry's monitor half)
-    "sim_ann_ivf_sq8_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, sq8)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_lists"))
-    }),
-
-    // index MAINTENANCE: a batch appended to the persisted index via
-    // the FROZEN coarse quantizer (the between-epochs operation — the
-    // already-indexed corpus is never read or rewritten); the probe
-    // must equal probing the union corpus against the original
-    // centroids, which is exactly what the oracle computes
-    "sim_ann_ivf_appended" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, append(s, dir, ivf), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // index COMPACTION: the appended generation rewritten one-file-per-
-    // list (appends leave a file group per batch per touched partition;
-    // compaction bounds per-probe file opens and small-file count) —
-    // rows identical, so the probe must hash-match the appended query
-    "sim_ann_ivf_compacted" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, compact(s, dir, ivf), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // SQ8 DERIVATION: the float master's quantizer/assignment reused
-    // verbatim, payload int8-quantized in place — the post-retrain step
-    // that regains the compact serving copy without a Lloyd pass. Must
-    // hash-match the in-memory SQ8 pass (and hence the directly-written
-    // SQ8 index): same oracle, another plan.
-    "sim_ann_ivf_sq8_derived" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, derive(s, dir, sq8), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // index RETRAIN execution: the operation the retrain_check verdict
-    // triggers — a new generation trained over the grown corpus (read
-    // back from the appended index's lists), fresh centroids AND fresh
-    // K = max(4, ⌊√n⌋) over the union. The probe must equal an
-    // in-memory IVF pass whose quantizer was trained on the union
-    // corpus — which is exactly what the oracle computes (train/assign
-    // over `corpus`, not `embeddings`).
-    "sim_ann_ivf_retrained" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndex(s, retrain(s, dir, ivf), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // the SQ8 family's monitor→retrain DECISION (VERDICT r14 #2): the
-    // check reads the partition column only, so the SQ8 appended
-    // epoch's frozen float assignment shares the float family's mirror
-    "sim_ann_ivf_sq8_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfRetrainCheck(s, append(s, dir, sq8))),
-
-    // SQ8 RETRAIN execution: codes are lossy, so the requantization
-    // epoch reads the float corpus from the LAKE (not the lists),
-    // retrains with fresh K, and re-encodes through the family's own
-    // int8 quantization — must equal an in-memory SQ8 pass whose
-    // quantizer trained on the union corpus
-    "sim_ann_ivf_sq8_retrained" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, retrain(s, dir, sq8),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_ivf_sq8_retrained_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfIndexSq8(s,
-        retrain(s, dir, sq8), querySet(emb), k = recallK,
-        nProbe = 2))
-    }),
-
-    // SQ8 DELETE maintenance: quantized poison twins admitted through
-    // the frozen quantizer then tombstoned — the id-keyed tombstone
-    // never looks at the payload, so the SQ8 probe must hash-match
-    // sim_ann_ivf_sq8's oracle (a leak is a near-max-score rank-1
-    // neighbor). Anti-join after list pruning, like the float family.
-    "sim_ann_ivf_sq8_deleted" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, delete(s, dir, sq8), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // SQ8 UPDATE maintenance: ten corpus ids doubled (true + poison
-    // codes, possibly in the SAME list), healed by the SQ8 upsert's
-    // drop + frozen-quantizer RE-ENCODE — the healed rows are
-    // bit-identical to a fresh SQ8 build's, so the probe hash-matches
-    // sim_ann_ivf_sq8's oracle
-    "sim_ann_ivf_sq8_updated" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, upsert(s, dir, sq8), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // SQ8 COMPACTION: the appended SQ8 generation rewritten one-file-
-    // per-list — rows identical, shares the SQ8 append oracle
-    "sim_ann_ivf_sq8_compacted" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, compact(s, dir, sq8), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // the SQ8 layout's append maintenance — int8 codes into the frozen
-    // quantizer's list partitions
-    "sim_ann_ivf_sq8_appended" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfIndexSq8(s, append(s, dir, sq8), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
     // IVF-PQ: the coarse quantizer's nProbe/K list cut COMPOUNDED with
     // PQ's 32× code compression — the billion-scale composite layout
     // (FAISS IndexIVFPQ, by_residual=false). Scores are bit-identical
@@ -1607,7 +1238,6 @@ object SimilarityQueries {
     // assignment + encode + fold still run over the raw corpus,
     // keeping this the unpersisted form next to `sim_ann_ivfpq_indexed`.
     "sim_ann_ivfpq" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.ivfPqTopKHoisted(s, base(s, dir, ivfPq), querySet(emb),
           emb, k = 3, nProbe = 4)
@@ -1620,7 +1250,6 @@ object SimilarityQueries {
     // lists' code partitions (DPP — IvfPqSpec asserts files-read) and
     // must hash-match sim_ann_ivfpq exactly (same oracle SQL)
     "sim_ann_ivfpq_indexed" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeIvfPqIndex(s, base(s, dir, ivfPq), querySet(emb),
           k = 3, nProbe = 4)
@@ -1628,43 +1257,11 @@ object SimilarityQueries {
         .orderBy(col("query_id"), col("rk"))
     }),
 
-    // append maintenance under BOTH frozen quantizers: the batch routes
-    // to its lists and encodes against the epoch codebooks; the probe
-    // must equal a fresh frozen-quantizer build over the union corpus
-    "sim_ann_ivfpq_appended" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, append(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // appended-generation recall for the two compressed families that
-    // still lacked it (r15 — every family's grown generation now
-    // carries the drift-quality audit the retrain comparison needs)
-    "sim_ann_ivfpq_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfPqIndex(s,
-        append(s, dir, ivfPq), querySet(emb), k = recallK,
-        nProbe = 2))
-    }),
-
-    "sim_ann_ivf_sq8_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfIndexSq8(s,
-        append(s, dir, sq8), querySet(emb), k = recallK,
-        nProbe = 2))
-    }),
-
     // the composite's recall audit (every approximate path carries
     // one), through the SERVED probe at nProbe=2 — what the two stacked
     // approximations (list cut × code quantization) cost vs exact
     // brute force
     "sim_ann_ivfpq_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.probeIvfPqIndex(s, base(s, dir, ivfPq), querySet(emb),
@@ -1675,7 +1272,6 @@ object SimilarityQueries {
     // code rank → EXACT float re-rank of the per-query shortlist-32
     // survivors (point reads, never a scan)
     "sim_ann_ivfpq_rerank" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeIvfPqIndexRerank(s, base(s, dir, ivfPq), querySet(emb),
           emb, k = 3, shortlist = 32, nProbe = 4)
@@ -1686,72 +1282,10 @@ object SimilarityQueries {
     // its recall audit at nProbe=2: what the two pruning layers
     // (list cut × ADC shortlist) cost once ranking precision is exact
     "sim_ann_ivfpq_rerank_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.probeIvfPqIndexRerank(s, base(s, dir, ivfPq),
           querySet(emb), emb, k = recallK, shortlist = 32, nProbe = 2))
-    }),
-
-    // flat-to-compressed migration: the float IVF master's quantizer
-    // and assignment re-used verbatim, lists PQ-encoded in place — the
-    // derived composite must hash-match the fresh-build oracle (no
-    // Lloyd pass ran for the coarse side, yet the result is identical)
-    "sim_ann_ivfpq_derived" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, derive(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // the composite's requantization epoch: both quantizers retrain
-    // over the union corpus (coarse K re-derived as √N), and the
-    // probe must equal a fresh build over it — the drift remedy the
-    // frozen-quantizer append defers to
-    "sim_ann_ivfpq_retrained" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, retrain(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // the retrained generation's recall vs union-corpus truth —
-    // comparing with sim_ann_ivfpq_recall (frozen) quantifies what a
-    // requantization buys, the quality half of the drift story
-    "sim_ann_ivfpq_retrained_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb),
-        VectorOps.probeIvfPqIndex(s, retrain(s, dir, ivfPq),
-          querySet(emb), k = recallK, nProbe = 2))
-    }),
-
-    // IVF-PQ DELETE maintenance: poison twins admitted under both
-    // frozen quantizers, then tombstoned — the anti-join runs AFTER
-    // list pruning, and the probe must hash-match sim_ann_ivfpq's
-    // oracle (a leak = ADC-cosine-1.0 at rank 1)
-    "sim_ann_ivfpq_deleted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, delete(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // compaction settles the delete epoch's tombstones physically and
-    // collapses each list's file groups — result-invisible
-    "sim_ann_ivfpq_compacted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, compact(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
     }),
 
     // RESIDUAL encoding (by_residual=true): the m codes quantize each
@@ -1761,7 +1295,6 @@ object SimilarityQueries {
     // audit quantifies the gain vs the non-residual layout on the same
     // corpus.
     "sim_ann_ivfpq_residual" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeIvfPqResidualIndex(s, base(s, dir, ivfPqRes),
           querySet(emb), k = 3, nProbe = 4)
@@ -1770,107 +1303,10 @@ object SimilarityQueries {
     }),
 
     "sim_ann_ivfpq_residual_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.probeIvfPqResidualIndex(s, base(s, dir, ivfPqRes),
           querySet(emb), k = recallK, nProbe = 2))
-    }),
-
-    // residual lifecycle symmetry — every encoding family carries the
-    // full mutation trio: DELETE (residual-encoded poison twins
-    // tombstoned — a leak is a cosine-1.0 rank-1 phantom through the
-    // residual ADC), UPDATE (doubled ids mix their folds until the
-    // residual upsert drops + re-encodes), COMPACTION (tombstones
-    // settle physically, result-invisible); all three hash-match the
-    // ONE untouched residual oracle
-    "sim_ann_ivfpq_residual_deleted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, delete(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_ivfpq_residual_updated" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, upsert(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_ivfpq_residual_compacted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, compact(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // RESIDUAL derivation: master quantizer + stored assignment
-    // verbatim, codebooks trained on residuals, codes encoded in place
-    // — must hash-match the directly-built residual index (same
-    // oracle, another plan); derive symmetry now covers all four
-    // compressed families
-    "sim_ann_ivfpq_residual_derived" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, derive(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // residual APPEND maintenance: the dup batch admitted under BOTH
-    // frozen quantizers (coarse assignment + residual encode against
-    // the epoch codebooks) — the probe must equal a fresh frozen-
-    // quantizer build over the union corpus (the union mirror)
-    "sim_ann_ivfpq_residual_appended" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, append(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_ivfpq_residual_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfPqResidualIndex(s,
-        append(s, dir, ivfPqRes), querySet(emb), k = recallK,
-        nProbe = 2))
-    }),
-
-    // the residual family's monitor→retrain DECISION (VERDICT r14 #2):
-    // distinct-id list sizes over the appended generation's codes —
-    // frozen assignment, so it shares the float family's mirror
-    "sim_ann_ivfpq_residual_retrain_check" -> ((s, dir) =>
-      VectorOps.ivfPqRetrainCheck(s, append(s, dir, ivfPqRes))),
-
-    // residual RETRAIN execution: BOTH quantizers retrain over the
-    // lake's union corpus — fresh coarse centroids (new K) and fresh
-    // codebooks over residuals against those NEW centroids; the probe
-    // must equal an in-memory residual pass trained on the union
-    "sim_ann_ivfpq_residual_retrained" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqResidualIndex(s, retrain(s, dir, ivfPqRes),
-          querySet(emb), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "sim_ann_ivfpq_residual_retrained_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), VectorOps.probeIvfPqResidualIndex(s,
-        retrain(s, dir, ivfPqRes), querySet(emb), k = recallK,
-        nProbe = 2))
     }),
 
     // the residual family's production serving composition: residual
@@ -1878,7 +1314,6 @@ object SimilarityQueries {
     // exactly — recall then bounded by "truth in the residual-ADC
     // top-32", audited below
     "sim_ann_ivfpq_residual_rerank" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.probeIvfPqResidualIndexRerank(s,
           base(s, dir, ivfPqRes), querySet(emb), emb, k = 3,
@@ -1888,7 +1323,6 @@ object SimilarityQueries {
     }),
 
     "sim_ann_ivfpq_residual_rerank_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.probeIvfPqResidualIndexRerank(s,
@@ -1896,43 +1330,11 @@ object SimilarityQueries {
           k = recallK, shortlist = 32, nProbe = 2))
     }),
 
-    // UPDATE: the corrupt-then-heal upsert gate — doubled ids MIX their
-    // ADC folds until the upsert generation drops + re-encodes them
-    "sim_ann_ivfpq_updated" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, upsert(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // atomic pointer serving: cents + codebooks + codes resolve from
-    // the SAME promoted generation; indirection is result-invisible
-    "sim_ann_ivfpq_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      VectorOps.probeIvfPqIndex(s, pointer(s, dir, ivfPq), querySet(emb),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // the shared compaction-cadence monitor over the delete epoch's
-    // codes: (corpus + 10 poison) × m rows, 10 tombstoned ids — ~1‰,
-    // the verdict must NOT fire
-    "sim_ann_ivfpq_compaction_check" -> ((s, dir) => {
-      val gen = delete(s, dir, ivfPq)
-      graft.operators.Generations.compactionCheck(s, gen,
-        s.table(s"${gen}_codes"))
-    }),
-
     // weighted score-level fusion over the same two legs — the
     // magnitude-preserving alternative to RRF (min-max normalize each
     // leg's scores, 70/30 convex combination); the ANN leg's rounded
     // cosine quantizes to floor(1e6·cos) so both legs fuse as integers
     "hybrid_search_weighted" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val lex = graft.operators.SearchOps.searchBm25Any(
           s, TextQueries.searchIndexFor(s, dir),
@@ -1952,7 +1354,6 @@ object SimilarityQueries {
     // another's) before the 70/30 integer combination; 10 independent
     // k-row folds, the serving-batch shape
     "hybrid_search_weighted_batch" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val qids = querySet(emb).select(col("vec_id").as("query_id"))
       val lex = graft.operators.SearchOps.searchBm25Any(
@@ -1976,7 +1377,6 @@ object SimilarityQueries {
     // global sort. The fusion is partitioned exactly how a serving
     // batch would run it
     "hybrid_search_rrf_batch" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val qids = querySet(emb).select(col("vec_id").as("query_id"))
       val lex = graft.operators.SearchOps.searchBm25Any(
@@ -1998,7 +1398,6 @@ object SimilarityQueries {
     // Both legs are the indexes' own gated rankings; the fusion adds
     // one k-sized integer fold on top
     "hybrid_search_rrf" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val lex = graft.operators.SearchOps.searchBm25Any(
           s, TextQueries.searchIndexFor(s, dir),
@@ -2159,7 +1558,6 @@ object SimilarityQueries {
     // dots are the same exact integer sums, so dsq — and the gated
     // output — is bit-identical (41 s → 0.5 s warm; plans/r20).
     "sim_intrinsic_dim" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val q = Tables.embeddings(s, dir).select(col("vec_id"),
         expr("""transform(embedding,
           x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS INT))""").as("qe"))
@@ -2295,7 +1693,6 @@ object SimilarityQueries {
     // the indexed SQ8 probe's recall audit (every approximate path in
     // the repo carries one) — nProbe=2 like the other recall entries
     "sim_ann_ivf_sq8_indexed_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.probeIvfIndexSq8(s, base(s, dir, sq8),
         querySet(emb), k = recallK, nProbe = 2))
@@ -2304,37 +1701,10 @@ object SimilarityQueries {
     // same recall audit for the IVF path: nProbe=2 of ~√N lists, so the
     // per-query candidate cut (and its recall cost) is visible
     "sim_ann_ivf_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.ivfTopKWith(s.table(s"${base(s, dir, ivf)}_cents"),
           querySet(emb), emb, k = recallK, nProbe = 2))
-    }),
-
-    // the retrained generation is a NEW quantizer configuration (fresh
-    // centroids, larger K over the grown corpus) — every approximate
-    // path carries a recall audit, so this one does too: truth is
-    // brute force over the UNION corpus the retrained index serves
-    "sim_ann_ivf_retrained_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb),
-        VectorOps.probeIvfIndex(s, retrain(s, dir, ivf), querySet(emb),
-          k = recallK, nProbe = 2))
-    }),
-
-    // ...and the APPENDED generation's recall — the frozen quantizer
-    // serving the grown corpus. This is the quality half of the drift
-    // story the retrain verdict acts on: appends keep working, but
-    // recall against union-corpus truth is what degrades as the frozen
-    // centroids stop describing the data; comparing this audit with
-    // the retrained one quantifies what a retrain buys.
-    "sim_ann_ivf_appended_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb),
-        VectorOps.probeIvfIndex(s, append(s, dir, ivf), querySet(emb),
-          k = recallK, nProbe = 2))
     }),
 
     // multi-probe LSH: the query probes its own bucket plus the 4
@@ -2342,7 +1712,6 @@ object SimilarityQueries {
     // instead of 1/16, the standard recall-for-probes trade (vs adding
     // hash tables). Fan-out stays on the broadcast query side
     "sim_ann_lsh_multiprobe" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       VectorOps.lshMultiProbeTopK(querySet(emb), emb, k = 3, bits = 4)
         .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
@@ -2352,7 +1721,6 @@ object SimilarityQueries {
     // ...and its recall audit next to the single-probe one — the pair
     // makes the probes-for-recall trade measurable
     "sim_ann_lsh_multiprobe_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb,
         VectorOps.lshMultiProbeTopK(querySet(emb), emb, k = recallK, bits = 4))
@@ -2362,10 +1730,10 @@ object SimilarityQueries {
     // top-k with the exact brute-force top-k — makes the recall<1 trade
     // measurable instead of asserted. Same k on both sides.
     "sim_ann_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       recallAudit(emb, VectorOps.lshTopK(querySet(emb), emb, k = recallK, bits = 4))
-    }))
+    })) ++ servedFamilies.flatMap(lifecycleEntries).map {
+      case (name, query, _) => name -> query }
 
   /** DuckDB mirror of [[recallAudit]]: shared brute/hits/recall CTE tail
     * around a path-specific candidate ranking. `preCtes` must define `q`
@@ -2423,6 +1791,51 @@ object SimilarityQueries {
   private lazy val ivfOracleSql = ivfOracleOver("", "embeddings")
   private[graft] lazy val ivfAppendOracleSql =
     ivfOracleOver(dupVectorsSql + ",\n", "corpus")
+
+  /** The float IVF recall mirror over [[ivfOracleOver]]'s corpus and
+    * training relations: nProbe = 2 candidates vs the brute-force
+    * top-k over the same list corpus. */
+  private def ivfRecallOracleOver(pre: String, corpusRel: String,
+      trainRel: String, kSql: String): String = recallOracleSql(
+    preCtes =
+      s"""$pre${centTrainSql(kSql, 2, trainRel)},
+        |asg AS (
+        |  SELECT vec_id, embedding, cid, row_number() OVER
+        |    (PARTITION BY vec_id ORDER BY round(${cosSql("embedding", "cv")}, 6) DESC, cid) AS cr
+        |  FROM $corpusRel CROSS JOIN cents),
+        |lists AS (SELECT cid AS list_id, vec_id, embedding FROM asg WHERE cr = 1),
+        |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
+        |probes AS (
+        |  SELECT query_id, qv, cid AS list_id FROM (
+        |    SELECT query_id, qv, cid, row_number() OVER
+        |      (PARTITION BY query_id ORDER BY round(${cosSql("qv", "cv")}, 6) DESC, cid) AS cr
+        |    FROM q CROSS JOIN cents) pq WHERE cr <= 2)""".stripMargin,
+    annSelect =
+      s"""SELECT query_id, l.vec_id AS neighbor_id, row_number() OVER
+        |      (PARTITION BY query_id ORDER BY
+        |        round(${cosSql("qv", "l.embedding")}, 6) DESC, l.vec_id) AS rk
+        |    FROM lists l JOIN probes p ON l.list_id = p.list_id AND l.vec_id <> p.query_id""".stripMargin,
+    bruteRel = corpusRel)
+
+  /** Appended-generation recall: the FROZEN quantizer (trained on the
+    * originals), lists and brute truth over the union corpus. */
+  private[graft] lazy val ivfAppendRecallOracleSql = ivfRecallOracleOver(
+    dupVectorsSql + ",\n", "corpus", "embeddings", ivfKSql)
+
+  /** Compaction-verdict mirror over the delete epoch: the corpus plus
+    * the ten poison twins, `rowsPerVector` index rows each (one list or
+    * prefix row, or m code rows); the tombstones are the twins — ~1‰,
+    * so the verdict's FALSE branch is what this gates. */
+  private def compactionCheckOracleSql(rowsPerVector: Int): String = {
+    val rows = if (rowsPerVector == 1) "n + t" else s"(n + t) * $rowsPerVector"
+    s"""WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
+      |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
+      |  WHERE vec_id < 10)
+      |SELECT $rows AS n_rows, t AS n_tombstoned,
+      |  t * 1000 // ($rows) AS tombstone_frac_x1000,
+      |  (t * 1000 // ($rows) >= 50 OR t >= 1000000) AS compact
+      |FROM e, q""".stripMargin
+  }
 
   /** The SQ8 twin of [[ivfOracleOver]]: one mirror for the in-memory
     * pass, the persisted index, AND the append-maintenance query —
@@ -3123,7 +2536,26 @@ object SimilarityQueries {
       |  SELECT vec_id, cid, row_number() OVER
       |    (PARTITION BY vec_id ORDER BY round(${cosSql("embedding", "cv")}, 6) DESC, cid) AS cr
       |  FROM corpus CROSS JOIN cents),
-      |sizes AS (SELECT cid, count(*) AS n FROM casg WHERE cr = 1 GROUP BY 1),
+      |${retrainVerdictSql("casg")}""".stripMargin
+
+  /** MRL's verdict: prefix cells frozen from the build-time prefixes,
+    * the union corpus' prefixes assigned. */
+  private lazy val mrlRetrainCheckOracleSql =
+    s"""WITH $dupVectorsSql,
+      |prefixes AS (SELECT vec_id, embedding[1:32] AS embedding FROM embeddings),
+      |${centTrainSql(ivfKSql, 2, "prefixes", dim = 32)},
+      |cp AS (SELECT vec_id, embedding[1:32] AS p FROM corpus),
+      |pasg AS (
+      |  SELECT vec_id, cid, row_number() OVER
+      |    (PARTITION BY vec_id ORDER BY round(${cosSql("p", "cv")}, 6) DESC, cid) AS cr
+      |  FROM cp CROSS JOIN cents),
+      |${retrainVerdictSql("pasg")}""".stripMargin
+
+  /** The retrain verdict's integer-exact arithmetic over the list sizes
+    * of assignment CTE `asg` (`cid`, best-first `cr`) — the mean-first
+    * floored signals of [[VectorOps.ivfRetrainCheck]]. */
+  private def retrainVerdictSql(asg: String): String =
+    s"""sizes AS (SELECT cid, count(*) AS n FROM $asg WHERE cr = 1 GROUP BY 1),
       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_lists,
       |    CAST(sum(n) AS BIGINT) AS total_vectors,
       |    CAST(max(n) AS BIGINT) AS max_list FROM sizes),
@@ -3413,7 +2845,7 @@ object SimilarityQueries {
       |  WHERE cum_before * 1000000 < $targetPpm * n_total),
       |${mrlIvfTailCtes(shortlist)}""".stripMargin
 
-  def oracle: Map[String, String] = Map(
+  def oracle: Map[String, String] = Map[String, String](
     "sim_topk_brute" ->
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
         |scored AS (
@@ -3429,23 +2861,6 @@ object SimilarityQueries {
     "sim_ann_mrl_recall" -> recallOracleSql(mrlCtes,
       s"SELECT query_id, neighbor_id, rk FROM mrl"),
     "sim_ann_mrl_indexed" -> mrlOracleSql,
-    // the four result-invisible mutation epochs share the untouched
-    // oracle (a leak/unhealed double/lost row is a hash mismatch)
-    "sim_ann_mrl_deleted" -> mrlOracleSql,
-    "sim_ann_mrl_updated" -> mrlOracleSql,
-    "sim_ann_mrl_compacted" -> mrlOracleSql,
-    "sim_ann_mrl_published" -> mrlOracleSql,
-    // one prefix row per vector → the binary family's monitor mirror
-    "sim_ann_mrl_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT n + t AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // (n + t) AS tombstone_frac_x1000,
-        |  (t * 1000 // (n + t) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
-    "sim_ann_mrl_appended" -> mrlAppendOracleSql,
-    "sim_ann_mrl_appended_recall" -> mrlAppendRecallOracleSql,
     "sim_ann_mrl_ivf" ->
       s"""WITH ${mrlIvfCtes(4)}
         |SELECT query_id, neighbor_id, cos_sim, rk FROM mrl WHERE rk <= 5
@@ -3457,29 +2872,6 @@ object SimilarityQueries {
     "sim_ann_mrl_ivf_recall" -> recallOracleSql(
       mrlIvfAdaptiveCtes(400000L, 200),
       "SELECT query_id, neighbor_id, rk FROM mrl"),
-    // prefix-cell skew of the append epoch: cells frozen from the
-    // build-time prefixes, the union corpus' prefixes assigned, then
-    // the shared integer-exact verdict arithmetic
-    "sim_ann_mrl_retrain_check" ->
-      s"""WITH $dupVectorsSql,
-        |prefixes AS (SELECT vec_id, embedding[1:32] AS embedding FROM embeddings),
-        |${centTrainSql(ivfKSql, 2, "prefixes", dim = 32)},
-        |cp AS (SELECT vec_id, embedding[1:32] AS p FROM corpus),
-        |pasg AS (
-        |  SELECT vec_id, cid, row_number() OVER
-        |    (PARTITION BY vec_id ORDER BY round(${cosSql("p", "cv")}, 6) DESC, cid) AS cr
-        |  FROM cp CROSS JOIN cents),
-        |sizes AS (SELECT cid, count(*) AS n FROM pasg WHERE cr = 1 GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_lists,
-        |    CAST(sum(n) AS BIGINT) AS total_vectors,
-        |    CAST(max(n) AS BIGINT) AS max_list FROM sizes),
-        |d AS (SELECT *, total_vectors // n_lists AS mean_list FROM tot),
-        |e AS (SELECT *, max_list * 1000 // mean_list AS max_over_mean_x1000,
-        |    max_list * 1000 // total_vectors AS top_frac_x1000 FROM d)
-        |SELECT n_lists, total_vectors, max_list, mean_list,
-        |  max_over_mean_x1000, top_frac_x1000,
-        |  (max_over_mean_x1000 >= 2000 OR top_frac_x1000 >= 200) AS retrain
-        |FROM e""".stripMargin,
     // triplets = the brute-force positive ranking joined rank-wise
     // with the hard-negative mirror (both CTE chains already gate
     // standalone — the join can't drift from its parents)
@@ -3621,8 +3013,6 @@ object SimilarityQueries {
         |SELECT s, count(*)::BIGINT AS n, CAST(sum(q) AS BIGINT) AS sum_e6,
         |  CAST(sum(q) AS BIGINT) // count(*) AS mse_e6
         |FROM dist GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sim_ann_pq_appended" -> pqAppendOracleSql,
-    "sim_ann_pq_appended_recall" -> pqAppendRecallOracleSql,
     "sim_ann_ivfpq" -> ivfPqOracleSql,
     "sim_ann_ivfpq_indexed" -> ivfPqOracleSql,
     "sim_ann_binary" -> binaryOracleSql,
@@ -3672,78 +3062,9 @@ object SimilarityQueries {
     "sim_ann_binary_rerank" -> binaryRerankOracleSql,
     "sim_ann_binary_rerank_recall" -> binaryRerankRecallOracleSql,
     "sim_ann_ivfpq_residual" -> ivfPqResidualOracleSql,
-    // deriving residual from the float master = the residual build by
-    // definition (same centroids, assignment, residuals, codebooks)
-    "sim_ann_ivfpq_residual_derived" -> ivfPqResidualOracleSql,
     "sim_ann_ivfpq_residual_recall" -> ivfPqResidualRecallOracleSql,
-    "sim_ann_ivfpq_residual_deleted" -> ivfPqResidualOracleSql,
-    "sim_ann_ivfpq_residual_updated" -> ivfPqResidualOracleSql,
-    "sim_ann_ivfpq_residual_compacted" -> ivfPqResidualOracleSql,
     "sim_ann_ivfpq_residual_rerank" -> ivfPqResidualRerankOracleSql,
     "sim_ann_ivfpq_residual_rerank_recall" -> ivfPqResidualRerankRecallOracleSql,
-    "sim_ann_ivfpq_appended" -> ivfPqAppendOracleSql,
-    "sim_ann_ivfpq_appended_recall" -> ivfPqAppendRecallOracleSql,
-    "sim_ann_ivf_sq8_appended_recall" -> recallOracleSql(
-      preCtes = ivfSq8RecallPre(dupVectorsSql + ",\n", "corpus"),
-      annSelect = ivfSq8RecallAnnSelect, bruteRel = "corpus"),
-    "sim_ann_ivfpq_retrained" -> ivfPqRetrainOracleSql,
-    "sim_ann_ivfpq_retrained_recall" -> ivfPqRetrainRecallOracleSql,
-    "sim_ann_ivfpq_derived" -> ivfPqOracleSql,
-    "sim_ann_ivfpq_deleted" -> ivfPqOracleSql,
-    "sim_ann_ivfpq_compacted" -> ivfPqOracleSql,
-    "sim_ann_ivfpq_updated" -> ivfPqOracleSql,
-    "sim_ann_ivfpq_published" -> ivfPqOracleSql,
-    // the delete epoch's codes = (corpus + 10 poison) × m=8 rows each;
-    // tombstoned = the 10 poison ids — ~1‰, the verdict must NOT fire
-    "sim_ann_ivfpq_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT (n + t) * 8 AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // ((n + t) * 8) AS tombstone_frac_x1000,
-        |  (t * 1000 // ((n + t) * 8) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
-    // the residual delete epoch's code/tombstone populations match the
-    // non-residual epoch's by construction — shared mirror
-    "sim_ann_ivfpq_residual_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT (n + t) * 8 AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // ((n + t) * 8) AS tombstone_frac_x1000,
-        |  (t * 1000 // ((n + t) * 8) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
-    // ...and the binary delete epoch matches the float family's
-    // (one list row per vector)
-    "sim_ann_binary_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT n + t AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // (n + t) AS tombstone_frac_x1000,
-        |  (t * 1000 // (n + t) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
-    "sim_ann_binary_deleted" -> ivfBinaryOracleSql,
-    "sim_ann_binary_updated" -> ivfBinaryOracleSql,
-    "sim_ann_binary_compacted" -> ivfBinaryOracleSql,
-    "sim_ann_binary_published" -> ivfBinaryOracleSql,
-    // deriving binary from the float master = the binary build by
-    // definition (same centroids, assignment, sign packing)
-    "sim_ann_binary_derived" -> ivfBinaryOracleSql,
-    // binary append maintenance (union corpus, frozen quantizer) and
-    // the retrain epoch (union corpus, retrained quantizer + fresh K)
-    "sim_ann_binary_appended" -> ivfBinaryAppendOracleSql,
-    "sim_ann_binary_appended_recall" -> ivfBinaryAppendRecallOracleSql,
-    "sim_ann_binary_retrained" -> ivfBinaryRetrainOracleSql,
-    "sim_ann_binary_retrained_recall" -> ivfBinaryRetrainRecallOracleSql,
-    // residual append maintenance + retrain epoch, same split
-    "sim_ann_ivfpq_residual_appended" -> ivfPqResidualAppendOracleSql,
-    "sim_ann_ivfpq_residual_appended_recall" ->
-      ivfPqResidualAppendRecallOracleSql,
-    "sim_ann_ivfpq_residual_retrained" -> ivfPqResidualRetrainOracleSql,
-    "sim_ann_ivfpq_residual_retrained_recall" ->
-      ivfPqResidualRetrainRecallOracleSql,
-    "sim_ann_ivfpq_residual_published" -> ivfPqResidualOracleSql,
     "sim_ann_ivfpq_recall" -> ivfPqRecallOracleSql,
     "sim_ann_ivfpq_rerank" -> ivfPqRerankOracleSql,
     "sim_ann_ivfpq_rerank_recall" -> ivfPqRerankRecallOracleSql,
@@ -3871,20 +3192,6 @@ object SimilarityQueries {
     "hybrid_search_rrf_batch" -> hybridRrfBatchOracleSql,
     "hybrid_search_weighted" -> hybridWeightedOracleSql,
     "hybrid_search_weighted_batch" -> hybridWeightedBatchOracleSql,
-    "sim_ann_pq_published" -> pqOracleSql,
-    "sim_ann_pq_deleted" -> pqOracleSql,
-    "sim_ann_pq_compacted" -> pqOracleSql,
-    "sim_ann_pq_updated" -> pqOracleSql,
-    // the delete epoch's codes = (corpus + 10 poison) × m=8 rows each;
-    // tombstoned = the 10 poison ids — ~1‰, the verdict must NOT fire
-    "sim_ann_pq_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT (n + t) * 8 AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // ((n + t) * 8) AS tombstone_frac_x1000,
-        |  (t * 1000 // ((n + t) * 8) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
     "sim_ann_pq_recall" -> pqRecallOracleSql,
     "sim_ann_pq_rerank" -> pqRerankOracleSql,
     "sim_ann_pq_rerank_recall" -> pqRerankRecallOracleSql,
@@ -4015,45 +3322,6 @@ object SimilarityQueries {
       s"""WITH $clusterAssignCtes
         |SELECT cid AS list_id, count(*) AS n_vectors FROM clusters
         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the retrain verdict over the APPENDED generation: assignment of
-    // compaction verdict mirror (vector form): lists = the full corpus
-    // + the ten poison twins; tombstoned = the twins — ~1‰, so the
-    // verdict's FALSE branch is what this gates
-    "sim_ann_ivf_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT n + t AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // (n + t) AS tombstone_frac_x1000,
-        |  (t * 1000 // (n + t) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
-    // the union corpus under centroids trained on the originals only
-    // (the frozen-quantizer contract), sizes aggregated to the same
-    // mean-first floored signals as VectorOps.ivfRetrainCheck
-    "sim_ann_ivf_sq8_compaction_check" ->
-      """WITH e AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-        |q AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings
-        |  WHERE vec_id < 10)
-        |SELECT n + t AS n_rows, t AS n_tombstoned,
-        |  t * 1000 // (n + t) AS tombstone_frac_x1000,
-        |  (t * 1000 // (n + t) >= 50 OR t >= 1000000) AS compact
-        |FROM e, q""".stripMargin,
-    "sim_ann_ivf_retrain_check" -> ivfRetrainCheckOracleSql,
-    "sim_ann_ivfpq_retrain_check" -> ivfRetrainCheckOracleSql,
-    // the three r15 retrain verdicts (VERDICT r14 #2): every appended
-    // epoch assigns through the SAME frozen float quantizer, so all
-    // five families' monitors share one mirror
-    "sim_ann_ivf_sq8_retrain_check" -> ivfRetrainCheckOracleSql,
-    "sim_ann_binary_retrain_check" -> ivfRetrainCheckOracleSql,
-    "sim_ann_ivfpq_residual_retrain_check" -> ivfRetrainCheckOracleSql,
-    // SQ8 retrain: the family's own mirror with train/assign/K over
-    // the union corpus — what the requantization epoch refreshes
-    "sim_ann_ivf_sq8_retrained" ->
-      ivfSq8OracleOver(dupVectorsSql + ",\n", "corpus", "corpus", corpusKSql),
-    "sim_ann_ivf_sq8_retrained_recall" -> recallOracleSql(
-      preCtes = ivfSq8RecallPre(dupVectorsSql + ",\n", "corpus", "corpus",
-        corpusKSql),
-      annSelect = ivfSq8RecallAnnSelect, bruteRel = "corpus"),
     "sim_cluster_assignments" ->
       s"""WITH $clusterAssignCtes
         |SELECT vec_id, cid AS cluster_id FROM clusters
@@ -4065,103 +3333,11 @@ object SimilarityQueries {
     // their in-memory passes (shared assignment/probe/rank code + the
     // same deterministic Lloyd training) — one oracle, two plans
     "sim_ann_ivf_indexed" -> ivfOracleSql,
-    // delete epoch = serving index + poison − poison: result-defined
-    // equal to the serving probe, same oracle, another plan
-    "sim_ann_ivf_deleted" -> ivfOracleSql,
-    // upsert epoch = serving index corrupted then healed: result-defined
-    // equal again — same oracle, another plan (stale leak = phantom
-    // cosine-1.0 neighbor = hash mismatch)
-    "sim_ann_ivf_updated" -> ivfOracleSql,
     "sim_ann_ivf_sq8_indexed" -> ivfSq8OracleSql,
-    // pointer-view serving is result-invisible by definition — the
-    // published probes share the direct-probe oracles verbatim
-    "sim_ann_ivf_published" -> ivfOracleSql,
-    "sim_ann_ivf_sq8_published" -> ivfSq8OracleSql,
-    // deriving SQ8 from the float master = the SQ8 build by definition
-    // (same centroids, assignment, quantization) — same oracle again
-    "sim_ann_ivf_sq8_derived" -> ivfSq8OracleSql,
-    // append maintenance: same builders over the union corpus with the
-    // quantizer still trained on the ORIGINAL embeddings only
-    "sim_ann_ivf_appended" -> ivfAppendOracleSql,
-    "sim_ann_ivf_compacted" -> ivfAppendOracleSql,
-    // retrain: same probe shape, but the quantizer is trained over the
-    // UNION corpus with K re-derived from its size — the two things
-    // retraining exists to refresh
-    "sim_ann_ivf_retrained" -> ivfOracleOver(dupVectorsSql + ",\n", "corpus",
-      trainRel = "corpus",
-      kSql = "(SELECT greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM corpus)"),
-    "sim_ann_ivf_sq8_appended" -> ivfSq8AppendOracleSql,
-    "sim_ann_ivf_sq8_deleted" -> ivfSq8OracleSql,
-    "sim_ann_ivf_sq8_updated" -> ivfSq8OracleSql,
-    "sim_ann_ivf_sq8_compacted" -> ivfSq8AppendOracleSql,
     "sim_ann_ivf_sq8_recall" -> ivfSq8RecallOracleSql,
     "sim_ann_ivf_sq8_indexed_recall" -> ivfSq8RecallOracleSql,
-    // retrained-generation recall: train/assign/probe AND the brute
-    // truth all over the union corpus, K re-derived from its size —
-    // the audit mirrors exactly what the retrained index serves
-    "sim_ann_ivf_retrained_recall" -> recallOracleSql(
-      preCtes =
-        s"""$dupVectorsSql,
-          |${centTrainSql("(SELECT greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM corpus)", 2, "corpus")},
-          |asg AS (
-          |  SELECT vec_id, embedding, cid, row_number() OVER
-          |    (PARTITION BY vec_id ORDER BY round(${cosSql("embedding", "cv")}, 6) DESC, cid) AS cr
-          |  FROM corpus CROSS JOIN cents),
-          |lists AS (SELECT cid AS list_id, vec_id, embedding FROM asg WHERE cr = 1),
-          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-          |probes AS (
-          |  SELECT query_id, qv, cid AS list_id FROM (
-          |    SELECT query_id, qv, cid, row_number() OVER
-          |      (PARTITION BY query_id ORDER BY round(${cosSql("qv", "cv")}, 6) DESC, cid) AS cr
-          |    FROM q CROSS JOIN cents) pq WHERE cr <= 2)""".stripMargin,
-      annSelect =
-        s"""SELECT query_id, l.vec_id AS neighbor_id, row_number() OVER
-          |      (PARTITION BY query_id ORDER BY
-          |        round(${cosSql("qv", "l.embedding")}, 6) DESC, l.vec_id) AS rk
-          |    FROM lists l JOIN probes p ON l.list_id = p.list_id AND l.vec_id <> p.query_id""".stripMargin,
-      bruteRel = "corpus"),
-    // appended-generation recall: FROZEN quantizer (trained on the
-    // originals), lists and brute truth over the union corpus
-    "sim_ann_ivf_appended_recall" -> recallOracleSql(
-      preCtes =
-        s"""$dupVectorsSql,
-          |${centTrainSql(ivfKSql, 2)},
-          |asg AS (
-          |  SELECT vec_id, embedding, cid, row_number() OVER
-          |    (PARTITION BY vec_id ORDER BY round(${cosSql("embedding", "cv")}, 6) DESC, cid) AS cr
-          |  FROM corpus CROSS JOIN cents),
-          |lists AS (SELECT cid AS list_id, vec_id, embedding FROM asg WHERE cr = 1),
-          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-          |probes AS (
-          |  SELECT query_id, qv, cid AS list_id FROM (
-          |    SELECT query_id, qv, cid, row_number() OVER
-          |      (PARTITION BY query_id ORDER BY round(${cosSql("qv", "cv")}, 6) DESC, cid) AS cr
-          |    FROM q CROSS JOIN cents) pq WHERE cr <= 2)""".stripMargin,
-      annSelect =
-        s"""SELECT query_id, l.vec_id AS neighbor_id, row_number() OVER
-          |      (PARTITION BY query_id ORDER BY
-          |        round(${cosSql("qv", "l.embedding")}, 6) DESC, l.vec_id) AS rk
-          |    FROM lists l JOIN probes p ON l.list_id = p.list_id AND l.vec_id <> p.query_id""".stripMargin,
-      bruteRel = "corpus"),
-    "sim_ann_ivf_recall" -> recallOracleSql(
-      preCtes =
-        s"""${centTrainSql(ivfKSql, 2)},
-          |asg AS (
-          |  SELECT vec_id, embedding, cid, row_number() OVER
-          |    (PARTITION BY vec_id ORDER BY round(${cosSql("embedding", "cv")}, 6) DESC, cid) AS cr
-          |  FROM embeddings CROSS JOIN cents),
-          |lists AS (SELECT cid AS list_id, vec_id, embedding FROM asg WHERE cr = 1),
-          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-          |probes AS (
-          |  SELECT query_id, qv, cid AS list_id FROM (
-          |    SELECT query_id, qv, cid, row_number() OVER
-          |      (PARTITION BY query_id ORDER BY round(${cosSql("qv", "cv")}, 6) DESC, cid) AS cr
-          |    FROM q CROSS JOIN cents) pq WHERE cr <= 2)""".stripMargin,
-      annSelect =
-        s"""SELECT query_id, l.vec_id AS neighbor_id, row_number() OVER
-          |      (PARTITION BY query_id ORDER BY
-          |        round(${cosSql("qv", "l.embedding")}, 6) DESC, l.vec_id) AS rk
-          |    FROM lists l JOIN probes p ON l.list_id = p.list_id AND l.vec_id <> p.query_id""".stripMargin),
+    "sim_ann_ivf_recall" ->
+      ivfRecallOracleOver("", "embeddings", "embeddings", ivfKSql),
     "sim_ann_lsh_multiprobe" ->
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv,
         |    ${bucketSql("embedding")} AS qbucket FROM embeddings WHERE vec_id < 10),
@@ -4198,5 +3374,7 @@ object SimilarityQueries {
         s"""SELECT query_id, c.vec_id AS neighbor_id, row_number() OVER
           |      (PARTITION BY query_id ORDER BY
           |        round(${cosSql("qv", "c.embedding")}, 6) DESC, c.vec_id) AS rk
-          |    FROM c JOIN q ON c.bucket = q.qbucket AND c.vec_id <> q.query_id""".stripMargin))
+          |    FROM c JOIN q ON c.bucket = q.qbucket AND c.vec_id <> q.query_id""".stripMargin)) ++
+    servedFamilies.flatMap(lifecycleEntries).map {
+      case (name, _, sql) => name -> sql }
 }

@@ -25,12 +25,20 @@ object SparkEntry {
     CdcOps.toWire(events, "graft", "tpch")
   }
 
+  /** Every module's entries, each registering the native functions on
+    * its session before it builds (idempotent) — a caller's session
+    * needs no set-up, and no entry registers on its own. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CdcQueries.queries ++ RelationalQueries.queries ++
+    (CdcQueries.queries ++ RelationalQueries.queries ++
       TextQueries.queries ++ SimilarityQueries.queries ++
       EventQueries.queries ++ MultimodalQueries.queries ++
       PipelineQueries.queries ++ StreamingQueries.queries ++
-      GraphQueries.queries
+      GraphQueries.queries).map { case (name, query) =>
+      name -> ((s: SparkSession, dir: String) => {
+        graft.functions.GraftFunctions.register(s)
+        query(s, dir)
+      })
+    }
 
   def oracleSql: Map[String, String] =
     CdcQueries.oracle ++ RelationalQueries.oracle ++

@@ -558,7 +558,6 @@ object StreamingQueries {
     // batch capstone's oracle verbatim (StreamIngestSpec additionally
     // pins the equality on out-of-order replays).
     "stream_ingest" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // 2 files/trigger (the stream_stream_join lesson): decisions are
       // per-doc against frozen state, so the drained union is
       // decomposition-independent — 2 micro-batches still exercise the
@@ -600,7 +599,6 @@ object StreamingQueries {
     // whole costs KBs). Drained snapshot ≡ the batch rollup, so the
     // entry is fully DuckDB-gated.
     "stream_source_mix" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val st = CdcStream.readEventStream(s, batchDocsDir(s, dir),
         maxFilesPerTrigger = 2)
       val agg = st.groupBy(col("source"))
@@ -782,7 +780,6 @@ object StreamingQueries {
     // is brute force over the union corpus the settled generation
     // serves — shares sim_ann_ivf_appended_recall's oracle
     "stream_ann_cdc_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
         graft.operators.VectorOps.probeIvfIndex(s, ivfCdcIndexFor(s, dir),
@@ -796,7 +793,6 @@ object StreamingQueries {
     // build's oracle; its pruned-codes probe, the recall audit, the
     // settle-staleness verdict, and atomic pointer serving all gate.
     "stream_ann_ivfpq_cdc" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       graft.operators.VectorOps.probeIvfPqIndex(s, ivfPqCdcIndexFor(s, dir),
           emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
@@ -804,7 +800,6 @@ object StreamingQueries {
         .orderBy(col("query_id"), col("rk"))
     }),
     "stream_ann_ivfpq_cdc_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
         graft.operators.VectorOps.probeIvfPqIndex(s, ivfPqCdcIndexFor(s, dir),
@@ -816,7 +811,6 @@ object StreamingQueries {
       IngestStream.settleCheck(s, src, idCol = "vec_id")
     }),
     "stream_ann_ivfpq_cdc_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       graft.operators.VectorOps.probeIvfPqIndex(s, ivfPqCdcViewFor(s, dir),
           emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
@@ -857,7 +851,6 @@ object StreamingQueries {
     // build — a leaked cos-1.0 poison twin or an unhealed negated
     // prefix is a rank-1 phantom through BOTH ranking passes
     "stream_ann_mrl_cdc" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       graft.operators.VectorOps.probeMrlIndex(s, mrlCdcNamesFor(s, dir)._2,
           emb.filter(col("vec_id") < 10), k = 5, prefixDims = 32,
@@ -868,7 +861,6 @@ object StreamingQueries {
     // ...its recall audit vs exact top-3 over the union corpus the
     // settled generation serves
     "stream_ann_mrl_cdc_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
         graft.operators.VectorOps.probeMrlIndex(s,
@@ -884,7 +876,6 @@ object StreamingQueries {
     }),
     // capture → route → settle → PROMOTE → serve for the eighth family
     "stream_ann_mrl_cdc_published" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       graft.operators.VectorOps.probeMrlIndex(s, mrlCdcViewFor(s, dir),
           emb.filter(col("vec_id") < 10), k = 5, prefixDims = 32,
@@ -921,7 +912,6 @@ object StreamingQueries {
     }),
     // ...its recall audit vs exact top-3 over the union corpus
     "stream_graph_cdc_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
         graft.operators.GraphOps.probeGraphIndex(s,
@@ -1525,7 +1515,7 @@ object StreamingQueries {
     // and its recall audit share the append-family oracles
     "stream_ann_cdc" -> SimilarityQueries.ivfAppendOracleSql,
     "stream_ann_cdc_recall" ->
-      SimilarityQueries.oracle("sim_ann_ivf_appended_recall"),
+      SimilarityQueries.ivfAppendRecallOracleSql,
     // the vector settle monitor's mirror: pending = plain dup inserts
     // (seq = vec_id+100000) + %20==0 updates (1e6+) + %20==4 re-inserts
     // (3e6+); tombstones = 10 poison ids + the %20==4 wave. Residues of

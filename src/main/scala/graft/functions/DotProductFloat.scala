@@ -89,21 +89,20 @@ object GraftFunctions {
   val jwInfo = new ExpressionInfo(classOf[JaroWinklerSim].getName, "graft_jaro_winkler")
 
   /** Idempotent runtime registration for sessions built without
-    * extensions (e.g. the driver's Verify/Bench sessions). */
+    * extensions (e.g. the driver's Verify/Bench sessions). A function
+    * the session already has is left alone: every driver entry calls
+    * this, and a replacement logs a WARN line per function. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot_f", exprs => DotProductFloat(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dot_i", exprs => DotProductIntExact(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_phrase_count", exprs => PhraseCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_sketch", exprs => ShingleSketch(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_set", exprs => ShingleSet(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_jaro_winkler", exprs => JaroWinklerSim(exprs(0), exprs(1)), "built-in")
+    def add(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    add("graft_dot_f", exprs => DotProductFloat(exprs(0), exprs(1)))
+    add("graft_dot_i", exprs => DotProductIntExact(exprs(0), exprs(1)))
+    add("graft_phrase_count", exprs => PhraseCount(exprs(0), exprs(1)))
+    add("graft_shingle_sketch", exprs => ShingleSketch(exprs(0)))
+    add("graft_shingle_set", exprs => ShingleSet(exprs(0)))
+    add("graft_jaro_winkler", exprs => JaroWinklerSim(exprs(0), exprs(1)))
   }
 
   /** Column-level API (requires [[register]] or [[GraftExtensions]]). */

@@ -150,7 +150,9 @@ object GraphOps {
     * plan depth and recompute cost stay O(1) in depth. Results are
     * identical either way — the pin only truncates lineage. */
   private def bfsPinBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.bfs.pinBytes").map(_.toLong)
+    spark.conf.getOption("spark.graft.bfs.pinBytes").map(v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.bfs.pinBytes must be a byte count, got '$v'")))
       .getOrElse(1L << 30)
 
   private def edgeBytes(spark: SparkSession, dir: String): Long = {

@@ -35,4 +35,15 @@ class DriverContractSpec extends AnyFunSuite {
     assert(added.isEmpty, s"entries not in the snapshot: $added")
     assert(changed.isEmpty, s"oracle SQL changed (or dropped) for: $changed")
   }
+
+  test("a driver-path entry registers the native functions itself") {
+    // a fresh session carries none of the shared session's temp
+    // functions; sim_intrinsic_dim calls expr("graft_dot_i(…)") itself
+    val s = SparkTestSession.spark.newSession()
+    assert(!s.catalog.functionExists("graft_dot_i"))
+    val rows = SparkEntry.queries("sim_intrinsic_dim")(s,
+      "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    assert(s.catalog.functionExists("graft_dot_i"))
+  }
 }

@@ -58,6 +58,16 @@ class Round21PerfSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.bfs.pinBytes")
   }
 
+  test("a non-numeric BFS pin size fails with an error naming the key") {
+    spark.conf.set("spark.graft.bfs.pinBytes", "abc")
+    try {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.queries("graph_bfs_depths")(spark, sfDir).collect())
+      assert(e.getMessage.contains("spark.graft.bfs.pinBytes"), e.getMessage)
+      assert(e.getMessage.contains("'abc'"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.bfs.pinBytes")
+  }
+
   test("two-level heaps-law prefix sums equal the global-window form") {
     val d = Tables.documents(spark, sfDir)
     // the pre-r21 formulation, verbatim: unpartitioned corpus-sized

@@ -16,7 +16,7 @@ object SparkTestSession {
   @volatile private var cached: SparkSession = _
 
   def spark: SparkSession = synchronized {
-    if (cached == null || cached.sparkContext.isStopped)
+    if (cached == null || cached.sparkContext.isStopped) {
       cached = SparkSession.builder()
         .master("local[4]")
         .appName("graft-test")
@@ -24,6 +24,10 @@ object SparkTestSession {
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
+      // as GraftSession.build does: suites that index a module's
+      // `queries` map directly skip SparkEntry's per-entry registration
+      graft.functions.GraftFunctions.register(cached)
+    }
     cached
   }
 }
