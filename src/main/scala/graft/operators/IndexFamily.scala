@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{CompletionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 
 /** One index family — everything that differs between the standing
@@ -53,6 +56,41 @@ object IndexFamily {
   /** Written by the drain next to the family's own tables. */
   val sidecars: Seq[String] = Seq("_tombstones", "_pending", "_applied")
 
+  /** Runs `writes` as concurrent Spark jobs and returns once every one
+    * has finished. The callers pass writes of disjoint tables, none
+    * reading a table another one writes, so their order never mattered —
+    * only their job-and-commit latency added up.
+    *
+    * Each write is submitted through `SQLExecution.withThreadLocalCaptured`:
+    * it runs under the calling thread's active session and SparkContext
+    * local properties (job group, `sql.streaming.queryId`, batch id), so
+    * `query.stop()` cancels it and listeners attribute its jobs exactly as
+    * for a write on the micro-batch thread. Every write is waited for,
+    * failed or not, before the first failure is rethrown with the others
+    * suppressed — no write outlives a failed call. */
+  private[graft] def concurrently(spark: SparkSession)(
+      writes: (() => Unit)*): Unit = {
+    val failures = writes
+      .map(w => SQLExecution.withThreadLocalCaptured(spark, writePool)(w()))
+      .flatMap { f =>
+        try { f.join(); None }
+        catch { case e: CompletionException => Some(e.getCause) }
+      }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  // cached, not fixed: the search family's append runs `concurrently`
+  // again from inside a batch's fan-out and waits on this same pool
+  private lazy val writePool = Executors.newCachedThreadPool { r =>
+    val t = Executors.defaultThreadFactory().newThread(r)
+    t.setName("graft-write-" + t.getId)
+    t.setDaemon(true)
+    t
+  }
+
   private def text(tables: Seq[String],
       append: (SparkSession, String, DataFrame) => Unit,
       delete: (SparkSession, String, DataFrame) => Unit,
@@ -80,12 +118,14 @@ object IndexFamily {
     * own default could otherwise disagree with a non-default index spec
     * and Spark rejects the mismatched bucketing. `cloneTo`/`compact` copy
     * the postings; the norms re-derive from them
-    * ([[SearchOps.writeDocLengths]]). */
+    * ([[SearchOps.writeDocLengths]]). The two appends run as concurrent
+    * jobs, as do the settle's two copies. */
   def search(numBuckets: Int): IndexFamily = text(Seq("", "_doclens"),
-    (s, t, docs) => {
-      SearchOps.appendToSearchIndex(s, t, docs, "doc_id", "text", numBuckets)
-      SearchOps.appendDocLengths(s, t, docs, "doc_id", "text", numBuckets)
-    },
+    (s, t, docs) => concurrently(s)(
+      () => SearchOps.appendToSearchIndex(s, t, docs, "doc_id", "text",
+        numBuckets),
+      () => SearchOps.appendDocLengths(s, t, docs, "doc_id", "text",
+        numBuckets)),
     SearchOps.deleteFromSearchIndex(_, _, _),
     (s, src, dest, paths, docs) => SearchOps.upsertToSearchIndex(s, src,
       dest, paths(0), paths(1), docs, "doc_id", "text", numBuckets),

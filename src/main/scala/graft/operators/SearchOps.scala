@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -165,7 +165,7 @@ object SearchOps {
       probeSessions.values.forEach { ps =>
         tables.foreach(t =>
           try ps.catalog.refreshTable(t)
-          catch { case _: Throwable => () }) // dropped/not-yet-created
+          catch { case _: AnalysisException => () }) // dropped/not-yet-created
       }
     }
 
@@ -403,19 +403,21 @@ object SearchOps {
       .map(t => incoming.unionByName(t.select(col("doc_id"))).distinct())
       .getOrElse(incoming)
     val reader = compactReader(spark)
-    reader.table(src)
-      .join(broadcast(dead), Seq("doc_id"), "left_anti")
-      .unionByName(invertedIndex(latest, idCol, textCol))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .option("path", path).saveAsTable(dest)
-    reader.table(s"${src}_doclens")
-      .join(broadcast(dead), Seq("doc_id"), "left_anti")
-      .unionByName(invertedIndex(latest, idCol, textCol)
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-      .option("path", dlPath).saveAsTable(s"${dest}_doclens")
+    // the postings and norms copies read only `src`: concurrent jobs
+    IndexFamily.concurrently(spark)(
+      () => reader.table(src)
+        .join(broadcast(dead), Seq("doc_id"), "left_anti")
+        .unionByName(invertedIndex(latest, idCol, textCol))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(numBuckets, "term").sortBy("term")
+        .option("path", path).saveAsTable(dest),
+      () => reader.table(s"${src}_doclens")
+        .join(broadcast(dead), Seq("doc_id"), "left_anti")
+        .unionByName(invertedIndex(latest, idCol, textCol)
+          .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
+        .option("path", dlPath).saveAsTable(s"${dest}_doclens"))
   }
 
   /** The tombstone sidecar as a frame, if any deletes are pending.

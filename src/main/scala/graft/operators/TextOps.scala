@@ -154,10 +154,6 @@ object TextOps {
   def minhash(shing: Column, seed: String): Column =
     array_min(transform(shing, sh => md5(concat(lit(seed), sh))))
 
-  /** Full MinHash signature as an array of `k` md5-min values. */
-  def minhashSignature(shing: Column, k: Int = 8): Column =
-    array((0 until k).map(i => minhash(shing, s"s$i")): _*)
-
   /** 16-bit SimHash from the high bit of each of the first 16 hex digits
     * of md5(token), weighted by token multiplicity. Pure HOF arithmetic:
     * bit b of the signature is set iff more tokens have md5-hex-digit b

@@ -172,11 +172,6 @@ object CdcStream {
       checkpointDir, write)
   }
 
-  /** The DRY_RUN debug sink (`main.go:158-160`): log instead of produce. */
-  def debugSink(envelope: DataFrame, queryName: String): StreamingQuery =
-    envelope.writeStream.format("console")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-
   /** Watermarked tumbling-window aggregation (streaming form of
     * EventOps.tumblingAgg) — the slide == length degenerate case of
     * [[slidingAgg]] (the batch property test pins the same degeneracy). */

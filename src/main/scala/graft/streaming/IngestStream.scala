@@ -226,9 +226,13 @@ object IngestStream {
     * to the tombstone at the settle).
     *
     * Cost per micro-batch: batch-sized appends + one row-batch write —
-    * the standing corpus is never read. The settle costs one
-    * generation copy (the compaction class), run at compaction cadence
-    * or whenever freshness demands ([[settleCheck]] is the monitor).
+    * the standing corpus is never read. The append, tombstone and
+    * pending writes touch disjoint tables and run as concurrent jobs
+    * ([[IndexFamily.concurrently]]), so a batch waits for its slowest
+    * write plus the ledger row, not for the sum of its job-and-commit
+    * latencies. The settle costs one generation copy (the compaction
+    * class), run at compaction cadence or whenever freshness demands
+    * ([[settleCheck]] is the monitor).
     *
     * [[cdcIndexSink]] is the search family's sink. */
   def cdcFamilySink(eventStream: DataFrame, family: IndexFamily, table: String,
@@ -257,20 +261,23 @@ object IngestStream {
         if (batch.columns.contains("event_seq")) col("event_seq").cast("long")
         else lit(batchId)
       val (id, payload) = (col(family.idCol), col(family.payloadCol))
-      if (!family.reingestInserts)
-        family.append(spark, table,
-          batch.filter(col("statement") === "INSERT").select(id, payload))
-      family.delete(spark, table,
-        batch.filter(col("statement") === "DELETE").select(id, seq.as("seq")))
-      // INSERTs queue alongside UPDATEs: the settle needs the row's
-      // sequence to order a re-insert against an earlier tombstone of
-      // the same id (insert rows whose id was never tombstoned cost the
-      // settle nothing — their immediately-appended rows simply survive
-      // the generation copy untouched)
-      batch.filter(col("statement").isin("INSERT", "UPDATE"))
-        .select(id, payload, seq.as("seq"), col("statement"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_pending")
+      // three writes of disjoint tables, none reading another's output
+      IndexFamily.concurrently(spark)(
+        () => if (!family.reingestInserts)
+          family.append(spark, table,
+            batch.filter(col("statement") === "INSERT").select(id, payload)),
+        () => family.delete(spark, table,
+          batch.filter(col("statement") === "DELETE")
+            .select(id, seq.as("seq"))),
+        // INSERTs queue alongside UPDATEs: the settle needs the row's
+        // sequence to order a re-insert against an earlier tombstone of
+        // the same id (insert rows whose id was never tombstoned cost
+        // the settle nothing — their immediately-appended rows simply
+        // survive the generation copy untouched)
+        () => batch.filter(col("statement").isin("INSERT", "UPDATE"))
+          .select(id, payload, seq.as("seq"), col("statement"))
+          .write.mode("append").format("parquet")
+          .saveAsTable(s"${table}_pending"))
     }
 
   /** The generation boundary of the CDC maintenance loop: per id, the
@@ -794,7 +801,10 @@ object IngestStream {
 
   /** Runs `body` unless `<ledger>_applied` already holds `batchId`, then
     * records it — the ledger row is written LAST, so a crash inside the
-    * body replays the batch (at-least-once) rather than losing it. */
+    * body replays the batch (at-least-once) rather than losing it. A
+    * body that fans its writes out through [[IndexFamily.concurrently]]
+    * returns only once every one of them has finished, so the row waits
+    * for all of them and is never written when any failed. */
   private def once(spark: org.apache.spark.sql.SparkSession, ledger: String,
       batchId: Long)(body: => Unit): Unit =
     if (!appliedSetFor(spark, ledger).contains(batchId)) {

@@ -296,6 +296,39 @@ class StreamIngestRestartSpec extends AnyFunSuite {
         spark.sql(s"DROP TABLE IF EXISTS $t$sfx"))
     }
 
+  test("a failed concurrent write fails the CDC batch with no write left running") {
+    // delete fails at once while append is still running: the batch must
+    // wait for append, rethrow the delete's error and leave the ledger
+    // without the batch, so the checkpoint replays it
+    val appended = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val search = IndexFamily.search(4)
+    val failing = search.copy(
+      append = (_, _, _) => { Thread.sleep(300); appended.set(true) },
+      delete = (_, _, _) => throw new IllegalStateException("injected delete"))
+    val batch = Seq(("INSERT", 5L, "spark window five", 50L),
+        ("DELETE", 2L, null, 52L))
+      .toDF("statement", "doc_id", "text", "event_seq")
+    val t = uniq("graft_cdc_fail_")
+    try {
+      SearchOps.writeSearchIndex(replayDocs, "doc_id", "text", t,
+        tmp("graft_cdc_fail_"), numBuckets = 4)
+      SearchOps.writeDocLengths(spark, t, tmp("graft_cdc_fail_dl_"),
+        numBuckets = 4)
+      IngestStream.applyCdcFamilyBatch(spark, search, t, batch, batchId = 1L)
+      val err = intercept[IllegalStateException](
+        IngestStream.applyCdcFamilyBatch(spark, failing, t, batch,
+          batchId = 2L))
+      assert(err.getMessage == "injected delete")
+      assert(appended.get, "the batch failed while its append still ran")
+      def ledger = spark.table(s"${t}_applied").as[Long].collect().toSet
+      assert(ledger == Set(1L), s"failed batch reached the ledger: $ledger")
+      // the replay of the failed batch is applied, not skipped
+      IngestStream.applyCdcFamilyBatch(spark, search, t, batch, batchId = 2L)
+      assert(ledger == Set(1L, 2L))
+    } finally (search.tables ++ IndexFamily.sidecars)
+      .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $t$sfx"))
+  }
+
   test("IVF-PQ settle re-encodes with the family's m/dim: equals the union build") {
     // a non-default (m = 2, dim = 8) index: the settle must re-encode the
     // UPDATE under the SAME subspaces the drain encoded the INSERT with

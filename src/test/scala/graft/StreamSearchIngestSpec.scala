@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.streaming.{CdcStream, IngestStream}
 import graft.operators.{SearchOps, VectorOps}
 
@@ -62,6 +64,72 @@ class StreamSearchIngestSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS ${t}_doclens")
       spark.sql(s"DROP TABLE IF EXISTS $t")
     }
+  }
+
+  test("a CDC micro-batch's concurrent writes run as the stream's own jobs") {
+    // every job the batch starts, pool threads included, must carry the
+    // query's id and job group: query.stop() cancels by job group, and
+    // listeners attribute by query id. Two queries in a row, so a pool
+    // thread that merely inherited the first query's properties when it
+    // was created carries the wrong identity into the second.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).getOrElse(new java.util.Properties))
+    }
+    def group(p: java.util.Properties) = p.getProperty("spark.jobGroup.id")
+    val sc = spark.sparkContext
+    // the bus delivers in order: the batch's jobs are exactly those seen
+    // between a marker job run before the query and one run after it
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try spark.range(1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try for (round <- 1 to 2) {
+      val table = "graft_stream_cdc_identity_" +
+        java.util.UUID.randomUUID().toString.replace("-", "")
+      val dirs = (1 to 4).map(_ => java.nio.file.Files
+        .createTempDirectory("graft_stream_cdc_identity_").toString)
+      try {
+        SearchOps.writeSearchIndex(Seq(
+            (1L, "spark window spark query"),
+            (2L, "spark window window window")).toDF("doc_id", "text"),
+          "doc_id", "text", table, dirs(0), numBuckets = 4)
+        SearchOps.writeDocLengths(spark, table, dirs(1), numBuckets = 4)
+        Seq(("INSERT", 3L, "spark catalyst window plans", 10L),
+            ("UPDATE", 1L, "spark window rewritten", 11L),
+            ("DELETE", 2L, null, 12L))
+          .toDF("statement", "doc_id", "text", "event_seq").coalesce(1)
+          .write.mode("overwrite").parquet(dirs(2))
+        // the reader infers its schema with a job of this thread
+        val events =
+          CdcStream.readEventStream(spark, dirs(2), maxFilesPerTrigger = 1)
+        val (before, after) = (s"before-$round", s"after-$round")
+        marker(before)
+        val query = IngestStream.cdcIndexSink(events, table, dirs(3),
+          numBuckets = 4)
+        query.awaitTermination()
+        marker(after)
+        val deadline = System.nanoTime() + 30000000000L
+        while (!jobs.asScala.exists(group(_) == after) &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+        val seen = jobs.asScala.toSeq
+        val batchJobs = seen.slice(seen.lastIndexWhere(group(_) == before) + 1,
+          seen.indexWhere(group(_) == after))
+        // at least the five writes: postings, norms, tombstones,
+        // pending, ledger
+        assert(batchJobs.size >= 5, s"round $round: ${batchJobs.size} jobs")
+        batchJobs.foreach { p =>
+          assert(p.getProperty("sql.streaming.queryId") == query.id.toString,
+            s"round $round: a batch job lost the query id: $p")
+          assert(group(p) == query.runId.toString,
+            s"round $round: a batch job lost the job group: $p")
+        }
+      } finally (Seq("", "_doclens") ++ graft.operators.IndexFamily.sidecars)
+        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $table$sfx"))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("IVF sink: streamed frozen-quantizer appends == direct batch appends") {
