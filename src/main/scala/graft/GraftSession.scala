@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Library session entry point: a SparkSession configured the way the
   * engine expects — AQE on (runtime skew-join + partition coalescing),
-  * UTC (oracle parity and sane timestamps), native functions registered.
+  * UTC (oracle parity and sane timestamps), native functions registered,
+  * local files handled without forked processes ([[NioLocalFileSystem]]).
   * `shufflePartitions` should be ~2-3x total executor cores; on a real
   * cluster pass `master = null` and let spark-submit supply it. */
 object GraftSession {
@@ -16,6 +17,13 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // local files without a forked process per file (NioLocalFileSystem);
+      // the stream checkpoint goes through the same FileSystem, since
+      // the default FileContext manager builds its own forking one
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
       .withExtensions(new graft.functions.GraftExtensions)
     val spark = (if (master != null) b.master(master) else b).getOrCreate()
     graft.functions.GraftFunctions.register(spark)
