@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * test pins which epoch each post-base vector lifecycle entry probes:
   * entries that share an oracle (`_deleted`, `_updated`, `_published`
   * all hash-match the base) cannot be told apart by the oracle compare,
-  * so a mis-wired stage would otherwise pass. */
+  * so a mis-wired stage would otherwise pass. The same pin covers the
+  * stream CDC entries and the search and band lifecycle entries, and a
+  * last test holds the CDC stages to the drop-list rule. */
 class LifecycleReclaimSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -126,24 +128,132 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     "sim_ann_ivfpq_residual_retrained_recall" -> "ivfpq_res_retrain_index",
     "sim_ann_ivfpq_residual_retrain_check" -> "ivfpq_res_append_index")
 
-  test("each vector lifecycle entry probes the epoch of its own stage") {
-    assert(entryKinds.size == 69 && entryKinds.map(_._1).distinct.size == 69)
+  /** The entries of `entryKinds` whose plan reads no generation of
+    * their epoch kind, all built in one fresh session. A CDC epoch's
+    * value names two generations (`src;settled`): the settle check
+    * reads the first, the probes the second. */
+  private def miswired(entryKinds: Seq[(String, String)]): Seq[String] = {
     val s = SparkTestSession.spark.newSession()
     graft.functions.GraftFunctions.register(s)
     val uuid = EpochRegistry.idOf(s)
-    val miswired = entryKinds.flatMap { case (entry, kind) =>
+    entryKinds.flatMap { case (entry, kind) =>
       val plan = SparkEntry.queries(entry)(s, sfDir).queryExecution.analyzed
         .toString
       EpochRegistry.liveEntries(uuid, Some(kind)) match {
         // a pointer view is read at plan time: the plan holds the
         // generation it names
-        case Seq(res) if plan.contains(
-            graft.operators.Generations.resolveServing(s, res.value)) => None
+        case Seq(res) if res.value.split(';').exists(name => plan.contains(
+            graft.operators.Generations.resolveServing(s, name))) => None
         case live => Some(s"$entry: ${live.size} live $kind entries, " +
           "none read by the plan")
       }
     }
-    assert(miswired.isEmpty, miswired.mkString("\n"))
+  }
+
+  test("each vector lifecycle entry probes the epoch of its own stage") {
+    assert(entryKinds.size == 69 && entryKinds.map(_._1).distinct.size == 69)
+    val wrong = miswired(entryKinds)
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  /** (entry, the epoch kind its plan must read) for the stream CDC
+    * entries of the vector and graph families, and for the search and
+    * band lifecycle entries. */
+  private val cdcAndTextEntryKinds: Seq[(String, String)] = Seq(
+    "stream_ann_cdc" -> "ann_cdc_index",
+    "stream_ann_cdc_recall" -> "ann_cdc_index",
+    "stream_ann_cdc_settle_check" -> "ann_cdc_index",
+    "stream_ann_cdc_published" -> "ivf_cdc_view",
+    "stream_binary_cdc" -> "binary_cdc_index",
+    "stream_binary_cdc_settle_check" -> "binary_cdc_index",
+    "stream_binary_cdc_published" -> "binary_cdc_view",
+    "stream_ann_mrl_cdc" -> "mrl_cdc_index",
+    "stream_ann_mrl_cdc_recall" -> "mrl_cdc_index",
+    "stream_ann_mrl_cdc_settle_check" -> "mrl_cdc_index",
+    "stream_ann_mrl_cdc_published" -> "mrl_cdc_view",
+    "stream_ann_ivfpq_cdc" -> "ann_ivfpq_cdc_index",
+    "stream_ann_ivfpq_cdc_recall" -> "ann_ivfpq_cdc_index",
+    "stream_ann_ivfpq_cdc_settle_check" -> "ann_ivfpq_cdc_index",
+    "stream_ann_ivfpq_cdc_published" -> "ivfpq_cdc_view",
+    "stream_graph_cdc" -> "graph_cdc_index",
+    "stream_graph_cdc_recall" -> "graph_cdc_index",
+    "stream_graph_cdc_settle_check" -> "graph_cdc_index",
+    "stream_graph_cdc_published" -> "graph_cdc_view",
+    "text_search_appended" -> "search_append_index",
+    "text_search_bm25_appended" -> "search_append_index",
+    "text_search_compacted" -> "search_compact_index",
+    "text_search_bm25_compacted" -> "search_compact_index",
+    "text_search_resharded" -> "search_reshard_index",
+    "text_search_bm25_resharded" -> "search_reshard_index",
+    "text_search_published" -> "search_view",
+    "text_search_bm25_published" -> "search_view",
+    "text_search_published_atomic" -> "search_atomic_view",
+    "text_search_bm25_published_atomic" -> "search_atomic_view",
+    "text_search_published_deleted" -> "search_deleted_view",
+    "text_search_bm25_published_deleted" -> "search_deleted_view",
+    "text_search_deleted" -> "search_delete_index",
+    "text_search_bm25_deleted" -> "search_delete_index",
+    "text_search_updated" -> "search_upsert_index",
+    "text_search_bm25_updated" -> "search_upsert_index",
+    "dedup_incremental_indexed" -> "band_index",
+    "dedup_incremental_appended" -> "band_append_index",
+    "dedup_incremental_published" -> "band_pointer_view",
+    "dedup_incremental_resharded" -> "band_reshard_index",
+    "dedup_incremental_compacted" -> "band_compact_index",
+    "dedup_incremental_deleted" -> "band_delete_index",
+    "dedup_incremental_updated" -> "band_upsert_index",
+    "stream_dedup_cdc" -> "band_cdc_index",
+    "stream_dedup_cdc_published" -> "band_cdc_view")
+
+  /** The graph walk materializes every round, so a walked entry's plan
+    * names no generation. Each is built instead in a fresh session
+    * with the entries of its kind only: the pinned kinds live there
+    * must be its own and, for a `_published` entry, the kind of the
+    * CDC index its view publishes. */
+  private val walked = Set("stream_graph_cdc", "stream_graph_cdc_recall",
+    "stream_graph_cdc_published")
+
+  private def walkMiswired(entryKinds: Seq[(String, String)]): Seq[String] = {
+    val kindOf = entryKinds.toMap
+    entryKinds.filter(e => walked(e._1)).groupBy(_._2).toSeq.flatMap {
+      case (kind, group) =>
+        val s = SparkTestSession.spark.newSession()
+        group.foreach { case (entry, _) => SparkEntry.queries(entry)(s, sfDir) }
+        val uuid = EpochRegistry.idOf(s)
+        val live = kindOf.values.toSet.filter(k =>
+          EpochRegistry.liveEntries(uuid, Some(k)).nonEmpty)
+        val expected = group.map(_._1).flatMap(e =>
+          kindOf.get(e.stripSuffix("_published"))).toSet + kind
+        if (live == expected) None
+        else Some(s"${group.map(_._1).mkString(",")}: live $live, " +
+          s"expected $expected")
+    }
+  }
+
+  test("each stream CDC, search and band lifecycle entry probes the " +
+      "epoch of its own stage") {
+    assert(cdcAndTextEntryKinds.size == 44 &&
+      cdcAndTextEntryKinds.map(_._1).distinct.size == 44)
+    val wrong = miswired(cdcAndTextEntryKinds.filterNot(e => walked(e._1))) ++
+      walkMiswired(cdcAndTextEntryKinds)
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("every CDC stage's catalog tables are on a live drop list") {
+    val s = SparkTestSession.spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    def catalog(): Set[String] =
+      s.catalog.listTables().collect().map(_.name.toLowerCase).toSet
+    val before = catalog()
+    import StreamingQueries._
+    Seq(ivfCdcViewFor _, binaryCdcViewFor _, mrlCdcViewFor _,
+      ivfPqCdcViewFor _, graphCdcViewFor _).foreach(_(s, sfDir))
+    val appeared = catalog() -- before
+    val dropped = EpochRegistry.liveEntries(EpochRegistry.idOf(s))
+      .flatMap(_.dropTables).map(_.toLowerCase).toSet
+    assert(appeared.nonEmpty)
+    val leaked = appeared -- dropped
+    assert(leaked.isEmpty, s"tables outside every drop list: $leaked")
   }
 
   test("every lifecycle epoch's catalog tables are on a live drop list") {
