@@ -88,6 +88,52 @@ private[graft] object EpochRegistry {
     value
   }
 
+  /** A fresh 32-hex-digit suffix for a UUID-unique catalog name. */
+  private[graft] def freshId(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  private[graft] def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Acquire `kind` as ONE fresh temp dir, filled by `write(path)` and
+    * deleted with the epoch. */
+  def dirEpoch(s: SparkSession, dir: String, kind: String)(
+      write: String => Unit): String =
+    acquire(s, kind, dir) { () =>
+      val path = tmpDir(s"graft_${kind}_")
+      write(path)
+      Resource(path, deleteDirs = Seq(path))
+    }
+
+  /** Acquire `kind` as ONE fresh generation: `write(table, newDir)`
+    * fills `graft_<kind>_<id>`, calling `newDir()` for each fresh temp
+    * dir it writes under. The tables `table + suffix` and every dir
+    * `newDir` handed out are reclaimed with the epoch. Any epoch
+    * `write` reads must already be resolved by the caller: a nested
+    * acquire can deadlock on the registry map. */
+  def generation(s: SparkSession, dir: String, kind: String,
+      suffixes: Seq[String])(write: (String, () => String) => Unit): String =
+    acquire(s, kind, dir) { () =>
+      val table = s"graft_${kind}_" + freshId()
+      val dirs = Seq.newBuilder[String]
+      write(table, () => { val d = tmpDir(s"graft_${kind}_"); dirs += d; d })
+      Resource(table, dropTables = suffixes.map(table + _),
+        deleteDirs = dirs.result())
+    }
+
+  /** Acquire `kind` as a pointer view over the generation `gen`
+    * ([[graft.operators.Generations.publishPointer]]): ONE catalog view
+    * holding the generation's name, so every table `gen + suffix`
+    * resolves from the same atomically-flipped generation. `gen` must
+    * already be resolved by the caller. */
+  def pointerView(s: SparkSession, dir: String, kind: String, gen: String,
+      suffixes: Seq[String]): String =
+    acquire(s, kind, dir) { () =>
+      val view = s"graft_${kind}_" + freshId()
+      graft.operators.Generations.publishPointer(s, view, gen, suffixes)
+      Resource(view, dropTables = Seq(view))
+    }
+
   /** Release entries whose owner SparkSession was garbage-collected
     * (the WeakReference cleared): a collected session can never probe
     * its resources again, so its dirs go now instead of at application

@@ -534,9 +534,9 @@ object GraphQueries {
       dir: String): String = {
     val gen = base(s, dir, graph)
     EpochRegistry.acquire(s, "graph_update_index", dir) { () =>
-      val src = "graft_graph_upd_src_" + SimilarityQueries.freshId()
-      val dest = "graft_graph_upd_" + SimilarityQueries.freshId()
-      val paths = Seq.fill(2)(SimilarityQueries.tmpDir("graft_graph_upd_"))
+      val src = "graft_graph_upd_src_" + EpochRegistry.freshId()
+      val dest = "graft_graph_upd_" + EpochRegistry.freshId()
+      val paths = Seq.fill(2)(EpochRegistry.tmpDir("graft_graph_upd_"))
       GraphOps.cloneGraphIndex(s, gen, src, paths(0))
       val wave = SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
         .filter(col("vec_id") >= 100000 && col("vec_id") % 20 === 0)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Generations, IndexFamily, VectorOps}
+import graft.EpochRegistry.{freshId, generation, tmpDir}
 
 /** Similarity search over `embeddings` (SURVEY §2.3): brute-force cosine
   * top-k (exact baseline), sign-bucket LSH ANN (scale path), and
@@ -301,30 +302,10 @@ object SimilarityQueries {
   private[graft] val vectorFamilies: Seq[Lifecycle] =
     Seq(ivf, sq8, binary, mrl, pq, ivfPq, ivfPqRes)
 
-  private[graft] def freshId(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
-  private[graft] def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Every table one generation `table` can hold: the family's own plus
-    * the tombstone sidecar a delete (or a clone of one) writes. */
-  private def generationTables(family: IndexFamily, table: String)
-      : Seq[String] =
-    (family.tables :+ "_tombstones").map(table + _)
-
-  /** Acquire `kind` as ONE fresh generation: `write(table, path)` fills
-    * `graft_<kind>_<uuid>` under a fresh temp dir. Any epoch `write`
-    * reads must already be resolved by the caller. */
-  private def generation(s: SparkSession, dir: String, kind: String,
-      family: IndexFamily)(write: (String, String) => Unit): String =
-    EpochRegistry.acquire(s, kind, dir) { () =>
-      val table = s"graft_${kind}_" + freshId()
-      val path = tmpDir(s"graft_${kind}_")
-      write(table, path)
-      EpochRegistry.Resource(table,
-        dropTables = generationTables(family, table), deleteDirs = Seq(path))
-    }
+  /** Every table one generation of `family` can hold: the family's own
+    * plus the tombstone sidecar a delete (or a clone of one) writes. */
+  private def generationTables(family: IndexFamily): Seq[String] =
+    family.tables :+ "_tombstones"
 
   /** BASE: the family's serving generation, written once per (session,
     * dir) and probed by every later query in the session — the 100 TB
@@ -333,7 +314,8 @@ object SimilarityQueries {
   private[graft] def base(s: SparkSession, dir: String, lc: Lifecycle)
       : String = {
     val write = lc.build(s, dir)
-    generation(s, dir, s"${lc.prefix}_index", lc.family)(write)
+    generation(s, dir, s"${lc.prefix}_index", generationTables(lc.family))(
+      (t, newDir) => write(t, newDir()))
   }
 
   /** DELETE: the serving generation cloned, exact copies of the query
@@ -344,8 +326,9 @@ object SimilarityQueries {
   private[graft] def delete(s: SparkSession, dir: String, lc: Lifecycle)
       : String = {
     val src = base(s, dir, lc)
-    generation(s, dir, s"${lc.prefix}_delete_index", lc.family) { (t, p) =>
-      lc.family.cloneTo(s, src, t, p)
+    generation(s, dir, s"${lc.prefix}_delete_index",
+        generationTables(lc.family)) { (t, newDir) =>
+      lc.family.cloneTo(s, src, t, newDir())
       val poison = querySet(Tables.embeddings(s, dir))
         .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
       lc.family.append(s, t, poison)
@@ -360,8 +343,9 @@ object SimilarityQueries {
   private[graft] def compact(s: SparkSession, dir: String, lc: Lifecycle)
       : String = {
     val src = lc.compactFrom(s, dir, lc)
-    generation(s, dir, s"${lc.prefix}_compact_index", lc.family)(
-      lc.family.compact(s, src, _, _))
+    generation(s, dir, s"${lc.prefix}_compact_index",
+      generationTables(lc.family))((t, newDir) =>
+      lc.family.compact(s, src, t, newDir()))
   }
 
   /** UPSERT, corrupt-then-heal: a clone CORRUPTED exactly the way
@@ -386,8 +370,8 @@ object SimilarityQueries {
         emb.filter(col("vec_id") >= 50 && col("vec_id") < 60)
           .select(col("vec_id"), col("embedding")))
       EpochRegistry.Resource(dest,
-        dropTables = generationTables(lc.family, corrupt) ++
-          generationTables(lc.family, dest),
+        dropTables = Seq(corrupt, dest).flatMap(g =>
+          generationTables(lc.family).map(g + _)),
         deleteDirs = paths)
     }
   }
@@ -400,8 +384,9 @@ object SimilarityQueries {
   private[graft] def append(s: SparkSession, dir: String, lc: Lifecycle)
       : String = {
     val src = base(s, dir, lc)
-    generation(s, dir, s"${lc.prefix}_append_index", lc.family) { (t, p) =>
-      lc.family.cloneTo(s, src, t, p)
+    generation(s, dir, s"${lc.prefix}_append_index",
+        generationTables(lc.family)) { (t, newDir) =>
+      lc.family.cloneTo(s, src, t, newDir())
       lc.family.append(s, t, dupVectors(Tables.embeddings(s, dir))
         .filter(col("vec_id") >= 100000)
         .select(col("vec_id"), col("embedding")))
@@ -416,8 +401,9 @@ object SimilarityQueries {
     val train = lc.retrain.getOrElse(
       throw new IllegalArgumentException(s"${lc.prefix} has no retrain"))
     val src = append(s, dir, lc)
-    generation(s, dir, s"${lc.prefix}_retrain_index", lc.family) { (t, p) =>
-      train(s, src, t, p, dupVectors(Tables.embeddings(s, dir))
+    generation(s, dir, s"${lc.prefix}_retrain_index",
+        generationTables(lc.family)) { (t, newDir) =>
+      train(s, src, t, newDir(), dupVectors(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("embedding")))
     }
   }
@@ -432,8 +418,8 @@ object SimilarityQueries {
     val encode = lc.derive.getOrElse(
       throw new IllegalArgumentException(s"${lc.prefix} has no derivation"))
     val src = base(s, dir, ivf)
-    generation(s, dir, s"${lc.prefix}_derived_index", lc.family)(
-      encode(s, src, _, _))
+    generation(s, dir, s"${lc.prefix}_derived_index",
+      generationTables(lc.family))((t, newDir) => encode(s, src, t, newDir()))
   }
 
   /** POINTER: the serving generation promoted under a stable name via
@@ -443,14 +429,9 @@ object SimilarityQueries {
     * generation and the probe plan is unchanged. The gated probes must
     * hash-match the direct-probe oracles. */
   private[graft] def pointer(s: SparkSession, dir: String, lc: Lifecycle)
-      : String = {
-    val gen = base(s, dir, lc)
-    EpochRegistry.acquire(s, s"${lc.prefix}_pointer_view", dir) { () =>
-      val view = s"graft_${lc.prefix}_pview_" + freshId()
-      Generations.publishPointer(s, view, gen, suffixes = lc.family.tables)
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+      : String =
+    EpochRegistry.pointerView(s, dir, s"${lc.prefix}_pointer_view",
+      base(s, dir, lc), lc.family.tables)
 
   // ---------------- served lifecycle entries ----------------
 
@@ -459,6 +440,9 @@ object SimilarityQueries {
 
   /** A served probe: (session, generation, query set) → ranked rows. */
   private type Probe = (SparkSession, String, DataFrame) => DataFrame
+
+  /** A lifecycle stage: (session, data dir, family) → its generation. */
+  private[graft] type Stage = (SparkSession, String, Lifecycle) => String
 
   /** How one vector family's generations are probed and gated — a row
     * of [[servedFamilies]]. [[lifecycleEntries]] generates every
@@ -479,12 +463,39 @@ object SimilarityQueries {
     *    (stated per row: a stage function cannot be compared);
     *    `appendedSql`/`appendedRecallSql` mirror the union corpus under
     *    the frozen quantizers, `retrainedSql` (probe, recall) the union
-    *    corpus under fresh ones. */
+    *    corpus under fresh ones;
+    *  - `streamCdc`: the stream entry prefix `p` and the stages
+    *    [[StreamingQueries.cdcEntries]] generates as `p_cdc<stage>` over
+    *    the family's CDC loop ([[StreamingQueries.cdc]]), whose settled
+    *    generation serves the union corpus under the frozen quantizers.
+    */
   private[graft] final case class Served(lc: Lifecycle, entry: String,
       score: String, rowsTable: String, serve: Probe, audit: Probe,
       retrainCheck: Option[(Query, String)], baseSql: String,
       compactedSql: String, appendedSql: String, appendedRecallSql: String,
-      retrainedSql: Option[(String, String)], compactionCheckSql: String)
+      retrainedSql: Option[(String, String)], compactionCheckSql: String,
+      streamCdc: Option[(String, Seq[String])]) {
+
+    /** `serve` over the generation `at` resolves to, gated as
+      * `query_id, neighbor_id, <score>, rk`. */
+    def probed(at: Stage): Query = (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      serve(s, at(s, dir, lc), querySet(emb))
+        .select(col("query_id"), col("neighbor_id"), col(score), col("rk"))
+        .orderBy(col("query_id"), col("rk"))
+    }
+
+    /** `audit` over the generation `at` resolves to, against the
+      * union-corpus truth. */
+    def audited(at: Stage): Query = (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      recallAudit(dupVectors(emb), audit(s, at(s, dir, lc), querySet(emb)))
+    }
+  }
+
+  /** Every stage a family's CDC loop serves ([[StreamingQueries
+    * .cdcEntries]]); binary's row leaves out `_recall`. */
+  private val cdcStages = Seq("", "_recall", "_settle_check", "_published")
 
   /** The served table. The retrain verdicts read the partition column
     * only, and every appended generation assigns through the same
@@ -506,7 +517,8 @@ object SimilarityQueries {
         ivfOracleOver(dupVectorsSql + ",\n", "corpus", "corpus", corpusKSql),
         ivfRecallOracleOver(dupVectorsSql + ",\n", "corpus", "corpus",
           corpusKSql))),
-      compactionCheckSql = compactionCheckOracleSql(1)),
+      compactionCheckSql = compactionCheckOracleSql(1),
+      streamCdc = Some(("stream_ann", cdcStages))),
     Served(sq8, "sim_ann_ivf_sq8", "cos_sim", "_lists",
       VectorOps.probeIvfIndexSq8(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfIndexSq8(_, _, _, k = recallK, nProbe = 2),
@@ -521,7 +533,7 @@ object SimilarityQueries {
           corpusKSql),
         recallOracleSql(ivfSq8RecallPre(dupVectorsSql + ",\n", "corpus",
           "corpus", corpusKSql), ivfSq8RecallAnnSelect, "corpus"))),
-      compactionCheckSql = compactionCheckOracleSql(1)),
+      compactionCheckSql = compactionCheckOracleSql(1), streamCdc = None),
     Served(binary, "sim_ann_binary", "hamming", "_lists",
       VectorOps.probeIvfIndexBinary(_, _, _, k = 5, nProbe = 4),
       VectorOps.probeIvfIndexBinary(_, _, _, k = recallK, nProbe = 2),
@@ -531,7 +543,9 @@ object SimilarityQueries {
       appendedRecallSql = ivfBinaryAppendRecallOracleSql,
       retrainedSql = Some((ivfBinaryRetrainOracleSql,
         ivfBinaryRetrainRecallOracleSql)),
-      compactionCheckSql = compactionCheckOracleSql(1)),
+      compactionCheckSql = compactionCheckOracleSql(1),
+      streamCdc = Some(("stream_binary",
+        Seq("", "_settle_check", "_published")))),
     Served(mrl, "sim_ann_mrl", "cos_sim", "_prefix",
       VectorOps.probeMrlIndex(_, _, _, k = 5, prefixDims = 32,
         shortlist = 100),
@@ -541,7 +555,8 @@ object SimilarityQueries {
       baseSql = mrlOracleSql, compactedSql = mrlOracleSql,
       appendedSql = mrlAppendOracleSql,
       appendedRecallSql = mrlAppendRecallOracleSql, retrainedSql = None,
-      compactionCheckSql = compactionCheckOracleSql(1)),
+      compactionCheckSql = compactionCheckOracleSql(1),
+      streamCdc = Some(("stream_ann_mrl", cdcStages))),
     Served(pq, "sim_ann_pq", "cos_sim", "_codes",
       VectorOps.probePqIndex(_, _, _, k = 3),
       VectorOps.probePqIndex(_, _, _, k = recallK),
@@ -549,7 +564,7 @@ object SimilarityQueries {
       baseSql = pqOracleSql, compactedSql = pqOracleSql,
       appendedSql = pqAppendOracleSql,
       appendedRecallSql = pqAppendRecallOracleSql, retrainedSql = None,
-      compactionCheckSql = compactionCheckOracleSql(8)),
+      compactionCheckSql = compactionCheckOracleSql(8), streamCdc = None),
     Served(ivfPq, "sim_ann_ivfpq", "cos_sim", "_codes",
       VectorOps.probeIvfPqIndex(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfPqIndex(_, _, _, k = recallK, nProbe = 2),
@@ -559,7 +574,8 @@ object SimilarityQueries {
       appendedRecallSql = ivfPqAppendRecallOracleSql,
       retrainedSql = Some((ivfPqRetrainOracleSql,
         ivfPqRetrainRecallOracleSql)),
-      compactionCheckSql = compactionCheckOracleSql(8)),
+      compactionCheckSql = compactionCheckOracleSql(8),
+      streamCdc = Some(("stream_ann_ivfpq", cdcStages))),
     Served(ivfPqRes, "sim_ann_ivfpq_residual", "cos_sim", "_codes",
       VectorOps.probeIvfPqResidualIndex(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfPqResidualIndex(_, _, _, k = recallK, nProbe = 2),
@@ -569,24 +585,14 @@ object SimilarityQueries {
       appendedRecallSql = ivfPqResidualAppendRecallOracleSql,
       retrainedSql = Some((ivfPqResidualRetrainOracleSql,
         ivfPqResidualRetrainRecallOracleSql)),
-      compactionCheckSql = compactionCheckOracleSql(8)))
+      compactionCheckSql = compactionCheckOracleSql(8), streamCdc = None))
 
   /** Every post-base lifecycle entry of one served family, as (name,
     * query, oracle SQL): each stage's generation probed through `serve`
     * (or audited through `audit`), plus the compaction verdict over the
     * delete generation and the retrain verdict over the appended one. */
   private def lifecycleEntries(f: Served): Seq[(String, Query, String)] = {
-    type Stage = (SparkSession, String, Lifecycle) => String
-    def probed(at: Stage): Query = (s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      f.serve(s, at(s, dir, f.lc), querySet(emb))
-        .select(col("query_id"), col("neighbor_id"), col(f.score), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }
-    def audited(at: Stage): Query = (s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      recallAudit(dupVectors(emb), f.audit(s, at(s, dir, f.lc), querySet(emb)))
-    }
+    import f.{audited, probed}
     val compactionCheck: Query = (s, dir) => {
       val gen = delete(s, dir, f.lc)
       Generations.compactionCheck(s, gen, s.table(gen + f.rowsTable))

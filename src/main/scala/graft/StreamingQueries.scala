@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{IndexFamily, SearchOps}
 import graft.streaming.{CdcStream, IngestStream}
+import graft.EpochRegistry.{freshId, generation, tmpDir}
 
 /** Structured-Streaming-backed entries. Each runs a real streaming query
   * (file source → transform → memory sink, Trigger.AvailableNow) and
@@ -70,7 +71,8 @@ object StreamingQueries {
     df.sparkSession.table(name)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
 
     // the reference's hot path as a stream: source → envelope (O3) →
     // sink. PARTIALLY GATED since r18 (VERDICT r17 #4 — the suite's
@@ -568,8 +570,7 @@ object StreamingQueries {
       // plan/commit overhead, not data work.
       val src = CdcStream.readEventStream(s, batchDocsDir(s, dir),
         maxFilesPerTrigger = 2)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ingest_ckpt_").toString
+      val ckpt = tmpDir("graft_ingest_ckpt_")
       // distributed sink: each micro-batch's decision frame appends to a
       // parquet dir (executor-side writes — the driver never collects;
       // at scale this IS the output table of the ingestion service).
@@ -577,8 +578,7 @@ object StreamingQueries {
       // discipline) and coalesces each decision frame to one file
       // (hundreds of rows; at deployment scale the same knobs size the
       // per-batch grid to the batch, not to the cluster default).
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_ingest_out_").toString
+      val outDir = tmpDir("graft_ingest_out_")
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
@@ -759,141 +759,6 @@ object StreamingQueries {
         .orderBy(col("query_id"), col("rk"))
     }),
 
-    // the CDC statement stream consumed as VECTOR-index maintenance
-    // (IngestStream.cdcFamilySink, IndexFamily.ivf) — the embedding twin of
-    // the search CDC loop below: the serving clone starts CORRUPTED (stale
-    // negated embeddings for the %20==0 dup wave, the %20==4 wave
-    // pre-inserted,
-    // top-rank poison copies of the probe queries), the drained events
-    // insert the rest of the dup batch, queue the true embeddings,
-    // delete the poison AND delete-then-reinsert the %20==4 wave —
-    // after the settle the generation equals base ∪ dups under the
-    // frozen quantizer EXACTLY, so the probe shares the append oracle
-    "stream_ann_cdc" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeIvfIndex(s, ivfCdcIndexFor(s, dir),
-          emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-    // ...its recall audit (every approximate path carries one): truth
-    // is brute force over the union corpus the settled generation
-    // serves — shares sim_ann_ivf_appended_recall's oracle
-    "stream_ann_cdc_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
-        graft.operators.VectorOps.probeIvfIndex(s, ivfCdcIndexFor(s, dir),
-          emb.filter(col("vec_id") < 10),
-          k = SimilarityQueries.recallK, nProbe = 2))
-    }),
-
-    // the composite (IVF-PQ) consumes the SAME CDC statement stream as
-    // standing-index maintenance — the fourth family in the loop. The
-    // settled generation must hash-match the frozen-quantizer union
-    // build's oracle; its pruned-codes probe, the recall audit, the
-    // settle-staleness verdict, and atomic pointer serving all gate.
-    "stream_ann_ivfpq_cdc" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeIvfPqIndex(s, ivfPqCdcIndexFor(s, dir),
-          emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-    "stream_ann_ivfpq_cdc_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
-        graft.operators.VectorOps.probeIvfPqIndex(s, ivfPqCdcIndexFor(s, dir),
-          emb.filter(col("vec_id") < 10),
-          k = SimilarityQueries.recallK, nProbe = 2))
-    }),
-    "stream_ann_ivfpq_cdc_settle_check" -> ((s, dir) => {
-      val (src, _) = ivfPqCdcNamesFor(s, dir)
-      IngestStream.settleCheck(s, src, idCol = "vec_id")
-    }),
-    "stream_ann_ivfpq_cdc_published" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeIvfPqIndex(s, ivfPqCdcViewFor(s, dir),
-          emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-    // ...and the vector loop's settle-cadence verdict (settleCheck with
-    // idCol = vec_id — one monitor shape across both CDC loops),
-    // mirrored from the fixture's deterministic event_seq assignment
-    "stream_ann_cdc_settle_check" -> ((s, dir) => {
-      val (src, _) = ivfCdcNamesFor(s, dir)
-      IngestStream.settleCheck(s, src, idCol = "vec_id")
-    }),
-
-    // the FIFTH index family through the CDC loop: the binary index
-    // maintained by the same statement stream (one vector event
-    // fixture, five families) — the settled generation must equal the
-    // frozen-quantizer union build, gated by the binary union oracle
-    // (a leaked hamming-0 poison twin or an unhealed flipped mask is a
-    // rank-1 phantom)
-    "stream_binary_cdc" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeIvfIndexBinary(s,
-          binaryCdcNamesFor(s, dir)._2,
-          emb.filter(col("vec_id") < 10), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "stream_binary_cdc_settle_check" -> ((s, dir) => {
-      val (src, _) = binaryCdcNamesFor(s, dir)
-      IngestStream.settleCheck(s, src, idCol = "vec_id")
-    }),
-
-    // the EIGHTH index family through the CDC loop (VERDICT r18 #1 —
-    // the MRL prefix epoch maintained by the same statement stream):
-    // the settled generation must equal the frozen-derivation union
-    // build — a leaked cos-1.0 poison twin or an unhealed negated
-    // prefix is a rank-1 phantom through BOTH ranking passes
-    "stream_ann_mrl_cdc" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeMrlIndex(s, mrlCdcNamesFor(s, dir)._2,
-          emb.filter(col("vec_id") < 10), k = 5, prefixDims = 32,
-          shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-    // ...its recall audit vs exact top-3 over the union corpus the
-    // settled generation serves
-    "stream_ann_mrl_cdc_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
-        graft.operators.VectorOps.probeMrlIndex(s,
-          mrlCdcNamesFor(s, dir)._2, emb.filter(col("vec_id") < 10),
-          k = SimilarityQueries.recallK, prefixDims = 32,
-          shortlist = 100))
-    }),
-    // ...and the settle-cadence verdict (the shared monitor shape —
-    // same pending population and tombstones as the other loops)
-    "stream_ann_mrl_cdc_settle_check" -> ((s, dir) => {
-      val (src, _) = mrlCdcNamesFor(s, dir)
-      IngestStream.settleCheck(s, src, idCol = "vec_id")
-    }),
-    // capture → route → settle → PROMOTE → serve for the eighth family
-    "stream_ann_mrl_cdc_published" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeMrlIndex(s, mrlCdcViewFor(s, dir),
-          emb.filter(col("vec_id") < 10), k = 5, prefixDims = 32,
-          shortlist = 100)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    // capture → route → settle → PROMOTE → serve for the fifth family
-    "stream_binary_cdc_published" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeIvfIndexBinary(s,
-          binaryCdcViewFor(s, dir),
-          emb.filter(col("vec_id") < 10), k = 5, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
     // the SEVENTH (and last) index family through the CDC loop: the
     // kNN-graph generation maintained by the SAME vector event fixture.
     // One routing difference from the other six — INSERTs queue instead
@@ -907,7 +772,8 @@ object StreamingQueries {
     "stream_graph_cdc" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       graft.operators.GraphOps.probeGraphIndex(s,
-          graphCdcNamesFor(s, dir)._2, emb.filter(col("vec_id") < 10), k = 3)
+          cdc(s, dir, GraphQueries.graph)._2, emb.filter(col("vec_id") < 10),
+          k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
     // ...its recall audit vs exact top-3 over the union corpus
@@ -915,7 +781,7 @@ object StreamingQueries {
       val emb = Tables.embeddings(s, dir)
       SimilarityQueries.recallAudit(SimilarityQueries.dupVectors(emb),
         graft.operators.GraphOps.probeGraphIndex(s,
-          graphCdcNamesFor(s, dir)._2, emb.filter(col("vec_id") < 10),
+          cdc(s, dir, GraphQueries.graph)._2, emb.filter(col("vec_id") < 10),
           k = SimilarityQueries.recallK))
     }),
     // ...the settle-cadence verdict (shared monitor shape — the graph
@@ -923,7 +789,7 @@ object StreamingQueries {
     // same DELETE tombstones as the vector loops, so one mirror gates
     // all of them)
     "stream_graph_cdc_settle_check" -> ((s, dir) => {
-      val (src, _) = graphCdcNamesFor(s, dir)
+      val (src, _) = cdc(s, dir, GraphQueries.graph)
       IngestStream.settleCheck(s, src, idCol = "vec_id")
     }),
     // CDC maintaining DERIVED GRAPH data: the per-pair co-occurrence
@@ -969,7 +835,8 @@ object StreamingQueries {
     "stream_graph_cdc_published" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       graft.operators.GraphOps.probeGraphIndex(s,
-          graphCdcViewFor(s, dir), emb.filter(col("vec_id") < 10), k = 3)
+          cdcPointerView(s, dir, GraphQueries.graph),
+          emb.filter(col("vec_id") < 10), k = 3)
         .orderBy(col("query_id"), col("rk"))
     }),
 
@@ -1050,17 +917,6 @@ object StreamingQueries {
       IngestStream.settleCheck(s, src)
     }),
 
-    // the CDC statement stream consumed as BAND-index maintenance
-    // (IngestStream.cdcFamilySink, IndexFamily.band) — the THIRD family
-    // through the same loop, closing the symmetry: the serving generation
-    // starts CORRUPTED (odd originals missing, %10 originals carrying poison
-    // 'xdup' texts that would phantom-pair with the probe batch at
-    // jaccard 1.0, exact poison twins of the probe batch pre-admitted
-    // under ids ≥ 500000), the drained events insert the odd half,
-    // queue the true texts, delete the poison AND delete-then-reinsert
-    // the %100==4 docs — after the settle the generation equals the
-    // band index over the true originals EXACTLY, so the probe shares
-    // dedup_incremental's full-pipeline oracle.
     // CDC → incremental MATVIEW maintenance (the aggregate consumer of
     // the delta stream): the settled view after draining the 3 delta
     // micro-batches must equal the from-scratch recompute over the
@@ -1096,14 +952,7 @@ object StreamingQueries {
         .orderBy(col("o_orderkey"))
     }),
 
-    "stream_dedup_cdc" -> ((s, dir) => {
-      val corpus = TextQueries.dupCorpus(Tables.documents(s, dir))
-      graft.operators.Dedup.probeBandIndex(s, bandCdcIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-    // ...and the band loop's settle-cadence verdict — one settleCheck
+    // the band CDC loop's settle-cadence verdict — one settleCheck
     // shape across all three CDC loops, mirrored from the fixture's
     // deterministic event_seq assignment
     "stream_dedup_cdc_settle_check" -> ((s, dir) => {
@@ -1122,20 +971,6 @@ object StreamingQueries {
       SearchOps.searchBm25(s, searchCdcViewFor(s, dir),
           terms = Seq("spark", "vector", "window"), k = 10)
         .orderBy(col("rk"))
-    }),
-    "stream_ann_cdc_published" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorOps.probeIvfIndex(s, ivfCdcViewFor(s, dir),
-          emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rk"))
-        .orderBy(col("query_id"), col("rk"))
-    }),
-    "stream_dedup_cdc_published" -> ((s, dir) => {
-      val corpus = TextQueries.dupCorpus(Tables.documents(s, dir))
-      graft.operators.Dedup.probeBandIndex(s, bandCdcViewFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
     }),
 
     // the CLASSIFIER through the CDC maintenance loop (r18, VERDICT r17
@@ -1266,15 +1101,16 @@ object StreamingQueries {
         .select(col("id").as("doc_id"), col("label").as("cluster_id"),
           (col("id") === col("label")).as("is_survivor"))
         .orderBy(col("doc_id"))
-    }))
+    })) ++ SimilarityQueries.servedFamilies.flatMap(cdcEntries).map {
+      case (name, query, _) => name -> query }
 
   /** Streamed-ingestion oracles: the drained indexes are defined to
     * equal their batch twins, so the mirrors are the families' own. */
   /** The vector-family settle monitor's mirror: pending = plain dup
     * inserts (seq = vec_id+100000) + %20==0 updates (1e6+) + %20==4
     * re-inserts (3e6+); tombstones = 10 poison ids + the %20==4 wave.
-    * The IVF and IVF-PQ CDC epochs consume the SAME event fixture, so
-    * both monitors share this mirror. */
+    * Every vector CDC loop consumes the SAME event fixture, so all
+    * their monitors share this mirror. */
   private lazy val annCdcSettleCheckSql =
     """WITH pend AS (
       |  SELECT vec_id + 100000 AS id, vec_id + 100000 AS seq
@@ -1351,6 +1187,34 @@ object StreamingQueries {
       |FROM s1 LEFT JOIN s2 ON s2.user_id = s1.user_id
       |LEFT JOIN s3 ON s3.user_id = s1.user_id
       |ORDER BY s1.user_id""".stripMargin
+
+  /** A text CDC loop's settle-monitor mirror, recomputing the
+    * pending/tombstone sidecars from the event-fixture definition:
+    * INSERTs of the odd half (seq = doc_id), UPDATEs of %10
+    * (1e6+doc_id), re-INSERTs of %100==4 (3e6+doc_id); tombstones =
+    * the poison ids (every `poisonMod`-th doc re-badged `+poisonOffset`)
+    * + the %100==4 delete wave. */
+  private def textSettleCheckSql(poisonOffset: Int, poisonMod: Int): String =
+    s"""WITH pend AS (
+      |  SELECT doc_id, doc_id AS seq FROM documents WHERE doc_id % 2 = 1
+      |  UNION ALL
+      |  SELECT doc_id, 1000000 + doc_id FROM documents WHERE doc_id % 10 = 0
+      |  UNION ALL
+      |  SELECT doc_id, 3000000 + doc_id FROM documents WHERE doc_id % 100 = 4),
+      |tomb AS (
+      |  SELECT doc_id + $poisonOffset AS doc_id FROM documents WHERE doc_id % $poisonMod = 0
+      |  UNION ALL
+      |  SELECT doc_id FROM documents WHERE doc_id % 100 = 4)
+      |SELECT CAST(count(*) AS BIGINT) AS n_pending,
+      |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pending_docs,
+      |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM tomb)
+      |    AS n_tombstoned_docs,
+      |  CAST(min(seq) AS BIGINT) AS oldest_seq,
+      |  CAST(max(seq) AS BIGINT) AS newest_seq,
+      |  CAST(max(seq) - min(seq) AS BIGINT) AS seq_lag,
+      |  (count(DISTINCT doc_id) >= 100 OR max(seq) - min(seq) >= 1000000)
+      |    AS settle
+      |FROM pend""".stripMargin
 
   def oracle: Map[String, String] = Map(
     // the envelope's deterministic columns (the O3 payload mirror over
@@ -1510,26 +1374,6 @@ object StreamingQueries {
     "stream_search_ingest" -> TextQueries.searchAndSql,
     "stream_search_ingest_bm25" -> TextQueries.searchBm25Sql,
     "stream_ann_ingest" -> SimilarityQueries.ivfAppendOracleSql,
-    // the vector CDC loop settles to base ∪ dup-batch under the frozen
-    // quantizer — exactly the appended generation's state, so the probe
-    // and its recall audit share the append-family oracles
-    "stream_ann_cdc" -> SimilarityQueries.ivfAppendOracleSql,
-    "stream_ann_cdc_recall" ->
-      SimilarityQueries.ivfAppendRecallOracleSql,
-    // the vector settle monitor's mirror: pending = plain dup inserts
-    // (seq = vec_id+100000) + %20==0 updates (1e6+) + %20==4 re-inserts
-    // (3e6+); tombstones = 10 poison ids + the %20==4 wave. Residues of
-    // the dup id equal the original's (100000 ≡ 0 mod 20).
-    "stream_ann_cdc_settle_check" -> annCdcSettleCheckSql,
-    // the binary loop consumes the identical event stream, so its
-    // pending/tombstone populations share the vector monitor's mirror
-    "stream_binary_cdc" -> SimilarityQueries.ivfBinaryAppendOracleSql,
-    "stream_binary_cdc_published" -> SimilarityQueries.ivfBinaryAppendOracleSql,
-    "stream_binary_cdc_settle_check" -> annCdcSettleCheckSql,
-    "stream_ann_mrl_cdc" -> SimilarityQueries.mrlAppendOracleSql,
-    "stream_ann_mrl_cdc_recall" -> SimilarityQueries.mrlAppendRecallOracleSql,
-    "stream_ann_mrl_cdc_settle_check" -> annCdcSettleCheckSql,
-    "stream_ann_mrl_cdc_published" -> SimilarityQueries.mrlAppendOracleSql,
     // the deterministic envelope: every wire field in closed form —
     // the same struct_pack json as the O3 payload gate, the v3-style
     // uuid rebuilt from the md5 hex, the event-seq timestamp
@@ -1574,16 +1418,6 @@ object StreamingQueries {
     // from-scratch backbone)
     "stream_graph_pagerank_cdc" ->
       GraphQueries.oracle("graph_pagerank_weighted"),
-    // the composite consumes the SAME event fixture, so its settled
-    // probe shares the frozen-quantizer union oracle, its audit the
-    // union-truth recall mirror, and its monitor the identical
-    // pending/tombstone mirror (same populations by construction)
-    "stream_ann_ivfpq_cdc" -> SimilarityQueries.ivfPqAppendOracleSql,
-    "stream_ann_ivfpq_cdc_recall" ->
-      SimilarityQueries.ivfPqAppendRecallOracleSql,
-    "stream_ann_ivfpq_cdc_settle_check" -> annCdcSettleCheckSql,
-    "stream_ann_ivfpq_cdc_published" ->
-      SimilarityQueries.ivfPqAppendOracleSql,
     // the CDC-maintained + settled generation is defined to equal the
     // true corpus (inserts admitted, updates settled, deletes purged,
     // deleted-then-reinserted docs serving their final text) — the
@@ -1596,43 +1430,14 @@ object StreamingQueries {
     "stream_search_cdc" -> TextQueries.searchAndSql,
     "stream_search_cdc_bm25" -> TextQueries.searchBm25Sql,
     "stream_search_cdc_two_updates" -> TextQueries.searchBm25Sql,
-    // the monitor's mirror recomputes the pending/tombstone sidecars
-    // from the event-fixture definition: INSERTs of the odd half
-    // (seq = doc_id), UPDATEs of %10 (1e6+doc_id), re-INSERTs of
-    // %100==4 (3e6+doc_id); tombstones = poison ids + %100==4
-    "stream_search_cdc_settle_check" ->
-      """WITH pend AS (
-        |  SELECT doc_id, doc_id AS seq FROM documents WHERE doc_id % 2 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 1000000 + doc_id FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 3000000 + doc_id FROM documents WHERE doc_id % 100 = 4),
-        |tomb AS (
-        |  SELECT doc_id + 300000 AS doc_id FROM documents WHERE doc_id % 11 = 0
-        |  UNION ALL
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 = 4)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pending,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pending_docs,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM tomb)
-        |    AS n_tombstoned_docs,
-        |  CAST(min(seq) AS BIGINT) AS oldest_seq,
-        |  CAST(max(seq) AS BIGINT) AS newest_seq,
-        |  CAST(max(seq) - min(seq) AS BIGINT) AS seq_lag,
-        |  (count(DISTINCT doc_id) >= 100 OR max(seq) - min(seq) >= 1000000)
-        |    AS settle
-        |FROM pend""".stripMargin,
-    // the band CDC loop settles to the band index over the true
-    // originals — exactly the serving index's state, so the probe
-    // shares dedup_incremental's full-pipeline oracle verbatim
+    // tombstones: the %11 poison docs re-badged +300000
+    "stream_search_cdc_settle_check" -> textSettleCheckSql(300000, 11),
     "stream_matview_cdc" -> CdcQueries.oracle("cdc_matview_apply"),
     "stream_scd2_cdc" -> CdcQueries.oracle("cdc_scd2_build"),
     "stream_scd2_asof" -> CdcQueries.oracle("cdc_time_travel"),
-    "stream_dedup_cdc" -> TextQueries.oracle("dedup_incremental"),
     // settle → publish → serve is result-invisible by definition: the
     // composition entries share the settled generations' own oracles
     "stream_search_cdc_published" -> TextQueries.searchBm25Sql,
-    "stream_ann_cdc_published" -> SimilarityQueries.ivfAppendOracleSql,
-    "stream_dedup_cdc_published" -> TextQueries.oracle("dedup_incremental"),
     // the drained assignment equals the full recompute by construction
     "stream_dedup_clusters" -> TextQueries.oracle("dedup_clusters"),
     // the classifier loop's three mirrors, composed from the SAME
@@ -1668,32 +1473,11 @@ object StreamingQueries {
         |SELECT CAST(count(*) AS BIGINT) AS n_buckets,
         |  CAST(0 AS BIGINT) AS max_abs_diff, true AS converged
         |FROM lam""".stripMargin,
-    // the band settle monitor's mirror recomputes the sidecars from the
-    // event-fixture definition: INSERTs of the odd half (seq = doc_id),
-    // UPDATEs of %10 (1e6+doc_id), re-INSERTs of %100==4 (3e6+doc_id);
-    // tombstones = the poison twins (probe ids d+100000, d%3==0,
-    // re-badged +400000 → d+500000) + the %100==4 delete wave
-    "stream_dedup_cdc_settle_check" ->
-      """WITH pend AS (
-        |  SELECT doc_id, doc_id AS seq FROM documents WHERE doc_id % 2 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 1000000 + doc_id FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 3000000 + doc_id FROM documents WHERE doc_id % 100 = 4),
-        |tomb AS (
-        |  SELECT doc_id + 500000 AS doc_id FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 = 4)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pending,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pending_docs,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM tomb)
-        |    AS n_tombstoned_docs,
-        |  CAST(min(seq) AS BIGINT) AS oldest_seq,
-        |  CAST(max(seq) AS BIGINT) AS newest_seq,
-        |  CAST(max(seq) - min(seq) AS BIGINT) AS seq_lag,
-        |  (count(DISTINCT doc_id) >= 100 OR max(seq) - min(seq) >= 1000000)
-        |    AS settle
-        |FROM pend""".stripMargin)
+    // tombstones: the poison twins (probe ids d+100000, d%3==0,
+    // re-badged +400000 → d+500000)
+    "stream_dedup_cdc_settle_check" -> textSettleCheckSql(500000, 3)) ++
+    SimilarityQueries.servedFamilies.flatMap(cdcEntries).map {
+      case (name, _, sql) => name -> sql }
 
   /** The standing IVF index CONTINUOUSLY maintained: the serving
     * generation cloned (never touched), then the dup-vector batch
@@ -1706,34 +1490,22 @@ object StreamingQueries {
     // (same invariant as [[SimilarityQueries.retrain]]).
     val base = SimilarityQueries.base(s, dir, SimilarityQueries.ivf)
     val vecDir = streamVectorsDir(s, dir)
-    EpochRegistry.acquire(s, "ivf_stream_index", dir) { () =>
-      val table = "graft_ivf_stream_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_stream_index_").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ivf_stream_ckpt_").toString
-      graft.operators.VectorOps.cloneIvfIndex(s, base, table, path)
+    generation(s, dir, "ivf_stream_index",
+        Seq("_cents", "_lists", "_applied")) { (table, newDir) =>
+      graft.operators.VectorOps.cloneIvfIndex(s, base, table, newDir())
       val src = CdcStream.readEventStream(s, vecDir,
         maxFilesPerTrigger = 1)
-      IngestStream.ivfIndexSink(src, table, ckpt).awaitTermination()
-      EpochRegistry.Resource(table,
-        dropTables = Seq(s"${table}_cents", s"${table}_lists",
-          s"${table}_applied"),
-        deleteDirs = Seq(path, ckpt))
+      IngestStream.ivfIndexSink(src, table, newDir()).awaitTermination()
     }
   }
 
   /** The arriving vector batch as a 4-file dir (one micro-batch each). */
   private[graft] def streamVectorsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ivf_stream_vectors_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_stream_vectors_").toString
+    EpochRegistry.dirEpoch(s, dir, "ivf_stream_vectors_dir") { path =>
       SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
         .filter(col("vec_id") >= 100000)
         .select(col("vec_id"), col("embedding"))
         .repartition(4).write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
   /** The standing search index CONTINUOUSLY maintained: built from the
@@ -1744,37 +1516,25 @@ object StreamingQueries {
   private[graft] def searchStreamIndexFor(s: SparkSession, dir: String): String = {
     // Input epoch resolved before the acquire (no nested computeIfAbsent).
     val docsDir = oddDocsDir(s, dir)
-    EpochRegistry.acquire(s, "search_stream_index", dir) { () =>
-      val table = "graft_search_stream_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_stream_index_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_stream_index_dl_").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_search_stream_ckpt_").toString
+    generation(s, dir, "search_stream_index",
+        Seq("", "_doclens", "_applied")) { (table, newDir) =>
       val docs = Tables.documents(s, dir)
       graft.operators.SearchOps.writeSearchIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", table, path)
-      graft.operators.SearchOps.writeDocLengths(s, table, dlPath)
+        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", table,
+        newDir())
+      graft.operators.SearchOps.writeDocLengths(s, table, newDir())
       val src = CdcStream.readEventStream(s, docsDir,
         maxFilesPerTrigger = 1)
-      IngestStream.searchIndexSink(src, table, ckpt).awaitTermination()
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_doclens", s"${table}_applied"),
-        deleteDirs = Seq(path, dlPath, ckpt))
+      IngestStream.searchIndexSink(src, table, newDir()).awaitTermination()
     }
   }
 
   /** The odd-doc half materialized as a 4-file dir so the file source
     * replays it as 4 micro-batches (same pattern as [[batchDocsDir]]). */
   private[graft] def oddDocsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "search_stream_docs_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_stream_docs_").toString
+    EpochRegistry.dirEpoch(s, dir, "search_stream_docs_dir") { path =>
       Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
         .repartition(4).write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
   /** The vector CDC event files — the embedding twin of
@@ -1787,9 +1547,7 @@ object StreamingQueries {
     * of the %20==4 wave (1 file, 3e6+vec_id). `event_seq` is strictly
     * increasing per id and deterministic for the DuckDB mirror. */
   private[graft] def cdcVecEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ann_cdc_events_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ann_cdc_events_").toString
+    EpochRegistry.dirEpoch(s, dir, "ann_cdc_events_dir") { path =>
       val emb = Tables.embeddings(s, dir)
       val dups = SimilarityQueries.dupVectors(emb)
         .filter(col("vec_id") >= 100000)
@@ -1814,36 +1572,37 @@ object StreamingQueries {
         .select(lit("INSERT").as("statement"), col("vec_id"),
           col("embedding"), (col("vec_id") + 3000000L).as("event_seq"))
         .repartition(1).write.mode("append").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
-  /** The vector CDC-maintenance epochs — [[searchCdcNamesFor]]'s twins,
-    * one per vector index family, all consuming the SAME event fixture
-    * ([[cdcVecEventsDir]]): the family's serving generation `base` is
-    * CLONED (frozen quantizers), CORRUPTED through the family's own
-    * append the way the event stream will heal (stale negated
-    * embeddings under the %20==0 dup ids, the %20==4 wave pre-inserted
-    * true, poison copies of the probe queries at ids ≥ 500000 — cos-1.0
-    * rank-1 twins), then the events drain through
-    * [[IngestStream.cdcFamilySink]] and
+  /** CDC: the family's CDC-maintenance epoch, keyed
+    * `<prefix>_cdc_index` — [[searchCdcNamesFor]]'s twin, every vector
+    * family (and the graph) consuming the SAME event fixture
+    * ([[cdcVecEventsDir]]): the family's serving generation
+    * ([[SimilarityQueries.base]]) is CLONED (frozen quantizers),
+    * CORRUPTED through the family's own append the way the event stream
+    * will heal (stale negated embeddings under the %20==0 dup ids, the
+    * %20==4 wave pre-inserted true, poison copies of the probe queries
+    * at ids ≥ 500000 — cos-1.0 rank-1 twins), then the events drain
+    * through [[IngestStream.cdcFamilySink]] and
     * [[IngestStream.settleFamilyUpserts]] writes the settled generation
     * — result-defined EQUAL to base ∪ dup-batch under the frozen
     * quantizers, which is exactly what the family's append/union oracle
-    * computes. `key` names the epoch, `prefix` its tables and dirs.
-    * The base and event-dir epochs resolve before the acquire (no
-    * nested computeIfAbsent). Returns (src, settled). */
-  private def vecCdcNamesFor(s: SparkSession, dir: String, key: String,
-      prefix: String, lc: SimilarityQueries.Lifecycle): (String, String) = {
+    * computes. The graph family differs in routing only: every event
+    * queues, and the settle prunes every touched or tombstoned id back
+    * to the base graph and walks the whole winner batch over it at
+    * once ([[GraphQueries.graphCdcProbeSql]] mirrors it). The base and
+    * event-dir epochs resolve before the acquire (no nested
+    * computeIfAbsent). Returns (src, settled). */
+  private[graft] def cdc(s: SparkSession, dir: String,
+      lc: SimilarityQueries.Lifecycle): (String, String) = {
     val family = lc.family
     val base = SimilarityQueries.base(s, dir, lc)
     val evDir = cdcVecEventsDir(s, dir)
-    val v = EpochRegistry.acquire(s, key, dir) { () =>
-      val src = s"graft_${prefix}_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = s"graft_${prefix}_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory(s"graft_${prefix}_").toString)
+    val kind = s"${lc.prefix}_cdc_index"
+    val v = EpochRegistry.acquire(s, kind, dir) { () =>
+      val src = s"graft_${lc.prefix}_cdc_src_" + freshId()
+      val dest = s"graft_${kind}_" + freshId()
+      val paths = Seq.fill(3)(tmpDir(s"graft_${kind}_"))
       family.cloneTo(s, base, src, paths(0))
       val emb = Tables.embeddings(s, dir)
       val dups = SimilarityQueries.dupVectors(emb)
@@ -1864,6 +1623,37 @@ object StreamingQueries {
     (src, dest)
   }
 
+  /** CDC POINTER: the [[cdc]] loop's settled generation served through
+    * a pointer view keyed `<prefix>_cdc_pointer_view` — every table of
+    * the family resolves from one atomically-promoted name, closing the
+    * capture → route → settle → PROMOTE → serve composition. */
+  private[graft] def cdcPointerView(s: SparkSession, dir: String,
+      lc: SimilarityQueries.Lifecycle): String =
+    EpochRegistry.pointerView(s, dir, s"${lc.prefix}_cdc_pointer_view",
+      cdc(s, dir, lc)._2, lc.family.tables)
+
+  /** The stream CDC entries of one served vector family, as (name,
+    * query, oracle SQL): the settled generation probed through `serve`
+    * (and audited through `audit`) against the union oracles, the
+    * settle monitor over the unsettled source, and the probe through
+    * the [[cdcPointerView]]. Every loop consumes the same event
+    * fixture, so all settle monitors share [[annCdcSettleCheckSql]]. */
+  private def cdcEntries(f: SimilarityQueries.Served)
+      : Seq[(String, (SparkSession, String) => DataFrame, String)] =
+    f.streamCdc.toSeq.flatMap { case (prefix, stages) =>
+      val settleCheck: (SparkSession, String) => DataFrame = (s, dir) =>
+        IngestStream.settleCheck(s, cdc(s, dir, f.lc)._1, idCol = "vec_id")
+      val all = Map(
+        "" -> (f.probed(cdc(_, _, _)._2), f.appendedSql),
+        "_recall" -> (f.audited(cdc(_, _, _)._2), f.appendedRecallSql),
+        "_settle_check" -> (settleCheck, annCdcSettleCheckSql),
+        "_published" -> (f.probed(cdcPointerView), f.appendedSql))
+      stages.map { stage =>
+        val (query, sql) = all(stage)
+        (s"${prefix}_cdc$stage", query, sql)
+      }
+    }
+
   /** One CDC loop end to end: the event files drain through the
     * family's sink one file per micro-batch, then the settle writes
     * `dest` under `settlePaths`. */
@@ -1875,48 +1665,6 @@ object StreamingQueries {
       Trigger.AvailableNow()).awaitTermination()
     IngestStream.settleFamilyUpserts(s, family, src, dest, settlePaths)
   }
-
-  /** IVF under the frozen coarse quantizer. */
-  private[graft] def ivfCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) =
-    vecCdcNamesFor(s, dir, "ann_cdc_index", "ann_cdc", SimilarityQueries.ivf)
-
-  private[graft] def ivfCdcIndexFor(s: SparkSession, dir: String): String =
-    ivfCdcNamesFor(s, dir)._2
-
-  /** Binary sign masks: the negated embeddings flip the %20==0 dup ids'
-    * masks, the poison copies are hamming-0 twins; the probe carries the
-    * binary union oracle. */
-  private[graft] def binaryCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) =
-    vecCdcNamesFor(s, dir, "binary_cdc_index", "binary_cdc",
-      SimilarityQueries.binary)
-
-  /** The Matryoshka prefix epoch (VERDICT r18 #1): a negated embedding
-    * is wrong on BOTH ranking passes; the probe carries the MRL union
-    * oracle. */
-  private[graft] def mrlCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) =
-    vecCdcNamesFor(s, dir, "mrl_cdc_index", "mrl_cdc", SimilarityQueries.mrl)
-
-  /** The kNN-graph generation: every event queues, the settle prunes
-    * every touched/tombstoned id back to the base graph and walks the
-    * whole winner batch over it at once — equal to base ∪ the clean
-    * append walk, exactly what [[GraphQueries.graphCdcProbeSql]]
-    * mirrors. */
-  private[graft] def graphCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) =
-    vecCdcNamesFor(s, dir, "graph_cdc_index", "graph_cdc", GraphQueries.graph)
-
-  /** The composite (both quantizers frozen): the settled generation
-    * shares `sim_ann_ivfpq_appended`'s oracle. */
-  private[graft] def ivfPqCdcNamesFor(s: SparkSession, dir: String)
-      : (String, String) =
-    vecCdcNamesFor(s, dir, "ann_ivfpq_cdc_index", "ivfpq_cdc",
-      SimilarityQueries.ivfPq)
-
-  private[graft] def ivfPqCdcIndexFor(s: SparkSession, dir: String): String =
-    ivfPqCdcNamesFor(s, dir)._2
 
   /** INCREMENTALLY-MAINTAINED co-purchase backbone (r17 — the graph
     * twin of the matview loop, CDC maintaining DERIVED GRAPH data): the
@@ -1937,9 +1685,8 @@ object StreamingQueries {
     * generation). */
   private[graft] def backboneCdcTableFor(s: SparkSession,
       dir: String): String =
-    EpochRegistry.acquire(s, "graph_backbone_cdc", dir) { () =>
-      val base = "graft_bb_cdc_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+    generation(s, dir, "graph_backbone_cdc",
+        (0 to 4).map(g => s"_g$g") :+ "_applied") { (base, newDir) =>
       val li = Tables.lineitem(s, dir)
       def pairs(rows: org.apache.spark.sql.DataFrame) = {
         val a = rows.select(col("l_orderkey").as("ok"),
@@ -1952,19 +1699,13 @@ object StreamingQueries {
       pairs(li.filter(col("l_orderkey") % 2 === 0))
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
         .write.format("parquet").saveAsTable(s"${base}_g0")
-      val dpath = java.nio.file.Files
-        .createTempDirectory("graft_bb_cdc_deltas_").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_bb_cdc_ckpt_").toString
+      val dpath = newDir()
       pairs(li.filter(col("l_orderkey") % 2 === 1))
         .withColumn("w", lit(1L))
         .repartition(4).write.mode("overwrite").parquet(dpath)
       val st = CdcStream.readEventStream(s, dpath, maxFilesPerTrigger = 1)
-      IngestStream.matviewSink(st, base, ckpt,
+      IngestStream.matviewSink(st, base, newDir(),
         keyCols = Seq("src", "dst"), countCol = "w").awaitTermination()
-      EpochRegistry.Resource(base,
-        dropTables = (0 to 4).map(g => s"${base}_g$g") :+ s"${base}_applied",
-        deleteDirs = Seq(dpath, ckpt))
     }
 
   /** The CDC event files: INSERTs of the odd half (2 files), UPDATEs
@@ -1981,9 +1722,7 @@ object StreamingQueries {
     * independent of micro-batch ARRIVAL order. Materialized as 5 files
     * so the file source replays it as 5 micro-batches. */
   private[graft] def cdcEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "search_cdc_events_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_cdc_events_").toString
+    EpochRegistry.dirEpoch(s, dir, "search_cdc_events_dir") { path =>
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 1)
         .select(lit("INSERT").as("statement"), col("doc_id"), col("text"),
@@ -2004,7 +1743,6 @@ object StreamingQueries {
         .select(lit("INSERT").as("statement"), col("doc_id"), col("text"),
           (col("doc_id") + 3000000L).as("event_seq"))
         .repartition(1).write.mode("append").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
   /** The streaming MATVIEW maintenance epoch (the aggregate twin of the
@@ -2017,17 +1755,16 @@ object StreamingQueries {
     * Delta application is commutative (signed sums), so arrival order
     * is immaterial and the settled view must equal the from-scratch
     * recompute — the probe reuses `cdc_matview_apply`'s full oracle. */
-  private[graft] def matviewCdcTableFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "matview_cdc_stream", dir) { () =>
-      val base = "graft_matview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_matview_ckpt_").toString
-      val evDir = java.nio.file.Files
-        .createTempDirectory("graft_matview_events_").toString
+  private[graft] def matviewCdcTableFor(s: SparkSession,
+      dir: String): String = {
+    val waves = CdcQueries.matviewDeltaWaves(s, dir)
+    generation(s, dir, "matview_cdc_stream",
+        (0 to waves.length).map(g => s"_g$g") :+ "_applied") {
+        (base, newDir) =>
+      val ckpt = newDir()
+      val evDir = newDir()
       CdcQueries.matviewBase(s, dir)
         .write.format("parquet").saveAsTable(s"${base}_g0")
-      val waves = CdcQueries.matviewDeltaWaves(s, dir)
       waves.head.repartition(1).write.mode("overwrite").parquet(evDir)
       waves.tail.foreach(
         _.repartition(1).write.mode("append").parquet(evDir))
@@ -2042,11 +1779,8 @@ object StreamingQueries {
         .option("maxFilesPerTrigger", 1).parquet(evDir)
       IngestStream.matviewSink(stream, base, ckpt,
         Seq("o_custkey"), "n_orders").awaitTermination()
-      EpochRegistry.Resource(base,
-        dropTables = (0 to waves.length).map(g => s"${base}_g$g") ++
-          Seq(s"${base}_applied"),
-        deleteDirs = Seq(ckpt, evDir))
     }
+  }
 
   /** The streaming SCD2 dimension: g0 is the EMPTY dimension, then the
     * four deterministic history-log waves (insert / reprice / restatus
@@ -2055,13 +1789,10 @@ object StreamingQueries {
     * the batch SCD2 recompute (`cdc_scd2_build`'s oracle), and the
     * as-of filter over it must match `cdc_time_travel`'s. */
   private[graft] def scd2CdcTableFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "scd2_cdc_stream", dir) { () =>
-      val base = "graft_scd2_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_scd2_ckpt_").toString
-      val evDir = java.nio.file.Files
-        .createTempDirectory("graft_scd2_events_").toString
+    generation(s, dir, "scd2_cdc_stream",
+        (0 to 4).map(g => s"_g$g") :+ "_applied") { (base, newDir) =>
+      val ckpt = newDir()
+      val evDir = newDir()
       val log = CdcQueries.historyLog(s, dir)
       log.filter(col("seq") === 1).limit(0)
         .select(col("o_orderkey"), col("seq").as("version"), col("status"),
@@ -2088,10 +1819,6 @@ object StreamingQueries {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(evDir)
       IngestStream.scd2Sink(stream, base, ckpt).awaitTermination()
-      EpochRegistry.Resource(base,
-        dropTables = (0 to 4).map(g => s"${base}_g$g") ++
-          Seq(s"${base}_applied"),
-        deleteDirs = Seq(ckpt, evDir))
     }
 
   /** The classifier loop's wave files: wave 1 = the dup batch (the
@@ -2121,9 +1848,7 @@ object StreamingQueries {
     * parquet file per wave → one micro-batch each under
     * maxFilesPerTrigger = 1. */
   private[graft] def dsirWavesDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "dsir_cdc_waves_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_dsir_cdc_waves_").toString
+    EpochRegistry.dirEpoch(s, dir, "dsir_cdc_waves_dir") { path =>
       val docs = Tables.documents(s, dir)
       // the +100000·w re-key AND the oracle's wave-membership window
       // [100000·w, 100000·(w+1)) both assume doc ids < 100000 — a
@@ -2139,21 +1864,7 @@ object StreamingQueries {
           .select((col("doc_id") + lit(100000L * w)).as("doc_id"),
             col("text"), lit(w.toLong).as("wave"))
       }
-      waves.zipWithIndex.foreach { case (w, i) =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_dsir_cdc_wave_part_")
-        w.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(path, s"w$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + i * 1000L)
-        tmp.toFile.listFiles().foreach(_.delete())
-        tmp.toFile.delete()
-        ()
-      }
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
+      writeOrderedFiles(path, "w", waves)
     }
 
   /** The DSIR CDC-maintenance epoch: generation 0 = the static target
@@ -2165,12 +1876,9 @@ object StreamingQueries {
     // child epoch resolved BEFORE the acquire (nested computeIfAbsent
     // on the registry map is the flaky "Recursive update")
     val wavesDir = dsirWavesDir(s, dir)
-    EpochRegistry.acquire(s, "dsir_cdc_loop", dir) { () =>
+    generation(s, dir, "dsir_cdc_loop", Seq("_tcounts", "_rcounts",
+        "_corpus", "_scores", "_applied")) { (base, newDir) =>
       import s.implicits._
-      val base = "graft_dsir_cdc_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_dsir_cdc_ckpt_").toString
       val docs = Tables.documents(s, dir)
       graft.operators.PipelineOps.dsirBucketCounts(
           docs.filter(col("lang") === "en"), "doc_id", "text", "ct")
@@ -2192,19 +1900,13 @@ object StreamingQueries {
           org.apache.spark.sql.types.LongType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(wavesDir)
-      IngestStream.dsirSink(stream, base, ckpt).awaitTermination()
-      EpochRegistry.Resource(base,
-        dropTables = Seq(s"${base}_tcounts", s"${base}_rcounts",
-          s"${base}_corpus", s"${base}_scores", s"${base}_applied"),
-        deleteDirs = Seq(ckpt))
+      IngestStream.dsirSink(stream, base, newDir()).awaitTermination()
     }
   }
 
   private[graft] def classifierWavesDir(s: SparkSession,
       dir: String): String =
-    EpochRegistry.acquire(s, "clf_cdc_waves_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_clf_cdc_waves_").toString
+    EpochRegistry.dirEpoch(s, dir, "clf_cdc_waves_dir") { path =>
       val docs = Tables.documents(s, dir)
       val waves = Seq(
         TextQueries.dupCorpus(docs).filter(col("doc_id") >= 100000)
@@ -2216,21 +1918,7 @@ object StreamingQueries {
         docs.filter(col("n_chars") >= 400)
           .select((col("doc_id") + 400000L).as("doc_id"), col("text"),
             col("n_chars"), lit(3L).as("wave")))
-      waves.zipWithIndex.foreach { case (w, i) =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_clf_cdc_wave_part_")
-        w.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(path, s"w$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + i * 1000L)
-        tmp.toFile.listFiles().foreach(_.delete())
-        tmp.toFile.delete()
-        ()
-      }
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
+      writeOrderedFiles(path, "w", waves)
     }
 
   /** The classifier CDC-maintenance epoch: generation 0 (trajectory +
@@ -2246,12 +1934,11 @@ object StreamingQueries {
     // child epoch resolved BEFORE the acquire (nested computeIfAbsent
     // on the registry map is the flaky "Recursive update")
     val wavesDir = classifierWavesDir(s, dir)
-    EpochRegistry.acquire(s, "clf_cdc_loop", dir) { () =>
+    val models = Seq("_model_g0", "_model_g1", "_model_g2")
+      .flatMap(g => Seq(g, s"${g}_bins", s"${g}_hist"))
+    generation(s, dir, "clf_cdc_loop", models ++ Seq("_serving", "_gens",
+        "_corpus", "_decisions", "_applied")) { (base, newDir) =>
       import s.implicits._
-      val base = "graft_clf_cdc_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_clf_cdc_ckpt_").toString
       val docs = Tables.documents(s, dir)
       // generation 0: the session-cached base trajectory + its bins +
       // the reference histogram the streaming monitor serves from
@@ -2286,45 +1973,31 @@ object StreamingQueries {
           org.apache.spark.sql.types.LongType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(wavesDir)
-      IngestStream.classifierSink(stream, base, ckpt,
+      IngestStream.classifierSink(stream, base, newDir(),
         baseDocs = docs.select(col("doc_id"), col("text"), col("n_chars")))
         .awaitTermination()
-      EpochRegistry.Resource(base,
-        dropTables = Seq(g0, s"${g0}_bins", s"${g0}_hist",
-          s"${base}_model_g1", s"${base}_model_g1_bins",
-          s"${base}_model_g1_hist", s"${base}_model_g2",
-          s"${base}_model_g2_bins", s"${base}_model_g2_hist",
-          s"${base}_serving", s"${base}_gens", s"${base}_corpus",
-          s"${base}_decisions", s"${base}_applied"),
-        deleteDirs = Seq(ckpt))
     }
   }
 
-  /** Media event files for the streaming decode loop: the synthetic
-    * PNG corpus written as 3 parquet files → 3 micro-batches under
-    * `maxFilesPerTrigger = 1`. */
-  private[graft] def mmEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "mm_events_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mm_events_").toString
-      graft.operators.Multimodal.syntheticImages(Tables.documents(s, dir))
-        .toDF().repartition(3)
+  /** One streaming media-decode loop: the synthetic corpus `media`
+    * builds over `documents` is written as 3 parquet files (the
+    * `eventsKind` epoch) and drains through `sink` as 3 micro-batches
+    * under `maxFilesPerTrigger = 1` (replay-guarded); the features
+    * accumulate in the `kind` epoch's table, which must equal the batch
+    * decode of the whole corpus, so each entry carries its batch
+    * twin's analytic oracle. The events dir resolves before the
+    * table's acquire. */
+  private def mediaStreamTable(s: SparkSession, dir: String,
+      eventsKind: String, kind: String,
+      media: DataFrame => org.apache.spark.sql.Dataset[
+        graft.operators.Multimodal.MediaRow],
+      sink: (DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): String = {
+    val evDir = EpochRegistry.dirEpoch(s, dir, eventsKind) { path =>
+      media(Tables.documents(s, dir)).toDF().repartition(3)
         .write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
-
-  /** The streaming-decode epoch: blobs drain through
-    * [[IngestStream.mmDecodeSink]] (3 micro-batches, replay-guarded),
-    * features accumulate in the result table — which must equal the
-    * batch decode of the whole corpus, so the probe carries
-    * `mm_decode_features`' full analytic oracle. */
-  private[graft] def mmDecodeTableFor(s: SparkSession, dir: String): String = {
-    val evDir = mmEventsDir(s, dir)
-    EpochRegistry.acquire(s, "mm_decode_stream", dir) { () =>
-      val table = "graft_mm_decode_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_mm_decode_ckpt_").toString
+    generation(s, dir, kind, Seq("", "_applied")) { (table, newDir) =>
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("media_id",
           org.apache.spark.sql.types.LongType),
@@ -2334,93 +2007,32 @@ object StreamingQueries {
           org.apache.spark.sql.types.BinaryType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(evDir)
-      IngestStream.mmDecodeSink(stream, table, ckpt).awaitTermination()
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_applied"),
-        deleteDirs = Seq(ckpt))
+      sink(stream, table, newDir()).awaitTermination()
     }
   }
 
-  /** Audio event files for the streaming decode loop — the WAV corpus
-    * as 3 parquet files → 3 micro-batches. */
-  private[graft] def mmAudioEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "mm_audio_events_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mm_audio_events_").toString
-      graft.operators.Multimodal.syntheticAudio(Tables.documents(s, dir))
-        .toDF().repartition(3)
-        .write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
-    }
+  /** PNG blobs through [[IngestStream.mmDecodeSink]] —
+    * `mm_decode_features`' oracle. */
+  private[graft] def mmDecodeTableFor(s: SparkSession, dir: String): String =
+    mediaStreamTable(s, dir, "mm_events_dir", "mm_decode_stream",
+      graft.operators.Multimodal.syntheticImages,
+      IngestStream.mmDecodeSink(_, _, _))
 
-  /** The streaming AUDIO-decode epoch ([[mmDecodeTableFor]]'s twin —
-    * the sixth ingestion family): WAV blobs drain through
-    * [[IngestStream.mmAudioDecodeSink]], features accumulate, and the
-    * table must equal the batch decode of the whole corpus, so the
-    * probe carries `mm_audio_features`' full analytic oracle. */
-  private[graft] def mmAudioTableFor(s: SparkSession, dir: String): String = {
-    val evDir = mmAudioEventsDir(s, dir)
-    EpochRegistry.acquire(s, "mm_audio_stream", dir) { () =>
-      val table = "graft_mm_audio_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_mm_audio_ckpt_").toString
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("media_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("media",
-          org.apache.spark.sql.types.BinaryType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(evDir)
-      IngestStream.mmAudioDecodeSink(stream, table, ckpt).awaitTermination()
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_applied"),
-        deleteDirs = Seq(ckpt))
-    }
-  }
+  /** WAV blobs through [[IngestStream.mmAudioDecodeSink]] (the sixth
+    * ingestion family) — `mm_audio_features`' oracle. */
+  private[graft] def mmAudioTableFor(s: SparkSession, dir: String): String =
+    mediaStreamTable(s, dir, "mm_audio_events_dir", "mm_audio_stream",
+      graft.operators.Multimodal.syntheticAudio,
+      IngestStream.mmAudioDecodeSink(_, _, _))
 
-  /** Video event files for the streaming decode loop — the GIF clip
-    * corpus as 3 parquet files → 3 micro-batches. */
-  private[graft] def mmVideoEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "mm_video_events_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mm_video_events_").toString
-      graft.operators.Multimodal.syntheticVideos(Tables.documents(s, dir))
-        .toDF().repartition(3)
-        .write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
-    }
-
-  /** The streaming VIDEO-decode epoch ([[mmDecodeTableFor]]'s clip
-    * twin — the modality × streaming matrix's last cell): GIF blobs
-    * drain through [[IngestStream.mmVideoDecodeSink]] (real ImageIO
-    * sequence reads per trigger, replay-guarded appends) and the
-    * accumulated per-frame features must equal the batch decode of the
-    * whole corpus — `mm_video_frames`' closed-form raster oracle. */
-  private[graft] def mmVideoTableFor(s: SparkSession, dir: String): String = {
-    val evDir = mmVideoEventsDir(s, dir)
-    EpochRegistry.acquire(s, "mm_video_stream", dir) { () =>
-      val table = "graft_mm_video_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_mm_video_ckpt_").toString
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("media_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("media",
-          org.apache.spark.sql.types.BinaryType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(evDir)
-      IngestStream.mmVideoDecodeSink(stream, table, ckpt).awaitTermination()
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_applied"),
-        deleteDirs = Seq(ckpt))
-    }
-  }
+  /** GIF clip blobs through [[IngestStream.mmVideoDecodeSink]] (real
+    * ImageIO sequence reads per trigger — the modality × streaming
+    * matrix's last cell) — `mm_video_frames`' closed-form raster
+    * oracle. */
+  private[graft] def mmVideoTableFor(s: SparkSession, dir: String): String =
+    mediaStreamTable(s, dir, "mm_video_events_dir", "mm_video_stream",
+      graft.operators.Multimodal.syntheticVideos,
+      IngestStream.mmVideoDecodeSink(_, _, _))
 
   /** TWO same-doc UPDATEs in ONE micro-batch (VERDICT r13 #6 — the
     * within-batch ordinal gate): a SINGLE event file (1 file = 1
@@ -2431,9 +2043,7 @@ object StreamingQueries {
     * `event_seq` can order them — with batchId-granularity stamps the
     * two rows would tie, the documented relaxation this gate closes. */
   private[graft] def twoUpdateEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "search_cdc_two_upd_events", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_cdc_two_upd_events_").toString
+    EpochRegistry.dirEpoch(s, dir, "search_cdc_two_upd_events") { path =>
       val docs = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
       docs.select(lit("UPDATE").as("statement"), col("doc_id"),
           concat(lit("spark vector window spark vector window "),
@@ -2442,7 +2052,6 @@ object StreamingQueries {
         .unionByName(docs.select(lit("UPDATE").as("statement"), col("doc_id"),
           col("text"), (col("doc_id") + 2000000L).as("event_seq")))
         .repartition(1).write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
   /** The two-updates-one-batch epoch: the initial generation serves
@@ -2456,12 +2065,9 @@ object StreamingQueries {
       dir: String): String = {
     val evDir = twoUpdateEventsDir(s, dir)
     EpochRegistry.acquire(s, "search_cdc_two_upd_index", dir) { () =>
-      val src = "graft_search_cdc2u_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_search_cdc2u_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 5).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_search_cdc2u_").toString)
+      val src = "graft_search_cdc2u_src_" + freshId()
+      val dest = "graft_search_cdc2u_index_" + freshId()
+      val paths = Seq.fill(5)(tmpDir("graft_search_cdc2u_"))
       val docs = Tables.documents(s, dir)
       val stale = docs.select(col("doc_id"),
         when(col("doc_id") % 10 === 0, concat(lit("xstale "), col("text")))
@@ -2493,12 +2099,9 @@ object StreamingQueries {
       : (String, String) = {
     val evDir = cdcEventsDir(s, dir)
     val v = EpochRegistry.acquire(s, "search_cdc_index", dir) { () =>
-      val src = "graft_search_cdc_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_search_cdc_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 5).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_search_cdc_").toString)
+      val src = "graft_search_cdc_src_" + freshId()
+      val dest = "graft_search_cdc_index_" + freshId()
+      val paths = Seq.fill(5)(tmpDir("graft_search_cdc_"))
       val docs = Tables.documents(s, dir)
       val stale = docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"),
@@ -2533,9 +2136,7 @@ object StreamingQueries {
     * per doc and deterministic for the DuckDB mirror, so the settled
     * result is independent of micro-batch arrival order. */
   private[graft] def bandCdcEventsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "band_cdc_events_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_band_cdc_events_").toString
+    EpochRegistry.dirEpoch(s, dir, "band_cdc_events_dir") { path =>
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 1)
         .select(lit("INSERT").as("statement"), col("doc_id"), col("text"),
@@ -2556,7 +2157,6 @@ object StreamingQueries {
         .select(lit("INSERT").as("statement"), col("doc_id"), col("text"),
           (col("doc_id") + 3000000L).as("event_seq"))
         .repartition(1).write.mode("append").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 
   /** The band CDC-maintenance epoch — [[IndexFamily.band]] through
@@ -2577,12 +2177,9 @@ object StreamingQueries {
       : (String, String) = {
     val evDir = bandCdcEventsDir(s, dir)
     val v = EpochRegistry.acquire(s, "band_cdc_index", dir) { () =>
-      val src = "graft_band_cdc_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_band_cdc_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 3).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_band_cdc_").toString)
+      val src = "graft_band_cdc_src_" + freshId()
+      val dest = "graft_band_cdc_index_" + freshId()
+      val paths = Seq.fill(3)(tmpDir("graft_band_cdc_"))
       val corpus = TextQueries.dupCorpus(Tables.documents(s, dir))
       val stale = corpus
         .filter(col("doc_id") < 100000 && col("doc_id") % 2 === 0)
@@ -2617,53 +2214,17 @@ object StreamingQueries {
   private[graft] def searchCdcViewFor(s: SparkSession, dir: String): String = {
     val settled = searchCdcIndexFor(s, dir)
     EpochRegistry.acquire(s, "search_cdc_view", dir) { () =>
-      val view = "graft_search_cdc_view_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val view = "graft_search_cdc_view_" + freshId()
       graft.operators.Generations.publishSearch(s, view, settled)
       EpochRegistry.Resource(view,
         dropTables = Seq(view, s"${settled}_tombstones"))
     }
   }
 
-  /** A CDC loop's settled generation served through
-    * [[graft.operators.Generations.publishPointer]] — every table of the
-    * family resolves from one atomically-promoted name, closing the
-    * capture → route → settle → PROMOTE → serve composition. `settled`
-    * is resolved by the caller, before this epoch's acquire (no nested
-    * computeIfAbsent). */
-  private def cdcPointerViewFor(s: SparkSession, dir: String, key: String,
-      prefix: String, family: IndexFamily, settled: String): String =
-    EpochRegistry.acquire(s, key, dir) { () =>
-      val view = prefix +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, settled,
-        suffixes = family.tables)
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-
-  private[graft] def ivfCdcViewFor(s: SparkSession, dir: String): String =
-    cdcPointerViewFor(s, dir, "ivf_cdc_view", "graft_ivf_cdc_view_",
-      IndexFamily.ivf, ivfCdcIndexFor(s, dir))
-
-  private[graft] def binaryCdcViewFor(s: SparkSession, dir: String): String =
-    cdcPointerViewFor(s, dir, "binary_cdc_view", "graft_binary_cdc_view_",
-      IndexFamily.binary, binaryCdcNamesFor(s, dir)._2)
-
-  private[graft] def mrlCdcViewFor(s: SparkSession, dir: String): String =
-    cdcPointerViewFor(s, dir, "mrl_cdc_view", "graft_mrl_cdc_view_",
-      IndexFamily.mrl, mrlCdcNamesFor(s, dir)._2)
-
-  private[graft] def graphCdcViewFor(s: SparkSession, dir: String): String =
-    cdcPointerViewFor(s, dir, "graph_cdc_view", "graft_graph_cdc_pview_",
-      IndexFamily.graph, graphCdcNamesFor(s, dir)._2)
-
-  private[graft] def ivfPqCdcViewFor(s: SparkSession, dir: String): String =
-    cdcPointerViewFor(s, dir, "ivfpq_cdc_view", "graft_ivfpq_cdc_view_",
-      IndexFamily.ivfPq(8, 64), ivfPqCdcIndexFor(s, dir))
-
+  /** The band CDC loop's settled generation behind a pointer view. */
   private[graft] def bandCdcViewFor(s: SparkSession, dir: String): String =
-    cdcPointerViewFor(s, dir, "band_cdc_view", "graft_band_cdc_view_",
-      IndexFamily.band(32), bandCdcIndexFor(s, dir))
+    EpochRegistry.pointerView(s, dir, "band_cdc_view",
+      bandCdcIndexFor(s, dir), Seq(""))
 
   /** The continuous-clustering epoch: a WORKING clone of the serving
     * band index (the sink appends each drained batch to it — the
@@ -2680,22 +2241,15 @@ object StreamingQueries {
     val baseIndex = TextQueries.bandIndexFor(s, dir)
     val baseLabels = TextQueries.clusterLabelsFor(s, dir)
     val docsDir = batchDocsDir(s, dir)
-    EpochRegistry.acquire(s, "cluster_stream_labels", dir) { () =>
-      val work = "graft_cluster_stream_idx_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val labels = "graft_cluster_stream_lbl_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_cluster_stream_").toString)
-      graft.operators.Dedup.cloneBandIndex(s, baseIndex, work, paths(0))
+    generation(s, dir, "cluster_stream_labels",
+        Seq("_idx", "", "_applied")) { (labels, newDir) =>
+      val work = s"${labels}_idx"
+      graft.operators.Dedup.cloneBandIndex(s, baseIndex, work, newDir())
       s.table(baseLabels).write.mode("overwrite").format("parquet")
         .saveAsTable(labels)
       val src = CdcStream.readEventStream(s, docsDir, maxFilesPerTrigger = 1)
-      IngestStream.clusterSink(src, work, labels, paths(1))
+      IngestStream.clusterSink(src, work, labels, newDir())
         .awaitTermination()
-      EpochRegistry.Resource(labels,
-        dropTables = Seq(work, labels, s"${labels}_applied"),
-        deleteDirs = paths)
     }
   }
 
@@ -2705,13 +2259,28 @@ object StreamingQueries {
     * the dir when the owning session's context stops). Range
     * partitioning (not round-robin) keeps file contents deterministic. */
   private[graft] def eventsStreamDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "events_stream_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_events_stream_").toString
+    EpochRegistry.dirEpoch(s, dir, "events_stream_dir") { path =>
       Tables.events(s, dir).drop("ts")
         .repartitionByRange(4, col("event_id"))
         .write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
+    }
+
+  /** Frame i written as the ONE file `<name><i>.parquet` under `path`,
+    * with ascending mtimes: a one-file-per-trigger source then drains
+    * the frames in order, as one micro-batch each. */
+  private def writeOrderedFiles(path: String, name: String,
+      frames: Seq[DataFrame]): Unit =
+    frames.zipWithIndex.foreach { case (frame, i) =>
+      val tmp = new java.io.File(tmpDir(s"graft_${name}_part_"))
+      frame.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.listFiles()
+        .find(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet")).get
+      val dst = java.nio.file.Paths.get(path, s"$name$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst)
+      dst.toFile.setLastModified(1700000000000L + i * 1000L)
+      tmp.listFiles().foreach(_.delete())
+      tmp.delete()
     }
 
   /** DETERMINISTIC 4-file event stream (r16 — built to make the
@@ -2724,27 +2293,12 @@ object StreamingQueries {
     * event is then "all events in lower buckets", a window the oracle
     * computes exactly. */
   private[graft] def anomalyStreamDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "anomaly_stream_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_anomaly_stream_").toString
+    EpochRegistry.dirEpoch(s, dir, "anomaly_stream_dir") { path =>
       val ev = Tables.events(s, dir).drop("ts")
       // plan-time scalar: the bucket formula's denominator
       val maxId = ev.agg(max(col("event_id"))).collect()(0).getLong(0)
-      (0 until 4).foreach { b =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_anomaly_part_")
-        ev.filter(expr(s"event_id * 4 div ${maxId + 1}") === b)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(path, s"b$b.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + b * 1000L)
-        tmp.toFile.listFiles().foreach(_.delete())
-        tmp.toFile.delete()
-      }
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
+      writeOrderedFiles(path, "b", (0 until 4).map(b =>
+        ev.filter(expr(s"event_id * 4 div ${maxId + 1}") === b)))
     }
 
   /** The arriving-batch doc set materialized once per (session, dir) as
@@ -2752,12 +2306,9 @@ object StreamingQueries {
     * multiple micro-batches (same epoch-cache pattern and
     * [[EpochRegistry]] lifecycle as [[TextQueries.bandIndexFor]]). */
   private[graft] def batchDocsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "ingest_docs_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ingest_docs_").toString
+    EpochRegistry.dirEpoch(s, dir, "ingest_docs_dir") { path =>
       TextQueries.dupCorpus(Tables.documents(s, dir))
         .filter(col("doc_id") >= 100000)
         .repartition(4).write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
     }
 }

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{Classifier, Dedup, SearchOps, TextOps}
+import graft.EpochRegistry.{freshId, generation, tmpDir}
 
 /** Text analysis + deduplication over `documents` (SURVEY §2.3).
   *
@@ -34,9 +35,7 @@ object TextQueries {
     * generation. */
   private[graft] def classifierModelFor(s: SparkSession,
       dir: String): String =
-    EpochRegistry.acquire(s, "clf_model", dir) { () =>
-      val table = "graft_clf_model_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+    generation(s, dir, "clf_model", Seq("", "_bins")) { (table, _) =>
       val docs = Tables.documents(s, dir)
       val traj = Classifier.trajectoryFor(s, docs, dir)
       import s.implicits._
@@ -46,24 +45,15 @@ object TextQueries {
         .write.format("parquet").saveAsTable(table)
       Classifier.binEdges(Classifier.labeledFeatures(docs))
         .write.format("parquet").saveAsTable(s"${table}_bins")
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_bins"))
     }
 
   /** Atomic pointer serving for the model generation — trajectory and
     * bins resolve together ([[graft.operators.Generations
     * .publishPointer]]), promotion is one view replace. */
   private[graft] def classifierViewFor(s: SparkSession,
-      dir: String): String = {
-    val gen = classifierModelFor(s, dir)
-    EpochRegistry.acquire(s, "clf_model_view", dir) { () =>
-      val view = "graft_clf_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, gen,
-        suffixes = Seq("", "_bins"))
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+      dir: String): String =
+    EpochRegistry.pointerView(s, dir, "clf_model_view",
+      classifierModelFor(s, dir), Seq("", "_bins"))
 
   /** The RETRAINED trajectory: the short-doc crawl wave (re-badged
     * +300000 — a fresh drifted observation, not the dup fixture's ids)
@@ -82,6 +72,19 @@ object TextQueries {
       dir + "#retrained")
   }
 
+  /** Epoch-materialized tf·idf postings (doc_id, token, wq) with the
+    * df ≤ 10% stopword prune — built once per (session, dataset), read
+    * as parquet by every stage of the doc-similarity probe. */
+  private[graft] def tfidfWeightsDir(s: SparkSession, dir: String): String =
+    EpochRegistry.dirEpoch(s, dir, "tfidf_weights_dir") { path =>
+      TextOps.tfidfWeights(Tables.documents(s, dir), "doc_id", "text",
+          // the synthetic corpus has a ~31-token vocabulary, so ANY df
+          // prune empties most docs' postings — disabled here; a real
+          // corpus would pass ~10
+          maxDfPct = 100)
+        .write.mode("overwrite").parquet(path)
+    }
+
   /** One materialized band index per (session, dir) "epoch", built lazily
     * on first use into a unique table name + fresh temp directory —
     * concurrent sessions (or two dirs) can never collide on a shared name
@@ -92,33 +95,11 @@ object TextQueries {
     * and temp dir when the owning session's context stops — mirroring
     * the 100 TB contract: write once per full-dedup epoch, probe on
     * every arriving batch. */
-  /** Epoch-materialized tf·idf postings (doc_id, token, wq) with the
-    * df ≤ 10% stopword prune — built once per (session, dataset), read
-    * as parquet by every stage of the doc-similarity probe. */
-  private[graft] def tfidfWeightsDir(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "tfidf_weights_dir", dir) { () =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_tfidf_weights_").toString
-      TextOps.tfidfWeights(Tables.documents(s, dir), "doc_id", "text",
-          // the synthetic corpus has a ~31-token vocabulary, so ANY df
-          // prune empties most docs' postings — disabled here; a real
-          // corpus would pass ~10
-          maxDfPct = 100)
-        .write.mode("overwrite").parquet(path)
-      EpochRegistry.Resource(path, deleteDirs = Seq(path))
-    }
-
   private[graft] def bandIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "band_index", dir) { () =>
-      val table = "graft_band_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_band_index_").toString
+    generation(s, dir, "band_index", Seq("")) { (t, newDir) =>
       Dedup.writeBandIndex(
         dupCorpus(Tables.documents(s, dir)).filter(col("doc_id") < 100000),
-        "doc_id", "text", table, path)
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
+        "doc_id", "text", t, newDir())
     }
 
   /** The append-maintenance epoch for the band index: the serving index
@@ -133,17 +114,11 @@ object TextQueries {
     * map can deadlock on bin contention). */
   private[graft] def bandAppendIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
-    EpochRegistry.acquire(s, "band_append_index", dir) { () =>
-      val table = "graft_band_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_band_append_index_").toString
-      Dedup.cloneBandIndex(s, base, table, path)
-      Dedup.appendToBandIndex(s, table,
+    generation(s, dir, "band_append_index", Seq("")) { (t, newDir) =>
+      Dedup.cloneBandIndex(s, base, t, newDir())
+      Dedup.appendToBandIndex(s, t,
         dupCorpus(Tables.documents(s, dir)).filter(col("doc_id") >= 200000),
         "doc_id", "text")
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
     }
   }
 
@@ -155,15 +130,8 @@ object TextQueries {
     * DEFINED result-invisible, so it shares that oracle. */
   private[graft] def bandCompactIndexFor(s: SparkSession, dir: String): String = {
     val base = bandAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "band_compact_index", dir) { () =>
-      val table = "graft_band_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_band_compact_index_").toString
-      Dedup.compactBandIndex(s, base, table, path)
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
-    }
+    generation(s, dir, "band_compact_index", Seq(""))((t, newDir) =>
+      Dedup.compactBandIndex(s, base, t, newDir()))
   }
 
   /** The band UPDATE epoch: the serving generation is cloned, CORRUPTED
@@ -177,12 +145,9 @@ object TextQueries {
   private[graft] def bandUpsertIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
     EpochRegistry.acquire(s, "band_upsert_index", dir) { () =>
-      val corrupt = "graft_band_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_band_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 2).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_band_upsert_").toString)
+      val corrupt = "graft_band_upsert_src_" + freshId()
+      val dest = "graft_band_upsert_index_" + freshId()
+      val paths = Seq.fill(2)(tmpDir("graft_band_upsert_"))
       val corpus = dupCorpus(Tables.documents(s, dir))
       val originals = corpus.filter(col("doc_id") < 100000)
       // probe-batch texts re-badged under existing corpus ids (k+1 for
@@ -209,18 +174,12 @@ object TextQueries {
     * each arriving batch into THIS table instead of re-walking the full
     * pair graph. */
   private[graft] def clusterLabelsFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "cluster_labels", dir) { () =>
-      val table = "graft_cluster_labels_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_cluster_labels_").toString
+    generation(s, dir, "cluster_labels", Seq("")) { (t, newDir) =>
       Dedup.nearDupClusters(Dedup.minhashPairs(
           dupCorpus(Tables.documents(s, dir)).filter(col("doc_id") < 100000),
           "doc_id", "text", numHashes = 8, numBands = 4, threshold = 0.5))
         .write.mode("overwrite").format("parquet")
-        .option("path", path).saveAsTable(table)
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
+        .option("path", newDir()).saveAsTable(t)
     }
 
   /** The band pointer-serving epoch (the band family's atomic
@@ -229,15 +188,9 @@ object TextQueries {
     * the tombstone sidecar resolve from the same atomically-flipped
     * generation, and the bucketed probe plan is unchanged. The gated
     * probe must hash-match `dedup_incremental_indexed`'s oracle. */
-  private[graft] def bandPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = bandIndexFor(s, dir)
-    EpochRegistry.acquire(s, "band_pointer_view", dir) { () =>
-      val view = "graft_band_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base)
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+  private[graft] def bandPointerViewFor(s: SparkSession, dir: String): String =
+    EpochRegistry.pointerView(s, dir, "band_pointer_view",
+      bandIndexFor(s, dir), Seq(""))
 
   /** The band re-shard epoch: the serving generation rewritten under a
     * FINER bucket count (32 → 64) via [[Dedup.reshardBandIndex]] — the
@@ -248,35 +201,19 @@ object TextQueries {
     * bit-identical. Base resolved before the acquire. */
   private[graft] def bandReshardIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
-    EpochRegistry.acquire(s, "band_reshard_index", dir) { () =>
-      val table = "graft_band_reshard_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_band_reshard_index_").toString
-      Dedup.reshardBandIndex(s, base, table, path, newNumBuckets = 64)
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
-    }
+    generation(s, dir, "band_reshard_index", Seq(""))((t, newDir) =>
+      Dedup.reshardBandIndex(s, base, t, newDir(), newNumBuckets = 64))
   }
 
-  /** One persisted search index per (session, dir) epoch — the text
-    * twin of [[bandIndexFor]]/[[SimilarityQueries.base]] (same
-    * UUID-unique isolation and [[EpochRegistry]] lifecycle). */
   /** The gram-index epoch for incremental span dedup: the even-id docs
     * are the standing corpus ([[graft.operators.Dedup.writeGramIndex]]),
     * probed by the odd-id "batch" — same acquire/reclaim contract as
     * every index epoch here. */
   private[graft] def gramIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "gram_index", dir) { () =>
-      val table = "graft_gram_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_gram_index_").toString
+    generation(s, dir, "gram_index", Seq("")) { (t, newDir) =>
       Dedup.writeGramIndex(
         Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
-        "doc_id", "text", table, path)
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
+        "doc_id", "text", t, newDir())
     }
 
   /** The GROWN gram-index epoch: half the even docs indexed, the other
@@ -284,18 +221,12 @@ object TextQueries {
     * per wave, the compaction debt [[gramCompactedIndexFor]] settles
     * and `dedup_span_compaction_check` measures. */
   private[graft] def gramGrownIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "gram_grown_index", dir) { () =>
-      val grow = "graft_gram_grow_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val growPath = java.nio.file.Files
-        .createTempDirectory("graft_gram_grow_").toString
+    generation(s, dir, "gram_grown_index", Seq("")) { (t, newDir) =>
       val docs = Tables.documents(s, dir)
       Dedup.writeGramIndex(docs.filter(col("doc_id") % 4 === 0),
-        "doc_id", "text", grow, growPath)
-      Dedup.appendToGramIndex(s, grow,
+        "doc_id", "text", t, newDir())
+      Dedup.appendToGramIndex(s, t,
         docs.filter(col("doc_id") % 4 === 2), "doc_id", "text")
-      EpochRegistry.Resource(grow, dropTables = Seq(grow),
-        deleteDirs = Seq(growPath))
     }
 
   /** [[gramGrownIndexFor]] settled by [[graft.operators.Dedup
@@ -305,45 +236,30 @@ object TextQueries {
     * discipline). */
   private[graft] def gramCompactedIndexFor(s: SparkSession, dir: String): String = {
     val grow = gramGrownIndexFor(s, dir)
-    EpochRegistry.acquire(s, "gram_compacted_index", dir) { () =>
-      val dest = "graft_gram_compact_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val destPath = java.nio.file.Files
-        .createTempDirectory("graft_gram_compact_").toString
-      Dedup.compactGramIndex(s, grow, dest, destPath)
-      EpochRegistry.Resource(dest, dropTables = Seq(dest),
-        deleteDirs = Seq(destPath))
-    }
+    generation(s, dir, "gram_compacted_index", Seq(""))((t, newDir) =>
+      Dedup.compactGramIndex(s, grow, t, newDir()))
   }
 
   /** [[gramIndexFor]] behind [[graft.operators.Generations
     * .publishPointer]] indirection — the same epoch-cached pointer view
     * the IVF families use ([[SimilarityQueries.pointer]]). */
-  private[graft] def gramPointerViewFor(s: SparkSession, dir: String): String = {
-    val base = gramIndexFor(s, dir)
-    EpochRegistry.acquire(s, "gram_pointer_view", dir) { () =>
-      val view = "graft_gram_pview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.operators.Generations.publishPointer(s, view, base)
-      EpochRegistry.Resource(view, dropTables = Seq(view))
-    }
-  }
+  private[graft] def gramPointerViewFor(s: SparkSession, dir: String): String =
+    EpochRegistry.pointerView(s, dir, "gram_pointer_view",
+      gramIndexFor(s, dir), Seq(""))
 
+  /** The tables one search generation holds: postings and the BM25
+    * norms sidecar. */
+  private val searchTables = Seq("", "_doclens")
+
+  /** One persisted search index per (session, dir) epoch — the text
+    * twin of [[bandIndexFor]]/[[SimilarityQueries.base]] (same
+    * UUID-unique isolation and [[EpochRegistry]] lifecycle). */
   private[graft] def searchIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "search_index", dir) { () =>
-      val table = "graft_search_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_index_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_index_dl_").toString
+    generation(s, dir, "search_index", searchTables) { (t, newDir) =>
       SearchOps.writeSearchIndex(Tables.documents(s, dir), "doc_id", "text",
-        table, path)
+        t, newDir())
       // the BM25 norms sidecar, derived from the postings just written
-      SearchOps.writeDocLengths(s, table, dlPath)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_doclens"),
-        deleteDirs = Seq(path, dlPath))
+      SearchOps.writeDocLengths(s, t, newDir())
     }
 
   /** Doc-id bucket count for the late-interaction token-vector epoch:
@@ -359,11 +275,7 @@ object TextQueries {
     * pruned index READ instead of candidate tokenization + hashing —
     * the corpus text is never touched at probe time. */
   private[graft] def tokenVecIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "token_vec_index", dir) { () =>
-      val table = "graft_tokvec_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_tokvec_index_").toString
+    generation(s, dir, "token_vec_index", Seq("")) { (t, newDir) =>
       // r21: a spread + bucket-keyed-exchange rewrite of this write was
       // measured min-of-3 and REVERTED (1.77 -> 2.79 s at local[32] —
       // stage overhead beat the parallelized tokenize; see the
@@ -374,9 +286,7 @@ object TextQueries {
         .withColumn("tv", TextOps.hashTokenVecExpr("tok"))
         .withColumn("bucket", pmod(col("doc_id"), lit(tokenVecBuckets)))
         .write.mode("overwrite").format("parquet").partitionBy("bucket")
-        .option("path", path).saveAsTable(table)
-      EpochRegistry.Resource(table, dropTables = Seq(table),
-        deleteDirs = Seq(path))
+        .option("path", newDir()).saveAsTable(t)
     }
 
   /** The search-index append epoch: built from the even-id docs, the
@@ -385,27 +295,18 @@ object TextQueries {
     * [[searchIndexFor]]'s. Separate kind: appending to the shared
     * search index would double `text_search_indexed`'s postings. */
   private[graft] def searchAppendIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "search_append_index", dir) { () =>
-      val table = "graft_search_append_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_append_index_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_append_index_dl_").toString
+    generation(s, dir, "search_append_index", searchTables) { (t, newDir) =>
       val docs = Tables.documents(s, dir)
       SearchOps.writeSearchIndex(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text", table, path)
+        "doc_id", "text", t, newDir())
       // the norms sidecar grows WITH the postings: built from the even
       // docs, appended for the odd batch — so the BM25 probe over the
       // grown generation is gated by the same all-docs oracle
-      SearchOps.writeDocLengths(s, table, dlPath)
-      SearchOps.appendToSearchIndex(s, table,
+      SearchOps.writeDocLengths(s, t, newDir())
+      SearchOps.appendToSearchIndex(s, t,
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
-      SearchOps.appendDocLengths(s, table,
+      SearchOps.appendDocLengths(s, t,
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_doclens"),
-        deleteDirs = Seq(path, dlPath))
     }
 
   /** The search-index compaction epoch: [[searchAppendIndexFor]]'s
@@ -414,22 +315,13 @@ object TextQueries {
     * all-docs oracle with the indexed/appended probes. */
   private[graft] def searchCompactIndexFor(s: SparkSession, dir: String): String = {
     val base = searchAppendIndexFor(s, dir)
-    EpochRegistry.acquire(s, "search_compact_index", dir) { () =>
-      val table = "graft_search_compact_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_compact_index_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_compact_index_dl_").toString
-      SearchOps.compactSearchIndex(s, base, table, path)
+    generation(s, dir, "search_compact_index", searchTables) { (t, newDir) =>
+      SearchOps.compactSearchIndex(s, base, t, newDir())
       // the compacted generation gets a FRESH norms sidecar derived from
       // its own postings (dl = Σ tf — exact by construction, and the
       // derivation also collapses the append epoch's sidecar files), so
       // ranked retrieval works across the whole lifecycle
-      SearchOps.writeDocLengths(s, table, dlPath)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_doclens"),
-        deleteDirs = Seq(path, dlPath))
+      SearchOps.writeDocLengths(s, t, newDir())
     }
   }
 
@@ -442,19 +334,9 @@ object TextQueries {
     * still bucket-prunes against the NEW count (ReshardSpec pins it). */
   private[graft] def searchReshardIndexFor(s: SparkSession, dir: String): String = {
     val base = searchIndexFor(s, dir)
-    EpochRegistry.acquire(s, "search_reshard_index", dir) { () =>
-      val table = "graft_search_reshard_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_reshard_index_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_reshard_index_dl_").toString
-      SearchOps.reshardSearchIndex(s, base, table, path, dlPath,
-        newNumBuckets = 16)
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_doclens"),
-        deleteDirs = Seq(path, dlPath))
-    }
+    generation(s, dir, "search_reshard_index", searchTables)((t, newDir) =>
+      SearchOps.reshardSearchIndex(s, base, t, newDir(), newDir(),
+        newNumBuckets = 16))
   }
 
   /** The view-flip serving epoch (VERDICT r11 #4): the serving search
@@ -468,8 +350,7 @@ object TextQueries {
   private[graft] def searchViewFor(s: SparkSession, dir: String): String = {
     val base = searchIndexFor(s, dir)
     EpochRegistry.acquire(s, "search_view", dir) { () =>
-      val view = "graft_search_view_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val view = "graft_search_view_" + freshId()
       graft.operators.Generations.publish(s, view, base,
         suffixes = Seq("", "_doclens"))
       EpochRegistry.Resource(view,
@@ -489,14 +370,10 @@ object TextQueries {
   private[graft] def searchAtomicViewFor(s: SparkSession, dir: String): String = {
     val base = searchIndexFor(s, dir)
     EpochRegistry.acquire(s, "search_atomic_view", dir) { () =>
-      val gen = "graft_search_aview_gen_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val view = "graft_search_aview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_aview_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_aview_dl_").toString
+      val gen = "graft_search_aview_gen_" + freshId()
+      val view = "graft_search_aview_" + freshId()
+      val path = tmpDir("graft_search_aview_")
+      val dlPath = tmpDir("graft_search_aview_dl_")
       SearchOps.cloneSearchIndex(s, base, gen, path)
       SearchOps.writeDocLengths(s, gen, dlPath)
       graft.operators.Generations.publishSearch(s, view, gen)
@@ -514,8 +391,7 @@ object TextQueries {
   private[graft] def searchDeletedViewFor(s: SparkSession, dir: String): String = {
     val base = searchDeleteIndexFor(s, dir)
     EpochRegistry.acquire(s, "search_deleted_view", dir) { () =>
-      val view = "graft_search_dview_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val view = "graft_search_dview_" + freshId()
       graft.operators.Generations.publishSearch(s, view, base)
       EpochRegistry.Resource(view, dropTables = Seq(view))
     }
@@ -530,22 +406,14 @@ object TextQueries {
     * counts, AND the corpus stats (n_docs, Σdl) — any leak shifts every
     * BM25 score, not just the poison's rank. */
   private[graft] def searchDeleteIndexFor(s: SparkSession, dir: String): String =
-    EpochRegistry.acquire(s, "search_delete_index", dir) { () =>
-      val table = "graft_search_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_search_delete_index_").toString
-      val dlPath = java.nio.file.Files
-        .createTempDirectory("graft_search_delete_index_dl_").toString
+    generation(s, dir, "search_delete_index",
+        searchTables :+ "_tombstones") { (t, newDir) =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val poison = poisonSearchDocs(s, dir)
       SearchOps.writeSearchIndex(docs.unionByName(poison), "doc_id", "text",
-        table, path)
-      SearchOps.writeDocLengths(s, table, dlPath)
-      SearchOps.deleteFromSearchIndex(s, table, poison.select(col("doc_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_doclens", s"${table}_tombstones"),
-        deleteDirs = Seq(path, dlPath))
+        t, newDir())
+      SearchOps.writeDocLengths(s, t, newDir())
+      SearchOps.deleteFromSearchIndex(s, t, poison.select(col("doc_id")))
     }
 
   // every 11th doc re-badged under a fresh id with text that saturates
@@ -567,12 +435,9 @@ object TextQueries {
     * UPDATE semantics finally reaching the engine's own index). */
   private[graft] def searchUpsertIndexFor(s: SparkSession, dir: String): String =
     EpochRegistry.acquire(s, "search_upsert_index", dir) { () =>
-      val src = "graft_search_upsert_src_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val dest = "graft_search_upsert_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val paths = (1 to 4).map(_ => java.nio.file.Files
-        .createTempDirectory("graft_search_upsert_").toString)
+      val src = "graft_search_upsert_src_" + freshId()
+      val dest = "graft_search_upsert_index_" + freshId()
+      val paths = Seq.fill(4)(tmpDir("graft_search_upsert_"))
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val changed = docs.filter(col("doc_id") % 7 === 0)
       val stale = changed
@@ -598,20 +463,14 @@ object TextQueries {
     * phantom (new_id, ≥500000) pairs. */
   private[graft] def bandDeleteIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
-    EpochRegistry.acquire(s, "band_delete_index", dir) { () =>
-      val table = "graft_band_delete_index_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_band_delete_index_").toString
-      Dedup.cloneBandIndex(s, base, table, path)
+    generation(s, dir, "band_delete_index", Seq("", "_tombstones")) {
+        (t, newDir) =>
+      Dedup.cloneBandIndex(s, base, t, newDir())
       val poison = dupCorpus(Tables.documents(s, dir))
         .filter(col("doc_id") >= 100000 && col("doc_id") < 200000)
         .select((col("doc_id") + 400000).as("doc_id"), col("text"))
-      Dedup.appendToBandIndex(s, table, poison, "doc_id", "text")
-      Dedup.deleteFromBandIndex(s, table, poison.select(col("doc_id")))
-      EpochRegistry.Resource(table,
-        dropTables = Seq(table, s"${table}_tombstones"),
-        deleteDirs = Seq(path))
+      Dedup.appendToBandIndex(s, t, poison, "doc_id", "text")
+      Dedup.deleteFromBandIndex(s, t, poison.select(col("doc_id")))
     }
   }
 
@@ -628,6 +487,80 @@ object TextQueries {
       |WHERE (id_a < 100000 AND id_b >= 100000 AND id_b < 200000)
       |   OR (id_a >= 100000 AND id_a < 200000 AND id_b >= 200000)
       |ORDER BY new_id, old_id""".stripMargin
+
+  // cross-pair restriction of the full pipeline: dup_pairs orders
+  // id_a < id_b, and the batch ids are all >= 100000 while the corpus
+  // ids are < 100000, so id_a is always the corpus (old) side. Shared
+  // verbatim by every probe of the untouched originals' band index and
+  // of the result-invisible stages built from it.
+  private lazy val incrementalIndexedSql =
+    s"""WITH $minhashPairCtes
+      |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
+      |WHERE id_a < 100000 AND id_b >= 100000
+      |ORDER BY new_id, old_id""".stripMargin
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** The served search epochs. Each is probed as `text_search_<stage>`
+    * by the raw-tf conjunctive probe (oracle [[searchAndSql]]) and as
+    * `text_search_bm25_<stage>` by BM25 (oracle [[searchBm25Sql]]).
+    * Every stage is result-invisible — its generation serves exactly
+    * the index over all documents — so both probes carry the all-docs
+    * oracles; BM25 is the strict gate, since a stale or deleted doc
+    * leaking into df, dl, n_docs or Σdl shifts every score. */
+  private val searchStages: Seq[(String, (SparkSession, String) => String)] =
+    Seq(
+      ("appended", searchAppendIndexFor), // evens built, odds appended
+      ("compacted", searchCompactIndexFor), // one file per term bucket
+      ("resharded", searchReshardIndexFor), // 8 → 16 buckets
+      ("published", searchViewFor), // a view flip per suffix
+      ("published_atomic", searchAtomicViewFor), // one combined view
+      ("published_deleted", searchDeletedViewFor), // tombstones through it
+      ("deleted", searchDeleteIndexFor), // the poison tombstoned
+      ("updated", searchUpsertIndexFor)) // stale docs upserted
+
+  private def searchEntries: Seq[(String, Query, String)] = for {
+    (stage, epoch) <- searchStages
+    (entry, probe, sql) <- Seq[(String,
+        (SparkSession, String, Seq[String], Int) => DataFrame, String)](
+      ("text_search_", SearchOps.probeSearchIndex, searchAndSql),
+      ("text_search_bm25_", SearchOps.searchBm25, searchBm25Sql))
+  } yield (entry + stage, (s: SparkSession, dir: String) =>
+    probe(s, epoch(s, dir), Seq("spark", "vector", "window"), 10)
+      .orderBy(col("rk")), sql)
+
+  /** The served band epochs, each probing one dup-corpus batch with its
+    * oracle: every dup doc (≥ 100000) against the originals' index
+    * ([[incrementalIndexedSql]] — the delete, upsert, re-shard, pointer
+    * and CDC stages all serve exactly that index), or the near-dup
+    * batch [100000, 200000) against the index grown by the exact dups
+    * (≥ 200000) and its compaction ([[incrementalAppendedSql]]). */
+  private def bandEntries: Seq[(String, Query, String)] = {
+    val originals = (col("doc_id") >= 100000, incrementalIndexedSql)
+    val grown = (col("doc_id") >= 100000 && col("doc_id") < 200000,
+      incrementalAppendedSql)
+    for {
+      (entry, stages) <- Seq[(String,
+          Seq[(String, (SparkSession, String) => String, (Column, String))])](
+        ("dedup_incremental_", Seq(
+          ("indexed", bandIndexFor, originals),
+          ("appended", bandAppendIndexFor, grown),
+          ("published", bandPointerViewFor, originals),
+          ("resharded", bandReshardIndexFor, originals),
+          ("compacted", bandCompactIndexFor, grown),
+          ("deleted", bandDeleteIndexFor, originals),
+          ("updated", bandUpsertIndexFor, originals))),
+        ("stream_dedup_", Seq(
+          ("cdc", StreamingQueries.bandCdcIndexFor, originals),
+          ("cdc_published", StreamingQueries.bandCdcViewFor, originals))))
+      (stage, epoch, (incoming, sql)) <- stages
+    } yield (entry + stage, (s: SparkSession, dir: String) => {
+      val corpus = dupCorpus(Tables.documents(s, dir))
+      Dedup.probeBandIndex(s, epoch(s, dir), corpus.filter(incoming),
+          "doc_id", "text", threshold = 0.5)
+        .orderBy(col("new_id"), col("old_id"))
+    }, sql)
+  }
 
   private def searchBm25SqlOver(having: String, k: Int = 10,
       docFilter: String = ""): String = {
@@ -838,7 +771,7 @@ object TextQueries {
       |  WHERE $jacDSql >= 0.5)""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, Query] = Map[String, Query](
 
     "text_token_count" -> ((s, dir) => {
       Tables.documents(s, dir).select(
@@ -1932,48 +1865,6 @@ object TextQueries {
         .orderBy(col("new_id"), col("old_id"))
     }),
 
-    // same semantics through the materialized band index: the corpus's
-    // band rows are written bucketed on the join key and probed without
-    // reshuffling the corpus (the 100 TB ingestion path — index once per
-    // epoch, probe per batch). Must hash-match dedup_incremental exactly.
-    // The epoch write happens once per (session, dir) via
-    // [[bandIndexFor]], so what this query (and its bench number)
-    // measures is the per-batch PROBE — the thing that actually runs per
-    // ingestion at scale (VERDICT r8 #4).
-    "dedup_incremental_indexed" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text", threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-
-    // band-index MAINTENANCE: the exact-dup batch was ADMITTED to the
-    // index (appended under the same bucket spec — no corpus rewrite),
-    // and the near-dup batch probes the grown corpus: its pairs span
-    // both the built (< 100000) and appended (≥ 200000) halves. Oracle =
-    // the full pair pipeline restricted to exactly those cross pairs.
-    "dedup_incremental_appended" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandAppendIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000 && col("doc_id") < 200000),
-          "doc_id", "text", threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-
-    // POINTER-view serving for the band family
-    // (Generations.publishPointer): the probe addresses ONE stable
-    // catalog name holding the serving generation's name — band rows
-    // and tombstones can never mix generations across a flip, and the
-    // no-corpus-reshuffle probe plan is unchanged. Must hash-match
-    // dedup_incremental_indexed exactly.
-    "dedup_incremental_published" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandPointerViewFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-
     // band-index MONITORING — the dedup twin of sim_ann_ivf_stats: per
     // band, the bucket count, row count, and hottest bucket size. The
     // hot-bucket signal is what drives probe cost (in-bucket work is
@@ -1996,59 +1887,6 @@ object TextQueries {
     // integer-exact floored signals, one row, reshard boolean
     "dedup_band_reshard_check" -> ((s, dir) =>
       Dedup.bandReshardCheck(s, bandIndexFor(s, dir))),
-
-    // band-index re-shard EXECUTION: the serving generation rewritten
-    // under a finer bucket count (32 → 64, one hash exchange of the
-    // band rows, no shingle/minhash recompute) — the probe over it must
-    // hash-match dedup_incremental_indexed's oracle, since re-sharding
-    // is layout-only by definition
-    "dedup_incremental_resharded" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandReshardIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-
-    // band-index COMPACTION: the appended generation's per-bucket file
-    // groups collapsed to one file each (pure IO — no shingle/minhash
-    // recompute); the same probe over the compacted index must
-    // hash-match dedup_incremental_appended exactly (one oracle, three
-    // plans across indexed/appended/compacted)
-    "dedup_incremental_compacted" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandCompactIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000 && col("doc_id") < 200000),
-          "doc_id", "text", threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-
-    // band-index DELETE maintenance: poison twins of the probe batch
-    // were admitted then tombstoned — the probe must hash-match
-    // dedup_incremental_indexed's oracle (no phantom pairs against the
-    // deleted ids), with the delete costing one id append + a broadcast
-    // anti-join at probe time, never a corpus rewrite
-    "dedup_incremental_deleted" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandDeleteIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-
-    // band-index UPDATE maintenance: existing corpus ids carried band
-    // rows for TWO texts (true + probe-batch poison — naive
-    // re-ingestion's defect); the upserted generation dropped both and
-    // re-admitted the true docs through the same shingle pipeline. Must
-    // hash-match dedup_incremental_indexed's oracle — a stale leak is a
-    // phantom jaccard-1.0 pair.
-    "dedup_incremental_updated" -> ((s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      Dedup.probeBandIndex(s, bandUpsertIndexFor(s, dir),
-          corpus.filter(col("doc_id") >= 100000), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("new_id"), col("old_id"))
-    }),
 
     // survivor selection: connected components over the minhash pair
     // graph (pairs alone under-merge — a~b, b~c is ONE dup family even if
@@ -2296,24 +2134,6 @@ object TextQueries {
           terms = Seq("spark", "vector", "window"), k = 10)
         .orderBy(col("rk"))
     }),
-    // search-index MAINTENANCE: the index is built from the even-id
-    // docs and the odd-id docs are APPENDED (ingested later, same
-    // bucket spec) — the probe over the grown index must equal the
-    // search over ALL documents, i.e. hash-match text_search_and's
-    // oracle exactly
-    "text_search_appended" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchAppendIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // search-index COMPACTION: the appended generation collapsed to one
-    // file per term bucket; the probe must still bucket-prune and
-    // hash-match the same all-docs oracle
-    "text_search_compacted" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchCompactIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
     // RANKED retrieval: BM25 over the persisted index + doc-length
     // sidecar — floor-quantized integer idf per query term, exact
     // rational tf part, integer addends (order-independent sum); the
@@ -2413,133 +2233,11 @@ object TextQueries {
         s.table(gen).select(col("old_id")).distinct())
     }),
 
-    // search-index re-shard EXECUTION: the serving generation (postings
-    // + doc_id-bucketed norms sidecar) rewritten 8 → 16 buckets — one
-    // hash exchange, no re-tokenization; bucket layout is
-    // probe-invisible so this hash-matches the all-docs oracle while
-    // the probe bucket-prunes against the new count
-    "text_search_resharded" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchReshardIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-
-    // ...and ranked retrieval over the re-sharded generation: BM25's
-    // stats (n_docs, Σdl), df, and norms join all survive the layout
-    // change — same oracle, another plan
-    "text_search_bm25_resharded" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchReshardIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-
-    // VIEW-FLIP serving (Generations.publish): the probe addresses the
-    // stable view, not the generation table — promoting a generation is
-    // one CREATE OR REPLACE VIEW per suffix, and the serving name
-    // always resolves (no rename window). Result-invisible by
-    // definition: same oracle, another plan, pruning intact.
-    "text_search_published" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchViewFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-
-    // ...and ranked retrieval through the published view (postings AND
-    // the doclens sidecar resolve through view indirection)
-    "text_search_bm25_published" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchViewFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-
-    // ATOMIC view-flip serving (Generations.publishSearch): postings +
-    // norms + tombstones through ONE catalog object — promotion is a
-    // single CREATE OR REPLACE VIEW, so no probe can pair fresh
-    // postings with stale norms. Same oracles, routed plan.
-    "text_search_published_atomic" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchAtomicViewFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    "text_search_bm25_published_atomic" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchAtomicViewFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // ...and deletes RESOLVE THROUGH the atomic view (ADVICE r12 #1):
-    // the poison tombstones live on the generation, the probe addresses
-    // the view, and the all-docs oracles gate the leak — candidates,
-    // df, and the n_docs/Σdl stats all exclude the deleted batch
-    "text_search_published_deleted" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchDeletedViewFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    "text_search_bm25_published_deleted" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchDeletedViewFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-
-    // BM25 across the whole lifecycle: the COMPACTED generation serves
-    // ranked retrieval too — its norms sidecar is re-derived from the
-    // compacted postings (exact, and itself file-collapsed), so the
-    // probe hash-matches the same all-docs oracle. Third plan.
-    "text_search_bm25_compacted" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchCompactIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
     // disjunctive (ANY-term) BM25 — the textbook form: subset matches
     // rank too, scored by the terms they have. Same scorer (shared
     // bm25Ranked), so conjunctive and disjunctive can't drift.
     "text_search_bm25_any" -> ((s, dir) => {
       SearchOps.searchBm25Any(s, searchIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // ...and BM25 stays correct across index maintenance: the append
-    // epoch grows postings AND the norms sidecar (appendDocLengths), so
-    // ranked retrieval over the grown generation hash-matches the same
-    // all-docs oracle — the ranked twin of text_search_appended
-    "text_search_bm25_appended" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchAppendIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // search-index DELETE maintenance: the index was built with a
-    // poison batch that would own the top ranks, then the poison was
-    // tombstoned — the probe must hash-match the all-docs oracle, i.e.
-    // deleted docs vanish from candidates (and cost one broadcast
-    // anti-join, not an index rewrite)
-    "text_search_deleted" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchDeleteIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // ...and the ranked probe over the SAME tombstoned index: BM25 is
-    // the stricter gate because a delete must also leave the corpus
-    // stats (n_docs, Σdl) and per-term df — every OTHER doc's score —
-    // exactly as if the poison never existed
-    "text_search_bm25_deleted" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchDeleteIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // search-index UPDATE maintenance: generation v1 carried stale text
-    // for every 7th doc; the true versions were re-ingested as an
-    // upsert GENERATION (old postings + norms rows dropped, fresh ones
-    // appended — IndexMutationSpec pins one norms row per doc). The v2
-    // probe must hash-match the all-docs oracle.
-    "text_search_updated" -> ((s, dir) => {
-      SearchOps.probeSearchIndex(s, searchUpsertIndexFor(s, dir),
-          terms = Seq("spark", "vector", "window"), k = 10)
-        .orderBy(col("rk"))
-    }),
-    // the ranked twin: BM25 over the upserted generation — stale dl/df
-    // would shift every score, so this gates the norms half of upsert
-    "text_search_bm25_updated" -> ((s, dir) => {
-      SearchOps.searchBm25(s, searchUpsertIndexFor(s, dir),
           terms = Seq("spark", "vector", "window"), k = 10)
         .orderBy(col("rk"))
     }),
@@ -2573,7 +2271,8 @@ object TextQueries {
           TextOps.piiCount(synth, TextOps.piiIpv4).as("n_ips"),
           md5(TextOps.redactPii(synth)).as("redacted_md5"))
         .orderBy(col("doc_id"))
-    }))
+    })) ++ (searchEntries ++ bandEntries).map {
+      case (name, query, _) => name -> query }
 
   /** The BPE training chain in SQL — one MATERIALIZED CTE layer per
     * merge step, mirroring [[graft.operators.Bpe]]'s spec exactly:
@@ -3686,18 +3385,7 @@ object TextQueries {
           |FROM th LEFT JOIN dup_pairs dp
           |  ON dp.jaccard >= th.threshold_x1000 / 1000.0
           |GROUP BY 1 ORDER BY 1""".stripMargin,
-      // cross-pair restriction of the full pipeline: dup_pairs orders
-      // id_a < id_b, and the batch ids are all >= 100000 while the corpus
-      // ids are < 100000, so id_a is always the corpus (old) side
-      "dedup_incremental" ->
-        s"""WITH $minhashPairCtes
-          |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
-          |WHERE id_a < 100000 AND id_b >= 100000
-          |ORDER BY new_id, old_id""".stripMargin,
-      // the near-dup batch [100000, 200000) against the grown corpus
-      // (originals < 100000 PLUS the appended exacts ≥ 200000):
-      // dup_pairs is id_a < id_b, so the new (probe-side) id is id_b
-      // against originals and id_a against appended docs
+      "dedup_incremental" -> incrementalIndexedSql,
       // band monitoring: bucket-size distribution per band over the
       // SERVING corpus (originals < 100000 — the rows bandIndexFor
       // persisted), aggregated from the shared minhash band CTEs
@@ -3726,47 +3414,6 @@ object TextQueries {
           |  top_frac_x1000,
           |  (max_over_mean_x1000 >= 2000 OR top_frac_x1000 >= 200) AS reshard
           |FROM e""".stripMargin,
-      "dedup_incremental_appended" -> incrementalAppendedSql,
-      // compaction is result-invisible by definition — the compacted
-      // generation's probe shares the append epoch's oracle verbatim
-      "dedup_incremental_compacted" -> incrementalAppendedSql,
-      "dedup_incremental_indexed" ->
-        s"""WITH $minhashPairCtes
-          |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
-          |WHERE id_a < 100000 AND id_b >= 100000
-          |ORDER BY new_id, old_id""".stripMargin,
-      // pointer-view serving is result-invisible by definition — the
-      // published probe shares the serving index's oracle verbatim
-      "dedup_incremental_published" ->
-        s"""WITH $minhashPairCtes
-          |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
-          |WHERE id_a < 100000 AND id_b >= 100000
-          |ORDER BY new_id, old_id""".stripMargin,
-      // the delete epoch admitted poison twins then tombstoned them —
-      // result-defined equal to the serving index's probe, so it shares
-      // dedup_incremental_indexed's oracle verbatim (one oracle, another
-      // plan); a tombstone leak shows up as phantom old_id ≥ 500000 rows
-      "dedup_incremental_deleted" ->
-        s"""WITH $minhashPairCtes
-          |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
-          |WHERE id_a < 100000 AND id_b >= 100000
-          |ORDER BY new_id, old_id""".stripMargin,
-      // re-sharding is layout-only — every logical (band, bkey) group
-      // moves intact — so the re-sharded generation's probe shares the
-      // serving index's oracle verbatim (one oracle, another plan)
-      "dedup_incremental_resharded" ->
-        s"""WITH $minhashPairCtes
-          |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
-          |WHERE id_a < 100000 AND id_b >= 100000
-          |ORDER BY new_id, old_id""".stripMargin,
-      // upsert epoch = serving index corrupted then healed:
-      // result-defined equal to the serving probe — same oracle, another
-      // plan (a stale leak is a phantom jaccard-1.0 pair = hash mismatch)
-      "dedup_incremental_updated" ->
-        s"""WITH $minhashPairCtes
-          |SELECT id_b AS new_id, id_a AS old_id, jaccard FROM dup_pairs
-          |WHERE id_a < 100000 AND id_b >= 100000
-          |ORDER BY new_id, old_id""".stripMargin,
       // connected components of the pair graph via a recursive label
       // walk: every vertex starts as its own label; labels propagate
       // along (symmetric) edges until the closure is complete (UNION =
@@ -3923,12 +3570,6 @@ object TextQueries {
       // result-identical to the in-memory search — one oracle, two plans
       // (the sibling pattern of dedup_incremental_indexed / sim_ann_ivf_indexed)
       "text_search_indexed" -> searchAndSql,
-      // build-on-evens + append-odds covers every document, so the
-      // grown-index probe is gated by the SAME all-docs oracle
-      "text_search_appended" -> searchAndSql,
-      // ...and compacting that grown generation is result-invisible:
-      // same oracle, fourth plan
-      "text_search_compacted" -> searchAndSql,
       // BM25 mirror: identical formula shape and evaluation order as
       // SearchOps.searchBm25 — idf floored to a BIGINT once per term,
       // tf part one double division of exact BIGINT polynomials
@@ -3998,40 +3639,6 @@ object TextQueries {
           |  top_frac_x1000,
           |  (max_over_mean_x1000 >= 2000 OR top_frac_x1000 >= 200) AS reshard
           |FROM e""".stripMargin,
-      // re-sharding is layout-only, so both probes over the re-sharded
-      // generation share the all-docs oracles (raw-tf and BM25) — one
-      // oracle, another plan each
-      "text_search_resharded" -> searchAndSql,
-      "text_search_bm25_resharded" -> searchBm25Sql,
-      // atomic combined-view serving is result-invisible too: same
-      // all-docs oracles through the part-routed plan, and the deleted
-      // variant gates tombstone resolution THROUGH the view
-      "text_search_published_atomic" -> searchAndSql,
-      "text_search_bm25_published_atomic" -> searchBm25Sql,
-      "text_search_published_deleted" -> searchAndSql,
-      "text_search_bm25_published_deleted" -> searchBm25Sql,
-      // view-flip serving is pure indirection — the published view's
-      // probes share the all-docs oracles (one oracle, another plan)
-      "text_search_published" -> searchAndSql,
-      "text_search_bm25_published" -> searchBm25Sql,
-      // the append epoch (build-evens + append-odds postings AND
-      // doclens) covers every document — same oracle, second plan
-      "text_search_bm25_appended" -> searchBm25Sql,
-      // ...and the compacted generation (sidecar re-derived from its
-      // own postings) — same oracle, third plan
-      "text_search_bm25_compacted" -> searchBm25Sql,
-      // DELETE maintenance: the tombstoned index is result-defined
-      // equal to the all-docs index (the poison never existed as far as
-      // probes can tell) — same oracles, new plans. BM25 is the strict
-      // gate: a poison row leaking into n_docs/Σdl/df shifts EVERY
-      // score even if the poison itself is filtered.
-      "text_search_deleted" -> searchAndSql,
-      "text_search_bm25_deleted" -> searchBm25Sql,
-      // UPDATE maintenance: the upserted generation must equal an index
-      // built directly from the true corpus — same oracles again (one
-      // oracle per probe shape, now five/six plans each)
-      "text_search_updated" -> searchAndSql,
-      "text_search_bm25_updated" -> searchBm25Sql,
       "text_search_phrase" ->
         s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
           |m AS (SELECT doc_id, CASE WHEN len(toks) >= 2
@@ -4105,6 +3712,7 @@ object TextQueries {
           |  AND CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE) >= greatest(sa.n_sh, sb.n_sh) * 0.5
           |WHERE $jacDSql >= 0.5
           |ORDER BY id_a, id_b""".stripMargin
-      })
+      }) ++ (searchEntries ++ bandEntries).map {
+      case (name, _, sql) => name -> sql }
   }
 }

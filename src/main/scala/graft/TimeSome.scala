@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Builder-side dev tool: [[TimeOne]] for a SUBSET of queries with
-  * min-of-N reporting. This container's wall-clock is extremely noisy
+/** Builder-side dev tool: times a SUBSET of queries over N passes with
+  * min-of-N reporting (`TimeSome <sfDir> 2 <name>` gives one query's
+  * cold and warm times). This container's wall-clock is extremely noisy
   * (single queries swing 2 s → 113 s between identical runs — CPU steal
   * on the VM, adjudicated as container noise in VERDICT r6/r8), so the
   * per-query MIN across interleaved passes is the only comparable

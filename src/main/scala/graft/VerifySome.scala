@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
   * single operator's Spark↔DuckDB parity can be iterated in seconds
   * instead of re-dumping all 69 entries. Writes the same layout Verify
   * does (per-query parquet + oracle_sql.json filtered to the subset), so
-  * `scripts/check.py <outDir> <sfDir>` gates it unchanged.
+  * `scripts/check.py <outDir> <sfDir>` gates it unchanged. A failed
+  * entry prints its stack trace; the run names every failed entry and
+  * exits 1 if there is one.
   *
   * Usage: runMain graft.VerifySome <sfDir> <outDir> <name> [<name>...]
   */
@@ -25,12 +27,17 @@ object VerifySome {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => names(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify-some] $name failed: ${e.getMessage}")
-      }
+    val failed = SparkEntry.queries.filter(q => names(q._1)).toSeq.flatMap {
+      case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify-some] $name failed: ${e.getMessage}")
+          e.printStackTrace()
+          Some(name)
+        }
     }
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
@@ -45,5 +52,10 @@ object VerifySome {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify-some] ${failed.size} failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -160,25 +160,25 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     * entries of the vector and graph families, and for the search and
     * band lifecycle entries. */
   private val cdcAndTextEntryKinds: Seq[(String, String)] = Seq(
-    "stream_ann_cdc" -> "ann_cdc_index",
-    "stream_ann_cdc_recall" -> "ann_cdc_index",
-    "stream_ann_cdc_settle_check" -> "ann_cdc_index",
-    "stream_ann_cdc_published" -> "ivf_cdc_view",
-    "stream_binary_cdc" -> "binary_cdc_index",
-    "stream_binary_cdc_settle_check" -> "binary_cdc_index",
-    "stream_binary_cdc_published" -> "binary_cdc_view",
+    "stream_ann_cdc" -> "ivf_cdc_index",
+    "stream_ann_cdc_recall" -> "ivf_cdc_index",
+    "stream_ann_cdc_settle_check" -> "ivf_cdc_index",
+    "stream_ann_cdc_published" -> "ivf_cdc_pointer_view",
+    "stream_binary_cdc" -> "ivf_binary_cdc_index",
+    "stream_binary_cdc_settle_check" -> "ivf_binary_cdc_index",
+    "stream_binary_cdc_published" -> "ivf_binary_cdc_pointer_view",
     "stream_ann_mrl_cdc" -> "mrl_cdc_index",
     "stream_ann_mrl_cdc_recall" -> "mrl_cdc_index",
     "stream_ann_mrl_cdc_settle_check" -> "mrl_cdc_index",
-    "stream_ann_mrl_cdc_published" -> "mrl_cdc_view",
-    "stream_ann_ivfpq_cdc" -> "ann_ivfpq_cdc_index",
-    "stream_ann_ivfpq_cdc_recall" -> "ann_ivfpq_cdc_index",
-    "stream_ann_ivfpq_cdc_settle_check" -> "ann_ivfpq_cdc_index",
-    "stream_ann_ivfpq_cdc_published" -> "ivfpq_cdc_view",
+    "stream_ann_mrl_cdc_published" -> "mrl_cdc_pointer_view",
+    "stream_ann_ivfpq_cdc" -> "ivfpq_cdc_index",
+    "stream_ann_ivfpq_cdc_recall" -> "ivfpq_cdc_index",
+    "stream_ann_ivfpq_cdc_settle_check" -> "ivfpq_cdc_index",
+    "stream_ann_ivfpq_cdc_published" -> "ivfpq_cdc_pointer_view",
     "stream_graph_cdc" -> "graph_cdc_index",
     "stream_graph_cdc_recall" -> "graph_cdc_index",
     "stream_graph_cdc_settle_check" -> "graph_cdc_index",
-    "stream_graph_cdc_published" -> "graph_cdc_view",
+    "stream_graph_cdc_published" -> "graph_cdc_pointer_view",
     "text_search_appended" -> "search_append_index",
     "text_search_bm25_appended" -> "search_append_index",
     "text_search_compacted" -> "search_compact_index",
@@ -245,9 +245,9 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     def catalog(): Set[String] =
       s.catalog.listTables().collect().map(_.name.toLowerCase).toSet
     val before = catalog()
-    import StreamingQueries._
-    Seq(ivfCdcViewFor _, binaryCdcViewFor _, mrlCdcViewFor _,
-      ivfPqCdcViewFor _, graphCdcViewFor _).foreach(_(s, sfDir))
+    import SimilarityQueries.{binary, ivf, ivfPq, mrl}
+    Seq(ivf, binary, mrl, ivfPq, GraphQueries.graph)
+      .foreach(StreamingQueries.cdcPointerView(s, sfDir, _))
     val appeared = catalog() -- before
     val dropped = EpochRegistry.liveEntries(EpochRegistry.idOf(s))
       .flatMap(_.dropTables).map(_.toLowerCase).toSet
