@@ -7,6 +7,8 @@ For each <outDir>/<name>/ parquet dump written by graft.Verify, runs the
 matching SQL from <outDir>/oracle_sql.json in DuckDB (tables = views over
 <sfDir>/*.parquet) and compares: schema (column names sorted), row count,
 and values (exact; floats reported with max-abs-diff when not exact).
+Before the summary line it prints how many of the failures are entries
+with no output at all, apart from the mismatched ones.
 """
 import sys, os, json, glob
 import duckdb
@@ -88,6 +90,10 @@ def main(out_dir: str, sf_dir: str) -> int:
             n_pass += 1
     for k, v in sorted(results.items()):
         print(f"{'PASS' if v.startswith('OK') else 'INFO' if v.startswith('NO-ORACLE') else 'FAIL'} {k}: {v}")
+    # the fail count holds both kinds; a missing entry (no output at all)
+    # points at Verify, a mismatch at the query or its oracle
+    print(f"\n{len(missing)} no-output, {n_fail - len(missing)} mismatched "
+          f"(both counted as fail)")
     print(f"\n{n_pass} pass, {n_fail} fail, {len(results)-n_pass-n_fail} no-oracle")
     return 1 if n_fail else 0
 

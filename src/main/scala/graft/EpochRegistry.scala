@@ -194,7 +194,7 @@ private[graft] object EpochRegistry {
     e.res.deleteDirs.foreach(deleteRecursively)
   }
 
-  private def deleteRecursively(path: String): Unit = {
+  private[graft] def deleteRecursively(path: String): Unit = {
     import java.nio.file.{Files, Paths}
     val p = Paths.get(path)
     if (Files.exists(p)) {

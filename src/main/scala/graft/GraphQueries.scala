@@ -218,18 +218,8 @@ object GraphQueries {
     // way)
     "graph_knn_recall" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val brute = graft.operators.VectorOps.bruteForceTopK(emb, emb, k = 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val ann = GraphOps.knnEdges(s, dir)
-        .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
-      val hits = brute.join(ann, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-      emb.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / lit(3.0), 6).as("recall"))
-        .orderBy(col("query_id"))
+      SimilarityQueries.recallAudit(emb, emb, GraphOps.knnEdges(s, dir)
+        .select(col("src").as("query_id"), col("dst").as("neighbor_id")))
     }),
     // graph-based ANN serving (the HNSW-class family): greedy beam
     // search over the kNN graph — fixed entry sample, 3 expand-and-
@@ -273,19 +263,10 @@ object GraphQueries {
       val emb = Tables.embeddings(s, dir)
       val batch = SimilarityQueries.dupVectors(emb)
         .filter(col("vec_id") >= 100000)
-      val brute = graft.operators.VectorOps.bruteForceTopK(batch, emb, k = 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val ann = s.read.parquet(GraphOps.knnAppendDir(s, dir))
-        .filter(col("src") >= 100000)
-        .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
-      val hits = brute.join(ann, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-      batch.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / lit(3.0), 6).as("recall"))
-        .orderBy(col("query_id"))
+      SimilarityQueries.recallAudit(batch, emb,
+        s.read.parquet(GraphOps.knnAppendDir(s, dir))
+          .filter(col("src") >= 100000)
+          .select(col("src").as("query_id"), col("dst").as("neighbor_id")))
     }),
     // graph HEALTH monitor (the family's near-metadata check, like the
     // compaction/retrain checks the other serving families carry):
@@ -476,19 +457,9 @@ object GraphQueries {
     "sim_ann_graph_retrained_recall" -> ((s, dir) => {
       val corpus = SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("embedding"))
-      val brute = graft.operators.VectorOps
-        .bruteForceTopK(corpus, corpus, k = 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val ann = s.table(s"${retrain(s, dir, graph)}_edges")
-        .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
-      val hits = brute.join(ann, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-      corpus.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / lit(3.0), 6).as("recall"))
-        .orderBy(col("query_id"))
+      SimilarityQueries.recallAudit(corpus, corpus,
+        s.table(s"${retrain(s, dir, graph)}_edges")
+          .select(col("src").as("query_id"), col("dst").as("neighbor_id")))
     }))
 
   // ---------------- graph-index generation epochs (r17) ----------------

@@ -650,21 +650,27 @@ object SimilarityQueries {
   }
 
   /** Shared recall-audit tail: per-query overlap of an ANN top-k with the
-    * exact brute-force top-[[recallK]], 0-filled for queries the ANN
-    * missed entirely. Both ANN paths (LSH, IVF) gate through this. */
-  private[graft] def recallAudit(emb: DataFrame, ann: DataFrame): DataFrame = {
-    val brute = VectorOps.bruteForceTopK(querySet(emb), emb, k = recallK)
+    * exact brute-force top-[[recallK]] of `queries` over `corpus`,
+    * 0-filled for queries the ANN missed entirely. Every ANN path (LSH,
+    * IVF, the graph walks) gates through this. */
+  private[graft] def recallAudit(queries: DataFrame, corpus: DataFrame,
+      ann: DataFrame): DataFrame = {
+    val brute = VectorOps.bruteForceTopK(queries, corpus, k = recallK)
       .select(col("query_id"), col("neighbor_id"))
     val hits = brute.join(ann.select(col("query_id"), col("neighbor_id")),
         Seq("query_id", "neighbor_id"))
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    querySet(emb).select(col("vec_id").as("query_id"))
+    queries.select(col("vec_id").as("query_id"))
       .join(hits, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"),
         round(coalesce(col("n_hit"), lit(0L)) / lit(recallK.toDouble), 6).as("recall"))
       .orderBy(col("query_id"))
   }
+
+  /** [[recallAudit]] for the fixed [[querySet]] over `emb`. */
+  private[graft] def recallAudit(emb: DataFrame, ann: DataFrame): DataFrame =
+    recallAudit(querySet(emb), emb, ann)
 
   def queries: Map[String, Query] = Map[String, Query](
 

@@ -577,16 +577,25 @@ object StreamingQueries {
       // The drain pins 8 shuffle partitions (the runToMemory
       // discipline) and coalesces each decision frame to one file
       // (hundreds of rows; at deployment scale the same knobs size the
-      // per-batch grid to the batch, not to the cluster default).
-      val outDir = tmpDir("graft_ingest_out_")
+      // per-batch grid to the batch, not to the cluster default). The
+      // output dir is an epoch under a fresh kind — every call drains
+      // anew, and the dir is deleted when the context stops; the
+      // checkpoint is deleted once the drain returns.
       val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = IngestStream.ingestSink(src, TextQueries.bandIndexFor(s, dir),
-          Tables.documents(s, dir).filter(col("doc_id") < 10), ckpt,
-          (flags, _) => flags.coalesce(1).write.mode("append").parquet(outDir))
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val outDir =
+        try {
+          s.conf.set("spark.sql.shuffle.partitions", "8")
+          val band = TextQueries.bandIndexFor(s, dir)
+          EpochRegistry.dirEpoch(s, dir, "ingest_out_" + freshId()) { out =>
+            IngestStream.ingestSink(src, band,
+              Tables.documents(s, dir).filter(col("doc_id") < 10), ckpt,
+              (flags, _) => flags.coalesce(1).write.mode("append").parquet(out))
+              .awaitTermination()
+          }
+        } finally {
+          s.conf.set("spark.sql.shuffle.partitions", prev)
+          EpochRegistry.deleteRecursively(ckpt)
+        }
       s.read.parquet(outDir).orderBy(col("doc_id"))
     }),
 
@@ -1492,7 +1501,7 @@ object StreamingQueries {
     val vecDir = streamVectorsDir(s, dir)
     generation(s, dir, "ivf_stream_index",
         Seq("_cents", "_lists", "_applied")) { (table, newDir) =>
-      graft.operators.VectorOps.cloneIvfIndex(s, base, table, newDir())
+      IndexFamily.ivf.cloneTo(s, base, table, newDir())
       val src = CdcStream.readEventStream(s, vecDir,
         maxFilesPerTrigger = 1)
       IngestStream.ivfIndexSink(src, table, newDir()).awaitTermination()

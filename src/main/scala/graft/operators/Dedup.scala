@@ -333,8 +333,8 @@ object Dedup {
     * new index generation can grow without touching the serving one.
     *
     * `compact = true` makes the clone a COMPACTION (the bucketed-table
-    * twin of [[VectorOps.cloneIvfIndex]]'s): each append leaves one
-    * more file group per bucket, and at some point the per-probe
+    * twin of the vector rows' [[IndexFamily.compact]]): each append
+    * leaves one more file group per bucket, and at some point the per-probe
     * file-open overhead warrants collapsing each bucket to ONE file.
     * Zero-shuffle design: the source is read through a session clone
     * with `autoBucketedScan` disabled, forcing the genuinely bucketed
@@ -382,7 +382,8 @@ object Dedup {
 
   /** UPDATE maintenance for the band family — CDC UPDATE semantics as a
     * GENERATION step, completing the upsert symmetry
-    * ([[SearchOps.upsertToSearchIndex]], [[VectorOps.upsertToIvfIndex]]):
+    * ([[SearchOps.upsertToSearchIndex]], the vector rows'
+    * [[IndexFamily.upsert]]):
     * a new generation is written whose band rows (a) drop every row of
     * the incoming doc ids AND of previously tombstoned ids, and (b)
     * gain the incoming documents' fresh band rows through the SAME

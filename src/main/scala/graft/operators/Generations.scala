@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Generation promotion — the SWAP step of the clone-append-validate-
   * swap workflow every index family's maintenance ops build toward
   * (band: [[Dedup.cloneBandIndex]], search: [[SearchOps.cloneSearchIndex]],
-  * IVF: [[VectorOps.cloneIvfIndex]] / [[VectorOps.retrainIvfIndex]]):
+  * vector: [[IndexFamily.cloneTo]] / [[VectorOps.retrainIvfIndex]]):
   * once a candidate generation is validated, it takes over the SERVING
   * NAME, so probes keep addressing one stable name while the bytes
   * underneath change epoch. Implemented as catalog renames of external

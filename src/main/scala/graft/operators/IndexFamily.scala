@@ -4,6 +4,7 @@ import java.util.concurrent.{CompletionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{broadcast, col, max}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 
 /** One index family — everything that differs between the standing
@@ -33,7 +34,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
   *  - `reingestInserts`: INSERTs queue instead of applying at drain time
   *    (graph: an insert is a beam WALK over the growing index, so it is
   *    order-dependent and settles as one batch for determinism — the
-  *    FreshDiskANN streaming-merge model). */
+  *    FreshDiskANN streaming-merge model).
+  *
+  * The text rows and the graph row bring their own `upsert`, `cloneTo`
+  * and `compact`; every other vector row takes all three from one
+  * layout-driven copy ([[IndexFamily.vector]]). */
 final case class IndexFamily(
     idCol: String, payloadCol: String, payloadType: DataType,
     tables: Seq[String],
@@ -101,17 +106,73 @@ object IndexFamily {
       cloneOp(_, _, _, _, false), cloneOp(_, _, _, _, true),
       reingestInserts = false)
 
-  private def vector(tables: Seq[String],
-      append: (SparkSession, String, DataFrame) => Unit,
-      upsert: (SparkSession, String, String, String, DataFrame) => Unit,
-      cloneOp: (SparkSession, String, String, String, Boolean) => Unit)
-      : IndexFamily =
-    IndexFamily("vec_id", "embedding",
-      ArrayType(FloatType, containsNull = false), tables, append,
+  private val embeddingType = ArrayType(FloatType, containsNull = false)
+
+  /** A vector family: only its tables and its frozen-layout `append`
+    * differ, the three generation copies come from [[copyGeneration]].
+    * The upsert is a compaction that also drops the incoming ids,
+    * followed by the family's own append of one row per id — the latest
+    * by a deterministic max over the array content, so a duplicate-id
+    * batch cannot re-introduce the doubled id the upsert exists to
+    * prevent. In-place re-ingestion is not offered: rows key on
+    * `vec_id`, so an id stored under both its stale and fresh payload
+    * would serve twice, or fold both code sets into one PQ score. */
+  private[graft] def vector(tables: Seq[String],
+      append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
+    IndexFamily("vec_id", "embedding", embeddingType, tables, append,
       VectorOps.deleteFromIvfIndex(_, _, _),
-      (s, src, dest, paths, vecs) => upsert(s, src, dest, paths.head, vecs),
-      cloneOp(_, _, _, _, false), cloneOp(_, _, _, _, true),
+      (s, src, dest, paths, vecs) => {
+        val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
+            col("embedding"))
+          .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
+        copyGeneration(s, tables, src, dest, paths.head,
+          Some(Seq(latest.select(col("vec_id")))))
+        append(s, dest, latest)
+      },
+      copyGeneration(_, tables, _, _, _, None),
+      copyGeneration(_, tables, _, _, _, Some(Nil)),
       reingestInserts = false)
+
+  /** Copies every table of generation `src` to `dest`, each under
+    * `path/<suffix>`, by the layout the table already has — never a
+    * retrain or a re-assignment. A table with no `vec_id` column is a
+    * frozen quantizer (`_cents`, `_codebooks`) and copies verbatim. A
+    * `vec_id` table keeps the partition columns the catalog reports
+    * for it.
+    *
+    *  - `drop = None`, a plain clone: every row copies and the tombstone
+    *    sidecar is carried over, so the clone serves exactly what the
+    *    source serves and pending deletes cannot resurrect.
+    *  - `drop = Some(ids)`, a compaction: the `vec_id` tables lose
+    *    `ids` and the source's tombstoned ids, and are repartitioned by
+    *    their partition columns, so each list is rewritten as one file
+    *    (IvfIndexSpec pins the collapse). The new generation starts
+    *    tombstone-free. */
+  private def copyGeneration(s: SparkSession, tables: Seq[String],
+      src: String, dest: String, path: String,
+      drop: Option[Seq[DataFrame]]): Unit = {
+    val tombstones = src + "_tombstones"
+    val tombstoned = s.catalog.tableExists(tombstones)
+    val dead = drop.flatMap(ids => (ids ++ Option.when(tombstoned)(
+      s.table(tombstones).select(col("vec_id")))).reduceOption(_ unionByName _))
+    tables.foreach { t =>
+      val rows = s.table(src + t)
+      val parts = s.catalog.listColumns(src + t).collect()
+        .filter(_.isPartition).map(_.name).toSeq
+      val copied =
+        if (drop.isEmpty || !rows.columns.contains("vec_id")) rows
+        else {
+          val live = dead.fold(rows)(d =>
+            rows.join(broadcast(d.distinct()), Seq("vec_id"), "left_anti"))
+          if (parts.isEmpty) live else live.repartition(parts.map(col): _*)
+        }
+      copied.write.mode("overwrite").format("parquet").partitionBy(parts: _*)
+        .option("path", s"$path/${t.stripPrefix("_")}").saveAsTable(dest + t)
+    }
+    if (drop.isEmpty && tombstoned)
+      s.table(tombstones).write.mode("overwrite").format("parquet")
+        .saveAsTable(dest + "_tombstones")
+  }
 
   /** Postings + BM25 norms; the settle writes both (`paths` = postings
     * path, norms path). `numBuckets` reaches BOTH appends: the sidecar's
@@ -143,53 +204,45 @@ object IndexFamily {
 
   /** IVF lists under the frozen coarse quantizer. */
   val ivf: IndexFamily = vector(Seq("_cents", "_lists"),
-    VectorOps.appendToIvfIndex, VectorOps.upsertToIvfIndex,
-    VectorOps.cloneIvfIndex)
+    VectorOps.appendToIvfIndex)
 
-  /** int8-coded IVF lists; the list copy is payload-agnostic. */
+  /** int8-coded IVF lists. */
   val sq8: IndexFamily = vector(Seq("_cents", "_lists"),
-    VectorOps.appendToIvfIndexSq8, VectorOps.upsertToIvfIndexSq8,
-    VectorOps.cloneIvfIndex)
+    VectorOps.appendToIvfIndexSq8)
 
   /** Sign-mask lists packed through the frozen quantizer. */
   val binary: IndexFamily = vector(Seq("_cents", "_lists"),
-    VectorOps.appendToIvfIndexBinary, VectorOps.upsertToIvfIndexBinary,
-    VectorOps.cloneIvfIndex)
+    VectorOps.appendToIvfIndexBinary)
 
   /** Matryoshka prefix epoch — the prefix is a `slice()`, order-free, so
     * drain-time inserts are settle-equivalent. */
   val mrl: IndexFamily = vector(Seq("_cents", "_prefix", "_nodes"),
-    VectorOps.appendToMrlIndex, VectorOps.upsertToMrlIndex,
-    VectorOps.cloneMrlIndex)
+    VectorOps.appendToMrlIndex)
 
   /** Flat PQ codes under the frozen codebooks (8 subspaces of 64 dims —
     * the served epoch's shape). */
   val pq: IndexFamily = vector(Seq("_codebooks", "_codes"),
-    VectorOps.appendToPqIndex(_, _, _),
-    VectorOps.upsertToPqIndex(_, _, _, _, _),
-    VectorOps.clonePqIndex)
+    VectorOps.appendToPqIndex(_, _, _))
 
-  /** kNN-graph generation — the one family whose INSERTs queue. */
-  val graph: IndexFamily = vector(Seq("_cents", "_cells", "_nodes", "_edges"),
-    GraphOps.appendToGraphIndex, GraphOps.upsertToGraphIndex,
-    (s, src, dest, path, compact) =>
-      if (compact) GraphOps.compactGraphIndex(s, src, dest, path)
-      else GraphOps.cloneGraphIndex(s, src, dest, path))
-    .copy(reingestInserts = true)
+  /** kNN-graph generation — the one family whose INSERTs queue. Its
+    * clone, compact and upsert are its own: a dropped node's edges
+    * purge in both directions. */
+  val graph: IndexFamily = IndexFamily("vec_id", "embedding", embeddingType,
+    Seq("_cents", "_cells", "_nodes", "_edges"),
+    GraphOps.appendToGraphIndex, VectorOps.deleteFromIvfIndex(_, _, _),
+    (s, src, dest, paths, vecs) =>
+      GraphOps.upsertToGraphIndex(s, src, dest, paths.head, vecs),
+    GraphOps.cloneGraphIndex, GraphOps.compactGraphIndex,
+    reingestInserts = true)
 
   /** IVF lists of PQ codes; `m`/`dim` serve the drain-time encode AND the
     * settle's re-encode, so a non-default index keeps its subspaces. */
   def ivfPq(m: Int, dim: Int): IndexFamily = vector(
     Seq("_cents", "_codebooks", "_codes"),
-    VectorOps.appendToIvfPqIndex(_, _, _, m, dim),
-    VectorOps.upsertToIvfPqIndex(_, _, _, _, _, m, dim),
-    VectorOps.cloneIvfPqIndex)
+    VectorOps.appendToIvfPqIndex(_, _, _, m, dim))
 
-  /** IVF-PQ over residuals against the list centroids; the code copy is
-    * the composite's. */
+  /** IVF-PQ over residuals against the list centroids. */
   def ivfPqResidual(m: Int, dim: Int): IndexFamily = vector(
     Seq("_cents", "_codebooks", "_codes"),
-    VectorOps.appendToIvfPqResidualIndex(_, _, _, m, dim),
-    VectorOps.upsertToIvfPqResidualIndex(_, _, _, _, _, m, dim),
-    VectorOps.cloneIvfPqIndex)
+    VectorOps.appendToIvfPqResidualIndex(_, _, _, m, dim))
 }

@@ -231,7 +231,7 @@ object SearchOps {
     * of clone-then-append maintenance for retrieval: derive a new index
     * generation from the serving one, append to the clone, swap when
     * validated — completing the clone/compact lifecycle symmetry with
-    * [[Dedup.cloneBandIndex]] and [[VectorOps.cloneIvfIndex]].
+    * [[Dedup.cloneBandIndex]] and the vector rows' [[IndexFamily.cloneTo]].
     *
     * `compact = true` collapses each bucket's append file groups to ONE
     * file — with ZERO shuffle: the source is read through a session

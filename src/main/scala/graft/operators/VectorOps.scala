@@ -299,66 +299,6 @@ object VectorOps {
       .write.mode("append").insertInto(s"${table}_nodes")
   }
 
-  /** Clone an MRL epoch; `compact = true` settles pending tombstones
-    * physically (both sides drop the dead ids during the rewrite and
-    * the new generation starts tombstone-free); a plain clone carries
-    * the sidecar so pending deletes cannot resurrect — the family
-    * contract of [[cloneIvfIndex]]. */
-  def cloneMrlIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, compact: Boolean = false): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    val pref0 = spark.table(s"${src}_prefix")
-    val pref = if (compact) dropTombstoned(spark, src, pref0) else pref0
-    (if (compact) pref.repartition(col("list_id")) else pref)
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/prefix").saveAsTable(s"${dest}_prefix")
-    val nodes0 = spark.table(s"${src}_nodes")
-    val nodes = if (compact) dropTombstoned(spark, src, nodes0) else nodes0
-    nodes.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    if (!compact && spark.catalog.tableExists(s"${src}_tombstones"))
-      spark.table(s"${src}_tombstones")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${dest}_tombstones")
-  }
-
-  /** UPDATE maintenance as a GENERATION step ([[upsertToIvfIndex]]'s
-    * contract): the new generation drops every incoming id AND every
-    * previously tombstoned id from BOTH sides (a doubled id would
-    * surface twice through the coarse rank — the MRL form of the
-    * doubled-id defect), then re-admits the batch's latest rows under
-    * the frozen derivation. One prefix-side list rewrite (compaction's
-    * plan) + a nodes rewrite + a broadcast batch append. */
-  def upsertToMrlIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, vecs: DataFrame): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    // ONE row per incoming id, reduced deterministically (max by array
-    // content) — the duplicate-batch contract of the upsert family
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_prefix")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/prefix").saveAsTable(s"${dest}_prefix")
-    spark.table(s"${src}_nodes")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    appendToMrlIndex(spark, dest, latest)
-  }
-
   /** Probe a [[writeMrlIndex]] epoch — identical output to [[mrlTopK]]
     * with the same parameters (parity spec-pinned), but the coarse
     * ranking scans ONLY the narrow `_prefix` table; the exact re-rank
@@ -934,60 +874,6 @@ object VectorOps {
       .saveAsTable(s"${table}_codes")
   }
 
-  /** Copy a PQ index to a new generation — same clone/compact contract
-    * as [[cloneIvfIndex]]: a plain clone is pure IO (codebooks + codes
-    * verbatim, tombstone sidecar carried so pending deletes cannot
-    * resurrect); `compact = true` SETTLES the tombstones physically
-    * (dead ids drop during the rewrite, the compacted generation starts
-    * tombstone-free) and collapses the append file groups. */
-  def clonePqIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, compact: Boolean = false): Unit = {
-    spark.table(s"${src}_codebooks").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    val codes0 = spark.table(s"${src}_codes")
-    val codes = if (compact) dropTombstoned(spark, src, codes0) else codes0
-    (if (compact) codes.repartition(col("vec_id")) else codes)
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    if (!compact && spark.catalog.tableExists(s"${src}_tombstones"))
-      spark.table(s"${src}_tombstones")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${dest}_tombstones")
-  }
-
-  /** UPDATE maintenance for the PQ index — the same generation-step
-    * upsert contract as [[upsertToIvfIndex]] (in-place re-append is NOT
-    * offered: codes key on `vec_id`, and an id carrying both its stale
-    * and fresh code rows would FOLD BOTH into one corrupted ADC score —
-    * worse than the IVF double-serve, since the sums mix). The new
-    * generation drops every code row of the incoming ids AND of
-    * previously tombstoned ids (an update purges pending deletes for
-    * free), then re-encodes the incoming vectors' latest row each under
-    * the FROZEN codebooks (copied verbatim — no Lloyd pass). Cost: one
-    * codes rewrite — the compaction class. */
-  def upsertToPqIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, vecs: DataFrame, m: Int = 8,
-      dim: Int = 64): Unit = {
-    spark.table(s"${src}_codebooks").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    // ONE row per incoming id (the uniform upsert hygiene contract —
-    // deterministic max-by-content reduction of a duplicate-id batch)
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_codes")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    appendToPqIndex(spark, dest, latest, m, dim)
-  }
-
   /** Sign-pattern bucket of the first `bits` dimensions — an axis-aligned
     * random-hyperplane LSH (hyperplanes = coordinate planes; for unit-scale
     * embeddings each bit is ~balanced, giving 2^bits roughly even buckets). */
@@ -1435,15 +1321,6 @@ object VectorOps {
       probeLists(queries, cents, nProbe), k)
   }
 
-  /** DELETE maintenance for the standing IVF index — the vector member
-    * of the tombstone family ([[SearchOps.deleteFromSearchIndex]],
-    * [[Dedup.deleteFromBandIndex]]): deleted vec ids append to
-    * `<table>_tombstones`; both probes anti-join them broadcast AFTER
-    * list pruning (the anti-join runs over the nProbe lists actually
-    * read, not the corpus), so a removed vector can no longer surface
-    * as a neighbor; a compacting [[cloneIvfIndex]] settles them physically (the
-    * compacted generation starts tombstone-free). The list partitions
-    * are never read or rewritten by the delete itself. */
   /** METADATA-FILTERED probe of a [[writeIvfIndex]] table — the
     * production "vector search with attribute filter" (every serving
     * vector store headlines it): each query returns only neighbors
@@ -1475,6 +1352,15 @@ object VectorOps {
       .filter(col("rk") <= k)
   }
 
+  /** DELETE maintenance for the standing IVF index — the vector member
+    * of the tombstone family ([[SearchOps.deleteFromSearchIndex]],
+    * [[Dedup.deleteFromBandIndex]]): deleted vec ids append to
+    * `<table>_tombstones`; both probes anti-join them broadcast AFTER
+    * list pruning (the anti-join runs over the nProbe lists actually
+    * read, not the corpus), so a removed vector can no longer surface
+    * as a neighbor; a compacting [[IndexFamily.compact]] settles them
+    * physically (the compacted generation starts tombstone-free). The
+    * list partitions are never read or rewritten by the delete itself. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, ids: DataFrame, idCol: String = "vec_id"): Unit =
     // sequence-versioned like SearchOps.deleteFromSearchIndex: a direct
@@ -1609,33 +1495,6 @@ object VectorOps {
         packSignBits(col("embedding"), 32, 32).as("lo"),
         col("list_id"))
       .write.mode("append").insertInto(s"${table}_lists")
-  }
-
-  /** [[upsertToIvfIndexSq8]]'s binary twin — completes the binary
-    * family's mutation symmetry (delete and compaction are
-    * payload-agnostic): drop the incoming + tombstoned ids' rows,
-    * re-admit the latest vectors through the frozen-quantizer sign
-    * re-pack (bit-identical to a fresh build's masks). */
-  def upsertToIvfIndexBinary(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, vecs: DataFrame): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_lists")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
-    appendToIvfIndexBinary(spark, dest, latest)
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -1836,41 +1695,6 @@ object VectorOps {
       .write.mode("append").insertInto(s"${table}_codes")
   }
 
-  /** UPDATE maintenance for the IVF-PQ index — the composite member of
-    * the generation-step upsert family ([[upsertToPqIndex]] /
-    * [[upsertToIvfIndex]]; in-place re-append is NOT offered for the
-    * same reason as flat PQ: an id carrying stale and fresh code rows
-    * folds BOTH into one corrupted ADC score). Both quantizers copy
-    * verbatim (frozen), the new generation drops every code row of the
-    * incoming ids AND of previously tombstoned ids, then the incoming
-    * vectors' latest row each re-assigns and re-encodes under the
-    * frozen quantizers into the list partitions. Cost: one codes
-    * rewrite — the compaction class. */
-  def upsertToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, vecs: DataFrame,
-      m: Int = 8, dim: Int = 64): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    spark.table(s"${src}_codebooks").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    // ONE row per incoming id (the uniform upsert hygiene contract)
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_codes")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    appendToIvfPqIndex(spark, dest, latest, m, dim)
-  }
-
   /** The residual frame behind `by_residual=true`: every vector minus
     * its OWN list's coarse centroid, elementwise in FLOAT (single
     * rounding — the oracle mirrors it with `CAST(x::DOUBLE − c::DOUBLE
@@ -2022,36 +1846,6 @@ object VectorOps {
       .join(rsd.select(col("vec_id"), col("list_id")), Seq("vec_id"))
       .select(col("vec_id"), col("s"), col("cid"), col("list_id"))
       .write.mode("append").insertInto(s"${table}_codes")
-  }
-
-  /** [[upsertToIvfPqIndex]] for the residual layout — completes the
-    * residual family's mutation symmetry (delete and compaction are
-    * payload-agnostic and shared): the new generation drops every code
-    * row of the incoming ids and of previously tombstoned ids, then
-    * re-admits the latest vectors through the frozen-quantizer RESIDUAL
-    * re-encode, bit-identical to a fresh build's rows. */
-  def upsertToIvfPqResidualIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, vecs: DataFrame,
-      m: Int = 8, dim: Int = 64): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    spark.table(s"${src}_codebooks").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_codes")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    appendToIvfPqResidualIndex(spark, dest, latest, m, dim)
   }
 
   /** Full requantization epoch for the IVF-PQ index — the remedy
@@ -2212,149 +2006,6 @@ object VectorOps {
       .partitionBy("list_id")
       .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
     rsdRdd.unpersist(); pqRdd.unpersist()
-  }
-
-  /** Copy an IVF-PQ index to a new generation — the three-table form of
-    * [[cloneIvfIndex]]'s clone/compact contract: both quantizers copy
-    * verbatim (a clone is never a retrain), codes keep their
-    * `partitionBy(list_id)` layout, a plain clone carries the tombstone
-    * sidecar, and `compact = true` settles pending deletes physically
-    * while collapsing each list's append file groups to one. */
-  def cloneIvfPqIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, compact: Boolean = false): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    spark.table(s"${src}_codebooks").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    val codes0 = spark.table(s"${src}_codes")
-    val codes = if (compact) dropTombstoned(spark, src, codes0) else codes0
-    (if (compact) codes.repartition(col("list_id")) else codes)
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    if (!compact && spark.catalog.tableExists(s"${src}_tombstones"))
-      spark.table(s"${src}_tombstones")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${dest}_tombstones")
-  }
-
-  /** Copy an existing IVF index (either list payload) to a new table
-    * pair, preserving the `partitionBy(list_id)` layout — pure IO, no
-    * re-training and no re-assignment (the expensive N×K scoring never
-    * re-runs). The snapshot step of a clone-then-append workflow: derive
-    * a new index generation from the serving one, append the next batch
-    * to the clone, swap when validated — without touching the serving
-    * tables. Works for float and SQ8 lists alike (schema passthrough).
-    *
-    * `compact = true` makes the clone a COMPACTION: every append leaves
-    * one more file group per touched partition, and at some point the
-    * per-probe file-open overhead (and the state of small files on the
-    * object store) warrants rewriting each list as one file — the
-    * repartition on `list_id` routes each partition's rows to exactly
-    * one task, so the write emits exactly one file per list. Results
-    * are identical by construction (same rows, same layout, fewer
-    * files); IvfIndexSpec pins the file collapse and probe parity. */
-  def cloneIvfIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, compact: Boolean = false): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    // compaction settles pending deletes (deleteFromIvfIndex): the
-    // tombstoned vectors drop out during the per-list rewrite and the
-    // compacted generation starts tombstone-free
-    val lists0 = spark.table(s"${src}_lists")
-    val lists = if (compact) dropTombstoned(spark, src, lists0) else lists0
-    (if (compact) lists.repartition(col("list_id")) else lists)
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
-    // a plain clone carries the tombstone sidecar (ADVICE r12 #2, same
-    // contract as cloneSearchIndex/cloneBandIndex): the clone serves
-    // exactly what the source serves — pending deletes cannot silently
-    // resurrect in the new generation
-    if (!compact && spark.catalog.tableExists(s"${src}_tombstones"))
-      spark.table(s"${src}_tombstones")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${dest}_tombstones")
-  }
-
-  /** UPDATE maintenance for the IVF family — CDC UPDATE semantics as a
-    * GENERATION step, completing the upsert symmetry with
-    * [[SearchOps.upsertToSearchIndex]]: a new generation is written
-    * whose lists (a) drop every row of the incoming vec ids AND of
-    * previously tombstoned ids (an update purges pending deletes for
-    * free), and (b) gain the incoming vectors' fresh rows assigned by
-    * the SAME frozen coarse quantizer the appends use (quantizer copied
-    * verbatim — no Lloyd pass). In-place re-ingestion is NOT offered
-    * deliberately: list rows key on `vec_id`, and a vec_id appearing
-    * under both its stale and fresh embedding would serve BOTH as
-    * neighbors (and a vec_id-keyed tombstone cannot separate them —
-    * the stale and fresh rows may even share a list). The copy is one
-    * `repartition(list_id)` pass (compaction's plan, one file per
-    * list) with the drop set broadcast anti-joined; the new generation
-    * serves under [[Generations]] publish/swap like any other.
-    *
-    * At 100 TB an upsert batch costs a list rewrite — the COMPACTION
-    * cost class: run it at compaction cadence with deletes/appends
-    * accumulated in between, or per-batch on a clone when freshness
-    * demands it. */
-  def upsertToIvfIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, vecs: DataFrame): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    // ONE row per incoming id (ADVICE r12 #4, same contract as
-    // upsertToSearchIndex): a duplicate-id batch reduces
-    // deterministically (max by array content — arrays order
-    // lexicographically) instead of re-introducing the doubled-id
-    // defect this operator exists to prevent
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_lists")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
-    appendToIvfIndex(spark, dest, latest)
-  }
-
-  /** [[upsertToIvfIndex]] for a [[writeIvfIndexSq8]] table — the SQ8
-    * member of the upsert symmetry (VERDICT r13 #2): quantized codes
-    * make DELETE identical (the id anti-join never looks at the
-    * payload) and the re-admit a frozen-QUANTIZER re-encode — incoming
-    * float vectors are assigned by the copied coarse centroids and
-    * int8-quantized exactly as [[writeIvfIndexSq8]] would, so the new
-    * generation's rows for the upserted ids are bit-identical to a
-    * fresh build's. Same cost class as the float upsert: one list
-    * rewrite (compaction's plan) + a broadcast batch append. */
-  def upsertToIvfIndexSq8(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, vecs: DataFrame): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    // ONE row per incoming id, reduced deterministically — same
-    // duplicate-batch contract as upsertToIvfIndex
-    val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"))
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val incoming = latest.select(col("vec_id"))
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("vec_id"))).distinct()
-      else incoming
-    spark.table(s"${src}_lists")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
-    appendToIvfIndexSq8(spark, dest, latest)
   }
 
   /** The retrain DECISION over a persisted index's list-size

@@ -250,7 +250,7 @@ class IndexMutationSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("upsertToIvfIndex: doubled vec_id healed — one fresh row per id, tombstones settle") {
+  test("ivf upsert heals a doubled vec_id; tombstones settle") {
     val vecs = (0L until 24L).map(i =>
       (i, Array.tabulate(6)(d => math.cos(i * 5 + d).toFloat)))
       .toDF("vec_id", "embedding")
@@ -270,7 +270,7 @@ class IndexMutationSpec extends AnyFunSuite {
         .count() == 2L, "fixture must carry the doubled-id defect")
       // plus a pending delete that the upsert must settle
       VectorOps.deleteFromIvfIndex(spark, src, Seq(7L).toDF("vec_id"))
-      VectorOps.upsertToIvfIndex(spark, src, dest, paths(1),
+      IndexFamily.ivf.upsert(spark, src, dest, Seq(paths(1)),
         vecs.filter(col("vec_id").isin(2L, 3L)))
       val perId = spark.table(s"${dest}_lists").groupBy(col("vec_id"))
         .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -299,7 +299,7 @@ class IndexMutationSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("upsertToIvfIndexSq8: doubled id healed by frozen-quantizer re-encode; tombstones settle") {
+  test("sq8 upsert heals a doubled id by frozen re-encode; tombstones settle") {
     val vecs = (0L until 24L).map(i =>
       (i, Array.tabulate(6)(d => math.cos(i * 5 + d).toFloat)))
       .toDF("vec_id", "embedding")
@@ -324,7 +324,7 @@ class IndexMutationSpec extends AnyFunSuite {
       assert(spark.table(s"${src}_lists").filter(col("vec_id") === 2L)
         .count() == 2L, "fixture must carry the doubled-id defect")
       VectorOps.deleteFromIvfIndex(spark, src, Seq(7L).toDF("vec_id"))
-      VectorOps.upsertToIvfIndexSq8(spark, src, dest, paths(1),
+      IndexFamily.sq8.upsert(spark, src, dest, Seq(paths(1)),
         vecs.filter(col("vec_id").isin(2L, 3L)))
       val perId = spark.table(s"${dest}_lists").groupBy(col("vec_id"))
         .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -617,7 +617,7 @@ class IndexMutationSpec extends AnyFunSuite {
         .select((col("vec_id") + 900L).as("vec_id"), col("embedding"))
       VectorOps.appendToIvfIndex(spark, isrc, poison)
       VectorOps.deleteFromIvfIndex(spark, isrc, poison.select(col("vec_id")))
-      VectorOps.cloneIvfIndex(spark, isrc, idest, ipaths(1))
+      IndexFamily.ivf.cloneTo(spark, isrc, idest, ipaths(1))
       val got = VectorOps.probeIvfIndex(spark, idest,
         vecs.filter(col("vec_id") < 2), k = 3, nProbe = 2)
         .collect().map(_.getLong(1)).toSet
@@ -672,7 +672,7 @@ class IndexMutationSpec extends AnyFunSuite {
           .select(col("vec_id"),
             expr("transform(embedding, x -> -x)").cast("array<float>")
               .as("embedding")))
-      VectorOps.upsertToIvfIndex(spark, isrc, idest, ipaths(1), dup)
+      IndexFamily.ivf.upsert(spark, isrc, idest, Seq(ipaths(1)), dup)
       val n = spark.table(s"${idest}_lists").filter(col("vec_id") === 2L).count()
       assert(n == 1L, s"duplicate-id IVF upsert stored $n rows for one id")
     } finally Seq(s"${isrc}_cents", s"${isrc}_lists",

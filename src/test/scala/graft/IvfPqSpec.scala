@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.VectorOps
+import graft.operators.{IndexFamily, VectorOps}
 
 /** Gates the IVF-PQ composite ([[VectorOps.writeIvfPqIndex]] /
   * [[VectorOps.probeIvfPqIndex]]): (1) the served probe is
@@ -179,7 +179,7 @@ class IvfPqSpec extends AnyFunSuite {
       java.util.UUID.randomUUID().toString.replace("-", "")
     val path =
       java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_app_").toString
-    VectorOps.cloneIvfPqIndex(spark, base, table, path)
+    IndexFamily.ivfPq(8, 64).cloneTo(spark, base, table, path)
     VectorOps.appendToIvfPqIndex(spark, table, batch)
 
     // frozen-quantizer truth: re-derive the batch's codes/lists against
@@ -226,7 +226,7 @@ class IvfPqSpec extends AnyFunSuite {
       .createTempDirectory("graft_ivfpq_spec_ups_").toString
     val p2 = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_spec_ups_").toString
-    VectorOps.cloneIvfPqIndex(spark, base, src, p1)
+    IndexFamily.ivfPq(8, 64).cloneTo(spark, base, src, p1)
     // a pending delete the upsert must settle
     VectorOps.deleteFromIvfIndex(spark, src,
       emb.filter(col("vec_id") === 42).select(col("vec_id")))
@@ -236,7 +236,7 @@ class IvfPqSpec extends AnyFunSuite {
       .unionByName(
         emb.filter(col("vec_id") === 8)
           .select(lit(7L).as("vec_id"), col("embedding")))
-    VectorOps.upsertToIvfPqIndex(spark, src, dest, p2, dup)
+    IndexFamily.ivfPq(8, 64).upsert(spark, src, dest, Seq(p2), dup)
     val codes = spark.table(s"${dest}_codes")
     assert(codes.filter(col("vec_id") === 7).count() == 8,
       "duplicate-id batch wrote more than one code set for id 7")

@@ -153,8 +153,11 @@ class PqSpec extends AnyFunSuite {
           .select(lit(3L).as("vec_id"), col("embedding")), m = 2, dim = dim)
       // plus a pending delete of vec 0 the upsert must purge
       VectorOps.deleteFromIvfIndex(spark, src, Seq(0L).toDF("vec_id"))
-      VectorOps.upsertToPqIndex(spark, src, dest, paths(1),
-        c.filter(col("vec_id") === 3), m = 2, dim = dim)
+      // the served row's append encodes 8 subspaces of 64 dims; this
+      // index has 2 of `dim`
+      IndexFamily.vector(IndexFamily.pq.tables,
+          VectorOps.appendToPqIndex(_, _, _, m = 2, dim = dim))
+        .upsert(spark, src, dest, Seq(paths(1)), c.filter(col("vec_id") === 3))
       val codes = spark.table(s"${dest}_codes")
       assert(codes.filter(col("vec_id") === 3L).count() == 2,
         "exactly one generation of code rows per upserted id")

@@ -67,4 +67,22 @@ class StreamIngestSpec extends AnyFunSuite {
       Seq("_g0", "_g1", "_g2", "_applied").foreach(sfx =>
         spark.sql(s"DROP TABLE IF EXISTS ${base}$sfx"))
   }
+
+  // stops the shared context, so it stays the suite's last test
+  test("stream_ingest leaves no checkpoint or output dir once the session stops") {
+    val s = SparkTestSession.spark
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def dirs(): Set[String] = tmp.list().toSet.filter(n =>
+      n.startsWith("graft_ingest_ckpt_") || n.startsWith("graft_ingest_out_"))
+    val before = dirs()
+    val runs = Seq.fill(2)(
+      SparkEntry.queries("stream_ingest")(s, dir).collect().toSeq)
+    assert(runs.head.nonEmpty && runs.head == runs(1))
+    val made = dirs() -- before
+    assert(made.size == 2 && made.forall(_.startsWith("graft_ingest_out_")),
+      s"expected one output dir per call and no checkpoint: $made")
+    s.stop()
+    assert((dirs() -- before).isEmpty,
+      s"dirs left after the session stopped: ${dirs() -- before}")
+  }
 }
