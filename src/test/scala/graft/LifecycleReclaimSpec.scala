@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * entries that share an oracle (`_deleted`, `_updated`, `_published`
   * all hash-match the base) cannot be told apart by the oracle compare,
   * so a mis-wired stage would otherwise pass. The same pin covers the
-  * stream CDC entries and the search and band lifecycle entries, and a
-  * last test holds the CDC stages to the drop-list rule. */
+  * stream CDC entries and the search and band lifecycle entries, and
+  * two more tests hold the CDC stages and the search and band stages to
+  * the drop-list rule, on the epochs that pin's one build acquired. */
 class LifecycleReclaimSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -128,13 +129,22 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     "sim_ann_ivfpq_residual_retrained_recall" -> "ivfpq_res_retrain_index",
     "sim_ann_ivfpq_residual_retrain_check" -> "ivfpq_res_append_index")
 
-  /** The entries of `entryKinds` whose plan reads no generation of
-    * their epoch kind, all built in one fresh session. A CDC epoch's
-    * value names two generations (`src;settled`): the settle check
-    * reads the first, the probes the second. */
-  private def miswired(entryKinds: Seq[(String, String)]): Seq[String] = {
+  /** A fresh session: its registry entries are only its own builds. */
+  private def freshSession(): SparkSession = {
     val s = SparkTestSession.spark.newSession()
     graft.functions.GraftFunctions.register(s)
+    s
+  }
+
+  private def catalogTables(s: SparkSession): Set[String] =
+    s.catalog.listTables().collect().map(_.name.toLowerCase).toSet
+
+  /** The entries of `entryKinds` whose plan reads no generation of
+    * their epoch kind, all built in session `s`. A CDC epoch's value
+    * names two generations (`src;settled`): the settle check reads the
+    * first, the probes the second. */
+  private def miswired(s: SparkSession,
+      entryKinds: Seq[(String, String)]): Seq[String] = {
     val uuid = EpochRegistry.idOf(s)
     entryKinds.flatMap { case (entry, kind) =>
       val plan = SparkEntry.queries(entry)(s, sfDir).queryExecution.analyzed
@@ -152,14 +162,14 @@ class LifecycleReclaimSpec extends AnyFunSuite {
 
   test("each vector lifecycle entry probes the epoch of its own stage") {
     assert(entryKinds.size == 69 && entryKinds.map(_._1).distinct.size == 69)
-    val wrong = miswired(entryKinds)
+    val wrong = miswired(freshSession(), entryKinds)
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   /** (entry, the epoch kind its plan must read) for the stream CDC
-    * entries of the vector and graph families, and for the search and
+    * entries of the vector and graph families, then for the search and
     * band lifecycle entries. */
-  private val cdcAndTextEntryKinds: Seq[(String, String)] = Seq(
+  private val cdcEntryKinds: Seq[(String, String)] = Seq(
     "stream_ann_cdc" -> "ivf_cdc_index",
     "stream_ann_cdc_recall" -> "ivf_cdc_index",
     "stream_ann_cdc_settle_check" -> "ivf_cdc_index",
@@ -178,7 +188,9 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     "stream_graph_cdc" -> "graph_cdc_index",
     "stream_graph_cdc_recall" -> "graph_cdc_index",
     "stream_graph_cdc_settle_check" -> "graph_cdc_index",
-    "stream_graph_cdc_published" -> "graph_cdc_pointer_view",
+    "stream_graph_cdc_published" -> "graph_cdc_pointer_view")
+
+  private val textEntryKinds: Seq[(String, String)] = Seq(
     "text_search_appended" -> "search_append_index",
     "text_search_bm25_appended" -> "search_append_index",
     "text_search_compacted" -> "search_compact_index",
@@ -205,6 +217,8 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     "stream_dedup_cdc" -> "band_cdc_index",
     "stream_dedup_cdc_published" -> "band_cdc_view")
 
+  private val cdcAndTextEntryKinds = cdcEntryKinds ++ textEntryKinds
+
   /** The graph walk materializes every round, so a walked entry's plan
     * names no generation. Each is built instead in a fresh session
     * with the entries of its kind only: the pinned kinds live there
@@ -213,11 +227,12 @@ class LifecycleReclaimSpec extends AnyFunSuite {
   private val walked = Set("stream_graph_cdc", "stream_graph_cdc_recall",
     "stream_graph_cdc_published")
 
-  private def walkMiswired(entryKinds: Seq[(String, String)]): Seq[String] = {
+  private def walkMiswired(entryKinds: Seq[(String, String)],
+      session: () => SparkSession): Seq[String] = {
     val kindOf = entryKinds.toMap
     entryKinds.filter(e => walked(e._1)).groupBy(_._2).toSeq.flatMap {
       case (kind, group) =>
-        val s = SparkTestSession.spark.newSession()
+        val s = session()
         group.foreach { case (entry, _) => SparkEntry.queries(entry)(s, sfDir) }
         val uuid = EpochRegistry.idOf(s)
         val live = kindOf.values.toSet.filter(k =>
@@ -230,41 +245,67 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     }
   }
 
+  /** One build of every stream CDC, search and band entry, shared by the
+    * tests below: the entries the wiring check finds mis-wired, the
+    * catalog tables the CDC entries and then the text entries left
+    * behind, and every table on a drop list of the sessions that built
+    * them. */
+  private final case class CdcAndTextBuild(session: SparkSession,
+      wrong: Seq[String], cdcTables: Set[String], textTables: Set[String],
+      dropped: Set[String])
+
+  private lazy val cdcAndTextBuild: CdcAndTextBuild = {
+    val s = freshSession()
+    val walkSessions = collection.mutable.Buffer.empty[SparkSession]
+    val before = catalogTables(s)
+    val wrongCdc = miswired(s, cdcEntryKinds.filterNot(e => walked(e._1))) ++
+      walkMiswired(cdcEntryKinds, () => {
+        val w = freshSession(); walkSessions += w; w
+      })
+    val afterCdc = catalogTables(s)
+    val wrongText = miswired(s, textEntryKinds)
+    val dropped = (s +: walkSessions.toSeq)
+      .flatMap(w => EpochRegistry.liveEntries(EpochRegistry.idOf(w)))
+      .flatMap(_.dropTables).map(_.toLowerCase).toSet
+    CdcAndTextBuild(s, wrongCdc ++ wrongText, afterCdc -- before,
+      catalogTables(s) -- afterCdc, dropped)
+  }
+
   test("each stream CDC, search and band lifecycle entry probes the " +
       "epoch of its own stage") {
     assert(cdcAndTextEntryKinds.size == 44 &&
       cdcAndTextEntryKinds.map(_._1).distinct.size == 44)
-    val wrong = miswired(cdcAndTextEntryKinds.filterNot(e => walked(e._1))) ++
-      walkMiswired(cdcAndTextEntryKinds)
+    val wrong = cdcAndTextBuild.wrong
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   test("every CDC stage's catalog tables are on a live drop list") {
-    val s = SparkTestSession.spark.newSession()
-    graft.functions.GraftFunctions.register(s)
-    def catalog(): Set[String] =
-      s.catalog.listTables().collect().map(_.name.toLowerCase).toSet
-    val before = catalog()
-    import SimilarityQueries.{binary, ivf, ivfPq, mrl}
-    Seq(ivf, binary, mrl, ivfPq, GraphQueries.graph)
-      .foreach(StreamingQueries.cdcPointerView(s, sfDir, _))
-    val appeared = catalog() -- before
-    val dropped = EpochRegistry.liveEntries(EpochRegistry.idOf(s))
-      .flatMap(_.dropTables).map(_.toLowerCase).toSet
+    val appeared = cdcAndTextBuild.cdcTables
     assert(appeared.nonEmpty)
-    val leaked = appeared -- dropped
+    val leaked = appeared -- cdcAndTextBuild.dropped
     assert(leaked.isEmpty, s"tables outside every drop list: $leaked")
   }
 
+  test("every search and band stage's catalog tables are on a live " +
+      "drop list") {
+    val appeared = cdcAndTextBuild.textTables
+    assert(appeared.nonEmpty)
+    val leaked = appeared -- cdcAndTextBuild.dropped
+    assert(leaked.isEmpty, s"tables outside every drop list: $leaked")
+    // the 17 kinds the text entries probe, plus the search base the
+    // appended, compacted, published and atomic stages read
+    val kinds = textEntryKinds.map(_._2).toSet + "search_index"
+    assert(kinds.size == 18)
+    val uuid = EpochRegistry.idOf(cdcAndTextBuild.session)
+    val missing = kinds.filter(k => EpochRegistry.liveEntries(uuid, Some(k)).isEmpty)
+    assert(missing.isEmpty, s"kinds without a live entry: $missing")
+  }
+
   test("every lifecycle epoch's catalog tables are on a live drop list") {
-    // a fresh session: its registry entries are only this test's
-    val s = SparkTestSession.spark.newSession()
-    graft.functions.GraftFunctions.register(s)
-    def catalog(): Set[String] =
-      s.catalog.listTables().collect().map(_.name.toLowerCase).toSet
-    val before = catalog()
+    val s = freshSession()
+    val before = catalogTables(s)
     acquireAll(s)
-    val appeared = catalog() -- before
+    val appeared = catalogTables(s) -- before
     val uuid = EpochRegistry.idOf(s)
     val dropped = EpochRegistry.liveEntries(uuid)
       .flatMap(_.dropTables).map(_.toLowerCase).toSet
