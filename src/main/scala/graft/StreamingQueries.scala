@@ -2253,7 +2253,7 @@ object StreamingQueries {
     generation(s, dir, "cluster_stream_labels",
         Seq("_idx", "", "_applied")) { (labels, newDir) =>
       val work = s"${labels}_idx"
-      graft.operators.Dedup.cloneBandIndex(s, baseIndex, work, newDir())
+      IndexFamily.band(32).cloneTo(s, baseIndex, work, newDir())
       s.table(baseLabels).write.mode("overwrite").format("parquet")
         .saveAsTable(labels)
       val src = CdcStream.readEventStream(s, docsDir, maxFilesPerTrigger = 1)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.operators.{Classifier, Dedup, SearchOps, TextOps}
+import graft.operators.{Classifier, Dedup, IndexFamily, SearchOps, TextOps}
 import graft.EpochRegistry.{freshId, generation, tmpDir}
 
 /** Text analysis + deduplication over `documents` (SURVEY §2.3).
@@ -115,7 +115,7 @@ object TextQueries {
   private[graft] def bandAppendIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
     generation(s, dir, "band_append_index", Seq("")) { (t, newDir) =>
-      Dedup.cloneBandIndex(s, base, t, newDir())
+      IndexFamily.band(32).cloneTo(s, base, t, newDir())
       Dedup.appendToBandIndex(s, t,
         dupCorpus(Tables.documents(s, dir)).filter(col("doc_id") >= 200000),
         "doc_id", "text")
@@ -131,15 +131,15 @@ object TextQueries {
   private[graft] def bandCompactIndexFor(s: SparkSession, dir: String): String = {
     val base = bandAppendIndexFor(s, dir)
     generation(s, dir, "band_compact_index", Seq(""))((t, newDir) =>
-      Dedup.compactBandIndex(s, base, t, newDir()))
+      IndexFamily.band(32).compact(s, base, t, newDir()))
   }
 
   /** The band UPDATE epoch: the serving generation is cloned, CORRUPTED
     * the way naive re-ingestion would (near-dup-batch texts appended
     * under EXISTING corpus ids — those ids now carry band rows for two
     * different texts, so phantom jaccard-1.0 pairs against the probe
-    * batch), then HEALED by [[Dedup.upsertToBandIndex]] with the ids'
-    * true documents. The gated probe must hash-match
+    * batch), then HEALED by the band row's [[IndexFamily.upsert]] with
+    * the ids' true documents. The gated probe must hash-match
     * `dedup_incremental_indexed`'s oracle. Base resolved before the
     * acquire. */
   private[graft] def bandUpsertIndexFor(s: SparkSession, dir: String): String = {
@@ -159,10 +159,9 @@ object TextQueries {
       val truth = originals
         .join(stale.select(col("doc_id")), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("text"))
-      Dedup.cloneBandIndex(s, base, corrupt, paths(0))
+      IndexFamily.band(32).cloneTo(s, base, corrupt, paths(0))
       Dedup.appendToBandIndex(s, corrupt, stale, "doc_id", "text")
-      Dedup.upsertToBandIndex(s, corrupt, dest, paths(1), truth,
-        "doc_id", "text")
+      IndexFamily.band(32).upsert(s, corrupt, dest, Seq(paths(1)), truth)
       EpochRegistry.Resource(dest,
         dropTables = Seq(corrupt, dest), deleteDirs = paths)
     }
@@ -316,12 +315,10 @@ object TextQueries {
   private[graft] def searchCompactIndexFor(s: SparkSession, dir: String): String = {
     val base = searchAppendIndexFor(s, dir)
     generation(s, dir, "search_compact_index", searchTables) { (t, newDir) =>
-      SearchOps.compactSearchIndex(s, base, t, newDir())
-      // the compacted generation gets a FRESH norms sidecar derived from
-      // its own postings (dl = Σ tf — exact by construction, and the
-      // derivation also collapses the append epoch's sidecar files), so
-      // ranked retrieval works across the whole lifecycle
-      SearchOps.writeDocLengths(s, t, newDir())
+      // the norms sidecar compacts with the postings (one file per
+      // doc_id bucket), so ranked retrieval works across the whole
+      // lifecycle
+      IndexFamily.search(8).compact(s, base, t, newDir())
     }
   }
 
@@ -373,13 +370,11 @@ object TextQueries {
       val gen = "graft_search_aview_gen_" + freshId()
       val view = "graft_search_aview_" + freshId()
       val path = tmpDir("graft_search_aview_")
-      val dlPath = tmpDir("graft_search_aview_dl_")
-      SearchOps.cloneSearchIndex(s, base, gen, path)
-      SearchOps.writeDocLengths(s, gen, dlPath)
+      IndexFamily.search(8).cloneTo(s, base, gen, path)
       graft.operators.Generations.publishSearch(s, view, gen)
       EpochRegistry.Resource(view,
         dropTables = Seq(view, gen, s"${gen}_doclens", s"${gen}_tombstones"),
-        deleteDirs = Seq(path, dlPath))
+        deleteDirs = Seq(path))
     }
   }
 
@@ -400,11 +395,12 @@ object TextQueries {
   /** The DELETE-maintenance epoch for retrieval: the index is built over
     * the corpus PLUS a poison batch (doc_id ≥ 300000, text = the probe's
     * query terms repeated — the poison would own the top ranks), then the
-    * poison ids are tombstoned via [[SearchOps.deleteFromSearchIndex]].
-    * The gated probes must hash-match the ALL-DOCS oracles: tombstones
-    * have to remove the poison from the candidate postings, the df
-    * counts, AND the corpus stats (n_docs, Σdl) — any leak shifts every
-    * BM25 score, not just the poison's rank. */
+    * poison ids are tombstoned via the search row's
+    * [[IndexFamily.delete]]. The gated probes must hash-match the
+    * ALL-DOCS oracles: tombstones have to remove the poison from the
+    * candidate postings, the df counts, AND the corpus stats (n_docs,
+    * Σdl) — any leak shifts every BM25 score, not just the poison's
+    * rank. */
   private[graft] def searchDeleteIndexFor(s: SparkSession, dir: String): String =
     generation(s, dir, "search_delete_index",
         searchTables :+ "_tombstones") { (t, newDir) =>
@@ -413,7 +409,7 @@ object TextQueries {
       SearchOps.writeSearchIndex(docs.unionByName(poison), "doc_id", "text",
         t, newDir())
       SearchOps.writeDocLengths(s, t, newDir())
-      SearchOps.deleteFromSearchIndex(s, t, poison.select(col("doc_id")))
+      IndexFamily.search(8).delete(s, t, poison.select(col("doc_id")))
     }
 
   // every 11th doc re-badged under a fresh id with text that saturates
@@ -458,19 +454,19 @@ object TextQueries {
     * a poison batch is admitted (exact copies of the incoming near-dup
     * batch under ids ≥ 500000 — every incoming doc would pair with its
     * poison twin at jaccard 1.0), then the poison is tombstoned via
-    * [[Dedup.deleteFromBandIndex]]. The gated probe must hash-match
-    * `dedup_incremental_indexed`'s oracle — any tombstone leak emits
+    * the band row's [[IndexFamily.delete]]. The gated probe must
+    * hash-match `dedup_incremental_indexed`'s oracle — any tombstone leak emits
     * phantom (new_id, ≥500000) pairs. */
   private[graft] def bandDeleteIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
     generation(s, dir, "band_delete_index", Seq("", "_tombstones")) {
         (t, newDir) =>
-      Dedup.cloneBandIndex(s, base, t, newDir())
+      IndexFamily.band(32).cloneTo(s, base, t, newDir())
       val poison = dupCorpus(Tables.documents(s, dir))
         .filter(col("doc_id") >= 100000 && col("doc_id") < 200000)
         .select((col("doc_id") + 400000).as("doc_id"), col("text"))
       Dedup.appendToBandIndex(s, t, poison, "doc_id", "text")
-      Dedup.deleteFromBandIndex(s, t, poison.select(col("doc_id")))
+      IndexFamily.band(32).delete(s, t, poison.select(col("doc_id")))
     }
   }
 

@@ -281,7 +281,8 @@ object Dedup {
   /** Probe a [[writeBandIndex]] table with an incoming batch — identical
     * output to [[incrementalMinhashPairs]] (same join, ownership, and
     * verification), but the corpus side arrives pre-bucketed on the join
-    * key, so only the batch shuffles. */
+    * key, so only the batch shuffles. Corpus docs tombstoned by the band
+    * row's [[IndexFamily.delete]] no longer pair. */
   def probeBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       incoming: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5): DataFrame = {
@@ -290,137 +291,7 @@ object Dedup {
     // one: band rows AND tombstones resolve from the same generation
     val t = Generations.resolveServing(spark, table)
     crossBandVerify(bandRows(incoming, idCol, textCol, "new"),
-      dropTombstoned(spark, t, spark.table(t)), threshold)
-  }
-
-  /** DELETE maintenance for the standing band index — the same
-    * tombstone discipline as [[SearchOps.deleteFromSearchIndex]]
-    * (reference `sql/triggers.sql:29-32`: deletes are first-class CDC
-    * events and must reach downstream state): deleted doc ids append to
-    * `<table>_tombstones`, [[probeBandIndex]] anti-joins them broadcast
-    * (a removed document can no longer pair with incoming batches), and
-    * [[compactBandIndex]] settles them physically at the next
-    * generation boundary. A delete costs one id-batch append; the band
-    * rows are never read or rewritten.
-    *
-    * Sequence-versioned like [[SearchOps.deleteFromSearchIndex]] /
-    * [[VectorOps.deleteFromIvfIndex]]: a direct batch delete (no `seq`
-    * column) stamps `Long.MaxValue` (final until compaction); the CDC
-    * sink passes the event's queue sequence so a later re-INSERT/UPDATE
-    * outranks the tombstone at [[graft.streaming.IngestStream
-    * .settleFamilyUpserts]]. */
-  def deleteFromBandIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, ids: DataFrame, idCol: String = "doc_id"): Unit =
-    ids.select(col(idCol).cast("long").as("doc_id"),
-        (if (ids.columns.contains("seq")) col("seq").cast("long")
-         else lit(Long.MaxValue)).as("seq"))
-      .distinct()
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_tombstones")
-
-  // band rows key the corpus side as old_id; tombstones carry doc_id
-  private def dropTombstoned(spark: org.apache.spark.sql.SparkSession,
-      table: String, rows: DataFrame): DataFrame =
-    if (spark.catalog.tableExists(s"${table}_tombstones")) {
-      val t = spark.table(s"${table}_tombstones").select("doc_id").distinct()
-      rows.join(broadcast(t), rows("old_id") === t("doc_id"), "left_anti")
-    } else rows
-
-  /** Copy an existing band index to a new table under the same bucket
-    * spec — one shuffle-and-sort of the already-computed band rows, no
-    * shingle/minhash recompute (the expensive per-doc hashing never
-    * re-runs). The snapshot step of clone-then-append maintenance, so a
-    * new index generation can grow without touching the serving one.
-    *
-    * `compact = true` makes the clone a COMPACTION (the bucketed-table
-    * twin of the vector rows' [[IndexFamily.compact]]): each append
-    * leaves one more file group per bucket, and at some point the per-probe
-    * file-open overhead warrants collapsing each bucket to ONE file.
-    * Zero-shuffle design: the source is read through a session clone
-    * with `autoBucketedScan` disabled, forcing the genuinely bucketed
-    * scan — one task per bucket, all of that bucket's file groups read
-    * together — so the bucketed write emits exactly one file per
-    * non-empty bucket with NO exchange (see
-    * [[SearchOps.cloneSearchIndex]] for why a `repartition` on the
-    * bucket columns does NOT achieve this). Rows, bucket spec, and the
-    * probe's no-corpus-reshuffle plan are unchanged by construction —
-    * DedupIncrementalSpec pins the file collapse and probe parity. */
-  def cloneBandIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, numBuckets: Int = 32,
-      compact: Boolean = false): Unit = {
-    val reader = if (compact) {
-      val s = spark.newSession() // shares context + catalog; conf isolated
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      s
-    } else spark
-    val rows = reader.table(src)
-    // compaction settles pending deletes (same contract as
-    // SearchOps.cloneSearchIndex): tombstoned rows are dropped during
-    // the per-bucket copy and the destination starts tombstone-free
-    (if (compact) dropTombstoned(reader, src, rows) else rows)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "band", "bkey")
-      .sortBy("band", "bkey")
-      .option("path", path)
-      .saveAsTable(dest)
-    // a plain clone carries the tombstone sidecar (ADVICE r12 #2): the
-    // clone serves exactly what the source serves — pending deletes
-    // cannot silently resurrect in the new generation
-    if (!compact && spark.catalog.tableExists(s"${src}_tombstones"))
-      spark.table(s"${src}_tombstones")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${dest}_tombstones")
-  }
-
-  /** [[cloneBandIndex]] with `compact = true` under its operational
-    * name — band-index lifecycle symmetry with
-    * [[IndexFamily.compact]] (build → append* → compact →
-    * eventually re-dedup). */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, numBuckets: Int = 32): Unit =
-    cloneBandIndex(spark, src, dest, path, numBuckets, compact = true)
-
-  /** UPDATE maintenance for the band family — CDC UPDATE semantics as a
-    * GENERATION step, completing the upsert symmetry
-    * ([[SearchOps.upsertToSearchIndex]], the vector rows'
-    * [[IndexFamily.upsert]]):
-    * a new generation is written whose band rows (a) drop every row of
-    * the incoming doc ids AND of previously tombstoned ids, and (b)
-    * gain the incoming documents' fresh band rows through the SAME
-    * shingle/minhash pipeline the appends use. In-place re-ingestion is
-    * NOT offered deliberately: a doc's stale band rows would keep
-    * pairing it under its old content (and an old_id-keyed tombstone
-    * cannot separate stale from fresh rows of the same doc). The
-    * survivor copy is the ZERO-shuffle bucketed-scan read (one task per
-    * bucket, drop set broadcast anti-joined in the projection, one file
-    * per bucket); only the batch's fresh rows shuffle — so unlike the
-    * search upsert's full exchange, the band upsert costs corpus IO
-    * plus one batch-sized append. */
-  def upsertToBandIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, docs: DataFrame, idCol: String,
-      textCol: String, numBuckets: Int = 32): Unit = {
-    // ONE row per incoming id (ADVICE r12 #4, same contract as
-    // SearchOps.upsertToSearchIndex): duplicate-id batches reduce
-    // deterministically (max by content) instead of writing a doc's
-    // band rows twice into the generation this operator exists to heal
-    val latest = docs.select(col(idCol).cast("long").as(idCol), col(textCol))
-      .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-    val incoming = latest.select(col(idCol).as("doc_id")).distinct()
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        incoming.unionByName(
-          spark.table(s"${src}_tombstones").select(col("doc_id"))).distinct()
-      else incoming
-    val reader = spark.newSession() // shares context + catalog; conf isolated
-    reader.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false")
-    val rows = reader.table(src)
-    rows.join(broadcast(dead), rows("old_id") === dead("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "band", "bkey")
-      .sortBy("band", "bkey")
-      .option("path", path).saveAsTable(dest)
-    appendToBandIndex(spark, dest, latest, idCol, textCol, numBuckets)
+      IndexFamily.live(spark, t, spark.table(t), "old_id"), threshold)
   }
 
   /** The re-shard DECISION over a band index's bucket-size
@@ -470,12 +341,12 @@ object Dedup {
     * move intact, which is why probe output is bit-identical (the gated
     * query shares the serving index's oracle). Pending tombstones
     * settle here like at every generation boundary. Same-count
-    * "re-sharding" degenerates to [[compactBandIndex]] — use that
-    * instead (the exchange would be elided against the scan's matching
-    * partitioning). */
+    * "re-sharding" degenerates to the band row's
+    * [[IndexFamily.compact]] — use that instead (the exchange would be
+    * elided against the scan's matching partitioning). */
   def reshardBandIndex(spark: org.apache.spark.sql.SparkSession, src: String,
       dest: String, path: String, newNumBuckets: Int): Unit =
-    dropTombstoned(spark, src, spark.table(src))
+    IndexFamily.live(spark, src, spark.table(src), "old_id")
       .repartition(newNumBuckets, col("band"), col("bkey"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(newNumBuckets, "band", "bkey")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generation promotion — the SWAP step of the clone-append-validate-
   * swap workflow every index family's maintenance ops build toward
-  * (band: [[Dedup.cloneBandIndex]], search: [[SearchOps.cloneSearchIndex]],
-  * vector: [[IndexFamily.cloneTo]] / [[VectorOps.retrainIvfIndex]]):
+  * (every family's [[IndexFamily.cloneTo]], or a rebuild such as
+  * [[VectorOps.retrainIvfIndex]]):
   * once a candidate generation is validated, it takes over the SERVING
   * NAME, so probes keep addressing one stable name while the bytes
   * underneath change epoch. Implemented as catalog renames of external
@@ -96,8 +96,8 @@ object Generations {
     * (ViewFlipSpec pins both).
     *
     * The generation's tombstone sidecar is created empty if missing —
-    * the view must reference it so [[SearchOps.deleteFromSearchIndex]]
-    * appends issued against the generation AFTER the flip are visible
+    * the view must reference it so [[IndexFamily.delete]] appends
+    * issued against the generation AFTER the flip are visible
     * through the serving name immediately (a view is indirection, not
     * a snapshot). Maintenance keeps addressing the GENERATION;
     * rollback is re-publishing the previous generation, unchanged. */
@@ -107,10 +107,11 @@ object Generations {
       s"generation table $generation does not exist")
     require(spark.catalog.tableExists(s"${generation}_doclens"),
       s"norms sidecar ${generation}_doclens does not exist")
-    if (!spark.catalog.tableExists(s"${generation}_tombstones")) {
+    if (IndexFamily.tombstones(spark, generation).isEmpty) {
       import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("doc_id", "seq")
-        .write.format("parquet").saveAsTable(s"${generation}_tombstones")
+      // an empty delete creates the sidecar; a delete reads no bucket count
+      IndexFamily.search(8).delete(spark, generation,
+        Seq.empty[Long].toDF("doc_id"))
     }
     spark.sql(
       s"""CREATE OR REPLACE VIEW $view AS
@@ -133,7 +134,7 @@ object Generations {
     * [[Dedup.bandReshardCheck]]/[[SearchOps.searchReshardCheck]],
     * settle has [[graft.streaming.IngestStream.settleCheck]] — and the
     * COMPACT edge (tombstone purge + file-group collapse:
-    * `compactSearchIndex`/`compactBandIndex`/[[IndexFamily.compact]]) had no
+    * every family's [[IndexFamily.compact]]) had no
     * verdict telling a deployment when to run it. Pending tombstones
     * cost every probe a broadcast anti-join over the sidecar and leave
     * dead rows in the scanned corpus; this reduces that load to one
@@ -156,10 +157,8 @@ object Generations {
       maxTombstoned: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, expr, lit}
     import spark.implicits._
-    val tomb =
-      if (spark.catalog.tableExists(s"${table}_tombstones"))
-        spark.table(s"${table}_tombstones")
-      else Seq.empty[(Long, Long)].toDF("doc_id", "seq")
+    val tomb = IndexFamily.tombstones(spark, table)
+      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "seq"))
     val idCol = tomb.columns.head
     corpus.agg(count(lit(1)).as("n_rows"))
       .crossJoin(tomb.agg(countDistinct(col(idCol)).as("n_tombstoned")))
@@ -247,7 +246,7 @@ object Generations {
     * generation. Re-publish the successor first, then retire.
     *
     * Drops tables only (the family tables passed as `suffixes`, plus
-    * the three maintenance sidecars unconditionally); external files
+    * the [[IndexFamily.sidecars]] unconditionally); external files
     * belong to whoever created the paths — the epoch owner deletes
     * its temp dirs, a deployment's object store has its own GC. */
   def retireGeneration(spark: SparkSession, generation: String,
@@ -265,10 +264,8 @@ object Generations {
       s"generation $generation is still referenced by serving view(s) " +
         s"${serving.map(_.table).mkString(", ")} — publish the successor " +
         "first, then retire")
-    (suffixes ++ Seq("_tombstones", "_pending", "_applied"))
-      .distinct.foreach { sfx =>
-        spark.sql(s"DROP TABLE IF EXISTS ${generation + sfx}")
-      }
+    (suffixes ++ IndexFamily.sidecars).distinct.foreach(sfx =>
+      spark.sql(s"DROP TABLE IF EXISTS ${generation + sfx}"))
   }
 
   /** Swap `serving` and `candidate` (each suffixed table pair) in the

@@ -1239,12 +1239,7 @@ object GraphOps {
       entryCells: Int = WalkEntryCells): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
-    val nodes =
-      if (spark.catalog.tableExists(s"${t}_tombstones"))
-        spark.table(s"${t}_nodes").join(
-          broadcast(spark.table(s"${t}_tombstones").select(col("vec_id"))),
-          Seq("vec_id"), "left_anti")
-      else spark.table(s"${t}_nodes")
+    val nodes = IndexFamily.live(spark, t, spark.table(s"${t}_nodes"), "vec_id")
     beamWalk(spark,
       queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
       spark.table(s"${t}_edges").select(col("src"), col("dst")),
@@ -1274,12 +1269,7 @@ object GraphOps {
       entryCells: Int = WalkFilteredEntryCells): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
-    val nodes =
-      if (spark.catalog.tableExists(s"${t}_tombstones"))
-        spark.table(s"${t}_nodes").join(
-          broadcast(spark.table(s"${t}_tombstones").select(col("vec_id"))),
-          Seq("vec_id"), "left_anti")
-      else spark.table(s"${t}_nodes")
+    val nodes = IndexFamily.live(spark, t, spark.table(s"${t}_nodes"), "vec_id")
     beamWalk(spark,
       queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("label").as("qlabel")),
@@ -1310,12 +1300,7 @@ object GraphOps {
       entryCells: Int = WalkRerankEntryCells): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
-    val nodes =
-      if (spark.catalog.tableExists(s"${t}_tombstones"))
-        spark.table(s"${t}_nodes").join(
-          broadcast(spark.table(s"${t}_tombstones").select(col("vec_id"))),
-          Seq("vec_id"), "left_anti")
-      else spark.table(s"${t}_nodes")
+    val nodes = IndexFamily.live(spark, t, spark.table(s"${t}_nodes"), "vec_id")
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
     val shortlist = beamWalk(spark, q,
@@ -1398,27 +1383,18 @@ object GraphOps {
     * class. */
   def compactGraphIndex(spark: SparkSession, src: String, dest: String,
       path: String): Unit = {
-    import spark.implicits._
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        spark.table(s"${src}_tombstones").select(col("vec_id")).distinct()
-      else Seq.empty[Long].toDF("vec_id")
+    def live(rows: DataFrame, key: String) =
+      IndexFamily.live(spark, src, rows, key)
     spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
       .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    spark.table(s"${src}_cells")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
+    live(spark.table(s"${src}_cells"), "vec_id")
       .select(col("vec_id"), col("list_id"))
       .write.mode("overwrite").format("parquet").partitionBy("list_id")
       .option("path", s"$path/cells").saveAsTable(s"${dest}_cells")
-    spark.table(s"${src}_nodes")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
+    live(spark.table(s"${src}_nodes"), "vec_id")
       .write.mode("overwrite").format("parquet")
       .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    spark.table(s"${src}_edges")
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(dead.select(col("vec_id").as("dst"))),
-        Seq("dst"), "left_anti")
+    live(live(spark.table(s"${src}_edges"), "src"), "dst")
       .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
       .write.mode("overwrite").format("parquet")
       .option("path", s"$path/edges").saveAsTable(s"${dest}_edges")
@@ -1437,29 +1413,22 @@ object GraphOps {
     * settle mirrorable); the result starts tombstone-free. */
   def upsertToGraphIndex(spark: SparkSession, src: String, dest: String,
       path: String, vecs: DataFrame): Unit = {
-    import spark.implicits._
-    val dead =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        spark.table(s"${src}_tombstones").select(col("vec_id")).distinct()
-      else Seq.empty[Long].toDF("vec_id")
-    val gone = vecs.select(col("vec_id")).distinct()
-      .unionAll(dead).distinct()
+    val touched = vecs.select(col("vec_id")).distinct()
+    // neither tombstoned nor touched
+    def live(rows: DataFrame, key: String) =
+      IndexFamily.live(spark, src, rows, key).join(
+        broadcast(touched.select(col("vec_id").as(key))), Seq(key),
+        "left_anti")
     spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
       .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    spark.table(s"${src}_cells")
-      .join(broadcast(gone), Seq("vec_id"), "left_anti")
+    live(spark.table(s"${src}_cells"), "vec_id")
       .select(col("vec_id"), col("list_id"))
       .write.mode("overwrite").format("parquet").partitionBy("list_id")
       .option("path", s"$path/cells").saveAsTable(s"${dest}_cells")
-    spark.table(s"${src}_nodes")
-      .join(broadcast(gone), Seq("vec_id"), "left_anti")
+    live(spark.table(s"${src}_nodes"), "vec_id")
       .write.mode("overwrite").format("parquet")
       .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    spark.table(s"${src}_edges")
-      .join(broadcast(gone.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(gone.select(col("vec_id").as("dst"))),
-        Seq("dst"), "left_anti")
+    live(live(spark.table(s"${src}_edges"), "src"), "dst")
       .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
       .write.mode("overwrite").format("parquet")
       .option("path", s"$path/edges").saveAsTable(s"${dest}_edges")
@@ -1501,11 +1470,7 @@ object GraphOps {
   def retrainGraphIndex(spark: SparkSession, src: String, dest: String,
       path: String, trainIters: Int = 2): Unit = {
     val corpus =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        spark.table(s"${src}_nodes").join(
-          broadcast(spark.table(s"${src}_tombstones").select(col("vec_id"))),
-          Seq("vec_id"), "left_anti")
-      else spark.table(s"${src}_nodes")
+      IndexFamily.live(spark, src, spark.table(s"${src}_nodes"), "vec_id")
     writeGraphIndex(corpus.select(col("vec_id"), col("embedding")),
       dest, path, trainIters)
   }

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.util.concurrent.{CompletionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.functions.{broadcast, col, max}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 
 /** One index family — everything that differs between the standing
@@ -17,10 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
   *
   *  - `idCol`/`payloadCol`/`payloadType`: the capture frame's key and
   *    row columns (`doc_id`/`text` or `vec_id`/`embedding`), also the
-  *    `<table>_pending` queue's shape;
+  *    `<table>_pending` queue's shape and the tombstones' id column;
   *  - `append`: the batch path's frozen-layout insert of an
   *    `(id, payload)` frame;
-  *  - `delete`: the seq-versioned tombstone of an `(id, seq)` frame;
   *  - `upsert`: the generation copy `src` → `dest` that re-ingests the
   *    settle's winner frame (written under `paths`);
   *  - `cloneTo`: the generation copy `src` → `dest` (under `path`) that
@@ -36,18 +36,48 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
   *    order-dependent and settles as one batch for determinism — the
   *    FreshDiskANN streaming-merge model).
   *
-  * The text rows and the graph row bring their own `upsert`, `cloneTo`
-  * and `compact`; every other vector row takes all three from one
-  * layout-driven copy ([[IndexFamily.vector]]). */
+  * Every row deletes the same way ([[delete]]). The search row brings
+  * its own `upsert` and the graph row its own `upsert`, `cloneTo` and
+  * `compact`; every other copy comes from one layout-driven routine
+  * ([[IndexFamily.copied]]). The tombstone sidecar is this object's
+  * alone: its rows ([[delete]]), its reads ([[IndexFamily.tombstones]],
+  * [[IndexFamily.live]]) and its copy. */
 final case class IndexFamily(
     idCol: String, payloadCol: String, payloadType: DataType,
     tables: Seq[String],
     append: (SparkSession, String, DataFrame) => Unit,
-    delete: (SparkSession, String, DataFrame) => Unit,
     upsert: (SparkSession, String, String, Seq[String], DataFrame) => Unit,
     cloneTo: (SparkSession, String, String, String) => Unit,
     compact: (SparkSession, String, String, String) => Unit,
     reingestInserts: Boolean) {
+
+  /** DELETE maintenance — the reference's CDC DELETE semantics
+    * (`sql/triggers.sql:29-32`: a delete is captured and must reach
+    * downstream state): the deleted ids append to the tombstone
+    * sidecar `<table>_tombstones`, one `(idCol, seq)` row per distinct
+    * pair. The index tables are never read or rewritten: a delete costs
+    * one id-batch append, every probe drops the ids
+    * ([[IndexFamily.live]]), and the next compaction settles them
+    * physically — the "mutations accumulate cheaply, compaction settles
+    * them" discipline of every LSM/lakehouse delete.
+    *
+    * Sequence-versioned: a direct batch delete (no `seq` column in
+    * `ids`) stamps `Long.MaxValue` — final until compaction. The CDC
+    * sink passes the event's queue sequence instead, so a LATER
+    * re-INSERT or UPDATE of the same id outranks the tombstone at the
+    * settle ([[graft.streaming.IngestStream.settleFamilyUpserts]]).
+    * Probes stay seq-blind: any tombstone hides the id until the settle
+    * resolves the order. The search probes read through cached session
+    * clones, which are refreshed after the append. */
+  def delete(s: SparkSession, table: String, ids: DataFrame): Unit = {
+    ids.select(col(idCol).cast("long").as(idCol),
+        (if (ids.columns.contains("seq")) col("seq").cast("long")
+         else lit(Long.MaxValue)).as("seq"))
+      .distinct()
+      .write.mode("append").format("parquet")
+      .saveAsTable(table + IndexFamily.tombstoneSuffix)
+    SearchOps.refreshProbeSessions(table + IndexFamily.tombstoneSuffix)
+  }
 
   /** Every table a drain into `src` and a settle into `dest` leave
     * behind: both generations plus the source's three sidecars. */
@@ -58,8 +88,54 @@ final case class IndexFamily(
 
 object IndexFamily {
 
+  private val tombstoneSuffix = "_tombstones"
+
   /** Written by the drain next to the family's own tables. */
-  val sidecars: Seq[String] = Seq("_tombstones", "_pending", "_applied")
+  val sidecars: Seq[String] = Seq(tombstoneSuffix, "_pending", "_applied")
+
+  /** The tombstone sidecar of generation `table` — the `(id, seq)` rows
+    * [[IndexFamily.delete]] appends — or `None` while nothing was
+    * deleted: a missing sidecar means no deletes, and an index with
+    * none pays nothing. */
+  private[graft] def tombstones(s: SparkSession, table: String)
+      : Option[DataFrame] =
+    Option.when(s.catalog.tableExists(table + tombstoneSuffix))(
+      s.table(table + tombstoneSuffix))
+
+  /** `rows` of generation `table` without the ids it tombstoned: a
+    * broadcast `left_anti` of `rows(key)` against the sidecar's ids, or
+    * `rows` itself while none exist. `key` is the family's `idCol`,
+    * except on band rows, which key the corpus side as `old_id`. The
+    * ids are not made distinct: an anti-join's output does not depend
+    * on duplicates. */
+  private[graft] def live(s: SparkSession, table: String, rows: DataFrame,
+      key: String): DataFrame =
+    deadIds(s, table, key)
+      .fold(rows)(d => rows.join(broadcast(d), Seq(key), "left_anti"))
+
+  // the sidecar's ids under the name `key`; the id is its first column
+  private def deadIds(s: SparkSession, table: String, key: String)
+      : Option[DataFrame] =
+    tombstones(s, table).map(t => t.select(col(t.columns.head).as(key)))
+
+  /** The zero-shuffle bucketed-scan reader every bucketed copy reads
+    * through: a session clone (sharing the context and catalog, conf
+    * isolated) with `autoBucketedScan` disabled, so a bucketed table
+    * scans as one task per bucket with all of that bucket's file groups,
+    * and a write under the same bucket spec emits one file per bucket
+    * with no exchange. A `repartition` on the bucket columns does NOT
+    * achieve this: the scan advertises the bucket hash partitioning, so
+    * EnsureRequirements elides the exchange, while
+    * DisableUnnecessaryBucketedScan independently downgrades the scan to
+    * file-grain tasks — leaving buckets split across tasks (the
+    * file-collapse tests of SearchOpsSpec and DedupIncrementalSpec pin
+    * it). */
+  private[graft] def bucketedReader(s: SparkSession): SparkSession = {
+    val reader = s.newSession()
+    reader.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
+      "false")
+    reader
+  }
 
   /** Runs `writes` as concurrent Spark jobs and returns once every one
     * has finished. The callers pass writes of disjoint tables, none
@@ -96,111 +172,116 @@ object IndexFamily {
     t
   }
 
-  private def text(tables: Seq[String],
-      append: (SparkSession, String, DataFrame) => Unit,
-      delete: (SparkSession, String, DataFrame) => Unit,
-      upsert: (SparkSession, String, String, Seq[String], DataFrame) => Unit,
-      cloneOp: (SparkSession, String, String, String, Boolean) => Unit)
-      : IndexFamily =
-    IndexFamily("doc_id", "text", StringType, tables, append, delete, upsert,
-      cloneOp(_, _, _, _, false), cloneOp(_, _, _, _, true),
-      reingestInserts = false)
-
   private val embeddingType = ArrayType(FloatType, containsNull = false)
 
-  /** A vector family: only its tables and its frozen-layout `append`
-    * differ, the three generation copies come from [[copyGeneration]].
-    * The upsert is a compaction that also drops the incoming ids,
-    * followed by the family's own append of one row per id — the latest
-    * by a deterministic max over the array content, so a duplicate-id
-    * batch cannot re-introduce the doubled id the upsert exists to
-    * prevent. In-place re-ingestion is not offered: rows key on
-    * `vec_id`, so an id stored under both its stale and fresh payload
-    * would serve twice, or fold both code sets into one PQ score. */
-  private[graft] def vector(tables: Seq[String],
+  /** A row whose three generation copies come from [[copyGeneration]]:
+    * only its tables, the `key` its rows carry the id under, and its
+    * frozen-layout `append` differ. The upsert is a compaction that also
+    * drops the incoming ids, followed by the row's own append of one row
+    * per id — the latest by a deterministic max over the payload, so a
+    * duplicate-id batch cannot re-introduce the doubled id the upsert
+    * exists to prevent. In-place re-ingestion is not offered: rows key
+    * on the id, so an id stored under both its stale and fresh payload
+    * would serve twice (band rows: pair under both texts), or fold both
+    * code sets into one PQ score. */
+  private def copied(idCol: String, payloadCol: String,
+      payloadType: DataType, tables: Seq[String], key: String,
       append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
-    IndexFamily("vec_id", "embedding", embeddingType, tables, append,
-      VectorOps.deleteFromIvfIndex(_, _, _),
-      (s, src, dest, paths, vecs) => {
-        val latest = vecs.select(col("vec_id").cast("long").as("vec_id"),
-            col("embedding"))
-          .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-        copyGeneration(s, tables, src, dest, paths.head,
-          Some(Seq(latest.select(col("vec_id")))))
+    IndexFamily(idCol, payloadCol, payloadType, tables, append,
+      (s, src, dest, paths, rows) => {
+        val latest = rows.select(col(idCol).cast("long").as(idCol),
+            col(payloadCol))
+          .groupBy(col(idCol)).agg(max(col(payloadCol)).as(payloadCol))
+        copyGeneration(s, tables, key, src, dest, paths.head,
+          Some(Seq(latest.select(col(idCol).as(key)))))
         append(s, dest, latest)
       },
-      copyGeneration(_, tables, _, _, _, None),
-      copyGeneration(_, tables, _, _, _, Some(Nil)),
+      copyGeneration(_, tables, key, _, _, _, None),
+      copyGeneration(_, tables, key, _, _, _, Some(Nil)),
       reingestInserts = false)
 
+  /** A vector family: a [[copied]] row keyed on `vec_id`. */
+  private[graft] def vector(tables: Seq[String],
+      append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
+    copied("vec_id", "embedding", embeddingType, tables, "vec_id", append)
+
   /** Copies every table of generation `src` to `dest`, each under
-    * `path/<suffix>`, by the layout the table already has — never a
-    * retrain or a re-assignment. A table with no `vec_id` column is a
-    * frozen quantizer (`_cents`, `_codebooks`) and copies verbatim. A
-    * `vec_id` table keeps the partition columns the catalog reports
-    * for it.
+    * `path/<suffix>` (`path/rows` for the `""` table, so a sidecar's
+    * directory never sits inside it), by the layout the table already
+    * has — never a retrain, a re-assignment or a re-tokenization. A
+    * table missing from `src` is not written, so `dest` has the same
+    * shape (a postings-only search index has no `_doclens`). A table
+    * with no `key` column is a frozen quantizer (`_cents`,
+    * `_codebooks`) and copies verbatim. Every table keeps the partition
+    * columns and the bucket spec the catalog reports for it; a bucketed
+    * table is read through [[bucketedReader]], so each bucket is
+    * rewritten as one file with no exchange.
     *
     *  - `drop = None`, a plain clone: every row copies and the tombstone
     *    sidecar is carried over, so the clone serves exactly what the
     *    source serves and pending deletes cannot resurrect.
-    *  - `drop = Some(ids)`, a compaction: the `vec_id` tables lose
-    *    `ids` and the source's tombstoned ids, and are repartitioned by
-    *    their partition columns, so each list is rewritten as one file
-    *    (IvfIndexSpec pins the collapse). The new generation starts
-    *    tombstone-free. */
+    *  - `drop = Some(ids)`, a compaction: the `key` tables lose `ids`
+    *    and the source's tombstoned ids, and a partitioned table is
+    *    repartitioned by its partition columns, so each list is
+    *    rewritten as one file (IvfIndexSpec pins the collapse). The new
+    *    generation starts tombstone-free. */
   private def copyGeneration(s: SparkSession, tables: Seq[String],
-      src: String, dest: String, path: String,
+      key: String, src: String, dest: String, path: String,
       drop: Option[Seq[DataFrame]]): Unit = {
-    val tombstones = src + "_tombstones"
-    val tombstoned = s.catalog.tableExists(tombstones)
-    val dead = drop.flatMap(ids => (ids ++ Option.when(tombstoned)(
-      s.table(tombstones).select(col("vec_id")))).reduceOption(_ unionByName _))
-    tables.foreach { t =>
-      val rows = s.table(src + t)
-      val parts = s.catalog.listColumns(src + t).collect()
-        .filter(_.isPartition).map(_.name).toSeq
+    val dead = drop.flatMap(ids =>
+      (ids ++ deadIds(s, src, key)).reduceOption(_ unionByName _))
+    tables.filter(t => s.catalog.tableExists(src + t)).foreach { t =>
+      val meta = s.sessionState.catalog
+        .getTableMetadata(TableIdentifier(src + t))
+      val parts = meta.partitionColumnNames
+      val rows = meta.bucketSpec.fold(s)(_ => bucketedReader(s)).table(src + t)
       val copied =
-        if (drop.isEmpty || !rows.columns.contains("vec_id")) rows
+        if (drop.isEmpty || !rows.columns.contains(key)) rows
         else {
           val live = dead.fold(rows)(d =>
-            rows.join(broadcast(d.distinct()), Seq("vec_id"), "left_anti"))
+            rows.join(broadcast(d.distinct()), Seq(key), "left_anti"))
           if (parts.isEmpty) live else live.repartition(parts.map(col): _*)
         }
-      copied.write.mode("overwrite").format("parquet").partitionBy(parts: _*)
-        .option("path", s"$path/${t.stripPrefix("_")}").saveAsTable(dest + t)
+      val dir = if (t.isEmpty) "rows" else t.stripPrefix("_")
+      val write = copied.write.mode("overwrite").format("parquet")
+        .partitionBy(parts: _*)
+      meta.bucketSpec.fold(write)(b => write
+          .bucketBy(b.numBuckets, b.bucketColumnNames.head,
+            b.bucketColumnNames.tail: _*)
+          .sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*))
+        .option("path", s"$path/$dir").saveAsTable(dest + t)
     }
-    if (drop.isEmpty && tombstoned)
-      s.table(tombstones).write.mode("overwrite").format("parquet")
-        .saveAsTable(dest + "_tombstones")
+    if (drop.isEmpty)
+      tombstones(s, src).foreach(_.write.mode("overwrite").format("parquet")
+        .saveAsTable(dest + tombstoneSuffix))
   }
 
-  /** Postings + BM25 norms; the settle writes both (`paths` = postings
-    * path, norms path). `numBuckets` reaches BOTH appends: the sidecar's
-    * own default could otherwise disagree with a non-default index spec
-    * and Spark rejects the mismatched bucketing. `cloneTo`/`compact` copy
-    * the postings; the norms re-derive from them
-    * ([[SearchOps.writeDocLengths]]). The two appends run as concurrent
-    * jobs, as do the settle's two copies. */
-  def search(numBuckets: Int): IndexFamily = text(Seq("", "_doclens"),
+  /** Postings + BM25 norms, keyed on `doc_id`; the settle writes both
+    * (`paths` = postings path, norms path) in
+    * [[SearchOps.upsertToSearchIndex]]. `numBuckets` reaches BOTH
+    * appends and the settle: the sidecar's own default could otherwise
+    * disagree with a non-default index spec and Spark rejects the
+    * mismatched bucketing; the clone and the compaction keep the
+    * source's spec. The two appends run as concurrent jobs, as do the
+    * settle's two copies. */
+  def search(numBuckets: Int): IndexFamily = copied("doc_id", "text",
+    StringType, Seq("", "_doclens"), "doc_id",
     (s, t, docs) => concurrently(s)(
       () => SearchOps.appendToSearchIndex(s, t, docs, "doc_id", "text",
         numBuckets),
       () => SearchOps.appendDocLengths(s, t, docs, "doc_id", "text",
-        numBuckets)),
-    SearchOps.deleteFromSearchIndex(_, _, _),
-    (s, src, dest, paths, docs) => SearchOps.upsertToSearchIndex(s, src,
-      dest, paths(0), paths(1), docs, "doc_id", "text", numBuckets),
-    SearchOps.cloneSearchIndex(_, _, _, _, numBuckets, _))
+        numBuckets))
+  ).copy(upsert = (s, src, dest, paths, docs) =>
+    SearchOps.upsertToSearchIndex(s, src, dest, paths(0), paths(1), docs,
+      "doc_id", "text", numBuckets))
 
-  /** LSH band rows; a stale UPDATE left in place would pair under BOTH
-    * texts (phantom jaccard matches), hence queue-until-settle. */
-  def band(numBuckets: Int): IndexFamily = text(Seq(""),
-    (s, t, docs) => Dedup.appendToBandIndex(s, t, docs, "doc_id", "text",
-      numBuckets),
-    Dedup.deleteFromBandIndex(_, _, _),
-    (s, src, dest, paths, docs) => Dedup.upsertToBandIndex(s, src, dest,
-      paths.head, docs, "doc_id", "text", numBuckets),
-    Dedup.cloneBandIndex(_, _, _, _, numBuckets, _))
+  /** LSH band rows, keyed on `old_id`; a stale UPDATE left in place
+    * would pair under BOTH texts (phantom jaccard matches), hence
+    * queue-until-settle. `numBuckets` reaches the appends, including
+    * the upsert's append of the fresh band rows. */
+  def band(numBuckets: Int): IndexFamily = copied("doc_id", "text",
+    StringType, Seq(""), "old_id",
+    Dedup.appendToBandIndex(_, _, _, "doc_id", "text", numBuckets))
 
   /** IVF lists under the frozen coarse quantizer. */
   val ivf: IndexFamily = vector(Seq("_cents", "_lists"),
@@ -229,7 +310,7 @@ object IndexFamily {
     * purge in both directions. */
   val graph: IndexFamily = IndexFamily("vec_id", "embedding", embeddingType,
     Seq("_cents", "_cells", "_nodes", "_edges"),
-    GraphOps.appendToGraphIndex, VectorOps.deleteFromIvfIndex(_, _, _),
+    GraphOps.appendToGraphIndex,
     (s, src, dest, paths, vecs) =>
       GraphOps.upsertToGraphIndex(s, src, dest, paths.head, vecs),
     GraphOps.cloneGraphIndex, GraphOps.compactGraphIndex,

@@ -105,7 +105,7 @@ object SearchOps {
     val ps = probeSessionFor(spark)
     // tombstoned docs drop out here (the term-equality filter still
     // pushes below the anti-join into the scan, so bucket pruning is
-    // unchanged); see deleteFromSearchIndex
+    // unchanged); see IndexFamily.delete
     searchAllTerms(servingPostings(ps, table), terms, k)
   }
 
@@ -127,7 +127,7 @@ object SearchOps {
         .join(broadcast(
           t.filter(col("part") === "t").select(col("doc_id"))),
           Seq("doc_id"), "left_anti")
-    else dropTombstoned(ps, name, t)
+    else IndexFamily.live(ps, name, t, "doc_id")
   }
 
   /** The norms sidecar of `table`, tombstone-filtered — same routing as
@@ -144,7 +144,7 @@ object SearchOps {
         .join(broadcast(
           t.filter(col("part") === "t").select(col("doc_id"))),
           Seq("doc_id"), "left_anti")
-    else dropTombstoned(ps, name, ps.table(s"${name}_doclens"))
+    else IndexFamily.live(ps, name, ps.table(s"${name}_doclens"), "doc_id")
   }
 
   // parent session → its cached probe clone; weak keys so a collected
@@ -160,7 +160,7 @@ object SearchOps {
     * probes read calls this after its write. Cost: one catalog refresh
     * per clone per maintenance op (appends/deletes are batch-grained,
     * probes are the hot path and pay nothing). */
-  private def refreshProbeSessions(tables: String*): Unit =
+  private[operators] def refreshProbeSessions(tables: String*): Unit =
     probeSessions.synchronized {
       probeSessions.values.forEach { ps =>
         tables.foreach(t =>
@@ -225,60 +225,6 @@ object SearchOps {
     refreshProbeSessions(table)
   }
 
-  /** Copy an existing [[writeSearchIndex]] table to a new table under
-    * the same `term` bucket spec — pure IO over the already-computed
-    * postings (tokenize/explode/count never re-runs). The snapshot step
-    * of clone-then-append maintenance for retrieval: derive a new index
-    * generation from the serving one, append to the clone, swap when
-    * validated — completing the clone/compact lifecycle symmetry with
-    * [[Dedup.cloneBandIndex]] and the vector rows' [[IndexFamily.cloneTo]].
-    *
-    * `compact = true` collapses each bucket's append file groups to ONE
-    * file — with ZERO shuffle: the source is read through a session
-    * clone with `autoBucketedScan` disabled, forcing the genuinely
-    * bucketed scan (one task per bucket, that bucket's build+append
-    * file groups read together), and the bucketed write then emits
-    * exactly one file per task = per bucket. A pre-write
-    * `repartition(numBuckets, term)` looks equivalent but is NOT: the
-    * scan advertises `HashPartitioning(term, numBuckets)` so
-    * EnsureRequirements elides the exchange, while
-    * DisableUnnecessaryBucketedScan independently downgrades the scan
-    * to file-grain tasks — leaving buckets split across tasks (caught
-    * by SearchOpsSpec's file-collapse pin). Rows, bucket spec, and the
-    * probe's bucket-pruned scan are unchanged.
-    *
-    * Compaction also SETTLES pending deletes: rows tombstoned via
-    * [[deleteFromSearchIndex]] are dropped during the copy (broadcast
-    * anti-join folded into the per-bucket read — still zero shuffle)
-    * and the destination starts tombstone-free, so probe-side anti-join
-    * cost resets to nothing. A plain clone (`compact = false`) copies
-    * the postings verbatim AND the tombstone sidecar with them (ADVICE
-    * r12 #2): the clone serves exactly what the source serves — a
-    * pending delete cannot silently resurrect in the new generation. */
-  def cloneSearchIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, numBuckets: Int = 8,
-      compact: Boolean = false): Unit = {
-    val reader = if (compact) compactReader(spark) else spark
-    val rows = reader.table(src)
-    (if (compact) dropTombstoned(reader, src, rows) else rows)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "term")
-      .sortBy("term")
-      .option("path", path)
-      .saveAsTable(dest)
-    if (!compact) tombstonesOf(spark, src).foreach(
-      _.write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${dest}_tombstones"))
-  }
-
-  /** [[cloneSearchIndex]] with `compact = true` under its operational
-    * name — the retrieval index's build → append* → compact lifecycle
-    * step (per-append file-group growth is named in
-    * [[appendToSearchIndex]]'s contract; this is its remedy). */
-  def compactSearchIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, numBuckets: Int = 8): Unit =
-    cloneSearchIndex(spark, src, dest, path, numBuckets, compact = true)
-
   /** The doc-length sidecar for BM25 ranking: one `(doc_id, dl)` row per
     * indexed document, derived from the index itself (`dl = Σ tf` — the
     * token count the build already computed, never re-tokenized). Written
@@ -326,46 +272,6 @@ object SearchOps {
     refreshProbeSessions(s"${table}_doclens")
   }
 
-  /** DELETE maintenance for the standing search index — the engine's own
-    * CDC DELETE semantics (reference `sql/triggers.sql:29-32`: a delete
-    * is captured and must reach downstream state) applied to its index
-    * family: deleted doc ids are appended to a TOMBSTONE sidecar
-    * (`<table>_tombstones`, one `doc_id` column), and every probe
-    * excludes tombstoned documents via a broadcast anti-join — postings,
-    * BM25 candidates, the norms sidecar, AND the corpus stats (N, Σdl),
-    * so a deleted document stops influencing scores entirely, not just
-    * ranking. The postings are never read or rewritten: a delete costs
-    * one append of the id batch, the probe-side cost is an anti-join
-    * against a broadcast id set, and the physical purge happens at the
-    * generation boundary ([[compactSearchIndex]] drops tombstoned rows
-    * and the new generation starts tombstone-free) — the same
-    * "mutations accumulate cheaply, compaction settles them" discipline
-    * every LSM/lakehouse delete uses, which is what keeps it viable at
-    * 100 TB.
-    *
-    * Tombstones are SEQUENCE-VERSIONED (VERDICT r12 #1): each row is
-    * `(doc_id, seq)`. A direct batch delete (no `seq` column in `ids`)
-    * stamps `Long.MaxValue` — the operator call is the id's final event
-    * until compaction, the original contract. The CDC maintenance sink
-    * passes the event's queue sequence instead, so a LATER re-INSERT or
-    * UPDATE of the same id outranks the tombstone at the settle
-    * ([[graft.streaming.IngestStream.settleFamilyUpserts]]) — the
-    * reference's queue legally replays insert-after-delete per row
-    * (`eventqueue/event_queue.go:15-21`). Probes stay seq-blind: ANY
-    * tombstone row hides the doc until the settle resolves the order (a
-    * re-inserted doc serves from the next settle on — the documented
-    * freshness model). */
-  def deleteFromSearchIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, ids: DataFrame, idCol: String = "doc_id"): Unit = {
-    ids.select(col(idCol).cast("long").as("doc_id"),
-        (if (ids.columns.contains("seq")) col("seq").cast("long")
-         else lit(Long.MaxValue)).as("seq"))
-      .distinct()
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_tombstones")
-    refreshProbeSessions(s"${table}_tombstones")
-  }
-
   /** UPDATE maintenance — CDC UPDATE semantics (reference
     * `sql/triggers.sql:20-27`) for the index family, as a GENERATION
     * step: a new index generation is written that (a) drops every
@@ -377,14 +283,14 @@ object SearchOps {
     * old rows would silently double `dl`, `df`, and tf sums
     * (IndexMutationSpec pins that the upserted generation holds exactly
     * ONE norms row per doc). The survivor copy is pure IO with ZERO
-    * shuffle — the same bucketed-scan session-clone read as
-    * [[compactSearchIndex]] (one task per bucket) with the drop set
-    * anti-joined broadcast — and the new generation serves under
+    * shuffle — the bucketed-scan read of every bucketed generation copy
+    * ([[IndexFamily.bucketedReader]], one task per bucket) with the drop
+    * set anti-joined broadcast — and the new generation serves under
     * [[Generations]] swap/publish like any other.
     *
     * At 100 TB an upsert batch costs a full index copy, which is the
     * COMPACTION cost class — a deployment runs it at compaction cadence
-    * with batches accumulated via [[deleteFromSearchIndex]] + append in
+    * with batches accumulated via [[IndexFamily.delete]] + append in
     * between, or per-batch on a clone when freshness demands it. */
   def upsertToSearchIndex(spark: org.apache.spark.sql.SparkSession,
       src: String, dest: String, path: String, dlPath: String,
@@ -399,10 +305,10 @@ object SearchOps {
     val latest = docs.select(col(idCol).cast("long").as(idCol), col(textCol))
       .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
     val incoming = latest.select(col(idCol).as("doc_id")).distinct()
-    val dead = tombstonesOf(spark, src)
+    val dead = IndexFamily.tombstones(spark, src)
       .map(t => incoming.unionByName(t.select(col("doc_id"))).distinct())
       .getOrElse(incoming)
-    val reader = compactReader(spark)
+    val reader = IndexFamily.bucketedReader(spark)
     // the postings and norms copies read only `src`: concurrent jobs
     IndexFamily.concurrently(spark)(
       () => reader.table(src)
@@ -418,35 +324,6 @@ object SearchOps {
         .write.mode("overwrite").format("parquet")
         .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
         .option("path", dlPath).saveAsTable(s"${dest}_doclens"))
-  }
-
-  /** The tombstone sidecar as a frame, if any deletes are pending.
-    * Probes treat a missing sidecar as empty — an index with no deletes
-    * pays nothing. */
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      table: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(s"${table}_tombstones"))
-      Some(spark.table(s"${table}_tombstones"))
-    else None
-
-  /** Drop tombstoned docs from `frame` (broadcast anti-join on doc_id);
-    * identity when no tombstone sidecar exists. */
-  private def dropTombstoned(spark: org.apache.spark.sql.SparkSession,
-      table: String, frame: DataFrame): DataFrame =
-    tombstonesOf(spark, table)
-      .map(t => frame.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(frame)
-
-  // the zero-shuffle bucketed-scan reader shared by compaction and
-  // upsert: autoBucketedScan disabled → one task per bucket, all file
-  // groups of that bucket read together, bucketed write emits one file
-  // per task (see cloneSearchIndex's docstring for why repartition on
-  // the bucket columns does NOT achieve this)
-  private def compactReader(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession() // shares context + catalog; conf isolated
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s
   }
 
   /** The re-shard DECISION over a search index's posting-list
@@ -496,20 +373,21 @@ object SearchOps {
     * bucket), which is the floor cost of re-sharding — rows must move
     * by definition. Pending tombstones settle here like at every other
     * generation boundary (the destination starts tombstone-free).
-    * Same-count "re-sharding" degenerates to [[compactSearchIndex]] —
-    * use that instead (the exchange would be elided against the scan's
-    * matching partitioning and the write would keep file-grain tasks).
+    * Same-count "re-sharding" degenerates to the search row's
+    * [[IndexFamily.compact]] — use that instead (the exchange would be
+    * elided against the scan's matching partitioning and the write
+    * would keep file-grain tasks).
     * The new generation serves under [[Generations]] like any other;
     * probes bucket-prune against the new count unchanged. */
   def reshardSearchIndex(spark: org.apache.spark.sql.SparkSession,
       src: String, dest: String, path: String, dlPath: String,
       newNumBuckets: Int): Unit = {
-    dropTombstoned(spark, src, spark.table(src))
+    IndexFamily.live(spark, src, spark.table(src), "doc_id")
       .repartition(newNumBuckets, col("term"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(newNumBuckets, "term").sortBy("term")
       .option("path", path).saveAsTable(dest)
-    dropTombstoned(spark, src, spark.table(s"${src}_doclens"))
+    IndexFamily.live(spark, src, spark.table(s"${src}_doclens"), "doc_id")
       .repartition(newNumBuckets, col("doc_id"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(newNumBuckets, "doc_id").sortBy("doc_id")

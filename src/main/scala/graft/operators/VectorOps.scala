@@ -319,7 +319,7 @@ object VectorOps {
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       slice(col("embedding"), 1, prefixDims).as("qp"),
       col("embedding").as("qv")))
-    val coarse = dropTombstoned(spark, t, spark.table(s"${t}_prefix"))
+    val coarse = IndexFamily.live(spark, t, spark.table(s"${t}_prefix"), "vec_id")
       .as("c")
       .join(q, col("query_id") =!= col("c.vec_id"))
       .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
@@ -396,7 +396,7 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
     val cents = broadcast(spark.table(s"${t}_cents"))
-    val live = dropTombstoned(spark, t, spark.table(s"${t}_prefix"))
+    val live = IndexFamily.live(spark, t, spark.table(s"${t}_prefix"), "vec_id")
     val mass = live.groupBy(col("list_id")).agg(count(lit(1)).as("m"))
     val tot = broadcast(mass.agg(sum(col("m")).as("n_total")))
     val probeW = Window.partitionBy(col("query_id"))
@@ -428,7 +428,7 @@ object VectorOps {
     * of the exact full-dim re-rank against `_nodes`. */
   private def mrlIvfProbeTail(spark: org.apache.spark.sql.SparkSession,
       t: String, probes: DataFrame, k: Int, shortlist: Int): DataFrame = {
-    val coarse = dropTombstoned(spark, t, spark.table(s"${t}_prefix"))
+    val coarse = IndexFamily.live(spark, t, spark.table(s"${t}_prefix"), "vec_id")
       .join(broadcast(probes),
         Seq("list_id")).filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -806,8 +806,8 @@ object VectorOps {
     * probe then costs LUT build (KB) + the code scan + the fold.
     * Family contract mirrors [[writeIvfIndex]]: immutable generation,
     * frozen-codebook [[appendToPqIndex]], seq-versioned tombstone
-    * deletes (shared sidecar discipline — [[deleteFromIvfIndex]]
-    * writes the same `(vec_id, seq)` shape this probe anti-joins). */
+    * deletes (shared sidecar discipline — [[IndexFamily.delete]]
+    * writes the `(vec_id, seq)` rows this probe anti-joins). */
   def writePqIndex(corpus: DataFrame, table: String, path: String,
       m: Int = 8, ksub: Int = 64, trainIters: Int = 2, dim: Int = 64,
       trainLimit: Long = 16384L): Unit = {
@@ -836,7 +836,8 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
     val cents = spark.table(s"${t}_codebooks")
-    val scored = pqAdcFold(dropTombstoned(spark, t, spark.table(s"${t}_codes")),
+    val scored = pqAdcFold(
+      IndexFamily.live(spark, t, spark.table(s"${t}_codes"), "vec_id"),
       pqLut(queries, cents, m, dim))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
@@ -853,7 +854,8 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
     val cents = spark.table(s"${t}_codebooks")
-    val scored = pqAdcFold(dropTombstoned(spark, t, spark.table(s"${t}_codes")),
+    val scored = pqAdcFold(
+      IndexFamily.live(spark, t, spark.table(s"${t}_codes"), "vec_id"),
       pqLut(queries, cents, m, dim))
     pqRerankExact(scored, queries, corpus, k, shortlist)
   }
@@ -1308,7 +1310,10 @@ object VectorOps {
     * with the same (numCentroids, trainIters) (shared assignment/probe/
     * rank code), but the corpus side arrives pre-assigned AND
     * pre-partitioned by list, so the probe plan scans only the probed
-    * lists instead of re-running assignment over the corpus. */
+    * lists instead of re-running assignment over the corpus. Ids
+    * tombstoned by [[IndexFamily.delete]] anti-join out broadcast AFTER
+    * list pruning — over the nProbe lists actually read, not the
+    * corpus — so a removed vector can no longer surface. */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -1317,7 +1322,7 @@ object VectorOps {
     // atomically-promoted generation; the probe plan is unchanged
     val t = Generations.resolveServing(spark, table)
     val cents = broadcast(spark.table(s"${t}_cents"))
-    scoreAndRank(dropTombstoned(spark, t, spark.table(s"${t}_lists")),
+    scoreAndRank(IndexFamily.live(spark, t, spark.table(s"${t}_lists"), "vec_id"),
       probeLists(queries, cents, nProbe), k)
   }
 
@@ -1339,7 +1344,7 @@ object VectorOps {
     val probes = probeLists(queries, cents, nProbe)
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         col("label").as("qlabel"))), Seq("query_id"))
-    val cand = dropTombstoned(spark, t, spark.table(s"${t}_lists"))
+    val cand = IndexFamily.live(spark, t, spark.table(s"${t}_lists"), "vec_id")
       .join(labelRel.select(col("vec_id"), col("label")), Seq("vec_id"))
     val scored = cand.join(broadcast(probes), Seq("list_id"))
       .filter(col("label") === col("qlabel") &&
@@ -1351,35 +1356,6 @@ object VectorOps {
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
   }
-
-  /** DELETE maintenance for the standing IVF index — the vector member
-    * of the tombstone family ([[SearchOps.deleteFromSearchIndex]],
-    * [[Dedup.deleteFromBandIndex]]): deleted vec ids append to
-    * `<table>_tombstones`; both probes anti-join them broadcast AFTER
-    * list pruning (the anti-join runs over the nProbe lists actually
-    * read, not the corpus), so a removed vector can no longer surface
-    * as a neighbor; a compacting [[IndexFamily.compact]] settles them
-    * physically (the compacted generation starts tombstone-free). The
-    * list partitions are never read or rewritten by the delete itself. */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, ids: DataFrame, idCol: String = "vec_id"): Unit =
-    // sequence-versioned like SearchOps.deleteFromSearchIndex: a direct
-    // batch delete (no `seq` column) stamps Long.MaxValue (final until
-    // compaction); the CDC sink passes the event's queue sequence so a
-    // later re-INSERT/UPDATE outranks the tombstone at the settle
-    ids.select(col(idCol).cast("long").as("vec_id"),
-        (if (ids.columns.contains("seq")) col("seq").cast("long")
-         else lit(Long.MaxValue)).as("seq"))
-      .distinct()
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_tombstones")
-
-  private def dropTombstoned(spark: org.apache.spark.sql.SparkSession,
-      table: String, lists: DataFrame): DataFrame =
-    if (spark.catalog.tableExists(s"${table}_tombstones"))
-      lists.join(broadcast(spark.table(s"${table}_tombstones")),
-        Seq("vec_id"), "left_anti")
-    else lists
 
   /** [[writeIvfIndex]] with int8 LIST PAYLOADS — the layout a 100 TB ANN
     * deployment actually serves (VERDICT r9 #1): the coarse quantizer
@@ -1425,7 +1401,7 @@ object VectorOps {
     val cents = broadcast(spark.table(s"${t}_cents"))
     val probes = withQuantized(probeLists(queries, cents, nProbe), "qv", "qq")
       .select(col("list_id"), col("query_id"), col("qq"))
-    scoreAndRankQ(dropTombstoned(spark, t, spark.table(s"${t}_lists")),
+    scoreAndRankQ(IndexFamily.live(spark, t, spark.table(s"${t}_lists"), "vec_id"),
       probes, k)
   }
 
@@ -1471,7 +1447,7 @@ object VectorOps {
       .select(col("list_id"), col("query_id"),
         packSignBits(col("qv"), 0, 32).as("qhi"),
         packSignBits(col("qv"), 32, 32).as("qlo"))
-    val scored = dropTombstoned(spark, t, spark.table(s"${t}_lists"))
+    val scored = IndexFamily.live(spark, t, spark.table(s"${t}_lists"), "vec_id")
       .join(broadcast(qb), Seq("list_id"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -1646,7 +1622,7 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     val t = Generations.resolveServing(spark, table)
     val cents = broadcast(spark.table(s"${t}_cents"))
-    ivfPqRank(dropTombstoned(spark, t, spark.table(s"${t}_codes")),
+    ivfPqRank(IndexFamily.live(spark, t, spark.table(s"${t}_codes"), "vec_id"),
       probeLists(queries, cents, nProbe),
       pqLut(queries, spark.table(s"${t}_codebooks"), m, dim), k)
   }
@@ -1668,7 +1644,7 @@ object VectorOps {
     val t = Generations.resolveServing(spark, table)
     val cents = broadcast(spark.table(s"${t}_cents"))
     val scored = ivfPqScored(
-      dropTombstoned(spark, t, spark.table(s"${t}_codes")),
+      IndexFamily.live(spark, t, spark.table(s"${t}_codes"), "vec_id"),
       probeLists(queries, cents, nProbe),
       pqLut(queries, spark.table(s"${t}_codebooks"), m, dim))
     pqRerankExact(scored, queries, corpus, k, shortlist)
@@ -1819,7 +1795,7 @@ object VectorOps {
           lit(2.0) * dot(col("csv"), col("cv")) +
           dot(col("cv"), col("cv"))) * lit(1e9)).cast("long").as("n2"))
       .join(broadcast(qn), Seq("query_id"))
-    dropTombstoned(spark, t, spark.table(s"${t}_codes"))
+    IndexFamily.live(spark, t, spark.table(s"${t}_codes"), "vec_id")
       .join(broadcast(lut), Seq("list_id", "s", "cid"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
@@ -1880,12 +1856,7 @@ object VectorOps {
     * the Lloyd passes that follow dominate. */
   private def retrainInput(spark: org.apache.spark.sql.SparkSession,
       src: String, corpus: DataFrame): (DataFrame, Int) = {
-    val live =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        corpus.join(broadcast(
-            spark.table(s"${src}_tombstones").select(col("vec_id"))),
-          Seq("vec_id"), "left_anti")
-      else corpus
+    val live = IndexFamily.live(spark, src, corpus, "vec_id")
     (live, math.max(4,
       math.floor(math.sqrt(live.count().toDouble)).toInt))
   }
@@ -1952,7 +1923,7 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
       .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    val live = dropTombstoned(spark, src, spark.table(s"${src}_lists"))
+    val live = IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
     val corpus = live.select(col("vec_id"), col("embedding"))
     val trained = pqTrainCodebooks(corpus, m, ksub, pqIters, dim, trainLimit)
     val pqRdd = trained.rdd
@@ -1984,7 +1955,7 @@ object VectorOps {
     val cents = spark.table(s"${src}_cents")
     cents.write.mode("overwrite").format("parquet")
       .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    val live = dropTombstoned(spark, src, spark.table(s"${src}_lists"))
+    val live = IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
     val rsd0 = live
       .join(broadcast(cents.select(col("cid").as("list_id"), col("cv"))),
         Seq("list_id"))
@@ -2101,7 +2072,8 @@ object VectorOps {
       .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
     // the derived serving copy takes only LIVE rows (pending deletes
     // settle here, like compaction) — assignment still copied verbatim
-    withQuantized(dropTombstoned(spark, src, spark.table(s"${src}_lists")),
+    withQuantized(
+        IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id"),
         "embedding", "qe")
       .select(col("vec_id"), col("qe"), col("list_id"))
       .write.mode("overwrite").format("parquet")
@@ -2120,7 +2092,7 @@ object VectorOps {
       src: String, dest: String, path: String): Unit = {
     spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
       .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    dropTombstoned(spark, src, spark.table(s"${src}_lists"))
+    IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
       .select(col("vec_id"),
         packSignBits(col("embedding"), 0, 32).as("hi"),
         packSignBits(col("embedding"), 32, 32).as("lo"),
@@ -2153,8 +2125,9 @@ object VectorOps {
       dest: String, path: String, trainIters: Int = 2): Unit = {
     // retrain over the LIVE corpus: pending deletes drop out here, so
     // the new generation neither trains on nor serves removed vectors
-    val corpus = dropTombstoned(spark, src, spark.table(s"${src}_lists"))
-      .select(col("vec_id"), col("embedding"))
+    val corpus =
+      IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
+        .select(col("vec_id"), col("embedding"))
     val k = math.max(4,
       math.floor(math.sqrt(corpus.count().toDouble)).toInt)
     writeIvfIndex(corpus, dest, path, numCentroids = k, trainIters = trainIters)

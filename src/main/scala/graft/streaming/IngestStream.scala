@@ -200,9 +200,10 @@ object IngestStream {
     *    order, `eventqueue/event_queue.go:15-21`, so that sequence is
     *    legal upstream). The graph family only queues
     *    ([[IndexFamily.reingestInserts]]);
-    *  - DELETE → ids tombstoned WITH their sequence number through the
-    *    family's `delete` — the row vanishes from probes (and, for
-    *    search, df and corpus stats) immediately, purged physically at
+    *  - DELETE → ids tombstoned WITH their sequence number through
+    *    [[IndexFamily.delete]], the one id-batch append every family
+    *    shares — the row vanishes from probes (and, for search, df and
+    *    corpus stats) immediately, purged physically at
     *    the next generation boundary unless a LATER pending event
     *    outranks the tombstone there;
     *  - UPDATE → the fresh payload lands in `<table>_pending` with its
@@ -355,11 +356,9 @@ object IngestStream {
     val w = Window.partitionBy(col(idCol)).orderBy(col("seq").desc)
     val latest = pending
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-    val tombMax =
-      if (spark.catalog.tableExists(s"${src}_tombstones"))
-        spark.table(s"${src}_tombstones")
-          .groupBy(col(idCol)).agg(max(col("seq")).as("tomb_seq"))
-      else Seq.empty[(Long, Long)].toDF(idCol, "tomb_seq")
+    val tombMax = IndexFamily.tombstones(spark, src)
+      .map(_.groupBy(col(idCol)).agg(max(col("seq")).as("tomb_seq")))
+      .getOrElse(Seq.empty[(Long, Long)].toDF(idCol, "tomb_seq"))
     val winners = latest.join(broadcast(tombMax), Seq(idCol), "left")
       .filter(col("tomb_seq").isNull || col("seq") > col("tomb_seq"))
     (if (family.reingestInserts) winners
@@ -475,10 +474,8 @@ object IngestStream {
         spark.table(s"${table}_pending")
       else Seq.empty[(Long, String, Long, String)]
         .toDF(idCol, "payload", "seq", "statement")
-    val tomb =
-      if (spark.catalog.tableExists(s"${table}_tombstones"))
-        spark.table(s"${table}_tombstones")
-      else Seq.empty[(Long, Long)].toDF(idCol, "seq")
+    val tomb = IndexFamily.tombstones(spark, table)
+      .getOrElse(Seq.empty[(Long, Long)].toDF(idCol, "seq"))
     pending.agg(
         count(lit(1)).as("n_pending"),
         countDistinct(col(idCol)).as("n_pending_docs"),

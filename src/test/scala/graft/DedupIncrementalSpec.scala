@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexFamily}
 
 /** Gates [[Dedup.incrementalMinhashPairs]] and the bucketed band-index
   * path (VERDICT r6 #1/#3): cross-boundary semantics, first-matching-band
@@ -146,7 +146,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       assert(filesPerBucket(table).values.exists(_ > 1),
         "the append should have left a second file group to compact")
 
-      Dedup.compactBandIndex(spark, table, cTable, cPath)
+      IndexFamily.band(32).compact(spark, table, cTable, cPath)
       assert(filesPerBucket(cTable).values.forall(_ == 1L),
         "compaction must leave exactly one file per bucket")
       assert(spark.table(cTable).count() == spark.table(table).count(),
@@ -186,7 +186,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
 
   test("re-sharding: clone at a different bucket count, probe parity, zero recompute") {
     // the band family's retrain analog: a persistently hot bucket (see
-    // dedup_band_stats) is remedied by RE-SHARDING — cloneBandIndex at
+    // dedup_band_stats) is remedied by RE-SHARDING — reshardBandIndex at
     // a higher bucket count redistributes the already-computed band
     // rows under a new bucket spec; the shingle/minhash build never
     // re-runs, and the probe is result-invisible to the shard count
@@ -202,7 +202,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       .createTempDirectory("graft_band_reshard_spec_r_").toString
     try {
       Dedup.writeBandIndex(originals, "doc_id", "text", table, path, numBuckets = 8)
-      Dedup.cloneBandIndex(spark, table, rTable, rPath, numBuckets = 64)
+      Dedup.reshardBandIndex(spark, table, rTable, rPath, newNumBuckets = 64)
       def numBuckets(t: String): Int =
         spark.sessionState.catalog
           .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))

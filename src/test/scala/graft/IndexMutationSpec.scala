@@ -27,7 +27,7 @@ class IndexMutationSpec extends AnyFunSuite {
     (4L, "window plain text here"))
     .toDF("doc_id", "text")
 
-  test("deleteFromSearchIndex: tombstoned doc vanishes from probes and BM25 stats") {
+  test("search delete: tombstoned doc vanishes from probes and BM25 stats") {
     val table = uniq("graft_del_spec_")
     val path = tmp("graft_del_spec_")
     val dlPath = tmp("graft_del_spec_dl_")
@@ -37,7 +37,7 @@ class IndexMutationSpec extends AnyFunSuite {
       val before = SearchOps.probeSearchIndex(spark, table, Seq("spark", "window"), 10)
         .collect().map(_.getLong(0)).toSet
       assert(before == Set(1L, 2L, 3L))
-      SearchOps.deleteFromSearchIndex(spark, table, Seq(2L).toDF("doc_id"))
+      IndexFamily.search(4).delete(spark, table, Seq(2L).toDF("doc_id"))
       val after = SearchOps.probeSearchIndex(spark, table, Seq("spark", "window"), 10)
         .collect().map(_.getLong(0)).toSet
       assert(after == Set(1L, 3L), "tombstoned doc still surfaced")
@@ -64,10 +64,8 @@ class IndexMutationSpec extends AnyFunSuite {
       // compaction settles the delete physically and starts tombstone-free
       val ct = uniq("graft_del_spec_c_")
       val cp = tmp("graft_del_spec_c_")
-      val cdl = tmp("graft_del_spec_c_dl_")
       try {
-        SearchOps.compactSearchIndex(spark, table, ct, cp, numBuckets = 4)
-        SearchOps.writeDocLengths(spark, ct, cdl, numBuckets = 4)
+        IndexFamily.search(4).compact(spark, table, ct, cp)
         assert(spark.table(ct).filter(col("doc_id") === 2L).count() == 0,
           "compaction must purge tombstoned postings")
         assert(!spark.catalog.tableExists(s"${ct}_tombstones"),
@@ -91,7 +89,7 @@ class IndexMutationSpec extends AnyFunSuite {
         when(col("doc_id") === 3L, lit("stale stale stale spark")).otherwise(col("text")))
       SearchOps.writeSearchIndex(stale, "doc_id", "text", src, paths(0), numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
-      SearchOps.deleteFromSearchIndex(spark, src, Seq(4L).toDF("doc_id"))
+      IndexFamily.search(4).delete(spark, src, Seq(4L).toDF("doc_id"))
       SearchOps.upsertToSearchIndex(spark, src, dest, paths(2), paths(3),
         docs.filter(col("doc_id") === 3L), "doc_id", "text", numBuckets = 4)
       // exactly ONE norms row per doc, with the NEW length for doc 3 and
@@ -221,7 +219,7 @@ class IndexMutationSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("deleteFromBandIndex: deleted corpus doc stops pairing; compaction purges") {
+  test("band delete: deleted corpus doc stops pairing; compaction purges") {
     val corpus = Seq(
       (10L, "alpha beta gamma delta epsilon zeta eta theta"),
       (11L, "one two three four five six seven eight"))
@@ -236,12 +234,12 @@ class IndexMutationSpec extends AnyFunSuite {
       def hits() = Dedup.probeBandIndex(spark, table, incoming, "doc_id", "text", 0.5)
         .collect().map(_.getLong(1)).toSet
       assert(hits() == Set(10L), "fixture must pair before the delete")
-      Dedup.deleteFromBandIndex(spark, table, Seq(10L).toDF("doc_id"))
+      IndexFamily.band(4).delete(spark, table, Seq(10L).toDF("doc_id"))
       assert(hits().isEmpty, "deleted doc still pairs with incoming batches")
       val ct = uniq("graft_band_del_spec_c_")
       val cp = tmp("graft_band_del_spec_c_")
       try {
-        Dedup.compactBandIndex(spark, table, ct, cp, numBuckets = 4)
+        IndexFamily.band(4).compact(spark, table, ct, cp)
         assert(spark.table(ct).filter(col("old_id") === 10L).count() == 0,
           "compaction must purge tombstoned band rows")
         assert(!spark.catalog.tableExists(s"${ct}_tombstones"))
@@ -269,7 +267,7 @@ class IndexMutationSpec extends AnyFunSuite {
       assert(spark.table(s"${src}_lists").filter(col("vec_id") === 2L)
         .count() == 2L, "fixture must carry the doubled-id defect")
       // plus a pending delete that the upsert must settle
-      VectorOps.deleteFromIvfIndex(spark, src, Seq(7L).toDF("vec_id"))
+      IndexFamily.ivf.delete(spark, src, Seq(7L).toDF("vec_id"))
       IndexFamily.ivf.upsert(spark, src, dest, Seq(paths(1)),
         vecs.filter(col("vec_id").isin(2L, 3L)))
       val perId = spark.table(s"${dest}_lists").groupBy(col("vec_id"))
@@ -323,7 +321,7 @@ class IndexMutationSpec extends AnyFunSuite {
       VectorOps.appendToIvfIndexSq8(spark, src, stale)
       assert(spark.table(s"${src}_lists").filter(col("vec_id") === 2L)
         .count() == 2L, "fixture must carry the doubled-id defect")
-      VectorOps.deleteFromIvfIndex(spark, src, Seq(7L).toDF("vec_id"))
+      IndexFamily.ivf.delete(spark, src, Seq(7L).toDF("vec_id"))
       IndexFamily.sq8.upsert(spark, src, dest, Seq(paths(1)),
         vecs.filter(col("vec_id").isin(2L, 3L)))
       val perId = spark.table(s"${dest}_lists").groupBy(col("vec_id"))
@@ -343,7 +341,7 @@ class IndexMutationSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("upsertToBandIndex: stale band rows replaced; probe equals fresh build") {
+  test("band upsert: stale band rows replaced; probe equals fresh build") {
     val corpus = Seq(
       (10L, "alpha beta gamma delta epsilon zeta eta theta"),
       (11L, "one two three four five six seven eight"))
@@ -366,9 +364,8 @@ class IndexMutationSpec extends AnyFunSuite {
       def hits(t: String) = Dedup.probeBandIndex(spark, t, incoming,
         "doc_id", "text", 0.5).collect().map(_.getLong(1)).toSet
       assert(hits(src) == Set(10L, 11L), "stale fixture must phantom-pair")
-      Dedup.upsertToBandIndex(spark, src, dest, paths(1),
-        corpus.filter(col("doc_id") === 11L), "doc_id", "text",
-        numBuckets = 4)
+      IndexFamily.band(4).upsert(spark, src, dest, Seq(paths(1)),
+        corpus.filter(col("doc_id") === 11L))
       assert(hits(dest) == Set(10L),
         "upsert must replace the stale band rows with the true text's")
       // each doc's rows appear once per band — no stale residue
@@ -566,8 +563,8 @@ class IndexMutationSpec extends AnyFunSuite {
       SearchOps.writeSearchIndex(docs, "doc_id", "text", src, paths(0),
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
-      SearchOps.deleteFromSearchIndex(spark, src, Seq(2L).toDF("doc_id"))
-      SearchOps.cloneSearchIndex(spark, src, dest, paths(2), numBuckets = 4)
+      IndexFamily.search(4).delete(spark, src, Seq(2L).toDF("doc_id"))
+      IndexFamily.search(4).cloneTo(spark, src, dest, paths(2))
       assert(spark.catalog.tableExists(s"${dest}_tombstones"),
         "plain clone must carry the tombstone sidecar")
       val got = SearchOps.probeSearchIndex(spark, dest,
@@ -575,7 +572,7 @@ class IndexMutationSpec extends AnyFunSuite {
       assert(got == Set(1L, 3L),
         s"clone must not resurrect the deleted doc: $got")
     } finally Seq(s"${src}_tombstones", s"${src}_doclens", src,
-      s"${dest}_tombstones", dest).foreach(t =>
+      s"${dest}_tombstones", s"${dest}_doclens", dest).foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
 
     // band family: same contract
@@ -592,8 +589,8 @@ class IndexMutationSpec extends AnyFunSuite {
     try {
       Dedup.writeBandIndex(corpus, "doc_id", "text", bsrc, bpaths(0),
         numBuckets = 4)
-      Dedup.deleteFromBandIndex(spark, bsrc, Seq(10L).toDF("doc_id"))
-      Dedup.cloneBandIndex(spark, bsrc, bdest, bpaths(1), numBuckets = 4)
+      IndexFamily.band(4).delete(spark, bsrc, Seq(10L).toDF("doc_id"))
+      IndexFamily.band(4).cloneTo(spark, bsrc, bdest, bpaths(1))
       val pairs = Dedup.probeBandIndex(spark, bdest, incoming,
         "doc_id", "text", 0.5).collect()
       assert(pairs.isEmpty,
@@ -616,7 +613,7 @@ class IndexMutationSpec extends AnyFunSuite {
       val poison = vecs.filter(col("vec_id") < 2)
         .select((col("vec_id") + 900L).as("vec_id"), col("embedding"))
       VectorOps.appendToIvfIndex(spark, isrc, poison)
-      VectorOps.deleteFromIvfIndex(spark, isrc, poison.select(col("vec_id")))
+      IndexFamily.ivf.delete(spark, isrc, poison.select(col("vec_id")))
       IndexFamily.ivf.cloneTo(spark, isrc, idest, ipaths(1))
       val got = VectorOps.probeIvfIndex(spark, idest,
         vecs.filter(col("vec_id") < 2), k = 3, nProbe = 2)
@@ -694,8 +691,7 @@ class IndexMutationSpec extends AnyFunSuite {
         (11L, "nine ten eleven twelve thirteen fourteen fifteen sixteen"),
         (11L, "one two three four five six seven eight"))
         .toDF("doc_id", "text")
-      Dedup.upsertToBandIndex(spark, bsrc, bdest, bpaths(1), dup,
-        "doc_id", "text", numBuckets = 4)
+      IndexFamily.band(4).upsert(spark, bsrc, bdest, Seq(bpaths(1)), dup)
       val perBand = spark.table(bdest)
         .filter(col("old_id") === 11L)
         .groupBy(col("band")).count().collect().map(_.getLong(1)).toSet
@@ -705,7 +701,7 @@ class IndexMutationSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("deleteFromIvfIndex: deleted vector leaves top-k; compaction and retrain settle it") {
+  test("ivf delete: deleted vector leaves top-k; compaction and retrain settle it") {
     val vecs = (0L until 40L).map(i =>
       (i, Array.tabulate(8)(d => math.sin(i * 7 + d).toFloat)))
       .toDF("vec_id", "embedding")
@@ -721,7 +717,7 @@ class IndexMutationSpec extends AnyFunSuite {
       def neighbors() = VectorOps.probeIvfIndex(spark, table, queries, k = 3,
         nProbe = 2).collect().map(_.getLong(1)).toSet
       assert(neighbors().exists(_ >= 500L), "poison must surface before delete")
-      VectorOps.deleteFromIvfIndex(spark, table, poison.select(col("vec_id")))
+      IndexFamily.ivf.delete(spark, table, poison.select(col("vec_id")))
       assert(!neighbors().exists(_ >= 500L), "tombstoned vectors still served")
       val ct = uniq("graft_ivf_del_spec_c_")
       val cp = tmp("graft_ivf_del_spec_c_")

@@ -228,7 +228,7 @@ class IvfPqSpec extends AnyFunSuite {
       .createTempDirectory("graft_ivfpq_spec_ups_").toString
     IndexFamily.ivfPq(8, 64).cloneTo(spark, base, src, p1)
     // a pending delete the upsert must settle
-    VectorOps.deleteFromIvfIndex(spark, src,
+    IndexFamily.ivfPq(8, 64).delete(spark, src,
       emb.filter(col("vec_id") === 42).select(col("vec_id")))
     // a duplicate-id incoming batch (two rows for id 7) must reduce to
     // ONE code set — the uniform upsert hygiene contract

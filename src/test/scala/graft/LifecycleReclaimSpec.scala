@@ -250,9 +250,9 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     * catalog tables the CDC entries and then the text entries left
     * behind, and every table on a drop list of the sessions that built
     * them. */
-  private final case class CdcAndTextBuild(session: SparkSession,
-      wrong: Seq[String], cdcTables: Set[String], textTables: Set[String],
-      dropped: Set[String])
+  private final class CdcAndTextBuild(val session: SparkSession,
+      val wrong: Seq[String], val cdcTables: Set[String],
+      val textTables: Set[String], val dropped: Set[String])
 
   private lazy val cdcAndTextBuild: CdcAndTextBuild = {
     val s = freshSession()
@@ -267,7 +267,7 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     val dropped = (s +: walkSessions.toSeq)
       .flatMap(w => EpochRegistry.liveEntries(EpochRegistry.idOf(w)))
       .flatMap(_.dropTables).map(_.toLowerCase).toSet
-    CdcAndTextBuild(s, wrongCdc ++ wrongText, afterCdc -- before,
+    new CdcAndTextBuild(s, wrongCdc ++ wrongText, afterCdc -- before,
       catalogTables(s) -- afterCdc, dropped)
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Generations, VectorOps}
+import graft.operators.{Dedup, Generations, IndexFamily, VectorOps}
 
 /** Gates [[Generations.publishPointer]] serving — the atomic publish
   * for the multi-table index families (IVF `_cents`+`_lists`, band
@@ -86,7 +86,7 @@ class PointerServeSpec extends AnyFunSuite {
       // 3. a delete on the SERVING generation is visible through the
       // pointer immediately (generation tombstones, not view ones)
       val victim = res(view).map(_._2).head
-      VectorOps.deleteFromIvfIndex(spark, gen1, Seq(victim).toDF("vec_id"))
+      IndexFamily.ivf.delete(spark, gen1, Seq(victim).toDF("vec_id"))
       assert(!res(view).exists(_._2 == victim),
         "generation tombstone must resolve through the pointer")
 
@@ -117,7 +117,7 @@ class PointerServeSpec extends AnyFunSuite {
         numBuckets = 4)
       Dedup.writeBandIndex(corpus, "doc_id", "text", gen2, paths(1),
         numBuckets = 4)
-      Dedup.deleteFromBandIndex(spark, gen1, Seq(99L).toDF("doc_id"))
+      IndexFamily.band(4).delete(spark, gen1, Seq(99L).toDF("doc_id"))
       Generations.publishPointer(spark, view, gen1)
       // served → refuse (pointer view holds the generation's name)
       intercept[IllegalArgumentException] {
@@ -170,8 +170,7 @@ class PointerServeSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(bm25(view) == bm25(gen) && bm25(view).nonEmpty,
         "pointer BM25 must equal the direct probe")
-      graft.operators.SearchOps.deleteFromSearchIndex(spark, gen,
-        Seq(2L).toDF("doc_id"))
+      IndexFamily.search(4).delete(spark, gen, Seq(2L).toDF("doc_id"))
       assert(bm25(view) == bm25(gen) && !bm25(view).exists(_._1 == 2L),
         "generation tombstone must resolve through the pointer incl. norms")
     } finally {
@@ -203,7 +202,7 @@ class PointerServeSpec extends AnyFunSuite {
         "doc_id", "text", 0.5).collect().map(_.getLong(1)).toSet
       assert(hits(view) == hits(gen) && hits(view) == Set(10L, 11L),
         "pointer probe must equal direct probe")
-      Dedup.deleteFromBandIndex(spark, gen, Seq(10L).toDF("doc_id"))
+      IndexFamily.band(4).delete(spark, gen, Seq(10L).toDF("doc_id"))
       assert(hits(view) == Set(11L),
         "generation tombstone must resolve through the pointer")
     } finally {

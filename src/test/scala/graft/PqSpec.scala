@@ -118,7 +118,7 @@ class PqSpec extends AnyFunSuite {
         .select(col("neighbor_id")).as[Long].collect().contains(9L))
 
       // tombstone delete: the id stops surfacing; codes are not rewritten
-      VectorOps.deleteFromIvfIndex(spark, table, Seq(9L).toDF("vec_id"))
+      IndexFamily.pq.delete(spark, table, Seq(9L).toDF("vec_id"))
       val after = VectorOps.probePqIndex(spark, table, q, k = 5, m = 2,
         dim = dim).select(col("neighbor_id")).as[Long].collect()
       assert(!after.contains(9L))
@@ -152,7 +152,7 @@ class PqSpec extends AnyFunSuite {
         c.filter(col("vec_id") === 2)
           .select(lit(3L).as("vec_id"), col("embedding")), m = 2, dim = dim)
       // plus a pending delete of vec 0 the upsert must purge
-      VectorOps.deleteFromIvfIndex(spark, src, Seq(0L).toDF("vec_id"))
+      IndexFamily.pq.delete(spark, src, Seq(0L).toDF("vec_id"))
       // the served row's append encodes 8 subspaces of 64 dims; this
       // index has 2 of `dim`
       IndexFamily.vector(IndexFamily.pq.tables,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, SearchOps}
+import graft.operators.{Dedup, IndexFamily, SearchOps}
 
 /** Re-shard contracts for the band and search index families (VERDICT
   * r11 #2 — the monitor→remedy edge made executable like IVF's
@@ -67,7 +67,7 @@ class ReshardSpec extends AnyFunSuite {
         numBuckets = 2)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 2)
       // a pending delete must settle during the re-shard
-      SearchOps.deleteFromSearchIndex(spark, src, Seq(4L).toDF("doc_id"))
+      IndexFamily.search(2).delete(spark, src, Seq(4L).toDF("doc_id"))
       val before = SearchOps.probeSearchIndex(spark, src,
         Seq("spark", "window"), 10).collect().toSeq
       val bmBefore = SearchOps.searchBm25(spark, src,
@@ -133,7 +133,7 @@ class ReshardSpec extends AnyFunSuite {
       assert(v.getAs[Boolean]("reshard"), s"hot bucket must fire the verdict: $v")
 
       // pending delete of one hot doc settles during the re-shard
-      Dedup.deleteFromBandIndex(spark, src, Seq(20L).toDF("doc_id"))
+      IndexFamily.band(4).delete(spark, src, Seq(20L).toDF("doc_id"))
       val before = Dedup.probeBandIndex(spark, src, incoming, "doc_id", "text",
         0.5).orderBy("new_id", "old_id").collect().toSeq
       Dedup.reshardBandIndex(spark, src, dest, paths(1), newNumBuckets = 8)

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.SearchOps
+import graft.operators.{IndexFamily, SearchOps}
 
 /** Retrieval contracts: conjunctive semantics (ALL terms required),
   * deterministic tf ranking, and the k cut. */
@@ -278,7 +278,7 @@ class SearchOpsSpec extends AnyFunSuite {
       assert(filesPerBucket(table).values.exists(_ > 1),
         "the append should have left a second file group to compact")
 
-      SearchOps.compactSearchIndex(spark, table, cTable, cPath, numBuckets = 4)
+      IndexFamily.search(4).compact(spark, table, cTable, cPath)
       assert(filesPerBucket(cTable).values.forall(_ == 1L),
         s"compaction must leave exactly one file per bucket: ${filesPerBucket(cTable)}; " +
           s"files=${new java.io.File(cPath).listFiles().map(_.getName).toSeq}")

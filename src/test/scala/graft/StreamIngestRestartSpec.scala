@@ -297,14 +297,13 @@ class StreamIngestRestartSpec extends AnyFunSuite {
     }
 
   test("a failed concurrent write fails the CDC batch with no write left running") {
-    // delete fails at once while append is still running: the batch must
-    // wait for append, rethrow the delete's error and leave the ledger
-    // without the batch, so the checkpoint replays it
-    val appended = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // append fails at once while the delete's tombstone write is still
+    // running: the batch must wait for that write, rethrow the append's
+    // error and leave the ledger without the batch, so the checkpoint
+    // replays it
     val search = IndexFamily.search(4)
     val failing = search.copy(
-      append = (_, _, _) => { Thread.sleep(300); appended.set(true) },
-      delete = (_, _, _) => throw new IllegalStateException("injected delete"))
+      append = (_, _, _) => throw new IllegalStateException("injected append"))
     val batch = Seq(("INSERT", 5L, "spark window five", 50L),
         ("DELETE", 2L, null, 52L))
       .toDF("statement", "doc_id", "text", "event_seq")
@@ -315,11 +314,13 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       SearchOps.writeDocLengths(spark, t, tmp("graft_cdc_fail_dl_"),
         numBuckets = 4)
       IngestStream.applyCdcFamilyBatch(spark, search, t, batch, batchId = 1L)
+      def tombstoned = spark.table(s"${t}_tombstones").count()
+      val before = tombstoned
       val err = intercept[IllegalStateException](
         IngestStream.applyCdcFamilyBatch(spark, failing, t, batch,
           batchId = 2L))
-      assert(err.getMessage == "injected delete")
-      assert(appended.get, "the batch failed while its append still ran")
+      assert(err.getMessage == "injected append")
+      assert(tombstoned > before, "the batch failed while its delete still ran")
       def ledger = spark.table(s"${t}_applied").as[Long].collect().toSet
       assert(ledger == Set(1L), s"failed batch reached the ledger: $ledger")
       // the replay of the failed batch is applied, not skipped

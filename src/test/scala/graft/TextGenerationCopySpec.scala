@@ -69,12 +69,11 @@ class TextGenerationCopySpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_text_copy_pin_").toString
 
-  /** Builds the fixture's source generation with `write`, then runs the
-    * three copies, each in fresh directories (`upsertPaths` of them for
-    * the upsert); `norms` runs on the clone and the compacted copy. */
+  /** Builds the fixture's source generation with `write` (handed a
+    * maker of fresh directories), then runs the three copies, each in
+    * fresh directories (`upsertPaths` of them for the upsert). */
   private def check(name: String, family: IndexFamily,
-      write: (DataFrame, String, String) => Unit, upsertPaths: Int,
-      norms: (String, String) => Unit,
+      write: (DataFrame, String, () => String) => Unit, upsertPaths: Int,
       expected: Map[String, String]): Unit = test(
       s"$name: clone, compact and upsert write the pinned generations") {
     val id = tag()
@@ -84,13 +83,11 @@ class TextGenerationCopySpec extends AnyFunSuite {
     def dir(): String = { val d = tmp(); dirs += d; d }
     try {
       val src = names("src")
-      write(corpus, src, dir())
+      write(corpus, src, () => dir())
       family.append(spark, src, batch)
       family.delete(spark, src, deleted.toDF("doc_id"))
       family.cloneTo(spark, src, names("clone"), dir())
-      norms(names("clone"), dir())
       family.compact(spark, src, names("compact"), dir())
-      norms(names("compact"), dir())
       family.upsert(spark, src, names("upsert"),
         Seq.fill(upsertPaths)(dir()), incoming)
       val got = Seq("clone", "compact", "upsert")
@@ -107,12 +104,11 @@ class TextGenerationCopySpec extends AnyFunSuite {
   }
 
   check("search", IndexFamily.search(8),
-    (docs, t, path) => {
-      SearchOps.writeSearchIndex(docs, "doc_id", "text", t, path,
+    (docs, t, dir) => {
+      SearchOps.writeSearchIndex(docs, "doc_id", "text", t, dir(),
         numBuckets = 8)
-      SearchOps.writeDocLengths(spark, t, path + "_dl", numBuckets = 8)
+      SearchOps.writeDocLengths(spark, t, dir(), numBuckets = 8)
     }, upsertPaths = 2,
-    SearchOps.writeDocLengths(spark, _, _, numBuckets = 8),
     Map(
       "clone" ->
         ("=28b16a2f69a8a0bc/8:term:term/ " +
@@ -126,8 +122,9 @@ class TextGenerationCopySpec extends AnyFunSuite {
         "_doclens=ba19fc4932d16377/8:doc_id:doc_id/")))
 
   check("band", IndexFamily.band(32),
-    Dedup.writeBandIndex(_, "doc_id", "text", _, _, numBuckets = 32),
-    upsertPaths = 1, (_, _) => (),
+    (docs, t, dir) => Dedup.writeBandIndex(docs, "doc_id", "text", t, dir(),
+      numBuckets = 32),
+    upsertPaths = 1,
     Map(
       "clone" ->
         ("=d5924c357145ad05/32:band,bkey:band,bkey/ " +

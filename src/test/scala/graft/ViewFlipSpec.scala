@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Generations, SearchOps}
+import graft.operators.{Generations, IndexFamily, SearchOps}
 
 /** View-flip serving contracts (VERDICT r11 #4): probes address a
   * stable view; promoting a generation is one `CREATE OR REPLACE VIEW`
@@ -124,7 +124,7 @@ class ViewFlipSpec extends AnyFunSuite {
       // through the view immediately (ADVICE r12 #1): the view serves
       // the generation's live tombstone sidecar, not a snapshot —
       // candidates AND the BM25 corpus stats exclude the doc
-      SearchOps.deleteFromSearchIndex(spark, g1, Seq(2L).toDF("doc_id"))
+      IndexFamily.search(4).delete(spark, g1, Seq(2L).toDF("doc_id"))
       assert(ids() == Set(1L), s"tombstone must resolve through the view: ${ids()}")
       val bmDel = SearchOps.searchBm25(spark, view, Seq("spark", "window"), 10)
         .collect().toSeq
