@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{IndexFamily, VectorOps}
+import graft.operators.{GraphOps, IndexFamily, VectorOps}
 
 /** Pins what each vector family's three generation copies write —
   * `cloneTo`, `compact` and `upsert` — on one small deterministic
@@ -33,12 +33,17 @@ class VectorGenerationCopySpec extends AnyFunSuite {
   private lazy val incoming = Seq(5L -> vec(105), 5L -> vec(205),
       7L -> vec(107), 42L -> vec(142), 60L -> vec(160))
     .toDF("vec_id", "embedding")
+  // the graph row's batch: the same ids without the duplicate
+  private lazy val graphIncoming = Seq(5L -> vec(105), 7L -> vec(107),
+      42L -> vec(142), 60L -> vec(160))
+    .toDF("vec_id", "embedding")
 
   /** `suffix=<row hash>/<partition columns>` per table, in `tables`
-    * order, then the sidecar's when it exists. */
-  private def layout(t: String, tables: Seq[String]): String =
+    * order, then the sidecar's when it exists and `sidecar` is set. */
+  private def layout(t: String, tables: Seq[String],
+      sidecar: Boolean): String =
     (tables ++ Seq("_tombstones").filter(x =>
-        spark.catalog.tableExists(t + x))).map { x =>
+        sidecar && spark.catalog.tableExists(t + x))).map { x =>
       val parts = spark.catalog.listColumns(t + x).collect()
         .filter(_.isPartition).map(_.name)
       s"$x=${rowHash(spark.table(t + x))}/${parts.mkString(",")}"
@@ -54,7 +59,8 @@ class VectorGenerationCopySpec extends AnyFunSuite {
 
   private def check(name: String, family: IndexFamily,
       write: (DataFrame, String, String) => Unit,
-      expected: Map[String, String]): Unit = test(
+      expected: Map[String, String], upserted: => DataFrame = incoming,
+      sidecar: Boolean = true): Unit = test(
       s"$name: clone, compact and upsert write the pinned generations") {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val names = Seq("src", "clone", "compact", "upsert")
@@ -68,9 +74,9 @@ class VectorGenerationCopySpec extends AnyFunSuite {
       family.delete(spark, src, deleted.toDF("vec_id"))
       family.cloneTo(spark, src, names("clone"), paths(1))
       family.compact(spark, src, names("compact"), paths(2))
-      family.upsert(spark, src, names("upsert"), Seq(paths(3)), incoming)
+      family.upsert(spark, src, names("upsert"), Seq(paths(3)), upserted)
       val got = Seq("clone", "compact", "upsert")
-        .map(g => g -> layout(names(g), family.tables)).toMap
+        .map(g => g -> layout(names(g), family.tables, sidecar)).toMap
       assert(got == expected,
         "\n" + got.toSeq.sorted.map { case (g, l) => s"$g: $l" }
           .mkString("\n"))
@@ -193,4 +199,24 @@ class VectorGenerationCopySpec extends AnyFunSuite {
         ("_cents=87da8b04237942cc/ " +
         "_codebooks=6d2f68f8aa846421/ " +
         "_codes=2bbf604ef227bfa2/list_id")))
+
+  check("graph", IndexFamily.graph,
+    GraphOps.writeGraphIndex(_, _, _, trainIters = 1),
+    Map(
+      "clone" ->
+        ("_cents=d6a529c10dda5805/ " +
+        "_cells=c59dfb4871555e52/list_id " +
+        "_nodes=f0e1f4a9e97bbe03/ " +
+        "_edges=98468796c752d8ac/"),
+      "compact" ->
+        ("_cents=d6a529c10dda5805/ " +
+        "_cells=ab2d09f8aaa0aa46/list_id " +
+        "_nodes=5d148ab992fa7566/ " +
+        "_edges=c8676bba490f4b1c/"),
+      "upsert" ->
+        ("_cents=d6a529c10dda5805/ " +
+        "_cells=669823d072a09eb8/list_id " +
+        "_nodes=a97a8cd30b85c60a/ " +
+        "_edges=ebb4144bb4bebe3c/")),
+    upserted = graphIncoming, sidecar = false)
 }
