@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{GraphOps, IndexFamily}
+import graft.operators.{GraphOps, IndexFamily, VectorOps}
 import SimilarityQueries.{append, base, compact, delete, pointer, retrain}
 
 /** Oracle-gated graph-analytics queries over the co-purchase graph
@@ -362,7 +362,7 @@ object GraphQueries {
     // entry cells — frozen assignment makes its populations identical
     // to the IVF families' appended lists, so they share one mirror
     "sim_ann_graph_retrain_check" -> ((s, dir) =>
-      GraphOps.graphRetrainCheck(s, append(s, dir, graph))),
+      VectorOps.retrainCheck(s, append(s, dir, graph) + "_cells")),
     // RETRAIN execution: full rebuild over the live corpus read back
     // from the appended generation's own nodes — fresh quantizer with
     // re-derived K, fresh cells, fresh NN-descent edges; the ranked
@@ -499,8 +499,9 @@ object GraphQueries {
       derive = None)
 
   /** UPDATE epoch: the %20==0 dup wave admitted with NEGATED vectors
-    * (corrupted scores), healed by [[GraphOps.upsertToGraphIndex]] with
-    * the true vectors. Returns the settled generation. */
+    * (corrupted scores), healed by the graph row's
+    * [[IndexFamily.upsert]] with the true vectors. Returns the settled
+    * generation. */
   private[graft] def graphUpdateIndexFor(s: SparkSession,
       dir: String): String = {
     val gen = base(s, dir, graph)
@@ -508,18 +509,18 @@ object GraphQueries {
       val src = "graft_graph_upd_src_" + EpochRegistry.freshId()
       val dest = "graft_graph_upd_" + EpochRegistry.freshId()
       val paths = Seq.fill(2)(EpochRegistry.tmpDir("graft_graph_upd_"))
-      GraphOps.cloneGraphIndex(s, gen, src, paths(0))
+      graph.family.cloneTo(s, gen, src, paths(0))
       val wave = SimilarityQueries.dupVectors(Tables.embeddings(s, dir))
         .filter(col("vec_id") >= 100000 && col("vec_id") % 20 === 0)
-      GraphOps.appendToGraphIndex(s, src,
+      graph.family.append(s, src,
         wave.select(col("vec_id"),
           expr("transform(embedding, x -> -x)").cast("array<float>")
             .as("embedding")))
-      GraphOps.upsertToGraphIndex(s, src, dest, paths(1),
+      graph.family.upsert(s, src, dest, paths.drop(1),
         wave.select(col("vec_id"), col("embedding")))
       EpochRegistry.Resource(dest,
-        dropTables =
-          Seq(src, dest).flatMap(t => graph.family.tables.map(t + _)),
+        dropTables = Seq(src, dest).flatMap(t =>
+          IndexFamily.generationTables(graph.family).map(t + _)),
         deleteDirs = paths)
     }
   }
@@ -1337,7 +1338,7 @@ object GraphQueries {
   /** The CDC-settled graph generation's serving mirror (used by
     * [[StreamingQueries]] for `stream_graph_cdc*`): after the settle,
     * the generation = base graph ∪ the winner batch's append walk
-    * (`upsertToGraphIndex` prunes every touched/tombstoned id back to
+    * (the graph row's upsert prunes every touched/tombstoned id back to
     * the base and walks the winners over it — the corrupt appends
     * vanish wholesale, the poison stays purged). Serving is a SECOND
     * walk (queries vec_id < 10) over that union: edges = knn ∪ the

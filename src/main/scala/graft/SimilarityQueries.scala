@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Generations, IndexFamily, VectorOps}
+import graft.operators.IndexFamily.generationTables
 import graft.EpochRegistry.{freshId, generation, tmpDir}
 
 /** Similarity search over `embeddings` (SURVEY §2.3): brute-force cosine
@@ -302,11 +303,6 @@ object SimilarityQueries {
   private[graft] val vectorFamilies: Seq[Lifecycle] =
     Seq(ivf, sq8, binary, mrl, pq, ivfPq, ivfPqRes)
 
-  /** Every table one generation of `family` can hold: the family's own
-    * plus the tombstone sidecar a delete (or a clone of one) writes. */
-  private def generationTables(family: IndexFamily): Seq[String] =
-    family.tables :+ "_tombstones"
-
   /** BASE: the family's serving generation, written once per (session,
     * dir) and probed by every later query in the session — the 100 TB
     * contract where the index is written once per epoch and the
@@ -454,9 +450,10 @@ object SimilarityQueries {
     *    coarse lists), gated through [[recallAudit]] against the
     *    union-corpus truth;
     *  - `rowsTable`: the table whose rows the compaction-cadence monitor
-    *    weighs the delete epoch's ten tombstones against;
-    *  - `retrainCheck`: the monitor→retrain verdict over the appended
-    *    generation, with its mirror;
+    *    weighs the delete epoch's ten tombstones against, and whose
+    *    lists the retrain verdict ([[VectorOps.retrainCheck]]) sizes;
+    *  - `retrainCheckSql`: the mirror of that verdict over the appended
+    *    generation, for a family with coarse lists;
     *  - `baseSql`: the untouched build's oracle, shared by every
     *    result-invisible stage (delete, upsert, pointer, derive);
     *    `compactedSql` is the oracle of `lc.compactFrom`'s generation
@@ -471,7 +468,7 @@ object SimilarityQueries {
     */
   private[graft] final case class Served(lc: Lifecycle, entry: String,
       score: String, rowsTable: String, serve: Probe, audit: Probe,
-      retrainCheck: Option[(Query, String)], baseSql: String,
+      retrainCheckSql: Option[String], baseSql: String,
       compactedSql: String, appendedSql: String, appendedRecallSql: String,
       retrainedSql: Option[(String, String)], compactionCheckSql: String,
       streamCdc: Option[(String, Seq[String])]) {
@@ -497,10 +494,11 @@ object SimilarityQueries {
     * .cdcEntries]]); binary's row leaves out `_recall`. */
   private val cdcStages = Seq("", "_recall", "_settle_check", "_published")
 
-  /** The served table. The retrain verdicts read the partition column
-    * only, and every appended generation assigns through the same
-    * frozen float quantizer, so IVF, SQ8, binary, IVF-PQ and residual
-    * share one mirror (the code layouts count distinct ids per list);
+  /** The served table. The retrain verdicts count the distinct ids per
+    * list of the row's table, and every appended generation assigns
+    * through the same frozen float quantizer, so IVF, SQ8, binary,
+    * IVF-PQ and residual share one mirror (a code layout's m rows per
+    * vector count once);
     * MRL's cells are trained on the 32-dim prefixes, and flat PQ has
     * no coarse lists to skew. The compaction monitors count one list
     * (or prefix) row per vector, or m = 8 code rows. Lazy: the oracle
@@ -509,7 +507,7 @@ object SimilarityQueries {
     Served(ivf, "sim_ann_ivf", "cos_sim", "_lists",
       VectorOps.probeIvfIndex(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfIndex(_, _, _, k = recallK, nProbe = 2),
-      Some((VectorOps.ivfRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      Some(ivfRetrainCheckOracleSql),
       baseSql = ivfOracleSql, compactedSql = ivfAppendOracleSql,
       appendedSql = ivfAppendOracleSql,
       appendedRecallSql = ivfAppendRecallOracleSql,
@@ -522,7 +520,7 @@ object SimilarityQueries {
     Served(sq8, "sim_ann_ivf_sq8", "cos_sim", "_lists",
       VectorOps.probeIvfIndexSq8(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfIndexSq8(_, _, _, k = recallK, nProbe = 2),
-      Some((VectorOps.ivfRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      Some(ivfRetrainCheckOracleSql),
       baseSql = ivfSq8OracleSql, compactedSql = ivfSq8AppendOracleSql,
       appendedSql = ivfSq8AppendOracleSql,
       appendedRecallSql = recallOracleSql(
@@ -537,7 +535,7 @@ object SimilarityQueries {
     Served(binary, "sim_ann_binary", "hamming", "_lists",
       VectorOps.probeIvfIndexBinary(_, _, _, k = 5, nProbe = 4),
       VectorOps.probeIvfIndexBinary(_, _, _, k = recallK, nProbe = 2),
-      Some((VectorOps.ivfRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      Some(ivfRetrainCheckOracleSql),
       baseSql = ivfBinaryOracleSql, compactedSql = ivfBinaryOracleSql,
       appendedSql = ivfBinaryAppendOracleSql,
       appendedRecallSql = ivfBinaryAppendRecallOracleSql,
@@ -551,7 +549,7 @@ object SimilarityQueries {
         shortlist = 100),
       VectorOps.probeMrlIndex(_, _, _, k = recallK, prefixDims = 32,
         shortlist = 100),
-      Some((VectorOps.mrlRetrainCheck(_, _), mrlRetrainCheckOracleSql)),
+      Some(mrlRetrainCheckOracleSql),
       baseSql = mrlOracleSql, compactedSql = mrlOracleSql,
       appendedSql = mrlAppendOracleSql,
       appendedRecallSql = mrlAppendRecallOracleSql, retrainedSql = None,
@@ -560,7 +558,7 @@ object SimilarityQueries {
     Served(pq, "sim_ann_pq", "cos_sim", "_codes",
       VectorOps.probePqIndex(_, _, _, k = 3),
       VectorOps.probePqIndex(_, _, _, k = recallK),
-      retrainCheck = None,
+      retrainCheckSql = None,
       baseSql = pqOracleSql, compactedSql = pqOracleSql,
       appendedSql = pqAppendOracleSql,
       appendedRecallSql = pqAppendRecallOracleSql, retrainedSql = None,
@@ -568,7 +566,7 @@ object SimilarityQueries {
     Served(ivfPq, "sim_ann_ivfpq", "cos_sim", "_codes",
       VectorOps.probeIvfPqIndex(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfPqIndex(_, _, _, k = recallK, nProbe = 2),
-      Some((VectorOps.ivfPqRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      Some(ivfRetrainCheckOracleSql),
       baseSql = ivfPqOracleSql, compactedSql = ivfPqOracleSql,
       appendedSql = ivfPqAppendOracleSql,
       appendedRecallSql = ivfPqAppendRecallOracleSql,
@@ -579,7 +577,7 @@ object SimilarityQueries {
     Served(ivfPqRes, "sim_ann_ivfpq_residual", "cos_sim", "_codes",
       VectorOps.probeIvfPqResidualIndex(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfPqResidualIndex(_, _, _, k = recallK, nProbe = 2),
-      Some((VectorOps.ivfPqRetrainCheck(_, _), ivfRetrainCheckOracleSql)),
+      Some(ivfRetrainCheckOracleSql),
       baseSql = ivfPqResidualOracleSql, compactedSql = ivfPqResidualOracleSql,
       appendedSql = ivfPqResidualAppendOracleSql,
       appendedRecallSql = ivfPqResidualAppendRecallOracleSql,
@@ -609,8 +607,8 @@ object SimilarityQueries {
       f.retrainedSql.toSeq.flatMap { case (sql, recallSql) => Seq(
         ("_retrained", probed(retrain), sql),
         ("_retrained_recall", audited(retrain), recallSql)) } ++
-      f.retrainCheck.map { case (check, sql) =>
-        ("_retrain_check", (s, dir) => check(s, append(s, dir, f.lc)), sql) }
+      f.retrainCheckSql.map(sql => ("_retrain_check", (s, dir) =>
+        VectorOps.retrainCheck(s, append(s, dir, f.lc) + f.rowsTable), sql))
     stages.map { case (stage, query, sql) => (f.entry + stage, query, sql) }
   }
 
@@ -2565,7 +2563,7 @@ object SimilarityQueries {
 
   /** The retrain verdict's integer-exact arithmetic over the list sizes
     * of assignment CTE `asg` (`cid`, best-first `cr`) — the mean-first
-    * floored signals of [[VectorOps.ivfRetrainCheck]]. */
+    * floored signals of [[VectorOps.retrainCheck]]. */
   private def retrainVerdictSql(asg: String): String =
     s"""sizes AS (SELECT cid, count(*) AS n FROM $asg WHERE cr = 1 GROUP BY 1),
       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_lists,

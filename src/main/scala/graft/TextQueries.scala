@@ -373,7 +373,8 @@ object TextQueries {
       IndexFamily.search(8).cloneTo(s, base, gen, path)
       graft.operators.Generations.publishSearch(s, view, gen)
       EpochRegistry.Resource(view,
-        dropTables = Seq(view, gen, s"${gen}_doclens", s"${gen}_tombstones"),
+        dropTables = view +:
+          IndexFamily.generationTables(IndexFamily.search(8)).map(gen + _),
         deleteDirs = Seq(path))
     }
   }
@@ -403,7 +404,7 @@ object TextQueries {
     * rank. */
   private[graft] def searchDeleteIndexFor(s: SparkSession, dir: String): String =
     generation(s, dir, "search_delete_index",
-        searchTables :+ "_tombstones") { (t, newDir) =>
+        IndexFamily.generationTables(IndexFamily.search(8))) { (t, newDir) =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val poison = poisonSearchDocs(s, dir)
       SearchOps.writeSearchIndex(docs.unionByName(poison), "doc_id", "text",
@@ -459,8 +460,8 @@ object TextQueries {
     * phantom (new_id, ≥500000) pairs. */
   private[graft] def bandDeleteIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
-    generation(s, dir, "band_delete_index", Seq("", "_tombstones")) {
-        (t, newDir) =>
+    generation(s, dir, "band_delete_index",
+        IndexFamily.generationTables(IndexFamily.band(32))) { (t, newDir) =>
       IndexFamily.band(32).cloneTo(s, base, t, newDir())
       val poison = dupCorpus(Tables.documents(s, dir))
         .filter(col("doc_id") >= 100000 && col("doc_id") < 200000)

@@ -296,7 +296,7 @@ object Dedup {
 
   /** The re-shard DECISION over a band index's bucket-size
     * distribution — the band family's verdict operator, closing the
-    * monitor→remedy edge the way [[VectorOps.ivfRetrainCheck]] does for
+    * monitor→remedy edge the way [[VectorOps.retrainCheck]] does for
     * IVF and [[SearchOps.searchReshardCheck]] does for retrieval
     * (VERDICT r11 #2): `dedup_band_stats` emits the per-band
     * distribution, this reduces ALL (band, bkey) buckets to one

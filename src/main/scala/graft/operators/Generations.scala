@@ -130,7 +130,7 @@ object Generations {
 
   /** The compaction-cadence DECISION — the monitor that completes the
     * maintenance symmetry across edges: retrain has
-    * [[VectorOps.ivfRetrainCheck]], re-shard has
+    * [[VectorOps.retrainCheck]], re-shard has
     * [[Dedup.bandReshardCheck]]/[[SearchOps.searchReshardCheck]],
     * settle has [[graft.streaming.IngestStream.settleCheck]] — and the
     * COMPACT edge (tombstone purge + file-group collapse:

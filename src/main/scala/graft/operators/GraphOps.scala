@@ -1167,17 +1167,21 @@ object GraphOps {
   }
 
   // -----------------------------------------------------------------
-  // Persisted graph-index generations (r17): the kNN-graph family gains
-  // the SAME lifecycle the six other ANN serving families carry —
+  // Persisted graph-index generations (r17): the kNN-graph family
+  // carries the SAME lifecycle as the other ANN serving families —
   // build → serve → append → delete → upsert → compact → monitor →
   // retrain, with Generations pointer publishing and a CDC loop
-  // (IngestStream.cdcFamilySink over IndexFamily.graph). The served index
-  // is four catalog tables: `_cents` (frozen coarse quantizer), `_cells`
-  // (corpus→cell
-  // assignment, partitionBy(list_id) — the entry lists, DPP-pruned at
-  // probe time), `_nodes` (the full-precision vectors the walk scores
-  // against — the graph index CARRIES its vectors, the DiskANN layout,
-  // so probes never touch the lake), `_edges` (the ranked adjacency).
+  // (IngestStream.cdcFamilySink over IndexFamily.graph). Its delete,
+  // clone, compaction and upsert are IndexFamily.graph's — the one
+  // generation copy every family shares, which purges a dropped node's
+  // edges by `src` and by `dst`; this object holds the build, the
+  // probes, the append walk and the retrain. The served index is four
+  // catalog tables: `_cents` (frozen coarse quantizer), `_cells`
+  // (corpus→cell assignment, partitionBy(list_id) — the entry lists,
+  // DPP-pruned at probe time), `_nodes` (the full-precision vectors the
+  // walk scores against — the graph index CARRIES its vectors, the
+  // DiskANN layout, so probes never touch the lake), `_edges` (the
+  // ranked adjacency).
   // -----------------------------------------------------------------
 
   /** K = max(4, ⌊√n⌋) — the corpus-derived cell count every quantizer
@@ -1357,107 +1361,7 @@ object GraphOps {
       .write.mode("append").insertInto(s"${t}_cells")
   }
 
-  /** Copy a graph-index generation — the clone step of every
-    * clone-corrupt/append-settle epoch. Tombstones do NOT copy (they
-    * belong to the source generation's pending-maintenance state). */
-  def cloneGraphIndex(spark: SparkSession, src: String, dest: String,
-      path: String): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    spark.table(s"${src}_cells").write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/cells").saveAsTable(s"${dest}_cells")
-    spark.table(s"${src}_nodes").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    spark.table(s"${src}_edges").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/edges").saveAsTable(s"${dest}_edges")
-  }
-
-  /** COMPACTION — settle pending tombstones physically: the new
-    * generation drops dead ids from the nodes, the entry cells, and the
-    * adjacency (both as src — their out-edges — and as dst — in-edges
-    * pointing at them), and starts tombstone-free. Result-identical to
-    * probing the source with its tombstones ([[probeGraphIndex]]'s
-    * exclusion argument), so the compacted probe shares the deleted
-    * probe's oracle. One generation copy — the family's compaction cost
-    * class. */
-  def compactGraphIndex(spark: SparkSession, src: String, dest: String,
-      path: String): Unit = {
-    def live(rows: DataFrame, key: String) =
-      IndexFamily.live(spark, src, rows, key)
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    live(spark.table(s"${src}_cells"), "vec_id")
-      .select(col("vec_id"), col("list_id"))
-      .write.mode("overwrite").format("parquet").partitionBy("list_id")
-      .option("path", s"$path/cells").saveAsTable(s"${dest}_cells")
-    live(spark.table(s"${src}_nodes"), "vec_id")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    live(live(spark.table(s"${src}_edges"), "src"), "dst")
-      .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/edges").saveAsTable(s"${dest}_edges")
-  }
-
-  /** UPDATE maintenance — the generation-step upsert (graph indexes
-    * cannot update in place: an edge's stored score is the endpoint
-    * vectors' cosine, stale the moment either moves — the
-    * FreshDiskANN delete-then-reinsert model): the new generation
-    * PRUNES every touched or tombstoned id (its rows in nodes/cells,
-    * its out-edges, AND in-edges pointing at it — a stale in-edge
-    * score is the subtle corruption), then re-inserts the winning
-    * (vec_id, embedding) batch through the standard append walk over
-    * the pruned graph. Batch semantics (all winners walk the same
-    * frozen pruned graph at once — order-free, which is what makes the
-    * settle mirrorable); the result starts tombstone-free. */
-  def upsertToGraphIndex(spark: SparkSession, src: String, dest: String,
-      path: String, vecs: DataFrame): Unit = {
-    val touched = vecs.select(col("vec_id")).distinct()
-    // neither tombstoned nor touched
-    def live(rows: DataFrame, key: String) =
-      IndexFamily.live(spark, src, rows, key).join(
-        broadcast(touched.select(col("vec_id").as(key))), Seq(key),
-        "left_anti")
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    live(spark.table(s"${src}_cells"), "vec_id")
-      .select(col("vec_id"), col("list_id"))
-      .write.mode("overwrite").format("parquet").partitionBy("list_id")
-      .option("path", s"$path/cells").saveAsTable(s"${dest}_cells")
-    live(spark.table(s"${src}_nodes"), "vec_id")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/nodes").saveAsTable(s"${dest}_nodes")
-    live(live(spark.table(s"${src}_edges"), "src"), "dst")
-      .select(col("src"), col("dst"), col("cos_sim"), col("rk"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/edges").saveAsTable(s"${dest}_edges")
-    appendToGraphIndex(spark, dest, vecs)
-  }
-
-  /** The graph family's retrain DECISION — [[VectorOps.ivfRetrainCheck]]
-    * over the ENTRY CELLS: appends assign through the frozen quantizer,
-    * so corpus drift concentrates new nodes in few cells, and entry
-    * cost is `entryCells · (sizes of the probed cells)` — a hot cell is
-    * both a probe tail AND a seed-quality cliff at the next rebuild.
-    * Identical statistics, thresholds, and BIGINT floor arithmetic as
-    * the IVF families (frozen assignment ⇒ identical cell populations
-    * for the same corpus, so they share one mirror). Near-metadata
-    * cost: reads the partition column only, reduces to ONE row. */
-  def graphRetrainCheck(spark: SparkSession, table: String,
-      maxOverMeanX1000: Long = 2000L, topFracX1000: Long = 200L): DataFrame =
-    spark.table(s"${table}_cells")
-      .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_lists"), sum(col("n")).as("total_vectors"),
-        max(col("n")).as("max_list"))
-      .withColumn("mean_list", expr("total_vectors div n_lists"))
-      .withColumn("max_over_mean_x1000", expr("max_list * 1000 div mean_list"))
-      .withColumn("top_frac_x1000", expr("max_list * 1000 div total_vectors"))
-      .withColumn("retrain",
-        col("max_over_mean_x1000") >= maxOverMeanX1000 ||
-          col("top_frac_x1000") >= topFracX1000)
-
-  /** Execute the retrain [[graphRetrainCheck]] decides on — a full
+  /** Execute the retrain [[VectorOps.retrainCheck]] decides on — a full
     * rebuild over the LIVE corpus read back from the index's own nodes
     * (originals + every appended batch, minus tombstoned ids): fresh
     * quantizer with re-derived K, fresh cells, fresh NN-descent edges —

@@ -19,37 +19,45 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
   *  - `idCol`/`payloadCol`/`payloadType`: the capture frame's key and
   *    row columns (`doc_id`/`text` or `vec_id`/`embedding`), also the
   *    `<table>_pending` queue's shape and the tombstones' id column;
+  *  - `tables`: the suffixes of the tables one generation holds — what a
+  *    pointer publish flips, what the settle refreshes, what an epoch
+  *    drops;
+  *  - `keys`: the columns a table carries the id under (`vec_id`,
+  *    `doc_id`, band rows' `old_id`, graph edges' `src` and `dst`) —
+  *    what a compaction drops dead ids on;
   *  - `append`: the batch path's frozen-layout insert of an
   *    `(id, payload)` frame;
   *  - `upsert`: the generation copy `src` → `dest` that re-ingests the
   *    settle's winner frame (written under `paths`);
-  *  - `cloneTo`: the generation copy `src` → `dest` (under `path`) that
-  *    carries pending tombstones along (`clone` would shadow
-  *    `Object.clone`);
-  *  - `compact`: the generation copy that settles them physically — the
-  *    new generation starts tombstone-free;
-  *  - `tables`: the suffixes of the tables one generation holds — what a
-  *    pointer publish flips, what the settle refreshes, what an epoch
-  *    drops;
   *  - `reingestInserts`: INSERTs queue instead of applying at drain time
   *    (graph: an insert is a beam WALK over the growing index, so it is
   *    order-dependent and settles as one batch for determinism — the
   *    FreshDiskANN streaming-merge model).
   *
-  * Every row deletes the same way ([[delete]]). The search row brings
-  * its own `upsert` and the graph row its own `upsert`, `cloneTo` and
-  * `compact`; every other copy comes from one layout-driven routine
-  * ([[IndexFamily.copied]]). The tombstone sidecar is this object's
-  * alone: its rows ([[delete]]), its reads ([[IndexFamily.tombstones]],
-  * [[IndexFamily.live]]) and its copy. */
+  * Every row deletes the same way ([[delete]]) and copies its
+  * generations through one layout-driven routine ([[cloneTo]],
+  * [[compact]], and every upsert but the search row's settle). The
+  * tombstone sidecar is this object's alone: its rows ([[delete]]), its
+  * reads ([[IndexFamily.tombstones]], [[IndexFamily.live]]) and its
+  * copy. */
 final case class IndexFamily(
     idCol: String, payloadCol: String, payloadType: DataType,
-    tables: Seq[String],
+    tables: Seq[String], keys: Seq[String],
     append: (SparkSession, String, DataFrame) => Unit,
     upsert: (SparkSession, String, String, Seq[String], DataFrame) => Unit,
-    cloneTo: (SparkSession, String, String, String) => Unit,
-    compact: (SparkSession, String, String, String) => Unit,
     reingestInserts: Boolean) {
+
+  /** The generation copy `src` → `dest` (under `path`) that carries
+    * pending tombstones along (`clone` would shadow `Object.clone`). */
+  def cloneTo(s: SparkSession, src: String, dest: String,
+      path: String): Unit =
+    IndexFamily.copyGeneration(s, tables, keys, src, dest, path, None)
+
+  /** The generation copy that settles pending tombstones physically —
+    * the new generation starts tombstone-free. */
+  def compact(s: SparkSession, src: String, dest: String,
+      path: String): Unit =
+    IndexFamily.copyGeneration(s, tables, keys, src, dest, path, Some(Nil))
 
   /** DELETE maintenance — the reference's CDC DELETE semantics
     * (`sql/triggers.sql:29-32`: a delete is captured and must reach
@@ -92,6 +100,11 @@ object IndexFamily {
 
   /** Written by the drain next to the family's own tables. */
   val sidecars: Seq[String] = Seq(tombstoneSuffix, "_pending", "_applied")
+
+  /** Every table one generation of `family` can hold: its own tables
+    * plus the tombstone sidecar a delete (or a clone of one) writes. */
+  def generationTables(family: IndexFamily): Seq[String] =
+    family.tables :+ tombstoneSuffix
 
   /** The tombstone sidecar of generation `table` — the `(id, seq)` rows
     * [[IndexFamily.delete]] appends — or `None` while nothing was
@@ -174,36 +187,35 @@ object IndexFamily {
 
   private val embeddingType = ArrayType(FloatType, containsNull = false)
 
-  /** A row whose three generation copies come from [[copyGeneration]]:
-    * only its tables, the `key` its rows carry the id under, and its
-    * frozen-layout `append` differ. The upsert is a compaction that also
-    * drops the incoming ids, followed by the row's own append of one row
-    * per id — the latest by a deterministic max over the payload, so a
+  /** A row whose upsert comes from [[copyGeneration]], like every row's
+    * clone and compaction: only its tables, `keys` and frozen-layout
+    * `append` differ. The upsert is a compaction that also drops the
+    * incoming ids, followed by the row's own append of one row per id —
+    * the latest by a deterministic max over the payload, so a
     * duplicate-id batch cannot re-introduce the doubled id the upsert
     * exists to prevent. In-place re-ingestion is not offered: rows key
     * on the id, so an id stored under both its stale and fresh payload
     * would serve twice (band rows: pair under both texts), or fold both
     * code sets into one PQ score. */
   private def copied(idCol: String, payloadCol: String,
-      payloadType: DataType, tables: Seq[String], key: String,
+      payloadType: DataType, tables: Seq[String], keys: Seq[String],
       append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
-    IndexFamily(idCol, payloadCol, payloadType, tables, append,
+    IndexFamily(idCol, payloadCol, payloadType, tables, keys, append,
       (s, src, dest, paths, rows) => {
         val latest = rows.select(col(idCol).cast("long").as(idCol),
             col(payloadCol))
           .groupBy(col(idCol)).agg(max(col(payloadCol)).as(payloadCol))
-        copyGeneration(s, tables, key, src, dest, paths.head,
-          Some(Seq(latest.select(col(idCol).as(key)))))
+        copyGeneration(s, tables, keys, src, dest, paths.head,
+          Some(Seq(latest.select(col(idCol)))))
         append(s, dest, latest)
       },
-      copyGeneration(_, tables, key, _, _, _, None),
-      copyGeneration(_, tables, key, _, _, _, Some(Nil)),
       reingestInserts = false)
 
   /** A vector family: a [[copied]] row keyed on `vec_id`. */
   private[graft] def vector(tables: Seq[String],
       append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
-    copied("vec_id", "embedding", embeddingType, tables, "vec_id", append)
+    copied("vec_id", "embedding", embeddingType, tables, Seq("vec_id"),
+      append)
 
   /** Copies every table of generation `src` to `dest`, each under
     * `path/<suffix>` (`path/rows` for the `""` table, so a sidecar's
@@ -211,7 +223,7 @@ object IndexFamily {
     * has — never a retrain, a re-assignment or a re-tokenization. A
     * table missing from `src` is not written, so `dest` has the same
     * shape (a postings-only search index has no `_doclens`). A table
-    * with no `key` column is a frozen quantizer (`_cents`,
+    * with none of the `keys` is a frozen quantizer (`_cents`,
     * `_codebooks`) and copies verbatim. Every table keeps the partition
     * columns and the bucket spec the catalog reports for it; a bucketed
     * table is read through [[bucketedReader]], so each bucket is
@@ -220,26 +232,31 @@ object IndexFamily {
     *  - `drop = None`, a plain clone: every row copies and the tombstone
     *    sidecar is carried over, so the clone serves exactly what the
     *    source serves and pending deletes cannot resurrect.
-    *  - `drop = Some(ids)`, a compaction: the `key` tables lose `ids`
-    *    and the source's tombstoned ids, and a partitioned table is
-    *    repartitioned by its partition columns, so each list is
-    *    rewritten as one file (IvfIndexSpec pins the collapse). The new
-    *    generation starts tombstone-free. */
+    *  - `drop = Some(ids)`, a compaction: a table loses every row that
+    *    carries `ids` or a tombstoned id under any of the `keys` it has
+    *    (a graph node's out-edges by `src`, its in-edges by `dst`), and
+    *    a partitioned table is repartitioned by its partition columns,
+    *    so each list is rewritten as one file (IvfIndexSpec pins the
+    *    collapse). The new generation starts tombstone-free. */
   private def copyGeneration(s: SparkSession, tables: Seq[String],
-      key: String, src: String, dest: String, path: String,
+      keys: Seq[String], src: String, dest: String, path: String,
       drop: Option[Seq[DataFrame]]): Unit = {
     val dead = drop.flatMap(ids =>
-      (ids ++ deadIds(s, src, key)).reduceOption(_ unionByName _))
+      (ids ++ tombstones(s, src).map(t => t.select(col(t.columns.head))))
+        .reduceOption(_ union _)).map(_.distinct())
     tables.filter(t => s.catalog.tableExists(src + t)).foreach { t =>
       val meta = s.sessionState.catalog
         .getTableMetadata(TableIdentifier(src + t))
       val parts = meta.partitionColumnNames
       val rows = meta.bucketSpec.fold(s)(_ => bucketedReader(s)).table(src + t)
+      val ks = keys.filter(rows.columns.contains)
       val copied =
-        if (drop.isEmpty || !rows.columns.contains(key)) rows
+        if (drop.isEmpty || ks.isEmpty) rows
         else {
-          val live = dead.fold(rows)(d =>
-            rows.join(broadcast(d.distinct()), Seq(key), "left_anti"))
+          // an anti-join leads with its key, so the keys end up first,
+          // in `keys` order, and the other columns keep theirs
+          val live = dead.fold(rows)(d => ks.foldRight(rows)((k, r) =>
+            r.join(broadcast(d.toDF(k)), Seq(k), "left_anti")))
           if (parts.isEmpty) live else live.repartition(parts.map(col): _*)
         }
       val dir = if (t.isEmpty) "rows" else t.stripPrefix("_")
@@ -265,7 +282,7 @@ object IndexFamily {
     * source's spec. The two appends run as concurrent jobs, as do the
     * settle's two copies. */
   def search(numBuckets: Int): IndexFamily = copied("doc_id", "text",
-    StringType, Seq("", "_doclens"), "doc_id",
+    StringType, Seq("", "_doclens"), Seq("doc_id"),
     (s, t, docs) => concurrently(s)(
       () => SearchOps.appendToSearchIndex(s, t, docs, "doc_id", "text",
         numBuckets),
@@ -280,7 +297,7 @@ object IndexFamily {
     * queue-until-settle. `numBuckets` reaches the appends, including
     * the upsert's append of the fresh band rows. */
   def band(numBuckets: Int): IndexFamily = copied("doc_id", "text",
-    StringType, Seq(""), "old_id",
+    StringType, Seq(""), Seq("old_id"),
     Dedup.appendToBandIndex(_, _, _, "doc_id", "text", numBuckets))
 
   /** IVF lists under the frozen coarse quantizer. */
@@ -305,16 +322,15 @@ object IndexFamily {
   val pq: IndexFamily = vector(Seq("_codebooks", "_codes"),
     VectorOps.appendToPqIndex(_, _, _))
 
-  /** kNN-graph generation — the one family whose INSERTs queue. Its
-    * clone, compact and upsert are its own: a dropped node's edges
-    * purge in both directions. */
-  val graph: IndexFamily = IndexFamily("vec_id", "embedding", embeddingType,
-    Seq("_cents", "_cells", "_nodes", "_edges"),
-    GraphOps.appendToGraphIndex,
-    (s, src, dest, paths, vecs) =>
-      GraphOps.upsertToGraphIndex(s, src, dest, paths.head, vecs),
-    GraphOps.cloneGraphIndex, GraphOps.compactGraphIndex,
-    reingestInserts = true)
+  /** kNN-graph generation — the one family whose INSERTs queue. A
+    * dropped node's edges purge in both directions (`src`, `dst`); an
+    * edge's stored score is its endpoints' cosine, stale the moment
+    * either moves, so an upsert prunes the ids and walks them back in
+    * over the pruned graph (the FreshDiskANN delete-then-reinsert
+    * model). */
+  val graph: IndexFamily = copied("vec_id", "embedding", embeddingType,
+    Seq("_cents", "_cells", "_nodes", "_edges"), Seq("vec_id", "src", "dst"),
+    GraphOps.appendToGraphIndex).copy(reingestInserts = true)
 
   /** IVF lists of PQ codes; `m`/`dim` serve the drain-time encode AND the
     * settle's re-encode, so a non-default index keeps its subspaces. */

@@ -329,7 +329,7 @@ object SearchOps {
   /** The re-shard DECISION over a search index's posting-list
     * distribution — `text_search_stats` emits the skew signals, this
     * turns them into a verdict, closing the monitor→remedy edge for the
-    * search family the way [[VectorOps.ivfRetrainCheck]] closes it for
+    * search family the way [[VectorOps.retrainCheck]] closes it for
     * IVF (VERDICT r11 #2). The two signals are the two ways a probe
     * develops a cost tail:
     *

@@ -1825,7 +1825,7 @@ object VectorOps {
   }
 
   /** Full requantization epoch for the IVF-PQ index — the remedy
-    * [[ivfRetrainCheck]]-style drift monitoring calls for once frozen
+    * [[retrainCheck]]-style drift monitoring calls for once frozen
     * quantizers stop describing a grown corpus: BOTH quantizers
     * retrain (coarse K re-derived as √N of the live corpus; PQ
     * codebooks re-Lloyd on the deterministic sample) and the corpus
@@ -1995,57 +1995,21 @@ object VectorOps {
     *    the degenerate case where most lists are near-empty and the
     *    mean says nothing).
     *
+    * `table` is any `(list_id, vec_id)` relation of a generation: IVF,
+    * SQ8 and binary `_lists`, MRL's `_prefix` cells, IVF-PQ `_codes`
+    * (m rows per vector) or the graph's entry `_cells` — a list's size
+    * is its count of DISTINCT ids, so every layout reads the same.
     * `retrain` fires when either floored signal reaches its threshold.
     * All arithmetic is BIGINT floor-division (the repo's quantization
     * discipline; mean-first keeps every product ≤ max·1000, no overflow
     * below ~9·10^15 vectors), so the verdict hash-matches the oracle
     * computing the same distribution from the shared k-means assignment
-    * CTEs. Scale: reads the partition column only and reduces to ONE
-    * row — near-metadata cost like the stats query it judges
-    * (IvfIndexSpec pins the pruned read schema). */
-  def ivfRetrainCheck(spark: org.apache.spark.sql.SparkSession, table: String,
+    * CTEs. Scale: reads the two id columns only and reduces to ONE
+    * row — near-metadata cost like the stats query it judges. */
+  def retrainCheck(spark: org.apache.spark.sql.SparkSession, table: String,
       maxOverMeanX1000: Long = 2000L, topFracX1000: Long = 200L): DataFrame =
-    spark.table(s"${table}_lists")
-      .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_lists"), sum(col("n")).as("total_vectors"),
-        max(col("n")).as("max_list"))
-      .withColumn("mean_list", expr("total_vectors div n_lists"))
-      .withColumn("max_over_mean_x1000", expr("max_list * 1000 div mean_list"))
-      .withColumn("top_frac_x1000", expr("max_list * 1000 div total_vectors"))
-      .withColumn("retrain",
-        col("max_over_mean_x1000") >= maxOverMeanX1000 ||
-          col("top_frac_x1000") >= topFracX1000)
-
-  /** [[ivfRetrainCheck]] for the MRL family (r19 — the monitor→decide
-    * edge of the prefix epoch's lifecycle): appends assign through the
-    * FROZEN prefix quantizer, so corpus drift concentrates new prefix
-    * rows in few cells and the composed probe's cost grows with the
-    * hottest cell. Same two integer-exact signals, same thresholds,
-    * near-metadata cost (partition column only, one reduced row). */
-  def mrlRetrainCheck(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxOverMeanX1000: Long = 2000L,
-      topFracX1000: Long = 200L): DataFrame =
-    spark.table(s"${table}_prefix")
-      .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_lists"), sum(col("n")).as("total_vectors"),
-        max(col("n")).as("max_list"))
-      .withColumn("mean_list", expr("total_vectors div n_lists"))
-      .withColumn("max_over_mean_x1000", expr("max_list * 1000 div mean_list"))
-      .withColumn("top_frac_x1000", expr("max_list * 1000 div total_vectors"))
-      .withColumn("retrain",
-        col("max_over_mean_x1000") >= maxOverMeanX1000 ||
-          col("top_frac_x1000") >= topFracX1000)
-
-  /** [[ivfRetrainCheck]] for the IVF-PQ composite: the codes table
-    * carries m rows per vector, so list sizes count DISTINCT vec ids —
-    * same statistics, same integer-exact verdict, same thresholds.
-    * Near-metadata cost either way (one agg over narrow code rows). */
-  def ivfPqRetrainCheck(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxOverMeanX1000: Long = 2000L,
-      topFracX1000: Long = 200L): DataFrame =
-    spark.table(s"${table}_codes")
-      .groupBy(col("list_id"))
-      .agg(countDistinct(col("vec_id")).as("n"))
+    spark.table(table)
+      .groupBy(col("list_id")).agg(countDistinct(col("vec_id")).as("n"))
       .agg(count(lit(1)).as("n_lists"), sum(col("n")).as("total_vectors"),
         max(col("n")).as("max_list"))
       .withColumn("mean_list", expr("total_vectors div n_lists"))
@@ -2102,7 +2066,7 @@ object VectorOps {
       .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
   }
 
-  /** Execute the retrain [[ivfRetrainCheck]] decides on — the final
+  /** Execute the retrain [[retrainCheck]] decides on — the final
     * edge of the index lifecycle (build → append* → compact → monitor →
     * decide → RETRAIN): a NEW generation is trained over the CURRENT
     * corpus read back from the source index's lists (originals + every

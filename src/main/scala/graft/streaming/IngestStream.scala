@@ -312,7 +312,7 @@ object IngestStream {
   def settleFamilyUpserts(spark: org.apache.spark.sql.SparkSession,
       family: IndexFamily, src: String, dest: String,
       paths: Seq[String]): Unit = {
-    (family.tables ++ Seq("_pending", "_tombstones")).map(src + _)
+    (family.tables ++ IndexFamily.sidecars).map(src + _)
       .filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
     family.upsert(spark, src, dest, paths, settleWinners(spark, family, src))
   }
@@ -437,7 +437,7 @@ object IngestStream {
   /** The settle-cadence DECISION for the CDC maintenance loop (VERDICT
     * r12 #2) — the freshness monitor completing the monitor→decide
     * symmetry the other three families have
-    * ([[graft.operators.VectorOps.ivfRetrainCheck]],
+    * ([[graft.operators.VectorOps.retrainCheck]],
     * [[graft.operators.Dedup.bandReshardCheck]],
     * [[graft.operators.SearchOps.searchReshardCheck]]): while
     * [[cdcIndexSink]] accumulates pending UPDATEs/re-INSERTs, probes

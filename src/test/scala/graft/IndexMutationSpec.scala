@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, IndexFamily, SearchOps, VectorOps}
+import graft.operators.{Dedup, GraphOps, IndexFamily, SearchOps, VectorOps}
 import graft.streaming.IngestStream
 
 /** UPDATE/DELETE maintenance contracts for the standing index families
@@ -738,5 +738,80 @@ class IndexMutationSpec extends AnyFunSuite {
         spark.sql(s"DROP TABLE IF EXISTS $t"))
     } finally Seq(s"${table}_tombstones", s"${table}_cents", s"${table}_lists")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  private lazy val graphVecs = (0L until 40L).map(i =>
+      (i, Array.tabulate(8)(d => math.sin(i * 7 + d * 0.37).toFloat)))
+    .toDF("vec_id", "embedding")
+
+  private def dropGraph(ts: String*): Unit =
+    ts.flatMap(t => (IndexFamily.graph.tables :+ "_tombstones").map(t + _))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+  test("graph clone carries the tombstones; deleted ids stay unserved") {
+    graft.functions.GraftFunctions.register(spark)
+    val src = uniq("graft_graph_clone_ts_")
+    val dest = uniq("graft_graph_clone_ts_d_")
+    val paths = (1 to 2).map(_ => tmp("graft_graph_clone_ts_"))
+    try {
+      GraphOps.writeGraphIndex(graphVecs, src, paths(0), trainIters = 1)
+      IndexFamily.graph.delete(spark, src, Seq(0L, 1L).toDF("vec_id"))
+      IndexFamily.graph.cloneTo(spark, src, dest, paths(1))
+      def sidecar(t: String) = spark.table(s"${t}_tombstones")
+        .collect().map(_.toString).sorted.toSeq
+      assert(spark.catalog.tableExists(s"${dest}_tombstones"),
+        "the clone lost the tombstone sidecar")
+      assert(sidecar(dest) == sidecar(src))
+      // each query's own vector would be its rank-1 neighbor
+      val got = GraphOps.probeGraphIndex(spark, dest,
+        graphVecs.filter(col("vec_id") < 4), k = 3)
+        .collect().map(_.getLong(1)).toSet
+      assert(got.nonEmpty && !got.exists(_ < 2L),
+        s"the clone served deleted ids: $got")
+    } finally {
+      dropGraph(src, dest)
+      paths.foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    }
+  }
+
+  test("graph upsert reduces a duplicate-id batch to one node") {
+    graft.functions.GraftFunctions.register(spark)
+    val src = uniq("graft_graph_dup_ups_")
+    val dest = uniq("graft_graph_dup_ups_d_")
+    val paths = (1 to 2).map(_ => tmp("graft_graph_dup_ups_"))
+    try {
+      GraphOps.writeGraphIndex(graphVecs, src, paths(0), trainIters = 1)
+      val dup = graphVecs.filter(col("vec_id") === 5L)
+        .unionAll(graphVecs.filter(col("vec_id") === 5L)
+          .select(col("vec_id"),
+            expr("transform(embedding, x -> -x)").cast("array<float>")
+              .as("embedding")))
+      IndexFamily.graph.upsert(spark, src, dest, Seq(paths(1)), dup)
+      def rows(t: String, key: String) =
+        spark.table(dest + t).filter(col(key) === 5L)
+      assert(rows("_nodes", "vec_id").count() == 1L,
+        "duplicate-id graph upsert stored the id twice in _nodes")
+      assert(rows("_cells", "vec_id").count() == 1L,
+        "duplicate-id graph upsert stored the id twice in _cells")
+      // one append walk: one out-edge per rank, none left from the source
+      val ranks = rows("_edges", "src").select(col("rk")).as[Long]
+        .collect().sorted.toSeq
+      assert(ranks == (1L to GraphOps.KnnK.toLong),
+        s"id 5 must keep only one walk's out-edges, got ranks $ranks")
+      // and they score against the one stored vector
+      val stale = rows("_edges", "src")
+        .join(spark.table(s"${dest}_nodes")
+          .select(col("vec_id").as("dst"), col("embedding").as("d")), "dst")
+        .crossJoin(rows("_nodes", "vec_id").select(col("embedding").as("w")))
+        .filter(round(VectorOps.cosine(col("w"), col("d")), 6) =!=
+          col("cos_sim"))
+      assert(stale.count() == 0L,
+        "an out-edge of id 5 scores against a vector it no longer has")
+    } finally {
+      dropGraph(src, dest)
+      paths.foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    }
   }
 }

@@ -287,11 +287,11 @@ class IvfIndexSpec extends AnyFunSuite {
       // the flip below is forced by the skewed append alone (absolute
       // defaults would make the test hostage to the toy corpus's
       // natural imbalance)
-      val fresh = VectorOps.ivfRetrainCheck(spark, table).collect().head
+      val fresh = VectorOps.retrainCheck(spark, s"${table}_lists").collect().head
       val skewBar = fresh.getAs[Long]("max_over_mean_x1000") + 1
       val fracBar = fresh.getAs[Long]("top_frac_x1000") + 1
-      def verdict() =
-        VectorOps.ivfRetrainCheck(spark, table, skewBar, fracBar).collect().head
+      def verdict() = VectorOps.retrainCheck(spark, s"${table}_lists",
+        skewBar, fracBar).collect().head
       val before = verdict()
       assert(!before.getAs[Boolean]("retrain"),
         s"thresholds above the observed signals must not fire: $before")

@@ -8,13 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * entry's drop list (so it is reclaimed with the session), and the
   * live epoch kinds are exactly the documented lifecycle list plus the
   * three kNN input epochs the graph generation copies from. A second
-  * test pins which epoch each post-base vector lifecycle entry probes:
-  * entries that share an oracle (`_deleted`, `_updated`, `_published`
-  * all hash-match the base) cannot be told apart by the oracle compare,
-  * so a mis-wired stage would otherwise pass. The same pin covers the
-  * stream CDC entries and the search and band lifecycle entries, and
-  * two more tests hold the CDC stages and the search and band stages to
-  * the drop-list rule, on the epochs that pin's one build acquired. */
+  * test pins which epoch each post-base vector lifecycle entry probes,
+  * on that same build: entries that share an oracle (`_deleted`,
+  * `_updated`, `_published` all hash-match the base) cannot be told
+  * apart by the oracle compare, so a mis-wired stage would otherwise
+  * pass. The same pin covers the stream CDC entries and the search and
+  * band lifecycle entries, and two more tests hold the CDC stages and
+  * the search and band stages to the drop-list rule, on the epochs that
+  * pin's one build acquired. */
 class LifecycleReclaimSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -160,9 +161,31 @@ class LifecycleReclaimSpec extends AnyFunSuite {
     }
   }
 
+  /** One [[acquireAll]] shared by the vector tests: its session, and
+    * what the drop-list test checks, recorded before any entry runs —
+    * the catalog tables the epochs left behind, every table on a live
+    * drop list, the live entries of each lifecycle and graph-input
+    * kind, and the number of live entries. */
+  private final class VectorBuild(val session: SparkSession,
+      val tables: Set[String], val dropped: Set[String],
+      val liveOfKind: Map[String, Int], val liveCount: Int)
+
+  private lazy val vectorBuild: VectorBuild = {
+    val s = freshSession()
+    val before = catalogTables(s)
+    acquireAll(s)
+    val uuid = EpochRegistry.idOf(s)
+    val live = EpochRegistry.liveEntries(uuid)
+    new VectorBuild(s, catalogTables(s) -- before,
+      live.flatMap(_.dropTables).map(_.toLowerCase).toSet,
+      (lifecycleKinds ++ graphInputKinds).map(k =>
+        k -> EpochRegistry.liveEntries(uuid, Some(k)).size).toMap,
+      live.size)
+  }
+
   test("each vector lifecycle entry probes the epoch of its own stage") {
     assert(entryKinds.size == 69 && entryKinds.map(_._1).distinct.size == 69)
-    val wrong = miswired(freshSession(), entryKinds)
+    val wrong = miswired(vectorBuild.session, entryKinds)
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
@@ -302,23 +325,17 @@ class LifecycleReclaimSpec extends AnyFunSuite {
   }
 
   test("every lifecycle epoch's catalog tables are on a live drop list") {
-    val s = freshSession()
-    val before = catalogTables(s)
-    acquireAll(s)
-    val appeared = catalogTables(s) -- before
-    val uuid = EpochRegistry.idOf(s)
-    val dropped = EpochRegistry.liveEntries(uuid)
-      .flatMap(_.dropTables).map(_.toLowerCase).toSet
+    val appeared = vectorBuild.tables
+    val dropped = vectorBuild.dropped
     assert(appeared.nonEmpty)
     val leaked = appeared -- dropped
     assert(leaked.isEmpty, s"tables outside every drop list: $leaked")
 
     val expected = lifecycleKinds ++ graphInputKinds
     assert(lifecycleKinds.size == 58)
-    val missing = expected.filter(k =>
-      EpochRegistry.liveEntries(uuid, Some(k)).size != 1)
+    val missing = expected.filter(k => vectorBuild.liveOfKind(k) != 1)
     assert(missing.isEmpty, s"kinds without exactly one live entry: $missing")
-    assert(EpochRegistry.liveEntries(uuid).size == expected.size,
+    assert(vectorBuild.liveCount == expected.size,
       "live entries beyond the lifecycle and graph-input kinds")
   }
 }

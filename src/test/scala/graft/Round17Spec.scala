@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Classifier, GraphOps}
+import graft.operators.{Classifier, GraphOps, IndexFamily}
 
 /** Functional + plan gates for the r17 wave: the persisted graph-index
   * lifecycle (delete/compact equivalence, the loud poison gate, the
@@ -84,14 +84,14 @@ class Round17Spec extends AnyFunSuite {
       Tables.embeddings(spark, sfDir).count())
   }
 
-  test("compactGraphIndex without tombstones is an identity copy") {
+  test("IndexFamily.graph.compact without tombstones is an identity copy") {
     val src = SimilarityQueries.base(spark, sfDir, GraphQueries.graph)
     val dest = "graft_r17spec_cmp_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val path = java.nio.file.Files
       .createTempDirectory("graft_r17spec_cmp_").toString
     try {
-      GraphOps.compactGraphIndex(spark, src, dest, path)
+      IndexFamily.graph.compact(spark, src, dest, path)
       Seq("_edges", "_nodes", "_cells").foreach { sfx =>
         assert(spark.table(dest + sfx).count() ==
           spark.table(src + sfx).count(), s"suffix $sfx changed size")
