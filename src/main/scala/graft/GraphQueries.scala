@@ -362,7 +362,8 @@ object GraphQueries {
     // entry cells — frozen assignment makes its populations identical
     // to the IVF families' appended lists, so they share one mirror
     "sim_ann_graph_retrain_check" -> ((s, dir) =>
-      VectorOps.retrainCheck(s, append(s, dir, graph) + "_cells")),
+      VectorOps.retrainCheck(s, append(s, dir, graph) + "_cells",
+        rowsPerVector = 1)),
     // RETRAIN execution: full rebuild over the live corpus read back
     // from the appended generation's own nodes — fresh quantizer with
     // re-derived K, fresh cells, fresh NN-descent edges; the ranked

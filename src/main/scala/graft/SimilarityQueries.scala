@@ -452,6 +452,7 @@ object SimilarityQueries {
     *  - `rowsTable`: the table whose rows the compaction-cadence monitor
     *    weighs the delete epoch's ten tombstones against, and whose
     *    lists the retrain verdict ([[VectorOps.retrainCheck]]) sizes;
+    *    `rowsPerVector` of its rows hold one vector (m for code rows);
     *  - `retrainCheckSql`: the mirror of that verdict over the appended
     *    generation, for a family with coarse lists;
     *  - `baseSql`: the untouched build's oracle, shared by every
@@ -470,7 +471,7 @@ object SimilarityQueries {
       score: String, rowsTable: String, serve: Probe, audit: Probe,
       retrainCheckSql: Option[String], baseSql: String,
       compactedSql: String, appendedSql: String, appendedRecallSql: String,
-      retrainedSql: Option[(String, String)], compactionCheckSql: String,
+      retrainedSql: Option[(String, String)], rowsPerVector: Int,
       streamCdc: Option[(String, Seq[String])]) {
 
     /** `serve` over the generation `at` resolves to, gated as
@@ -494,11 +495,10 @@ object SimilarityQueries {
     * .cdcEntries]]); binary's row leaves out `_recall`. */
   private val cdcStages = Seq("", "_recall", "_settle_check", "_published")
 
-  /** The served table. The retrain verdicts count the distinct ids per
-    * list of the row's table, and every appended generation assigns
-    * through the same frozen float quantizer, so IVF, SQ8, binary,
-    * IVF-PQ and residual share one mirror (a code layout's m rows per
-    * vector count once);
+  /** The served table. The retrain verdicts size each list by its
+    * vectors, and every appended generation assigns through the same
+    * frozen float quantizer, so IVF, SQ8, binary, IVF-PQ and residual
+    * share one mirror (a code layout's m rows per vector count once);
     * MRL's cells are trained on the 32-dim prefixes, and flat PQ has
     * no coarse lists to skew. The compaction monitors count one list
     * (or prefix) row per vector, or m = 8 code rows. Lazy: the oracle
@@ -515,7 +515,7 @@ object SimilarityQueries {
         ivfOracleOver(dupVectorsSql + ",\n", "corpus", "corpus", corpusKSql),
         ivfRecallOracleOver(dupVectorsSql + ",\n", "corpus", "corpus",
           corpusKSql))),
-      compactionCheckSql = compactionCheckOracleSql(1),
+      rowsPerVector = 1,
       streamCdc = Some(("stream_ann", cdcStages))),
     Served(sq8, "sim_ann_ivf_sq8", "cos_sim", "_lists",
       VectorOps.probeIvfIndexSq8(_, _, _, k = 3, nProbe = 4),
@@ -531,7 +531,7 @@ object SimilarityQueries {
           corpusKSql),
         recallOracleSql(ivfSq8RecallPre(dupVectorsSql + ",\n", "corpus",
           "corpus", corpusKSql), ivfSq8RecallAnnSelect, "corpus"))),
-      compactionCheckSql = compactionCheckOracleSql(1), streamCdc = None),
+      rowsPerVector = 1, streamCdc = None),
     Served(binary, "sim_ann_binary", "hamming", "_lists",
       VectorOps.probeIvfIndexBinary(_, _, _, k = 5, nProbe = 4),
       VectorOps.probeIvfIndexBinary(_, _, _, k = recallK, nProbe = 2),
@@ -541,7 +541,7 @@ object SimilarityQueries {
       appendedRecallSql = ivfBinaryAppendRecallOracleSql,
       retrainedSql = Some((ivfBinaryRetrainOracleSql,
         ivfBinaryRetrainRecallOracleSql)),
-      compactionCheckSql = compactionCheckOracleSql(1),
+      rowsPerVector = 1,
       streamCdc = Some(("stream_binary",
         Seq("", "_settle_check", "_published")))),
     Served(mrl, "sim_ann_mrl", "cos_sim", "_prefix",
@@ -553,7 +553,7 @@ object SimilarityQueries {
       baseSql = mrlOracleSql, compactedSql = mrlOracleSql,
       appendedSql = mrlAppendOracleSql,
       appendedRecallSql = mrlAppendRecallOracleSql, retrainedSql = None,
-      compactionCheckSql = compactionCheckOracleSql(1),
+      rowsPerVector = 1,
       streamCdc = Some(("stream_ann_mrl", cdcStages))),
     Served(pq, "sim_ann_pq", "cos_sim", "_codes",
       VectorOps.probePqIndex(_, _, _, k = 3),
@@ -562,7 +562,7 @@ object SimilarityQueries {
       baseSql = pqOracleSql, compactedSql = pqOracleSql,
       appendedSql = pqAppendOracleSql,
       appendedRecallSql = pqAppendRecallOracleSql, retrainedSql = None,
-      compactionCheckSql = compactionCheckOracleSql(8), streamCdc = None),
+      rowsPerVector = 8, streamCdc = None),
     Served(ivfPq, "sim_ann_ivfpq", "cos_sim", "_codes",
       VectorOps.probeIvfPqIndex(_, _, _, k = 3, nProbe = 4),
       VectorOps.probeIvfPqIndex(_, _, _, k = recallK, nProbe = 2),
@@ -572,7 +572,7 @@ object SimilarityQueries {
       appendedRecallSql = ivfPqAppendRecallOracleSql,
       retrainedSql = Some((ivfPqRetrainOracleSql,
         ivfPqRetrainRecallOracleSql)),
-      compactionCheckSql = compactionCheckOracleSql(8),
+      rowsPerVector = 8,
       streamCdc = Some(("stream_ann_ivfpq", cdcStages))),
     Served(ivfPqRes, "sim_ann_ivfpq_residual", "cos_sim", "_codes",
       VectorOps.probeIvfPqResidualIndex(_, _, _, k = 3, nProbe = 4),
@@ -583,7 +583,7 @@ object SimilarityQueries {
       appendedRecallSql = ivfPqResidualAppendRecallOracleSql,
       retrainedSql = Some((ivfPqResidualRetrainOracleSql,
         ivfPqResidualRetrainRecallOracleSql)),
-      compactionCheckSql = compactionCheckOracleSql(8), streamCdc = None))
+      rowsPerVector = 8, streamCdc = None))
 
   /** Every post-base lifecycle entry of one served family, as (name,
     * query, oracle SQL): each stage's generation probed through `serve`
@@ -602,13 +602,15 @@ object SimilarityQueries {
       ("_compacted", probed(compact), f.compactedSql),
       ("_appended", probed(append), f.appendedSql),
       ("_appended_recall", audited(append), f.appendedRecallSql),
-      ("_compaction_check", compactionCheck, f.compactionCheckSql)) ++
+      ("_compaction_check", compactionCheck,
+        compactionCheckOracleSql(f.rowsPerVector))) ++
       f.lc.derive.map(_ => ("_derived", probed(derive), f.baseSql)) ++
       f.retrainedSql.toSeq.flatMap { case (sql, recallSql) => Seq(
         ("_retrained", probed(retrain), sql),
         ("_retrained_recall", audited(retrain), recallSql)) } ++
       f.retrainCheckSql.map(sql => ("_retrain_check", (s, dir) =>
-        VectorOps.retrainCheck(s, append(s, dir, f.lc) + f.rowsTable), sql))
+        VectorOps.retrainCheck(s, append(s, dir, f.lc) + f.rowsTable,
+          f.rowsPerVector), sql))
     stages.map { case (stage, query, sql) => (f.entry + stage, query, sql) }
   }
 

@@ -1995,21 +1995,24 @@ object VectorOps {
     *    the degenerate case where most lists are near-empty and the
     *    mean says nothing).
     *
-    * `table` is any `(list_id, vec_id)` relation of a generation: IVF,
-    * SQ8 and binary `_lists`, MRL's `_prefix` cells, IVF-PQ `_codes`
-    * (m rows per vector) or the graph's entry `_cells` — a list's size
-    * is its count of DISTINCT ids, so every layout reads the same.
+    * `table` is any table of a generation partitioned by `list_id`
+    * with `rowsPerVector` rows for each vector: IVF, SQ8 and binary
+    * `_lists`, MRL's `_prefix` cells and the graph's entry `_cells`
+    * (one), or IVF-PQ `_codes` (m) — a list's size is its row count
+    * over `rowsPerVector`, so every layout reads the partition column
+    * only (ColumnPruningSpec pins the IVF read schema empty).
     * `retrain` fires when either floored signal reaches its threshold.
     * All arithmetic is BIGINT floor-division (the repo's quantization
     * discipline; mean-first keeps every product ≤ max·1000, no overflow
     * below ~9·10^15 vectors), so the verdict hash-matches the oracle
     * computing the same distribution from the shared k-means assignment
-    * CTEs. Scale: reads the two id columns only and reduces to ONE
-    * row — near-metadata cost like the stats query it judges. */
+    * CTEs. Scale: reduces to ONE row — near-metadata cost like the
+    * stats query it judges. */
   def retrainCheck(spark: org.apache.spark.sql.SparkSession, table: String,
-      maxOverMeanX1000: Long = 2000L, topFracX1000: Long = 200L): DataFrame =
+      rowsPerVector: Int, maxOverMeanX1000: Long = 2000L,
+      topFracX1000: Long = 200L): DataFrame =
     spark.table(table)
-      .groupBy(col("list_id")).agg(countDistinct(col("vec_id")).as("n"))
+      .groupBy(col("list_id")).agg(expr(s"count(1) div $rowsPerVector").as("n"))
       .agg(count(lit(1)).as("n_lists"), sum(col("n")).as("total_vectors"),
         max(col("n")).as("max_list"))
       .withColumn("mean_list", expr("total_vectors div n_lists"))

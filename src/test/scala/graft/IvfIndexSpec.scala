@@ -287,10 +287,11 @@ class IvfIndexSpec extends AnyFunSuite {
       // the flip below is forced by the skewed append alone (absolute
       // defaults would make the test hostage to the toy corpus's
       // natural imbalance)
-      val fresh = VectorOps.retrainCheck(spark, s"${table}_lists").collect().head
+      val fresh = VectorOps.retrainCheck(spark, s"${table}_lists", 1)
+        .collect().head
       val skewBar = fresh.getAs[Long]("max_over_mean_x1000") + 1
       val fracBar = fresh.getAs[Long]("top_frac_x1000") + 1
-      def verdict() = VectorOps.retrainCheck(spark, s"${table}_lists",
+      def verdict() = VectorOps.retrainCheck(spark, s"${table}_lists", 1,
         skewBar, fracBar).collect().head
       val before = verdict()
       assert(!before.getAs[Boolean]("retrain"),
