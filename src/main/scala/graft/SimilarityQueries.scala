@@ -549,7 +549,7 @@ object SimilarityQueries {
         shortlist = 100),
       VectorOps.probeMrlIndex(_, _, _, k = recallK, prefixDims = 32,
         shortlist = 100),
-      Some(mrlRetrainCheckOracleSql),
+      Some(mrlRetrainVerdictOracleSql),
       baseSql = mrlOracleSql, compactedSql = mrlOracleSql,
       appendedSql = mrlAppendOracleSql,
       appendedRecallSql = mrlAppendRecallOracleSql, retrainedSql = None,
@@ -2552,7 +2552,7 @@ object SimilarityQueries {
 
   /** MRL's verdict: prefix cells frozen from the build-time prefixes,
     * the union corpus' prefixes assigned. */
-  private lazy val mrlRetrainCheckOracleSql =
+  private lazy val mrlRetrainVerdictOracleSql =
     s"""WITH $dupVectorsSql,
       |prefixes AS (SELECT vec_id, embedding[1:32] AS embedding FROM embeddings),
       |${centTrainSql(ivfKSql, 2, "prefixes", dim = 32)},
