@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -363,18 +364,15 @@ object Dedup {
     * probes keep their no-corpus-reshuffle plan (bucketed join on
     * (band, bkey) unions the file groups per bucket), and the indexed
     * corpus is never read or rewritten. `numBuckets` must equal the
-    * index's — Spark rejects a mismatched bucket spec on append
-    * (DedupIncrementalSpec pins probe parity with the direct bipartite
-    * join over the grown corpus). */
+    * index's — a mismatched bucket spec is rejected on append
+    * ([[IndexFamily.appendByName]]; DedupIncrementalSpec pins probe
+    * parity with the direct bipartite join over the grown corpus). */
   def appendToBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, idCol: String, textCol: String,
       numBuckets: Int = 32): Unit = {
     graft.functions.GraftFunctions.register(spark)
-    bandRows(batch, idCol, textCol, "old")
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "band", "bkey")
-      .sortBy("band", "bkey")
-      .saveAsTable(table)
+    IndexFamily.appendByName(bandRows(batch, idCol, textCol, "old"), table,
+      Some(BucketSpec(numBuckets, Seq("band", "bkey"), Seq("band", "bkey"))))
   }
 
   /** Near-dup CLUSTERS from a pair list — the step a production pipeline
@@ -885,15 +883,12 @@ object Dedup {
   def appendToGramIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, batch: DataFrame, idCol: String, textCol: String,
       gramLen: Int = 8, numBuckets: Int = 32): Unit =
-    gramRows(batch.select(col(idCol),
+    IndexFamily.appendByName(gramRows(batch.select(col(idCol),
         TextOps.tokens(col(textCol)).as("toks")), idCol, gramLen)
       .groupBy(col("gram"))
       .agg(countDistinct(col(idCol)).as("n_docs"),
-        min(col(idCol)).as("min_doc"), max(col(idCol)).as("max_doc"))
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "gram")
-      .sortBy("gram")
-      .saveAsTable(table)
+        min(col(idCol)).as("min_doc"), max(col(idCol)).as("max_doc")),
+      table, Some(BucketSpec(numBuckets, Seq("gram"), Seq("gram"))))
 
   /** COMPACT a gram index into a fresh generation: the per-append rows
     * of each gram re-aggregate to one ([[appendToGramIndex]] leaves one

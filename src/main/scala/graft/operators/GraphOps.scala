@@ -1349,16 +1349,14 @@ object GraphOps {
     val rdd = newEdges.rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.count()
-    spark.createDataFrame(rdd, newEdges.schema)
-      .write.mode("append").format("parquet").saveAsTable(s"${t}_edges")
+    IndexFamily.appendByName(spark.createDataFrame(rdd, newEdges.schema),
+      s"${t}_edges", None)
     rdd.unpersist()
-    batch.select(col("vec_id"), col("embedding"))
-      .write.mode("append").format("parquet").saveAsTable(s"${t}_nodes")
+    IndexFamily.appendByName(batch.select(col("vec_id"), col("embedding")),
+      s"${t}_nodes", None)
     val cents = broadcast(spark.table(s"${t}_cents"))
-    // insertInto is positional: partitioned schema is (vec_id, list_id)
-    VectorOps.assignLists(batch, cents)
-      .select(col("vec_id"), col("list_id"))
-      .write.mode("append").insertInto(s"${t}_cells")
+    IndexFamily.appendByName(VectorOps.assignLists(batch, cents)
+      .select(col("vec_id"), col("list_id")), s"${t}_cells", None)
   }
 
   /** Execute the retrain [[VectorOps.retrainCheck]] decides on — a full

@@ -1,8 +1,10 @@
 package graft.operators
 
 import java.util.concurrent.{CompletionException, Executors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter,
+  Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{broadcast, col, lit, max}
@@ -76,14 +78,13 @@ final case class IndexFamily(
     * settle ([[graft.streaming.IngestStream.settleFamilyUpserts]]).
     * Probes stay seq-blind: any tombstone hides the id until the settle
     * resolves the order. The search probes read through cached session
-    * clones, which are refreshed after the append. */
+    * clones, whose cached listing of the sidecar is dropped after the
+    * append. */
   def delete(s: SparkSession, table: String, ids: DataFrame): Unit = {
-    ids.select(col(idCol).cast("long").as(idCol),
+    IndexFamily.appendByName(ids.select(col(idCol).cast("long").as(idCol),
         (if (ids.columns.contains("seq")) col("seq").cast("long")
          else lit(Long.MaxValue)).as("seq"))
-      .distinct()
-      .write.mode("append").format("parquet")
-      .saveAsTable(table + IndexFamily.tombstoneSuffix)
+      .distinct(), table + IndexFamily.tombstoneSuffix, None)
     SearchOps.refreshProbeSessions(table + IndexFamily.tombstoneSuffix)
   }
 
@@ -185,6 +186,53 @@ object IndexFamily {
     t
   }
 
+  /** Appends `rows` to catalog table `table`, column by column name.
+    * An existing table is inserted into with the frame's columns put in
+    * the table's order, read from the catalog (no file listing); its
+    * partition columns and bucket spec come from the catalog too. A
+    * positional `insertInto` alone would silently swap columns of one
+    * type, such as the tombstones' `(doc_id, seq)`; a `saveAsTable`
+    * append lists the whole table again after the write, to build a
+    * relation nothing reads. A missing table is created by
+    * `saveAsTable`, under `bucketing` when given.
+    *
+    * A `bucketing` that differs from an existing table's spec, or a
+    * frame with another number of columns, is rejected with the
+    * `AnalysisException` a `saveAsTable` append raises, before anything
+    * is written: file groups under two bucket specs would misroute rows
+    * in a bucket-pruned scan or a bucketed join. */
+  private[graft] def appendByName(rows: DataFrame, table: String,
+      bucketing: Option[BucketSpec]): Unit = {
+    val catalog = rows.sparkSession.sessionState.catalog
+    val id = TableIdentifier(table)
+    if (!catalog.tableExists(id))
+      bucketed(rows.write.mode("append").format("parquet"), bucketing)
+        .saveAsTable(table)
+    else {
+      val meta = catalog.getTableMetadata(id)
+      if (bucketing.exists(b => !meta.bucketSpec.contains(b)))
+        throw new AnalysisException("_LEGACY_ERROR_TEMP_1164", Map(
+          "tableName" -> table,
+          "specifiedBucketString" -> bucketing.get.toString,
+          "existingBucketString" -> meta.bucketSpec.fold("none")(_.toString)))
+      if (rows.columns.length != meta.schema.length)
+        throw new AnalysisException("_LEGACY_ERROR_TEMP_1161", Map(
+          "tableName" -> table,
+          "existingTableSchema" -> meta.schema.catalogString,
+          "querySchema" -> rows.schema.catalogString))
+      rows.select(meta.schema.fieldNames.toSeq.map(col): _*)
+        .write.mode("append").insertInto(table)
+    }
+  }
+
+  // `write` bucketed and sorted by `spec`, or unchanged without one
+  private def bucketed(write: DataFrameWriter[Row],
+      spec: Option[BucketSpec]): DataFrameWriter[Row] =
+    spec.fold(write)(b => write
+      .bucketBy(b.numBuckets, b.bucketColumnNames.head,
+        b.bucketColumnNames.tail: _*)
+      .sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*))
+
   private val embeddingType = ArrayType(FloatType, containsNull = false)
 
   /** A row whose upsert comes from [[copyGeneration]], like every row's
@@ -260,12 +308,8 @@ object IndexFamily {
           if (parts.isEmpty) live else live.repartition(parts.map(col): _*)
         }
       val dir = if (t.isEmpty) "rows" else t.stripPrefix("_")
-      val write = copied.write.mode("overwrite").format("parquet")
-        .partitionBy(parts: _*)
-      meta.bucketSpec.fold(write)(b => write
-          .bucketBy(b.numBuckets, b.bucketColumnNames.head,
-            b.bucketColumnNames.tail: _*)
-          .sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*))
+      bucketed(copied.write.mode("overwrite").format("parquet")
+          .partitionBy(parts: _*), meta.bucketSpec)
         .option("path", s"$path/$dir").saveAsTable(dest + t)
     }
     if (drop.isEmpty)

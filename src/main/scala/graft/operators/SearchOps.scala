@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -154,18 +157,20 @@ object SearchOps {
     org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]()
 
   /** Invalidate `tables` in every live probe clone. The clones' relation
-    * cache is SearchOps-private — a caller can refresh its OWN session
+    * cache is SearchOps-private — a caller can invalidate its OWN session
     * after a cross-session write (standard Spark semantics) but cannot
     * reach these — so every maintenance op that mutates a table the
-    * probes read calls this after its write. Cost: one catalog refresh
-    * per clone per maintenance op (appends/deletes are batch-grained,
-    * probes are the hot path and pay nothing). */
+    * probes read calls this after its write. It only drops each clone's
+    * cached relation, so it lists nothing: the clone's next read of the
+    * table lists it once. `Catalog.refreshTable` would list it twice
+    * per clone on the writer's thread (resolving the table, then
+    * refreshing the plan) before invalidating it. Dropping the cached
+    * relation of a missing table is a no-op. */
   private[operators] def refreshProbeSessions(tables: String*): Unit =
     probeSessions.synchronized {
       probeSessions.values.forEach { ps =>
         tables.foreach(t =>
-          try ps.catalog.refreshTable(t)
-          catch { case _: AnalysisException => () }) // dropped/not-yet-created
+          ps.sessionState.catalog.refreshTable(TableIdentifier(t)))
       }
     }
 
@@ -212,16 +217,14 @@ object SearchOps {
     * spec, so each append is one more correctly-bucketed file group per
     * bucket; probes keep their bucket-pruned scan (per-bucket file
     * groups union at read time) and the indexed postings are never read
-    * or rewritten. `numBuckets` must equal the index's — Spark rejects
-    * a mismatched bucket spec on append. */
+    * or rewritten. `numBuckets` must equal the index's: a mismatched
+    * bucket spec is rejected before anything is written
+    * ([[IndexFamily.appendByName]]). */
   def appendToSearchIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, docs: DataFrame, idCol: String, textCol: String,
       numBuckets: Int = 8): Unit = {
-    invertedIndex(docs, idCol, textCol)
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "term")
-      .sortBy("term")
-      .saveAsTable(table)
+    IndexFamily.appendByName(invertedIndex(docs, idCol, textCol), table,
+      Some(BucketSpec(numBuckets, Seq("term"), Seq("term"))))
     refreshProbeSessions(table)
   }
 
@@ -254,21 +257,26 @@ object SearchOps {
     * [[appendToSearchIndex]]: newly-ingested documents contribute one
     * `(doc_id, dl)` row each, derived through the same `tokens()` the
     * postings append uses, so the sidecar can never drift from the
-    * index. Existing rows are never read or rewritten (each append is
-    * one more correctly-bucketed file group); corpus stats (N, Σdl)
-    * stay exact because they are aggregated from the sidecar at probe
-    * time. Without this, a BM25 probe after an index append would
-    * silently drop the new docs at the norms join — the conjunctive
-    * gate needs every candidate's length. */
+    * index. `dl` is the doc's token count (the Σ tf of its postings),
+    * summed over the rows that carry the id in one aggregate — one
+    * shuffle, no postings built; a doc without tokens (empty or NULL
+    * text) gets no row, as it gets no postings. Existing rows are never
+    * read or rewritten (each append is one more correctly-bucketed file
+    * group); corpus stats (N, Σdl) stay exact because they are
+    * aggregated from the sidecar at probe time. Without this, a BM25
+    * probe after an index append would silently drop the new docs at
+    * the norms join — the conjunctive gate needs every candidate's
+    * length. */
   def appendDocLengths(spark: org.apache.spark.sql.SparkSession,
       table: String, docs: DataFrame, idCol: String, textCol: String,
       numBuckets: Int = 8): Unit = {
-    invertedIndex(docs, idCol, textCol)
-      .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "doc_id")
-      .sortBy("doc_id")
-      .saveAsTable(s"${table}_doclens")
+    IndexFamily.appendByName(
+      docs.select(col(idCol).as("doc_id"),
+          TextOps.tokenCount(col(textCol)).as("n"))
+        .filter(col("n") > 0)
+        .groupBy(col("doc_id")).agg(sum(col("n")).as("dl")),
+      s"${table}_doclens",
+      Some(BucketSpec(numBuckets, Seq("doc_id"), Seq("doc_id"))))
     refreshProbeSessions(s"${table}_doclens")
   }
 

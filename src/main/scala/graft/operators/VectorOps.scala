@@ -291,12 +291,12 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     val d = mrlPrefixDims(spark, table)
     val cents = broadcast(spark.table(s"${table}_cents"))
-    assignLists(batch.select(col("vec_id"),
+    IndexFamily.appendByName(assignLists(batch.select(col("vec_id"),
         slice(col("embedding"), 1, d).as("embedding")), cents)
-      .select(col("vec_id"), col("embedding"), col("list_id"))
-      .write.mode("append").insertInto(s"${table}_prefix")
-    batch.select(col("vec_id"), col("embedding"))
-      .write.mode("append").insertInto(s"${table}_nodes")
+      .select(col("vec_id"), col("embedding").as("prefix"), col("list_id")),
+      s"${table}_prefix", None)
+    IndexFamily.appendByName(batch.select(col("vec_id"), col("embedding")),
+      s"${table}_nodes", None)
   }
 
   /** Probe a [[writeMrlIndex]] epoch — identical output to [[mrlTopK]]
@@ -871,9 +871,8 @@ object VectorOps {
       table: String, batch: DataFrame, m: Int = 8, dim: Int = 64): Unit = {
     graft.functions.GraftFunctions.register(spark)
     val cents = spark.table(s"${table}_codebooks")
-    pqEncode(batch, cents, m, dim)
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_codes")
+    IndexFamily.appendByName(pqEncode(batch, cents, m, dim),
+      s"${table}_codes", None)
   }
 
   /** Sign-pattern bucket of the first `bits` dimensions — an axis-aligned
@@ -1465,12 +1464,11 @@ object VectorOps {
       table: String, batch: DataFrame): Unit = {
     graft.functions.GraftFunctions.register(spark)
     val cents = broadcast(spark.table(s"${table}_cents"))
-    assignLists(batch, cents)
+    IndexFamily.appendByName(assignLists(batch, cents)
       .select(col("vec_id"),
         packSignBits(col("embedding"), 0, 32).as("hi"),
         packSignBits(col("embedding"), 32, 32).as("lo"),
-        col("list_id"))
-      .write.mode("append").insertInto(s"${table}_lists")
+        col("list_id")), s"${table}_lists", None)
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -1662,13 +1660,11 @@ object VectorOps {
     graft.functions.GraftFunctions.register(spark)
     val cents = broadcast(spark.table(s"${table}_cents"))
     val pcents = spark.table(s"${table}_codebooks")
-    // insertInto is positional: data columns first, partition column
-    // (list_id) last — the appendToIvfIndex convention
-    pqEncode(batch, pcents, m, dim)
+    IndexFamily.appendByName(pqEncode(batch, pcents, m, dim)
       .join(assignLists(batch, cents).select(col("vec_id"), col("list_id")),
         Seq("vec_id"))
-      .select(col("vec_id"), col("s"), col("cid"), col("list_id"))
-      .write.mode("append").insertInto(s"${table}_codes")
+      .select(col("vec_id"), col("s"), col("cid"), col("list_id")),
+      s"${table}_codes", None)
   }
 
   /** The residual frame behind `by_residual=true`: every vector minus
@@ -1818,10 +1814,10 @@ object VectorOps {
     val cents = spark.table(s"${table}_cents")
     val pcents = spark.table(s"${table}_codebooks")
     val rsd = residualCorpus(batch, broadcast(cents))
-    pqEncode(rsd, pcents, m, dim)
+    IndexFamily.appendByName(pqEncode(rsd, pcents, m, dim)
       .join(rsd.select(col("vec_id"), col("list_id")), Seq("vec_id"))
-      .select(col("vec_id"), col("s"), col("cid"), col("list_id"))
-      .write.mode("append").insertInto(s"${table}_codes")
+      .select(col("vec_id"), col("s"), col("cid"), col("list_id")),
+      s"${table}_codes", None)
   }
 
   /** Full requantization epoch for the IVF-PQ index — the remedy
@@ -2120,12 +2116,9 @@ object VectorOps {
       batch: DataFrame): Unit = {
     graft.functions.GraftFunctions.register(spark)
     val cents = broadcast(spark.table(s"${table}_cents"))
-    // insertInto is positional: the partitioned table's schema is
-    // (vec_id, embedding, list_id) — data columns first, partition
-    // column last
-    assignLists(batch, cents)
-      .select(col("vec_id"), col("embedding"), col("list_id"))
-      .write.mode("append").insertInto(s"${table}_lists")
+    IndexFamily.appendByName(assignLists(batch, cents)
+      .select(col("vec_id"), col("embedding"), col("list_id")),
+      s"${table}_lists", None)
   }
 
   /** [[appendToIvfIndex]] for a [[writeIvfIndexSq8]] table: same frozen
@@ -2134,9 +2127,10 @@ object VectorOps {
       batch: DataFrame): Unit = {
     graft.functions.GraftFunctions.register(spark)
     val cents = broadcast(spark.table(s"${table}_cents"))
-    withQuantized(assignLists(batch, cents), "embedding", "qe")
-      .select(col("vec_id"), col("qe"), col("list_id"))
-      .write.mode("append").insertInto(s"${table}_lists")
+    IndexFamily.appendByName(
+      withQuantized(assignLists(batch, cents), "embedding", "qe")
+        .select(col("vec_id"), col("qe"), col("list_id")),
+      s"${table}_lists", None)
   }
 
   /** Embedding near-dup pairs: cosine above `threshold` within a bucket

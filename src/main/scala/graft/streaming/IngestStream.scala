@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{IndexFamily, PipelineOps}
 
@@ -80,9 +82,9 @@ object IngestStream {
       once(spark, table, batchId) {
         import org.apache.spark.sql.functions.col
         import spark.implicits._
-        decode(batch.select(col("media_id"), col("media_type"), col("media"))
-            .as[graft.operators.Multimodal.MediaRow])
-          .write.mode("append").format("parquet").saveAsTable(table)
+        IndexFamily.appendByName(
+          decode(batch.select(col("media_id"), col("media_type"), col("media"))
+            .as[graft.operators.Multimodal.MediaRow]), table, None)
       }
     }
 
@@ -141,10 +143,13 @@ object IngestStream {
     * Visibility: appends run in the stream's micro-batch session, which
     * refreshes ITS OWN catalog relation cache — a DIFFERENT session
     * that already scanned the index keeps its cached file listing until
-    * `spark.catalog.refreshTable` (standard Spark cross-session
-    * semantics; a first read after the drain is always fresh). The
-    * sink's own ledger reads are refresh-safe — same session writes,
-    * same session reads. */
+    * it drops it (standard Spark cross-session semantics; a first read
+    * after the drain is always fresh). Dropping it is
+    * `sessionState.catalog.refreshTable(TableIdentifier(t))`, which
+    * lists nothing; `spark.catalog.refreshTable` also works but lists
+    * the table twice before dropping it. The search probe clones and
+    * the settle drop theirs themselves. The sink's own ledger reads are
+    * refresh-safe — same session writes, same session reads. */
   def searchIndexSink(docStream: DataFrame, table: String,
       checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -275,10 +280,10 @@ object IngestStream {
         // the same id (insert rows whose id was never tombstoned cost
         // the settle nothing — their immediately-appended rows simply
         // survive the generation copy untouched)
-        () => batch.filter(col("statement").isin("INSERT", "UPDATE"))
-          .select(id, payload, seq.as("seq"), col("statement"))
-          .write.mode("append").format("parquet")
-          .saveAsTable(s"${table}_pending"))
+        () => IndexFamily.appendByName(
+          batch.filter(col("statement").isin("INSERT", "UPDATE"))
+            .select(id, payload, seq.as("seq"), col("statement")),
+          s"${table}_pending", None))
     }
 
   /** The generation boundary of the CDC maintenance loop: per id, the
@@ -298,10 +303,12 @@ object IngestStream {
     *    immediately-appended rows simply survive the copy (graph: walked
     *    here, [[IndexFamily.reingestInserts]]).
     *
-    * The family's tables and sidecars are refreshed first: a
-    * long-running sink appends from the stream's own (cloned) session,
-    * and a settle from a session that already scanned them would read
-    * stale file listings — missing recent tombstones and pending rows.
+    * The family's tables and sidecars are invalidated in `spark` first:
+    * a long-running sink appends from the stream's own (cloned)
+    * session, and a settle from a session that already scanned them
+    * would read stale file listings — missing recent tombstones and
+    * pending rows. Invalidating lists nothing; the settle's reads list
+    * each table once.
     *
     * With nothing pending the settle degenerates to a tombstone-settling
     * compaction. The source generation (and its pending/tombstone
@@ -312,8 +319,8 @@ object IngestStream {
   def settleFamilyUpserts(spark: org.apache.spark.sql.SparkSession,
       family: IndexFamily, src: String, dest: String,
       paths: Seq[String]): Unit = {
-    (family.tables ++ IndexFamily.sidecars).map(src + _)
-      .filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
+    (family.tables ++ IndexFamily.sidecars).foreach(t =>
+      spark.sessionState.catalog.refreshTable(TableIdentifier(src + t)))
     family.upsert(spark, src, dest, paths, settleWinners(spark, family, src))
   }
 
@@ -684,15 +691,13 @@ object IngestStream {
         val genAfter = gen + (if (fired) 1L else 0L)
         // the corpus append precedes the retrain: a decided retrain must
         // see the batch that tripped it
-        incoming.write.mode("append").format("parquet")
-          .saveAsTable(s"${base}_corpus")
-        verdict.toSeq
+        IndexFamily.appendByName(incoming, s"${base}_corpus", None)
+        IndexFamily.appendByName(verdict.toSeq
           .map(r => (wave, r.getString(0), r.getLong(1), r.getLong(2),
             r.getLong(3), r.getLong(4), r.getBoolean(5), gen, genAfter))
           .toDF("wave", "feature", "n_ref", "n_cur", "n_buckets",
-            "psi_ppm", "retrain_needed", "gen_before", "gen_after")
-          .write.mode("append").format("parquet")
-          .saveAsTable(s"${base}_decisions")
+            "psi_ppm", "retrain_needed", "gen_before", "gen_after"),
+          s"${base}_decisions", None)
         if (fired) {
           val union = baseDocs.select(col("doc_id"), col("text"),
               col("n_chars"))
@@ -714,8 +719,8 @@ object IngestStream {
             .toSeq
           Classifier.refHistogram(feats, nextEdges)
             .write.format("parquet").saveAsTable(s"${next}_hist")
-          Seq(genAfter).toDF("gen").write.mode("append").format("parquet")
-            .saveAsTable(s"${base}_gens")
+          IndexFamily.appendByName(Seq(genAfter).toDF("gen"),
+            s"${base}_gens", None)
           Generations.publishPointer(spark, s"${base}_serving", next,
             suffixes = Seq("", "_bins", "_hist"))
         }
@@ -775,13 +780,10 @@ object IngestStream {
         // score the wave against the post-merge model
         val lam = PipelineOps.dsirLambda(spark.table(s"${base}_tcounts"),
           rcounts)
-        PipelineOps.dsirScore(wdc, lam, "doc_id")
+        IndexFamily.appendByName(PipelineOps.dsirScore(wdc, lam, "doc_id")
           .select(lit(wave).as("wave"), col("doc_id"), col("n_feats"),
-            col("logw"))
-          .write.mode("append").format("parquet")
-          .saveAsTable(s"${base}_scores")
-        docs.write.mode("append").format("parquet")
-          .saveAsTable(s"${base}_corpus")
+            col("logw")), s"${base}_scores", None)
+        IndexFamily.appendByName(docs, s"${base}_corpus", None)
         wdc.unpersist()
       }
     }
@@ -807,9 +809,8 @@ object IngestStream {
     if (!appliedSetFor(spark, ledger).contains(batchId)) {
       body
       import spark.implicits._
-      Seq(batchId).toDF("batch_id")
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${ledger}_applied")
+      IndexFamily.appendByName(Seq(batchId).toDF("batch_id"),
+        s"${ledger}_applied", None)
       appliedSetFor(spark, ledger).add(batchId)
     }
 }
