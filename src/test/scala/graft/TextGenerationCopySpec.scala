@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, IndexFamily, SearchOps}
 
-/** Pins what the search and band rows' three generation copies write —
-  * `cloneTo`, `compact` and `upsert` — on one small deterministic
+/** Pins what the search and band rows' four generation copies write —
+  * `cloneTo`, `compact`, `upsert` and a re-shard under twice the bucket
+  * count — on one small deterministic
   * fixture: a bucketed base generation, an appended file group, and
   * three tombstoned ids (one of them appended). For every table of each
   * destination generation the literal holds a hash of its sorted rows,
@@ -70,14 +71,16 @@ class TextGenerationCopySpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("graft_text_copy_pin_").toString
 
   /** Builds the fixture's source generation with `write` (handed a
-    * maker of fresh directories), then runs the three copies, each in
-    * fresh directories (`upsertPaths` of them for the upsert). */
+    * maker of fresh directories), then runs the four copies, each in
+    * fresh directories (`upsertPaths` of them for the upsert); `reshard`
+    * copies a source generation to a destination. */
   private def check(name: String, family: IndexFamily,
       write: (DataFrame, String, () => String) => Unit, upsertPaths: Int,
+      reshard: (String, String, () => String) => Unit,
       expected: Map[String, String]): Unit = test(
       s"$name: clone, compact and upsert write the pinned generations") {
     val id = tag()
-    val names = Seq("src", "clone", "compact", "upsert")
+    val names = Seq("src", "clone", "compact", "upsert", "reshard")
       .map(g => g -> s"graft_text_copy_pin_${name}_${g}_$id").toMap
     val dirs = collection.mutable.Buffer.empty[String]
     def dir(): String = { val d = tmp(); dirs += d; d }
@@ -90,7 +93,8 @@ class TextGenerationCopySpec extends AnyFunSuite {
       family.compact(spark, src, names("compact"), dir())
       family.upsert(spark, src, names("upsert"),
         Seq.fill(upsertPaths)(dir()), incoming)
-      val got = Seq("clone", "compact", "upsert")
+      reshard(src, names("reshard"), () => dir())
+      val got = Seq("clone", "compact", "upsert", "reshard")
         .map(g => g -> layout(names(g), family.tables)).toMap
       assert(got == expected,
         "\n" + got.toSeq.sorted.map { case (g, l) => s"$g: $l" }
@@ -109,6 +113,8 @@ class TextGenerationCopySpec extends AnyFunSuite {
         numBuckets = 8)
       SearchOps.writeDocLengths(spark, t, dir(), numBuckets = 8)
     }, upsertPaths = 2,
+    (src, dest, dir) => SearchOps.reshardSearchIndex(spark, src, dest, dir(),
+      dir(), newNumBuckets = 16),
     Map(
       "clone" ->
         ("=28b16a2f69a8a0bc/8:term:term/ " +
@@ -119,18 +125,24 @@ class TextGenerationCopySpec extends AnyFunSuite {
         "_doclens=5edd9befc56fc3ed/8:doc_id:doc_id/"),
       "upsert" ->
         ("=94c4abbc3f2268f6/8:term:term/ " +
-        "_doclens=ba19fc4932d16377/8:doc_id:doc_id/")))
+        "_doclens=ba19fc4932d16377/8:doc_id:doc_id/"),
+      "reshard" ->
+        ("=b6784e77e7dc8032/16:term:term/ " +
+        "_doclens=5edd9befc56fc3ed/16:doc_id:doc_id/")))
 
   check("band", IndexFamily.band(32),
     (docs, t, dir) => Dedup.writeBandIndex(docs, "doc_id", "text", t, dir(),
       numBuckets = 32),
     upsertPaths = 1,
+    (src, dest, dir) => Dedup.reshardBandIndex(spark, src, dest, dir(),
+      newNumBuckets = 64),
     Map(
       "clone" ->
         ("=d5924c357145ad05/32:band,bkey:band,bkey/ " +
         "_tombstones=21a48de9f6ee142e//"),
       "compact" -> "=8f664aa44db1110d/32:band,bkey:band,bkey/",
-      "upsert" -> "=59c3fa25df6a47ec/32:band,bkey:band,bkey/"))
+      "upsert" -> "=59c3fa25df6a47ec/32:band,bkey:band,bkey/",
+      "reshard" -> "=8f664aa44db1110d/64:band,bkey:band,bkey/"))
 
   test("one delete appends the pinned tombstone rows, with and without seq") {
     val got = Seq("ivf" -> IndexFamily.ivf, "search" -> IndexFamily.search(8),
