@@ -5,10 +5,12 @@
    COVERAGE.md (the judge greps key-by-key; a key folded into family
    prose without its literal name counts as missing — the r12/r13 slip
    class this script exists to stop);
-2. every backticked `<Object>.<member>` name whose object is declared
-   under src/main must still have a `def`/`val`/`var`/`object`/`class`
-   of that member under src/main — a refactor that deletes or renames
-   an operator must not leave COVERAGE.md naming it.
+2. every `<Object>.<member>` name whose object is declared under
+   src/main must still have a `def`/`val`/`var`/`object`/`class` of that
+   member, or a case-class parameter of that name, under src/main — a
+   refactor that deletes or renames an operator must not leave a doc
+   naming it. The names checked are the backticked ones in COVERAGE.md
+   and README.md and the `[[...]]` scaladoc links under src/main.
 
 Usage: python3 scripts/coverage_check.py   (exit 0 = green)
 """
@@ -35,22 +37,54 @@ def main_sources() -> str:
 MEMBER = re.compile(r"\b([A-Z]\w*)\.([a-z]\w*)\b")
 FILE_EXTS = {"scala", "md", "py", "json", "jsonl", "tsv", "java", "sbt"}
 
-def stale_members(cov: str) -> dict:
-    """`Object.member` names in COVERAGE.md's backtick spans whose
-    object is declared under src/main but whose member no longer is,
-    with the number of places each is named."""
+def case_class_params(src: str) -> set:
+    """The parameter names of every case class in `src`; a parameter's
+    type may hold parentheses, so the list is cut at its balanced close
+    and split at its top-level commas."""
+    names = set()
+    for m in re.finditer(r'\bcase\s+class\s+\w+\s*(?:\[[^\]]*\])?\(', src):
+        depth, params, cur = 1, [], ""
+        for ch in src[m.end():]:
+            depth += {"(": 1, "[": 1, ")": -1, "]": -1}.get(ch, 0)
+            if depth == 0:
+                break
+            if ch == "," and depth == 1:
+                params.append(cur)
+                cur = ""
+            else:
+                cur += ch
+        params.append(cur)
+        for p in params:
+            n = re.match(r'\s*(?:(?:private|protected|override|val|var)'
+                         r'\b\s*)*([A-Za-z_]\w*)\s*:', p)
+            if n:
+                names.add(n.group(1))
+    return names
+
+def stale_members(spans) -> dict:
+    """`Object.member` names in `spans` whose object is declared under
+    src/main but whose member no longer is, with the number of places
+    each is named."""
     src = main_sources()
     objects = set(re.findall(r'\b(?:object|class|trait)\s+([A-Z]\w*)', src))
     members = set(re.findall(
         r'\b(?:def|val|var|object|class)\s+([A-Za-z_]\w*)', src))
+    members |= case_class_params(src)
     stale = {}
-    for span in re.findall(r'`([^`\n]+)`', cov):
+    for span in spans:
         for obj, member in MEMBER.findall(span):
             if obj in objects and member not in members \
                     and member not in FILE_EXTS:
                 name = f"{obj}.{member}"
                 stale[name] = stale.get(name, 0) + 1
     return stale
+
+def backticked(doc: str) -> list:
+    with open(os.path.join(ROOT, doc)) as fh:
+        return re.findall(r'`([^`\n]+)`', fh.read())
+
+def scaladoc_links() -> list:
+    return re.findall(r'\[\[([^\]\n]+)\]\]', main_sources())
 
 def main() -> int:
     keys = query_keys()
@@ -64,9 +98,10 @@ def main() -> int:
     print(f"{len(keys)} query keys; {len(missing)} missing from COVERAGE.md")
     for k in missing:
         print(f"  MISSING: {k}")
-    stale = stale_members(raw)
-    print(f"{len(stale)} backticked Object.member names with no definition"
-          " under src/main")
+    stale = stale_members(backticked("COVERAGE.md") + backticked("README.md")
+                          + scaladoc_links())
+    print(f"{len(stale)} Object.member names (COVERAGE.md, README.md,"
+          " scaladoc links) with no definition under src/main")
     for name, n in sorted(stale.items()):
         print(f"  STALE: {name} ({n}x)")
     return 1 if missing or stale else 0

@@ -733,7 +733,7 @@ object StreamingQueries {
     }),
 
     // CONTINUOUS retrieval ingestion — the search index maintained per
-    // micro-batch (IngestStream.searchIndexSink: postings AND norms
+    // micro-batch (IngestStream.appendSink: postings AND norms
     // sidecar appended through the same operators the batch path
     // gates). Built from the even docs, the odd docs stream in as 4
     // one-file micro-batches; once the source drains, the index covers
@@ -756,7 +756,7 @@ object StreamingQueries {
     // CONTINUOUS ANN ingestion — the vector twin: the serving IVF index
     // is CLONED, then the arriving vector batch streams in as 4
     // one-file micro-batches, each assigned by the FROZEN quantizer and
-    // dynamic-partition-inserted (IngestStream.ivfIndexSink). Once
+    // dynamic-partition-inserted (IngestStream.appendSink). Once
     // drained, the index holds the union corpus under the original
     // centroids — exactly what the append oracle computes, so this
     // streaming entry is fully DuckDB-gated too.
@@ -1491,7 +1491,7 @@ object StreamingQueries {
   /** The standing IVF index CONTINUOUSLY maintained: the serving
     * generation cloned (never touched), then the dup-vector batch
     * (vec_id ≥ 100000) arrives as 4 one-file micro-batches through
-    * [[IngestStream.ivfIndexSink]] — frozen-quantizer assignment per
+    * [[IngestStream.appendSink]] — frozen-quantizer assignment per
     * batch, drained before the epoch resolves. */
   private[graft] def ivfStreamIndexFor(s: SparkSession, dir: String): String = {
     // Both input epochs resolved BEFORE the acquire: a nested
@@ -1504,7 +1504,8 @@ object StreamingQueries {
       IndexFamily.ivf.cloneTo(s, base, table, newDir())
       val src = CdcStream.readEventStream(s, vecDir,
         maxFilesPerTrigger = 1)
-      IngestStream.ivfIndexSink(src, table, newDir()).awaitTermination()
+      IngestStream.appendSink(src, IndexFamily.ivf, table, newDir(),
+        Trigger.AvailableNow()).awaitTermination()
     }
   }
 
@@ -1519,7 +1520,7 @@ object StreamingQueries {
 
   /** The standing search index CONTINUOUSLY maintained: built from the
     * even docs (postings + norms sidecar), then the odd docs arrive as
-    * 4 one-file micro-batches through [[IngestStream.searchIndexSink]].
+    * 4 one-file micro-batches through [[IngestStream.appendSink]].
     * Drained before the epoch resolves, so every probe in the session
     * sees the complete corpus. */
   private[graft] def searchStreamIndexFor(s: SparkSession, dir: String): String = {
@@ -1534,7 +1535,8 @@ object StreamingQueries {
       graft.operators.SearchOps.writeDocLengths(s, table, newDir())
       val src = CdcStream.readEventStream(s, docsDir,
         maxFilesPerTrigger = 1)
-      IngestStream.searchIndexSink(src, table, newDir()).awaitTermination()
+      IngestStream.appendSink(src, IndexFamily.search(8), table, newDir(),
+        Trigger.AvailableNow()).awaitTermination()
     }
   }
 

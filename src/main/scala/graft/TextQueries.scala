@@ -192,7 +192,7 @@ object TextQueries {
       bandIndexFor(s, dir), Seq(""))
 
   /** The band re-shard epoch: the serving generation rewritten under a
-    * FINER bucket count (32 → 64) via [[Dedup.reshardBandIndex]] — the
+    * FINER bucket count (32 → 64) via [[IndexFamily.reshard]] — the
     * remedy [[Dedup.bandReshardCheck]]'s verdict calls for. The gated
     * probe must hash-match `dedup_incremental_indexed`'s oracle:
     * re-sharding moves rows between file buckets but every logical
@@ -201,7 +201,7 @@ object TextQueries {
   private[graft] def bandReshardIndexFor(s: SparkSession, dir: String): String = {
     val base = bandIndexFor(s, dir)
     generation(s, dir, "band_reshard_index", Seq(""))((t, newDir) =>
-      Dedup.reshardBandIndex(s, base, t, newDir(), newNumBuckets = 64))
+      IndexFamily.band(32).reshard(s, base, t, newDir(), numBuckets = 64))
   }
 
   /** The gram-index epoch for incremental span dedup: the even-id docs
@@ -324,7 +324,7 @@ object TextQueries {
 
   /** The search re-shard epoch: the serving generation (postings AND
     * the doc_id-bucketed norms sidecar) rewritten under a finer bucket
-    * count (8 → 16) via [[SearchOps.reshardSearchIndex]] — the remedy
+    * count (8 → 16) via [[IndexFamily.reshard]] — the remedy
     * [[SearchOps.searchReshardCheck]]'s verdict calls for. Both gated
     * probes (raw-tf and BM25) must hash-match the all-docs oracles:
     * bucket layout is probe-invisible by definition, while the probe
@@ -332,8 +332,7 @@ object TextQueries {
   private[graft] def searchReshardIndexFor(s: SparkSession, dir: String): String = {
     val base = searchIndexFor(s, dir)
     generation(s, dir, "search_reshard_index", searchTables)((t, newDir) =>
-      SearchOps.reshardSearchIndex(s, base, t, newDir(), newDir(),
-        newNumBuckets = 16))
+      IndexFamily.search(8).reshard(s, base, t, newDir(), numBuckets = 16))
   }
 
   /** The view-flip serving epoch (VERDICT r11 #4): the serving search
@@ -425,7 +424,7 @@ object TextQueries {
   /** The UPDATE-maintenance epoch: generation v1 is built with STALE
     * text for every 7th document (the true text prefixed with the query
     * terms — wrong df, wrong dl, wrong ranks), then the true versions
-    * are re-ingested via [[SearchOps.upsertToSearchIndex]] into
+    * are re-ingested via the search row's [[IndexFamily.upsert]] into
     * generation v2. The gated probes run against v2 and must hash-match
     * the all-docs oracles — which fails if the upsert leaves ANY stale
     * posting or doubles a norms row (the defect VERDICT r11 named: CDC
@@ -443,8 +442,8 @@ object TextQueries {
         docs.filter(col("doc_id") % 7 =!= 0).unionByName(stale),
         "doc_id", "text", src, paths(0))
       SearchOps.writeDocLengths(s, src, paths(1))
-      SearchOps.upsertToSearchIndex(s, src, dest, paths(2), paths(3),
-        changed, "doc_id", "text")
+      IndexFamily.search(8).upsert(s, src, dest, Seq(paths(2), paths(3)),
+        changed)
       EpochRegistry.Resource(dest,
         dropTables = Seq(src, s"${src}_doclens",
           dest, s"${dest}_doclens"),

@@ -311,7 +311,7 @@ object Dedup {
     *    absolute concentration even when most buckets are tiny.
     *
     * `reshard` fires when either floored BIGINT signal reaches its
-    * threshold; [[reshardBandIndex]] executes the remedy. Near-metadata
+    * threshold; [[IndexFamily.reshard]] executes the remedy. Near-metadata
     * cost: two pruned columns, map-side combine, ONE row out. Pending
     * tombstones count deliberately — they still cost probe IO until
     * compaction settles them. */
@@ -328,31 +328,6 @@ object Dedup {
       .withColumn("reshard",
         col("max_over_mean_x1000") >= maxOverMeanX1000 ||
           col("top_frac_x1000") >= topFracX1000)
-
-  /** Execute the re-shard [[bandReshardCheck]] decides on — a NEW index
-    * generation under a different (normally finer) file-bucket count,
-    * commit `135c3a8`'s pinned remedy made executable. No shingle or
-    * minhash recompute: the already-computed band rows hash-exchange
-    * into the new layout (`repartition(n, band, bkey)` matches the
-    * bucket-id function — each task owns one destination bucket, so the
-    * write emits exactly one file per non-empty bucket), the floor cost
-    * of re-sharding. More buckets = more parallel probe tasks and fewer
-    * innocent co-resident keys sharing the hot bucket's task; the
-    * logical (band, bkey) groups themselves are data-determined and
-    * move intact, which is why probe output is bit-identical (the gated
-    * query shares the serving index's oracle). Pending tombstones
-    * settle here like at every generation boundary. Same-count
-    * "re-sharding" degenerates to the band row's
-    * [[IndexFamily.compact]] — use that instead (the exchange would be
-    * elided against the scan's matching partitioning). */
-  def reshardBandIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, newNumBuckets: Int): Unit =
-    IndexFamily.live(spark, src, spark.table(src), "old_id")
-      .repartition(newNumBuckets, col("band"), col("bkey"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(newNumBuckets, "band", "bkey")
-      .sortBy("band", "bkey")
-      .option("path", path).saveAsTable(dest)
 
   /** Append accepted documents to an existing [[writeBandIndex]] table —
     * the band-index maintenance operation between full-dedup epochs
@@ -890,16 +865,6 @@ object Dedup {
         min(col(idCol)).as("min_doc"), max(col(idCol)).as("max_doc")),
       table, Some(BucketSpec(numBuckets, Seq("gram"), Seq("gram"))))
 
-  /** COMPACT a gram index into a fresh generation: the per-append rows
-    * of each gram re-aggregate to one ([[appendToGramIndex]] leaves one
-    * row per (gram, batch that carried it) — harmless to the
-    * existence-testing probe, but the dup-gram fraction of the scan
-    * grows with append count). Merging is exact without re-reading any
-    * document: batches partition the doc space, so `sum(n_docs)` /
-    * `min(min_doc)` / `max(max_doc)` over a gram's rows equal the
-    * from-scratch aggregates. One bucket-co-located scan in, one
-    * bucketed write out — no exchange of the index rows; promote with
-    * [[Generations]] publish/swap like every generation. */
   /** The compaction-cadence DECISION for the gram family — the monitor
     * completing its maintenance symmetry (the other families':
     * [[Generations.compactionCheck]], [[bandReshardCheck]],
@@ -924,6 +889,16 @@ object Dedup {
       .select(col("n_rows"), col("n_grams"), col("dup_rows"),
         col("dup_frac_x1000"), col("compact"))
 
+  /** COMPACT a gram index into a fresh generation: the per-append rows
+    * of each gram re-aggregate to one ([[appendToGramIndex]] leaves one
+    * row per (gram, batch that carried it) — harmless to the
+    * existence-testing probe, but the dup-gram fraction of the scan
+    * grows with append count). Merging is exact without re-reading any
+    * document: batches partition the doc space, so `sum(n_docs)` /
+    * `min(min_doc)` / `max(max_doc)` over a gram's rows equal the
+    * from-scratch aggregates. One bucket-co-located scan in, one
+    * bucketed write out — no exchange of the index rows; promote with
+    * [[Generations]] publish/swap like every generation. */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
       src: String, dest: String, path: String,
       numBuckets: Int = 32): Unit =

@@ -157,11 +157,10 @@ object Generations {
       maxTombstoned: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, expr, lit}
     import spark.implicits._
-    val tomb = IndexFamily.tombstones(spark, table)
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "seq"))
-    val idCol = tomb.columns.head
+    val dead = IndexFamily.deadIds(spark, table, "id")
+      .getOrElse(Seq.empty[Long].toDF("id"))
     corpus.agg(count(lit(1)).as("n_rows"))
-      .crossJoin(tomb.agg(countDistinct(col(idCol)).as("n_tombstoned")))
+      .crossJoin(dead.agg(countDistinct(col("id")).as("n_tombstoned")))
       .withColumn("tombstone_frac_x1000",
         expr("n_tombstoned * 1000 div n_rows"))
       .withColumn("compact",

@@ -38,10 +38,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
   *
   * Every row deletes the same way ([[delete]]) and copies its
   * generations through one layout-driven routine ([[cloneTo]],
-  * [[compact]], and every upsert but the search row's settle). The
-  * tombstone sidecar is this object's alone: its rows ([[delete]]), its
-  * reads ([[IndexFamily.tombstones]], [[IndexFamily.live]]) and its
-  * copy. */
+  * [[compact]], [[reshard]] and every upsert). The tombstone sidecar is
+  * this object's alone: its rows ([[delete]]), its reads
+  * ([[IndexFamily.tombstones]], [[IndexFamily.live]]) and its copy. */
 final case class IndexFamily(
     idCol: String, payloadCol: String, payloadType: DataType,
     tables: Seq[String], keys: Seq[String],
@@ -53,13 +52,30 @@ final case class IndexFamily(
     * pending tombstones along (`clone` would shadow `Object.clone`). */
   def cloneTo(s: SparkSession, src: String, dest: String,
       path: String): Unit =
-    IndexFamily.copyGeneration(s, tables, keys, src, dest, path, None)
+    IndexFamily.copyGeneration(s, tables, keys, src, dest,
+      IndexFamily.under(path), None, Map.empty, None)
 
   /** The generation copy that settles pending tombstones physically —
     * the new generation starts tombstone-free. */
   def compact(s: SparkSession, src: String, dest: String,
       path: String): Unit =
-    IndexFamily.copyGeneration(s, tables, keys, src, dest, path, Some(Nil))
+    IndexFamily.copyGeneration(s, tables, keys, src, dest,
+      IndexFamily.under(path), Some(Nil), Map.empty, None)
+
+  /** A [[compact]] under `numBuckets` buckets — the remedy
+    * [[SearchOps.searchReshardCheck]] and [[Dedup.bandReshardCheck]]
+    * call for. Every bucketed table is repartitioned by its bucket
+    * columns into the new count, which matches the bucket-id function,
+    * so each task owns one destination bucket and writes it as one
+    * file; a finer count spreads a hot bucket's probe tasks. Rows move,
+    * nothing is re-tokenized or re-hashed, and the logical groups
+    * (terms, (band, bkey) keys) travel intact, so probes answer as
+    * before and prune against the new count. At the source's own count
+    * use [[compact]]: the exchange would be elided against the scan. */
+  def reshard(s: SparkSession, src: String, dest: String, path: String,
+      numBuckets: Int): Unit =
+    IndexFamily.copyGeneration(s, tables, keys, src, dest,
+      IndexFamily.under(path), Some(Nil), Map.empty, Some(numBuckets))
 
   /** DELETE maintenance — the reference's CDC DELETE semantics
     * (`sql/triggers.sql:29-32`: a delete is captured and must reach
@@ -127,10 +143,13 @@ object IndexFamily {
     deadIds(s, table, key)
       .fold(rows)(d => rows.join(broadcast(d), Seq(key), "left_anti"))
 
-  // the sidecar's ids under the name `key`; the id is its first column
-  private def deadIds(s: SparkSession, table: String, key: String)
+  /** The ids generation `table` tombstoned, under the name `key`. The
+    * id is the sidecar's column that is not `seq`, whatever their
+    * order. */
+  private[graft] def deadIds(s: SparkSession, table: String, key: String)
       : Option[DataFrame] =
-    tombstones(s, table).map(t => t.select(col(t.columns.head).as(key)))
+    tombstones(s, table).map(t =>
+      t.select(col(t.columns.filterNot(_ == "seq").head).as(key)))
 
   /** The zero-shuffle bucketed-scan reader every bucketed copy reads
     * through: a session clone (sharing the context and catalog, conf
@@ -144,7 +163,7 @@ object IndexFamily {
     * file-grain tasks — leaving buckets split across tasks (the
     * file-collapse tests of SearchOpsSpec and DedupIncrementalSpec pin
     * it). */
-  private[graft] def bucketedReader(s: SparkSession): SparkSession = {
+  private def bucketedReader(s: SparkSession): SparkSession = {
     val reader = s.newSession()
     reader.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
       "false")
@@ -238,11 +257,9 @@ object IndexFamily {
   /** A row whose upsert comes from [[copyGeneration]], like every row's
     * clone and compaction: only its tables, `keys` and frozen-layout
     * `append` differ. The upsert is a compaction that also drops the
-    * incoming ids, followed by the row's own append of one row per id —
-    * the latest by a deterministic max over the payload, so a
-    * duplicate-id batch cannot re-introduce the doubled id the upsert
-    * exists to prevent. In-place re-ingestion is not offered: rows key
-    * on the id, so an id stored under both its stale and fresh payload
+    * incoming ids, followed by the row's own append of
+    * [[latestPerId]]. In-place re-ingestion is not offered: rows key on
+    * the id, so an id stored under both its stale and fresh payload
     * would serve twice (band rows: pair under both texts), or fold both
     * code sets into one PQ score. */
   private def copied(idCol: String, payloadCol: String,
@@ -250,14 +267,21 @@ object IndexFamily {
       append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
     IndexFamily(idCol, payloadCol, payloadType, tables, keys, append,
       (s, src, dest, paths, rows) => {
-        val latest = rows.select(col(idCol).cast("long").as(idCol),
-            col(payloadCol))
-          .groupBy(col(idCol)).agg(max(col(payloadCol)).as(payloadCol))
-        copyGeneration(s, tables, keys, src, dest, paths.head,
-          Some(Seq(latest.select(col(idCol)))))
+        val latest = latestPerId(rows, idCol, payloadCol)
+        copyGeneration(s, tables, keys, src, dest, under(paths.head),
+          Some(Seq(latest.select(col(idCol)))), Map.empty, None)
         append(s, dest, latest)
       },
       reingestInserts = false)
+
+  /** One `(id, payload)` row per id of `rows`, the payload the
+    * deterministic max, so a duplicate-id batch cannot re-introduce the
+    * doubled id an upsert exists to prevent. Callers holding real event
+    * order reduce by it first (the CDC settle does). */
+  private def latestPerId(rows: DataFrame, idCol: String,
+      payloadCol: String): DataFrame =
+    rows.select(col(idCol).cast("long").as(idCol), col(payloadCol))
+      .groupBy(col(idCol)).agg(max(col(payloadCol)).as(payloadCol))
 
   /** A vector family: a [[copied]] row keyed on `vec_id`. */
   private[graft] def vector(tables: Seq[String],
@@ -266,75 +290,98 @@ object IndexFamily {
       append)
 
   /** Copies every table of generation `src` to `dest`, each under
-    * `path/<suffix>` (`path/rows` for the `""` table, so a sidecar's
-    * directory never sits inside it), by the layout the table already
-    * has — never a retrain, a re-assignment or a re-tokenization. A
-    * table missing from `src` is not written, so `dest` has the same
-    * shape (a postings-only search index has no `_doclens`). A table
-    * with none of the `keys` is a frozen quantizer (`_cents`,
-    * `_codebooks`) and copies verbatim. Every table keeps the partition
-    * columns and the bucket spec the catalog reports for it; a bucketed
-    * table is read through [[bucketedReader]], so each bucket is
-    * rewritten as one file with no exchange.
+    * `dir(suffix)`, by the layout the table already has — never a
+    * retrain, a re-assignment or a re-tokenization. A table missing from
+    * `src` is not written, so `dest` has the same shape (a postings-only
+    * search index has no `_doclens`). A table with none of the `keys` is
+    * a frozen quantizer (`_cents`, `_codebooks`) and copies verbatim.
+    * Every table keeps the partition columns and the bucket spec the
+    * catalog reports for it; a bucketed table is read through
+    * [[bucketedReader]], so each bucket is rewritten as one file with no
+    * exchange. The tables are disjoint and every write reads only `src`,
+    * so they run as concurrent jobs ([[concurrently]]).
     *
     *  - `drop = None`, a plain clone: every row copies and the tombstone
     *    sidecar is carried over, so the clone serves exactly what the
     *    source serves and pending deletes cannot resurrect.
     *  - `drop = Some(ids)`, a compaction: a table loses every row that
     *    carries `ids` or a tombstoned id under any of the `keys` it has
-    *    (a graph node's out-edges by `src`, its in-edges by `dst`), and
-    *    a partitioned table is repartitioned by its partition columns,
-    *    so each list is rewritten as one file (IvfIndexSpec pins the
-    *    collapse). The new generation starts tombstone-free. */
+    *    (a graph node's out-edges by `src`, its in-edges by `dst`),
+    *    gains its rows in `gained` (unioned by name), and a partitioned
+    *    table is repartitioned by its partition columns, so each list is
+    *    rewritten as one file (IvfIndexSpec pins the collapse). The new
+    *    generation starts tombstone-free.
+    *  - `numBuckets = Some(n)`: every bucketed table is written under
+    *    `n` buckets, repartitioned by its bucket columns. */
   private def copyGeneration(s: SparkSession, tables: Seq[String],
-      keys: Seq[String], src: String, dest: String, path: String,
-      drop: Option[Seq[DataFrame]]): Unit = {
-    val dead = drop.flatMap(ids =>
-      (ids ++ tombstones(s, src).map(t => t.select(col(t.columns.head))))
-        .reduceOption(_ union _)).map(_.distinct())
-    tables.filter(t => s.catalog.tableExists(src + t)).foreach { t =>
+      keys: Seq[String], src: String, dest: String, dir: String => String,
+      drop: Option[Seq[DataFrame]], gained: Map[String, DataFrame],
+      numBuckets: Option[Int]): Unit = {
+    val dead = drop.flatMap(ids => (ids ++ deadIds(s, src, keys.head))
+      .reduceOption(_ union _)).map(_.distinct())
+    lazy val reader = bucketedReader(s)
+    val writes = tables.filter(t => s.catalog.tableExists(src + t)).map { t =>
       val meta = s.sessionState.catalog
         .getTableMetadata(TableIdentifier(src + t))
       val parts = meta.partitionColumnNames
-      val rows = meta.bucketSpec.fold(s)(_ => bucketedReader(s)).table(src + t)
+      val spec = meta.bucketSpec.map(b =>
+        b.copy(numBuckets = numBuckets.getOrElse(b.numBuckets)))
+      val rows = meta.bucketSpec.fold(s)(_ => reader).table(src + t)
       val ks = keys.filter(rows.columns.contains)
-      val copied =
+      val kept =
         if (drop.isEmpty || ks.isEmpty) rows
         else {
           // an anti-join leads with its key, so the keys end up first,
           // in `keys` order, and the other columns keep theirs
           val live = dead.fold(rows)(d => ks.foldRight(rows)((k, r) =>
             r.join(broadcast(d.toDF(k)), Seq(k), "left_anti")))
-          if (parts.isEmpty) live else live.repartition(parts.map(col): _*)
+          val all = gained.get(t).fold(live)(live.unionByName(_))
+          if (parts.isEmpty) all else all.repartition(parts.map(col): _*)
         }
-      val dir = if (t.isEmpty) "rows" else t.stripPrefix("_")
-      bucketed(copied.write.mode("overwrite").format("parquet")
-          .partitionBy(parts: _*), meta.bucketSpec)
-        .option("path", s"$path/$dir").saveAsTable(dest + t)
+      val copied =
+        if (numBuckets.isEmpty) kept
+        else spec.fold(kept)(b =>
+          kept.repartition(b.numBuckets, b.bucketColumnNames.map(col): _*))
+      () => bucketed(copied.write.mode("overwrite").format("parquet")
+          .partitionBy(parts: _*), spec)
+        .option("path", dir(t)).saveAsTable(dest + t)
     }
-    if (drop.isEmpty)
-      tombstones(s, src).foreach(_.write.mode("overwrite").format("parquet")
+    val sidecar = tombstones(s, src).filter(_ => drop.isEmpty).map(t =>
+      () => t.write.mode("overwrite").format("parquet")
         .saveAsTable(dest + tombstoneSuffix))
+    concurrently(s)(writes ++ sidecar: _*)
   }
 
-  /** Postings + BM25 norms, keyed on `doc_id`; the settle writes both
-    * (`paths` = postings path, norms path) in
-    * [[SearchOps.upsertToSearchIndex]]. `numBuckets` reaches BOTH
-    * appends and the settle: the sidecar's own default could otherwise
-    * disagree with a non-default index spec and Spark rejects the
-    * mismatched bucketing; the clone and the compaction keep the
-    * source's spec. The two appends run as concurrent jobs, as do the
-    * settle's two copies. */
-  def search(numBuckets: Int): IndexFamily = copied("doc_id", "text",
-    StringType, Seq("", "_doclens"), Seq("doc_id"),
-    (s, t, docs) => concurrently(s)(
-      () => SearchOps.appendToSearchIndex(s, t, docs, "doc_id", "text",
-        numBuckets),
-      () => SearchOps.appendDocLengths(s, t, docs, "doc_id", "text",
-        numBuckets))
-  ).copy(upsert = (s, src, dest, paths, docs) =>
-    SearchOps.upsertToSearchIndex(s, src, dest, paths(0), paths(1), docs,
-      "doc_id", "text", numBuckets))
+  // `path/<suffix>`, `path/rows` for the `""` table, so a sidecar's
+  // directory never sits inside it
+  private def under(path: String)(t: String): String =
+    s"$path/${if (t.isEmpty) "rows" else t.stripPrefix("_")}"
+
+  /** Postings + BM25 norms, keyed on `doc_id`. `numBuckets` reaches
+    * both appends: the sidecar's own default could otherwise disagree
+    * with a non-default index spec and Spark rejects the mismatched
+    * bucketing; the copies keep the source's spec. The two appends run
+    * as concurrent jobs. The upsert is one compaction that gains the
+    * fresh postings and norms of [[latestPerId]], postings under
+    * `paths(0)` and norms under `paths(1)`: one write per table of
+    * survivors and fresh rows, the two writes concurrent. */
+  def search(numBuckets: Int): IndexFamily = {
+    val tables = Seq("", "_doclens")
+    copied("doc_id", "text", StringType, tables, Seq("doc_id"),
+      (s, t, docs) => concurrently(s)(
+        () => SearchOps.appendToSearchIndex(s, t, docs, "doc_id", "text",
+          numBuckets),
+        () => SearchOps.appendDocLengths(s, t, docs, "doc_id", "text",
+          numBuckets))
+    ).copy(upsert = (s, src, dest, paths, docs) => {
+      val latest = latestPerId(docs, "doc_id", "text")
+      copyGeneration(s, tables, Seq("doc_id"), src, dest,
+        tables.zip(paths).toMap, Some(Seq(latest.select(col("doc_id")))),
+        Map("" -> SearchOps.invertedIndex(latest, "doc_id", "text"),
+          "_doclens" -> SearchOps.docLengths(latest, "doc_id", "text")),
+        None)
+    })
+  }
 
   /** LSH band rows, keyed on `old_id`; a stale UPDATE left in place
     * would pair under BOTH texts (phantom jaccard matches), hence

@@ -270,69 +270,21 @@ object SearchOps {
   def appendDocLengths(spark: org.apache.spark.sql.SparkSession,
       table: String, docs: DataFrame, idCol: String, textCol: String,
       numBuckets: Int = 8): Unit = {
-    IndexFamily.appendByName(
-      docs.select(col(idCol).as("doc_id"),
-          TextOps.tokenCount(col(textCol)).as("n"))
-        .filter(col("n") > 0)
-        .groupBy(col("doc_id")).agg(sum(col("n")).as("dl")),
+    IndexFamily.appendByName(docLengths(docs, idCol, textCol),
       s"${table}_doclens",
       Some(BucketSpec(numBuckets, Seq("doc_id"), Seq("doc_id"))))
     refreshProbeSessions(s"${table}_doclens")
   }
 
-  /** UPDATE maintenance — CDC UPDATE semantics (reference
-    * `sql/triggers.sql:20-27`) for the index family, as a GENERATION
-    * step: a new index generation is written that (a) drops every
-    * posting and norms row of the incoming doc ids AND of previously
-    * tombstoned ids (the update purges pending deletes for free), and
-    * (b) appends the incoming documents' fresh postings and lengths.
-    * In-place re-ingestion is NOT offered deliberately: postings and
-    * doclens key on `doc_id`, so appending a changed doc next to its
-    * old rows would silently double `dl`, `df`, and tf sums
-    * (IndexMutationSpec pins that the upserted generation holds exactly
-    * ONE norms row per doc). The survivor copy is pure IO with ZERO
-    * shuffle — the bucketed-scan read of every bucketed generation copy
-    * ([[IndexFamily.bucketedReader]], one task per bucket) with the drop
-    * set anti-joined broadcast — and the new generation serves under
-    * [[Generations]] swap/publish like any other.
-    *
-    * At 100 TB an upsert batch costs a full index copy, which is the
-    * COMPACTION cost class — a deployment runs it at compaction cadence
-    * with batches accumulated via [[IndexFamily.delete]] + append in
-    * between, or per-batch on a clone when freshness demands it. */
-  def upsertToSearchIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, dlPath: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      numBuckets: Int = 8): Unit = {
-    // ONE row per incoming id (ADVICE r12 #4): a batch carrying two
-    // rows for an id (e.g. accumulated CDC updates not reduced to
-    // latest-wins) would write both into the new generation — the
-    // doubled-id defect this operator exists to prevent. Reduced
-    // deterministically (max by content); callers holding real event
-    // order pre-reduce with it instead (settleSearchUpserts does).
-    val latest = docs.select(col(idCol).cast("long").as(idCol), col(textCol))
-      .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-    val incoming = latest.select(col(idCol).as("doc_id")).distinct()
-    val dead = IndexFamily.tombstones(spark, src)
-      .map(t => incoming.unionByName(t.select(col("doc_id"))).distinct())
-      .getOrElse(incoming)
-    val reader = IndexFamily.bucketedReader(spark)
-    // the postings and norms copies read only `src`: concurrent jobs
-    IndexFamily.concurrently(spark)(
-      () => reader.table(src)
-        .join(broadcast(dead), Seq("doc_id"), "left_anti")
-        .unionByName(invertedIndex(latest, idCol, textCol))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .option("path", path).saveAsTable(dest),
-      () => reader.table(s"${src}_doclens")
-        .join(broadcast(dead), Seq("doc_id"), "left_anti")
-        .unionByName(invertedIndex(latest, idCol, textCol)
-          .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-        .option("path", dlPath).saveAsTable(s"${dest}_doclens"))
-  }
+  /** The `(doc_id, dl)` norms rows of `docs`: each doc's token count,
+    * summed over the rows that carry its id in one aggregate, for the
+    * docs with at least one token. */
+  private[operators] def docLengths(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+        TextOps.tokenCount(col(textCol)).as("n"))
+      .filter(col("n") > 0)
+      .groupBy(col("doc_id")).agg(sum(col("n")).as("dl"))
 
   /** The re-shard DECISION over a search index's posting-list
     * distribution — `text_search_stats` emits the skew signals, this
@@ -349,7 +301,7 @@ object SearchOps {
     *    catches a degenerate corpus where the mean itself is tiny.
     *
     * `reshard` fires when either floored signal reaches its threshold;
-    * the executable remedy is [[reshardSearchIndex]] (a finer bucket
+    * the executable remedy is [[IndexFamily.reshard]] (a finer bucket
     * spec spreads probe tasks and shrinks the per-bucket co-residents
     * of the hot term). All arithmetic is BIGINT floor-division so the
     * verdict hash-matches the oracle computing the same distribution
@@ -370,37 +322,6 @@ object SearchOps {
       .withColumn("reshard",
         col("max_over_mean_x1000") >= maxOverMeanX1000 ||
           col("top_frac_x1000") >= topFracX1000)
-
-  /** Execute the re-shard [[searchReshardCheck]] decides on — a NEW
-    * index generation under a different (normally finer) bucket count,
-    * postings AND the doc_id-bucketed norms sidecar together so the
-    * pair can never disagree on layout. No re-tokenization: the already
-    * computed posting rows are hash-exchanged into the new bucket
-    * layout (`repartition(n, term)` matches the bucket-id function, so
-    * each task owns exactly one destination bucket → one file per
-    * bucket), which is the floor cost of re-sharding — rows must move
-    * by definition. Pending tombstones settle here like at every other
-    * generation boundary (the destination starts tombstone-free).
-    * Same-count "re-sharding" degenerates to the search row's
-    * [[IndexFamily.compact]] — use that instead (the exchange would be
-    * elided against the scan's matching partitioning and the write
-    * would keep file-grain tasks).
-    * The new generation serves under [[Generations]] like any other;
-    * probes bucket-prune against the new count unchanged. */
-  def reshardSearchIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, dlPath: String,
-      newNumBuckets: Int): Unit = {
-    IndexFamily.live(spark, src, spark.table(src), "doc_id")
-      .repartition(newNumBuckets, col("term"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(newNumBuckets, "term").sortBy("term")
-      .option("path", path).saveAsTable(dest)
-    IndexFamily.live(spark, src, spark.table(s"${src}_doclens"), "doc_id")
-      .repartition(newNumBuckets, col("doc_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(newNumBuckets, "doc_id").sortBy("doc_id")
-      .option("path", dlPath).saveAsTable(s"${dest}_doclens")
-  }
 
   /** BM25-ranked conjunctive search over a [[writeSearchIndex]] table
     * with a [[writeDocLengths]] sidecar — the ranked-retrieval upgrade

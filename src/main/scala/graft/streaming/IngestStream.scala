@@ -100,39 +100,22 @@ object IngestStream {
         batchId)
     }
 
-  /** Continuous ANN-index maintenance — the vector twin of
-    * [[searchIndexSink]]: each arriving micro-batch of vectors is
-    * assigned by the index's FROZEN coarse quantizer and inserted into
-    * its list partitions via the same
-    * [[graft.operators.VectorOps.appendToIvfIndex]] the batch path
-    * gates. Per micro-batch cost: one broadcast-assign of the batch +
-    * a dynamic-partition insert; the indexed corpus is never read.
-    * Same replay-ledger idempotence and candidate-generation answer as
-    * [[searchIndexSink]]. */
-  def ivfIndexSink(vecStream: DataFrame, table: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    foreachBatchSink(vecStream, checkpointDir, trigger) { (batch, batchId) =>
-      applyIvfBatch(batch.sparkSession, table, batch, batchId)
-    }
-
-  /** Continuous retrieval-index maintenance: each arriving micro-batch
-    * of documents is ADMITTED to a standing search index — posting rows
-    * AND the BM25 norms sidecar appended under the index's layout via
-    * the SAME [[graft.operators.SearchOps.appendToSearchIndex]] /
-    * [[graft.operators.SearchOps.appendDocLengths]] the batch
-    * maintenance path gates, so streaming and batch ingestion cannot
+  /** Continuous append-only index maintenance: each arriving
+    * micro-batch of `(id, payload)` rows is ADMITTED to a standing index
+    * through the family's own batch-path `append` (postings and BM25
+    * norms for [[IndexFamily.search]], frozen-quantizer list rows for
+    * [[IndexFamily.ivf]] …), so streaming and batch ingestion cannot
     * drift. The indexed corpus is never read or rewritten; each
-    * micro-batch costs one tokenize + bucketed append of that batch.
+    * micro-batch costs one append of that batch.
     *
     * Delivery (VERDICT r11 #5): the checkpoint gives at-least-once
     * foreachBatch execution — the restart replay case is a batch whose
-    * writes completed but whose checkpoint commit didn't. The sinks
-    * close exactly that case with a REPLAY LEDGER (`<table>_applied`,
-    * one batch_id row written after the batch's appends): a replayed
-    * batchId is skipped whole, so kill-and-restart does not double
-    * postings, norms, or vectors (StreamIngestRestartSpec drives the
-    * killed-drain + restart and pins the counts). The window that
+    * writes completed but whose checkpoint commit didn't. The sink
+    * closes exactly that case with the REPLAY LEDGER (`<table>_applied`,
+    * one batch_id row written after the batch's appends, [[once]]): a
+    * replayed batchId is skipped whole, so kill-and-restart does not
+    * double postings, norms, or vectors (StreamIngestRestartSpec drives
+    * the killed-drain + restart and pins the counts). The window that
     * remains is a crash INSIDE the batch body (data partially applied,
     * ledger unwritten → replay re-appends the applied part); that is
     * what the candidate-generation discipline is for — append into a
@@ -150,42 +133,18 @@ object IngestStream {
     * the table twice before dropping it. The search probe clones and
     * the settle drop theirs themselves. The sink's own ledger reads are
     * refresh-safe — same session writes, same session reads. */
-  def searchIndexSink(docStream: DataFrame, table: String,
-      checkpointDir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = 8,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    foreachBatchSink(docStream, checkpointDir, trigger) { (batch, batchId) =>
-      applySearchBatch(batch.sparkSession, table, batch, idCol, textCol,
-        numBuckets, batchId)
+  def appendSink(stream: DataFrame, family: IndexFamily, table: String,
+      checkpointDir: String, trigger: Trigger): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      applyAppendBatch(batch.sparkSession, family, table, batch, batchId)
     }
 
-  /** One micro-batch of [[searchIndexSink]], replay-guarded: appends the
-    * batch's postings + norms rows unless the ledger already holds this
-    * batchId. Package-private so the restart spec can drive the exact
-    * replay the checkpoint would. */
-  private[graft] def applySearchBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, idCol: String, textCol: String, numBuckets: Int,
-      batchId: Long): Unit =
-    once(spark, table, batchId) {
-      graft.operators.SearchOps.appendToSearchIndex(
-        spark, table, batch, idCol, textCol, numBuckets)
-      // numBuckets forwarded to BOTH appends: the sidecar append's own
-      // default could otherwise disagree with a non-default index spec
-      // and Spark rejects the mismatched bucketing
-      graft.operators.SearchOps.appendDocLengths(
-        spark, table, batch, idCol, textCol, numBuckets)
-    }
-
-  /** One micro-batch of [[ivfIndexSink]], replay-guarded (same ledger
-    * discipline as [[applySearchBatch]]). */
-  private[graft] def applyIvfBatch(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame, batchId: Long): Unit =
-    once(spark, table, batchId) {
-      graft.operators.VectorOps.appendToIvfIndex(spark, table, batch)
-    }
+  /** One micro-batch of [[appendSink]], replay-guarded. Package-private
+    * so specs can drive the exact replay the checkpoint would. */
+  private[graft] def applyAppendBatch(
+      spark: org.apache.spark.sql.SparkSession, family: IndexFamily,
+      table: String, batch: DataFrame, batchId: Long): Unit =
+    once(spark, table, batchId)(family.append(spark, table, batch))
 
   /** The engine's two halves MEET (VERDICT r11 "what's missing" #1,
     * closing note): its own CDC statement semantics — O3 INSERT, O4
@@ -376,9 +335,8 @@ object IngestStream {
 
   /** Continuous SURVIVOR-SELECTION maintenance — the last standing
     * structure the ingestion path didn't keep current (band index
-    * [[ingestSink]], search index [[searchIndexSink]], IVF
-    * [[ivfIndexSink]], the CDC loops — and now the cluster
-    * assignment). Each arriving micro-batch of documents is:
+    * [[ingestSink]], search and IVF indexes [[appendSink]], the CDC
+    * loops — and now the cluster assignment). Each arriving micro-batch of documents is:
     *
     *  1. probed against the standing band index (bucket-pruned — only
     *     the batch shuffles) for its cross pairs, and shingled once

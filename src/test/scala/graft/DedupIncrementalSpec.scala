@@ -186,7 +186,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
 
   test("re-sharding: clone at a different bucket count, probe parity, zero recompute") {
     // the band family's retrain analog: a persistently hot bucket (see
-    // dedup_band_stats) is remedied by RE-SHARDING — reshardBandIndex at
+    // dedup_band_stats) is remedied by RE-SHARDING — a band re-shard at
     // a higher bucket count redistributes the already-computed band
     // rows under a new bucket spec; the shingle/minhash build never
     // re-runs, and the probe is result-invisible to the shard count
@@ -202,7 +202,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       .createTempDirectory("graft_band_reshard_spec_r_").toString
     try {
       Dedup.writeBandIndex(originals, "doc_id", "text", table, path, numBuckets = 8)
-      Dedup.reshardBandIndex(spark, table, rTable, rPath, newNumBuckets = 64)
+      IndexFamily.band(8).reshard(spark, table, rTable, rPath, numBuckets = 64)
       def numBuckets(t: String): Int =
         spark.sessionState.catalog
           .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))

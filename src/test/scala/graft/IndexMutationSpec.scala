@@ -79,6 +79,35 @@ class IndexMutationSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("a (seq, doc_id) tombstone sidecar drops doc_id in probe, compaction and settle") {
+    val src = uniq("graft_seq_first_src_")
+    val compacted = uniq("graft_seq_first_c_")
+    val settled = uniq("graft_seq_first_s_")
+    val paths = (1 to 5).map(_ => tmp("graft_seq_first_"))
+    try {
+      SearchOps.writeSearchIndex(docs.filter(col("doc_id") <= 2L), "doc_id",
+        "text", src, paths(0), numBuckets = 4)
+      SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
+      // the sidecar tombstones doc 1 at seq 2: read by position, its
+      // first column would tombstone doc 2 instead
+      Seq((2L, 1L)).toDF("seq", "doc_id").write.format("parquet")
+        .saveAsTable(s"${src}_tombstones")
+      val probed = SearchOps.probeSearchIndex(spark, src,
+        Seq("spark", "window"), 10).collect().map(_.getLong(0)).toSet
+      assert(probed == Set(2L), s"probe: $probed")
+      IndexFamily.search(4).compact(spark, src, compacted, paths(2))
+      IngestStream.settleSearchUpserts(spark, src, settled, paths(3),
+        paths(4), numBuckets = 4)
+      for (t <- Seq(compacted, settled); x <- Seq("", "_doclens")) {
+        val ids = spark.table(t + x).select(col("doc_id")).distinct()
+          .as[Long].collect().toSet
+        assert(ids == Set(2L), s"$t$x: $ids")
+      }
+    } finally Seq(src, compacted, settled).flatMap(t =>
+        Seq("", "_doclens", "_tombstones").map(t + _))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("upsertToSearchIndex: re-ingested doc does NOT double dl/df; stale postings gone") {
     val src = uniq("graft_ups_src_")
     val dest = uniq("graft_ups_dest_")
@@ -90,8 +119,8 @@ class IndexMutationSpec extends AnyFunSuite {
       SearchOps.writeSearchIndex(stale, "doc_id", "text", src, paths(0), numBuckets = 4)
       SearchOps.writeDocLengths(spark, src, paths(1), numBuckets = 4)
       IndexFamily.search(4).delete(spark, src, Seq(4L).toDF("doc_id"))
-      SearchOps.upsertToSearchIndex(spark, src, dest, paths(2), paths(3),
-        docs.filter(col("doc_id") === 3L), "doc_id", "text", numBuckets = 4)
+      IndexFamily.search(4).upsert(spark, src, dest, Seq(paths(2), paths(3)),
+        docs.filter(col("doc_id") === 3L))
       // exactly ONE norms row per doc, with the NEW length for doc 3 and
       // the tombstoned doc 4 purged
       val dl = spark.table(s"${dest}_doclens").collect()
@@ -639,8 +668,8 @@ class IndexMutationSpec extends AnyFunSuite {
       val dupBatch = Seq(
         (3L, "spark window three alpha"),
         (3L, "spark window three omega")).toDF("doc_id", "text")
-      SearchOps.upsertToSearchIndex(spark, src, dest, paths(2), paths(3),
-        dupBatch, "doc_id", "text", numBuckets = 4)
+      IndexFamily.search(4).upsert(spark, src, dest, Seq(paths(2), paths(3)),
+        dupBatch)
       val dl = spark.table(s"${dest}_doclens").groupBy(col("doc_id"))
         .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dl.values.forall(_ == 1L),

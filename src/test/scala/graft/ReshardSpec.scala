@@ -73,8 +73,8 @@ class ReshardSpec extends AnyFunSuite {
       val bmBefore = SearchOps.searchBm25(spark, src,
         Seq("spark", "window"), 10).collect().toSeq
 
-      SearchOps.reshardSearchIndex(spark, src, dest, paths(2), paths(3),
-        newNumBuckets = 4)
+      IndexFamily.search(2).reshard(spark, src, dest, paths(2),
+        numBuckets = 4)
       // probe output is layout-invariant (raw-tf AND ranked)
       val after = SearchOps.probeSearchIndex(spark, dest,
         Seq("spark", "window"), 10).collect().toSeq
@@ -136,7 +136,7 @@ class ReshardSpec extends AnyFunSuite {
       IndexFamily.band(4).delete(spark, src, Seq(20L).toDF("doc_id"))
       val before = Dedup.probeBandIndex(spark, src, incoming, "doc_id", "text",
         0.5).orderBy("new_id", "old_id").collect().toSeq
-      Dedup.reshardBandIndex(spark, src, dest, paths(1), newNumBuckets = 8)
+      IndexFamily.band(4).reshard(spark, src, dest, paths(1), numBuckets = 8)
       val after = Dedup.probeBandIndex(spark, dest, incoming, "doc_id", "text",
         0.5).orderBy("new_id", "old_id").collect().toSeq
       assert(after == before, "re-shard changed band probe results")

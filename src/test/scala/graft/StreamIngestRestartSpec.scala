@@ -45,8 +45,8 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       // dies (the query object is gone; only the checkpoint survives)
       wave1.repartition(2).write.mode("overwrite").parquet(dirs(2))
       val src1 = CdcStream.readEventStream(spark, dirs(2), maxFilesPerTrigger = 1)
-      IngestStream.searchIndexSink(src1, table, dirs(3), numBuckets = 4,
-        trigger = Trigger.AvailableNow()).awaitTermination()
+      IngestStream.appendSink(src1, IndexFamily.search(4), table, dirs(3),
+        Trigger.AvailableNow()).awaitTermination()
       assert(spark.table(s"${table}_doclens").count() == 4L)
       val ledgerAfter1 = spark.table(s"${table}_applied").count()
       assert(ledgerAfter1 >= 2L,
@@ -56,8 +56,8 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       // checkpoint — wave1's files must not be re-admitted
       wave2.repartition(2).write.mode("append").parquet(dirs(2))
       val src2 = CdcStream.readEventStream(spark, dirs(2), maxFilesPerTrigger = 1)
-      IngestStream.searchIndexSink(src2, table, dirs(3), numBuckets = 4,
-        trigger = Trigger.AvailableNow()).awaitTermination()
+      IngestStream.appendSink(src2, IndexFamily.search(4), table, dirs(3),
+        Trigger.AvailableNow()).awaitTermination()
       // the drain appended from the stream's micro-batch session; this
       // session scanned the tables after phase 1, so its cached file
       // listing must be refreshed (cross-session visibility — see the
@@ -131,21 +131,20 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       SearchOps.writeSearchIndex(docs, "doc_id", "text", table, paths(0),
         numBuckets = 4)
       SearchOps.writeDocLengths(spark, table, paths(1), numBuckets = 4)
-      IngestStream.applySearchBatch(spark, table, batch, "doc_id", "text", 4,
-        batchId = 7L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.search(4), table,
+        batch, batchId = 7L)
       val postings = spark.table(table).count()
       val norms = spark.table(s"${table}_doclens").count()
       // the replay: same batchId arrives again (checkpoint commit lost)
-      IngestStream.applySearchBatch(spark, table, batch, "doc_id", "text", 4,
-        batchId = 7L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.search(4), table,
+        batch, batchId = 7L)
       assert(spark.table(table).count() == postings,
         "replayed batch re-appended postings")
       assert(spark.table(s"${table}_doclens").count() == norms,
         "replayed batch re-appended norms rows")
       // a genuinely NEW batch still lands
-      IngestStream.applySearchBatch(spark, table,
-        Seq((3L, "spark gamma")).toDF("doc_id", "text"), "doc_id", "text", 4,
-        batchId = 8L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.search(4), table,
+        Seq((3L, "spark gamma")).toDF("doc_id", "text"), batchId = 8L)
       assert(spark.table(s"${table}_doclens").count() == norms + 1)
     } finally Seq(s"${table}_applied", s"${table}_doclens", table)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -160,14 +159,12 @@ class StreamIngestRestartSpec extends AnyFunSuite {
         Seq((1L, "spark window alpha")).toDF("doc_id", "text"),
         "doc_id", "text", hwm, hwmPaths(0), numBuckets = 4)
       SearchOps.writeDocLengths(spark, hwm, hwmPaths(1), numBuckets = 4)
-      IngestStream.applySearchBatch(spark, hwm,
-        Seq((2L, "spark window beta")).toDF("doc_id", "text"),
-        "doc_id", "text", 4, batchId = 11L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.search(4), hwm,
+        Seq((2L, "spark window beta")).toDF("doc_id", "text"), batchId = 11L)
       val norms = spark.table(s"${hwm}_doclens").count()
       spark.sql(s"DROP TABLE ${hwm}_applied") // catalog can no longer answer
-      IngestStream.applySearchBatch(spark, hwm,
-        Seq((2L, "spark window beta")).toDF("doc_id", "text"),
-        "doc_id", "text", 4, batchId = 11L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.search(4), hwm,
+        Seq((2L, "spark window beta")).toDF("doc_id", "text"), batchId = 11L)
       assert(spark.table(s"${hwm}_doclens").count() == norms,
         "warm replay check must not depend on the ledger table")
     } finally Seq(s"${hwm}_applied", s"${hwm}_doclens", hwm)
@@ -184,12 +181,14 @@ class StreamIngestRestartSpec extends AnyFunSuite {
         trainIters = 1)
       val vbatch = vecs.filter(col("vec_id") < 2)
         .select((col("vec_id") + 900L).as("vec_id"), col("embedding"))
-      IngestStream.applyIvfBatch(spark, ivf, vbatch, batchId = 3L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.ivf, ivf, vbatch,
+        batchId = 3L)
       val n = spark.table(s"${ivf}_lists").count()
-      IngestStream.applyIvfBatch(spark, ivf, vbatch, batchId = 3L)
+      IngestStream.applyAppendBatch(spark, IndexFamily.ivf, ivf, vbatch,
+        batchId = 3L)
       assert(spark.table(s"${ivf}_lists").count() == n,
         "replayed vector batch re-inserted rows")
-      IngestStream.applyIvfBatch(spark, ivf, vbatch
+      IngestStream.applyAppendBatch(spark, IndexFamily.ivf, ivf, vbatch
         .select((col("vec_id") + 100L).as("vec_id"), col("embedding")),
         batchId = 4L)
       assert(spark.table(s"${ivf}_lists").count() == n + 2)

@@ -6,10 +6,10 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import graft.streaming.{CdcStream, IngestStream}
-import graft.operators.{SearchOps, VectorOps}
+import graft.operators.{IndexFamily, SearchOps, VectorOps}
 
 /** Continuous retrieval-index maintenance
-  * ([[IngestStream.searchIndexSink]]): documents streamed in one-file
+  * ([[IngestStream.appendSink]]): documents streamed in one-file
   * micro-batches are admitted to a standing search index — postings AND
   * norms sidecar — through the same append operators the batch path
   * gates. Pins that (1) the stream really decomposed into multiple
@@ -43,8 +43,8 @@ class StreamSearchIngestSpec extends AnyFunSuite {
       // the arriving docs as a 3-file dir → 3 one-file micro-batches
       streamDocs.repartition(3).write.mode("overwrite").parquet(dirs(2))
       val src = CdcStream.readEventStream(spark, dirs(2), maxFilesPerTrigger = 1)
-      IngestStream.searchIndexSink(src, table, dirs(3), numBuckets = 4,
-        trigger = Trigger.AvailableNow()).awaitTermination()
+      IngestStream.appendSink(src, IndexFamily.search(4), table, dirs(3),
+        Trigger.AvailableNow()).awaitTermination()
       // 1. the decomposition was real: one checkpoint offset per batch
       val offsets = new java.io.File(s"${dirs(3)}/offsets").listFiles()
         .count(f => f.getName.forall(_.isDigit))
@@ -149,8 +149,8 @@ class StreamSearchIngestSpec extends AnyFunSuite {
       // streamed into one index (3 one-file micro-batches)...
       batch.repartition(3).write.mode("overwrite").parquet(dirs(2))
       val src = CdcStream.readEventStream(spark, dirs(2), maxFilesPerTrigger = 1)
-      IngestStream.ivfIndexSink(src, table, dirs(3),
-        trigger = Trigger.AvailableNow()).awaitTermination()
+      IngestStream.appendSink(src, IndexFamily.ivf, table, dirs(3),
+        Trigger.AvailableNow()).awaitTermination()
       // ...appended directly to the other
       VectorOps.appendToIvfIndex(spark, dTable, batch)
       def lists(t: String) = spark.table(s"${t}_lists")

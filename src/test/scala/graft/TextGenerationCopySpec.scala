@@ -72,11 +72,11 @@ class TextGenerationCopySpec extends AnyFunSuite {
 
   /** Builds the fixture's source generation with `write` (handed a
     * maker of fresh directories), then runs the four copies, each in
-    * fresh directories (`upsertPaths` of them for the upsert); `reshard`
-    * copies a source generation to a destination. */
+    * fresh directories (`upsertPaths` of them for the upsert); the
+    * re-shard writes `reshardTo` buckets. */
   private def check(name: String, family: IndexFamily,
       write: (DataFrame, String, () => String) => Unit, upsertPaths: Int,
-      reshard: (String, String, () => String) => Unit,
+      reshardTo: Int,
       expected: Map[String, String]): Unit = test(
       s"$name: clone, compact and upsert write the pinned generations") {
     val id = tag()
@@ -93,7 +93,7 @@ class TextGenerationCopySpec extends AnyFunSuite {
       family.compact(spark, src, names("compact"), dir())
       family.upsert(spark, src, names("upsert"),
         Seq.fill(upsertPaths)(dir()), incoming)
-      reshard(src, names("reshard"), () => dir())
+      family.reshard(spark, src, names("reshard"), dir(), reshardTo)
       val got = Seq("clone", "compact", "upsert", "reshard")
         .map(g => g -> layout(names(g), family.tables)).toMap
       assert(got == expected,
@@ -113,8 +113,7 @@ class TextGenerationCopySpec extends AnyFunSuite {
         numBuckets = 8)
       SearchOps.writeDocLengths(spark, t, dir(), numBuckets = 8)
     }, upsertPaths = 2,
-    (src, dest, dir) => SearchOps.reshardSearchIndex(spark, src, dest, dir(),
-      dir(), newNumBuckets = 16),
+    reshardTo = 16,
     Map(
       "clone" ->
         ("=28b16a2f69a8a0bc/8:term:term/ " +
@@ -134,8 +133,7 @@ class TextGenerationCopySpec extends AnyFunSuite {
     (docs, t, dir) => Dedup.writeBandIndex(docs, "doc_id", "text", t, dir(),
       numBuckets = 32),
     upsertPaths = 1,
-    (src, dest, dir) => Dedup.reshardBandIndex(spark, src, dest, dir(),
-      newNumBuckets = 64),
+    reshardTo = 64,
     Map(
       "clone" ->
         ("=d5924c357145ad05/32:band,bkey:band,bkey/ " +
