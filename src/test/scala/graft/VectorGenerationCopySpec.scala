@@ -11,7 +11,9 @@ import graft.operators.{GraphOps, IndexFamily, VectorOps}
   * ids (one of them appended). For every table of each destination
   * generation the literal holds a hash of its sorted rows and its
   * partition columns; `_tombstones` is listed when the sidecar exists.
-  * Any rewrite of the copies must leave every literal unchanged. */
+  * The retrains and derives that write a generation from a source are
+  * pinned the same way. Any rewrite of the copies or the writes must
+  * leave every literal unchanged. */
 class VectorGenerationCopySpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
@@ -199,6 +201,120 @@ class VectorGenerationCopySpec extends AnyFunSuite {
         ("_cents=87da8b04237942cc/ " +
         "_codebooks=6d2f68f8aa846421/ " +
         "_codes=2bbf604ef227bfa2/list_id")))
+
+  // the retrains read the fixture's appended, tombstoned generation and
+  // the lake corpus base ∪ batch; the derives read an ivf master
+  // carrying the same appends and tombstones
+  test("retrain and derive write the pinned generations") {
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    val made = scala.collection.mutable.ArrayBuffer.empty[String]
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+    def fresh(g: String): (String, String) = {
+      val t = s"graft_copy_pin_${g}_$tag"
+      made += t
+      dirs += java.nio.file.Files.createTempDirectory("graft_copy_pin_")
+        .toString
+      (t, dirs.last)
+    }
+    def source(name: String, family: IndexFamily,
+        write: (DataFrame, String, String) => Unit): String = {
+      val (src, path) = fresh(s"${name}_src")
+      write(corpus, src, path)
+      family.append(spark, src, batch)
+      family.delete(spark, src, deleted.toDF("vec_id"))
+      src
+    }
+    val lake = corpus.union(batch)
+    type Into = (String, String, String) => Unit
+    val retrains: Seq[(String, IndexFamily, (DataFrame, String, String) => Unit, Into)] = Seq(
+      ("ivf", IndexFamily.ivf,
+        VectorOps.writeIvfIndex(_, _, _, numCentroids = 4, trainIters = 1),
+        VectorOps.retrainIvfIndex(spark, _, _, _, trainIters = 1)),
+      ("sq8", IndexFamily.sq8,
+        VectorOps.writeIvfIndexSq8(_, _, _, numCentroids = 4, trainIters = 1),
+        VectorOps.retrainIvfIndexSq8(spark, _, _, _, lake, trainIters = 1)),
+      ("binary", IndexFamily.binary,
+        VectorOps.writeIvfIndexBinary(_, _, _, numCentroids = 4,
+          trainIters = 1),
+        VectorOps.retrainIvfIndexBinary(spark, _, _, _, lake, trainIters = 1)),
+      ("ivfpq", IndexFamily.ivfPq(8, dim),
+        VectorOps.writeIvfPqIndex(_, _, _, numCentroids = 4, trainIters = 1,
+          m = 8, ksub = 16, pqIters = 1, dim = dim),
+        VectorOps.retrainIvfPqIndex(spark, _, _, _, lake, trainIters = 1,
+          m = 8, ksub = 16, pqIters = 1, dim = dim)),
+      ("ivfpq_res", IndexFamily.ivfPqResidual(8, dim),
+        VectorOps.writeIvfPqResidualIndex(_, _, _, numCentroids = 4,
+          trainIters = 1, m = 8, ksub = 16, pqIters = 1, dim = dim),
+        VectorOps.retrainIvfPqResidualIndex(spark, _, _, _, lake,
+          trainIters = 1, m = 8, ksub = 16, pqIters = 1, dim = dim)))
+    val derives: Seq[(String, IndexFamily, Into)] = Seq(
+      ("sq8", IndexFamily.sq8, VectorOps.deriveSq8Index(spark, _, _, _)),
+      ("binary", IndexFamily.binary,
+        VectorOps.deriveBinaryIndex(spark, _, _, _)),
+      ("ivfpq", IndexFamily.ivfPq(8, dim),
+        VectorOps.deriveIvfPqIndex(spark, _, _, _, m = 8, ksub = 16,
+          pqIters = 1, dim = dim)),
+      ("ivfpq_res", IndexFamily.ivfPqResidual(8, dim),
+        VectorOps.deriveIvfPqResidualIndex(spark, _, _, _, m = 8, ksub = 16,
+          pqIters = 1, dim = dim)))
+    try {
+      val retrained = retrains.map { case (name, family, write, retrain) =>
+        val src = source(name, family, write)
+        val (dest, path) = fresh(s"${name}_retrain")
+        retrain(src, dest, path)
+        s"retrain $name" -> layout(dest, family.tables, sidecar = true)
+      }
+      val master = source("master", IndexFamily.ivf,
+        VectorOps.writeIvfIndex(_, _, _, numCentroids = 4, trainIters = 1))
+      val derived = derives.map { case (name, family, derive) =>
+        val (dest, path) = fresh(s"${name}_derive")
+        derive(master, dest, path)
+        s"derive $name" -> layout(dest, family.tables, sidecar = true)
+      }
+      val got = (retrained ++ derived).toMap
+      val expected = Map(
+        "retrain ivf" ->
+          ("_cents=c7688daf1ba7c8c8/ " +
+          "_lists=070b045993810ec9/list_id"),
+        "retrain sq8" ->
+          ("_cents=c7688daf1ba7c8c8/ " +
+          "_lists=f7bd3332f137313d/list_id"),
+        "retrain binary" ->
+          ("_cents=c7688daf1ba7c8c8/ " +
+          "_lists=77293d0d55731ac2/list_id"),
+        "retrain ivfpq" ->
+          ("_cents=c7688daf1ba7c8c8/ " +
+          "_codebooks=d3db60d4fa6b7af6/ " +
+          "_codes=9418fed36ea875f7/list_id"),
+        "retrain ivfpq_res" ->
+          ("_cents=c7688daf1ba7c8c8/ " +
+          "_codebooks=18f5eb2936b80643/ " +
+          "_codes=734759180e14d217/list_id"),
+        "derive sq8" ->
+          ("_cents=87da8b04237942cc/ " +
+          "_lists=2452abdc57c7ff7b/list_id"),
+        "derive binary" ->
+          ("_cents=87da8b04237942cc/ " +
+          "_lists=41af98452fcc75ac/list_id"),
+        "derive ivfpq" ->
+          ("_cents=87da8b04237942cc/ " +
+          "_codebooks=d3db60d4fa6b7af6/ " +
+          "_codes=be8602ac8e50d5c2/list_id"),
+        "derive ivfpq_res" ->
+          ("_cents=87da8b04237942cc/ " +
+          "_codebooks=52f33360347bf427/ " +
+          "_codes=217082f3587cd92b/list_id"))
+      assert(got == expected,
+        "\n" + got.toSeq.sorted.map { case (g, l) => s"$g: $l" }
+          .mkString("\n"))
+    } finally {
+      made.flatMap(t => Seq("_cents", "_lists", "_codebooks", "_codes",
+          "_tombstones").map(t + _))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      dirs.foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    }
+  }
 
   check("graph", IndexFamily.graph,
     GraphOps.writeGraphIndex(_, _, _, trainIters = 1),
