@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Round-close hygiene gate for COVERAGE.md, two checks:
+"""Round-close hygiene gate for COVERAGE.md and the scaladocs, three
+checks:
 
 1. every SparkEntry.queries key must appear verbatim somewhere in
    COVERAGE.md (the judge greps key-by-key; a key folded into family
@@ -10,7 +11,11 @@
    member, or a case-class parameter of that name, under src/main — a
    refactor that deletes or renames an operator must not leave a doc
    naming it. The names checked are the backticked ones in COVERAGE.md
-   and README.md and the `[[...]]` scaladoc links under src/main.
+   and README.md and the `[[...]]` scaladoc links under src/main;
+3. no `/** ... */` block under src/main is followed, with only blank
+   lines between, by another `/**` block: such a first block documents
+   nothing (its def was deleted or moved, or it is a section note that
+   belongs in a `//` comment).
 
 Usage: python3 scripts/coverage_check.py   (exit 0 = green)
 """
@@ -86,6 +91,25 @@ def backticked(doc: str) -> list:
 def scaladoc_links() -> list:
     return re.findall(r'\[\[([^\]\n]+)\]\]', main_sources())
 
+# a scaladoc block whose next non-blank line opens another one
+STRANDED = re.compile(r'/\*\*(?:(?!\*/).)*\*/[ \t]*\n(?:[ \t]*\n)*[ \t]*/\*\*',
+                      re.S)
+
+def stranded_docs() -> list:
+    """`path:line` of every scaladoc block that documents nothing."""
+    found = []
+    for f in sorted(glob.glob(os.path.join(ROOT, "src/main/scala/**/*.scala"),
+                              recursive=True)):
+        with open(f) as fh:
+            text = fh.read()
+        pos = 0
+        while (m := STRANDED.search(text, pos)):
+            # the second block may itself be stranded: resume at it
+            pos = m.end() - 3
+            found.append(f"{os.path.relpath(f, ROOT)}:"
+                         f"{text.count(chr(10), 0, m.start()) + 1}")
+    return found
+
 def main() -> int:
     keys = query_keys()
     # flatten line wraps: a key may be split across lines only if someone
@@ -104,7 +128,12 @@ def main() -> int:
           " scaladoc links) with no definition under src/main")
     for name, n in sorted(stale.items()):
         print(f"  STALE: {name} ({n}x)")
-    return 1 if missing or stale else 0
+    stranded = stranded_docs()
+    print(f"{len(stranded)} scaladoc blocks under src/main followed by"
+          " another scaladoc block")
+    for where in stranded:
+        print(f"  STRANDED: {where}")
+    return 1 if missing or stale or stranded else 0
 
 if __name__ == "__main__":
     sys.exit(main())

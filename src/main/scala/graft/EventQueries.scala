@@ -2275,12 +2275,6 @@ object EventQueries {
         sum(col("term")).as("chi2_ppm"))
   }
 
-  /** Mirror of the attribution window pass — shared by the batch
-    * `events_attribution` entry AND `stream_attribution` (the keyed-
-    * state streaming twin gates against the identical report). */
-  /** Mirror of the Markov transition matrix — shared verbatim by the
-    * batch lead-window entry AND its streaming keyed-state twin
-    * (stream ≡ batch by construction, the attribution gate shape). */
   /** Shared by `events_interarrival` and its streaming twin. */
   private[graft] lazy val interarrivalSql: String =
     """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
@@ -2344,6 +2338,9 @@ object EventQueries {
       |FROM tri CROSS JOIN tot
       |ORDER BY n DESC, t1, t2, t3 LIMIT 20""".stripMargin
 
+  /** Mirror of the Markov transition matrix — shared verbatim by the
+    * batch lead-window entry AND its streaming keyed-state twin
+    * (stream ≡ batch by construction, the attribution gate shape). */
   private[graft] lazy val markovSql: String =
     """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
       |    event_type FROM events),
@@ -2358,6 +2355,9 @@ object EventQueries {
       |FROM p JOIN t USING (prev_type)
       |ORDER BY prev_type, next_type""".stripMargin
 
+  /** Mirror of the attribution window pass — shared by the batch
+    * `events_attribution` entry AND `stream_attribution` (the keyed-
+    * state streaming twin gates against the identical report). */
   private[graft] lazy val attributionSql: String =
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tu, event_id,
         |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),

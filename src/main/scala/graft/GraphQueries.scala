@@ -1148,13 +1148,6 @@ object GraphQueries {
         |ORDER BY query_id""".stripMargin
     })
 
-  /** The weighted-surfer CTE chain through `r3` — [[GraphOps
-    * .pageRankWeighted]]'s mirror: rank flows per edge in proportion
-    * to `w`, denominators are the node's total out-WEIGHT, every state
-    * MATERIALIZED (each is referenced by the next state and, in the
-    * delta monitor, by the iteration's join — the exponential-inlining
-    * trap). Shared by the top-50 ranking and the convergence monitor
-    * so the two can never drift. */
   /** Mirror of [[GraphOps.kCore]] (kMin 2, 8 peel rounds) — e0 is the
     * symmetric backbone, each round drops nodes with degree < 2 from
     * both endpoints; ends with `e7`/`e8` for the convergence check. */
@@ -1170,6 +1163,13 @@ object GraphQueries {
       |${(1 to 8).map(peel).mkString(",\n|")}""".stripMargin
   }
 
+  /** The weighted-surfer CTE chain through `r3` — [[GraphOps
+    * .pageRankWeighted]]'s mirror: rank flows per edge in proportion
+    * to `w`, denominators are the node's total out-WEIGHT, every state
+    * MATERIALIZED (each is referenced by the next state and, in the
+    * delta monitor, by the iteration's join — the exponential-inlining
+    * trap). Shared by the top-50 ranking and the convergence monitor
+    * so the two can never drift. */
   private lazy val weightedPrCtes: String = {
     def iter(k: Int) =
       s"""r$k AS MATERIALIZED (
@@ -1221,11 +1221,6 @@ object GraphQueries {
       "(sqrt(list_dot_product(q.qv::DOUBLE[], q.qv::DOUBLE[])) * " +
       "sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
 
-  /** DuckDB mirror of [[GraphOps.graphSearch]] parameterized over the
-    * query set: `qsSql` defines `qs (query_id, qv)`, `entSql` defines
-    * `ent (query_id, node)` (the entry-cell members), then the three
-    * expand-and-rerank beam rounds as MATERIALIZED CTE layers on top of
-    * [[knnSql]]'s graph. The final frontier is `g3` (rk ≤ 8). */
   /** The beam-walk CTE chain WITHOUT the graph-build prefix — CTE names
     * suffixed `sfx` and the candidate-scoring corpus / edge relations
     * parameterized, so TWO walks compose in one query (the CDC probe:
@@ -1259,6 +1254,11 @@ object GraphQueries {
       |g3$sfx AS (SELECT * FROM gw$sfx${GraphOps.WalkRounds})""".stripMargin
   }
 
+  /** DuckDB mirror of [[GraphOps.graphSearch]] parameterized over the
+    * query set: `qsSql` defines `qs (query_id, qv)`, `entSql` defines
+    * `ent (query_id, node)` (the entry-cell members), then the three
+    * expand-and-rerank beam rounds as MATERIALIZED CTE layers on top of
+    * [[knnSql]]'s graph. The final frontier is `g3` (rk ≤ 8). */
   private def graphWalkSql(qsSql: String, entSql: String): String =
     s"""$knnSql,
       |${walkCtes(qsSql, entSql)}""".stripMargin
@@ -1395,12 +1395,6 @@ object GraphQueries {
       |FROM qss q LEFT JOIN hits ON hits.query_id = q.query_id
       |ORDER BY q.query_id""".stripMargin
 
-  /** DuckDB mirror of the [[GraphOps.knnGraphDir]] epoch: the k-means
-    * cell assignment (SimilarityQueries.clusterAssignCtes — the same
-    * trained-quantizer chain the IVF mirrors use), the in-cell seed
-    * self-join + per-src cosine top-3, then the two NN-descent rounds
-    * (edges ∪ reversed ∪ 2-hop, exact re-rank) as MATERIALIZED CTE
-    * layers. */
   /** [[knnSql]] parameterized over the corpus relation and the K
     * derivation (the trainRel/kSql discipline): quantizer training,
     * assignment, the seed self-join, and both descent rounds all read
@@ -1452,6 +1446,12 @@ object GraphQueries {
       |  FROM k${GraphOps.KnnDescentRounds})""".stripMargin
   }
 
+  /** DuckDB mirror of the [[GraphOps.knnGraphDir]] epoch: the k-means
+    * cell assignment (SimilarityQueries.clusterAssignCtes — the same
+    * trained-quantizer chain the IVF mirrors use), the in-cell seed
+    * self-join + per-src cosine top-3, then the two NN-descent rounds
+    * (edges ∪ reversed ∪ 2-hop, exact re-rank) as MATERIALIZED CTE
+    * layers. */
   private lazy val knnSql: String =
     knnSqlOver("", "embeddings", SimilarityQueries.ivfKSql)
 }

@@ -316,11 +316,6 @@ object MultimodalQueries {
         .orderBy(col("file_name"))
     }))
 
-  /** Deterministic whole-file fixture for [[Sources.binaryFiles]]: 64
-    * ASCII files under one fixed path, written once (write-if-missing —
-    * re-runs and concurrent sessions produce byte-identical files, so
-    * the race is harmless). Fixed content keeps the static oracle SQL
-    * able to name the path. */
   /** The TRI-MODAL per-doc verdict frame (pre-orderBy) — text quality
     * + decoded-image signal + image-perceptual survivor + decoded-audio
     * signal + audio-perceptual survivor, one Catalyst plan. ONE decode
@@ -360,6 +355,11 @@ object MultimodalQueries {
           col("audio_ok") && col("is_audio_survivor"))
   }
 
+  /** Deterministic whole-file fixture for [[Sources.binaryFiles]]: 64
+    * ASCII files under one fixed path, written once (write-if-missing —
+    * re-runs and concurrent sessions produce byte-identical files, so
+    * the race is harmless). Fixed content keeps the static oracle SQL
+    * able to name the path. */
   private def binaryFixtureDir(): String = {
     val dir = java.nio.file.Paths.get("/tmp/graft_binary_source_fixture")
     java.nio.file.Files.createDirectories(dir)

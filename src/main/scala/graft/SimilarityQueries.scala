@@ -121,8 +121,7 @@ object SimilarityQueries {
     * (metadata-only); the oracle embeds the same derivation as a scalar
     * subquery. Floored at 4 so toy corpora still have >1 list to probe.
     */
-  private[graft] def ivfK(emb: DataFrame): Int =
-    math.max(4, math.floor(math.sqrt(emb.count().toDouble)).toInt)
+  private[graft] def ivfK(emb: DataFrame): Int = VectorOps.corpusK(emb)
 
   private[graft] val ivfKSql =
     "(SELECT greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM embeddings)"
@@ -213,9 +212,10 @@ object SimilarityQueries {
     *    [[delete]] (the tombstones);
     *  - `retrain`: `(src, dest, path, unionCorpus)` — fresh quantizers
     *    (and a fresh K) over the appended generation's grown corpus,
-    *    through the family's own encode;
+    *    through the family's own write;
     *  - `derive`: `(src, dest, path)` — the family's payload encoded
-    *    under the float [[ivf]] master's quantizer and assignment. */
+    *    under the float [[ivf]] master's quantizer and assignment
+    *    ([[lossy]]). */
   private[graft] final case class Lifecycle(prefix: String,
       family: IndexFamily,
       build: (SparkSession, String) => (String, String) => Unit,
@@ -239,25 +239,33 @@ object SimilarityQueries {
       VectorOps.retrainIvfIndex(s, src, dest, path)),
     derive = None)
 
+  /** A lossy row: its codes hold no float vectors, so its retrain runs
+    * the `write(corpus, table, path, K)` that builds it over the lake's
+    * union corpus ([[VectorOps.retrain]]), and it derives from the float
+    * [[ivf]] master through its encoder `encode`, `trainers` training
+    * every frozen table after `_cents` ([[VectorOps.derive]]). */
+  private def lossy(prefix: String, family: IndexFamily,
+      write: (DataFrame, String, String, Int) => Unit,
+      compactFrom: (SparkSession, String, Lifecycle) => String,
+      trainers: Seq[(String, VectorOps.Trainer)],
+      encode: VectorOps.Encoder): Lifecycle =
+    Lifecycle(prefix, family,
+      overEmbeddings((emb, t, p) => write(emb, t, p, ivfK(emb))), compactFrom,
+      retrain = Some(VectorOps.retrain(_, _, _, _, _, write)),
+      derive = Some(VectorOps.derive(_, _, _, _, trainers, encode)))
+
   /** int8 list payloads under the float quantizer — the partition cut
-    * compounded with the 4× payload cut (VERDICT r9 #1); retrains from
-    * the lake corpus because its codes are lossy. */
-  private[graft] val sq8: Lifecycle = Lifecycle("ivf_sq8", IndexFamily.sq8,
-    overEmbeddings((emb, t, p) => VectorOps.writeIvfIndexSq8(emb, t, p,
-      numCentroids = ivfK(emb), trainIters = 2)),
-    compactFrom = append,
-    retrain = Some(VectorOps.retrainIvfIndexSq8(_, _, _, _, _)),
-    derive = Some(VectorOps.deriveSq8Index(_, _, _, _)))
+    * compounded with the 4× payload cut (VERDICT r9 #1). */
+  private[graft] val sq8: Lifecycle = lossy("ivf_sq8", IndexFamily.sq8,
+    VectorOps.writeIvfIndexSq8(_, _, _, _, trainIters = 2),
+    compactFrom = append, Nil, VectorOps.sq8Lists)
 
   /** Sign masks inside the coarse lists — the compression spectrum's
     * coarsest SERVED layout. */
-  private[graft] val binary: Lifecycle = Lifecycle("ivf_binary",
+  private[graft] val binary: Lifecycle = lossy("ivf_binary",
     IndexFamily.binary,
-    overEmbeddings((emb, t, p) => VectorOps.writeIvfIndexBinary(emb, t, p,
-      numCentroids = ivfK(emb), trainIters = 2)),
-    compactFrom = delete,
-    retrain = Some(VectorOps.retrainIvfIndexBinary(_, _, _, _, _)),
-    derive = Some(VectorOps.deriveBinaryIndex(_, _, _, _)))
+    VectorOps.writeIvfIndexBinary(_, _, _, _, trainIters = 2),
+    compactFrom = delete, Nil, VectorOps.binaryLists)
 
   /** Matryoshka 32-dim prefixes under their own coarse quantizer. */
   private[graft] val mrl: Lifecycle = Lifecycle("mrl", IndexFamily.mrl,
@@ -273,30 +281,23 @@ object SimilarityQueries {
 
   /** The IVF-PQ composite: coarse lists of PQ codes, both quantizers
     * trained once per epoch. */
-  private[graft] val ivfPq: Lifecycle = Lifecycle("ivfpq",
+  private[graft] val ivfPq: Lifecycle = lossy("ivfpq",
     IndexFamily.ivfPq(8, 64),
-    overEmbeddings((emb, t, p) => VectorOps.writeIvfPqIndex(emb, t, p,
-      numCentroids = ivfK(emb), trainIters = 2, m = 8, ksub = 64,
-      pqIters = 2)),
-    compactFrom = delete,
-    retrain = Some(VectorOps.retrainIvfPqIndex(_, _, _, _, _, m = 8,
-      ksub = 64, pqIters = 2)),
-    derive = Some(VectorOps.deriveIvfPqIndex(_, _, _, _, m = 8, ksub = 64,
-      pqIters = 2)))
+    VectorOps.writeIvfPqIndex(_, _, _, _, trainIters = 2, m = 8, ksub = 64,
+      pqIters = 2),
+    compactFrom = delete, Seq(VectorOps.codebooks(8, 64, 2, 64, 16384L)),
+    VectorOps.ivfPqCodes(8, 64))
 
   /** Residual IVF-PQ (`by_residual=true` — VERDICT r13 #4): the
     * composite's shape, codes quantizing residuals against the list
     * centroids. */
-  private[graft] val ivfPqRes: Lifecycle = Lifecycle("ivfpq_res",
+  private[graft] val ivfPqRes: Lifecycle = lossy("ivfpq_res",
     IndexFamily.ivfPqResidual(8, 64),
-    overEmbeddings((emb, t, p) => VectorOps.writeIvfPqResidualIndex(emb, t,
-      p, numCentroids = ivfK(emb), trainIters = 2, m = 8, ksub = 64,
-      pqIters = 2)),
+    VectorOps.writeIvfPqResidualIndex(_, _, _, _, trainIters = 2, m = 8,
+      ksub = 64, pqIters = 2),
     compactFrom = delete,
-    retrain = Some(VectorOps.retrainIvfPqResidualIndex(_, _, _, _, _, m = 8,
-      ksub = 64, pqIters = 2)),
-    derive = Some(VectorOps.deriveIvfPqResidualIndex(_, _, _, _, m = 8,
-      ksub = 64, pqIters = 2)))
+    Seq(VectorOps.residualCodebooks(8, 64, 2, 64, 16384L)),
+    VectorOps.ivfPqResidualCodes(8, 64))
 
   /** The vector rows of the family table (the graph row,
     * [[GraphQueries.graph]], builds from the kNN epochs instead). */
@@ -1913,14 +1914,6 @@ object SimilarityQueries {
   private lazy val ivfSq8RecallOracleSql = recallOracleSql(
     preCtes = ivfSq8RecallPre(), annSelect = ivfSq8RecallAnnSelect)
 
-  /** DuckDB mirror of [[VectorOps.pqTrainCodebooks]] + the shared
-    * encode CTE: subvector slicing (1-based inclusive list slices =
-    * Spark's `slice(v, s·dsub+1, dsub)`), L2² assignment through three
-    * list_dot_product folds with `round(…,6)` + lowest-cid ties, and
-    * the `floor(x·1e6)` integer-mean update — the same cross-engine
-    * determinism discipline as [[centTrainSql]]. Ends with `pcents`
-    * (s, cid, cv) and leaves `sv` (vec_id, s, v) in scope for the
-    * encode CTE. */
   /** The sample-train cap threaded through BOTH engines (Spark
     * `trainLimit` and the oracle's `tsv` filter): codebooks train on
     * `vec_id < 16384`, the whole corpus encodes. */
@@ -1931,6 +1924,14 @@ object SimilarityQueries {
       s"2 * list_dot_product($a::DOUBLE[], $b::DOUBLE[]) + " +
       s"list_dot_product($b::DOUBLE[], $b::DOUBLE[]))"
 
+  /** DuckDB mirror of [[VectorOps.pqTrainCodebooks]] + the shared
+    * encode CTE: subvector slicing (1-based inclusive list slices =
+    * Spark's `slice(v, s·dsub+1, dsub)`), L2² assignment through three
+    * list_dot_product folds with `round(…,6)` + lowest-cid ties, and
+    * the `floor(x·1e6)` integer-mean update — the same cross-engine
+    * determinism discipline as [[centTrainSql]]. Ends with `pcents`
+    * (s, cid, cv) and leaves `sv` (vec_id, s, v) in scope for the
+    * encode CTE. */
   private def pqTrainSql(m: Int, ksub: Int, iters: Int, dsub: Int,
       trainLimit: Long, rel: String = "embeddings"): String = {
     val sv = s"sv AS (SELECT vec_id, t.s AS s, " +
@@ -2623,12 +2624,6 @@ object SimilarityQueries {
         |      (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
         |    FROM scored""".stripMargin)
 
-  /** Hybrid-RRF mirror: the lexical leg nests the SHARED k=20
-    * disjunctive BM25 builder ([[TextQueries.searchBm25AnyList20Sql]])
-    * as a scoped subquery (its CTE names can't collide), the semantic
-    * leg is the IVF mirror's CTE shape with `q` = doc 0 and rk ≤ 20,
-    * and the fusion sums `floor(1e6/(60+rk))` integer contributions —
-    * exact in both engines. */
   /** The semantic-leg CTE prefix shared by every hybrid mirror: the
     * IVF candidate scoring (`vscored`) for the query set selected by
     * `qFilter` — one builder so the three fusion mirrors can't drift
@@ -2704,6 +2699,12 @@ object SimilarityQueries {
       |  sum(term_e9)::BIGINT AS rbo_e9 FROM t""".stripMargin
   }
 
+  /** Hybrid-RRF mirror: the lexical leg nests the SHARED k=20
+    * disjunctive BM25 builder ([[TextQueries.searchBm25AnyList20Sql]])
+    * as a scoped subquery (its CTE names can't collide), the semantic
+    * leg is the IVF mirror's CTE shape with `q` = doc 0 and rk ≤ 20,
+    * and the fusion sums `floor(1e6/(60+rk))` integer contributions —
+    * exact in both engines. */
   private lazy val hybridRrfOracleSql =
     s"""WITH ${hybridSemCtes("vec_id = 0")},
       |sem AS (SELECT neighbor_id AS doc_id, rk FROM (

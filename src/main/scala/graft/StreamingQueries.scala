@@ -1113,8 +1113,9 @@ object StreamingQueries {
     })) ++ SimilarityQueries.servedFamilies.flatMap(cdcEntries).map {
       case (name, query, _) => name -> query }
 
-  /** Streamed-ingestion oracles: the drained indexes are defined to
-    * equal their batch twins, so the mirrors are the families' own. */
+  // Streamed-ingestion oracles: the drained indexes are defined to
+  // equal their batch twins, so the mirrors are the families' own.
+
   /** The vector-family settle monitor's mirror: pending = plain dup
     * inserts (seq = vec_id+100000) + %20==0 updates (1e6+) + %20==4
     * re-inserts (3e6+); tombstones = 10 poison ids + the %20==4 wave.
@@ -1832,17 +1833,6 @@ object StreamingQueries {
       IngestStream.scd2Sink(stream, base, ckpt).awaitTermination()
     }
 
-  /** The classifier loop's wave files: wave 1 = the dup batch (the
-    * near-copy corpus — distribution-preserving, must NOT fire), wave
-    * 2 = the short-doc crawl wave re-badged +300000 (selection-shifted,
-    * MUST fire → generation 1), wave 3 = the long-doc wave re-badged
-    * +400000 (shifted AGAIN, against generation 1's own bins — must
-    * fire → generation 2: the chained-generation case that proves the
-    * loop isn't single-shot). One file per wave with pinned names +
-    * ascending mtimes, so the file source drains them as three
-    * micro-batches in wave order (the [[anomalyStreamDir]] discipline —
-    * the loop's generation counter depends on arrival order, so the
-    * fixture pins it). */
   /** The mirror's pool relation after waves 1..`upTo` drained: the
     * base pool (lang ≠ 'en') plus each wave's re-keyed arrivals —
     * exactly [[dsirWavesDir]]'s fixture arithmetic. */
@@ -1915,6 +1905,17 @@ object StreamingQueries {
     }
   }
 
+  /** The classifier loop's wave files: wave 1 = the dup batch (the
+    * near-copy corpus — distribution-preserving, must NOT fire), wave
+    * 2 = the short-doc crawl wave re-badged +300000 (selection-shifted,
+    * MUST fire → generation 1), wave 3 = the long-doc wave re-badged
+    * +400000 (shifted AGAIN, against generation 1's own bins — must
+    * fire → generation 2: the chained-generation case that proves the
+    * loop isn't single-shot). One file per wave with pinned names +
+    * ascending mtimes, so the file source drains them as three
+    * micro-batches in wave order (the [[anomalyStreamDir]] discipline —
+    * the loop's generation counter depends on arrival order, so the
+    * fixture pins it). */
   private[graft] def classifierWavesDir(s: SparkSession,
       dir: String): String =
     EpochRegistry.dirEpoch(s, dir, "clf_cdc_waves_dir") { path =>

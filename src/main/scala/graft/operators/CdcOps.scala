@@ -69,21 +69,6 @@ object CdcOps {
       rowJson(df).as("data"),
       lit(tableName).as("table_name"))
 
-  /** O4 + O5 — UPDATE capture with per-column diff and no-op suppression
-    * (`sql/triggers.sql:16-17,22-37`). The reference loops over
-    * `jsonb_each(old)` and deletes unchanged keys from the new-row json;
-    * here the diff is a null-safe (`<=>`) column-by-column comparison after
-    * an equi-join of old and new on the primary key. An UPDATE that changed
-    * nothing produces no event (`changes = '{}' → RETURN NULL`).
-    *
-    * Emits one row per (entity, changed column): (external_id, statement,
-    * changed_col, new_value) — the relational form of the diff map, chosen
-    * so results are oracle-comparable. Use [[updateEventsJson]] for the
-    * wire-shaped single-JSON-payload form.
-    *
-    * PG jsonb equality is value-typed (canonicalized), so the comparison is
-    * on typed columns, never on serialized strings (SURVEY §7 watch list 1).
-    */
   /** PG jsonb equality is value-typed and canonicalized (key order ignored,
     * duplicate keys dropped). Spark's `<=>` doesn't support MapType, so map
     * columns (the hstore analog, FIXTURES.md A1) are normalized to sorted
@@ -104,6 +89,21 @@ object CdcOps {
       case _ => col(s"$qualifier.$c").cast("string")
     }
 
+  /** O4 + O5 — UPDATE capture with per-column diff and no-op suppression
+    * (`sql/triggers.sql:16-17,22-37`). The reference loops over
+    * `jsonb_each(old)` and deletes unchanged keys from the new-row json;
+    * here the diff is a null-safe (`<=>`) column-by-column comparison after
+    * an equi-join of old and new on the primary key. An UPDATE that changed
+    * nothing produces no event (`changes = '{}' → RETURN NULL`).
+    *
+    * Emits one row per (entity, changed column): (external_id, statement,
+    * changed_col, new_value) — the relational form of the diff map, chosen
+    * so results are oracle-comparable. Use [[updateEventsJson]] for the
+    * wire-shaped single-JSON-payload form.
+    *
+    * PG jsonb equality is value-typed (canonicalized), so the comparison is
+    * on typed columns, never on serialized strings (SURVEY §7 watch list 1).
+    */
   def updateDiff(oldDf: DataFrame, newDf: DataFrame, pkCol: String, keyCol: String): DataFrame = {
     val dataCols = newDf.columns.filter(_ != pkCol)
     val o = oldDf.as("o")

@@ -331,7 +331,7 @@ object Dedup {
 
   /** Append accepted documents to an existing [[writeBandIndex]] table —
     * the band-index maintenance operation between full-dedup epochs
-    * (the text twin of [[VectorOps.appendToIvfIndex]]): in a live
+    * (the text twin of the IVF append, [[VectorOps.ivfLists]]): in a live
     * ingestion pipeline, a batch that passes dedup is admitted to the
     * corpus, and the NEXT batch must be probed against it too. The
     * batch's band rows are appended with the SAME bucket spec, so every
@@ -690,28 +690,6 @@ object Dedup {
       .toDF("id_a", "id_b", "containment")
   }
 
-  /** Cross-document duplicated n-gram profile — the "duplicate n-gram
-    * fraction" quality signal of large-corpus curation (how much of a
-    * document is text that also appears in OTHER documents; boilerplate,
-    * mirrored pages and template spam score high). Per document: the
-    * number of DISTINCT 3-token shingles, how many of those also occur in
-    * at least one other document, and the floor-quantized shared
-    * fraction. Distinct-per-doc (set) semantics keep within-doc
-    * repetition out of the signal — that is [[TextOps.repetitionScore]]'s
-    * job.
-    *
-    * Docs too short for a single shingle (< 3 tokens) emit no row.
-    *
-    * 100 TB shape: shingles are hashed to 60-bit ints BEFORE the shuffle
-    * ([[TextOps.hashedShingles]] — the strings never leave the scan
-    * stage), and the document frequency comes from `count(*) over
-    * (partition by g)` on the SAME shuffled gram stream — one window on
-    * one exchange, instead of the groupBy + self-join formulation that
-    * tokenizes and hashes the whole corpus twice (measured 4.4 s → the
-    * single-pass form at sf0.1; at 100 TB the saved pass is a full
-    * corpus scan). The final per-doc rollup shuffles one long per
-    * (doc, gram) — everything is linear in corpus shingle volume, never
-    * pairwise. */
   /** EXACT-SUBSTRING span removal — the span-level (not document-level)
     * dedup a training pipeline runs AFTER near-dup filtering: any
     * `gramLen`-token window whose text also appears in ANOTHER document
@@ -912,6 +890,28 @@ object Dedup {
       .option("path", path)
       .saveAsTable(dest)
 
+  /** Cross-document duplicated n-gram profile — the "duplicate n-gram
+    * fraction" quality signal of large-corpus curation (how much of a
+    * document is text that also appears in OTHER documents; boilerplate,
+    * mirrored pages and template spam score high). Per document: the
+    * number of DISTINCT 3-token shingles, how many of those also occur in
+    * at least one other document, and the floor-quantized shared
+    * fraction. Distinct-per-doc (set) semantics keep within-doc
+    * repetition out of the signal — that is [[TextOps.repetitionScore]]'s
+    * job.
+    *
+    * Docs too short for a single shingle (< 3 tokens) emit no row.
+    *
+    * 100 TB shape: shingles are hashed to 60-bit ints BEFORE the shuffle
+    * ([[TextOps.hashedShingles]] — the strings never leave the scan
+    * stage), and the document frequency comes from `count(*) over
+    * (partition by g)` on the SAME shuffled gram stream — one window on
+    * one exchange, instead of the groupBy + self-join formulation that
+    * tokenizes and hashes the whole corpus twice (measured 4.4 s → the
+    * single-pass form at sf0.1; at 100 TB the saved pass is a full
+    * corpus scan). The final per-doc rollup shuffles one long per
+    * (doc, gram) — everything is linear in corpus shingle volume, never
+    * pairwise. */
   def crossDocNgramStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // native fused kernel: ONE md5 pass per shingle producing the

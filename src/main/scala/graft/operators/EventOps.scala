@@ -187,11 +187,6 @@ object EventOps {
         expr("weighted_cents_us div total_us"))
   }
 
-  /** Gap-based sessionization: a new session starts when the gap to the
-    * previous event of the same user exceeds `gapUs`. Classic
-    * lag + cumulative-sum-of-flags window composition — one shuffle on
-    * user_id, which is exactly the partitioning a 100 TB event log would
-    * already have. */
   /** Per-event session labels: the gap-based session assignment that
     * [[sessionize]] aggregates and [[pmiCooccurrence]] mines. One
     * user-partitioned window pass, no shuffle beyond the user key. */
@@ -205,6 +200,11 @@ object EventOps {
       .drop("prev_ts", "new_session")
   }
 
+  /** Gap-based sessionization: a new session starts when the gap to the
+    * previous event of the same user exceeds `gapUs`. Classic
+    * lag + cumulative-sum-of-flags window composition — one shuffle on
+    * user_id, which is exactly the partitioning a 100 TB event log would
+    * already have. */
   def sessionize(events: DataFrame, gapUs: Long): DataFrame = {
     val flagged = sessionAssignments(events, gapUs)
     flagged.groupBy(col("user_id"), col("session_seq"))

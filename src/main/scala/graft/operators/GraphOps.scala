@@ -1184,11 +1184,6 @@ object GraphOps {
   // ranked adjacency).
   // -----------------------------------------------------------------
 
-  /** K = max(4, ⌊√n⌋) — the corpus-derived cell count every quantizer
-    * build in the repo uses (probe cost ~ entryCells·√N either way). */
-  private def kOf(corpus: DataFrame): Int =
-    math.max(4, math.floor(math.sqrt(corpus.count().toDouble)).toInt)
-
   /** BUILD a served graph-index generation from scratch over `corpus`
     * (vec_id, embedding): train the coarse quantizer (K = max(4, ⌊√n⌋),
     * the corpusK discipline), assign cells, copy the vectors, run the
@@ -1200,16 +1195,12 @@ object GraphOps {
       trainIters: Int = 2): Unit = {
     val spark = corpus.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val trained = VectorOps.trainCentroids(corpus, kOf(corpus), trainIters)
-    // RDD-persist leaf: the trained centroids are referenced by the
-    // assignment AND the edge build — without the leaf each reference
-    // re-runs the Lloyd passes (the r14 tiny-aggregate trap)
-    val centRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(centRdd, trained.schema)
-    cents.write.mode("overwrite").format("parquet")
+    // the trained centroids run once, in their own write; the cells
+    // assignment and the edge build read them back from the catalog
+    VectorOps.trainCentroids(corpus, VectorOps.corpusK(corpus), trainIters)
+      .write.mode("overwrite").format("parquet")
       .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    VectorOps.assignLists(corpus, broadcast(cents))
+    VectorOps.assignLists(corpus, broadcast(spark.table(s"${table}_cents")))
       .select(col("vec_id"), col("list_id"))
       .write.mode("overwrite").format("parquet")
       .partitionBy("list_id")
@@ -1223,7 +1214,6 @@ object GraphOps {
       KnnK, KnnDescentRounds,
       knn => knn.write.mode("overwrite").format("parquet")
         .option("path", s"$path/edges").saveAsTable(s"${table}_edges"))
-    centRdd.unpersist()
   }
 
   /** PROBE a graph-index generation — [[graphSearch]] against the
@@ -1408,16 +1398,6 @@ object GraphOps {
       .orderBy(col("k"))
   }
 
-  /** Synchronous BFS from the backbone's minimum part key over the
-    * SYMMETRIC edge set: (node, depth) for every node within
-    * `maxDepth` hops — the reachability shell a "how far does
-    * influence spread" question needs, and the only distance operator
-    * in the suite (PPR measures mass, not hops). Each round is one
-    * frontier⋈edges shuffle keyed on the node plus an anti-join
-    * against the visited set — the Pregel layout; no collect, no
-    * driver-side frontier. Rounds are FIXED (not run-to-convergence)
-    * so the oracle is a finite CTE chain; unreached nodes are absent
-    * rather than ∞-labeled. */
   /** Bounded-horizon HARMONIC centrality probes of the hub set: for
     * the `k` highest-degree nodes (deterministic pick — degree desc,
     * node asc), multi-source BFS to `maxDepth` and
@@ -1460,6 +1440,16 @@ object GraphOps {
       .orderBy(col("root"))
   }
 
+  /** Synchronous BFS from the backbone's minimum part key over the
+    * SYMMETRIC edge set: (node, depth) for every node within
+    * `maxDepth` hops — the reachability shell a "how far does
+    * influence spread" question needs, and the only distance operator
+    * in the suite (PPR measures mass, not hops). Each round is one
+    * frontier⋈edges shuffle keyed on the node plus an anti-join
+    * against the visited set — the Pregel layout; no collect, no
+    * driver-side frontier. Rounds are FIXED (not run-to-convergence)
+    * so the oracle is a finite CTE chain; unreached nodes are absent
+    * rather than ∞-labeled. */
   def bfsDepths(spark: SparkSession, sfDir: String,
       maxDepth: Int): DataFrame = {
     val sym = symmetric(backbone(spark, sfDir))

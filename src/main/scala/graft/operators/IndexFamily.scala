@@ -283,11 +283,18 @@ object IndexFamily {
     rows.select(col(idCol).cast("long").as(idCol), col(payloadCol))
       .groupBy(col(idCol)).agg(max(col(payloadCol)).as(payloadCol))
 
-  /** A vector family: a [[copied]] row keyed on `vec_id`. */
+  /** A vector family: a [[copied]] row keyed on `vec_id` whose append
+    * appends each table `encode` makes of the batch, by name, in order
+    * — the layout's one encoder, which its build, derive and retrain
+    * write through too ([[VectorOps.writeGeneration]]). */
   private[graft] def vector(tables: Seq[String],
-      append: (SparkSession, String, DataFrame) => Unit): IndexFamily =
+      encode: VectorOps.Encoder): IndexFamily =
     copied("vec_id", "embedding", embeddingType, tables, Seq("vec_id"),
-      append)
+      (s, t, rows) => {
+        graft.functions.GraftFunctions.register(s)
+        encode(s, t, rows).foreach { case (x, r) =>
+          appendByName(r, t + x, None) }
+      })
 
   /** Copies every table of generation `src` to `dest`, each under
     * `dir(suffix)`, by the layout the table already has — never a
@@ -354,7 +361,7 @@ object IndexFamily {
 
   // `path/<suffix>`, `path/rows` for the `""` table, so a sidecar's
   // directory never sits inside it
-  private def under(path: String)(t: String): String =
+  private[graft] def under(path: String)(t: String): String =
     s"$path/${if (t.isEmpty) "rows" else t.stripPrefix("_")}"
 
   /** Postings + BM25 norms, keyed on `doc_id`. `numBuckets` reaches
@@ -392,26 +399,24 @@ object IndexFamily {
     Dedup.appendToBandIndex(_, _, _, "doc_id", "text", numBuckets))
 
   /** IVF lists under the frozen coarse quantizer. */
-  val ivf: IndexFamily = vector(Seq("_cents", "_lists"),
-    VectorOps.appendToIvfIndex)
+  val ivf: IndexFamily = vector(Seq("_cents", "_lists"), VectorOps.ivfLists)
 
   /** int8-coded IVF lists. */
-  val sq8: IndexFamily = vector(Seq("_cents", "_lists"),
-    VectorOps.appendToIvfIndexSq8)
+  val sq8: IndexFamily = vector(Seq("_cents", "_lists"), VectorOps.sq8Lists)
 
   /** Sign-mask lists packed through the frozen quantizer. */
-  val binary: IndexFamily = vector(Seq("_cents", "_lists"),
-    VectorOps.appendToIvfIndexBinary)
+  val binary: IndexFamily =
+    vector(Seq("_cents", "_lists"), VectorOps.binaryLists)
 
   /** Matryoshka prefix epoch — the prefix is a `slice()`, order-free, so
     * drain-time inserts are settle-equivalent. */
-  val mrl: IndexFamily = vector(Seq("_cents", "_prefix", "_nodes"),
-    VectorOps.appendToMrlIndex)
+  val mrl: IndexFamily =
+    vector(Seq("_cents", "_prefix", "_nodes"), VectorOps.mrlPrefixes)
 
   /** Flat PQ codes under the frozen codebooks (8 subspaces of 64 dims —
     * the served epoch's shape). */
-  val pq: IndexFamily = vector(Seq("_codebooks", "_codes"),
-    VectorOps.appendToPqIndex(_, _, _))
+  val pq: IndexFamily =
+    vector(Seq("_codebooks", "_codes"), VectorOps.pqCodes(8, 64))
 
   /** kNN-graph generation — the one family whose INSERTs queue. A
     * dropped node's edges purge in both directions (`src`, `dst`); an
@@ -426,11 +431,9 @@ object IndexFamily {
   /** IVF lists of PQ codes; `m`/`dim` serve the drain-time encode AND the
     * settle's re-encode, so a non-default index keeps its subspaces. */
   def ivfPq(m: Int, dim: Int): IndexFamily = vector(
-    Seq("_cents", "_codebooks", "_codes"),
-    VectorOps.appendToIvfPqIndex(_, _, _, m, dim))
+    Seq("_cents", "_codebooks", "_codes"), VectorOps.ivfPqCodes(m, dim))
 
   /** IVF-PQ over residuals against the list centroids. */
   def ivfPqResidual(m: Int, dim: Int): IndexFamily = vector(
-    Seq("_cents", "_codebooks", "_codes"),
-    VectorOps.appendToIvfPqResidualIndex(_, _, _, m, dim))
+    Seq("_cents", "_codebooks", "_codes"), VectorOps.ivfPqResidualCodes(m, dim))
 }

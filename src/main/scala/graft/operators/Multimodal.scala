@@ -256,15 +256,15 @@ object Multimodal {
     }
   }
 
-  /** The dup-injected image corpus: one PNG per doc plus an IDENTICAL
-    * twin (same seed, new id ≥ 100000) for every %10==3 doc — the media
-    * analog of `TextQueries.dupCorpus`, so perceptual dedup has real
-    * duplicate families to find. */
   /** Named twin key: which RASTER (`seed`) a media row renders —
     * positional (Long, Long) tuples made a silent seed-vs-id swap in
     * one union branch possible (ADVICE r14). */
   case class Seeded(mediaId: Long, seed: Long)
 
+  /** The dup-injected image corpus: one PNG per doc plus an IDENTICAL
+    * twin (same seed, new id ≥ 100000) for every %10==3 doc — the media
+    * analog of `TextQueries.dupCorpus`, so perceptual dedup has real
+    * duplicate families to find. */
   def dupImages(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
     val seeds = docs.select(col("doc_id")).as[Long]

@@ -264,16 +264,6 @@ object PipelineOps {
       .drop("rk")
   }
 
-  /** Token-budget selection: per stratum, keep the highest-`quality`
-    * docs until the stratum's cumulative token count reaches
-    * `budgetTokens` — the "best N tokens per language" curation cut.
-    * Quality must be a deterministic, engine-portable expression
-    * ([[TextOps.qualityScore]] is; its floor quantization also makes the
-    * (quality desc, id) order total and engine-stable). A doc is kept
-    * while the budget is not yet exhausted INCLUDING itself, so the cut
-    * may overshoot by at most one doc — the contract that needs no
-    * look-behind. One shuffle (window per stratum; stratum count is
-    * bounded, each stratum's running sum is a linear scan). */
   /** Per-stratum QUANTILE gate — "keep the best `keepFrac` of every
     * source/domain" — the relative form of the absolute quality
     * threshold [[flagIngestBatch]] applies: an absolute cutoff starves
@@ -304,6 +294,16 @@ object PipelineOps {
         col("rk").cast("long").as("rk"))
   }
 
+  /** Token-budget selection: per stratum, keep the highest-`quality`
+    * docs until the stratum's cumulative token count reaches
+    * `budgetTokens` — the "best N tokens per language" curation cut.
+    * Quality must be a deterministic, engine-portable expression
+    * ([[TextOps.qualityScore]] is; its floor quantization also makes the
+    * (quality desc, id) order total and engine-stable). A doc is kept
+    * while the budget is not yet exhausted INCLUDING itself, so the cut
+    * may overshoot by at most one doc — the contract that needs no
+    * look-behind. One shuffle (window per stratum; stratum count is
+    * bounded, each stratum's running sum is a linear scan). */
   def tokenBudgetSelect(df: DataFrame, idCol: String, stratumCol: String,
       qualityCol: Column, tokensCol: Column, budgetTokens: Long): DataFrame = {
     val w = Window.partitionBy(col(stratumCol))

@@ -212,7 +212,8 @@ object SearchOps {
   /** Append newly-ingested documents to an existing [[writeSearchIndex]]
     * table — retrieval's index maintenance between rebuild epochs (the
     * third member of the append family next to
-    * [[Dedup.appendToBandIndex]] and [[VectorOps.appendToIvfIndex]]):
+    * [[Dedup.appendToBandIndex]] and the IVF append,
+    * [[VectorOps.ivfLists]]):
     * the batch's posting rows are appended under the same `term` bucket
     * spec, so each append is one more correctly-bucketed file group per
     * bucket; probes keep their bucket-pruned scan (per-bucket file

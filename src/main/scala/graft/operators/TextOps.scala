@@ -216,21 +216,6 @@ object TextOps {
       .otherwise(size(array_intersect(a, b)).cast("double") /
         size(array_distinct(concat(a, b))).cast("double"))
 
-  /** Per-doc top-`k` DISTINCTIVE terms — tf-idf semantics in pure
-    * integer math: rank a doc's terms by (tf desc, df asc, term asc),
-    * i.e. frequent in the doc, rare in the corpus. The lexicographic
-    * integer ordering keeps the result bit-exact across engines, where
-    * a real tf·log(N/df) score would hash-drift on the last ulp of the
-    * engines' differing log implementations (the determinism rule this
-    * file lives by).
-    *
-    * The only CORPUS-RELATIVE text operator (everything above is
-    * per-row): two aggregation passes — (doc, term) term frequencies
-    * with map-side combine, then term document frequencies over the
-    * distinct (doc, term) pairs — a term-keyed join of tf against the
-    * much smaller df side (broadcast when the vocabulary fits; AQE
-    * decides), and a per-doc top-k window. The canonical two-pass
-    * corpus-statistics shape at 100 TB; nothing is ever collected. */
   /** Unigram language-model quality score — the CCNet-style perplexity
     * proxy: train a unigram LM on the corpus itself (token counts over
     * total), score each document by its mean token log-probability.
@@ -363,6 +348,21 @@ object TextOps {
           .cast("long")).as("wq"))
   }
 
+  /** Per-doc top-`k` DISTINCTIVE terms — tf-idf semantics in pure
+    * integer math: rank a doc's terms by (tf desc, df asc, term asc),
+    * i.e. frequent in the doc, rare in the corpus. The lexicographic
+    * integer ordering keeps the result bit-exact across engines, where
+    * a real tf·log(N/df) score would hash-drift on the last ulp of the
+    * engines' differing log implementations (the determinism rule this
+    * file lives by).
+    *
+    * The only CORPUS-RELATIVE text operator (everything above is
+    * per-row): two aggregation passes — (doc, term) term frequencies
+    * with map-side combine, then term document frequencies over the
+    * distinct (doc, term) pairs — a term-keyed join of tf against the
+    * much smaller df side (broadcast when the vocabulary fits; AQE
+    * decides), and a per-doc top-k window. The canonical two-pass
+    * corpus-statistics shape at 100 TB; nothing is ever collected. */
   def distinctiveTerms(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window

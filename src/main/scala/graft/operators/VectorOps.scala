@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -248,55 +248,25 @@ object VectorOps {
     * `_cents`), which is what makes the whole mutation lifecycle below
     * oracle-able against the untouched [[mrlTopK]] mirror. */
   def writeMrlIndex(corpus: DataFrame, table: String, path: String,
-      prefixDims: Int, numCentroids: Int = 16, trainIters: Int = 2): Unit = {
-    val spark = corpus.sparkSession
-    val pref = corpus.select(col("vec_id"),
-      slice(col("embedding"), 1, prefixDims).as("embedding"))
-    val trained = trainCentroids(pref, numCentroids, trainIters)
-    val centRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(centRdd, trained.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    assignLists(pref, broadcast(cents))
-      .select(col("vec_id"), col("embedding").as("prefix"), col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/prefix").saveAsTable(s"${table}_prefix")
-    corpus.select(col("vec_id"), col("embedding"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/nodes").saveAsTable(s"${table}_nodes")
-    centRdd.unpersist()
-    ()
-  }
+      prefixDims: Int, numCentroids: Int = 16, trainIters: Int = 2): Unit =
+    writeGeneration(corpus, table, path, Seq("_cents" -> ((_, _, c) =>
+      trainCentroids(c.select(col("vec_id"),
+        slice(col("embedding"), 1, prefixDims).as("embedding")),
+        numCentroids, trainIters))), mrlPrefixes)
 
-  /** The epoch's frozen prefix width, read back from ONE stored row —
-    * a 1-row driver collect (parameter-sized by construction), so the
-    * append/upsert derivation can never drift from what the epoch
-    * actually stores. */
-  private def mrlPrefixDims(spark: org.apache.spark.sql.SparkSession,
-      table: String): Int =
-    spark.table(s"${table}_prefix").select(size(col("prefix")))
-      .head().getInt(0)
-
-  /** Append a batch under the FROZEN derivation: prefixes are
-    * `slice()`s at the epoch's stored width, cells assigned by the
-    * frozen `_cents` — probing after append must equal probing the
+  /** The MRL encoder: `_prefix` rows are `slice()`s at the width of the
+    * frozen `_cents` — trained over prefixes, and copied verbatim by
+    * every compaction, so an emptied generation still knows it (a
+    * 1-row driver read) — listed by those centroids; `_nodes` keeps
+    * the full vectors. Probing after an append must equal probing the
     * union corpus (the oracle-ability contract every append in the
-    * family shares). One broadcast-assign of the (small) batch + a
-    * dynamic-partition insert + one row append; the indexed corpus is
-    * never read. */
-  def appendToMrlIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, batch: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val d = mrlPrefixDims(spark, table)
-    val cents = broadcast(spark.table(s"${table}_cents"))
-    IndexFamily.appendByName(assignLists(batch.select(col("vec_id"),
-        slice(col("embedding"), 1, d).as("embedding")), cents)
-      .select(col("vec_id"), col("embedding").as("prefix"), col("list_id")),
-      s"${table}_prefix", None)
-    IndexFamily.appendByName(batch.select(col("vec_id"), col("embedding")),
-      s"${table}_nodes", None)
+    * family shares); the indexed corpus is never read. */
+  private[graft] val mrlPrefixes: Encoder = (s, t, rows) => {
+    val d = s.table(s"${t}_cents").select(size(col("cv"))).head().getInt(0)
+    Seq("_prefix" -> listed(s, t,
+        rows.withColumn("embedding", slice(col("embedding"), 1, d)))
+        .select(col("vec_id"), col("embedding").as("prefix"), col("list_id")),
+      "_nodes" -> rows.select(col("vec_id"), col("embedding")))
   }
 
   /** Probe a [[writeMrlIndex]] epoch — identical output to [[mrlTopK]]
@@ -805,25 +775,28 @@ object VectorOps {
     * one-time whole-corpus encode — happens here once per epoch; a
     * probe then costs LUT build (KB) + the code scan + the fold.
     * Family contract mirrors [[writeIvfIndex]]: immutable generation,
-    * frozen-codebook [[appendToPqIndex]], seq-versioned tombstone
+    * frozen-codebook appends ([[pqCodes]]), seq-versioned tombstone
     * deletes (shared sidecar discipline — [[IndexFamily.delete]]
     * writes the `(vec_id, seq)` rows this probe anti-joins). */
   def writePqIndex(corpus: DataFrame, table: String, path: String,
       m: Int = 8, ksub: Int = 64, trainIters: Int = 2, dim: Int = 64,
-      trainLimit: Long = 16384L): Unit = {
-    val spark = corpus.sparkSession
-    val trained = pqTrainCodebooks(corpus, m, ksub, trainIters, dim,
-      trainLimit)
-    val centRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(centRdd, trained.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${table}_codebooks")
-    pqEncode(corpus, cents, m, dim)
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codes").saveAsTable(s"${table}_codes")
-    centRdd.unpersist()
-  }
+      trainLimit: Long = 16384L): Unit =
+    writeGeneration(corpus, table, path,
+      Seq(codebooks(m, ksub, trainIters, dim, trainLimit)), pqCodes(m, dim))
+
+  /** The PQ codebooks trainer ([[pqTrainCodebooks]] over the corpus). */
+  private[graft] def codebooks(m: Int, ksub: Int, iters: Int, dim: Int,
+      trainLimit: Long): (String, Trainer) =
+    ("_codebooks", (_, _, c) => pqTrainCodebooks(c, m, ksub, iters, dim,
+      trainLimit))
+
+  /** The PQ encoder: each row's codes under the frozen `_codebooks` —
+    * batch-sized broadcast work on an append, the indexed corpus never
+    * read. Probing after an append must equal encoding the UNION corpus
+    * against the original codebooks (PqSpec pins it): codebook drift is
+    * an epoch decision, not an append side effect. */
+  private[graft] def pqCodes(m: Int, dim: Int): Encoder = (s, t, rows) =>
+    Seq("_codes" -> pqEncode(rows, s.table(s"${t}_codebooks"), m, dim))
 
   /** Probe a [[writePqIndex]] table — identical output to [[pqTopK]]
     * with the same build parameters (shared encode/LUT/fold code), but
@@ -860,24 +833,6 @@ object VectorOps {
     pqRerankExact(scored, queries, corpus, k, shortlist)
   }
 
-  /** Admit a batch to a standing PQ index under its FROZEN codebooks —
-    * the PQ twin of [[appendToIvfIndex]]: encode the batch against
-    * `<table>_codebooks` (broadcast, batch-sized work — the indexed
-    * corpus is never read) and append the code rows. Probing after
-    * append must equal encoding the UNION corpus against the original
-    * codebooks (PqSpec pins it) — codebook drift is an epoch decision,
-    * not an append side effect. */
-  def appendToPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, batch: DataFrame, m: Int = 8, dim: Int = 64): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = spark.table(s"${table}_codebooks")
-    IndexFamily.appendByName(pqEncode(batch, cents, m, dim),
-      s"${table}_codes", None)
-  }
-
-  /** Sign-pattern bucket of the first `bits` dimensions — an axis-aligned
-    * random-hyperplane LSH (hyperplanes = coordinate planes; for unit-scale
-    * embeddings each bit is ~balanced, giving 2^bits roughly even buckets). */
   /** Pack `n` sign bits of a float vector (dims `from+1 … from+n`,
     * little-endian) into one long — the BINARY-quantization encode
     * (Weaviate/Qdrant "BQ", 64× compression vs float32): bit i set iff
@@ -946,6 +901,9 @@ object VectorOps {
       .filter(col("rk") <= k)
   }
 
+  /** Sign-pattern bucket of the first `bits` dimensions — an axis-aligned
+    * random-hyperplane LSH (hyperplanes = coordinate planes; for unit-scale
+    * embeddings each bit is ~balanced, giving 2^bits roughly even buckets). */
   def signBucket(v: Column, bits: Int = 4): Column =
     (0 until bits).map(i => when(v(i) > 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
 
@@ -1229,6 +1187,71 @@ object VectorOps {
       .select(col("best.cid").as("list_id"), col("vec_id"),
         col("best.embedding").as("embedding"))
 
+  // ------------------------------------------------- generation writes
+
+  /** A frozen table's trainer: `(session, generation, corpus)` → the
+    * table's rows. It may read the generation's tables written before
+    * it. */
+  private[graft] type Trainer = (SparkSession, String, DataFrame) => DataFrame
+
+  /** A vector layout's encoder: `(session, generation, rows)` → each
+    * encoded table's suffix and rows, in write order. It reads the
+    * generation's frozen tables (`_cents`, `_codebooks`) from the
+    * catalog and assigns lists only to rows that carry no `list_id`, so
+    * a layout's build, append ([[IndexFamily.vector]]), derive and
+    * retrain encode a vector one way. */
+  private[graft] type Encoder =
+    (SparkSession, String, DataFrame) => Seq[(String, DataFrame)]
+
+  /** Writes generation `table` under `path` from `corpus`: first each
+    * frozen table from its trainer, in order, then each table `encode`
+    * makes of the corpus, `partitionBy(list_id)` when it has that
+    * column. The encoder reads the quantizers back from the catalog, so
+    * a trained frame runs once, in its own write. */
+  private[graft] def writeGeneration(corpus: DataFrame, table: String,
+      path: String, trainers: Seq[(String, Trainer)],
+      encode: Encoder): Unit = {
+    val spark = corpus.sparkSession
+    graft.functions.GraftFunctions.register(spark)
+    def save(suffix: String, rows: DataFrame): Unit =
+      rows.write.mode("overwrite").format("parquet")
+        .partitionBy(Seq("list_id").filter(rows.columns.contains): _*)
+        .option("path", IndexFamily.under(path)(suffix))
+        .saveAsTable(table + suffix)
+    trainers.foreach { case (t, train) => save(t, train(spark, table, corpus)) }
+    encode(spark, table, corpus).foreach { case (t, rows) => save(t, rows) }
+  }
+
+  /** The coarse quantizer's trainer ([[trainCentroids]]). */
+  private def coarse(numCentroids: Int, iters: Int): (String, Trainer) =
+    ("_cents", (_, _, c) => trainCentroids(c, numCentroids, iters))
+
+  /** `rows` with the list each one sits in under generation `t`'s
+    * frozen `_cents`: as they are when they carry a `list_id` (a derive
+    * keeps its master's assignment verbatim), else [[assignLists]]. */
+  private def listed(s: SparkSession, t: String, rows: DataFrame)
+      : DataFrame =
+    if (rows.columns.contains("list_id")) rows
+    else assignLists(rows, broadcast(s.table(s"${t}_cents")))
+
+  /** Writes generation `dest` of a layout from the float IVF master
+    * `src` — how a retrained float master regains its compact serving
+    * copies: the writer run over the master's LIVE list rows (pending
+    * deletes settle here, like compaction), `_cents` read from the
+    * master. The rows carry `list_id`, so the assignment is kept
+    * verbatim; only the other `trainers` train, over the master's
+    * corpus. No Lloyd pass, no re-assignment — result-identical to a
+    * build of the layout over that corpus, so a derived generation
+    * shares the build's oracle. */
+  private[graft] def derive(spark: SparkSession, src: String, dest: String,
+      path: String, trainers: Seq[(String, Trainer)],
+      encode: Encoder): Unit = {
+    val masterCents: Trainer = (s, _, _) => s.table(s"${src}_cents")
+    writeGeneration(
+      IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id"),
+      dest, path, ("_cents" -> masterCents) +: trainers, encode)
+  }
+
   /** Rank centroids per query and keep each query's `nProbe` nearest
     * lists: (list_id, query_id, qv). Shared by both IVF paths. */
   private def probeLists(queries: DataFrame, cents: DataFrame,
@@ -1288,22 +1311,29 @@ object VectorOps {
     * at any corpus size. Written once per full-index epoch; every query
     * batch probes it via [[probeIvfIndex]]. */
   def writeIvfIndex(corpus: DataFrame, table: String, path: String,
-      numCentroids: Int = 16, trainIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    val trained = trainCentroids(corpus, numCentroids, trainIters)
-    // referenced twice (own write + assignment) — same replayable
-    // RDD-persist pattern as ivfTopK; freed before returning
-    val centRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(centRdd, trained.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    assignLists(corpus, broadcast(cents))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${table}_lists")
-    centRdd.unpersist()
-  }
+      numCentroids: Int = 16, trainIters: Int = 0): Unit =
+    writeGeneration(corpus, table, path, Seq(coarse(numCentroids, trainIters)),
+      ivfLists)
+
+  /** The float IVF encoder — also the index MAINTENANCE operation
+    * between full-rebuild epochs ([[IndexFamily.ivf]]'s append): new
+    * vectors are assigned to the EXISTING (frozen) coarse quantizer and
+    * inserted into their lists' partitions; the corpus already in the
+    * index is never read, never reshuffled, never rewritten. This is
+    * how a 100 TB ANN deployment actually lives — one quantizer-training
+    * epoch write, then cheap per-batch appends until list imbalance
+    * (centroid drift) warrants retraining. The append is one
+    * broadcast-assign of the (small) batch + a dynamic-partition
+    * insert; probe cost afterwards is unchanged (same partition
+    * pruning, lists just grow by the batch).
+    *
+    * The frozen-quantizer semantics are the definition, not a
+    * shortcut: probing after append must equal probing the UNION
+    * corpus against the original centroids (IvfIndexSpec pins exactly
+    * that), which is what makes the operation oracle-able. */
+  private[graft] val ivfLists: Encoder = (s, t, rows) =>
+    Seq("_lists" -> listed(s, t, rows)
+      .select(col("vec_id"), col("embedding"), col("list_id")))
 
   /** Probe a [[writeIvfIndex]] table — identical output to [[ivfTopK]]
     * with the same (numCentroids, trainIters) (shared assignment/probe/
@@ -1368,21 +1398,18 @@ object VectorOps {
     * product of both savings. Quantization happens once at index-write
     * time (staged-scale [[withQuantized]]), not per probe. */
   def writeIvfIndexSq8(corpus: DataFrame, table: String, path: String,
-      numCentroids: Int = 16, trainIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    val trained = trainCentroids(corpus, numCentroids, trainIters)
-    val centRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(centRdd, trained.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    withQuantized(assignLists(corpus, broadcast(cents)), "embedding", "qe")
-      .select(col("list_id"), col("vec_id"), col("qe"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${table}_lists")
-    centRdd.unpersist()
-  }
+      numCentroids: Int = 16, trainIters: Int = 0): Unit =
+    writeGeneration(corpus, table, path, Seq(coarse(numCentroids, trainIters)),
+      sq8Lists)
+
+  /** The SQ8 encoder: [[ivfLists]]' frozen float assignment, int8 codes
+    * into the lists. Over a float master's list rows (a derive) it is
+    * one partition-preserving map — bit-identical to a direct build
+    * over the same corpus (same centroids, same float-cosine
+    * assignment, same scan-side quantization). */
+  private[graft] val sq8Lists: Encoder = (s, t, rows) =>
+    Seq("_lists" -> withQuantized(listed(s, t, rows), "embedding", "qe")
+      .select(col("vec_id"), col("qe"), col("list_id")))
 
   /** Probe a [[writeIvfIndexSq8]] table — identical output to
     * [[ivfTopKSq8]] with the same (numCentroids, trainIters): shared
@@ -1413,25 +1440,16 @@ object VectorOps {
     * exactly the SQ8 argument one step further down the
     * precision/bandwidth trade. */
   def writeIvfIndexBinary(corpus: DataFrame, table: String, path: String,
-      numCentroids: Int = 16, trainIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val trained = trainCentroids(corpus, numCentroids, trainIters)
-    val centRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(centRdd, trained.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    assignLists(corpus, broadcast(cents))
-      .select(col("vec_id"),
-        packSignBits(col("embedding"), 0, 32).as("hi"),
-        packSignBits(col("embedding"), 32, 32).as("lo"),
-        col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${table}_lists")
-    centRdd.unpersist()
-  }
+      numCentroids: Int = 16, trainIters: Int = 0): Unit =
+    writeGeneration(corpus, table, path, Seq(coarse(numCentroids, trainIters)),
+      binaryLists)
+
+  /** The binary encoder: [[ivfLists]]' frozen assignment, each row's
+    * sign mask packed into two halves ([[packSignBits]]). */
+  private[graft] val binaryLists: Encoder = (s, t, rows) =>
+    Seq("_lists" -> listed(s, t, rows).select(col("vec_id"),
+      packSignBits(col("embedding"), 0, 32).as("hi"),
+      packSignBits(col("embedding"), 32, 32).as("lo"), col("list_id")))
 
   /** Probe a [[writeIvfIndexBinary]] table: coarse prune (DPP — same
     * plan contract as the SQ8 probe), then hamming-rank the probed
@@ -1456,19 +1474,6 @@ object VectorOps {
       .orderBy(col("hamming"), col("neighbor_id"))
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
-  }
-
-  /** [[appendToIvfIndexSq8]]'s binary twin: frozen-quantizer
-    * assignment, sign-mask packing into the list partitions. */
-  def appendToIvfIndexBinary(spark: org.apache.spark.sql.SparkSession,
-      table: String, batch: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = broadcast(spark.table(s"${table}_cents"))
-    IndexFamily.appendByName(assignLists(batch, cents)
-      .select(col("vec_id"),
-        packSignBits(col("embedding"), 0, 32).as("hi"),
-        packSignBits(col("embedding"), 32, 32).as("lo"),
-        col("list_id")), s"${table}_lists", None)
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -1583,29 +1588,26 @@ object VectorOps {
   def writeIvfPqIndex(corpus: DataFrame, table: String, path: String,
       numCentroids: Int = 16, trainIters: Int = 0, m: Int = 8,
       ksub: Int = 16, pqIters: Int = 2, dim: Int = 64,
-      trainLimit: Long = 16384L): Unit = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val coarse = trainCentroids(corpus, numCentroids, trainIters)
-    val coarseRdd = coarse.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(coarseRdd, coarse.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    val trained = pqTrainCodebooks(corpus, m, ksub, pqIters, dim, trainLimit)
-    val pqRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pcents = spark.createDataFrame(pqRdd, trained.schema)
-    pcents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${table}_codebooks")
-    pqEncode(corpus, pcents, m, dim)
-      .join(assignLists(corpus, broadcast(cents))
-        .select(col("vec_id"), col("list_id")), Seq("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${table}_codes")
-    coarseRdd.unpersist(); pqRdd.unpersist()
-  }
+      trainLimit: Long = 16384L): Unit =
+    writeGeneration(corpus, table, path, Seq(coarse(numCentroids, trainIters),
+      codebooks(m, ksub, pqIters, dim, trainLimit)), ivfPqCodes(m, dim))
+
+  /** The IVF-PQ encoder, under BOTH frozen quantizers: each vector
+    * joins its list ([[ivfLists]]' assignment) and is encoded with the
+    * frozen codebooks (batch-sized broadcast work on an append — the
+    * indexed corpus is never read). Probing after an append must equal
+    * building over the union corpus with the same frozen quantizers
+    * (IvfPqSpec pins it). */
+  private[graft] def ivfPqCodes(m: Int, dim: Int): Encoder = (s, t, rows) =>
+    Seq("_codes" -> listCodes(s, t, rows, listed(s, t, rows), m, dim))
+
+  // `rows`' codes under generation `t`'s `_codebooks`, each joined to
+  // its list in `lists`
+  private def listCodes(s: SparkSession, t: String, rows: DataFrame,
+      lists: DataFrame, m: Int, dim: Int): DataFrame =
+    pqEncode(rows, s.table(s"${t}_codebooks"), m, dim)
+      .join(lists.select(col("vec_id"), col("list_id")), Seq("vec_id"))
+      .select(col("vec_id"), col("s"), col("cid"), col("list_id"))
 
   /** Probe a [[writeIvfPqIndex]] table — identical output to
     * [[ivfPqTopK]] with the same build parameters (shared probe-rank /
@@ -1648,25 +1650,6 @@ object VectorOps {
     pqRerankExact(scored, queries, corpus, k, shortlist)
   }
 
-  /** Admit a batch under BOTH frozen quantizers — the IVF-PQ member of
-    * the append family: assign each incoming vector to its list with
-    * the frozen coarse centroids, encode it with the frozen codebooks
-    * (batch-sized broadcast work — the indexed corpus is never read),
-    * and append into the list partitions. Probing after append must
-    * equal building over the union corpus with the same frozen
-    * quantizers (IvfPqSpec pins it). */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, batch: DataFrame, m: Int = 8, dim: Int = 64): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = broadcast(spark.table(s"${table}_cents"))
-    val pcents = spark.table(s"${table}_codebooks")
-    IndexFamily.appendByName(pqEncode(batch, pcents, m, dim)
-      .join(assignLists(batch, cents).select(col("vec_id"), col("list_id")),
-        Seq("vec_id"))
-      .select(col("vec_id"), col("s"), col("cid"), col("list_id")),
-      s"${table}_codes", None)
-  }
-
   /** The residual frame behind `by_residual=true`: every vector minus
     * its OWN list's coarse centroid, elementwise in FLOAT (single
     * rounding — the oracle mirrors it with `CAST(x::DOUBLE − c::DOUBLE
@@ -1676,12 +1659,15 @@ object VectorOps {
     * residual PQ is the standard recall-per-byte win (FAISS
     * IndexIVFPQ's default) — `sim_ann_ivfpq_residual_recall` audits
     * what it buys on this corpus. */
-  private def residualCorpus(corpus: DataFrame, cents: DataFrame): DataFrame =
-    assignLists(corpus, cents)
+  private def residuals(s: SparkSession, t: String, rows: DataFrame)
+      : DataFrame = {
+    val cents = broadcast(s.table(s"${t}_cents"))
+    listed(s, t, rows)
       .join(cents.select(col("cid").as("list_id"), col("cv")), Seq("list_id"))
       .select(col("vec_id"), col("list_id"),
         zip_with(col("embedding"), col("cv"),
           (x, c) => (x - c).cast("float")).as("embedding"))
+  }
 
   /** [[writeIvfPqIndex]] with RESIDUAL encoding (`by_residual=true`):
     * PQ codebooks train on — and codes quantize — each vector's
@@ -1694,35 +1680,28 @@ object VectorOps {
   def writeIvfPqResidualIndex(corpus: DataFrame, table: String,
       path: String, numCentroids: Int = 16, trainIters: Int = 0,
       m: Int = 8, ksub: Int = 16, pqIters: Int = 2, dim: Int = 64,
-      trainLimit: Long = 16384L): Unit = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val coarse = trainCentroids(corpus, numCentroids, trainIters)
-    val coarseRdd = coarse.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.createDataFrame(coarseRdd, coarse.schema)
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${table}_cents")
-    // the residual frame feeds train AND encode — persist the narrow
-    // (vec_id, list_id, residual) rows so the assignment cross-join
-    // does not re-execute per consumer (same replayable-RDD pattern)
-    val rsd0 = residualCorpus(corpus, broadcast(cents))
-    val rsdRdd = rsd0.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rsd = spark.createDataFrame(rsdRdd, rsd0.schema)
-    val trained = pqTrainCodebooks(rsd, m, ksub, pqIters, dim, trainLimit)
-    val pqRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pcents = spark.createDataFrame(pqRdd, trained.schema)
-    pcents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${table}_codebooks")
-    pqEncode(rsd, pcents, m, dim)
-      .join(rsd.select(col("vec_id"), col("list_id")), Seq("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${table}_codes")
-    coarseRdd.unpersist(); rsdRdd.unpersist(); pqRdd.unpersist()
-  }
+      trainLimit: Long = 16384L): Unit =
+    writeGeneration(corpus, table, path, Seq(coarse(numCentroids, trainIters),
+      residualCodebooks(m, ksub, pqIters, dim, trainLimit)),
+      ivfPqResidualCodes(m, dim))
+
+  /** The residual codebooks trainer: [[pqTrainCodebooks]] over the
+    * corpus' [[residuals]] against the `_cents` written before it —
+    * residuals move when the centroids do, which is why a drifted
+    * residual family must retrain rather than keep appending. */
+  private[graft] def residualCodebooks(m: Int, ksub: Int, iters: Int,
+      dim: Int, trainLimit: Long): (String, Trainer) =
+    ("_codebooks", (s, t, c) => pqTrainCodebooks(residuals(s, t, c), m, ksub,
+      iters, dim, trainLimit))
+
+  /** The residual IVF-PQ encoder, under both frozen quantizers: the
+    * assigned centroid subtracted ([[residuals]]), the residual encoded
+    * with the frozen codebooks. */
+  private[graft] def ivfPqResidualCodes(m: Int, dim: Int): Encoder =
+    (s, t, rows) => {
+      val r = residuals(s, t, rows)
+      Seq("_codes" -> listCodes(s, t, r, r, m, dim))
+    }
 
   /** Probe a [[writeIvfPqResidualIndex]] table. The ADC identity shifts
     * by the list centroid: with x̂ = c_L + r̂,
@@ -1803,178 +1782,6 @@ object VectorOps {
           .as("cos_sim"))
   }
 
-  /** Admit a batch to a RESIDUAL IVF-PQ index under both frozen
-    * quantizers: assign by the frozen coarse centroids, subtract the
-    * assigned centroid, encode the residual with the frozen codebooks —
-    * the residual member of the append family (probing after append
-    * equals the frozen union build, like every other member). */
-  def appendToIvfPqResidualIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, batch: DataFrame, m: Int = 8, dim: Int = 64): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = spark.table(s"${table}_cents")
-    val pcents = spark.table(s"${table}_codebooks")
-    val rsd = residualCorpus(batch, broadcast(cents))
-    IndexFamily.appendByName(pqEncode(rsd, pcents, m, dim)
-      .join(rsd.select(col("vec_id"), col("list_id")), Seq("vec_id"))
-      .select(col("vec_id"), col("s"), col("cid"), col("list_id")),
-      s"${table}_codes", None)
-  }
-
-  /** Full requantization epoch for the IVF-PQ index — the remedy
-    * [[retrainCheck]]-style drift monitoring calls for once frozen
-    * quantizers stop describing a grown corpus: BOTH quantizers
-    * retrain (coarse K re-derived as √N of the live corpus; PQ
-    * codebooks re-Lloyd on the deterministic sample) and the corpus
-    * re-assigns + re-encodes into a fresh generation.
-    *
-    * Unlike [[retrainIvfIndex]], the composite's serving artifact
-    * carries NO float vectors (codes are the whole point) — so the
-    * retrain takes the lake `corpus` as input, which is how a real
-    * deployment works: codes serve, floats live in the lake, a
-    * requantization epoch reads the lake once. The src index still
-    * contributes its tombstones: deleted ids neither train nor serve
-    * in the new generation. */
-  def retrainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, corpus: DataFrame,
-      trainIters: Int = 2, m: Int = 8, ksub: Int = 16, pqIters: Int = 2,
-      dim: Int = 64, trainLimit: Long = 16384L): Unit = {
-    val (live, k) = retrainInput(spark, src, corpus)
-    writeIvfPqIndex(live, dest, path, numCentroids = k,
-      trainIters = trainIters, m = m, ksub = ksub, pqIters = pqIters,
-      dim = dim, trainLimit = trainLimit)
-  }
-
-  /** The shared prologue of every lossy-family requantization epoch:
-    * drop `src`'s tombstoned ids from the lake `corpus` (deleted
-    * vectors neither train nor serve in the new generation) and
-    * re-derive K = max(4, ⌊√n⌋) from the live corpus size — the two
-    * things retraining exists to refresh. One metadata-cheap count;
-    * the Lloyd passes that follow dominate. */
-  private def retrainInput(spark: org.apache.spark.sql.SparkSession,
-      src: String, corpus: DataFrame): (DataFrame, Int) = {
-    val live = IndexFamily.live(spark, src, corpus, "vec_id")
-    (live, math.max(4,
-      math.floor(math.sqrt(live.count().toDouble)).toInt))
-  }
-
-  /** [[retrainIvfPqIndex]]'s SQ8 twin (VERDICT r14 #2 — retrain
-    * symmetry for the lossy families): SQ8 lists carry int8 codes, so
-    * the requantization epoch reads the float corpus from the lake,
-    * retrains the coarse quantizer over it with re-derived K, and
-    * re-encodes through the family's own scan-side int8 quantization
-    * ([[writeIvfIndexSq8]]) — a new generation equal to a fresh SQ8
-    * build over the live corpus, which is what makes it oracle-able. */
-  def retrainIvfIndexSq8(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, corpus: DataFrame,
-      trainIters: Int = 2): Unit = {
-    val (live, k) = retrainInput(spark, src, corpus)
-    writeIvfIndexSq8(live, dest, path, numCentroids = k,
-      trainIters = trainIters)
-  }
-
-  /** [[retrainIvfIndexSq8]] for the binary (sign-mask) family: same
-    * lake-corpus retrain contract, re-encode = [[packSignBits]] —
-    * completing delete/update/compact/monitor/RETRAIN symmetry for the
-    * coarsest member of the compression spectrum. */
-  def retrainIvfIndexBinary(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, corpus: DataFrame,
-      trainIters: Int = 2): Unit = {
-    val (live, k) = retrainInput(spark, src, corpus)
-    writeIvfIndexBinary(live, dest, path, numCentroids = k,
-      trainIters = trainIters)
-  }
-
-  /** [[retrainIvfPqIndex]] for the RESIDUAL (`by_residual=true`)
-    * layout: both quantizers retrain over the lake corpus — fresh
-    * coarse centroids (new K), fresh codebooks over the residuals
-    * AGAINST those new centroids (residuals move when the centroids
-    * do, which is exactly why a drifted residual family must retrain
-    * rather than keep appending). Result-defined equal to a fresh
-    * [[writeIvfPqResidualIndex]] over the live corpus. */
-  def retrainIvfPqResidualIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, corpus: DataFrame,
-      trainIters: Int = 2, m: Int = 8, ksub: Int = 16, pqIters: Int = 2,
-      dim: Int = 64, trainLimit: Long = 16384L): Unit = {
-    val (live, k) = retrainInput(spark, src, corpus)
-    writeIvfPqResidualIndex(live, dest, path, numCentroids = k,
-      trainIters = trainIters, m = m, ksub = ksub, pqIters = pqIters,
-      dim = dim, trainLimit = trainLimit)
-  }
-
-  /** Derive an IVF-PQ serving generation from a float IVF master — the
-    * [[deriveSq8Index]] analog for the composite, and the migration
-    * path a deployment takes from flat-IVF to IVF-PQ serving: the
-    * coarse quantizer and the list assignment copy VERBATIM (no Lloyd
-    * pass, no re-assignment), only the PQ codebooks train (on the
-    * deterministic sample of the master's live corpus) and the list
-    * rows encode in place, `list_id` kept. Because the master's
-    * quantizer IS the fresh build's quantizer when both trained on the
-    * same corpus, the derived index is result-identical to
-    * [[writeIvfPqIndex]] over that corpus — one oracle, another plan.
-    * Pending deletes settle here like every derive/compact edge. */
-  def deriveIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, m: Int = 8, ksub: Int = 16,
-      pqIters: Int = 2, dim: Int = 64,
-      trainLimit: Long = 16384L): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    val live = IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
-    val corpus = live.select(col("vec_id"), col("embedding"))
-    val trained = pqTrainCodebooks(corpus, m, ksub, pqIters, dim, trainLimit)
-    val pqRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pcents = spark.createDataFrame(pqRdd, trained.schema)
-    pcents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    pqEncode(corpus, pcents, m, dim)
-      .join(live.select(col("vec_id"), col("list_id")), Seq("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    pqRdd.unpersist()
-  }
-
-  /** [[deriveIvfPqIndex]] with RESIDUAL encoding — completes the derive
-    * symmetry (SQ8 / IVF-PQ / binary / residual): the float master's
-    * coarse quantizer AND assignment copy verbatim, residuals compute
-    * against the assigned centroids the master already stored
-    * (`list_id` is in the lists — no re-assignment cross-join), only
-    * the codebooks train (on the residual sample) and the codes encode.
-    * Result-identical to [[writeIvfPqResidualIndex]] over the same
-    * corpus, so the derived generation shares the residual oracle. */
-  def deriveIvfPqResidualIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String, m: Int = 8, ksub: Int = 16,
-      pqIters: Int = 2, dim: Int = 64,
-      trainLimit: Long = 16384L): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = spark.table(s"${src}_cents")
-    cents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    val live = IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
-    val rsd0 = live
-      .join(broadcast(cents.select(col("cid").as("list_id"), col("cv"))),
-        Seq("list_id"))
-      .select(col("vec_id"), col("list_id"),
-        zip_with(col("embedding"), col("cv"),
-          (x, c) => (x - c).cast("float")).as("embedding"))
-    val rsdRdd = rsd0.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rsd = spark.createDataFrame(rsdRdd, rsd0.schema)
-    val trained = pqTrainCodebooks(rsd, m, ksub, pqIters, dim, trainLimit)
-    val pqRdd = trained.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pcents = spark.createDataFrame(pqRdd, trained.schema)
-    pcents.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/codebooks").saveAsTable(s"${dest}_codebooks")
-    pqEncode(rsd, pcents, m, dim)
-      .join(rsd.select(col("vec_id"), col("list_id")), Seq("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/codes").saveAsTable(s"${dest}_codes")
-    rsdRdd.unpersist(); pqRdd.unpersist()
-  }
-
   /** The retrain DECISION over a persisted index's list-size
     * distribution — the operator that closes the monitor→retrain edge
     * of the lifecycle (build → append* → compact → monitor → retrain):
@@ -2018,53 +1825,6 @@ object VectorOps {
         col("max_over_mean_x1000") >= maxOverMeanX1000 ||
           col("top_frac_x1000") >= topFracX1000)
 
-  /** Derive an SQ8 serving generation from a float master index — the
-    * step the retrain workflow ends with ([[retrainIvfIndex]] rebuilds
-    * the float master; this re-derives the compact serving copy): the
-    * coarse quantizer is copied VERBATIM and each list row's payload is
-    * quantized to int8 in place, `list_id` kept — no Lloyd pass, no
-    * re-assignment, one partition-preserving map over the lists. The
-    * derived index is bit-identical to what [[writeIvfIndexSq8]] would
-    * build from the same corpus (same centroids, same float-cosine
-    * assignment, same scan-side quantization), which is what makes it
-    * oracle-able by the existing SQ8 mirror — one oracle, another
-    * plan. */
-  def deriveSq8Index(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    // the derived serving copy takes only LIVE rows (pending deletes
-    // settle here, like compaction) — assignment still copied verbatim
-    withQuantized(
-        IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id"),
-        "embedding", "qe")
-      .select(col("vec_id"), col("qe"), col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
-  }
-
-  /** [[deriveSq8Index]] for the BINARY family: the float master's
-    * quantizer and assignment copy VERBATIM, each live list row's
-    * payload re-packs to its two sign halves in place — no Lloyd pass,
-    * no re-assignment, one partition-preserving map. Bit-identical to
-    * [[writeIvfIndexBinary]] over the same corpus (same centroids,
-    * same float-cosine assignment, same sign packing), so the derived
-    * generation shares the untouched IVF-binary oracle. */
-  def deriveBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dest: String, path: String): Unit = {
-    spark.table(s"${src}_cents").write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cents").saveAsTable(s"${dest}_cents")
-    IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
-      .select(col("vec_id"),
-        packSignBits(col("embedding"), 0, 32).as("hi"),
-        packSignBits(col("embedding"), 32, 32).as("lo"),
-        col("list_id"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("list_id")
-      .option("path", s"$path/lists").saveAsTable(s"${dest}_lists")
-  }
-
   /** Execute the retrain [[retrainCheck]] decides on — the final
     * edge of the index lifecycle (build → append* → compact → monitor →
     * decide → RETRAIN): a NEW generation is trained over the CURRENT
@@ -2077,7 +1837,7 @@ object VectorOps {
     * the clone-append workflow). Float-list indexes only: SQ8 lists
     * store lossy codes, so the float master index is the retrain source
     * and an SQ8 generation is re-derived from it afterwards
-    * ([[writeIvfIndexSq8]] over the same corpus).
+    * ([[derive]] through [[sq8Lists]]).
     *
     * Cost shape is the build's, not the append's — one corpus read +
     * `trainIters` Lloyd passes + one partitioned write. That is the
@@ -2085,53 +1845,34 @@ object VectorOps {
     * precisely when the monitoring verdict says the cheap appends have
     * degraded probe cost. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, src: String,
-      dest: String, path: String, trainIters: Int = 2): Unit = {
-    // retrain over the LIVE corpus: pending deletes drop out here, so
-    // the new generation neither trains on nor serves removed vectors
-    val corpus =
-      IndexFamily.live(spark, src, spark.table(s"${src}_lists"), "vec_id")
-        .select(col("vec_id"), col("embedding"))
-    val k = math.max(4,
-      math.floor(math.sqrt(corpus.count().toDouble)).toInt)
-    writeIvfIndex(corpus, dest, path, numCentroids = k, trainIters = trainIters)
+      dest: String, path: String, trainIters: Int = 2): Unit =
+    retrain(spark, src, dest, path,
+      spark.table(s"${src}_lists").select(col("vec_id"), col("embedding")),
+      writeIvfIndex(_, _, _, _, trainIters))
+
+  /** The requantization epoch every vector layout shares: `corpus`
+    * without `src`'s tombstoned ids (deleted vectors neither train nor
+    * serve in the new generation) written to `dest` by the layout's
+    * `write(corpus, table, path, K)`, K = max(4, ⌊√n⌋) re-derived from
+    * the live corpus size — the two things retraining exists to
+    * refresh. One metadata-cheap count; the Lloyd passes of the write
+    * dominate. A float master retrains over its own lists
+    * ([[retrainIvfIndex]]). A lossy layout's serving artifact carries
+    * no float vectors, so it retrains over the lake corpus, the way a
+    * real deployment does: codes serve, floats live in the lake, a
+    * requantization epoch reads the lake once. */
+  private[graft] def retrain(spark: SparkSession, src: String, dest: String,
+      path: String, corpus: DataFrame,
+      write: (DataFrame, String, String, Int) => Unit): Unit = {
+    val live = IndexFamily.live(spark, src, corpus, "vec_id")
+    write(live, dest, path, corpusK(live))
   }
 
-  /** Append an arriving batch to an existing [[writeIvfIndex]] table —
-    * the index MAINTENANCE operation between full-rebuild epochs: new
-    * vectors are assigned to the EXISTING (frozen) coarse quantizer and
-    * inserted into their lists' partitions; the corpus already in the
-    * index is never read, never reshuffled, never rewritten. This is
-    * how a 100 TB ANN deployment actually lives — one quantizer-training
-    * epoch write, then cheap per-batch appends until list imbalance
-    * (centroid drift) warrants retraining. The append is one
-    * broadcast-assign of the (small) batch + a dynamic-partition
-    * insert; probe cost afterwards is unchanged (same partition
-    * pruning, lists just grow by the batch).
-    *
-    * The frozen-quantizer semantics are the definition, not a
-    * shortcut: probing after append must equal probing the UNION
-    * corpus against the original centroids (IvfIndexSpec pins exactly
-    * that), which is what makes the operation oracle-able. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = broadcast(spark.table(s"${table}_cents"))
-    IndexFamily.appendByName(assignLists(batch, cents)
-      .select(col("vec_id"), col("embedding"), col("list_id")),
-      s"${table}_lists", None)
-  }
-
-  /** [[appendToIvfIndex]] for a [[writeIvfIndexSq8]] table: same frozen
-    * float quantizer for assignment, int8 codes into the lists. */
-  def appendToIvfIndexSq8(spark: org.apache.spark.sql.SparkSession, table: String,
-      batch: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val cents = broadcast(spark.table(s"${table}_cents"))
-    IndexFamily.appendByName(
-      withQuantized(assignLists(batch, cents), "embedding", "qe")
-        .select(col("vec_id"), col("qe"), col("list_id")),
-      s"${table}_lists", None)
-  }
+  /** K = max(4, ⌊√n⌋) — the corpus-derived cell count every quantizer
+    * build in the repo uses (probe cost ~ nProbe·√N). One metadata-cheap
+    * count. */
+  private[graft] def corpusK(corpus: DataFrame): Int =
+    math.max(4, math.floor(math.sqrt(corpus.count().toDouble)).toInt)
 
   /** Embedding near-dup pairs: cosine above `threshold` within a bucket
     * column (label or LSH bucket) — bounded pairwise work, as in
@@ -2190,9 +1931,6 @@ object VectorOps {
       .select(col("new_id"), col("old_id"), col("cos_sim"))
   }
 
-  /** Symmetric cosine scorer: sequential double folds for a·b, a·a, b·b
-    * (order-stable ⇒ deterministic, matches [[dot]]/[[norm]] bit-exactly);
-    * emits the round(·,6)-quantized score only when it survives. */
   /** SEMANTIC dedup — k-means-partitioned embedding near-dup pruning
     * (the "cluster, then pair only within a cluster" formulation
     * published as SemDeDup): the corpus is assigned to `numCentroids`
@@ -2224,7 +1962,7 @@ object VectorOps {
     * deployment that already serves an IVF index reuses its trained
     * `_cents` as the semantic partitioner (one broadcast-assign of the
     * corpus, zero training jobs), exactly the frozen-quantizer contract
-    * [[appendToIvfIndex]] established. Same survivor rule, same output. */
+    * [[ivfLists]] established. Same survivor rule, same output. */
   def semanticDedupFrozen(corpus: DataFrame, cents: DataFrame,
       threshold: Double): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
@@ -2243,6 +1981,9 @@ object VectorOps {
       .select(col("vec_id"), col("cluster_id"))
   }
 
+  /** Symmetric cosine scorer: sequential double folds for a·b, a·a, b·b
+    * (order-stable ⇒ deterministic, matches [[dot]]/[[norm]] bit-exactly);
+    * emits the round(·,6)-quantized score only when it survives. */
   private[graft] def cosineScore(threshold: Double)(
       a: Array[Float], b: Array[Float]): Option[Double] = {
     val n = math.min(a.length, b.length)

@@ -15,28 +15,6 @@ case class LastType(typ: String)
 /** An observed (prev → next) transition for one user. */
 case class Transition(user: Long, prevTyp: String, nextTyp: String)
 
-/** Streaming first-order Markov transitions — the stateful twin of the
-  * batch `events_markov` lead-window pass. The batch form needs each
-  * user's ordered history in a window frame; the streaming form
-  * carries exactly ONE string of state per user (the last type seen)
-  * and emits each (prev → next) pair as the next event arrives — the
-  * canonical mapGroupsWithState reduction of a lag/lead window.
-  *
-  * 100 TB/continuous shape: state is O(users)·1 string regardless of
-  * event volume; each micro-batch shuffles only its own rows to the
-  * user-keyed state partitions; the downstream count fold is
-  * types²-bounded. Within a batch rows sort by (µs, event_id) — the
-  * oracle's order; across batches the file source delivers
-  * time-ordered waves (the suite's fixture contract, shared with the
-  * attribution/sessionize/funnel streams — see AttributionStream's
-  * out-of-order note for the production monitor).
-  *
-  * NoTimeout is the semantics (the AttributionStream reasoning): a
-  * user's sequence continues across any quiet period — evicting the
-  * last-type state would silently drop the resumption transition. A
-  * production deployment bounding state by user cardinality would use
-  * an EventTimeTimeout at the session-continuity horizon, changing the
-  * semantics to within-horizon transitions. */
 /** One observed inter-arrival gap for a (user, type) series. */
 case class GapOut(typ: String, gapUs: Long)
 
@@ -111,6 +89,28 @@ object MarkovStream {
         })
   }
 
+  /** Streaming first-order Markov transitions — the stateful twin of the
+    * batch `events_markov` lead-window pass. The batch form needs each
+    * user's ordered history in a window frame; the streaming form
+    * carries exactly ONE string of state per user (the last type seen)
+    * and emits each (prev → next) pair as the next event arrives — the
+    * canonical mapGroupsWithState reduction of a lag/lead window.
+    *
+    * 100 TB/continuous shape: state is O(users)·1 string regardless of
+    * event volume; each micro-batch shuffles only its own rows to the
+    * user-keyed state partitions; the downstream count fold is
+    * types²-bounded. Within a batch rows sort by (µs, event_id) — the
+    * oracle's order; across batches the file source delivers
+    * time-ordered waves (the suite's fixture contract, shared with the
+    * attribution/sessionize/funnel streams — see AttributionStream's
+    * out-of-order note for the production monitor).
+    *
+    * NoTimeout is the semantics (the AttributionStream reasoning): a
+    * user's sequence continues across any quiet period — evicting the
+    * last-type state would silently drop the resumption transition. A
+    * production deployment bounding state by user cardinality would use
+    * an EventTimeTimeout at the session-continuity horizon, changing the
+    * semantics to within-horizon transitions. */
   def transitions(events: DataFrame): Dataset[Transition] = {
     val spark = events.sparkSession
     import spark.implicits._

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Generations, SearchOps, VectorOps}
+import graft.operators.{Generations, IndexFamily, SearchOps, VectorOps}
 
 /** The swap step of clone-append-validate-swap: after
   * [[Generations.swap]], the SERVING NAME serves the candidate
@@ -30,7 +30,7 @@ class GenerationsSpec extends AnyFunSuite {
       // an appended batch the serving one lacks
       VectorOps.writeIvfIndex(emb, serving, pA, numCentroids = k, trainIters = 2)
       VectorOps.writeIvfIndex(emb, candidate, pB, numCentroids = k, trainIters = 2)
-      VectorOps.appendToIvfIndex(spark, candidate,
+      IndexFamily.ivf.append(spark, candidate,
         emb.filter(col("vec_id") < 5)
           .select((col("vec_id") + 900000).as("vec_id"), col("embedding")))
       val nServing = spark.table(s"${serving}_lists").count()

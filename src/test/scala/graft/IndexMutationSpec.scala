@@ -292,7 +292,7 @@ class IndexMutationSpec extends AnyFunSuite {
         .select(col("vec_id"),
           expr("transform(embedding, x -> -x)").cast("array<float>")
             .as("embedding"))
-      VectorOps.appendToIvfIndex(spark, src, stale)
+      IndexFamily.ivf.append(spark, src, stale)
       assert(spark.table(s"${src}_lists").filter(col("vec_id") === 2L)
         .count() == 2L, "fixture must carry the doubled-id defect")
       // plus a pending delete that the upsert must settle
@@ -347,7 +347,7 @@ class IndexMutationSpec extends AnyFunSuite {
         .select(col("vec_id"),
           expr("transform(embedding, x -> -x)").cast("array<float>")
             .as("embedding"))
-      VectorOps.appendToIvfIndexSq8(spark, src, stale)
+      IndexFamily.sq8.append(spark, src, stale)
       assert(spark.table(s"${src}_lists").filter(col("vec_id") === 2L)
         .count() == 2L, "fixture must carry the doubled-id defect")
       IndexFamily.ivf.delete(spark, src, Seq(7L).toDF("vec_id"))
@@ -641,7 +641,7 @@ class IndexMutationSpec extends AnyFunSuite {
         trainIters = 1)
       val poison = vecs.filter(col("vec_id") < 2)
         .select((col("vec_id") + 900L).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndex(spark, isrc, poison)
+      IndexFamily.ivf.append(spark, isrc, poison)
       IndexFamily.ivf.delete(spark, isrc, poison.select(col("vec_id")))
       IndexFamily.ivf.cloneTo(spark, isrc, idest, ipaths(1))
       val got = VectorOps.probeIvfIndex(spark, idest,
@@ -742,7 +742,7 @@ class IndexMutationSpec extends AnyFunSuite {
       // poison: exact copies of the queries — guaranteed cosine-1.0 rank-1
       val poison = queries.select((col("vec_id") + 500L).as("vec_id"),
         col("embedding"))
-      VectorOps.appendToIvfIndex(spark, table, poison)
+      IndexFamily.ivf.append(spark, table, poison)
       def neighbors() = VectorOps.probeIvfIndex(spark, table, queries, k = 3,
         nProbe = 2).collect().map(_.getLong(1)).toSet
       assert(neighbors().exists(_ >= 500L), "poison must surface before delete")
@@ -767,6 +767,40 @@ class IndexMutationSpec extends AnyFunSuite {
         spark.sql(s"DROP TABLE IF EXISTS $t"))
     } finally Seq(s"${table}_tombstones", s"${table}_cents", s"${table}_lists")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("mrl append into an emptied, compacted generation is probe-visible") {
+    graft.functions.GraftFunctions.register(spark)
+    val vecs = (0L until 20L).map(i =>
+      (i, Array.tabulate(8)(d => math.sin(i * 7 + d * 0.37).toFloat)))
+      .toDF("vec_id", "embedding")
+    val src = uniq("graft_mrl_empty_src_")
+    val dest = uniq("graft_mrl_empty_dest_")
+    val paths = Seq.fill(2)(tmp("graft_mrl_empty_"))
+    try {
+      VectorOps.writeMrlIndex(vecs, src, paths(0), prefixDims = 4,
+        numCentroids = 4, trainIters = 1)
+      // every id tombstoned, then settled: no `_prefix` row is left to
+      // carry the prefix width, only the frozen `_cents`
+      IndexFamily.mrl.delete(spark, src, vecs.select(col("vec_id")))
+      IndexFamily.mrl.compact(spark, src, dest, paths(1))
+      assert(spark.table(s"${dest}_prefix").count() == 0)
+      val fresh = vecs.filter(col("vec_id") === 3L)
+        .select(lit(100L).as("vec_id"), col("embedding"))
+      IndexFamily.mrl.append(spark, dest, fresh)
+      assert(spark.table(s"${dest}_prefix")
+        .select(size(col("prefix"))).as[Int].collect().toSeq == Seq(4))
+      val served = VectorOps.probeMrlIndex(spark, dest,
+          fresh.select(lit(999L).as("vec_id"), col("embedding")), k = 3,
+          prefixDims = 4, shortlist = 8)
+        .select(col("neighbor_id")).as[Long].collect().toSeq
+      assert(served == Seq(100L), "the appended vector must be served")
+    } finally {
+      Seq(src, dest).flatMap(t => (IndexFamily.mrl.tables :+ "_tombstones")
+        .map(t + _)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      paths.foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    }
   }
 
   private lazy val graphVecs = (0L until 40L).map(i =>

@@ -200,7 +200,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // the batch: copies of vectors 0-19 under new ids
     val batch = emb.filter(col("vec_id") < 20)
       .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-    VectorOps.appendToIvfIndex(spark, table, batch)
+    IndexFamily.ivf.append(spark, table, batch)
 
     // 1. only the batch was added — the already-indexed corpus was
     //    neither dropped nor duplicated
@@ -246,7 +246,7 @@ class IvfIndexSpec extends AnyFunSuite {
       VectorOps.writeIvfIndex(emb, table, path, numCentroids = k, trainIters = 2)
       // two appends → at least one partition carries >1 file group
       (1 to 2).foreach { i =>
-        VectorOps.appendToIvfIndex(spark, table,
+        IndexFamily.ivf.append(spark, table,
           emb.filter(col("vec_id") < 10)
             .select((col("vec_id") + i * 500000).as("vec_id"), col("embedding")))
       }
@@ -308,7 +308,7 @@ class IvfIndexSpec extends AnyFunSuite {
         .crossJoin(broadcast(emb.filter(col("vec_id") === 0)
           .select(col("embedding"))))
         .select((col("i") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndex(spark, table, copies)
+      IndexFamily.ivf.append(spark, table, copies)
 
       val after = verdict()
       assert(after.getAs[Boolean]("retrain"),
@@ -341,7 +341,7 @@ class IvfIndexSpec extends AnyFunSuite {
       VectorOps.writeIvfIndex(emb, table, path, numCentroids = k, trainIters = 2)
       // grow the corpus enough that ⌊√n⌋ — hence the retrained K — rises
       val batch = emb.select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      VectorOps.appendToIvfIndex(spark, table, batch)
+      IndexFamily.ivf.append(spark, table, batch)
       val nGrown = spark.table(s"${table}_lists").count()
       val srcCents = spark.table(s"${table}_cents").count()
 
@@ -385,7 +385,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val dPath = java.nio.file.Files
       .createTempDirectory("graft_ivf_sq8_derive_spec_").toString
     try {
-      VectorOps.deriveSq8Index(spark, fTable, dTable, dPath)
+      VectorOps.derive(spark, fTable, dTable, dPath, Nil, VectorOps.sq8Lists)
       // the quantizer is the float master's, verbatim
       assert(spark.table(s"${dTable}_cents").collect().toSet ==
         spark.table(s"${fTable}_cents").collect().toSet)
@@ -418,7 +418,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val nBefore = spark.table(s"${table}_lists").count()
     val batch = emb.filter(col("vec_id") < 10)
       .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-    VectorOps.appendToIvfIndexSq8(spark, table, batch)
+    IndexFamily.sq8.append(spark, table, batch)
     assert(spark.table(s"${table}_lists").count() == nBefore + 10)
     // appended payload is int8 codes in the float quantizer's partitions
     val cents = org.apache.spark.sql.functions.broadcast(

@@ -180,7 +180,7 @@ class IvfPqSpec extends AnyFunSuite {
     val path =
       java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_app_").toString
     IndexFamily.ivfPq(8, 64).cloneTo(spark, base, table, path)
-    VectorOps.appendToIvfPqIndex(spark, table, batch)
+    IndexFamily.ivfPq(8, 64).append(spark, table, batch)
 
     // frozen-quantizer truth: re-derive the batch's codes/lists against
     // the BASE quantizers and union with the base codes

@@ -106,7 +106,8 @@ class PqSpec extends AnyFunSuite {
       // equal encoding the UNION corpus against the ORIGINAL codebooks
       val batch = Seq((9L, Seq(0.9f, 0.1f, 0f, 0f, 0.1f, 0.9f, 0f, 0f)))
         .toDF("vec_id", "embedding")
-      VectorOps.appendToPqIndex(spark, table, batch, m = 2, dim = dim)
+      IndexFamily.vector(IndexFamily.pq.tables, VectorOps.pqCodes(2, dim))
+        .append(spark, table, batch)
       val cents = spark.table(s"${table}_codebooks")
       val frozenUnion = VectorOps.pqEncode(c.unionByName(batch), cents,
         m = 2, dim = dim)
@@ -148,15 +149,15 @@ class PqSpec extends AnyFunSuite {
         trainIters = 1, dim = dim)
       // corrupt: vec 3 doubled under a different embedding (vec 2's) —
       // its ADC fold now mixes two generations of code rows
-      VectorOps.appendToPqIndex(spark, src,
-        c.filter(col("vec_id") === 2)
-          .select(lit(3L).as("vec_id"), col("embedding")), m = 2, dim = dim)
+      IndexFamily.vector(IndexFamily.pq.tables, VectorOps.pqCodes(2, dim))
+        .append(spark, src, c.filter(col("vec_id") === 2)
+          .select(lit(3L).as("vec_id"), col("embedding")))
       // plus a pending delete of vec 0 the upsert must purge
       IndexFamily.pq.delete(spark, src, Seq(0L).toDF("vec_id"))
       // the served row's append encodes 8 subspaces of 64 dims; this
       // index has 2 of `dim`
       IndexFamily.vector(IndexFamily.pq.tables,
-          VectorOps.appendToPqIndex(_, _, _, m = 2, dim = dim))
+          VectorOps.pqCodes(2, dim))
         .upsert(spark, src, dest, Seq(paths(1)), c.filter(col("vec_id") === 3))
       val codes = spark.table(s"${dest}_codes")
       assert(codes.filter(col("vec_id") === 3L).count() == 2,

@@ -357,10 +357,9 @@ class StreamIngestRestartSpec extends AnyFunSuite {
       spark.table(s"${src}_codes").limit(0).write.format("parquet")
         .partitionBy("list_id").option("path", s"${paths(2)}/codes")
         .saveAsTable(s"${exp}_codes")
-      VectorOps.appendToIvfPqIndex(spark, exp,
+      IndexFamily.ivfPq(2, 8).append(spark, exp,
         replayVecs(8).filter(!col("vec_id").isin(3L, 5L))
-          .unionByName(Seq((5L, upd), (900L, ins)).toDF("vec_id", "embedding")),
-        m = 2, dim = 8)
+          .unionByName(Seq((5L, upd), (900L, ins)).toDF("vec_id", "embedding")))
       def codes(t: String) = spark.table(s"${t}_codes")
         .select(col("vec_id"), col("s"), col("cid"), col("list_id"))
         .orderBy(col("vec_id"), col("s")).collect().toSeq.map(_.toSeq)

@@ -152,7 +152,7 @@ class StreamSearchIngestSpec extends AnyFunSuite {
       IngestStream.appendSink(src, IndexFamily.ivf, table, dirs(3),
         Trigger.AvailableNow()).awaitTermination()
       // ...appended directly to the other
-      VectorOps.appendToIvfIndex(spark, dTable, batch)
+      IndexFamily.ivf.append(spark, dTable, batch)
       def lists(t: String) = spark.table(s"${t}_lists")
         .select(col("vec_id"), col("list_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

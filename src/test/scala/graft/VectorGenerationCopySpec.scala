@@ -232,31 +232,38 @@ class VectorGenerationCopySpec extends AnyFunSuite {
         VectorOps.retrainIvfIndex(spark, _, _, _, trainIters = 1)),
       ("sq8", IndexFamily.sq8,
         VectorOps.writeIvfIndexSq8(_, _, _, numCentroids = 4, trainIters = 1),
-        VectorOps.retrainIvfIndexSq8(spark, _, _, _, lake, trainIters = 1)),
+        VectorOps.retrain(spark, _, _, _, lake,
+          VectorOps.writeIvfIndexSq8(_, _, _, _, trainIters = 1))),
       ("binary", IndexFamily.binary,
         VectorOps.writeIvfIndexBinary(_, _, _, numCentroids = 4,
           trainIters = 1),
-        VectorOps.retrainIvfIndexBinary(spark, _, _, _, lake, trainIters = 1)),
+        VectorOps.retrain(spark, _, _, _, lake,
+          VectorOps.writeIvfIndexBinary(_, _, _, _, trainIters = 1))),
       ("ivfpq", IndexFamily.ivfPq(8, dim),
         VectorOps.writeIvfPqIndex(_, _, _, numCentroids = 4, trainIters = 1,
           m = 8, ksub = 16, pqIters = 1, dim = dim),
-        VectorOps.retrainIvfPqIndex(spark, _, _, _, lake, trainIters = 1,
-          m = 8, ksub = 16, pqIters = 1, dim = dim)),
+        VectorOps.retrain(spark, _, _, _, lake,
+          VectorOps.writeIvfPqIndex(_, _, _, _, trainIters = 1, m = 8,
+            ksub = 16, pqIters = 1, dim = dim))),
       ("ivfpq_res", IndexFamily.ivfPqResidual(8, dim),
         VectorOps.writeIvfPqResidualIndex(_, _, _, numCentroids = 4,
           trainIters = 1, m = 8, ksub = 16, pqIters = 1, dim = dim),
-        VectorOps.retrainIvfPqResidualIndex(spark, _, _, _, lake,
-          trainIters = 1, m = 8, ksub = 16, pqIters = 1, dim = dim)))
+        VectorOps.retrain(spark, _, _, _, lake,
+          VectorOps.writeIvfPqResidualIndex(_, _, _, _, trainIters = 1,
+            m = 8, ksub = 16, pqIters = 1, dim = dim))))
     val derives: Seq[(String, IndexFamily, Into)] = Seq(
-      ("sq8", IndexFamily.sq8, VectorOps.deriveSq8Index(spark, _, _, _)),
+      ("sq8", IndexFamily.sq8,
+        VectorOps.derive(spark, _, _, _, Nil, VectorOps.sq8Lists)),
       ("binary", IndexFamily.binary,
-        VectorOps.deriveBinaryIndex(spark, _, _, _)),
+        VectorOps.derive(spark, _, _, _, Nil, VectorOps.binaryLists)),
       ("ivfpq", IndexFamily.ivfPq(8, dim),
-        VectorOps.deriveIvfPqIndex(spark, _, _, _, m = 8, ksub = 16,
-          pqIters = 1, dim = dim)),
+        VectorOps.derive(spark, _, _, _,
+          Seq(VectorOps.codebooks(8, 16, 1, dim, 16384L)),
+          VectorOps.ivfPqCodes(8, dim))),
       ("ivfpq_res", IndexFamily.ivfPqResidual(8, dim),
-        VectorOps.deriveIvfPqResidualIndex(spark, _, _, _, m = 8, ksub = 16,
-          pqIters = 1, dim = dim)))
+        VectorOps.derive(spark, _, _, _,
+          Seq(VectorOps.residualCodebooks(8, 16, 1, dim, 16384L)),
+          VectorOps.ivfPqResidualCodes(8, dim))))
     try {
       val retrained = retrains.map { case (name, family, write, retrain) =>
         val src = source(name, family, write)
