@@ -103,17 +103,7 @@ object SimilarityQueries {
   private val bucketSql: String => String = v =>
     (0 until 4).map(i => s"(CASE WHEN ($v)[${i + 1}] > 0 THEN ${1 << i} ELSE 0 END)").mkString(" + ")
 
-  /** DuckDB mirror of [[VectorOps.trainCentroids]]: `iters` Lloyd
-    * iterations as a CTE chain over the `vec_id < numCentroids` seed; the
-    * final centroid set is always named `cents`. The elementwise mean is
-    * computed over `floor(x·1e6)` BIGINT quantization (order-independent
-    * sums — the determinism trick that lets a k-means run hash-match
-    * across engines) and cast back to `::FLOAT`, mirroring the Spark side
-    * bit-for-bit. `sum(BIGINT)` is HUGEINT in DuckDB → cast down before
-    * the double division. `numCentroids` is a SQL fragment — pass
-    * [[ivfKSql]] for the derived-K form.
-    *
-    * K ~ √N (VERDICT r6 #5): both engines derive the IVF centroid count
+  /** K ~ √N (VERDICT r6 #5): both engines derive the IVF centroid count
     * from the corpus size with the same floor(sqrt(count)) — per-list
     * work and list count then scale together (probe cost ~ nProbe·√N,
     * list build unchanged), instead of K=16 silently degenerating to
@@ -132,6 +122,15 @@ object SimilarityQueries {
   private[graft] val corpusKSql =
     "(SELECT greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM corpus)"
 
+  /** DuckDB mirror of [[VectorOps.trainCentroids]]: `iters` Lloyd
+    * iterations as a CTE chain over the `vec_id < numCentroids` seed; the
+    * final centroid set is always named `cents`. The elementwise mean is
+    * computed over `floor(x·1e6)` BIGINT quantization (order-independent
+    * sums — the determinism trick that lets a k-means run hash-match
+    * across engines) and cast back to `::FLOAT`, mirroring the Spark side
+    * bit-for-bit. `sum(BIGINT)` is HUGEINT in DuckDB → cast down before
+    * the double division. `numCentroids` is a SQL fragment — pass
+    * [[ivfKSql]] for the derived-K form. */
   private def centTrainSql(numCentroids: String, iters: Int,
       rel: String = "embeddings", dim: Int = 64): String = {
     // dim: embeddings.parquet is fixed 64 (TESTDATA.md); the MRL
